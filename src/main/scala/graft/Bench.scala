@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // min-of-k per query: a shared host's load spikes corrupt single
     // timings (a 0.4s query once benched at 47s under external load);
     // the min is the plan's cost, the JSON records k and the 1-min
@@ -11,9 +9,7 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val started = Verify.utcNow()
     val sha = Verify.gitSha()
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-      cpus.toInt).getOrCreate()
+    val spark = GraftSession.local(appName = "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // absorb session/JIT init so per-query numbers reflect the plans,
     // not first-query warmup; deterministic (sorted) order so numbers

@@ -13,28 +13,20 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Effective AQE knob values (env-overridable, validated). Exposed
-    * so the bench artifact can record what the run actually used.
+  /** AQE knob values, exposed so the bench artifact records what the
+    * run used.
     */
-  val parallelismFirst: String = {
-    val v = sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true")
-      .trim.toLowerCase
-    require(v == "true" || v == "false",
-      s"SPARK_GRAFT_PARALLELISM_FIRST must be true|false, got '$v'")
-    v
-  }
-  val advisoryPartition: String = {
-    val v = sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64MB")
-      .trim
-    require(v.matches("(?i)\\d+\\s*(b|k|kb|m|mb|g|gb)?"),
-      s"SPARK_GRAFT_ADVISORY_PARTITION must be a byte size (e.g. 64MB), got '$v'")
-    v
-  }
+  val parallelismFirst = "true"
+  val advisoryPartition = "64MB"
+
+  /** `SPARK_GRAFT_CPUS`, or every core of the machine when unset. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** Build a local session; `cores` drives both parallelism and the
     * shuffle-partition floor (never the default 200 in local mode).
     */
-  def local(cores: Int = 32, appName: String = "graft",
+  def local(cores: Int = defaultCores, appName: String = "graft",
       extraConfs: Map[String, String] = Map.empty): SparkSession = {
     val b = tune(
       SparkSession.builder().master(s"local[$cores]").appName(appName), cores)
@@ -53,13 +45,8 @@ object GraftSession {
     .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    // r11: both knobs env-overridable for A/B runs; defaults are the
-    // measured-best local settings and stay scale-adaptive (AQE sizes
-    // reduce partitions from runtime bytes, not a constant).
-    // r12 (ADVICE): values are VALIDATED here — a typo'd env var
-    // previously surfaced as an opaque Spark failure at first query —
-    // and the effective values are stamped into the bench artifact
-    // (`aqe_knobs`) so A/B runs stay attributable.
+    // the measured-best local settings; they stay scale-adaptive (AQE
+    // sizes reduce partitions from runtime bytes, not a constant)
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
       parallelismFirst)
     .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",

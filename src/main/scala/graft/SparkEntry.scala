@@ -17,7 +17,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Dws.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.1 warehouse
     "q1_pricing_summary" -> (Dws.pricingSummary(_, _)),
     "dws_traffic_pageview" -> (Dws.trafficPageView(_, _)),
@@ -593,7 +593,7 @@ object SparkEntry {
        | FROM idx i JOIN hw h ON i.rn = h.rn + 1)""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  lazy val oracleSql: Map[String, String] = Map(
     "q1_pricing_summary" ->
       s"""SELECT l_returnflag, l_linestatus,
          | CAST(SUM(${m("l_quantity")}) AS DOUBLE) AS sum_qty,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,6 +16,21 @@ object Verify {
       else "unknown"
     } catch { case _: Throwable => "unknown" }
 
+  /** JSON string literal: escapes backslash, quote, and EVERY control
+    * char < 0x20 — a tab in oracle SQL or a newline in a served value
+    * would otherwise emit JSON that readers reject.
+    */
+  private[graft] def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   private[graft] def utcNow(): String =
     java.time.format.DateTimeFormatter.ISO_INSTANT
       .format(java.time.Instant.now()
@@ -25,10 +39,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val started = utcNow()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-verify"),
-      cpus.toInt).getOrCreate()
+    val spark = GraftSession.local(appName = "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -60,26 +71,14 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // structural failure record beside the dumps (machine-readable
     // even if a reader ignores the per-query err frames)
     val failJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"), failJson)
     // self-identifying dump: which commit, which SF, when, how many
     // queries — the fields a mismatch adjudication needs in one read
@@ -90,11 +89,12 @@ object Verify {
     val meta = Seq(
       "git_sha" -> gitSha(), "sf_dir" -> sfDir, "out_dir" -> outDir,
       "started_utc" -> started, "finished_utc" -> utcNow(),
-      "spark_version" -> spark.version, "cpus" -> cpus,
+      "spark_version" -> spark.version,
+      "cpus" -> GraftSession.defaultCores.toString,
       "n_queries" -> nQ.toString, "n_oracle" -> nO.toString,
       "n_failed" -> failures.size.toString,
       "subset_regex" -> sys.env.getOrElse("SPARK_GRAFT_VERIFY_ONLY", ""))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/meta.json"), meta)
     spark.stop()

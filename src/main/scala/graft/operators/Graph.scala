@@ -231,7 +231,7 @@ object Graph {
   def assocTriples(s: SparkSession, d: String,
       minSupport: Long = 2): DataFrame = {
     val li = orderParts(s, d)
-    // r12 OPT (guide §3.1, ProfileR12c): the layout is bucketed AND
+    // r12 OPT (guide §3.1, OPTIMIZATION_r12.md): the layout is bucketed AND
     // sorted on ok precisely so basket self-joins run as
     // co-partitioned zero-Exchange merge joins — but at sf1 the
     // compressed file slides under the 64 MB broadcast threshold and
@@ -254,7 +254,7 @@ object Graph {
       .select(col("s").as("pa"), col("t").as("pb"),
         col("n_st").as("n_ab"))
       .hint("merge")
-    // r12 OPT (guide §1.2, ProfileR12c probe): `singles` is
+    // r12 OPT (guide §1.2, OPTIMIZATION_r12.md probe): `singles` is
     // part-grain (bounded node state) but joined THREE times — each
     // unpinned copy re-ran the layout scan + rollup (~1.2s × 3 at
     // sf1). Lazy cache = one rollup, three in-memory reads. The
@@ -476,7 +476,7 @@ object Graph {
       .join(e.select(col("src").as("mid"), col("dst")), "mid")
       .select(col("src"), col("dst"))
     // r11 OPT (guide §2.4): provenance tag instead of a second
-    // aggregation + join; r12 OPT (guide §2.3, ProfileR12c probe:
+    // aggregation + join; r12 OPT (guide §2.3, OPTIMIZATION_r12.md probe:
     // the dedup shuffle carries the ~150M-row path multiset — the
     // query's entire cost): the 8-byte tag column rode every one of
     // those rows for information that lives complete in the TINY
@@ -577,7 +577,7 @@ object Graph {
     val nb = li.groupBy("pk").agg(count(lit(1)).as("n"))
     val tot = li.agg(countDistinct(col("ok")).as("nb_total"))
     // orderBy+limit plans TakeOrderedAndProject — no global sort.
-    // r12 OPT (guide §1.2, ProfileR12c probe): top is ≤topN ROWS but
+    // r12 OPT (guide §1.2, OPTIMIZATION_r12.md probe): top is ≤topN ROWS but
     // was self-joined unpinned — BOTH sides re-ran the layout scan +
     // basket rollup + top-k (the full query measured 7.4s at sf1
     // against 2.6s of underlying stages). localCheckpoint pins the
@@ -589,7 +589,7 @@ object Graph {
         col("a.pk") < col("b.pk"))
       .select(col("a.pk").as("part_a"), col("b.pk").as("part_b"),
         col("a.n").as("n_a"), col("b.n").as("n_b"))
-    // r12 OPT (guide §3.2, ProfileR12c): the left join's preserved
+    // r12 OPT (guide §3.2, OPTIMIZATION_r12.md): the left join's preserved
     // side is the C(topN,2) candidate set, so the planner could only
     // broadcast the PAIR side — the whole co-occurrence layout (12M
     // rows / ~300 MB hash relation at sf1, unbounded at 100 TB; it

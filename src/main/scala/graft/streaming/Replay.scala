@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   * (equal event-time spans) under `stageDir` and touches each
   * chunk's files to strictly increasing mod times. Consumers read
   * with `readStream.parquet(stageDir)` + `maxFilesPerTrigger` and
-  * drop the synthetic `ck` column. Used by the committed
-  * STREAMBENCH artifact ([[graft.tools.StreamBench]]) and
-  * spec-tested in StreamingSpec.
+  * drop the synthetic `ck` column. It staged the committed
+  * STREAMBENCH_r11.json catch-up, which perfbench's `stream_live`
+  * workload now measures; spec-tested in StreamingSpec.
   */
 object Replay {
   /** @param tsCol event-time column (timestamp type) of `df`

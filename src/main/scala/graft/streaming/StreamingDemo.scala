@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-streaming-demo")
+    val spark = GraftSession.local(appName = "graft-streaming-demo")
     spark.sparkContext.setLogLevel("ERROR")
 
     // FileStreamSource needs a directory: stage the table behind a link

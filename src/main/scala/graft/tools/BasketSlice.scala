@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Shared slice plumbing for the sf1 oracle gate's sibling datasets
@@ -48,10 +47,7 @@ object BasketSlice {
     val inDir = args.headOption.getOrElse("/tmp/sf1")
     val outDir = args.lift(1).getOrElse("/tmp/sf1_basket")
     val mod = args.lift(2).map(_.toLong).getOrElse(10L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]")
-        .appName("graft-basket-slice"), cpus.toInt).getOrCreate()
+    val spark = graft.GraftSession.local(appName = "graft-basket-slice")
     spark.sparkContext.setLogLevel("WARN")
 
     val out = java.nio.file.Paths.get(outDir)

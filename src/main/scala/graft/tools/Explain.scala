@@ -11,7 +11,7 @@ import graft.{GraftSession, SparkEntry}
 object Explain {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val s = GraftSession.local(8, "graft-explain")
+    val s = GraftSession.local(appName = "graft-explain")
     s.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq
                 else SparkEntry.queries.keys.toSeq.sorted

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Profiler for the `dedup_minhash_lsh` scale question (r7 VERDICT
@@ -25,10 +24,7 @@ import org.apache.spark.sql.functions._
 object MinhashProfile {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]")
-        .appName("graft-minhash-profile"), cpus.toInt).getOrCreate()
+    val spark = graft.GraftSession.local(appName = "graft-minhash-profile")
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Vectors.ensureRegistered(spark)
 

@@ -1,7 +1,8 @@
 package graft.tools
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Verify.jstr
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The publisher's HTTP serving surface — the last visible
@@ -30,21 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object ServeDemo {
 
-  /** Full JSON string escape: backslash, quote, and EVERY control
-    * char < 0x20 — a newline or tab inside a served string value
-    * would otherwise emit invalid JSON that clients reject.
-    */
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Rows → a JSON array string. Serving relations are tiny
     * (per-day / top-N aggregates), so driver-side encoding is the
     * point, not a compromise.
@@ -67,16 +53,15 @@ object ServeDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.lift(1).map(_.toInt).getOrElse(8642)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]")
-        .appName("graft-serve-demo"), cpus.toInt).getOrCreate()
+    val spark = graft.GraftSession.local(appName = "graft-serve-demo")
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- build the serving layer once (the "streaming job" half of
     // the reference; here a batch refresh over the warehouse) ----
     val warehouse = java.nio.file.Files
       .createTempDirectory("graft_serve").toString
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(warehouse)))
     val gmvPath = s"$warehouse/gmv_daily"
     graft.warehouse.Publisher.gmvDaily(spark, sfDir)
       .withColumn("cur_date", col("cur_date").cast("string"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic sub-corpus slicer for the sf1 oracle gate (r9
@@ -25,10 +24,7 @@ object SubCorpus {
     val inDir = args.headOption.getOrElse("/tmp/sf1")
     val outDir = args.lift(1).getOrElse("/tmp/sf1_sub")
     val mod = args.lift(2).map(_.toLong).getOrElse(50L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]")
-        .appName("graft-sub-corpus"), cpus.toInt).getOrCreate()
+    val spark = graft.GraftSession.local(appName = "graft-sub-corpus")
     spark.sparkContext.setLogLevel("WARN")
 
     val out = java.nio.file.Paths.get(outDir)

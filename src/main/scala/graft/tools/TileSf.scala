@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-factor tiler — reproduces SURVEY §4.2e's sf1
@@ -41,10 +41,7 @@ object TileSf {
     val inDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/graft_sf_tiled")
     val tiles = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]")
-        .appName("graft-tile-sf"), cpus.toInt).getOrCreate()
+    val spark = graft.GraftSession.local(appName = "graft-tile-sf")
     spark.sparkContext.setLogLevel("WARN")
 
     def read(t: String): DataFrame =

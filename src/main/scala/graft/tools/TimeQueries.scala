@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Full-evaluation query timer — the soak/scale companion to
   * `graft.Bench`. Bench times `df.count()`, which lets Catalyst
@@ -11,35 +11,35 @@ import org.apache.spark.sql.SparkSession
   * `queryExecution.toRdd.count()` materializes every output column —
   * so its numbers are what a consumer writing the result would pay.
   *
-  *   SPARK_GRAFT_TQ_ONLY='^analytics_mann' tools/run.sh \
-  *     graft.tools.TimeQueries /tmp/sf1
+  *   tools/run.sh graft.tools.TimeQueries <sfDir> [runs] [query...]
+  *   tools/run.sh graft.tools.TimeQueries /tmp/sf1 1 analytics_mann_kendall
   *
-  * Prints one JSON line per query: {name, min_sec, max_sec, rows}.
+  * Times the named queries (all, when none are given). Prints one
+  * JSON line per query: {name, min_sec, max_sec, rows}.
   */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val only = sys.env.get("SPARK_GRAFT_TQ_ONLY").map(_.r)
-    val spark = graft.GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]")
-        .appName("graft-time-queries"), cpus.toInt).getOrCreate()
+    val names = if (args.length > 2) args.toSeq.drop(2)
+                else SparkEntry.queries.keys.toSeq.sorted
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = GraftSession.local(appName = "graft-time-queries")
     spark.sparkContext.setLogLevel("WARN")
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
-      .foreach { case (name, fn) =>
-        val times = (1 to runs).map { _ =>
-          val t0 = System.nanoTime()
-          val rows = fn(spark, sfDir).queryExecution.toRdd.count()
-          ((System.nanoTime() - t0) / 1e9, rows)
-        }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(false))
-        System.gc()
-        println(f"""{"name":"$name","min_sec":${times.map(_._1).min}%.3f,"max_sec":${times.map(_._1).max}%.3f,"rows":${times.head._2}}""")
+    names.foreach { name =>
+      val times = (1 to runs).map { _ =>
+        val t0 = System.nanoTime()
+        val rows = SparkEntry.queries(name)(spark, sfDir)
+          .queryExecution.toRdd.count()
+        ((System.nanoTime() - t0) / 1e9, rows)
       }
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(false))
+      System.gc()
+      println(f"""{"name":"$name","min_sec":${times.map(_._1).min}%.3f,"max_sec":${times.map(_._1).max}%.3f,"rows":${times.head._2}}""")
+    }
     spark.stop()
   }
 }

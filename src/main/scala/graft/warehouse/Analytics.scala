@@ -5102,8 +5102,8 @@ object Analytics {
     // (identical integer, same output type). Measured: the full
     // moment row fell 1.8s → 0.07s isolated; a spread() before the
     // aggregate was tried and REJECTED (+0.2s — the exchange costs
-    // more than the now-cheap map work, ProfileR11 probes).
-    // r12 OPT (guide §4, ProfileR12 probe): the double→DECIMAL(12,2)
+    // more than the now-cheap map work, OPTIMIZATION_r11.md probes).
+    // r12 OPT (guide §4, OPTIMIZATION_r12.md probe): the double→DECIMAL(12,2)
     // casts were the SCAN TAX of this query — 5.3s of the 7.2s sf1
     // cost (BigDecimal.valueOf + setScale per value; the sums are
     // long/decimal adds). The money columns are exact ≤2-dp doubles

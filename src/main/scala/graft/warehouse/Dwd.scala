@@ -27,7 +27,7 @@ object Dwd {
     c.cast(DecimalType(12, 2))
 
   /** Exact ×100 integerization of a money double — r12 OPT (guide
-    * §4, ProfileR12 probe): `(dec(x) * 100).cast("long")` spent
+    * §4, OPTIMIZATION_r12.md probe): `(dec(x) * 100).cast("long")` spent
     * ~1.3s per column per sf1 scan in Cast's BigDecimal.valueOf +
     * setScale; for the ≤2-decimal-digit money doubles every warehouse
     * column carries (verified across lineitem/orders/events at all

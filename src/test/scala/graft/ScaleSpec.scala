@@ -95,6 +95,16 @@ class ScaleSpec extends AnyFunSuite {
     new graft.GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
   }
 
+  test("native functions resolve from raw SQL through the extensions alone") {
+    // a new session has none of ensureRegistered's runtime
+    // registrations: only GraftExtensions' injectFunction resolves these
+    val fresh = s.newSession()
+    assert(fresh.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")
+      .collect()(0).getDouble(0) === 11.0)
+    assert(fresh.sql("SELECT size(graft_minhash_sig(array(1L, 2L, 3L), 64))")
+      .collect()(0).getInt(0) === 64)
+  }
+
   test("native functions reject wrong input types at analysis") {
     graft.functions.Vectors.ensureRegistered(s)
     // array<float> must not be bytewise-reinterpreted as array<double>
@@ -593,6 +603,11 @@ class ScaleSpec extends AnyFunSuite {
     // doc 0: n_chars=128 → 4 frames of 32B → frames 0 kept
     val doc0 = frames.filter(_.doc_id == 0L)
     assert(doc0.map(_.frame_idx).toSet === Set(0))
+    // default parameters: resize keeps one row per doc, frames fan out
+    val docs = Tables.documents(s, d).count()
+    assert(Multimodal.resize(s, d).count() === docs)
+    val defaultFrames = Multimodal.sampleFrames(s, d).count()
+    assert(defaultFrames > docs, s"$defaultFrames frames from $docs docs")
   }
 
   test("real PNG codec: encode → decode roundtrip reproduces geometry and pixels") {

@@ -251,6 +251,28 @@ class TemporalSpec extends AnyFunSuite {
     }
   }
 
+  test("as-of node plans through the injected strategy alone") {
+    // a new session carries the extensions but none of the runtime
+    // registrations AsOfJoin.apply makes, so only GraftExtensions'
+    // injectPlannerStrategy can plan a node built directly
+    val fresh = s.newSession()
+    assert(!fresh.experimental.extraStrategies
+      .contains(graft.plans.AsOfJoinStrategy))
+    val l = fresh.sql("SELECT * FROM VALUES (1L, 10L), (1L, 20L) AS t(k, ts)")
+    val r = fresh.sql("SELECT * FROM VALUES (1L, 15L, 1.5D) AS t(k, ts, v)")
+    def a(df: org.apache.spark.sql.DataFrame, n: String) =
+      df.queryExecution.analyzed.output.find(_.name == n).get
+    val node = graft.plans.AsOfJoinNode(
+      l.queryExecution.analyzed, r.queryExecution.analyzed,
+      a(l, "k"), a(l, "ts"), a(r, "k"), a(r, "ts"), Seq(a(r, "v")))
+    val df = org.apache.spark.sql.classic.GraftSqlBridge.ofRows(fresh, node)
+    assert(df.queryExecution.sparkPlan
+      .exists(_.isInstanceOf[graft.plans.AsOfJoinExec]))
+    val got = df.collect()
+      .map(row => row.getLong(1) -> Option(row.get(2))).toMap
+    assert(got === Map(10L -> None, 20L -> Some(1.5)))
+  }
+
   test("optimizer rule pushes left-only filters through AsOfJoinNode") {
     val d = TestSpark.sf
     val ev = graft.sources.Tables.events(s, d)

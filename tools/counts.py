@@ -30,9 +30,10 @@ errors = []
 
 def keys_of(block_name, text):
     """Keys of one Map literal section, by source position."""
-    start = text.index(f"def {block_name}")
-    # section ends at the next top-level def after it (or EOF)
-    nxt = re.search(r"\n  def \w+", text[start + 10:])
+    start = re.search(rf"^  lazy val {block_name}\b", text, re.M).start()
+    # section ends at the next top-level member after it (or EOF)
+    nxt = re.search(r"\n  (?:private |lazy )*(?:def|val) \w+",
+                    text[start + 10:])
     end = start + 10 + nxt.start() if nxt else len(text)
     body = text[start:end]
     return [m.group(1) for m in
