@@ -184,7 +184,10 @@ object Graph {
       .select(col("s").as("pa"), col("t").as("pb"), col("n_st").as("n_ab"))
       .filter(col("n_ab") >= minSupport)
     val singles = li.groupBy(col("pk")).agg(count(lit(1)).as("n_one"))
-    val total = li.select(col("ok")).distinct().count()
+    // the basket total as a 1-row broadcast cross join (the
+    // [[assocTriples]] shape), not a construction-time driver count()
+    val total = li.select(col("ok")).distinct()
+      .agg(count(lit(1)).as("nb_total"))
     val directed = pairs.select(col("pa").as("ante"), col("pb").as("cons"),
         col("n_ab"))
       .unionByName(pairs.select(col("pb").as("ante"), col("pa").as("cons"),
@@ -194,9 +197,10 @@ object Graph {
         .withColumnRenamed("n_one", "n_a"), "ante")
       .join(singles.withColumnRenamed("pk", "cons")
         .withColumnRenamed("n_one", "n_c"), "cons")
+      .crossJoin(broadcast(total))
       .select(col("ante"), col("cons"), col("n_ab"),
         expr("n_ab * 1000000 div n_a").as("conf_ppm"),
-        expr(s"n_ab * $total * 1000000 div (n_a * n_c)").as("lift_ppm"))
+        expr("n_ab * nb_total * 1000000 div (n_a * n_c)").as("lift_ppm"))
   }
 
   /** BUTTERFLY counts per part — the bipartite-graph analogue of

@@ -19,7 +19,8 @@ object Compaction {
     * write-to-temp + two checked renames: plain overwrite would
     * clobber its own input mid-read, and an unchecked rename can
     * silently lose the snapshot (cross-filesystem tmp). A crash at
-    * any point leaves either the old or the new snapshot recoverable.
+    * any point leaves either the old or the new snapshot recoverable:
+    * a writer that reads the current snapshot first calls [[recover]].
     */
   def replaceDir(df: DataFrame, path: String): Unit = {
     val tmp = path + "__tmp"
@@ -43,6 +44,23 @@ object Compaction {
     rm(old)
   }
 
+  /** Finish a swap that crashed between [[replaceDir]]'s two renames:
+    * when `path` is missing and `path__old` holds the previous
+    * snapshot, promote it back. Returns whether a snapshot exists at
+    * `path`. A writer that merges into its current snapshot calls this
+    * before reading it; otherwise it would take the batch for the
+    * whole table, and its own swap would then delete `__old`.
+    */
+  def recover(path: String): Boolean = {
+    val dst = new java.io.File(path)
+    if (dst.exists()) return true
+    val old = new java.io.File(path + "__old")
+    if (old.exists() && !old.renameTo(dst))
+      throw new java.io.IOException(
+        s"recover: failed to promote $old back to $path")
+    dst.exists()
+  }
+
   final case class Stats(filesBefore: Int, filesAfter: Int,
       bytesTotal: Long, rows: Long)
 
@@ -58,6 +76,7 @@ object Compaction {
     */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L << 20): Stats = {
+    recover(path)
     val dir = new java.io.File(path)
     val before = parquetFiles(dir)
     val totalBytes = before.map(_.length()).sum

@@ -17,7 +17,12 @@ object Partitioned {
   def write(df: DataFrame, path: String, partCol: String): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
 
-  /** Read back with a partition predicate — prunes at plan time. */
+  /** Read back with a partition predicate — prunes at plan time.
+    * Each call resolves the table afresh, so it lists every partition
+    * directory (a listing job above 32) before pruning to one. A
+    * long-lived server resolves the table once and filters the held
+    * relation instead, as `tools.ServeDemo` does.
+    */
   def readDay(s: SparkSession, path: String, partCol: String,
       day: String): DataFrame =
     s.read.parquet(path).filter(col(partCol) === day)

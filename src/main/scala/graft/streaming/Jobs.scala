@@ -514,7 +514,7 @@ object Jobs {
       val rebuilt = graft.operators.Temporal.scd2Build(
         all.join(touched, Seq(key), "left_semi"), key, ts, valueCols)
       val dim =
-        if (new java.io.File(dimPath).exists()) {
+        if (graft.sources.Compaction.recover(dimPath)) {
           spark.read.parquet(dimPath)
             .join(touched, Seq(key), "left_anti")
             .unionByName(rebuilt)
@@ -545,7 +545,7 @@ object Jobs {
       : (DataFrame, Long) => Unit = (batch: DataFrame, batchId: Long) => {
     val spark = batch.sparkSession
     val cur =
-      if (new java.io.File(statePath).exists())
+      if (graft.sources.Compaction.recover(statePath))
         Some(spark.read.parquet(statePath))
       else None
     val lastApplied = cur.map { c =>

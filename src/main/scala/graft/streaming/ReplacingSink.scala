@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Compaction.recover
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,7 +96,7 @@ object ReplacingSink {
         call_function("graft_bitmap_bytes", col(idCol), lit(maxId))
           .as("uv_bm"))
     val merged =
-      if (new java.io.File(path).exists()) {
+      if (recover(path)) {
         val cur = spark.read.parquet(path)
         cur.unionByName(compact.select(cur.columns.map(col): _*))
           .groupBy(keyCols.map(col): _*)
@@ -115,7 +116,7 @@ object ReplacingSink {
         count(lit(1)).as("pv_ct"),
         hll_sketch_agg(col(idCol)).as("uv_sketch"))
     val merged =
-      if (new java.io.File(path).exists()) {
+      if (recover(path)) {
         val cur = spark.read.parquet(path)
         cur.unionByName(compact.select(cur.columns.map(col): _*))
           .groupBy(keyCols.map(col): _*)
@@ -134,7 +135,7 @@ object ReplacingSink {
     val compact = batch.groupBy(keyCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
     val merged =
-      if (new java.io.File(path).exists()) {
+      if (recover(path)) {
         val cur = spark.read.parquet(path)
         cur.unionByName(compact.select(cur.columns.map(col): _*))
           .groupBy(keyCols.map(col): _*)
@@ -152,7 +153,7 @@ object ReplacingSink {
     val latest = batch.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
     val merged =
-      if (new java.io.File(path).exists()) {
+      if (recover(path)) {
         val cur = spark.read.parquet(path)
         cur.unionByName(latest.select(cur.columns.map(col): _*))
           .withColumn("__rn", row_number().over(w))

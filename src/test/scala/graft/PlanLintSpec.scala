@@ -170,6 +170,9 @@ class PlanLintSpec extends AnyFunSuite {
     // r12: assoc_triples' basket total moved from a construction-time
     // driver count() to the same 1-row broadcast crossJoin shape
     "graph_assoc_triples",
+    // assoc_rules' basket total took the same route: a 1-row
+    // broadcast crossJoin in place of a construction-time count()
+    "analytics_assoc_rules",
     // lsh_recall composes two 1-row count aggregates per config
     "dedup_lsh_recall",
     // r9: weighted quantiles crossJoin the 1-row total-weight

@@ -390,6 +390,32 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === Map(1L -> "a2", 2L -> "b", 3L -> "c"))
   }
 
+  test("a swap that crashed between its renames loses no row on the next upsert") {
+    import s.implicits._
+    // the state a crash between replaceDir's two renames leaves: the
+    // snapshot moved to `__old`, nothing promoted in its place
+    def crashed(prefix: String, snap: org.apache.spark.sql.DataFrame): String = {
+      val out = tmp(prefix) + "/snap"
+      snap.write.parquet(out)
+      assert(new java.io.File(out).renameTo(new java.io.File(out + "__old")))
+      out
+    }
+    val up = crashed("rep-crash",
+      Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "v", "ver"))
+    ReplacingSink.upsert(Seq((3L, "c", 1L)).toDF("k", "v", "ver"),
+      Seq("k"), "ver", up)
+    assert(s.read.parquet(up).as[(Long, String, Long)].collect().toSet ===
+      Set((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)))
+    assert(!new java.io.File(up + "__old").exists())
+
+    val sum = crashed("sum-crash",
+      Seq(("a", 1L, 2.0), ("b", 2L, 3.0)).toDF("k", "pv", "amt"))
+    ReplacingSink.sumUpsert(Seq(("c", 1L, 1.0)).toDF("k", "pv", "amt"),
+      Seq("k"), Seq("pv", "amt"), sum)
+    assert(s.read.parquet(sum).as[(String, Long, Double)].collect().toSet ===
+      Set(("a", 1L, 2.0), ("b", 2L, 3.0), ("c", 1L, 1.0)))
+  }
+
   test("observed metrics ride the stream without a second aggregation") {
     val observed = Jobs.withObservedMetrics(eventsStream)
     val q = observed.writeStream.format("noop").start()
