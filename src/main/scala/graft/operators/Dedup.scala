@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.Vectors
-import graft.sources.Tables
+import graft.sources.{Bucketing, Tables}
+import graft.sources.Bucketing.Plain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -120,49 +121,21 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Exact n-gram Jaccard pairs via shingle inverted index: explode
-    * distinct shingles, self-join on shingle (rare keys → small
-    * groups), count co-occurrences, divide by union size. This is the
-    * ground truth the LSH variants are tested against.
-    */
-  /** Shingle-set co-occurrence: (pair intersection counts, per-doc
-    * set sizes) over the inverted index. The pair table is CACHED —
-    * identical plans mean [[ngramJaccard]] and [[containment]] (and
-    * anything else doing exact set-overlap math) share one
-    * materialization of the expensive self-join instead of each
-    * paying it.
-    */
   /** The dedup family's shared shingle CO-OCCURRENCE relation
-    * ((id_a, id_b, shared-shingle count) + per-doc set sizes),
-    * materialized ONCE per (dataset, ngram) as bucketed/managed
-    * parquet — the same compute-once-layout discipline as the graph
-    * family's co-purchase table. A session cache amortized it only
-    * until a `clearCache()` (the bench clears between queries, so
-    * jaccard/containment/clusters each re-paid the ~3s inverted-index
-    * self-join cold); the layout survives clears, costs disk instead
-    * of pinned storage memory, and id_a-keyed reads come back
-    * pre-bucketed. The transient build cache below exists only so
-    * sizes and the self-join share one shingling pass, and is
-    * dropped once written.
+    * ((id_a, id_b, shared-shingle count) + per-doc set sizes), a
+    * compute-once layout per (dataset, ngram) — the same discipline
+    * as the graph family's co-purchase table. A session cache
+    * amortized it only until a `clearCache()` (the bench clears
+    * between queries, so jaccard/containment/clusters each re-paid
+    * the ~3s inverted-index self-join cold). The transient build
+    * cache below exists only so sizes and the self-join share one
+    * shingling pass, and is dropped once written.
     */
-  private val coocRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (DataFrame, DataFrame)]
-
   private[operators] def shingleCoOccurrence(s: SparkSession, d: String,
-      ngram: Int): (DataFrame, DataFrame) =
-    coocRegistry.computeIfAbsent((s, d, ngram), _ => {
-      val tag =
-        s"${graft.sources.Bucketing.datasetTag(d)}_$ngram"
-      val tInter = s"graft_shingle_cooc_$tag"
-      val tSizes = s"graft_shingle_sizes_$tag"
-      if (!s.catalog.tableExists(tInter) ||
-          !s.catalog.tableExists(tSizes))
-        graft.sources.Bucketing.timedBuild(tInter) {
-        // a previous JVM's layout may survive on disk while this
-        // catalog starts empty — clear the orphaned locations or
-        // saveAsTable dies with LOCATION_ALREADY_EXISTS
-        graft.sources.Bucketing.dropStaleLocation(s, tInter)
-        graft.sources.Bucketing.dropStaleLocation(s, tSizes)
+      ngram: Int): (DataFrame, DataFrame) = {
+    val Seq(inter, sizes) = Bucketing.layouts(s, d,
+        Seq("shingle_cooc" -> Plain, "shingle_sizes" -> Plain), ngram) {
+      write =>
         val base = shingled(s, d, ngram).cache()
         val sizes = base.select(col("doc_id"), size(col("hashed")).as("n"))
         // sort-merge self-join on the 8-byte hash (shuffle-hash
@@ -177,15 +150,17 @@ object Dedup {
         // inter against the BROADCAST sizes side or feeds a groupBy
         // that AQE re-plans anyway, so a bucket sort at write time
         // would be pure cost (measured +6s on the one-time build)
-        inter.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").saveAsTable(tInter)
-        sizes.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").saveAsTable(tSizes)
+        write(Seq(inter, sizes))
         base.unpersist()
-        }
-      (s.table(tInter), s.table(tSizes))
-    })
+    }
+    (inter, sizes)
+  }
 
+  /** Exact n-gram Jaccard pairs via shingle inverted index: explode
+    * distinct shingles, self-join on shingle (rare keys → small
+    * groups), count co-occurrences, divide by union size. This is the
+    * ground truth the LSH variants are tested against.
+    */
   def ngramJaccard(s: SparkSession, d: String, ngram: Int = 12,
       threshold: Double = 0.5): DataFrame = {
     val (inter, sizes) = shingleCoOccurrence(s, d, ngram)
@@ -973,29 +948,19 @@ object Dedup {
   }
 
   /** The df-screened WEIGHTED co-occurrence relation — the IDF
-    * sibling of [[shingleCoOccurrence]], materialized the same way:
+    * sibling of [[shingleCoOccurrence]], a layout the same way:
     * (id_a, id_b, shared weight) pairs over the informative
-    * vocabulary (df ≤ maxDf) plus the per-doc weight sums, as
-    * compute-once managed layouts. The inverted-index self-join that
-    * produces the pairs was only ever a transient RAM cache, so
-    * every [[weightedJaccard]] call (and every bench run, which
-    * clears caches between queries) re-paid the explode + df join +
-    * self-join; the layout survives cache clears and costs disk.
+    * vocabulary (df ≤ maxDf) plus the per-doc weight sums. The
+    * inverted-index self-join that produces the pairs was only ever
+    * a transient RAM cache, so every [[weightedJaccard]] call (and
+    * every bench run, which clears caches between queries) re-paid
+    * the explode + df join + self-join.
     */
-  private val wcoocRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), (DataFrame, DataFrame)]
-
   private def weightedCoOccurrence(s: SparkSession, d: String,
-      maxDf: Long): (DataFrame, DataFrame) =
-    wcoocRegistry.computeIfAbsent((s, d, maxDf), _ => {
-      val tag = s"${graft.sources.Bucketing.datasetTag(d)}_$maxDf"
-      val tPairs = s"graft_shingle_wcooc_$tag"
-      val tSums = s"graft_shingle_wsums_$tag"
-      if (!s.catalog.tableExists(tPairs) ||
-          !s.catalog.tableExists(tSums))
-        graft.sources.Bucketing.timedBuild(tPairs) {
-        graft.sources.Bucketing.dropStaleLocation(s, tPairs)
-        graft.sources.Bucketing.dropStaleLocation(s, tSums)
+      maxDf: Long): (DataFrame, DataFrame) = {
+    val Seq(pairs, sums) = Bucketing.layouts(s, d,
+        Seq("shingle_wcooc" -> Plain, "shingle_wsums" -> Plain), maxDf) {
+      write =>
         val ix = shingled(s, d, 12)
           .select(col("doc_id"), explode(col("hashed")).as("h"))
         val dft = ix.groupBy("h").agg(count(lit(1)).as("df"))
@@ -1012,14 +977,11 @@ object Dedup {
             col("b.doc_id").as("id_b"))
           .agg(sum(col("a.w")).as("sw"))
         val sums = wix.groupBy("doc_id").agg(sum(col("w")).as("wsum"))
-        pairs.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").saveAsTable(tPairs)
-        sums.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").saveAsTable(tSums)
+        write(Seq(pairs, sums))
         wix.unpersist()
-        }
-      (s.table(tPairs), s.table(tSums))
-    })
+    }
+    (pairs, sums)
+  }
 
   /** IDF-weighted Jaccard near-dup pairs — plain Jaccard counts a
     * stopword shingle and a rare quote equally; weighting each
@@ -1241,32 +1203,20 @@ object Dedup {
         lit(perms)).as("sig"))
   }
 
-  /** The md5 minhash signature relation as a compute-once managed
-    * layout (`graft_mhsig_*`) — one row per doc, `perms` longs. The
+  /** The md5 minhash signature relation as a compute-once layout
+    * (`graft_mhsig_*`) — one row per doc, `perms` longs. The
     * signature build (full-text shingling + md5 per shingle) is the
     * dominant cost of every banding consumer ([[bucketHistogram]],
     * [[lshRecall]]); as a session cache it was re-paid on every call
     * because the EAGER consumers release their caches on return (the
     * r8 leak fix), which is exactly the compute-once-layout case.
-    * Tiny on disk (|docs| × perms longs), rebuilt on catalog miss.
+    * Tiny on disk (|docs| × perms longs).
     */
-  private val sigRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), DataFrame]
-
   private def md5SigTable(s: SparkSession, d: String, ngram: Int,
       perms: Int): DataFrame =
-    sigRegistry.computeIfAbsent((s, d, ngram, perms), _ => {
-      val tbl = "graft_mhsig_" +
-        s"${graft.sources.Bucketing.datasetTag(d)}_${ngram}_$perms"
-      if (!s.catalog.tableExists(tbl))
-        graft.sources.Bucketing.timedBuild(tbl) {
-          graft.sources.Bucketing.dropStaleLocation(s, tbl)
-          md5Sig(s, d, ngram, perms).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .format("parquet").saveAsTable(tbl)
-        }
-      s.table(tbl)
-    })
+    Bucketing.layout(s, d, "mhsig", Plain, ngram, perms) {
+      md5Sig(s, d, ngram, perms)
+    }
 
   def bucketHistogram(s: SparkSession, d: String, ngram: Int = 12,
       perms: Int = 64, bands: Int = 16): DataFrame = {
@@ -1311,23 +1261,17 @@ object Dedup {
     // deriving it from the co-occurrence table per call (two
     // |docs|-sized joins + a filter over millions of pair rows) was
     // the last ~1s of per-call rebuild cost after sig moved to disk
-    val tTruth = "graft_jacc_truth_" +
-      s"${graft.sources.Bucketing.datasetTag(d)}_${ngram}_$thresholdPpm"
-    if (!s.catalog.tableExists(tTruth))
-      graft.sources.Bucketing.timedBuild(tTruth) {
-        graft.sources.Bucketing.dropStaleLocation(s, tTruth)
-        val (inter, sizes) = shingleCoOccurrence(s, d, ngram)
-        inter
-          .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")),
-            "id_a")
-          .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")),
-            "id_b")
-          .filter(expr(s"c * 1000000 >= (na + nb - c) * $thresholdPpm"))
-          .select(col("id_a"), col("id_b"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").saveAsTable(tTruth)
-      }
-    val truth = s.table(tTruth).cache()
+    val truth = Bucketing.layout(s, d, "jacc_truth", Plain, ngram,
+        thresholdPpm) {
+      val (inter, sizes) = shingleCoOccurrence(s, d, ngram)
+      inter
+        .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")),
+          "id_a")
+        .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")),
+          "id_b")
+        .filter(expr(s"c * 1000000 >= (na + nb - c) * $thresholdPpm"))
+        .select(col("id_a"), col("id_b"))
+    }.cache()
     val nTruth = truth.count()
     // r11 OPT (guide §1.2/§2.4): the three banding configs ran as
     // three separate pipelines (3 band self-joins, 3 distincts, a

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.Vectors
-import graft.sources.Tables
+import graft.sources.{Bucketing, Tables}
+import graft.sources.Bucketing.{Bucketed, Plain}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,8 +23,7 @@ object Similarity {
     * row_number partitions by query id, so the top-k sort is per
     * query, never global.
     *
-    * Materialized as a compute-once managed layout per (dataset,
-    * nQueries, k): this relation is the shared ground truth of the
+    * A compute-once layout per (dataset, nQueries, k): this relation is the shared ground truth of the
     * whole recall-eval family ([[annRecallEval]],
     * [[matryoshkaRecall]], [[ivfProbeSweep]], the DedupSpec recall
     * tests), each of which re-paid the full corpus scan per call —
@@ -31,23 +31,11 @@ object Similarity {
     * case. The one-time build is the documented single broadcast
     * scan; consumers read a tiny table.
     */
-  private val bfRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), DataFrame]
-
   def bruteForceTopK(s: SparkSession, d: String, nQueries: Int = 20,
       k: Int = 5): DataFrame =
-    bfRegistry.computeIfAbsent((s, d, nQueries, k), _ => {
-      val tbl = "graft_bftopk_" +
-        s"${graft.sources.Bucketing.datasetTag(d)}_${nQueries}_$k"
-      if (!s.catalog.tableExists(tbl))
-        graft.sources.Bucketing.timedBuild(tbl) {
-          graft.sources.Bucketing.dropStaleLocation(s, tbl)
-          bruteForceTopKCompute(s, d, nQueries, k).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .format("parquet").saveAsTable(tbl)
-        }
-      s.table(tbl)
-    })
+    Bucketing.layout(s, d, "bftopk", Plain, nQueries, k) {
+      bruteForceTopKCompute(s, d, nQueries, k)
+    }
 
   private def bruteForceTopKCompute(s: SparkSession, d: String,
       nQueries: Int, k: Int): DataFrame = {
@@ -82,33 +70,12 @@ object Similarity {
   // top-k relations are rank-only nQueries·k-row results consumed by
   // a whole eval family (annRecallEval, rankFusion, the spec recall
   // tests) — each consumer re-paid the index + search pipeline per
-  // call. Compute-once managed layouts, same registry discipline and
-  // crash-safe dropStaleLocation as the truth table.
-  // STALENESS CONTRACT (r12, ADVICE): the table tag hashes the
-  // dataset PATH + parameters, matching every other compute-once
-  // layout here (bf/km/cooc/truth). Regenerating a dataset IN PLACE
-  // therefore requires clearing the warehouse dir (or a new path) —
-  // the same rule the rest of the layout family already documents;
-  // the deterministic testdata this repo is driven against never
-  // mutates in place.
-  private val annRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]
-
+  // call, so both are compute-once layouts like the truth table.
   def annIvf(s: SparkSession, d: String, nQueries: Int = 20, k: Int = 5,
-      nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    val tbl = "graft_annivf_" +
-      s"${graft.sources.Bucketing.datasetTag(d)}_${nQueries}_${k}_${nCells}_$nProbe"
-    annRegistry.computeIfAbsent((s, d, tbl), _ => {
-      if (!s.catalog.tableExists(tbl))
-        graft.sources.Bucketing.timedBuild(tbl) {
-          graft.sources.Bucketing.dropStaleLocation(s, tbl)
-          annIvfCompute(s, d, nQueries, k, nCells, nProbe).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .format("parquet").saveAsTable(tbl)
-        }
-      s.table(tbl)
-    })
-  }
+      nCells: Int = 16, nProbe: Int = 4): DataFrame =
+    Bucketing.layout(s, d, "annivf", Plain, nQueries, k, nCells, nProbe) {
+      annIvfCompute(s, d, nQueries, k, nCells, nProbe)
+    }
 
   private def annIvfCompute(s: SparkSession, d: String, nQueries: Int,
       k: Int, nCells: Int, nProbe: Int): DataFrame = {
@@ -398,20 +365,10 @@ object Similarity {
     */
   def kmeansClusters(s: SparkSession, d: String, k: Int = 8,
       iters: Int = 4, farthestInit: Boolean = true): DataFrame =
-    kmRegistry.computeIfAbsent((s, d, k, iters, farthestInit), _ => {
-      val tbl = ("graft_kmeans_" +
-        graft.sources.Bucketing.datasetTag(d) +
-        s"_${k}_${iters}_${if (farthestInit) 1 else 0}")
-      if (!s.catalog.tableExists(tbl)) {
-        val asg = kmeansCompute(s, d, k, iters, farthestInit)
-        graft.sources.Bucketing.writeBucketed(asg, tbl, "vec_id", 16,
-          Seq("vec_id"))
-      }
-      s.table(tbl)
-    })
-
-  private val kmRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int, Boolean), DataFrame]
+    Bucketing.layout(s, d, "kmeans", Bucketed("vec_id", Seq("vec_id")),
+        k, iters, if (farthestInit) 1 else 0) {
+      kmeansCompute(s, d, k, iters, farthestInit)
+    }
 
   private def kmeansCompute(s: SparkSession, d: String, k: Int,
       iters: Int, farthestInit: Boolean): DataFrame = {
@@ -819,20 +776,10 @@ object Similarity {
     * recall for a ~2^nBits candidate reduction is the point.
     */
   def annLsh(s: SparkSession, d: String, nQueries: Int = 20,
-      k: Int = 5, nBits: Int = 6): DataFrame = {
-    val tbl = "graft_annlsh_" +
-      s"${graft.sources.Bucketing.datasetTag(d)}_${nQueries}_${k}_$nBits"
-    annRegistry.computeIfAbsent((s, d, tbl), _ => {
-      if (!s.catalog.tableExists(tbl))
-        graft.sources.Bucketing.timedBuild(tbl) {
-          graft.sources.Bucketing.dropStaleLocation(s, tbl)
-          annLshCompute(s, d, nQueries, k, nBits).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .format("parquet").saveAsTable(tbl)
-        }
-      s.table(tbl)
-    })
-  }
+      k: Int = 5, nBits: Int = 6): DataFrame =
+    Bucketing.layout(s, d, "annlsh", Plain, nQueries, k, nBits) {
+      annLshCompute(s, d, nQueries, k, nBits)
+    }
 
   private def annLshCompute(s: SparkSession, d: String, nQueries: Int,
       k: Int, nBits: Int): DataFrame = {
@@ -1250,20 +1197,12 @@ object Similarity {
       sum(element_at(col("vq"), i + 1)).as(s"s$i"))
     // the member-mean rollup (≤ nCells rows × dim sums) is itself a
     // compute-once layout beside the kmeans assignment — the
-    // assignment⋈corpus shuffle it rides was ~1/3 of the warm sweep
-    val tCent = "graft_kmcent_" +
-      s"${graft.sources.Bucketing.datasetTag(d)}_${nCells}_$iters"
-    if (!s.catalog.tableExists(tCent))
-      graft.sources.Bucketing.timedBuild(tCent) {
-        graft.sources.Bucketing.dropStaleLocation(s, tCent)
-        asg.join(eq, "vec_id").groupBy("cluster_id")
-          .agg(count(lit(1)).as("n"), dimSums: _*)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").saveAsTable(tCent)
-      }
-    // ≤ nCells rows — the same bounded collect kmeans itself makes
-    val cents = s.table(tCent)
-      .collect()
+    // assignment⋈corpus shuffle it rides was ~1/3 of the warm sweep;
+    // its ≤ nCells rows are the same bounded collect kmeans makes
+    val cents = Bucketing.layout(s, d, "kmcent", Plain, nCells, iters) {
+      asg.join(eq, "vec_id").groupBy("cluster_id")
+        .agg(count(lit(1)).as("n"), dimSums: _*)
+    }.collect()
       .map { r =>
         val v = Array.tabulate(dim)(i => r.getDouble(i + 2) / r.getLong(1))
         (r.getLong(0), v.toSeq, v.map(x => x * x).sum)

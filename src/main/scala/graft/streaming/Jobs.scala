@@ -519,7 +519,7 @@ object Jobs {
             .join(touched, Seq(key), "left_anti")
             .unionByName(rebuilt)
         } else rebuilt
-      ReplacingSink.replaceDir(dim, dimPath)
+      graft.sources.Compaction.replaceDir(dim, dimPath)
     }
   }
 
@@ -567,12 +567,12 @@ object Jobs {
                 .cast(DecimalType(22, 2)).as("value_sum"))
         case None => part
       }
-      ReplacingSink.replaceDir(
+      graft.sources.Compaction.replaceDir(
         merged.withColumn("__last_batch", lit(batchId)), statePath)
     }
     // publish with the canonical serving schema (always — a replayed
     // batch may follow a crash before the serving copy landed)
-    ReplacingSink.replaceDir(
+    graft.sources.Compaction.replaceDir(
       spark.read.parquet(statePath)
         .select(col("day"), col("event_type"), col("pv_ct"),
           col("value_sum").cast(DecimalType(22, 2)).as("value_sum")),

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.sources.Compaction.recover
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import graft.sources.Compaction.{recover, replaceDir}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -25,12 +25,7 @@ object ReplacingSink {
 
   def start(stream: DataFrame, keyCols: Seq[String], versionCol: String,
       path: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsert(batch, keyCols, versionCol, path)
-      }
-      .start()
+    startWith(stream, checkpoint)(upsert(_, keyCols, versionCol, path))
 
   /** Doris-aggregate-model variant: rows sharing a key MERGE by
     * summing the value columns (the reference's Doris sum-agg tables,
@@ -42,12 +37,7 @@ object ReplacingSink {
     */
   def startSumming(stream: DataFrame, keyCols: Seq[String],
       sumCols: Seq[String], path: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sumUpsert(batch, keyCols, sumCols, path)
-      }
-      .start()
+    startWith(stream, checkpoint)(sumUpsert(_, keyCols, sumCols, path))
 
   /** Doris-HLL-model variant: each key keeps additive counters PLUS a
     * mergeable DataSketches HLL of `idCol` — `hll_union_agg` folds the
@@ -60,12 +50,7 @@ object ReplacingSink {
     */
   def startSketching(stream: DataFrame, keyCols: Seq[String],
       idCol: String, path: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sketchUpsert(batch, keyCols, idCol, path)
-      }
-      .start()
+    startWith(stream, checkpoint)(sketchUpsert(_, keyCols, idCol, path))
 
   /** Doris-BITMAP-model variant: like [[startSketching]] but the
     * per-key distinct state is an EXACT bitmap
@@ -78,94 +63,77 @@ object ReplacingSink {
     */
   def startBitmap(stream: DataFrame, keyCols: Seq[String], idCol: String,
       maxId: Long, path: String, checkpoint: String): StreamingQuery =
+    startWith(stream, checkpoint)(
+      bitmapUpsert(_, keyCols, idCol, maxId, path))
+
+  private def startWith(stream: DataFrame, checkpoint: String)(
+      step: DataFrame => Unit): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        bitmapUpsert(batch, keyCols, idCol, maxId, path)
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => step(batch) }
       .start()
 
   /** One bitmap-merge step; also usable from batch jobs. */
   def bitmapUpsert(batch: DataFrame, keyCols: Seq[String], idCol: String,
       maxId: Long, path: String): Unit = {
-    val spark = batch.sparkSession
-    graft.functions.Vectors.ensureRegistered(spark)
-    val compact = batch.groupBy(keyCols.map(col): _*)
-      .agg(
-        count(lit(1)).as("pv_ct"),
-        call_function("graft_bitmap_bytes", col(idCol), lit(maxId))
-          .as("uv_bm"))
-    val merged =
-      if (recover(path)) {
-        val cur = spark.read.parquet(path)
-        cur.unionByName(compact.select(cur.columns.map(col): _*))
-          .groupBy(keyCols.map(col): _*)
-          .agg(
-            sum(col("pv_ct")).cast("long").as("pv_ct"),
-            call_function("graft_bitmap_union", col("uv_bm")).as("uv_bm"))
-      } else compact
-    replaceDir(merged, path)
+    graft.functions.Vectors.ensureRegistered(batch.sparkSession)
+    mergeStep(batch, path,
+      _.groupBy(keyCols.map(col): _*)
+        .agg(
+          count(lit(1)).as("pv_ct"),
+          call_function("graft_bitmap_bytes", col(idCol), lit(maxId))
+            .as("uv_bm")),
+      _.groupBy(keyCols.map(col): _*)
+        .agg(
+          sum(col("pv_ct")).cast("long").as("pv_ct"),
+          call_function("graft_bitmap_union", col("uv_bm")).as("uv_bm")))
   }
 
   /** One sketch-merge step; also usable from batch jobs. */
   def sketchUpsert(batch: DataFrame, keyCols: Seq[String], idCol: String,
-      path: String): Unit = {
-    val spark = batch.sparkSession
-    val compact = batch.groupBy(keyCols.map(col): _*)
-      .agg(
-        count(lit(1)).as("pv_ct"),
-        hll_sketch_agg(col(idCol)).as("uv_sketch"))
-    val merged =
-      if (recover(path)) {
-        val cur = spark.read.parquet(path)
-        cur.unionByName(compact.select(cur.columns.map(col): _*))
-          .groupBy(keyCols.map(col): _*)
-          .agg(
-            sum(col("pv_ct")).cast("long").as("pv_ct"),
-            hll_union_agg(col("uv_sketch")).as("uv_sketch"))
-      } else compact
-    replaceDir(merged, path)
-  }
+      path: String): Unit =
+    mergeStep(batch, path,
+      _.groupBy(keyCols.map(col): _*)
+        .agg(
+          count(lit(1)).as("pv_ct"),
+          hll_sketch_agg(col(idCol)).as("uv_sketch")),
+      _.groupBy(keyCols.map(col): _*)
+        .agg(
+          sum(col("pv_ct")).cast("long").as("pv_ct"),
+          hll_union_agg(col("uv_sketch")).as("uv_sketch")))
 
   /** One summing-merge step; also usable from batch jobs. */
   def sumUpsert(batch: DataFrame, keyCols: Seq[String],
       sumCols: Seq[String], path: String): Unit = {
-    val spark = batch.sparkSession
     val aggs = sumCols.map(c => sum(col(c)).as(c))
-    val compact = batch.groupBy(keyCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-    val merged =
-      if (recover(path)) {
-        val cur = spark.read.parquet(path)
-        cur.unionByName(compact.select(cur.columns.map(col): _*))
-          .groupBy(keyCols.map(col): _*)
-          .agg(aggs.head, aggs.tail: _*)
-      } else compact
-    replaceDir(merged, path)
+    val summed = (df: DataFrame) =>
+      df.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    mergeStep(batch, path, summed, summed)
   }
 
   /** One merge step; also usable from batch jobs. */
   def upsert(batch: DataFrame, keyCols: Seq[String], versionCol: String,
       path: String): Unit = {
-    val spark = batch.sparkSession
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col(versionCol).desc)
-    val latest = batch.withColumn("__rn", row_number().over(w))
+    val latest = (df: DataFrame) => df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val merged =
-      if (recover(path)) {
-        val cur = spark.read.parquet(path)
-        cur.unionByName(latest.select(cur.columns.map(col): _*))
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-      } else latest
-    replaceDir(merged, path)
+    mergeStep(batch, path, latest, latest)
   }
 
-  /** Crash-recoverable snapshot swap — shared with the batch
-    * compaction utility (see [[graft.sources.Compaction.replaceDir]]
-    * for the protocol).
+  /** The shared merge: `collapse` the batch to one row per key, then,
+    * if a snapshot exists (after finishing any crashed swap), `merge`
+    * it with the collapsed batch, and swap the result in through the
+    * crash-recoverable [[graft.sources.Compaction.replaceDir]].
     */
-  private[streaming] def replaceDir(df: DataFrame, path: String): Unit =
-    graft.sources.Compaction.replaceDir(df, path)
+  private def mergeStep(batch: DataFrame, path: String,
+      collapse: DataFrame => DataFrame, merge: DataFrame => DataFrame): Unit = {
+    val compact = collapse(batch)
+    val merged =
+      if (recover(path)) {
+        val cur = batch.sparkSession.read.parquet(path)
+        merge(cur.unionByName(compact.select(cur.columns.map(col): _*)))
+      } else compact
+    replaceDir(merged, path)
+  }
 }

@@ -1,6 +1,7 @@
 package graft.warehouse
 
-import graft.sources.Tables
+import graft.sources.{Bucketing, Tables}
+import graft.sources.Bucketing.{Bucketed, Plain}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -3390,35 +3391,16 @@ object Analytics {
     * class summary; share_ppm divides in DECIMAL(38).
     */
   /** Per-part ABC classing (the distributed prefix-sum core of
-    * [[abcParts]], reusable by [[abcXyzMatrix]]): returns
-    * (part_id, x = revenue·10⁴, abc_class) plus the exact total as a
-    * string for the caller's share math.
+    * [[abcParts]], reusable by [[abcXyzMatrix]]): (part_id,
+    * x = revenue·10⁴, abc_class). The whole-corpus classing is
+    * deterministic per dataset, so it is a compute-once layout;
+    * abcMigration's per-period slices still run the live classer via
+    * [[abcPerPartOf]].
     */
-  private val abcRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, String)]
-
-  private def abcPerPart(s: SparkSession, d: String)
-      : (DataFrame, String) =
-    // the whole-corpus classing is deterministic per dataset —
-    // compute-once layout; the exact total re-derives from the tiny
-    // part-grain table once per session (DECIMAL(38) sum, no long
-    // overflow at fleet scale). abcMigration's per-period slices
-    // still run the live classer via [[abcPerPartOf]].
-    abcRegistry.computeIfAbsent((s, d), _ => {
-      val tbl =
-        s"graft_abcparts_${graft.sources.Bucketing.datasetTag(d)}"
-      if (!s.catalog.tableExists(tbl))
-        graft.sources.Bucketing.timedBuild(tbl) {
-          graft.sources.Bucketing.dropStaleLocation(s, tbl)
-          abcPerPartOf(s, Tables.lineitem(s, d))._1
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .format("parquet").saveAsTable(tbl)
-        }
-      val t = s.table(tbl)
-      val total = t.agg(sum(col("x")).cast(DecimalType(38, 0)))
-        .head.getDecimal(0).toBigInteger.toString
-      (t, total)
-    })
+  private def abcPerPart(s: SparkSession, d: String): DataFrame =
+    Bucketing.layout(s, d, "abcparts", Plain) {
+      abcPerPartOf(s, Tables.lineitem(s, d))._1
+    }
 
   /** Same distributed prefix-sum classer over an arbitrary lineitem
     * slice — [[abcMigration]] runs it once per period.
@@ -3472,13 +3454,16 @@ object Analytics {
   }
 
   def abcParts(s: SparkSession, d: String): DataFrame = {
-    val (classed, totalStr) = abcPerPart(s, d)
+    val classed = abcPerPart(s, d)
+    // the exact total (DECIMAL(38) sum, no long overflow at fleet
+    // scale) as a 1-row broadcast cross join, not a driver job
+    val total = classed.agg(sum(col("x")).cast(DecimalType(38, 0)).as("tot"))
     classed.groupBy("abc_class")
       .agg(count(lit(1)).as("n_parts"),
         sum(col("x")).cast(DecimalType(38, 0)).as("rev_d"))
+      .crossJoin(broadcast(total))
       .withColumn("share_ppm",
-        expr(s"""CAST(rev_d * 1000000 AS DECIMAL(38,0))
-                 DIV CAST($totalStr AS DECIMAL(38,0))"""))
+        expr("CAST(rev_d * 1000000 AS DECIMAL(38,0)) DIV tot"))
       // Graded surface narrowed to BIGINT (per-class rev_e4 ≈ 2.3e14
       // at sf0.1 — four orders of int64 headroom); the guard makes a
       // future overflowing SF fail attributably instead of silently
@@ -4025,7 +4010,7 @@ object Analytics {
   def abcXyzMatrix(s: SparkSession, d: String): DataFrame = {
     // the ABC axis reads the persisted classing layout; the XYZ
     // axis is this query's one fact scan
-    val (classed, _) = abcPerPart(s, d)
+    val classed = abcPerPart(s, d)
     val monthly = Tables.lineitem(s, d)
       .groupBy(col("l_partkey").as("part_id"),
         date_trunc("month", col("l_shipdate")).as("m"))
@@ -4850,25 +4835,15 @@ object Analytics {
     * Exchange. Previously each consumer re-paid the fact⋈dim join +
     * distinct up to four times per call.
     */
-  private val obRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-
   private def orderBrands(s: SparkSession, d: String): DataFrame =
-    obRegistry.computeIfAbsent((s, d), _ => {
-      val tbl =
-        s"graft_orderbrand_${graft.sources.Bucketing.datasetTag(d)}"
-      if (!s.catalog.tableExists(tbl)) {
-        val ob = Tables.lineitem(s, d)
-          .join(broadcast(Tables.part(s, d)
-            .select(col("p_partkey"), col("p_brand"))),
-            col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey").as("ok"), col("p_brand").as("b"))
-          .distinct()
-        graft.sources.Bucketing.writeBucketed(ob, tbl, "ok", 16,
-          Seq("ok", "b"))
-      }
-      s.table(tbl)
-    })
+    Bucketing.layout(s, d, "orderbrand", Bucketed("ok", Seq("ok", "b"))) {
+      Tables.lineitem(s, d)
+        .join(broadcast(Tables.part(s, d)
+          .select(col("p_partkey"), col("p_brand"))),
+          col("l_partkey") === col("p_partkey"))
+        .select(col("l_orderkey").as("ok"), col("p_brand").as("b"))
+        .distinct()
+    }
 
   /** Brand affinity matrix — market-basket association at BRAND
     * grain (the merchandising view; [[assocRules]] works at part

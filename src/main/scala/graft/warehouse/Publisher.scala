@@ -1,6 +1,7 @@
 package graft.warehouse
 
-import graft.sources.Tables
+import graft.sources.{Bucketing, Tables}
+import graft.sources.Bucketing.Bucketed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,40 +18,31 @@ object Publisher {
 
   /** The derived part–supplier availability relation (TPC-H
     * `partsupp` reconstructed from lineitem: MIN extendedprice as
-    * supplycost, SUM quantity as availqty per pair), materialized
-    * ONCE per (session, dataset) as a BUCKETED layout keyed on the
+    * supplycost, SUM quantity as availqty per pair), a compute-once
+    * layout ([[graft.sources.Bucketing.layouts]]) BUCKETED on the
     * part key — q2/q11/q16/q20 each used to re-aggregate the full
     * fact table to rebuild it (q2's decorrelation even does so
-    * twice). Same contract as [[graft.operators.Graph
-    * .coPurchasePairCounts]]: disk-backed (survives clearCache),
-    * once-per-warehouse via the catalog check, partkey-keyed joins
-    * and per-part aggregates read it with no Exchange. Returns the
-    * table name for use in the raw-SQL query bodies.
+    * twice). Partkey-keyed joins and per-part aggregates read it
+    * with no Exchange. [[psLayout]] gives the table name for use in
+    * the raw-SQL query bodies.
     */
-  def psLayout(s: SparkSession, d: String): String =
-    psRegistry.computeIfAbsent((s, d), _ => {
-      val tbl = s"graft_ps_${graft.sources.Bucketing.datasetTag(d)}"
-      if (!s.catalog.tableExists(tbl)) {
-        val ps = Tables.lineitem(s, d)
-          .groupBy(col("l_partkey").as("ps_partkey"),
-            col("l_suppkey").as("ps_suppkey"))
-          .agg(min(col("l_extendedprice").cast(
-            org.apache.spark.sql.types.DecimalType(12, 2)))
-            .as("ps_supplycost"),
-            sum(col("l_quantity")).cast("long").as("ps_availqty"))
-        graft.sources.Bucketing.writeBucketed(ps, tbl, "ps_partkey", 16,
-          Seq("ps_partkey", "ps_suppkey"))
-      }
-      tbl
-    })
-
-  private val psRegistry =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
-
-  /** The ps layout as a DataFrame (for DataFrame-API consumers like
-    * [[graft.operators.Graph.supplierOverlap]]). */
   def psTable(s: SparkSession, d: String): DataFrame =
-    s.table(psLayout(s, d))
+    Bucketing.layout(s, d, "ps",
+        Bucketed("ps_partkey", Seq("ps_partkey", "ps_suppkey"))) {
+      Tables.lineitem(s, d)
+        .groupBy(col("l_partkey").as("ps_partkey"),
+          col("l_suppkey").as("ps_suppkey"))
+        .agg(min(col("l_extendedprice").cast(
+          org.apache.spark.sql.types.DecimalType(12, 2)))
+          .as("ps_supplycost"),
+          sum(col("l_quantity")).cast("long").as("ps_availqty"))
+    }
+
+  /** The [[psTable]] layout's catalog name, built if absent. */
+  def psLayout(s: SparkSession, d: String): String = {
+    psTable(s, d)
+    Bucketing.tableName("ps", d)
+  }
 
   /** GMV + order count per day. Ref: TradeStatsMapper.java:1. */
   def gmvDaily(s: SparkSession, d: String): DataFrame =

@@ -173,6 +173,9 @@ class PlanLintSpec extends AnyFunSuite {
     // assoc_rules' basket total took the same route: a 1-row
     // broadcast crossJoin in place of a construction-time count()
     "analytics_assoc_rules",
+    // abc_class's exact revenue total likewise: a 1-row broadcast
+    // crossJoin in place of a driver head() when the layout resolved
+    "analytics_abc_class",
     // lsh_recall composes two 1-row count aggregates per config
     "dedup_lsh_recall",
     // r9: weighted quantiles crossJoin the 1-row total-weight

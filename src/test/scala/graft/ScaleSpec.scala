@@ -746,24 +746,118 @@ class ScaleSpec extends AnyFunSuite {
   }
   test("derived layouts rebuild over a stale warehouse location (fresh-metastore crash recovery)") {
     import s.implicits._
-    val tbl = "graft_stale_layout_probe"
-    // simulate a previous JVM's leftover: data on disk, no catalog row
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
+    import graft.operators.{Dedup, Graph, Similarity}
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog.BucketSpec
+    import scala.jdk.CollectionConverters._
     val wh = s.sessionState.conf.warehousePath
-    val path = new org.apache.hadoop.fs.Path(wh, tbl)
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(path)
-    val f = fs.create(new org.apache.hadoop.fs.Path(path, "junk.parquet"))
-    f.write(Array[Byte](1, 2, 3)); f.close()
-    assert(!s.catalog.tableExists(tbl) && fs.exists(path))
+    val fs = new Path(wh).getFileSystem(s.sparkContext.hadoopConfiguration)
+    // simulate a previous JVM's leftover: data on disk, no catalog row
+    def plantOrphan(tbl: String): Path = {
+      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      val path = new Path(wh, tbl)
+      fs.mkdirs(path)
+      val f = fs.create(new Path(path, "junk.parquet"))
+      f.write(Array[Byte](1, 2, 3)); f.close()
+      assert(!s.catalog.tableExists(tbl) && fs.exists(path))
+      path
+    }
     // the bucketed writer must clear the orphan and succeed — this
     // exact shape took all six graph queries down in a fresh-JVM
     // verify before the fix
-    graft.sources.Bucketing.writeBucketed(
-      Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), tbl, "k", 2)
-    assert(s.table(tbl).count() === 2)
-    s.sql(s"DROP TABLE $tbl")
+    val probe = "graft_stale_layout_probe"
+    plantOrphan(probe)
+    Bucketing.writeBucketed(
+      Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), probe, "k", 2)
+    assert(s.table(probe).count() === 2)
+    s.sql(s"DROP TABLE $probe")
+
+    // the layout primitive, on a copy of the tables: a new dataset
+    // path, so nothing of it is held or cataloged yet. One plain
+    // layout, the three bucketed graph layouts (copdeg builds on
+    // copurchase, which builds on orderpart) and one two-table layout.
+    val dir = java.nio.file.Files.createTempDirectory("graft_stale_layouts")
+    new java.io.File(d).listFiles().foreach { f =>
+      java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)) }
+    val dd = dir.toString
+    val tag = Bucketing.datasetTag(dd)
+    val plain = s"graft_bftopk_${tag}_20_5"
+    val bucketed = Map(
+      s"graft_orderpart_$tag" -> BucketSpec(16, Seq("ok"), Seq("ok", "pk")),
+      s"graft_copurchase_$tag" -> BucketSpec(16, Seq("s"), Seq("s", "t")),
+      s"graft_copdeg_$tag" -> BucketSpec(16, Seq("v"), Seq("v")))
+    val twoTable =
+      Seq(s"graft_shingle_cooc_${tag}_12", s"graft_shingle_sizes_${tag}_12")
+    val tables = plain +: (bucketed.keys.toSeq ++ twoTable)
+    val orphans = tables.map(plantOrphan)
+    def callAll(): Seq[org.apache.spark.sql.DataFrame] = {
+      Dedup.containment(s, dd)
+      Seq(Similarity.bruteForceTopK(s, dd), Graph.coPurchaseDegrees(s, dd))
+    }
+    val first = callAll()
+    // every orphan cleared, every table rebuilt and readable
+    orphans.foreach(p => assert(!fs.exists(new Path(p, "junk.parquet"))))
+    tables.foreach(t => assert(s.catalog.tableExists(t), t))
+    assert(s.table(plain).count() === 20 * 5)
+    assert(s.table(s"graft_copdeg_$tag").count() > 0)
+    // one log entry per build, under the first table's name
+    val logged = Bucketing.buildLog.keySet.asScala.filter(_.contains(tag))
+    assert(logged === Set(plain, twoTable.head) ++ bucketed.keys)
+    bucketed.foreach { case (t, spec) =>
+      assert(s.sessionState.catalog.getTableMetadata(TableIdentifier(t))
+        .bucketSpec === Some(spec), t)
+    }
+    // a second call returns the held frames: no new build, no job
+    val before = Bucketing.buildLog.size
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    s.sparkContext.addSparkListener(listener)
+    val second = try {
+      s.sparkContext.setJobGroup("layout_second_call", "second call")
+      val held = try callAll() finally s.sparkContext.clearJobGroup()
+      // events arrive in order: once the marker job is seen, every
+      // job the second calls started has been seen too
+      s.sparkContext.setJobGroup("layout_marker", "marker")
+      try s.range(1).count() finally s.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (!jobs.contains("layout_marker") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      held
+    } finally s.sparkContext.removeSparkListener(listener)
+    assert(jobs.contains("layout_marker"))
+    assert(!jobs.contains("layout_second_call"))
+    first.zip(second).foreach { case (a, b) => assert(a eq b) }
+    assert(Bucketing.buildLog.size === before)
+    fs.delete(new Path(dir.toUri), true)
   }
+
+  test("only Bucketing writes or probes catalog tables in src/main") {
+    // the layout decision (name, memo, catalog check, orphan clear,
+    // write) stays in one module
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val own = root.resolve("graft/sources/Bucketing.scala")
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(root)
+    val sources =
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    assert(sources.contains(own))
+    val offenders = sources.filter(_ != own).flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains("saveAsTable(") ||
+            l.contains("catalog.tableExists(") => s"$f:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("retention sweep: TTL drops only expired partitions, dry-run deletes nothing") {
     import s.implicits._
     import graft.sources.Partitioned
