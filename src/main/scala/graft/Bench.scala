@@ -1,6 +1,11 @@
 package graft
+/** `Bench [query...]`: times the named queries (all, when none are
+  * named) and prints one JSON line.
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val picked = SparkEntry.select(args.toSeq)
+    val subset = args.nonEmpty
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // min-of-k per query: a shared host's load spikes corrupt single
     // timings (a 0.4s query once benched at 47s under external load);
@@ -50,8 +55,6 @@ object Bench {
       priorPath.map(parseTimes(_, "queries")).getOrElse(Map.empty)
     if (priorMin.nonEmpty)
       System.err.println(s"[bench] outlier re-run guard vs ${priorPath.get} (${priorMin.size} prior mins)")
-    // iteration aid: SPARK_GRAFT_BENCH_ONLY=<regex> times a subset
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
     // HOST-DRIFT PROBE (r9 VERDICT #3, hardened r11): a fixed
     // 10-query set — untouched operators since r6 — timed at the
     // START and again at the END of the run, with both median ratios
@@ -63,8 +66,8 @@ object Bench {
     // decayed out of. Probe queries are pre-warmed by the probe
     // itself (JIT, page cache, compute-once layouts), so the
     // artifact lists them under "probe_warmed" — read their
-    // cross-round per-query deltas accordingly. Skipped entirely
-    // under SPARK_GRAFT_BENCH_ONLY subset iteration.
+    // cross-round per-query deltas accordingly. Skipped when queries
+    // are named.
     val probeSet = Seq(
       "q1_pricing_summary", "q3_segment_revenue", "q6_forecast_revenue",
       "q9_product_profit", "q13_customer_dist", "q18_large_orders",
@@ -80,14 +83,12 @@ object Bench {
             System.err.println(s"[bench] probe $name FAILED: ${e.getMessage}")
             None }
         }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(false))
+        SparkEntry.release(spark)
         name -> (if (ts.isEmpty) 0.0 else ts.min)
       }
     }
     val probeTimes: Seq[(String, Double)] =
-      if (only.isDefined) Seq.empty else runProbe()
+      if (subset) Seq.empty else runProbe()
     // prior probe block when the prior artifact carries one; the
     // first probe-bearing round compares against the prior QUERIES
     // map (same queries, same min-of-k discipline)
@@ -115,12 +116,10 @@ object Bench {
       System.err.println(f"[bench] probe median ratio vs prior: $r%.3f"))
     val errors = scala.collection.mutable.LinkedHashSet.empty[String]
     val rerun = scala.collection.mutable.LinkedHashSet.empty[String]
-    val picked = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(_.findFirstIn(n).isDefined)
-    }
     def loadNow(): Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val results = picked.map { case (name, fn) =>
+    val results = picked.map { q =>
+      val name = q.name
       val qLoad = loadNow()
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
       var failed = false
@@ -129,7 +128,7 @@ object Bench {
         // failures must not break the JSON line, but must be VISIBLE
         // both on stderr and STRUCTURALLY in the "errors" key — a
         // swallowed exception otherwise reads as a fast query
-        try { fn(spark, sfDir).count(); times += (System.nanoTime() - t0) / 1e9 }
+        try { q.build(spark, sfDir).count(); times += (System.nanoTime() - t0) / 1e9 }
         catch { case e: Throwable =>
           failed = true
           errors += name
@@ -152,32 +151,10 @@ object Bench {
         }
         once(); extra += 1
       }
-      // drop whatever this query cached/persisted before the next one
-      // runs: CacheManager matches by canonicalized plan and entries
-      // are never freed otherwise, so by query ~45 of 130 the storage
-      // pool holds dozens of leaked intermediates and the unified
-      // memory manager protects them from eviction — shuffle-heavy
-      // queries late in the alphabet (dedup_cross_source was measured
-      // 1.7-2.4× slower in-suite than isolated) lose execution memory
-      // and spill. Clearing BETWEEN queries keeps min-of-k's
-      // cross-run cache reuse within a query intact.
-      spark.catalog.clearCache()
-      // clearCache only empties the SQL CacheManager; localCheckpoint
-      // blocks (the lineage-breaking iterative operators — MST,
-      // closure, as-of — checkpoint per round) live in the
-      // BlockManager until their RDD is GC'd and would pollute the
-      // storage pool across the suite the same way leaked cache
-      // entries did in r5. Freeing them between queries keeps every
-      // query's execution-memory budget position-independent.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(false))
-      // broadcast torrent blocks and shuffle files free on GC (the
-      // ContextCleaner rides reference processing — the same
-      // mechanism behind the 12g-vs-48g heap gotcha); one explicit
-      // GC per query makes that cleanup DETERMINISTIC instead of
-      // heap-pressure-dependent, so late-suite queries inherit a
-      // clean storage pool regardless of position (~50 ms each)
-      System.gc()
+      // drop whatever this query pinned before the next one runs;
+      // releasing BETWEEN queries keeps min-of-k's cross-run cache
+      // reuse within a query intact
+      SparkEntry.release(spark)
       val ts = times.toSeq
       // min = the plan's cost net of load spikes; max ≈ the COLD cost
       // (run 1 pays any cache/index build) — min-of-k alone hid a
@@ -250,7 +227,7 @@ object Bench {
     // tail (or miss one that arrives mid-run); the run is only
     // normalizable when start and end agree
     val probeEnd: Seq[(String, Double)] =
-      if (only.isDefined) Seq.empty else runProbe()
+      if (subset) Seq.empty else runProbe()
     val probeEndRatio: Option[Double] = medianRatio(probeEnd, probeEndPrior)
     probeEndRatio.foreach(r =>
       System.err.println(f"[bench] END probe median ratio vs prior: $r%.3f"))

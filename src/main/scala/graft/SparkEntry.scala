@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Multimodal, Similarity, Temporal, TextAnalysis}
+import graft.operators.{Dedup, Graph, Multimodal, Similarity, Temporal, TextAnalysis}
 import graft.warehouse.{Analytics, Dwd, Dws, Incremental, Publisher, Quality}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -17,539 +17,66 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Dws.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // §2.1 warehouse
-    "q1_pricing_summary" -> (Dws.pricingSummary(_, _)),
-    "dws_traffic_pageview" -> (Dws.trafficPageView(_, _)),
-    "dws_traffic_keyword" -> (Dws.trafficKeyword(_, _)),
-    "dws_traffic_home_detail" -> (Dws.trafficHomeDetail(_, _)),
-    "dws_user_login" -> (Dws.userLogin(_, _)),
-    "dws_user_register" -> (Dws.userRegister(_, _)),
-    "dws_trade_cart_uu" -> (Dws.tradeCartUu(_, _)),
-    "dwd_trade_order_detail" -> (Dwd.tradeOrderDetail(_, _)),
-    "dwd_trade_order_cancel" -> (Dwd.tradeOrderCancel(_, _)),
-    "dwd_trade_pay_suc" -> (Dwd.tradePaySuc(_, _)),
-    "dwd_trade_refund" -> (Dwd.tradeRefund(_, _)),
-    "dwd_trade_refund_pay_suc" -> (Dwd.tradeRefundPaySuc(_, _)),
-    "dwd_trade_cart_add" -> (Dwd.tradeCartAdd(_, _)),
-    "dws_trade_sku_order" -> (Dws.tradeSkuOrder(_, _)),
-    "dws_trade_province_order" -> (Dws.tradeProvinceOrder(_, _)),
-    "dwd_comment_dic_join" -> (Dwd.commentDicJoin(_, _)),
-    "pub_gmv_daily" -> (Publisher.gmvDaily(_, _)),
-    "pub_province_topn" -> (Publisher.provinceTopN(_, _)),
-    "pub_channel_uvct" -> (Publisher.channelUvCt(_, _)),
-    "q5_star_join" -> (Publisher.starJoinRevenue(_, _)),
-    "q17_small_qty_revenue" -> (Publisher.smallQtyRevenue(_, _)),
-    "dq_audit" -> (Quality.audit(_, _)),
-    "dq_benford" -> (Quality.benfordAudit(_, _)),
-    "analytics_global_topk" -> (Analytics.globalTopK(_, _)),
-    "corpus_sample_weighted" -> (TextAnalysis.sampleWeighted(_, _)),
-    "analytics_full_outer" -> (Analytics.fullOuterActivity(_, _)),
-    "analytics_rolling_wau" -> (Analytics.rollingWau(_, _)),
-    "analytics_rolling_mau" -> ((s, d) => Analytics.rollingWau(s, d, 30)
-      .withColumnRenamed("wau_ct", "mau_ct")),
-    "analytics_outliers_mad" -> (Analytics.madOutliers(_, _)),
-    "analytics_pareto" -> (Analytics.paretoShare(_, _)),
-    "analytics_multi_distinct" -> (Analytics.multiDistinctDaily(_, _)),
-    "analytics_interpurchase" -> (Analytics.interPurchaseDist(_, _)),
-    "analytics_new_returning" -> (Analytics.newVsReturning(_, _)),
-    "analytics_band_scan" -> (Analytics.bandScanCounts(_, _)),
-    "analytics_stats_pushdown" -> (Analytics.tableStatsPushdown(_, _)),
-    "analytics_range_frame" -> (Analytics.trailingRangeRevenue(_, _)),
-    "analytics_downsample" -> (Analytics.downsampleSeries(_, _)),
-    "analytics_attribution" -> (Analytics.lastTouchAttribution(_, _)),
-    "pipeline_shuffle_order" -> (TextAnalysis.shuffleOrder(_, _)),
-    "text_length_buckets" -> (TextAnalysis.lengthBuckets(_, _)),
-    "dedup_contamination_score" -> (Dedup.contaminationScore(_, _)),
-    "graph_components" -> (graft.operators.Graph.components(_, _)),
-    "q21_waiting_suppliers" -> (Publisher.waitingSuppliers(_, _)),
-    "q22_lapsed_customers" -> (Publisher.lapsedCustomers(_, _)),
-    "q7_volume_shipping" -> (Publisher.volumeShipping(_, _)),
-    "q13_customer_dist" -> (Publisher.customerDistribution(_, _)),
-    "q2_min_cost_supplier" -> (Publisher.minCostSupplier(_, _)),
-    "q8_market_share" -> (Publisher.marketShare(_, _)),
-    "q9_product_profit" -> (Publisher.productProfit(_, _)),
-    "q10_returned_customers" -> (Publisher.returnedItemCustomers(_, _)),
-    "q11_important_stock" -> (Publisher.importantStock(_, _)),
-    "q12_ship_priority" -> (Publisher.shipClassPriority(_, _)),
-    "q14_promo_share" -> (Publisher.promoRevenueShare(_, _)),
-    "q16_part_suppliers" -> (Publisher.partSupplierCounts(_, _)),
-    "q19_disjunctive_revenue" -> (Publisher.disjunctiveRevenue(_, _)),
-    "q20_excess_stock" -> (Publisher.excessStockSuppliers(_, _)),
-    "q18_large_orders" -> (Publisher.largeOrders(_, _)),
-    "q15_top_supplier" -> (Publisher.topSupplier(_, _)),
-    "q3_segment_revenue" -> (Publisher.segmentRevenue(_, _)),
-    "dwd_visitor_state_repair" -> (Dwd.visitorStateRepair(_, _)),
-    "analytics_sessionize" -> (Analytics.sessionize(_, _)),
-    "analytics_sku_topn" -> (Analytics.skuTopNPerCategory(_, _)),
-    "analytics_gmv_running" -> (Analytics.gmvRunning(_, _)),
-    "analytics_event_pivot" -> (Analytics.eventPivot(_, _)),
-    "analytics_anti_dormant" -> (Analytics.dormantParts(_, _)),
-    "analytics_rollup" -> (Analytics.revenueRollup(_, _)),
-    "analytics_cube" -> (Analytics.eventCube(_, _)),
-    "analytics_sliding_window" -> (Analytics.slidingTraffic(_, _)),
-    "analytics_approx_stats" -> (Analytics.approxStats(_, _)),
-    "analytics_exact_quantiles" -> (Analytics.exactQuantiles(_, _)),
-    "analytics_mom_growth" -> (Analytics.momGrowth(_, _)),
-    "analytics_corr" -> (Analytics.corrQtyPrice(_, _)),
-    "analytics_histogram" -> (Analytics.orderTotalHistogram(_, _)),
-    "graph_pagerank" -> (graft.operators.Graph.pagerankCoPurchase(_, _)),
-    "graph_triangles" -> (graft.operators.Graph.triangleCounts(_, _)),
-    "graph_khop_reach" -> (graft.operators.Graph.kHopReach(_, _)),
-    "analytics_assoc_rules" -> (graft.operators.Graph.assocRules(_, _)),
-    "analytics_outliers" -> (Analytics.valueOutliers(_, _)),
-    "analytics_winsorize" -> (Analytics.winsorizedValues(_, _)),
-    "analytics_set_ops" -> (Analytics.segmentSetOps(_, _)),
-    "analytics_null_semantics" -> (Analytics.nullSemantics(_, _)),
-    "analytics_histogram_eqdepth" ->
-      (Analytics.orderTotalHistogramEqDepth(_, _)),
-    "analytics_contribution" -> (Analytics.gmvContribution(_, _)),
-    "analytics_value_windows" -> (Analytics.orderValueWindows(_, _)),
-    "analytics_date_arith" -> (Analytics.dateArithmetic(_, _)),
-    "dws_traffic_daily_mv" -> (Dws.trafficDailyViaMv(_, _)),
-    "dws_traffic_monthly_mv" -> (Dws.trafficMonthlyViaMv(_, _)),
-    "pipeline_pseudonymize" -> (Analytics.pseudonymize(_, _)),
-    "analytics_table_checksum" -> (Analytics.tableChecksum(_, _)),
-    "pipeline_split" -> (TextAnalysis.trainValTestSplit(_, _)),
-    "analytics_heavy_hitters" -> (Analytics.heavyHitters(_, _)),
-    "analytics_key_skew" -> (Analytics.keySkewProfile(_, _)),
-    "dim_merge_upsert" -> (Temporal.mergeUpsert(_, _)),
-    "dim_snapshot_diff" -> (Temporal.snapshotDiff(_, _)),
-    "analytics_incremental_gmv" -> (Incremental.dailyGmv(_, _)),
-    "analytics_incremental_join" ->
-      (Incremental.maintainedOrderDetail(_, _)),
-    "analytics_kmv_distinct" -> (graft.warehouse.Sketched.kmvDistinct(_, _)),
-    "analytics_kmv_native" ->
-      (graft.warehouse.Sketched.kmvDistinctNative(_, _)),
-    "analytics_gap_fill" -> (Analytics.gapFillDaily(_, _)),
-    "analytics_unpivot" -> (Analytics.lineitemUnpivot(_, _)),
-    "analytics_grouping_sets" -> (Analytics.revenueGroupingSets(_, _)),
-    "analytics_rank_suite" -> (Analytics.orderRankSuite(_, _)),
-    "layout_zorder" -> (graft.sources.ZOrder.lineitemZKeys(_, _)),
-    "layout_zorder3" -> (graft.sources.ZOrder.lineitemZKeys3(_, _)),
-    "analytics_funnel" -> (Analytics.funnel(_, _)),
-    "analytics_rfm" -> (Analytics.rfm(_, _)),
-    "analytics_retention" -> (Analytics.retentionCohorts(_, _)),
-    "analytics_path" -> (Analytics.pathTransitions(_, _)),
-    "analytics_skew_salted" -> (Analytics.saltedNationStats(_, _)),
-    "temporal_asof_join" -> (Temporal.lastViewBeforePurchase(_, _)),
-    "temporal_asof_native" -> (Temporal.lastViewBeforePurchaseNative(_, _)),
-    "temporal_asof_sql" -> (Temporal.lastViewBeforePurchaseSql(_, _)),
-    "temporal_asof_broadcast" -> (Temporal.lastViewBeforePurchaseBroadcast(_, _)),
-    "dim_scd2_build" -> (Temporal.userValueScd2(_, _)),
-    "temporal_interval_join" -> (Temporal.clicksBeforePurchase(_, _)),
-    "temporal_interval_native" -> (Temporal.clicksBeforePurchaseNative(_, _)),
-    "temporal_interval_sql" -> (Temporal.clicksBeforePurchaseSql(_, _)),
-    "text_segment" -> (TextAnalysis.segmentCounts(_, _)),
-    "text_segment_dict" -> (TextAnalysis.segmentCountsDict(_, _)),
-    "text_tfidf_topk" -> (TextAnalysis.tfidfTopTerms(_, _)),
-    "q6_forecast_revenue" -> (Publisher.forecastRevenue(_, _)),
-    "q4_priority_refund" -> (Publisher.priorityRefundExists(_, _)),
-    "sim_ann_ivf" -> (Similarity.annIvf(_, _)),
-    "text_winnow" -> ((s, d) =>
-      TextAnalysis.winnow(s, d).select("doc_id", "n_fp")),
-    "dedup_winnow_pairs" -> (TextAnalysis.winnowPairs(_, _)),
-    "dedup_repeated_spans" -> (TextAnalysis.repeatedSpans(_, _)),
-    "sim_range_search" -> (Similarity.rangeSearch(_, _)),
-    "text_corpus_stats" -> (TextAnalysis.corpusStats(_, _)),
-    "pipeline_clean_corpus" -> (TextAnalysis.cleanCorpus(_, _)),
-    // §2.2 LLM pipeline
-    "dedup_exact" -> (Dedup.exact(_, _)),
-    "dedup_minhash_lsh" -> (Dedup.minhashLsh(_, _)),
-    "dedup_simhash" -> (Dedup.simhash(_, _)),
-    "dedup_ngram_jaccard" -> (Dedup.ngramJaccard(_, _)),
-    "dedup_embedding" -> ((s, d) =>
-      Dedup.embeddingNearDupExact(s, d).select("id_a", "id_b")),
-    "dedup_embedding_lsh" -> ((s, d) =>
-      Dedup.embeddingNearDupLsh(s, d).select("id_a", "id_b")),
-    "dedup_clusters" -> ((s, d) =>
-      Dedup.dedupClusters(Dedup.ngramJaccard(s, d))),
-    // the scale path: transitive closure over LSH candidates — the
-    // pair input is O(docs) bucket-joined, not the exact co-occurrence
-    // scan; same oracle because banding loses no >=0.5 pair here
-    "dedup_clusters_lsh" -> ((s, d) =>
-      Dedup.dedupClusters(Dedup.minhashLsh(s, d))),
-    // r8: the savings/ROI rollup over the same closure
-    "dedup_savings" -> (Dedup.dedupSavings(_, _)),
-    // r8: Apriori level-3 + hybrid-index rank fusion
-    "graph_assoc_triples" ->
-      ((s, dir) => graft.operators.Graph.assocTriples(s, dir)),
-    "sim_rank_fusion" -> (Similarity.rankFusion(_, _)),
-    // r8: bipartite butterflies off the pair layout; data-grounded
-    // LSH banding planner off the co-occurrence layout
-    "graph_butterflies" ->
-      ((s, dir) => graft.operators.Graph.butterflies(s, dir)),
-    "dedup_lsh_planner" -> (Dedup.lshPlanner(_, _)),
-    // r8 batch 2: seed-conditioned PPR beside the global pagerank;
-    // edge-grain triangle support (the k-truss peel seed)
-    "graph_ppr" ->
-      ((s, dir) => graft.operators.Graph.pprCoPurchase(s, dir)),
-    "graph_truss_support" ->
-      ((s, dir) => graft.operators.Graph.trussSupport(s, dir)),
-    // r8 batch 2: published-rule curation attribution + DSIR-style
-    // target-similarity screen for mix planning
-    "text_gopher_rules" -> (TextAnalysis.gopherRules(_, _)),
-    "pipeline_dsir_screen" -> (TextAnalysis.dsirScreen(_, _)),
-    // r8 batch 2: strict-order funnel parity + FD audit with g3
-    "analytics_window_funnel_strict" ->
-      (Analytics.windowFunnelStrict(_, _)),
-    "dq_fd_audit" -> (Quality.fdAudit(_, _)),
-    // r8 batch 2: component-size histogram + ANN hubness telemetry
-    "graph_component_sizes" ->
-      ((s, dir) => graft.operators.Graph.componentSizes(s, dir)),
-    "sim_hubness" -> (Similarity.hubness(_, _)),
-    // r8 batch 2: LSH fan-in evidence as a graded relation +
-    // negative-association substitute pairs
-    "dedup_bucket_histogram" -> (Dedup.bucketHistogram(_, _)),
-    "graph_substitutes" ->
-      ((s, dir) => graft.operators.Graph.substitutePairs(s, dir)),
-    // r8 batch 2: CCNet-style perplexity-bucket mix matrix
-    "pipeline_ppl_mix" -> (TextAnalysis.pplMix(_, _)),
-    // r8 batch 2: double-charge candidate screen
-    "dq_duplicate_orders" -> (Quality.duplicateOrders(_, _)),
-    // r9: ClickHouse sequenceCount parity (greedy non-overlapping
-    // matches via the prefix-deficit closed form), leakage-aware
-    // grouped split, MIPS top-k, id gaps-and-islands audit
-    "analytics_sequence_count" -> (Analytics.sequenceCount(_, _)),
-    // r10: sequenceMatch with a time condition (?1)(?t<W)(?2) — the
-    // sixth and last funnel/sequence semantic — plus the
-    // path-analysis and trend-scalar CH parities
-    "analytics_sequence_match_time" ->
-      (Analytics.sequenceMatchTime(_, _)),
-    "analytics_sequence_next_node" ->
-      (Analytics.sequenceNextNode(_, _)),
-    "analytics_delta_sum" -> (Analytics.deltaSumGmv(_, _)),
-    "analytics_window_funnel_dedup" ->
-      (Analytics.windowFunnelDedup(_, _)),
-    "analytics_weighted_quantiles" ->
-      (Analytics.weightedQuantiles(_, _)),
-    "pipeline_grouped_split" -> (TextAnalysis.groupedSplit(_, _)),
-    "dq_id_islands" -> (Quality.idIslands(_, _)),
-    // r8 batch 2: measured banding P/R beside the planner's S-curve
-    "dedup_lsh_recall" -> (Dedup.lshRecall(_, _)),
-    "sim_topk_bruteforce" -> (Similarity.bruteForceTopK(_, _)),
-    "sim_filtered_ann" -> (Similarity.filteredTopK(_, _)),
-    "sim_ann_lsh" -> (Similarity.annLsh(_, _)),
-    "sim_knn_join" -> (Similarity.knnJoin(_, _)),
-    "sim_kmeans" -> (Similarity.kmeansClusters(_, _)),
-    "sim_semdedup" -> (Similarity.semDedupPairs(_, _)),
-    "sim_ann_pq" -> (Similarity.annPq(_, _)),
-    "sim_ann_ivfpq" -> (Similarity.annIvfPq(_, _)),
-    "dedup_cross_source" -> (Dedup.crossSourceOverlap(_, _)),
-    "dedup_chunks" -> (Dedup.chunkDedup(_, _)),
-    "dedup_bloom_decontaminate" -> (Dedup.bloomDecontaminate(_, _)),
-    "dedup_containment" -> (Dedup.containment(_, _)),
-    "dedup_edit_distance" -> (Dedup.editDistancePairs(_, _)),
-    "text_lm_score" -> (TextAnalysis.lmScore(_, _)),
-    "text_repetition" -> (TextAnalysis.repetitionStats(_, _)),
-    "corpus_sample_stratified" -> (TextAnalysis.sampleStratified(_, _)),
-    "corpus_sample_bottomk" -> (TextAnalysis.sampleBottomK(_, _)),
-    "pipeline_pack_greedy" -> (TextAnalysis.packGreedy(_, _)),
-    "pipeline_domain_mix" -> (TextAnalysis.domainMix(_, _)),
-    "corpus_assign_ids" -> (TextAnalysis.assignStableIds(_, _)),
-    "text_langid" -> (TextAnalysis.langId(_, _)),
-    "text_quality" -> (TextAnalysis.quality(_, _)),
-    "text_tokens" -> (TextAnalysis.tokens(_, _)),
-    "text_quality_model" -> (TextAnalysis.qualityModelScore(_, _)),
-    "text_fingerprint" -> (TextAnalysis.fingerprintGroups(_, _)),
-    "mm_binary_meta" -> (Multimodal.binaryMeta(_, _)),
-    "mm_audio_chunks" -> (Multimodal.audioChunks(_, _)),
-    "mm_audio_energy" -> (Multimodal.audioEnergy(_, _)),
-    "mm_image_dims" -> (Multimodal.imageDims(_, _)),
-    "dq_drift_psi" -> (Quality.driftPsi(_, _)),
-    "analytics_autocorr" -> (Analytics.autocorrGmv(_, _)),
-    "text_search_conjunctive" -> (TextAnalysis.searchConjunctive(_, _)),
-    "text_bm25_topk" -> (TextAnalysis.bm25TopK(_, _)),
-    "dedup_sorted_neighborhood" -> (Dedup.sortedNeighborhoodPairs(_, _)),
-    "graph_link_predict" ->
-      (graft.operators.Graph.commonNeighborPairs(_, _)),
-    "analytics_kmv_intersection" ->
-      (graft.warehouse.Sketched.kmvIntersection(_, _)),
-    "analytics_bitmap_uv" -> (graft.warehouse.Sketched.bitmapDailyUv(_, _)),
-    "analytics_bitmap_range_uv" ->
-      (graft.warehouse.Sketched.bitmapRangeUv(_, _)),
-    "analytics_seq_pattern" -> (Analytics.seqPattern(_, _)),
-    "analytics_window_funnel" -> (Analytics.windowFunnel(_, _)),
-    "analytics_bitmap_audience" ->
-      (graft.warehouse.Sketched.bitmapAudience(_, _)),
-    "pipeline_mix_temperature" -> (TextAnalysis.mixTemperature(_, _)),
-    "pipeline_split_leakage" -> (TextAnalysis.splitLeakage(_, _)),
-    "mm_image_dhash" -> (Multimodal.imageDHash(_, _)),
-    "dq_spc_orders" -> (Quality.spcOrders(_, _)),
-    "pipeline_pack_mask_spans" -> (TextAnalysis.packMaskSpans(_, _)),
-    "analytics_string_parity" -> (Analytics.stringParity(_, _)),
-    "analytics_rollup_topk" -> (Analytics.rollupTopK(_, _)),
-    "pipeline_shard_manifest" -> (TextAnalysis.shardManifest(_, _)),
-    "analytics_funnel_time" -> (Analytics.funnelTime(_, _)),
-    "dq_order_reconcile" -> (Quality.orderReconcile(_, _)),
-    "temporal_interval_union" ->
-      (graft.operators.Temporal.intervalUnion(_, _)),
-    "temporal_gaps" -> (graft.operators.Temporal.intervalGaps(_, _)),
-    "analytics_ab_cuped" -> (Analytics.abCuped(_, _)),
-    "analytics_price_volume_mix" -> (Analytics.priceVolumeMix(_, _)),
-    "layout_zonemap" -> ((s, dir) =>
-      graft.sources.ZOrder.zoneMapAudit(s, dir)),
-    "sim_batch_diversity" -> (Similarity.batchDiversity(_, _)),
-    "graph_modularity" -> ((s, dir) =>
-      graft.operators.Graph.brandModularity(s, dir)),
-    "analytics_restatement" ->
-      (graft.operators.Temporal.restatementReport(_, _)),
-    "text_boilerplate" -> (TextAnalysis.boilerplateRate(_, _)),
-    "dq_heartbeat" -> (Quality.heartbeatGaps(_, _)),
-    "analytics_brand_penetration" -> (Analytics.brandPenetration(_, _)),
-    "mm_audio_vad" -> (Multimodal.audioVad(_, _)),
-    "pipeline_curriculum" -> (TextAnalysis.curriculumSchedule(_, _)),
-    "analytics_return_rate" -> (Analytics.returnRate(_, _)),
-    "sim_centroid_outliers" -> (Similarity.centroidOutliers(_, _)),
-    "analytics_price_realization" -> (Analytics.priceRealization(_, _)),
-    "analytics_discount_tiers" -> (Analytics.discountTiers(_, _)),
-    "analytics_supplier_price_spread" ->
-      (Analytics.supplierPriceSpread(_, _)),
-    "analytics_trade_balance" -> (Analytics.tradeBalance(_, _)),
-    "dq_chi2_independence" -> (Quality.chi2Independence(_, _)),
-    "analytics_product_vintage" -> (Analytics.productVintage(_, _)),
-    "dedup_weighted_jaccard" -> (Dedup.weightedJaccard(_, _)),
-    "dq_partition_checksums" -> (Quality.partitionChecksums(_, _)),
-    "analytics_wallet_share" -> (Analytics.walletShare(_, _)),
-    "analytics_basket_shape" -> (Analytics.basketShape(_, _)),
-    "analytics_brand_affinity" -> (Analytics.brandAffinity(_, _)),
-    "dq_id_integrity" -> (Quality.idIntegrity(_, _)),
-    "sim_ivf_balance" -> (Similarity.ivfBalance(_, _)),
-    "analytics_aov_bridge" -> (Analytics.aovBridge(_, _)),
-    "pipeline_split_balance" -> (TextAnalysis.splitBalance(_, _)),
-    "dq_holiday_detect" -> (Quality.holidayDetect(_, _)),
-    "dim_asof_diff" -> ((s, dir) =>
-      graft.operators.Temporal.asofDiff(s, dir)),
-    "graph_rich_club" -> ((s, dir) =>
-      graft.operators.Graph.richClub(s, dir)),
-    "analytics_category_migration" ->
-      (Analytics.categoryMigration(_, _)),
-    "analytics_price_points" -> (Analytics.pricePoints(_, _)),
-    "dq_rare_levels" -> (Quality.rareLevels(_, _)),
-    "analytics_assortment_churn" -> (Analytics.assortmentChurn(_, _)),
-    "pipeline_mix_sweep" -> (TextAnalysis.mixSweep(_, _)),
-    "mm_dedup_ratio" -> (Multimodal.dedupRatio(_, _)),
-    "dq_expectations" -> (Quality.expectations(_, _)),
-    "graph_knn_curve" -> ((s, dir) =>
-      graft.operators.Graph.knnCurve(s, dir)),
-    "analytics_replenishment" -> (Analytics.replenishment(_, _)),
-    "dq_dim_coverage" -> (Quality.dimCoverage(_, _)),
-    "graph_label_prop" -> ((s, dir) =>
-      graft.operators.Graph.labelPropagation(s, dir)),
-    "sim_dim_variance" -> (Similarity.dimVariance(_, _)),
-    "sim_embedding_drift" -> (Similarity.embeddingDrift(_, _)),
-    "sim_silhouette" -> (Similarity.silhouette(_, _)),
-    "analytics_cov_matrix" -> (Analytics.covMatrix(_, _)),
-    "analytics_partial_corr" -> (Analytics.partialCorr(_, _)),
-    "analytics_ohlc_bars" -> (Analytics.ohlcBars(_, _)),
-    "text_heaps_curve" -> (TextAnalysis.heapsCurve(_, _)),
-    // r7: exact Rényi-2 quality screen (no float logs), entry/exit/
-    // bounce session report, and Markov removal-effect attribution
-    "text_collision_entropy" -> (TextAnalysis.collisionEntropy(_, _)),
-    "analytics_entry_exit" -> (Analytics.entryExitReport(_, _)),
-    "analytics_attribution_markov" ->
-      (Analytics.markovAttribution(_, _)),
-    "sim_matryoshka_recall" -> (Similarity.matryoshkaRecall(_, _)),
-    "mm_byte_entropy" ->
-      ((s, dir) => graft.operators.Multimodal.byteEntropy(s, dir)),
-    "dq_props_profile" -> (Quality.propsProfile(_, _)),
-    "dq_kruskal_wallis" -> (Quality.kruskalWallis(_, _)),
-    "text_script_mix" -> (TextAnalysis.scriptMix(_, _)),
-    "analytics_kendall_tau" -> (Analytics.kendallTau(_, _)),
-    "dq_ks_drift" -> (Quality.ksDrift(_, _)),
-    "analytics_pettitt" -> (Analytics.pettitt(_, _)),
-    "analytics_wavelet_energy" -> (Analytics.waveletEnergy(_, _)),
-    "analytics_friedman" -> (Analytics.friedman(_, _)),
-    "pipeline_krippendorff" ->
-      (TextAnalysis.krippendorffAlpha(_, _)),
-    "analytics_bootstrap_ci" -> (Analytics.bootstrapCi(_, _)),
-    "dq_event_copresence" -> (Quality.eventCopresence(_, _)),
-    "sim_ivf_probe_sweep" -> (Similarity.ivfProbeSweep(_, _)),
-    "pipeline_padding_waste" -> (TextAnalysis.paddingWaste(_, _)),
-    "analytics_median_polish" -> (Analytics.medianPolish(_, _)),
-    "analytics_cramers_v" -> (Analytics.cramersV(_, _)),
-    "graph_diameter" ->
-      ((s, dir) => graft.operators.Graph.diameterTwoSweep(s, dir)),
-    "text_mojibake_screen" -> (TextAnalysis.mojibakeScreen(_, _)),
-    // r8: oracle-graded after all — the greedy trajectory replays as
-    // a recursive CTE over (sel, pen) list state, exactly like
-    // pipeline_pack_greedy (the RoundSixOpsSpec driver replay stays)
-    "sim_mmr_rerank" -> (Similarity.mmrRerank(_, _)),
-    "temporal_concurrency" -> (Temporal.concurrency(_, _)),
-    "dedup_minhash_calibration" -> (Dedup.minhashCalibration(_, _)),
-    "dedup_simhash_calibration" -> (Dedup.simhashCalibration(_, _)),
-    "analytics_markov_stationary" -> (Analytics.markovStationary(_, _)),
-    "analytics_shape_profile" -> (Analytics.shapeProfile(_, _)),
-    "graph_hits" -> ((s, dir) => graft.operators.Graph.hits(s, dir)),
-    "analytics_demand_classes" -> (Analytics.demandClasses(_, _)),
-    "analytics_abc_migration" -> (Analytics.abcMigration(_, _)),
-    "analytics_iqr_outliers" -> (Analytics.iqrOutliers(_, _)),
-    "analytics_xcorr_leadlag" -> (Analytics.leadLagXcorr(_, _)),
-    "analytics_arc_elasticity" -> (Analytics.arcElasticity(_, _)),
-    "analytics_seasonal_index" -> (Analytics.seasonalIndex(_, _)),
-    "analytics_spearman" -> (Analytics.spearmanCorr(_, _)),
-    "text_zipf_profile" -> (TextAnalysis.zipfProfile(_, _)),
-    "graph_harmonic" -> ((s, dir) =>
-      graft.operators.Graph.harmonicCentrality(s, dir)),
-    "corpus_version_diff" -> (TextAnalysis.versionDiff(_, _)),
-    "analytics_top_paths" -> (Analytics.topPaths(_, _)),
-    "analytics_array_parity" -> (Analytics.arrayParity(_, _)),
-    "analytics_decayed_score" -> (Analytics.decayedScore(_, _)),
-    "text_keyphrases" -> (TextAnalysis.keyphrasesRake(_, _)),
-    "dq_ks_test" -> (Quality.ksTest(_, _)),
-    "dim_scd3_build" -> (Temporal.userValueScd3(_, _)),
-    "analytics_skyline" -> (Analytics.skyline(_, _)),
-    // rows-only: Borůvka's per-round component contraction has no
-    // SQL-oracle form; the unique-forest contract is spec-graded
-    // against a driver Kruskal under the same edge order
-    "graph_mst" -> ((s, dir) =>
-      graft.operators.Graph.minimumSpanningForest(s, dir)),
-    // oracle-graded half of the MST contract: spanning-forest
-    // certificate (n_edges = n_nodes − n_components, labels from the
-    // FOREST's own closure) — minimality stays spec-graded
-    "graph_mst_cert" -> ((s, dir) =>
-      graft.operators.Graph.mstCertificate(s, dir)),
-    "analytics_abc_xyz" -> (Analytics.abcXyzMatrix(_, _)),
-    "analytics_target_encode" -> (Analytics.targetEncodeLoo(_, _)),
-    "pipeline_group_kfold" -> (TextAnalysis.groupKFold(_, _)),
-    "sim_mips_topk" -> (Similarity.mipsTopK(_, _)),
-    "analytics_weighted_median" -> (Analytics.weightedMedian(_, _)),
-    "analytics_revenue_bridge" -> (Analytics.revenueBridge(_, _)),
-    "analytics_holt_winters" -> (Analytics.holtWinters(_, _)),
-    "analytics_growth_accounting" -> (Analytics.growthAccounting(_, _)),
-    // rows-only: no SQL oracle exists for a codec; contract spec'd
-    "text_compress_ratio" -> (TextAnalysis.compressRatio(_, _)),
-    "pipeline_annotation_kappa" -> (TextAnalysis.annotationKappa(_, _)),
-    "analytics_apportion" -> (Analytics.apportionBudget(_, _)),
-    "dq_mannwhitney" -> (Quality.mannWhitney(_, _)),
-    "dq_wasserstein" -> (Quality.wasserstein(_, _)),
-    "analytics_downsample_lttb" -> (Analytics.downsampleLttb(_, _)),
-    "pipeline_score_calibration" ->
-      (TextAnalysis.scoreCalibration(_, _)),
-    "pipeline_hard_negatives" -> (Similarity.hardNegatives(_, _)),
-    "text_vocab_drift" -> (TextAnalysis.vocabDrift(_, _)),
-    "dedup_chain_audit" -> (Dedup.chainAudit(_, _)),
-    "pipeline_shard_schedule" -> (TextAnalysis.shardSchedule(_, _)),
-    "analytics_forecast_interval" -> (Analytics.forecastInterval(_, _)),
-    "analytics_ab_srm" -> (Analytics.abSrm(_, _)),
-    "dim_calendar_build" -> (Temporal.calendarDim(_, _)),
-    "sim_ann_sq8" -> (Similarity.annSq8(_, _)),
-    "dq_runs_test" -> (Quality.runsTest(_, _)),
-    "analytics_theil_sen" -> (Analytics.theilSen(_, _)),
-    "analytics_season_strength" -> (Analytics.seasonStrength(_, _)),
-    "text_burstiness" -> (TextAnalysis.tokenBurstiness(_, _)),
-    "analytics_price_index" -> (Analytics.priceIndex(_, _)),
-    "pipeline_uncertainty_sample" ->
-      (TextAnalysis.uncertaintySample(_, _)),
-    "pipeline_shuffle_quality" -> (TextAnalysis.shuffleQuality(_, _)),
-    "analytics_markov_2step" -> (Analytics.markovTwoStep(_, _)),
-    "dq_spc_residual" -> (Quality.spcResidual(_, _)),
-    "dedup_modality_agreement" -> (Dedup.modalityAgreement(_, _)),
-    "graph_shortest_path" -> (graft.operators.Graph.shortestPath(_, _)),
-    "analytics_ab_test" -> (Analytics.abTest(_, _)),
-    "analytics_attribution_linear" -> (Analytics.linearAttribution(_, _)),
-    "analytics_exp_smooth" -> (Analytics.expSmoothGmv(_, _)),
-    "pipeline_gdpr_erase" -> (Quality.gdprErasePlan(_, _)),
-    "analytics_hierarchy_rollup" -> (Analytics.hierarchyRollup(_, _)),
-    "analytics_motif_search" -> (Analytics.motifSearch(_, _)),
-    "analytics_trend_ols" -> (Analytics.trendOls(_, _)),
-    "analytics_changepoint" -> (Analytics.changepointCusum(_, _)),
-    "analytics_seasonality_dow" -> (Analytics.seasonalityDow(_, _)),
-    "analytics_price_cdf" -> (Analytics.priceCdf(_, _)),
-    "analytics_stickiness" -> (Analytics.stickiness(_, _)),
-    "dq_profile" -> (Quality.profile(_, _)),
-    "text_collocations" -> (TextAnalysis.collocations(_, _)),
-    "graph_degree_dist" -> (graft.operators.Graph.degreeDist(_, _)),
-    "analytics_ship_latency" -> (Analytics.shipLatency(_, _)),
-    "graph_assortativity" -> (graft.operators.Graph.assortativity(_, _)),
-    "corpus_near_dup_rate" -> (Dedup.nearDupRate(_, _)),
-    "analytics_gini" -> (Analytics.giniSpend(_, _)),
-    "analytics_hhi" -> (Analytics.hhiSupplier(_, _)),
-    "text_hapax_stats" -> (TextAnalysis.hapaxStats(_, _)),
-    "dedup_priority_keep" -> (Dedup.dedupPriority(_, _)),
-    "dq_calendar_gaps" -> (Analytics.calendarGaps(_, _)),
-    "dq_gmv_jumps" -> (Analytics.gmvJumps(_, _)),
-    "analytics_lorenz" -> (Analytics.lorenzSpend(_, _)),
-    "analytics_churn_hazard" -> (Analytics.churnHazard(_, _)),
-    "pipeline_bpe_step" -> (TextAnalysis.bpeStep(_, _)),
-    "analytics_cohort_ltv" -> (Analytics.cohortLtv(_, _)),
-    "mm_chunk_dedup" -> (Multimodal.chunkDedup(_, _)),
-    "analytics_holt_trend" -> (Analytics.holtTrendGmv(_, _)),
-    "analytics_diff_in_diff" -> (Analytics.diffInDiff(_, _)),
-    "analytics_holt_backtest" -> (Analytics.holtBacktest(_, _)),
-    "text_langid_confusion" -> (TextAnalysis.langIdConfusion(_, _)),
-    "pipeline_interleave" -> (TextAnalysis.interleaveBySource(_, _)),
-    "analytics_decompose" -> (Analytics.decomposeGmv(_, _)),
-    "corpus_source_overlap" -> (Dedup.sourceOverlap(_, _)),
-    "analytics_abandon_rate" -> (Analytics.abandonRate(_, _)),
-    "analytics_abc_class" -> (Analytics.abcParts(_, _)),
-    "analytics_repeat_rate" -> (Analytics.repeatRate(_, _)),
-    "analytics_open_orders" -> (Analytics.openOrders(_, _)),
-    "analytics_rolling_corr" -> (Analytics.rollingCorr(_, _)),
-    "analytics_quantity_quantiles" -> (Analytics.quantityQuantiles(_, _)),
-    "analytics_nation_trend" -> (Analytics.nationTrend(_, _)),
-    // r7: oracle-graded after all — the peel loop unrolls to a fixed
-    // budget in SQL (idempotent past the fixpoint), see kCoreOracleSql
-    "graph_kcore" -> (graft.operators.Graph.kCore(_, _)),
-    "sim_recall_eval" -> (Similarity.annRecallEval(_, _)),
-    // r8: Mann–Kendall significance beside theil_sen's slope;
-    // Kaplan–Meier repeat-purchase survival beside churn_hazard
-    "analytics_mann_kendall" -> (Analytics.mannKendall(_, _)),
-    "analytics_kaplan_meier" -> (Analytics.kaplanMeier(_, _)),
-    "analytics_shapley" -> (Analytics.shapleyAttribution(_, _)),
-    "analytics_attribution_decay" ->
-      (Analytics.attributionTimeDecay(_, _)),
-    "analytics_perfect_order" -> (Analytics.perfectOrderRate(_, _)),
-    "pipeline_ngram_contamination" ->
-      (TextAnalysis.ngramContamination(_, _)),
-    "analytics_backlog_age" -> (Analytics.backlogAge(_, _)),
-    "dq_chi2_dow" -> (Quality.chi2Dow(_, _)),
-    "analytics_rfm_migration" -> (Analytics.rfmMigration(_, _)),
-    "dim_scd2_serve" -> (Temporal.scd2Serve(_, _)),
-    "graph_clustering_coeff" ->
-      (graft.operators.Graph.clusteringCoeff(_, _)),
-    "sim_cos_histogram" -> (Similarity.cosHistogram(_, _)),
-    "pipeline_filter_funnel" -> (TextAnalysis.filterFunnel(_, _)),
-    "text_novelty" -> (TextAnalysis.noveltyScore(_, _)),
-    "text_readability" -> (TextAnalysis.readability(_, _)),
-    "analytics_percent_rank" -> (Analytics.percentRankSpend(_, _)),
-    "dq_cross_field" -> (Quality.crossFieldAudit(_, _)),
-    "mm_scene_cut" -> (Multimodal.sceneCuts(_, _)),
-    "text_fertility" -> (TextAnalysis.fertility(_, _)),
-    "text_code_signals" -> (TextAnalysis.codeSignals(_, _)),
-    "analytics_mix_trend" -> (Analytics.mixTrend(_, _)),
-    "analytics_top_movers" -> (Analytics.topMovers(_, _)),
-    "analytics_retention_flags" -> (Analytics.retentionFlags(_, _)),
-    "analytics_argmax_daily" -> (Analytics.argMaxDaily(_, _)),
-    "pipeline_dataset_card" -> (TextAnalysis.datasetCard(_, _)),
-    "temporal_asof_nearest" -> (Temporal.nearestViewToPurchase(_, _)),
-    "temporal_overlap_join" -> (Temporal.promoOverlap(_, _)),
-    "pipeline_contrastive_pairs" -> (Dedup.contrastivePairs(_, _)),
-    "sim_knn_classify" -> (Similarity.knnClassify(_, _)),
-    "analytics_streaks" -> (Analytics.activityStreaks(_, _)),
-    "graph_supplier_overlap" ->
-      (graft.operators.Graph.supplierOverlap(_, _)),
-    "analytics_attribution_first" ->
-      (Analytics.firstTouchAttribution(_, _)),
-    "pipeline_chunk_windows" -> (TextAnalysis.chunkWindows(_, _)),
-    "text_template_groups" -> (TextAnalysis.templateGroups(_, _)),
-    "graph_related_items" ->
-      (graft.operators.Graph.relatedItems(_, _)),
-    "text_vocab_coverage" -> (TextAnalysis.vocabCoverage(_, _)),
-    "analytics_promo_lift" -> (Analytics.promoLift(_, _)),
-    "dedup_threshold_sweep" -> (Dedup.thresholdSweep(_, _)),
-    "dedup_cluster_sizes" -> (Dedup.clusterSizes(_, _)),
-    "analytics_dow_hour_heatmap" -> (Analytics.dowHourHeatmap(_, _)),
-    "pipeline_e2e_stats" -> (TextAnalysis.e2eStats(_, _)),
-    "text_source_purity" -> (TextAnalysis.sourcePurity(_, _)),
-    "temporal_asof_forward" -> (Temporal.nextViewAfterPurchase(_, _)),
-    "temporal_asof_tolerance" ->
-      (Temporal.staleBoundedViewBeforePurchase(_, _)),
-    "analytics_sla_attainment" -> (Analytics.slaAttainment(_, _)),
-    "sim_cluster_purity" -> (Similarity.clusterPurity(_, _)),
-    "text_ttr" -> (TextAnalysis.typeTokenRatio(_, _)),
-    "analytics_kpi_summary" -> (Analytics.kpiSummary(_, _)),
-  )
+  /** One registry row: the query's name, its Spark builder, and the
+    * DuckDB SQL that grades its output — `None` for the rows-only
+    * operators, whose contracts are spec-graded.
+    */
+  final case class Query(
+      name: String,
+      build: (SparkSession, String) => DataFrame,
+      oracle: Option[String])
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    table.map(r => r.name -> r.build).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    table.flatMap(r => r.oracle.map(r.name -> _)).toMap
+
+  /** The named queries in the order given, or every query sorted by
+    * name when none are. Unknown names fail here, before a caller has
+    * started a session.
+    */
+  def select(names: Seq[String]): Seq[Query] =
+    if (names.isEmpty) table.sortBy(_.name)
+    else {
+      val byName = table.map(r => r.name -> r).toMap
+      val unknown = names.filterNot(byName.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      names.map(byName)
+    }
+
+  /** Frees what one query pinned before the next one runs, so every
+    * query in a suite starts from the same storage pool whatever its
+    * position.
+    *  - `clearCache`: CacheManager entries match by canonicalized
+    *    plan and are never freed otherwise; leaked intermediates hold
+    *    storage memory the unified manager will not evict, and late
+    *    shuffle-heavy queries spill (dedup_cross_source ran 1.7–2.4×
+    *    slower in-suite than alone).
+    *  - unpersist every persistent RDD: `localCheckpoint` blocks of
+    *    the iterative operators (MST, closure, as-of) live in the
+    *    BlockManager until their RDD is collected, which clearCache
+    *    does not touch.
+    *  - `System.gc()`: broadcast blocks and shuffle files are freed
+    *    by the ContextCleaner, which rides reference processing; one
+    *    GC per query (~50 ms) makes that cleanup deterministic instead
+    *    of heap-pressure-dependent.
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    System.gc()
+  }
+
+  /** A table with a repeated name is rejected when it is built. */
+  private[graft] def unique(t: Seq[Query]): Seq[Query] = {
+    val dups = t.groupBy(_.name).collect { case (n, rs) if rs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    t
+  }
+
+  private def q(name: String, build: (SparkSession, String) => DataFrame,
+      oracle: String): Query = Query(name, build, Some(oracle))
 
   private val money = "CAST(%s AS DECIMAL(12,2))"
   private def m(c: String) = money.format(c)
@@ -593,8 +120,12 @@ object SparkEntry {
        | FROM idx i JOIN hw h ON i.rn = h.rn + 1)""".stripMargin
   }
 
-  lazy val oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
+  /** The registry: each query declared once, its builder on the row's
+    * first line and its oracle SQL below it.
+    */
+  lazy val table: Seq[Query] = unique(Seq(
+    // §2.1 warehouse
+    q("q1_pricing_summary", Dws.pricingSummary(_, _),
       s"""SELECT l_returnflag, l_linestatus,
          | CAST(SUM(${m("l_quantity")}) AS DOUBLE) AS sum_qty,
          | CAST(SUM(${m("l_extendedprice")}) AS DOUBLE) AS sum_base_price,
@@ -603,91 +134,108 @@ object SparkEntry {
          | CAST(SUM(${m("l_quantity")}) AS DOUBLE) / COUNT(*) AS avg_qty,
          | COUNT(*) AS count_order
          |FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-12-01'
-         |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "dws_traffic_pageview" ->
+         |GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    q("dws_traffic_pageview", Dws.trafficPageView(_, _),
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS wstart,
         | event_type, COUNT(*) AS pv_ct, COUNT(DISTINCT user_id) AS uv_ct,
         | CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS value_sum
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "dws_traffic_keyword" ->
+        |FROM events GROUP BY 1, 2""".stripMargin),
+    q("dws_traffic_keyword", Dws.trafficKeyword(_, _),
       """SELECT kw AS keyword, COUNT(*) AS kw_ct FROM (
         | SELECT unnest(string_split(lower(text), ' ')) AS kw FROM documents) t
-        |WHERE kw <> '' GROUP BY kw""".stripMargin,
-    "dws_traffic_home_detail" ->
+        |WHERE kw <> '' GROUP BY kw""".stripMargin),
+    q("dws_traffic_home_detail", Dws.trafficHomeDetail(_, _),
       """SELECT CAST(ts AS DATE) AS cur_date, event_type,
         | COUNT(DISTINCT user_id) AS uv_ct, COUNT(*) AS pv_ct
-        |FROM events WHERE event_type IN ('view', 'click') GROUP BY 1, 2""".stripMargin,
-    "dws_user_login" ->
+        |FROM events WHERE event_type IN ('view', 'click') GROUP BY 1, 2""".stripMargin),
+    q("dws_user_login", Dws.userLogin(_, _),
       """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
         |g AS (SELECT user_id, d,
         |      lag(d) OVER (PARTITION BY user_id ORDER BY d) AS prev_d FROM ud)
         |SELECT d, COUNT(*) AS uu_ct,
         | COUNT(CASE WHEN prev_d IS NOT NULL
         |   AND datediff('day', prev_d, d) > 7 THEN 1 END) AS back_ct
-        |FROM g GROUP BY d""".stripMargin,
-    "dws_user_register" ->
+        |FROM g GROUP BY d""".stripMargin),
+    q("dws_user_register", Dws.userRegister(_, _),
       """SELECT CAST(ts AS DATE) AS cur_date, COUNT(*) AS register_ct,
         | COUNT(DISTINCT user_id) AS register_uu
-        |FROM events WHERE event_type = 'signup' GROUP BY 1""".stripMargin,
-    "dws_trade_cart_uu" ->
+        |FROM events WHERE event_type = 'signup' GROUP BY 1""".stripMargin),
+    q("dws_trade_cart_uu", Dws.tradeCartUu(_, _),
       """SELECT CAST(ts AS DATE) AS cur_date,
         | COUNT(DISTINCT user_id) AS cart_uu
-        |FROM events WHERE event_type = 'click' GROUP BY 1""".stripMargin,
-    "dwd_trade_order_detail" ->
+        |FROM events WHERE event_type = 'click' GROUP BY 1""".stripMargin),
+    q("dwd_trade_order_detail", Dwd.tradeOrderDetail(_, _),
       s"""SELECT l_orderkey AS order_id, CAST(l_linenumber AS INT) AS line_id,
          | o_custkey AS user_id, CAST(o_orderdate AS DATE) AS order_date,
          | o_orderstatus AS order_status, l_partkey AS sku_id,
          | l_quantity AS sku_num, l_extendedprice AS split_original_amount,
          | CAST($rev AS DOUBLE) AS split_total_amount
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey""".stripMargin,
-    "dwd_trade_order_cancel" ->
-      s"""SELECT l_orderkey AS order_id, CAST(l_linenumber AS INT) AS line_id,
-         | o_custkey AS user_id, CAST(o_orderdate AS DATE) AS order_date,
-         | o_orderstatus AS order_status, l_partkey AS sku_id,
-         | l_quantity AS sku_num, l_extendedprice AS split_original_amount,
-         | CAST($rev AS DOUBLE) AS split_total_amount
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |WHERE o_orderstatus = 'F'""".stripMargin,
-    "dwd_trade_pay_suc" ->
+         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey""".stripMargin),
+    q("dwd_trade_order_cancel", Dwd.tradeOrderCancel(_, _),
       s"""SELECT l_orderkey AS order_id, CAST(l_linenumber AS INT) AS line_id,
          | o_custkey AS user_id, CAST(o_orderdate AS DATE) AS order_date,
          | o_orderstatus AS order_status, l_partkey AS sku_id,
          | l_quantity AS sku_num, l_extendedprice AS split_original_amount,
          | CAST($rev AS DOUBLE) AS split_total_amount
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |WHERE o_orderstatus = 'P'""".stripMargin,
-    "dwd_trade_refund" ->
+         |WHERE o_orderstatus = 'F'""".stripMargin),
+    q("dwd_trade_pay_suc", Dwd.tradePaySuc(_, _),
+      s"""SELECT l_orderkey AS order_id, CAST(l_linenumber AS INT) AS line_id,
+         | o_custkey AS user_id, CAST(o_orderdate AS DATE) AS order_date,
+         | o_orderstatus AS order_status, l_partkey AS sku_id,
+         | l_quantity AS sku_num, l_extendedprice AS split_original_amount,
+         | CAST($rev AS DOUBLE) AS split_total_amount
+         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         |WHERE o_orderstatus = 'P'""".stripMargin),
+    q("dwd_trade_refund", Dwd.tradeRefund(_, _),
       s"""SELECT l_orderkey AS order_id, CAST(l_linenumber AS INT) AS line_id,
          | o_custkey AS user_id, l_partkey AS sku_id,
          | l_quantity AS refund_num, CAST($rev AS DOUBLE) AS refund_amount
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |WHERE l_returnflag = 'R'""".stripMargin,
-    "dws_trade_sku_order" ->
+         |WHERE l_returnflag = 'R'""".stripMargin),
+    q("dwd_trade_refund_pay_suc", Dwd.tradeRefundPaySuc(_, _),
+      s"""SELECT l_orderkey AS order_id,
+         | CAST(l_linenumber AS INT) AS line_id,
+         | o_custkey AS user_id, l_partkey AS sku_id,
+         | n_name AS nation_name,
+         | CAST(${m("l_extendedprice")} * (1 - ${m("l_discount")})
+         |   * (1 + ${m("l_tax")}) AS DOUBLE) AS refund_pay_amount
+         |FROM lineitem
+         |JOIN orders ON l_orderkey = o_orderkey AND o_orderstatus = 'F'
+         |JOIN customer ON o_custkey = c_custkey
+         |JOIN nation ON c_nationkey = n_nationkey
+         |WHERE l_returnflag = 'R' AND l_linestatus = 'F'""".stripMargin),
+    q("dwd_trade_cart_add", Dwd.tradeCartAdd(_, _),
+      """SELECT event_id, user_id,
+        | CAST(json_extract_string(props, '$.k') AS BIGINT) AS sku_id,
+        | CAST(ts AS DATE) AS cur_date, value AS add_num
+        |FROM events WHERE event_type = 'click'""".stripMargin),
+    q("dws_trade_sku_order", Dws.tradeSkuOrder(_, _),
       s"""SELECT p_brand AS trademark, p_type AS category,
          | l_partkey AS sku_id, p_name AS sku_name, COUNT(*) AS order_ct,
          | CAST(SUM(${m("l_quantity")}) AS DOUBLE) AS sku_num,
          | CAST(SUM($rev) AS DOUBLE) AS order_amount
          |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |GROUP BY 1, 2, 3, 4""".stripMargin,
-    "dws_trade_province_order" ->
+         |GROUP BY 1, 2, 3, 4""".stripMargin),
+    q("dws_trade_province_order", Dws.tradeProvinceOrder(_, _),
       s"""SELECT n_name AS province_name, r_name AS region_name,
          | COUNT(DISTINCT o_orderkey) AS order_ct,
          | CAST(SUM(${m("o_totalprice")}) AS DOUBLE) AS order_amount
          |FROM orders JOIN customer ON o_custkey = c_custkey
          | JOIN nation ON c_nationkey = n_nationkey
          | JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY 1, 2""".stripMargin,
-    "dwd_comment_dic_join" ->
+         |GROUP BY 1, 2""".stripMargin),
+    q("dwd_comment_dic_join", Dwd.commentDicJoin(_, _),
       """SELECT s_suppkey AS supplier_id, s_name AS supplier_name,
         | n_name AS nation_name, r_name AS region_name
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        | JOIN region ON n_regionkey = r_regionkey""".stripMargin,
-    "pub_gmv_daily" ->
+        | JOIN region ON n_regionkey = r_regionkey""".stripMargin),
+    q("pub_gmv_daily", Publisher.gmvDaily(_, _),
       s"""SELECT CAST(o_orderdate AS DATE) AS cur_date,
          | CAST(SUM(${m("o_totalprice")}) AS DOUBLE) AS gmv,
          | COUNT(*) AS order_ct
-         |FROM orders GROUP BY 1""".stripMargin,
-    "pub_province_topn" ->
+         |FROM orders GROUP BY 1""".stripMargin),
+    q("pub_province_topn", Publisher.provinceTopN(_, _),
       s"""WITH pa AS (
          | SELECT n_name AS province_name,
          |  CAST(SUM(${m("o_totalprice")}) AS DOUBLE) AS order_amount
@@ -696,555 +244,33 @@ object SparkEntry {
          |SELECT province_name, order_amount, rk FROM (
          | SELECT province_name, order_amount, row_number() OVER
          |  (ORDER BY order_amount DESC, province_name) AS rk FROM pa) t
-         |WHERE rk <= 10""".stripMargin,
-    "pub_channel_uvct" ->
+         |WHERE rk <= 10""".stripMargin),
+    q("pub_channel_uvct", Publisher.channelUvCt(_, _),
       """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS ch,
         | COUNT(DISTINCT user_id) AS uv_ct, COUNT(*) AS pv_ct
-        |FROM events GROUP BY 1""".stripMargin,
-    "q5_star_join" ->
+        |FROM events GROUP BY 1""".stripMargin),
+    q("q5_star_join", Publisher.starJoinRevenue(_, _),
       s"""SELECT n_name AS nation_name, CAST(SUM($rev) AS DOUBLE) AS revenue
          |FROM customer JOIN orders ON c_custkey = o_custkey
          | JOIN lineitem ON o_orderkey = l_orderkey
          | JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
          | JOIN nation ON s_nationkey = n_nationkey
          | JOIN region ON n_regionkey = r_regionkey
-         |WHERE r_name = 'ASIA' GROUP BY 1""".stripMargin,
-    // weighted deterministic sampling: integer priority
-    // hash DIV weight, global bottom-k — reproducible on any engine
-    "corpus_sample_weighted" ->
-      """WITH w AS (SELECT doc_id, lang,
-        |   CAST(1 + least(199, length(text) // 50) AS BIGINT) AS weight,
-        |   CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-        |     ::UBIGINT AS BIGINT) AS h
-        | FROM documents)
-        |SELECT doc_id, lang, weight FROM (
-        | SELECT doc_id, lang, weight,
-        |  row_number() OVER (ORDER BY h // weight, doc_id) AS rk
-        | FROM w) t
-        |WHERE rk <= 200""".stripMargin,
-    // deterministic global top-k (ties by key); plan-linted to
-    // TakeOrderedAndProject, never a full sort
-    "analytics_global_topk" ->
-      """SELECT o_orderkey,
-        | CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE) AS total
-        |FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    // robust MAD outliers: median and MAD via exact quantiles
-    // (6dp-rounded), every flag operand an identical double on both
-    // engines
-    "analytics_outliers_mad" ->
-      """WITH m AS (SELECT event_type AS et,
-        |    round(quantile_cont(value, 0.5), 6) AS med
-        |  FROM events GROUP BY 1),
-        |dev AS (SELECT e.event_id, e.event_type, e.value, m.med,
-        |    round(abs(e.value - m.med), 6) AS dv
-        |  FROM events e JOIN m ON e.event_type = m.et),
-        |mad AS (SELECT event_type AS et2,
-        |    round(quantile_cont(dv, 0.5), 6) AS mad
-        |  FROM dev GROUP BY 1)
-        |SELECT event_id, dev.event_type, round(value, 6) AS value_r,
-        |  med, mad
-        |FROM dev JOIN mad ON dev.event_type = mad.et2
-        |WHERE dv > mad * 3 * 1.4826""".stripMargin,
-    // exact rolling 7-day distinct users: dedup (user, day) first,
-    // fan out <=7 window days per pair, count distinct per day
-    "analytics_rolling_wau" ->
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-        |            FROM events),
-        |days AS (SELECT DISTINCT day FROM ud),
-        |x AS (SELECT user_id, day + CAST(o AS INT) AS day
-        |      FROM ud CROSS JOIN range(0, 7) r(o))
-        |SELECT x.day, COUNT(DISTINCT x.user_id) AS wau_ct
-        |FROM x SEMI JOIN days ON x.day = days.day
-        |GROUP BY 1""".stripMargin,
-    // same rolling-distinct operator at 4x the fanout (window=30):
-    // the bound claim is users x active-days x 30, still tiny next
-    // to the event count
-    "analytics_rolling_mau" ->
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-        |            FROM events),
-        |days AS (SELECT DISTINCT day FROM ud),
-        |x AS (SELECT user_id, day + CAST(o AS INT) AS day
-        |      FROM ud CROSS JOIN range(0, 30) r(o))
-        |SELECT x.day, COUNT(DISTINCT x.user_id) AS mau_ct
-        |FROM x SEMI JOIN days ON x.day = days.day
-        |GROUP BY 1""".stripMargin,
-    // exact integer cents; decile id is pure integer arithmetic on
-    // (rank-1)*10/n, share is integer ppm — engine-exact end to end
-    "analytics_pareto" ->
-      s"""WITH p AS (
-         | SELECT o_custkey,
-         |  CAST(SUM(${m("o_totalprice")}) * 100 AS BIGINT) AS cents
-         | FROM orders GROUP BY 1),
-         |r AS (
-         | SELECT cents,
-         |  row_number() OVER (ORDER BY cents DESC, o_custkey) AS rk,
-         |  COUNT(*) OVER () AS n
-         | FROM p)
-         |SELECT CAST((rk - 1) * 10 // n AS BIGINT) AS decile,
-         | COUNT(*) AS n_customers,
-         | CAST(SUM(cents) AS BIGINT) AS cents,
-         | CAST(SUM(cents) * 1000000 //
-         |   (SELECT SUM(cents) FROM p) AS BIGINT) AS share_ppm
-         |FROM r GROUP BY 1""".stripMargin,
-    // four distinct measures in one pass; the filtered distinct uses
-    // CASE-null so non-purchase rows vanish from the set
-    "analytics_multi_distinct" ->
-      """SELECT CAST(ts AS DATE) AS day, COUNT(*) AS pv,
-        | COUNT(DISTINCT user_id) AS uv,
-        | COUNT(DISTINCT event_type) AS n_types,
-        | COUNT(DISTINCT CASE WHEN event_type = 'purchase'
-        |   THEN user_id END) AS purchase_uv
-        |FROM events GROUP BY 1""".stripMargin,
-    // integer day gaps via lag; bucket edges are CASE comparisons on
-    // the integer (never floor(log2(double)) — libm-ulp-unsafe)
-    "analytics_interpurchase" ->
-      """WITH o AS (SELECT o_custkey, o_orderkey,
-        |    CAST(o_orderdate AS DATE) AS od FROM orders),
-        |g AS (SELECT date_diff('day',
-        |    lag(od) OVER (PARTITION BY o_custkey ORDER BY od, o_orderkey),
-        |    od) AS gap_days FROM o)
-        |SELECT CAST(CASE WHEN gap_days <= 0 THEN 0
-        |   WHEN gap_days <= 2 THEN 1 WHEN gap_days <= 4 THEN 2
-        |   WHEN gap_days <= 8 THEN 3 WHEN gap_days <= 16 THEN 4
-        |   WHEN gap_days <= 32 THEN 5 ELSE 6 END AS INT) AS bucket,
-        | COUNT(*) AS ct,
-        | CAST(MIN(gap_days) AS BIGINT) AS min_gap,
-        | CAST(MAX(gap_days) AS BIGINT) AS max_gap
-        |FROM g WHERE gap_days IS NOT NULL GROUP BY 1""".stripMargin,
-    // an order is new iff its date == the customer's first order
-    // date (date grain); exact cents, integer-ppm split
-    "analytics_new_returning" ->
-      s"""WITH t AS (
-         | SELECT o_custkey, CAST(o_orderdate AS DATE) AS day,
-         |  CAST(${m("o_totalprice")} * 100 AS BIGINT) AS cents
-         | FROM orders),
-         |f AS (SELECT *, MIN(day) OVER (PARTITION BY o_custkey)
-         |   AS first_day FROM t)
-         |SELECT day,
-         | CAST(SUM(CASE WHEN day = first_day THEN cents ELSE 0 END)
-         |   AS BIGINT) AS new_cents,
-         | CAST(SUM(CASE WHEN day <> first_day THEN cents ELSE 0 END)
-         |   AS BIGINT) AS ret_cents,
-         | CAST(SUM(CASE WHEN day = first_day THEN cents ELSE 0 END)
-         |    * 1000000 //
-         |   (SUM(CASE WHEN day = first_day THEN cents ELSE 0 END)
-         |    + SUM(CASE WHEN day <> first_day THEN cents ELSE 0 END))
-         |   AS BIGINT) AS new_ppm
-         |FROM f GROUP BY 1""".stripMargin,
-    // TPC-DS q88 shape: eight band measures in ONE scan; band edges
-    // compare doubles to 2dp literals both engines parse identically
-    "analytics_band_scan" ->
-      """SELECT l_linestatus,
-        | CAST(SUM(CASE WHEN l_quantity <= 10 AND l_discount <= 0.04
-        |   THEN 1 ELSE 0 END) AS BIGINT) AS b_lo_lo,
-        | CAST(SUM(CASE WHEN l_quantity <= 10 AND l_discount > 0.04
-        |   AND l_discount <= 0.07 THEN 1 ELSE 0 END) AS BIGINT) AS b_lo_mid,
-        | CAST(SUM(CASE WHEN l_quantity <= 10 AND l_discount > 0.07
-        |   THEN 1 ELSE 0 END) AS BIGINT) AS b_lo_hi,
-        | CAST(SUM(CASE WHEN l_quantity > 10 AND l_quantity <= 30
-        |   AND l_discount <= 0.04 THEN 1 ELSE 0 END) AS BIGINT) AS b_mid_lo,
-        | CAST(SUM(CASE WHEN l_quantity > 10 AND l_quantity <= 30
-        |   AND l_discount > 0.04 AND l_discount <= 0.07
-        |   THEN 1 ELSE 0 END) AS BIGINT) AS b_mid_mid,
-        | CAST(SUM(CASE WHEN l_quantity > 10 AND l_quantity <= 30
-        |   AND l_discount > 0.07 THEN 1 ELSE 0 END) AS BIGINT) AS b_mid_hi,
-        | CAST(SUM(CASE WHEN l_quantity > 30 AND l_discount <= 0.04
-        |   THEN 1 ELSE 0 END) AS BIGINT) AS b_hi_lo,
-        | CAST(SUM(CASE WHEN l_quantity > 30 AND l_discount > 0.04
-        |   THEN 1 ELSE 0 END) AS BIGINT) AS b_hi_hi
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    // footer-metadata aggregates: trivially the same numbers from a
-    // row scan — the interesting half is the PushedAggregation plan
-    // lint in ScaleSpec
-    "analytics_stats_pushdown" ->
-      """SELECT count(*) AS n_rows, min(o_orderkey) AS min_key,
-        |  max(o_orderkey) AS max_key FROM orders""".stripMargin,
-    // uniform time-bucket downsampling; integer-micros bucket
-    // arithmetic, decimal-routed value sum
-    "analytics_downsample" ->
-      """WITH ev AS (SELECT event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, value FROM events),
-        |mm AS (SELECT min(us) AS mn, max(us) AS mx FROM ev)
-        |SELECT event_type,
-        | CAST(least(49, ((us - mn) * 50) // (mx - mn + 1)) AS BIGINT)
-        |   AS bucket,
-        | count(*) AS n_events,
-        | CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-        |FROM ev, mm GROUP BY 1, 2""".stripMargin,
-    // RANGE frame over an integer day index: same-day ties share one
-    // window (what ROWS can't express); exact cents
-    "analytics_range_frame" ->
-      """SELECT o_custkey, o_orderkey,
-        | CAST(datediff('day', DATE '1970-01-01',
-        |   CAST(o_orderdate AS DATE)) AS BIGINT) AS day_num,
-        | CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT))
-        |   OVER (PARTITION BY o_custkey
-        |     ORDER BY datediff('day', DATE '1970-01-01',
-        |       CAST(o_orderdate AS DATE))
-        |     RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT)
-        |   AS trail7_cents
-        |FROM orders""".stripMargin,
-    // the union + ignore-nulls last_value window IS the as-of shape;
-    // tie order (ts, is_p, event_id) is total, so the credited touch
-    // is deterministic on both engines
-    "analytics_attribution" ->
-      """WITH u AS (
-        | SELECT user_id, ts, event_id, event_type AS touch_type,
-        |  0 AS is_p
-        | FROM events WHERE event_type IN ('click', 'view', 'signup')
-        | UNION ALL
-        | SELECT user_id, ts, event_id, NULL, 1
-        | FROM events WHERE event_type = 'purchase'),
-        |w AS (
-        | SELECT *, last_value(touch_type IGNORE NULLS) OVER (
-        |   PARTITION BY user_id ORDER BY ts, is_p, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |  AS last_touch
-        | FROM u)
-        |SELECT coalesce(last_touch, 'none') AS touch_type,
-        | COUNT(*) AS purchases
-        |FROM w WHERE is_p = 1 GROUP BY 1""".stripMargin,
-    // md5 hex is identical across engines; the order key is the
-    // (hash, id) pair so the permutation is total and reproducible
-    "pipeline_shuffle_order" ->
-      """SELECT doc_id,
-        | md5(concat(42, ':', CAST(doc_id AS VARCHAR))) AS skey,
-        | row_number() OVER (
-        |   ORDER BY md5(concat(42, ':', CAST(doc_id AS VARCHAR))),
-        |    doc_id) AS pos
-        |FROM documents""".stripMargin,
-    // power-of-two bucket edges as integer CASE comparisons; token
-    // convention == text_tokens (split on ' ', drop empties)
-    "text_length_buckets" ->
-      """WITH t AS (
-        | SELECT source,
-        |  CAST(len(list_filter(string_split(lower(text), ' '),
-        |   x -> x <> '')) AS BIGINT) AS n_tokens
-        | FROM documents)
-        |SELECT source,
-        | CAST(CASE WHEN n_tokens <= 16 THEN 0 WHEN n_tokens <= 32 THEN 1
-        |   WHEN n_tokens <= 64 THEN 2 WHEN n_tokens <= 128 THEN 3
-        |   WHEN n_tokens <= 256 THEN 4 WHEN n_tokens <= 512 THEN 5
-        |   ELSE 6 END AS INT) AS bucket,
-        | COUNT(*) AS n_docs,
-        | CAST(SUM(n_tokens) AS BIGINT) AS tokens,
-        | CAST(MIN(n_tokens) AS BIGINT) AS min_tokens,
-        | CAST(MAX(n_tokens) AS BIGINT) AS max_tokens
-        |FROM t GROUP BY 1, 2""".stripMargin,
-    // the ppm fraction the boolean screens threshold on; distinct
-    // per-doc shingles both sides, integer division engine-exact
-    "dedup_contamination_score" ->
-      """WITH t AS (
-        | SELECT doc_id, CAST(substr(source, 4) AS INT) AS src_n,
-        |  lower(text) AS lt
-        | FROM documents),
-        |sh AS (
-        | SELECT DISTINCT doc_id, src_n, s FROM (
-        |  SELECT doc_id, src_n, unnest([substr(lt, i, 12)
-        |   for i in range(1, greatest(length(lt) - 10, 2))]) AS s
-        |  FROM t) x),
-        |ev AS (SELECT DISTINCT s FROM sh WHERE src_n >= 10),
-        |tr AS (SELECT doc_id, s FROM sh WHERE src_n < 10),
-        |tot AS (SELECT doc_id, COUNT(*) AS total_shingles
-        |        FROM tr GROUP BY 1),
-        |mt AS (SELECT doc_id, COUNT(*) AS matched_shingles
-        |       FROM tr SEMI JOIN ev ON tr.s = ev.s GROUP BY 1)
-        |SELECT tot.doc_id, total_shingles,
-        | coalesce(matched_shingles, 0) AS matched_shingles,
-        | CAST(coalesce(matched_shingles, 0) * 1000000 // total_shingles
-        |   AS BIGINT) AS overlap_ppm
-        |FROM tot LEFT JOIN mt ON tot.doc_id = mt.doc_id""".stripMargin,
-    // spanning-forest certificate: graph components via the same
-    // recursive closure, then the n_edges = n_nodes − n_components
-    // identity (equality ⟺ the Spark forest spans and is acyclic)
-    "graph_mst_cert" ->
-      graft.operators.Graph.mstCertificateOracleSql(minStrength = 2),
-    // k-core peel UNROLLED to a 24-round budget (measured depth 11
-    // at sf0.01; idempotent past the fixpoint, so margin is free);
-    // MATERIALIZED CTEs — default inlining re-evaluates the chain
-    "graph_kcore" ->
-      graft.operators.Graph.kCoreOracleSql(k = 3, minStrength = 2),
-    // strong-edge closure: same recursive-CTE fixpoint as the dedup
-    // cluster oracles, over the >=3-basket co-purchase pairs
-    "graph_components" ->
-      """WITH RECURSIVE
-        |b AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |      FROM lineitem),
-        |p AS (SELECT a.pk AS s, b2.pk AS t, COUNT(*) AS n
-        |      FROM b a JOIN b b2 ON a.ok = b2.ok AND a.pk < b2.pk
-        |      GROUP BY 1, 2),
-        |pairs AS (SELECT s, t FROM p WHERE n >= 3),
-        |edges AS (SELECT s AS src, t AS dst FROM pairs
-        |          UNION ALL SELECT t, s FROM pairs),
-        |reach(id, lbl) AS (
-        | SELECT DISTINCT src, src FROM edges
-        | UNION
-        | SELECT e.src, r.lbl FROM edges e, reach r WHERE e.dst = r.id)
-        |SELECT id AS part_id, MIN(lbl) AS component_id FROM reach
-        |GROUP BY 1""".stripMargin,
-    // Q21 shape: multi-way correlated EXISTS + NOT EXISTS against
-    // the same fact, decorrelated to semi/anti joins; deterministic
-    // top-100 via (numwait DESC, s_name)
-    "q21_waiting_suppliers" ->
-      """SELECT s_name, count(*) AS numwait
-        |FROM supplier, lineitem l1, orders
-        |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
-        |  AND o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_returnflag = 'R')
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin,
-    // Q22 shape: uncorrelated scalar threshold (bal*n > S in exact
-    // decimal — no float-avg drift) + NOT EXISTS anti-join with a
-    // recency predicate
-    "q22_lapsed_customers" ->
-      """SELECT c_nationkey % 5 AS cntrycode, count(*) AS numcust,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
-        |    AS totacctbal
-        |FROM customer
-        |WHERE CAST(c_acctbal AS DECIMAL(12,2)) *
-        |      (SELECT count(*) FROM customer WHERE c_acctbal > 0.0)
-        |    > (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(12,2)))
-        |              AS DECIMAL(18,2))
-        |       FROM customer WHERE c_acctbal > 0.0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderdate >= TIMESTAMP '2000-10-01')
-        |GROUP BY c_nationkey % 5""".stripMargin,
-    // Q7 shape: 6-way join, two nation aliases, disjunctive
-    // cross-alias predicate; revenue exact-decimal before the
-    // DOUBLE cast
-    "q7_volume_shipping" ->
-      """SELECT supp_nation, cust_nation, l_year,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-        |         * (1 - CAST(l_discount AS DECIMAL(12,2))))
-        |       AS DOUBLE) AS revenue
-        |FROM (
-        |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |         CAST(EXTRACT(year FROM l_shipdate) AS INT) AS l_year,
-        |         l_extendedprice, l_discount
-        |  FROM supplier, lineitem, orders, customer,
-        |       nation n1, nation n2
-        |  WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
-        |    AND c_custkey = o_custkey AND s_nationkey = n1.n_nationkey
-        |    AND c_nationkey = n2.n_nationkey
-        |    AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |      OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-        |) shipping
-        |GROUP BY supp_nation, cust_nation, l_year""".stripMargin,
-    // Q13 shape: left-outer with the filter in the ON clause, then
-    // aggregate-of-aggregate distribution; exact integer counts
-    "q13_customer_dist" ->
-      """SELECT c_count, count(*) AS custdist FROM (
-        |  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-        |  FROM customer c LEFT OUTER JOIN orders o
-        |    ON c.c_custkey = o.o_custkey
-        |   AND o.o_orderpriority <> '1-URGENT'
-        |  GROUP BY c.c_custkey) c_orders
-        |GROUP BY c_count""".stripMargin,
-    // Q2 shape: correlated scalar MIN over a multi-table subquery;
-    // lineitem-derived ps; total-ordered top-100
-    "q2_min_cost_supplier" ->
-      """WITH ps AS (
-        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-        |    MIN(CAST(l_extendedprice AS DECIMAL(12,2))) AS ps_supplycost
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, p_type
-        |FROM part, supplier, ps, nation, region
-        |WHERE p_partkey = ps_partkey AND s_suppkey = ps_suppkey
-        |  AND p_size = 15 AND p_type = 'STANDARD'
-        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'EUROPE'
-        |  AND ps_supplycost =
-        |    (SELECT MIN(ps2.ps_supplycost)
-        |     FROM ps ps2, supplier s2, nation n2, region r2
-        |     WHERE ps2.ps_partkey = p_partkey
-        |       AND s2.s_suppkey = ps2.ps_suppkey
-        |       AND s2.s_nationkey = n2.n_nationkey
-        |       AND n2.n_regionkey = r2.r_regionkey
-        |       AND r2.r_name = 'EUROPE')
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-    // Q8 shape: market-share ppm; e4 volume is exactly integral so
-    // the BIGINT cast is lossless in both engines
-    "q8_market_share" ->
-      """WITH allnations AS (
-        |  SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
-        |    CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-        |         * (1 - CAST(l_discount AS DECIMAL(12,2))) * 10000
-        |         AS BIGINT) AS volume_e4,
-        |    n2.n_name AS nation
-        |  FROM part, supplier, lineitem, orders, customer,
-        |       nation n1, nation n2, region
-        |  WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
-        |    AND l_orderkey = o_orderkey AND o_custkey = c_custkey
-        |    AND c_nationkey = n1.n_nationkey
-        |    AND n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
-        |    AND s_nationkey = n2.n_nationkey AND p_type = 'PROMO')
-        |SELECT o_year,
-        |  CAST((SUM(CASE WHEN nation = 'NATION_5' THEN volume_e4 ELSE 0 END)
-        |   * 1000000) // SUM(volume_e4) AS BIGINT) AS mkt_share_ppm
-        |FROM allnations GROUP BY o_year""".stripMargin,
-    // Q9 shape: profit by nation/year, exact decimal throughout
-    "q9_product_profit" ->
-      """SELECT nation, o_year,
-        |  CAST(SUM(amount) AS DOUBLE) AS sum_profit
-        |FROM (
-        |  SELECT n_name AS nation,
-        |    CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
-        |    CAST(l_extendedprice AS DECIMAL(12,2))
-        |      * (1 - CAST(l_discount AS DECIMAL(12,2)))
-        |      - CAST(p_retailprice AS DECIMAL(12,2))
-        |        * CAST(l_quantity AS DECIMAL(12,2)) AS amount
-        |  FROM part, supplier, lineitem, orders, nation
-        |  WHERE s_suppkey = l_suppkey AND p_partkey = l_partkey
-        |    AND o_orderkey = l_orderkey AND s_nationkey = n_nationkey
-        |    AND p_name LIKE '%widget%') profit
-        |GROUP BY nation, o_year""".stripMargin,
-    // Q10 shape: top-20 by EXACT decimal revenue, custkey tiebreak
-    "q10_returned_customers" ->
-      """SELECT c_custkey, c_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-        |       * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)
-        |    AS revenue,
-        |  c_acctbal, n_name
-        |FROM customer, orders, lineitem, nation
-        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND o_orderdate >= TIMESTAMP '1996-10-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND l_returnflag = 'R' AND c_nationkey = n_nationkey
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-        |       * (1 - CAST(l_discount AS DECIMAL(12,2)))) DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-    // Q11 shape: HAVING vs global scalar, fraction made algebraic
-    "q11_important_stock" ->
-      """WITH ps AS (
-        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-        |    MIN(CAST(l_extendedprice AS DECIMAL(12,2))) AS ps_supplycost,
-        |    CAST(SUM(l_quantity) AS BIGINT) AS ps_availqty
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT ps_partkey,
-        |  CAST(SUM(ps_supplycost * ps_availqty) AS DOUBLE) AS part_value
-        |FROM ps, supplier, nation
-        |WHERE ps_suppkey = s_suppkey AND s_nationkey = n_nationkey
-        |  AND n_name = 'NATION_7'
-        |GROUP BY ps_partkey
-        |HAVING SUM(ps_supplycost * ps_availqty) * 500 >
-        |  (SELECT SUM(ps_supplycost * ps_availqty)
-        |   FROM ps, supplier, nation
-        |   WHERE ps_suppkey = s_suppkey AND s_nationkey = n_nationkey
-        |     AND n_name = 'NATION_7')""".stripMargin,
-    // Q12 shape: dual conditional aggregates, exact integers
-    "q12_ship_priority" ->
-      """SELECT l_returnflag AS ship_class,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM orders, lineitem
-        |WHERE o_orderkey = l_orderkey AND l_returnflag IN ('A', 'R')
-        |  AND l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY l_returnflag""".stripMargin,
-    // Q14 shape: promo ppm scalar, lossless e4 integers
-    "q14_promo_share" ->
-      """SELECT CAST((SUM(CASE WHEN p_type = 'PROMO'
-        |    THEN CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-        |         * (1 - CAST(l_discount AS DECIMAL(12,2))) * 10000
-        |         AS BIGINT) ELSE 0 END) * 1000000)
-        |  // SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-        |      * (1 - CAST(l_discount AS DECIMAL(12,2))) * 10000
-        |      AS BIGINT)) AS BIGINT) AS promo_share_ppm
+         |WHERE r_name = 'ASIA' GROUP BY 1""".stripMargin),
+    // correlated scalar subquery (Q17 shape): quantities are
+    // integer-valued doubles, so sum/count — and hence 0.2*avg — are
+    // bit-identical on both engines; the comparison decides the same
+    // way everywhere
+    q("q17_small_qty_revenue", Publisher.smallQtyRevenue(_, _),
+      """SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)))
+        |    AS DOUBLE) / 7.0, 6) AS avg_yearly
         |FROM lineitem, part
-        |WHERE l_partkey = p_partkey
-        |  AND l_shipdate >= TIMESTAMP '1997-09-01'
-        |  AND l_shipdate < TIMESTAMP '1997-10-01'""".stripMargin,
-    // Q16 shape: NOT IN exclusion (null-aware anti join Spark-side)
-    "q16_part_suppliers" ->
-      """WITH ps AS (
-        |  SELECT DISTINCT l_partkey AS ps_partkey,
-        |                  l_suppkey AS ps_suppkey FROM lineitem)
-        |SELECT p_brand, p_type, p_size,
-        |  count(DISTINCT ps_suppkey) AS supplier_cnt
-        |FROM ps, part
-        |WHERE p_partkey = ps_partkey AND p_brand <> 'Brand#45'
-        |  AND p_type <> 'MEDIUM'
-        |  AND p_size IN (1, 9, 15, 22, 30, 38, 44, 49)
-        |  AND ps_suppkey NOT IN
-        |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_type, p_size""".stripMargin,
-    // Q19 shape: OR of conjunctive bands over the join key
-    "q19_disjunctive_revenue" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-        |     * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)
-        |  AS revenue
-        |FROM lineitem, part
-        |WHERE (p_partkey = l_partkey AND p_brand = 'Brand#12'
-        |       AND p_size BETWEEN 1 AND 5
-        |       AND l_quantity >= 1 AND l_quantity <= 11
-        |       AND l_returnflag = 'N')
-        |   OR (p_partkey = l_partkey AND p_brand = 'Brand#23'
-        |       AND p_size BETWEEN 1 AND 10
-        |       AND l_quantity >= 10 AND l_quantity <= 20
-        |       AND l_returnflag = 'N')
-        |   OR (p_partkey = l_partkey AND p_brand = 'Brand#34'
-        |       AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity >= 20 AND l_quantity <= 30
-        |       AND l_returnflag = 'N')""".stripMargin,
-    // Q20 shape: nested IN + correlated scalar SUM, 0.5 algebraic
-    "q20_excess_stock" ->
-      """WITH ps AS (
-        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-        |    CAST(SUM(l_quantity) AS BIGINT) AS ps_availqty
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT s_suppkey, s_name
-        |FROM supplier, nation
-        |WHERE s_suppkey IN (
-        |    SELECT ps_suppkey FROM ps
-        |    WHERE ps_partkey IN
-        |        (SELECT p_partkey FROM part WHERE p_name LIKE '%gear%')
-        |      AND ps_availqty < 2 *
-        |        (SELECT CAST(SUM(l_quantity) AS BIGINT) FROM lineitem
-        |         WHERE l_partkey = ps_partkey AND l_suppkey = ps_suppkey
-        |           AND l_shipdate >= TIMESTAMP '2000-01-01'
-        |           AND l_shipdate < TIMESTAMP '2001-01-01'))
-        |  AND s_nationkey = n_nationkey AND n_name = 'NATION_3'
-        |ORDER BY s_name""".stripMargin,
-    // full-outer null expansion on both sides (rare event types)
-    "analytics_full_outer" ->
-      """WITH s AS (SELECT user_id, COUNT(*) AS signup_ct FROM events
-        |           WHERE event_type = 'signup' GROUP BY 1),
-        |e AS (SELECT user_id, COUNT(*) AS error_ct FROM events
-        |      WHERE event_type = 'error' GROUP BY 1)
-        |SELECT COALESCE(s.user_id, e.user_id) AS user_id,
-        | COALESCE(s.signup_ct, 0) AS signup_ct,
-        | COALESCE(e.error_ct, 0) AS error_ct
-        |FROM s FULL OUTER JOIN e ON s.user_id = e.user_id""".stripMargin,
-    // data-quality audit: exact integer counts per check; the range
-    // rules are deliberately tight so several counts are nonzero and
-    // leading digit from the exact-cents string (locale-free both
-    // engines); Benford expectations as integer ppm literals
-    "dq_benford" ->
-      """WITH t AS (SELECT CAST(substr(CAST(CAST(
-        |    CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |    AS VARCHAR), 1, 1) AS INT) AS digit FROM orders),
-        |n AS (SELECT count(*) AS total FROM orders)
-        |SELECT digit, count(*) AS n,
-        | count(*) * 1000000 // (SELECT total FROM n) AS observed_ppm,
-        | CAST(CASE digit WHEN 1 THEN 301029 WHEN 2 THEN 176091
-        |  WHEN 3 THEN 124938 WHEN 4 THEN 96910 WHEN 5 THEN 79181
-        |  WHEN 6 THEN 66946 WHEN 7 THEN 57991 WHEN 8 THEN 51152
-        |  WHEN 9 THEN 45757 END AS BIGINT) AS benford_ppm
-        |FROM t GROUP BY digit""".stripMargin,
+        |WHERE p_partkey = l_partkey AND p_brand = 'Brand#23'
+        |  AND l_quantity < (SELECT 0.2 * avg(l_quantity)
+        |                    FROM lineitem l2
+        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin),
     // the hash proves the counting
-    "dq_audit" ->
+    q("dq_audit", Quality.audit(_, _),
       """SELECT 'orders_pk_unique' AS check,
         |  COUNT(*) - COUNT(DISTINCT o_orderkey) AS violations FROM orders
         |UNION ALL
@@ -1272,32 +298,545 @@ object SparkEntry {
         |SELECT 'orders_total_gt300k',
         |  COUNT(CASE WHEN o_totalprice < 0.0 OR o_totalprice > 300000.0
         |        THEN 1 END)
-        |FROM orders""".stripMargin,
-    // correlated scalar subquery (Q17 shape): quantities are
-    // integer-valued doubles, so sum/count — and hence 0.2*avg — are
-    // bit-identical on both engines; the comparison decides the same
-    // way everywhere
-    "q17_small_qty_revenue" ->
-      """SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)))
-        |    AS DOUBLE) / 7.0, 6) AS avg_yearly
+        |FROM orders""".stripMargin),
+    // data-quality audit: exact integer counts per check; the range
+    // rules are deliberately tight so several counts are nonzero and
+    // leading digit from the exact-cents string (locale-free both
+    // engines); Benford expectations as integer ppm literals
+    q("dq_benford", Quality.benfordAudit(_, _),
+      """WITH t AS (SELECT CAST(substr(CAST(CAST(
+        |    CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+        |    AS VARCHAR), 1, 1) AS INT) AS digit FROM orders),
+        |n AS (SELECT count(*) AS total FROM orders)
+        |SELECT digit, count(*) AS n,
+        | count(*) * 1000000 // (SELECT total FROM n) AS observed_ppm,
+        | CAST(CASE digit WHEN 1 THEN 301029 WHEN 2 THEN 176091
+        |  WHEN 3 THEN 124938 WHEN 4 THEN 96910 WHEN 5 THEN 79181
+        |  WHEN 6 THEN 66946 WHEN 7 THEN 57991 WHEN 8 THEN 51152
+        |  WHEN 9 THEN 45757 END AS BIGINT) AS benford_ppm
+        |FROM t GROUP BY digit""".stripMargin),
+    // deterministic global top-k (ties by key); plan-linted to
+    // TakeOrderedAndProject, never a full sort
+    q("analytics_global_topk", Analytics.globalTopK(_, _),
+      """SELECT o_orderkey,
+        | CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE) AS total
+        |FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin),
+    // weighted deterministic sampling: integer priority
+    // hash DIV weight, global bottom-k — reproducible on any engine
+    q("corpus_sample_weighted", TextAnalysis.sampleWeighted(_, _),
+      """WITH w AS (SELECT doc_id, lang,
+        |   CAST(1 + least(199, length(text) // 50) AS BIGINT) AS weight,
+        |   CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+        |     ::UBIGINT AS BIGINT) AS h
+        | FROM documents)
+        |SELECT doc_id, lang, weight FROM (
+        | SELECT doc_id, lang, weight,
+        |  row_number() OVER (ORDER BY h // weight, doc_id) AS rk
+        | FROM w) t
+        |WHERE rk <= 200""".stripMargin),
+    // full-outer null expansion on both sides (rare event types)
+    q("analytics_full_outer", Analytics.fullOuterActivity(_, _),
+      """WITH s AS (SELECT user_id, COUNT(*) AS signup_ct FROM events
+        |           WHERE event_type = 'signup' GROUP BY 1),
+        |e AS (SELECT user_id, COUNT(*) AS error_ct FROM events
+        |      WHERE event_type = 'error' GROUP BY 1)
+        |SELECT COALESCE(s.user_id, e.user_id) AS user_id,
+        | COALESCE(s.signup_ct, 0) AS signup_ct,
+        | COALESCE(e.error_ct, 0) AS error_ct
+        |FROM s FULL OUTER JOIN e ON s.user_id = e.user_id""".stripMargin),
+    // exact rolling 7-day distinct users: dedup (user, day) first,
+    // fan out <=7 window days per pair, count distinct per day
+    q("analytics_rolling_wau", Analytics.rollingWau(_, _),
+      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
+        |            FROM events),
+        |days AS (SELECT DISTINCT day FROM ud),
+        |x AS (SELECT user_id, day + CAST(o AS INT) AS day
+        |      FROM ud CROSS JOIN range(0, 7) r(o))
+        |SELECT x.day, COUNT(DISTINCT x.user_id) AS wau_ct
+        |FROM x SEMI JOIN days ON x.day = days.day
+        |GROUP BY 1""".stripMargin),
+    // same rolling-distinct operator at 4x the fanout (window=30):
+    // the bound claim is users x active-days x 30, still tiny next
+    // to the event count
+    q("analytics_rolling_mau", (s, d) => Analytics.rollingWau(s, d, 30)
+      .withColumnRenamed("wau_ct", "mau_ct"),
+      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
+        |            FROM events),
+        |days AS (SELECT DISTINCT day FROM ud),
+        |x AS (SELECT user_id, day + CAST(o AS INT) AS day
+        |      FROM ud CROSS JOIN range(0, 30) r(o))
+        |SELECT x.day, COUNT(DISTINCT x.user_id) AS mau_ct
+        |FROM x SEMI JOIN days ON x.day = days.day
+        |GROUP BY 1""".stripMargin),
+    // robust MAD outliers: median and MAD via exact quantiles
+    // (6dp-rounded), every flag operand an identical double on both
+    // engines
+    q("analytics_outliers_mad", Analytics.madOutliers(_, _),
+      """WITH m AS (SELECT event_type AS et,
+        |    round(quantile_cont(value, 0.5), 6) AS med
+        |  FROM events GROUP BY 1),
+        |dev AS (SELECT e.event_id, e.event_type, e.value, m.med,
+        |    round(abs(e.value - m.med), 6) AS dv
+        |  FROM events e JOIN m ON e.event_type = m.et),
+        |mad AS (SELECT event_type AS et2,
+        |    round(quantile_cont(dv, 0.5), 6) AS mad
+        |  FROM dev GROUP BY 1)
+        |SELECT event_id, dev.event_type, round(value, 6) AS value_r,
+        |  med, mad
+        |FROM dev JOIN mad ON dev.event_type = mad.et2
+        |WHERE dv > mad * 3 * 1.4826""".stripMargin),
+    // exact integer cents; decile id is pure integer arithmetic on
+    // (rank-1)*10/n, share is integer ppm — engine-exact end to end
+    q("analytics_pareto", Analytics.paretoShare(_, _),
+      s"""WITH p AS (
+         | SELECT o_custkey,
+         |  CAST(SUM(${m("o_totalprice")}) * 100 AS BIGINT) AS cents
+         | FROM orders GROUP BY 1),
+         |r AS (
+         | SELECT cents,
+         |  row_number() OVER (ORDER BY cents DESC, o_custkey) AS rk,
+         |  COUNT(*) OVER () AS n
+         | FROM p)
+         |SELECT CAST((rk - 1) * 10 // n AS BIGINT) AS decile,
+         | COUNT(*) AS n_customers,
+         | CAST(SUM(cents) AS BIGINT) AS cents,
+         | CAST(SUM(cents) * 1000000 //
+         |   (SELECT SUM(cents) FROM p) AS BIGINT) AS share_ppm
+         |FROM r GROUP BY 1""".stripMargin),
+    // four distinct measures in one pass; the filtered distinct uses
+    // CASE-null so non-purchase rows vanish from the set
+    q("analytics_multi_distinct", Analytics.multiDistinctDaily(_, _),
+      """SELECT CAST(ts AS DATE) AS day, COUNT(*) AS pv,
+        | COUNT(DISTINCT user_id) AS uv,
+        | COUNT(DISTINCT event_type) AS n_types,
+        | COUNT(DISTINCT CASE WHEN event_type = 'purchase'
+        |   THEN user_id END) AS purchase_uv
+        |FROM events GROUP BY 1""".stripMargin),
+    // integer day gaps via lag; bucket edges are CASE comparisons on
+    // the integer (never floor(log2(double)) — libm-ulp-unsafe)
+    q("analytics_interpurchase", Analytics.interPurchaseDist(_, _),
+      """WITH o AS (SELECT o_custkey, o_orderkey,
+        |    CAST(o_orderdate AS DATE) AS od FROM orders),
+        |g AS (SELECT date_diff('day',
+        |    lag(od) OVER (PARTITION BY o_custkey ORDER BY od, o_orderkey),
+        |    od) AS gap_days FROM o)
+        |SELECT CAST(CASE WHEN gap_days <= 0 THEN 0
+        |   WHEN gap_days <= 2 THEN 1 WHEN gap_days <= 4 THEN 2
+        |   WHEN gap_days <= 8 THEN 3 WHEN gap_days <= 16 THEN 4
+        |   WHEN gap_days <= 32 THEN 5 ELSE 6 END AS INT) AS bucket,
+        | COUNT(*) AS ct,
+        | CAST(MIN(gap_days) AS BIGINT) AS min_gap,
+        | CAST(MAX(gap_days) AS BIGINT) AS max_gap
+        |FROM g WHERE gap_days IS NOT NULL GROUP BY 1""".stripMargin),
+    // an order is new iff its date == the customer's first order
+    // date (date grain); exact cents, integer-ppm split
+    q("analytics_new_returning", Analytics.newVsReturning(_, _),
+      s"""WITH t AS (
+         | SELECT o_custkey, CAST(o_orderdate AS DATE) AS day,
+         |  CAST(${m("o_totalprice")} * 100 AS BIGINT) AS cents
+         | FROM orders),
+         |f AS (SELECT *, MIN(day) OVER (PARTITION BY o_custkey)
+         |   AS first_day FROM t)
+         |SELECT day,
+         | CAST(SUM(CASE WHEN day = first_day THEN cents ELSE 0 END)
+         |   AS BIGINT) AS new_cents,
+         | CAST(SUM(CASE WHEN day <> first_day THEN cents ELSE 0 END)
+         |   AS BIGINT) AS ret_cents,
+         | CAST(SUM(CASE WHEN day = first_day THEN cents ELSE 0 END)
+         |    * 1000000 //
+         |   (SUM(CASE WHEN day = first_day THEN cents ELSE 0 END)
+         |    + SUM(CASE WHEN day <> first_day THEN cents ELSE 0 END))
+         |   AS BIGINT) AS new_ppm
+         |FROM f GROUP BY 1""".stripMargin),
+    // TPC-DS q88 shape: eight band measures in ONE scan; band edges
+    // compare doubles to 2dp literals both engines parse identically
+    q("analytics_band_scan", Analytics.bandScanCounts(_, _),
+      """SELECT l_linestatus,
+        | CAST(SUM(CASE WHEN l_quantity <= 10 AND l_discount <= 0.04
+        |   THEN 1 ELSE 0 END) AS BIGINT) AS b_lo_lo,
+        | CAST(SUM(CASE WHEN l_quantity <= 10 AND l_discount > 0.04
+        |   AND l_discount <= 0.07 THEN 1 ELSE 0 END) AS BIGINT) AS b_lo_mid,
+        | CAST(SUM(CASE WHEN l_quantity <= 10 AND l_discount > 0.07
+        |   THEN 1 ELSE 0 END) AS BIGINT) AS b_lo_hi,
+        | CAST(SUM(CASE WHEN l_quantity > 10 AND l_quantity <= 30
+        |   AND l_discount <= 0.04 THEN 1 ELSE 0 END) AS BIGINT) AS b_mid_lo,
+        | CAST(SUM(CASE WHEN l_quantity > 10 AND l_quantity <= 30
+        |   AND l_discount > 0.04 AND l_discount <= 0.07
+        |   THEN 1 ELSE 0 END) AS BIGINT) AS b_mid_mid,
+        | CAST(SUM(CASE WHEN l_quantity > 10 AND l_quantity <= 30
+        |   AND l_discount > 0.07 THEN 1 ELSE 0 END) AS BIGINT) AS b_mid_hi,
+        | CAST(SUM(CASE WHEN l_quantity > 30 AND l_discount <= 0.04
+        |   THEN 1 ELSE 0 END) AS BIGINT) AS b_hi_lo,
+        | CAST(SUM(CASE WHEN l_quantity > 30 AND l_discount > 0.04
+        |   THEN 1 ELSE 0 END) AS BIGINT) AS b_hi_hi
+        |FROM lineitem GROUP BY 1""".stripMargin),
+    // footer-metadata aggregates: trivially the same numbers from a
+    // row scan — the interesting half is the PushedAggregation plan
+    // lint in ScaleSpec
+    q("analytics_stats_pushdown", Analytics.tableStatsPushdown(_, _),
+      """SELECT count(*) AS n_rows, min(o_orderkey) AS min_key,
+        |  max(o_orderkey) AS max_key FROM orders""".stripMargin),
+    // RANGE frame over an integer day index: same-day ties share one
+    // window (what ROWS can't express); exact cents
+    q("analytics_range_frame", Analytics.trailingRangeRevenue(_, _),
+      """SELECT o_custkey, o_orderkey,
+        | CAST(datediff('day', DATE '1970-01-01',
+        |   CAST(o_orderdate AS DATE)) AS BIGINT) AS day_num,
+        | CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT))
+        |   OVER (PARTITION BY o_custkey
+        |     ORDER BY datediff('day', DATE '1970-01-01',
+        |       CAST(o_orderdate AS DATE))
+        |     RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT)
+        |   AS trail7_cents
+        |FROM orders""".stripMargin),
+    // uniform time-bucket downsampling; integer-micros bucket
+    // arithmetic, decimal-routed value sum
+    q("analytics_downsample", Analytics.downsampleSeries(_, _),
+      """WITH ev AS (SELECT event_type,
+        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, value FROM events),
+        |mm AS (SELECT min(us) AS mn, max(us) AS mx FROM ev)
+        |SELECT event_type,
+        | CAST(least(49, ((us - mn) * 50) // (mx - mn + 1)) AS BIGINT)
+        |   AS bucket,
+        | count(*) AS n_events,
+        | CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
+        |FROM ev, mm GROUP BY 1, 2""".stripMargin),
+    // the union + ignore-nulls last_value window IS the as-of shape;
+    // tie order (ts, is_p, event_id) is total, so the credited touch
+    // is deterministic on both engines
+    q("analytics_attribution", Analytics.lastTouchAttribution(_, _),
+      """WITH u AS (
+        | SELECT user_id, ts, event_id, event_type AS touch_type,
+        |  0 AS is_p
+        | FROM events WHERE event_type IN ('click', 'view', 'signup')
+        | UNION ALL
+        | SELECT user_id, ts, event_id, NULL, 1
+        | FROM events WHERE event_type = 'purchase'),
+        |w AS (
+        | SELECT *, last_value(touch_type IGNORE NULLS) OVER (
+        |   PARTITION BY user_id ORDER BY ts, is_p, event_id
+        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |  AS last_touch
+        | FROM u)
+        |SELECT coalesce(last_touch, 'none') AS touch_type,
+        | COUNT(*) AS purchases
+        |FROM w WHERE is_p = 1 GROUP BY 1""".stripMargin),
+    // md5 hex is identical across engines; the order key is the
+    // (hash, id) pair so the permutation is total and reproducible
+    q("pipeline_shuffle_order", TextAnalysis.shuffleOrder(_, _),
+      """SELECT doc_id,
+        | md5(concat(42, ':', CAST(doc_id AS VARCHAR))) AS skey,
+        | row_number() OVER (
+        |   ORDER BY md5(concat(42, ':', CAST(doc_id AS VARCHAR))),
+        |    doc_id) AS pos
+        |FROM documents""".stripMargin),
+    // power-of-two bucket edges as integer CASE comparisons; token
+    // convention == text_tokens (split on ' ', drop empties)
+    q("text_length_buckets", TextAnalysis.lengthBuckets(_, _),
+      """WITH t AS (
+        | SELECT source,
+        |  CAST(len(list_filter(string_split(lower(text), ' '),
+        |   x -> x <> '')) AS BIGINT) AS n_tokens
+        | FROM documents)
+        |SELECT source,
+        | CAST(CASE WHEN n_tokens <= 16 THEN 0 WHEN n_tokens <= 32 THEN 1
+        |   WHEN n_tokens <= 64 THEN 2 WHEN n_tokens <= 128 THEN 3
+        |   WHEN n_tokens <= 256 THEN 4 WHEN n_tokens <= 512 THEN 5
+        |   ELSE 6 END AS INT) AS bucket,
+        | COUNT(*) AS n_docs,
+        | CAST(SUM(n_tokens) AS BIGINT) AS tokens,
+        | CAST(MIN(n_tokens) AS BIGINT) AS min_tokens,
+        | CAST(MAX(n_tokens) AS BIGINT) AS max_tokens
+        |FROM t GROUP BY 1, 2""".stripMargin),
+    // the ppm fraction the boolean screens threshold on; distinct
+    // per-doc shingles both sides, integer division engine-exact
+    q("dedup_contamination_score", Dedup.contaminationScore(_, _),
+      """WITH t AS (
+        | SELECT doc_id, CAST(substr(source, 4) AS INT) AS src_n,
+        |  lower(text) AS lt
+        | FROM documents),
+        |sh AS (
+        | SELECT DISTINCT doc_id, src_n, s FROM (
+        |  SELECT doc_id, src_n, unnest([substr(lt, i, 12)
+        |   for i in range(1, greatest(length(lt) - 10, 2))]) AS s
+        |  FROM t) x),
+        |ev AS (SELECT DISTINCT s FROM sh WHERE src_n >= 10),
+        |tr AS (SELECT doc_id, s FROM sh WHERE src_n < 10),
+        |tot AS (SELECT doc_id, COUNT(*) AS total_shingles
+        |        FROM tr GROUP BY 1),
+        |mt AS (SELECT doc_id, COUNT(*) AS matched_shingles
+        |       FROM tr SEMI JOIN ev ON tr.s = ev.s GROUP BY 1)
+        |SELECT tot.doc_id, total_shingles,
+        | coalesce(matched_shingles, 0) AS matched_shingles,
+        | CAST(coalesce(matched_shingles, 0) * 1000000 // total_shingles
+        |   AS BIGINT) AS overlap_ppm
+        |FROM tot LEFT JOIN mt ON tot.doc_id = mt.doc_id""".stripMargin),
+    // strong-edge closure: same recursive-CTE fixpoint as the dedup
+    // cluster oracles, over the >=3-basket co-purchase pairs
+    q("graph_components", Graph.components(_, _),
+      """WITH RECURSIVE
+        |b AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |      FROM lineitem),
+        |p AS (SELECT a.pk AS s, b2.pk AS t, COUNT(*) AS n
+        |      FROM b a JOIN b b2 ON a.ok = b2.ok AND a.pk < b2.pk
+        |      GROUP BY 1, 2),
+        |pairs AS (SELECT s, t FROM p WHERE n >= 3),
+        |edges AS (SELECT s AS src, t AS dst FROM pairs
+        |          UNION ALL SELECT t, s FROM pairs),
+        |reach(id, lbl) AS (
+        | SELECT DISTINCT src, src FROM edges
+        | UNION
+        | SELECT e.src, r.lbl FROM edges e, reach r WHERE e.dst = r.id)
+        |SELECT id AS part_id, MIN(lbl) AS component_id FROM reach
+        |GROUP BY 1""".stripMargin),
+    // Q21 shape: multi-way correlated EXISTS + NOT EXISTS against
+    // the same fact, decorrelated to semi/anti joins; deterministic
+    // top-100 via (numwait DESC, s_name)
+    q("q21_waiting_suppliers", Publisher.waitingSuppliers(_, _),
+      """SELECT s_name, count(*) AS numwait
+        |FROM supplier, lineitem l1, orders
+        |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
+        |  AND o_orderstatus = 'F' AND l1.l_returnflag = 'R'
+        |  AND EXISTS (SELECT 1 FROM lineitem l2
+        |              WHERE l2.l_orderkey = l1.l_orderkey
+        |                AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |                  WHERE l3.l_orderkey = l1.l_orderkey
+        |                    AND l3.l_suppkey <> l1.l_suppkey
+        |                    AND l3.l_returnflag = 'R')
+        |GROUP BY s_name
+        |ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin),
+    // Q22 shape: uncorrelated scalar threshold (bal*n > S in exact
+    // decimal — no float-avg drift) + NOT EXISTS anti-join with a
+    // recency predicate
+    q("q22_lapsed_customers", Publisher.lapsedCustomers(_, _),
+      """SELECT c_nationkey % 5 AS cntrycode, count(*) AS numcust,
+        |  CAST(sum(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
+        |    AS totacctbal
+        |FROM customer
+        |WHERE CAST(c_acctbal AS DECIMAL(12,2)) *
+        |      (SELECT count(*) FROM customer WHERE c_acctbal > 0.0)
+        |    > (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(12,2)))
+        |              AS DECIMAL(18,2))
+        |       FROM customer WHERE c_acctbal > 0.0)
+        |  AND NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey
+        |                    AND o_orderdate >= TIMESTAMP '2000-10-01')
+        |GROUP BY c_nationkey % 5""".stripMargin),
+    // Q7 shape: 6-way join, two nation aliases, disjunctive
+    // cross-alias predicate; revenue exact-decimal before the
+    // DOUBLE cast
+    q("q7_volume_shipping", Publisher.volumeShipping(_, _),
+      """SELECT supp_nation, cust_nation, l_year,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
+        |         * (1 - CAST(l_discount AS DECIMAL(12,2))))
+        |       AS DOUBLE) AS revenue
+        |FROM (
+        |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |         CAST(EXTRACT(year FROM l_shipdate) AS INT) AS l_year,
+        |         l_extendedprice, l_discount
+        |  FROM supplier, lineitem, orders, customer,
+        |       nation n1, nation n2
+        |  WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
+        |    AND c_custkey = o_custkey AND s_nationkey = n1.n_nationkey
+        |    AND c_nationkey = n2.n_nationkey
+        |    AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+        |      OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
+        |) shipping
+        |GROUP BY supp_nation, cust_nation, l_year""".stripMargin),
+    // Q13 shape: left-outer with the filter in the ON clause, then
+    // aggregate-of-aggregate distribution; exact integer counts
+    q("q13_customer_dist", Publisher.customerDistribution(_, _),
+      """SELECT c_count, count(*) AS custdist FROM (
+        |  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
+        |  FROM customer c LEFT OUTER JOIN orders o
+        |    ON c.c_custkey = o.o_custkey
+        |   AND o.o_orderpriority <> '1-URGENT'
+        |  GROUP BY c.c_custkey) c_orders
+        |GROUP BY c_count""".stripMargin),
+    // Q2 shape: correlated scalar MIN over a multi-table subquery;
+    // lineitem-derived ps; total-ordered top-100
+    q("q2_min_cost_supplier", Publisher.minCostSupplier(_, _),
+      """WITH ps AS (
+        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+        |    MIN(CAST(l_extendedprice AS DECIMAL(12,2))) AS ps_supplycost
+        |  FROM lineitem GROUP BY 1, 2)
+        |SELECT s_acctbal, s_name, n_name, p_partkey, p_type
+        |FROM part, supplier, ps, nation, region
+        |WHERE p_partkey = ps_partkey AND s_suppkey = ps_suppkey
+        |  AND p_size = 15 AND p_type = 'STANDARD'
+        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
+        |  AND r_name = 'EUROPE'
+        |  AND ps_supplycost =
+        |    (SELECT MIN(ps2.ps_supplycost)
+        |     FROM ps ps2, supplier s2, nation n2, region r2
+        |     WHERE ps2.ps_partkey = p_partkey
+        |       AND s2.s_suppkey = ps2.ps_suppkey
+        |       AND s2.s_nationkey = n2.n_nationkey
+        |       AND n2.n_regionkey = r2.r_regionkey
+        |       AND r2.r_name = 'EUROPE')
+        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
+        |LIMIT 100""".stripMargin),
+    // Q8 shape: market-share ppm; e4 volume is exactly integral so
+    // the BIGINT cast is lossless in both engines
+    q("q8_market_share", Publisher.marketShare(_, _),
+      """WITH allnations AS (
+        |  SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
+        |    CAST(CAST(l_extendedprice AS DECIMAL(12,2))
+        |         * (1 - CAST(l_discount AS DECIMAL(12,2))) * 10000
+        |         AS BIGINT) AS volume_e4,
+        |    n2.n_name AS nation
+        |  FROM part, supplier, lineitem, orders, customer,
+        |       nation n1, nation n2, region
+        |  WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
+        |    AND l_orderkey = o_orderkey AND o_custkey = c_custkey
+        |    AND c_nationkey = n1.n_nationkey
+        |    AND n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
+        |    AND s_nationkey = n2.n_nationkey AND p_type = 'PROMO')
+        |SELECT o_year,
+        |  CAST((SUM(CASE WHEN nation = 'NATION_5' THEN volume_e4 ELSE 0 END)
+        |   * 1000000) // SUM(volume_e4) AS BIGINT) AS mkt_share_ppm
+        |FROM allnations GROUP BY o_year""".stripMargin),
+    // Q9 shape: profit by nation/year, exact decimal throughout
+    q("q9_product_profit", Publisher.productProfit(_, _),
+      """SELECT nation, o_year,
+        |  CAST(SUM(amount) AS DOUBLE) AS sum_profit
+        |FROM (
+        |  SELECT n_name AS nation,
+        |    CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
+        |    CAST(l_extendedprice AS DECIMAL(12,2))
+        |      * (1 - CAST(l_discount AS DECIMAL(12,2)))
+        |      - CAST(p_retailprice AS DECIMAL(12,2))
+        |        * CAST(l_quantity AS DECIMAL(12,2)) AS amount
+        |  FROM part, supplier, lineitem, orders, nation
+        |  WHERE s_suppkey = l_suppkey AND p_partkey = l_partkey
+        |    AND o_orderkey = l_orderkey AND s_nationkey = n_nationkey
+        |    AND p_name LIKE '%widget%') profit
+        |GROUP BY nation, o_year""".stripMargin),
+    // Q10 shape: top-20 by EXACT decimal revenue, custkey tiebreak
+    q("q10_returned_customers", Publisher.returnedItemCustomers(_, _),
+      """SELECT c_custkey, c_name,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
+        |       * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)
+        |    AS revenue,
+        |  c_acctbal, n_name
+        |FROM customer, orders, lineitem, nation
+        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+        |  AND o_orderdate >= TIMESTAMP '1996-10-01'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01'
+        |  AND l_returnflag = 'R' AND c_nationkey = n_nationkey
+        |GROUP BY c_custkey, c_name, c_acctbal, n_name
+        |ORDER BY SUM(CAST(l_extendedprice AS DECIMAL(12,2))
+        |       * (1 - CAST(l_discount AS DECIMAL(12,2)))) DESC, c_custkey
+        |LIMIT 20""".stripMargin),
+    // Q11 shape: HAVING vs global scalar, fraction made algebraic
+    q("q11_important_stock", Publisher.importantStock(_, _),
+      """WITH ps AS (
+        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+        |    MIN(CAST(l_extendedprice AS DECIMAL(12,2))) AS ps_supplycost,
+        |    CAST(SUM(l_quantity) AS BIGINT) AS ps_availqty
+        |  FROM lineitem GROUP BY 1, 2)
+        |SELECT ps_partkey,
+        |  CAST(SUM(ps_supplycost * ps_availqty) AS DOUBLE) AS part_value
+        |FROM ps, supplier, nation
+        |WHERE ps_suppkey = s_suppkey AND s_nationkey = n_nationkey
+        |  AND n_name = 'NATION_7'
+        |GROUP BY ps_partkey
+        |HAVING SUM(ps_supplycost * ps_availqty) * 500 >
+        |  (SELECT SUM(ps_supplycost * ps_availqty)
+        |   FROM ps, supplier, nation
+        |   WHERE ps_suppkey = s_suppkey AND s_nationkey = n_nationkey
+        |     AND n_name = 'NATION_7')""".stripMargin),
+    // Q12 shape: dual conditional aggregates, exact integers
+    q("q12_ship_priority", Publisher.shipClassPriority(_, _),
+      """SELECT l_returnflag AS ship_class,
+        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |  CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+        |FROM orders, lineitem
+        |WHERE o_orderkey = l_orderkey AND l_returnflag IN ('A', 'R')
+        |  AND l_shipdate >= TIMESTAMP '1997-01-01'
+        |  AND l_shipdate < TIMESTAMP '1998-01-01'
+        |GROUP BY l_returnflag""".stripMargin),
+    // Q14 shape: promo ppm scalar, lossless e4 integers
+    q("q14_promo_share", Publisher.promoRevenueShare(_, _),
+      """SELECT CAST((SUM(CASE WHEN p_type = 'PROMO'
+        |    THEN CAST(CAST(l_extendedprice AS DECIMAL(12,2))
+        |         * (1 - CAST(l_discount AS DECIMAL(12,2))) * 10000
+        |         AS BIGINT) ELSE 0 END) * 1000000)
+        |  // SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
+        |      * (1 - CAST(l_discount AS DECIMAL(12,2))) * 10000
+        |      AS BIGINT)) AS BIGINT) AS promo_share_ppm
         |FROM lineitem, part
-        |WHERE p_partkey = l_partkey AND p_brand = 'Brand#23'
-        |  AND l_quantity < (SELECT 0.2 * avg(l_quantity)
-        |                    FROM lineitem l2
-        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin,
+        |WHERE l_partkey = p_partkey
+        |  AND l_shipdate >= TIMESTAMP '1997-09-01'
+        |  AND l_shipdate < TIMESTAMP '1997-10-01'""".stripMargin),
+    // Q16 shape: NOT IN exclusion (null-aware anti join Spark-side)
+    q("q16_part_suppliers", Publisher.partSupplierCounts(_, _),
+      """WITH ps AS (
+        |  SELECT DISTINCT l_partkey AS ps_partkey,
+        |                  l_suppkey AS ps_suppkey FROM lineitem)
+        |SELECT p_brand, p_type, p_size,
+        |  count(DISTINCT ps_suppkey) AS supplier_cnt
+        |FROM ps, part
+        |WHERE p_partkey = ps_partkey AND p_brand <> 'Brand#45'
+        |  AND p_type <> 'MEDIUM'
+        |  AND p_size IN (1, 9, 15, 22, 30, 38, 44, 49)
+        |  AND ps_suppkey NOT IN
+        |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        |GROUP BY p_brand, p_type, p_size""".stripMargin),
+    // Q19 shape: OR of conjunctive bands over the join key
+    q("q19_disjunctive_revenue", Publisher.disjunctiveRevenue(_, _),
+      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
+        |     * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)
+        |  AS revenue
+        |FROM lineitem, part
+        |WHERE (p_partkey = l_partkey AND p_brand = 'Brand#12'
+        |       AND p_size BETWEEN 1 AND 5
+        |       AND l_quantity >= 1 AND l_quantity <= 11
+        |       AND l_returnflag = 'N')
+        |   OR (p_partkey = l_partkey AND p_brand = 'Brand#23'
+        |       AND p_size BETWEEN 1 AND 10
+        |       AND l_quantity >= 10 AND l_quantity <= 20
+        |       AND l_returnflag = 'N')
+        |   OR (p_partkey = l_partkey AND p_brand = 'Brand#34'
+        |       AND p_size BETWEEN 1 AND 15
+        |       AND l_quantity >= 20 AND l_quantity <= 30
+        |       AND l_returnflag = 'N')""".stripMargin),
+    // Q20 shape: nested IN + correlated scalar SUM, 0.5 algebraic
+    q("q20_excess_stock", Publisher.excessStockSuppliers(_, _),
+      """WITH ps AS (
+        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+        |    CAST(SUM(l_quantity) AS BIGINT) AS ps_availqty
+        |  FROM lineitem GROUP BY 1, 2)
+        |SELECT s_suppkey, s_name
+        |FROM supplier, nation
+        |WHERE s_suppkey IN (
+        |    SELECT ps_suppkey FROM ps
+        |    WHERE ps_partkey IN
+        |        (SELECT p_partkey FROM part WHERE p_name LIKE '%gear%')
+        |      AND ps_availqty < 2 *
+        |        (SELECT CAST(SUM(l_quantity) AS BIGINT) FROM lineitem
+        |         WHERE l_partkey = ps_partkey AND l_suppkey = ps_suppkey
+        |           AND l_shipdate >= TIMESTAMP '2000-01-01'
+        |           AND l_shipdate < TIMESTAMP '2001-01-01'))
+        |  AND s_nationkey = n_nationkey AND n_name = 'NATION_3'
+        |ORDER BY s_name""".stripMargin),
     // IN-subquery over grouped HAVING + correlated scalar (Q18
     // shape); exact integer quantity sums
-    "q18_large_orders" ->
+    q("q18_large_orders", Publisher.largeOrders(_, _),
       """SELECT o_orderkey,
         |  CAST((SELECT sum(l_quantity) FROM lineitem
         |        WHERE l_orderkey = o.o_orderkey) AS BIGINT) AS sum_qty
         |FROM orders o
         |WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
         |                     GROUP BY l_orderkey
-        |                     HAVING sum(l_quantity) > 180)""".stripMargin,
+        |                     HAVING sum(l_quantity) > 180)""".stripMargin),
     // aggregate-of-aggregate max selection (Q15 shape); revenue in
     // exact decimal through the max comparison
-    "q15_top_supplier" ->
+    q("q15_top_supplier", Publisher.topSupplier(_, _),
       """WITH revenue AS (
         |  SELECT l_suppkey AS supplier_no,
         |    sum(CAST(l_extendedprice AS DECIMAL(12,2))
@@ -1306,8 +845,8 @@ object SparkEntry {
         |SELECT s_suppkey, s_name,
         |  CAST(total_rev AS DOUBLE) AS total_rev
         |FROM supplier JOIN revenue ON s_suppkey = supplier_no
-        |WHERE total_rev = (SELECT max(total_rev) FROM revenue)""".stripMargin,
-    "q3_segment_revenue" ->
+        |WHERE total_rev = (SELECT max(total_rev) FROM revenue)""".stripMargin),
+    q("q3_segment_revenue", Publisher.segmentRevenue(_, _),
       s"""WITH agg AS (
          | SELECT l_orderkey AS order_id, CAST(o_orderdate AS DATE) AS order_date,
          |  o_orderpriority, CAST(SUM($rev) AS DOUBLE) AS revenue
@@ -1320,121 +859,14 @@ object SparkEntry {
          |SELECT order_id, order_date, o_orderpriority, revenue, rk FROM (
          | SELECT *, row_number() OVER (ORDER BY revenue DESC, order_id) AS rk
          | FROM agg) t
-         |WHERE rk <= 10""".stripMargin,
-    "dwd_visitor_state_repair" ->
+         |WHERE rk <= 10""".stripMargin),
+    q("dwd_visitor_state_repair", Dwd.visitorStateRepair(_, _),
       """WITH f AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS first_d
         |           FROM events GROUP BY 1)
         |SELECT e.event_id, e.user_id,
         | CASE WHEN CAST(e.ts AS DATE) = f.first_d THEN 1 ELSE 0 END AS is_new
-        |FROM events e JOIN f ON e.user_id = f.user_id""".stripMargin,
-    "q6_forecast_revenue" ->
-      s"""SELECT CAST(SUM(${m("l_extendedprice")} * ${m("l_discount")})
-         |  AS DOUBLE) AS revenue
-         |FROM lineitem
-         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-         | AND l_shipdate < TIMESTAMP '1997-01-01'
-         | AND l_discount BETWEEN 0.02 AND 0.04 AND l_quantity < 24""".stripMargin,
-    "q4_priority_refund" ->
-      """SELECT o_orderpriority, COUNT(*) AS order_ct FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |  WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY 1""".stripMargin,
-    "text_winnow" ->
-      """SELECT doc_id, CAST(len(list_distinct([
-        |  list_min(h[i:i+3]) for i in range(1, greatest(len(h) - 3, 1) + 1)
-        | ])) AS INT) AS n_fp
-        |FROM (SELECT doc_id,
-        |  [list_reduce([CAST(ascii(substr(g, j, 1)) AS BIGINT)
-        |     for j in range(1, 9)], (a, b) -> a * 31 + b)
-        |   for g in [substr(lower(text), i, 8)
-        |     for i in range(1, greatest(length(lower(text)) - 6, 2))]] AS h
-        | FROM documents) t""".stripMargin,
-    // MOSS winnow-join: pairs sharing >= 10 window-minima
-    // fingerprints at real MOSS parameters (k=25, w=25 — any shared
-    // run >= 49 chars is caught). 25-char grams use the mod-prime
-    // polynomial fold (see Text.polyHashMod) so the 64-bit fold
-    // never overflows in either engine.
-    "dedup_winnow_pairs" ->
-      """WITH fp AS (
-        | SELECT doc_id, list_distinct([
-        |   list_min(h[i:i+24]) for i in range(1, greatest(len(h) - 24, 1) + 1)
-        |  ]) AS fps
-        | FROM (SELECT doc_id,
-        |   [list_reduce([CAST(ascii(substr(g, j, 1)) AS BIGINT)
-        |      for j in range(1, 26)], (a, b) -> (a * 31 + b) % 9007199254740881)
-        |    for g in [substr(lower(text), i, 25)
-        |      for i in range(1, greatest(length(lower(text)) - 23, 2))]] AS h
-        |  FROM documents) t),
-        |ix AS (SELECT doc_id, unnest(fps) AS fp FROM fp)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  count(*) AS shared_fp
-        |FROM ix a JOIN ix b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 HAVING count(*) >= 10""".stripMargin,
-    // suffix-array-style duplicated spans: maximal ranges whose
-    // 20-grams occur >= 2 times corpus-wide; spans merge while the
-    // gap between matched positions is <= 20 (overlap or touch)
-    "dedup_repeated_spans" ->
-      """WITH g AS (
-        | SELECT doc_id,
-        |   CAST(unnest(range(0, greatest(len(text) - 19, 0))) AS BIGINT)
-        |     AS pos, text
-        | FROM documents),
-        |p AS (SELECT doc_id, pos,
-        |        substr(text, CAST(pos AS INT) + 1, 20) AS gram FROM g),
-        |h AS (SELECT gram FROM p GROUP BY gram HAVING count(*) >= 2),
-        |m AS (SELECT doc_id, pos,
-        |  CASE WHEN pos - lag(pos) OVER
-        |    (PARTITION BY doc_id ORDER BY pos) > 20
-        |   THEN 1 ELSE 0 END AS brk
-        | FROM p JOIN h USING (gram)),
-        |i AS (SELECT doc_id, pos, SUM(brk) OVER
-        |   (PARTITION BY doc_id ORDER BY pos
-        |    ROWS UNBOUNDED PRECEDING) AS isl FROM m)
-        |SELECT doc_id, MIN(pos) AS span_start,
-        |  MAX(pos) - MIN(pos) + 20 AS span_len
-        |FROM i GROUP BY doc_id, isl""".stripMargin,
-    // radius query: exact cosine >= 0.30 against the 20-query set;
-    // identical summation order on both engines, so the float
-    // boundary agrees bit-for-bit (nearest cos sits 1.1e-4 away)
-    "sim_range_search" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-        |      FROM e),
-        |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n
-        |      WHERE vec_id < 20)
-        |SELECT query_id, e2.vec_id AS neighbor_id
-        |FROM q, n e2 WHERE e2.vec_id <> query_id
-        |  AND list_sum([qv[i + 1] * e2.v[i + 1]
-        |        for i in range(0, len(qv))]) / (qn * e2.nrm) >= 0.30""".stripMargin,
-    "text_corpus_stats" ->
-      """SELECT lang, COUNT(*) AS doc_ct,
-        | CAST(SUM(CAST(length(text) AS BIGINT)) AS BIGINT) AS chars_sum,
-        | CAST(SUM(CAST(len(list_filter(string_split(lower(text), ' '),
-        |   x -> x <> '')) AS BIGINT)) AS BIGINT) AS tokens_sum,
-        | MIN(length(text)) AS min_chars, MAX(length(text)) AS max_chars
-        |FROM documents GROUP BY 1""".stripMargin,
-    "pipeline_clean_corpus" ->
-      """WITH toks AS (SELECT doc_id, lang, source, text,
-        |  list_filter(string_split(lower(text), ' '), x -> x <> '') AS tk
-        | FROM documents),
-        |keep AS (SELECT MIN(doc_id) AS doc_id FROM documents
-        | GROUP BY md5(array_to_string(list_sort(list_distinct(
-        |   list_filter(string_split(lower(text), ' '), x -> x <> ''))), ' '))),
-        |scored AS (SELECT t.doc_id, t.lang, t.source,
-        |  CAST(len(tk) AS BIGINT) AS n_tokens,
-        |  CAST(len(list_filter(tk, x -> list_contains(
-        |    ['the','a','of','and','to','is','in','that','it','for'], x)))
-        |   AS DOUBLE) / NULLIF(CAST(len(tk) AS DOUBLE), 0) * 0.3
-        |  + CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-        |   AS DOUBLE) / NULLIF(CAST(length(text) AS DOUBLE), 0) * 0.4
-        |  + least(CAST(len(tk) AS DOUBLE) / 100.0, 1.0) * 0.3
-        |   AS quality_score
-        | FROM toks t JOIN keep k ON t.doc_id = k.doc_id)
-        |SELECT doc_id, lang, source, n_tokens, quality_score FROM scored
-        |WHERE n_tokens >= 10 AND n_tokens <= 100000
-        | AND quality_score >= 0.5""".stripMargin,
-    "analytics_sessionize" ->
+        |FROM events e JOIN f ON e.user_id = f.user_id""".stripMargin),
+    q("analytics_sessionize", Analytics.sessionize(_, _),
       """WITH e AS (SELECT user_id, epoch_us(ts) AS us FROM events),
         |g AS (SELECT user_id, us, CASE WHEN
         |  lag(us) OVER (PARTITION BY user_id ORDER BY us) IS NULL OR
@@ -1445,8 +877,8 @@ object SparkEntry {
         |  AS sess_id FROM g)
         |SELECT user_id, CAST(sess_id AS BIGINT) AS sess_id,
         | COUNT(*) AS n_events, MAX(us) - MIN(us) AS dur_us
-        |FROM s GROUP BY 1, 2""".stripMargin,
-    "analytics_sku_topn" ->
+        |FROM s GROUP BY 1, 2""".stripMargin),
+    q("analytics_sku_topn", Analytics.skuTopNPerCategory(_, _),
       s"""WITH sku AS (
          | SELECT p_type AS category, l_partkey AS sku_id,
          |  CAST(SUM($rev) AS DOUBLE) AS amount
@@ -1455,8 +887,8 @@ object SparkEntry {
          | SELECT *, row_number() OVER
          |  (PARTITION BY category ORDER BY amount DESC, sku_id) AS rk
          | FROM sku) t
-         |WHERE rk <= 3""".stripMargin,
-    "analytics_gmv_running" ->
+         |WHERE rk <= 3""".stripMargin),
+    q("analytics_gmv_running", Analytics.gmvRunning(_, _),
       s"""WITH g AS (SELECT CAST(o_orderdate AS DATE) AS cur_date,
          |  SUM(${m("o_totalprice")}) AS gmv_dec FROM orders GROUP BY 1)
          |SELECT cur_date, CAST(gmv_dec AS DOUBLE) AS gmv,
@@ -1467,21 +899,60 @@ object SparkEntry {
          |  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE)
          |  / CAST(COUNT(*) OVER (ORDER BY cur_date
          |  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) AS ma7
-         |FROM g""".stripMargin,
-    "analytics_event_pivot" ->
+         |FROM g""".stripMargin),
+    q("analytics_event_pivot", Analytics.eventPivot(_, _),
       """SELECT CAST(ts AS DATE) AS cur_date,
         | COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS view_ct,
         | COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS click_ct,
         | COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase_ct,
         | COUNT(CASE WHEN event_type = 'signup' THEN 1 END) AS signup_ct,
         | COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS error_ct
-        |FROM events GROUP BY 1""".stripMargin,
+        |FROM events GROUP BY 1""".stripMargin),
+    q("analytics_anti_dormant", Analytics.dormantParts(_, _),
+      """SELECT p_partkey AS part_id, p_brand AS brand FROM part
+        |WHERE NOT EXISTS (
+        | SELECT 1 FROM lineitem
+        | WHERE l_partkey = p_partkey
+        |  AND l_shipdate >= TIMESTAMP '1998-01-01'
+        |  AND l_shipdate < TIMESTAMP '1998-02-01')""".stripMargin),
+    q("analytics_rollup", Analytics.revenueRollup(_, _),
+      s"""SELECT coalesce(r_name, 'ALL') AS region_name,
+         | coalesce(n_name, 'ALL') AS nation_name,
+         | CAST(SUM(${m("o_totalprice")}) AS DOUBLE) AS amount,
+         | COUNT(*) AS order_ct
+         |FROM orders JOIN customer ON o_custkey = c_custkey
+         | JOIN nation ON c_nationkey = n_nationkey
+         | JOIN region ON n_regionkey = r_regionkey
+         |GROUP BY ROLLUP(r_name, n_name)""".stripMargin),
+    // full 2^n subtotal lattice + grouping bitmask; DECIMAL(18,6)
+    // sums are exact so the hash is order-independent
+    q("analytics_cube", Analytics.eventCube(_, _),
+      """SELECT coalesce(CAST(CAST(ts AS DATE) AS VARCHAR), 'ALL') AS dt,
+        | coalesce(event_type, 'ALL') AS event_type,
+        | CAST(GROUPING(CAST(ts AS DATE)) * 2 + GROUPING(event_type)
+        |   AS BIGINT) AS gid,
+        | COUNT(*) AS ct,
+        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
+        |FROM events
+        |GROUP BY CUBE(CAST(ts AS DATE), event_type)""".stripMargin),
+    // hopping windows: every event lands in size/slide = 4 windows;
+    // window starts are pure epoch-micros arithmetic on both sides
+    q("analytics_sliding_window", Analytics.slidingTraffic(_, _),
+      """WITH e AS (SELECT epoch_us(ts) AS us, event_type, value
+        |           FROM events),
+        |w AS (SELECT (us // 900000000) * 900000000 - k * 900000000 AS ws_us,
+        |        event_type, value
+        |      FROM e CROSS JOIN range(0, 4) r(k))
+        |SELECT ws_us, ws_us + 3600000000 AS we_us, event_type,
+        | COUNT(*) AS pv,
+        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
+        |FROM w GROUP BY 1, 2, 3""".stripMargin),
     // sketch outputs are algorithm-specific, so each engine grades
     // ITS OWN sketch against ITS OWN exact value and emits a
     // within-5% flag — identical booleans whenever both sketches
     // honor their error contracts (exact uu rides along as the
     // cross-engine-hashable anchor)
-    "analytics_approx_stats" ->
+    q("analytics_approx_stats", Analytics.approxStats(_, _),
       """WITH ex AS (
         | SELECT o_orderpriority AS prio,
         |  COUNT(DISTINCT o_custkey) AS uu_exact,
@@ -1501,19 +972,19 @@ object SparkEntry {
         |   <= abs(ex.p50_exact) * 0.05 AS INT) AS p50_ok,
         | CAST(abs(ap.p95_approx - ex.p95_exact)
         |   <= abs(ex.p95_exact) * 0.05 AS INT) AS p95_ok
-        |FROM ex JOIN ap ON ex.prio = ap.prio""".stripMargin,
+        |FROM ex JOIN ap ON ex.prio = ap.prio""".stripMargin),
     // Spark `percentile` and DuckDB `quantile_cont` share the linear
     // interpolation definition; 6dp rounding both sides absorbs
     // arithmetic-order ulps
-    "analytics_exact_quantiles" ->
+    q("analytics_exact_quantiles", Analytics.exactQuantiles(_, _),
       """SELECT event_type,
         | round(quantile_cont(value, 0.25), 6) AS q25,
         | round(quantile_cont(value, 0.50), 6) AS q50,
         | round(quantile_cont(value, 0.90), 6) AS q90
-        |FROM events GROUP BY 1""".stripMargin,
+        |FROM events GROUP BY 1""".stripMargin),
     // lag over a tiny month-grain aggregate; growth is one double
     // division of exact decimal sums, 6dp-rounded on both sides
-    "analytics_mom_growth" ->
+    q("analytics_mom_growth", Analytics.momGrowth(_, _),
       s"""WITH m AS (
          | SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
          |  SUM(${m("o_totalprice")}) AS gmv_dec
@@ -1523,12 +994,12 @@ object SparkEntry {
          | round(CAST(gmv_dec - lag(gmv_dec) OVER (ORDER BY month) AS DOUBLE)
          |   / CAST(lag(gmv_dec) OVER (ORDER BY month) AS DOUBLE), 6)
          |  AS growth
-         |FROM m""".stripMargin,
+         |FROM m""".stripMargin),
     // Pearson r from EXACT decimal moment sums (order-independent),
     // final formula in identical double arithmetic on both engines —
     // never the engine's own streaming corr (accumulation-order
     // dependent)
-    "analytics_corr" ->
+    q("analytics_corr", Analytics.corrQtyPrice(_, _),
       """WITH mo AS (
         | SELECT l_returnflag, COUNT(*) AS n,
         |  SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sx,
@@ -1548,18 +1019,256 @@ object SparkEntry {
         |   * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
         |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
         |  AS corr_qty_price
-        |FROM mo""".stripMargin,
+        |FROM mo""".stripMargin),
+    q("analytics_histogram", Analytics.orderTotalHistogram(_, _),
+      s"""SELECT CAST(floor(o_totalprice / 30000.0) AS BIGINT) AS bucket,
+         | COUNT(*) AS ct,
+         | CAST(MIN(${m("o_totalprice")}) AS DOUBLE) AS min_total,
+         | CAST(MAX(${m("o_totalprice")}) AS DOUBLE) AS max_total
+         |FROM orders GROUP BY 1""".stripMargin),
+    // three damped rounds unrolled; all-integer ppm arithmetic makes
+    // the scores order-independent, so the hash grade is exact
+    q("graph_pagerank", Graph.pagerankCoPurchase(_, _),
+      """WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+        |e0 AS (SELECT DISTINCT a.pk AS src, b.pk AS dst
+        |       FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
+        |e AS (SELECT src, dst FROM e0
+        |      UNION ALL SELECT dst AS src, src AS dst FROM e0),
+        |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY 1),
+        |r0 AS (SELECT src AS id, CAST(1000000 AS BIGINT) AS pr FROM deg),
+        |r1 AS (SELECT e.dst AS id,
+        |         CAST(150000 + (SUM(r0.pr // dg.deg) * 85) // 100 AS BIGINT)
+        |          AS pr
+        |       FROM e JOIN r0 ON e.src = r0.id
+        |        JOIN deg dg ON e.src = dg.src
+        |       GROUP BY 1),
+        |r2 AS (SELECT e.dst AS id,
+        |         CAST(150000 + (SUM(r1.pr // dg.deg) * 85) // 100 AS BIGINT)
+        |          AS pr
+        |       FROM e JOIN r1 ON e.src = r1.id
+        |        JOIN deg dg ON e.src = dg.src
+        |       GROUP BY 1),
+        |r3 AS (SELECT e.dst AS id,
+        |         CAST(150000 + (SUM(r2.pr // dg.deg) * 85) // 100 AS BIGINT)
+        |          AS pr
+        |       FROM e JOIN r2 ON e.src = r2.id
+        |        JOIN deg dg ON e.src = dg.src
+        |       GROUP BY 1)
+        |SELECT id AS part_id, pr AS pr_score FROM r3""".stripMargin),
+    q("graph_triangles", Graph.triangleCounts(_, _),
+      """WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+        |e AS (SELECT DISTINCT a.pk AS s, b.pk AS t
+        |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
+        |tri AS (SELECT e1.s AS va, e1.t AS vb, e2.t AS vc
+        |        FROM e e1 JOIN e e2 ON e1.t = e2.s
+        |         JOIN e e3 ON e3.s = e1.s AND e3.t = e2.t)
+        |SELECT part_id, COUNT(*) AS tri_ct FROM (
+        | SELECT va AS part_id FROM tri
+        | UNION ALL SELECT vb FROM tri
+        | UNION ALL SELECT vc FROM tri) r
+        |GROUP BY 1""".stripMargin),
+    // id-oriented edges enumerate each triangle once; per-node counts
+    // via the 3-role union — all integers, engine-exact
+    // BFS with frontier dedup, 2 hops from a 1-in-20 source sample;
+    // exact distinct-node counts
+    q("graph_khop_reach", Graph.kHopReach(_, _),
+      """WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+        |und AS (SELECT DISTINCT a.pk AS src, b.pk AS dst
+        |        FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
+        |e AS (SELECT src, dst FROM und
+        |      UNION ALL SELECT dst, src FROM und),
+        |h1 AS (SELECT src, dst FROM e WHERE src % 20 = 0),
+        |h2 AS (SELECT h1.src, e.dst FROM h1
+        |       JOIN e ON e.src = h1.dst),
+        |reach2 AS (SELECT DISTINCT src, dst FROM
+        |             (SELECT src, dst FROM h1
+        |              UNION ALL SELECT src, dst FROM h2) u
+        |           WHERE dst <> src)
+        |SELECT h1c.src AS part_id, h1c.k1_ct, r2.k2_ct FROM
+        | (SELECT src, COUNT(*) AS k1_ct FROM h1 GROUP BY 1) h1c
+        | JOIN (SELECT src, COUNT(*) AS k2_ct FROM reach2 GROUP BY 1) r2
+        |   ON h1c.src = r2.src""".stripMargin),
+    // integer-ppm confidence/lift over the same basket self-join;
+    // total baskets inlined identically on both sides
+    q("analytics_assoc_rules", Graph.assocRules(_, _),
+      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |            FROM lineitem),
+        |pairs AS (SELECT a.pk AS pa, b.pk AS pb, COUNT(*) AS n_ab
+        |          FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
+        |          GROUP BY 1, 2 HAVING COUNT(*) >= 5),
+        |singles AS (SELECT pk, COUNT(*) AS n_one FROM li GROUP BY 1),
+        |tot AS (SELECT COUNT(DISTINCT ok) AS t FROM li),
+        |dir AS (SELECT pa AS ante, pb AS cons, n_ab FROM pairs
+        |        UNION ALL SELECT pb, pa, n_ab FROM pairs)
+        |SELECT ante, cons, n_ab,
+        | (n_ab * 1000000) // a.n_one AS conf_ppm,
+        | (n_ab * t * 1000000) // (a.n_one * c.n_one) AS lift_ppm
+        |FROM dir
+        |JOIN singles a ON a.pk = ante
+        |JOIN singles c ON c.pk = cons
+        |CROSS JOIN tot""".stripMargin),
+    // moments -> mu/sigma doubles derive from exact decimal sums, so
+    // the flag predicate evaluates identically on both engines
+    q("analytics_outliers", Analytics.valueOutliers(_, _),
+      """WITH m AS (
+        | SELECT event_type AS etype, COUNT(*) AS n,
+        |  SUM(CAST(value AS DECIMAL(12,2))) AS sx,
+        |  SUM(CAST(CAST(value AS DECIMAL(12,2))
+        |    * CAST(value AS DECIMAL(12,2)) AS DECIMAL(38,4))) AS sxx
+        | FROM events GROUP BY 1),
+        |mm AS (SELECT etype, CAST(sx AS DOUBLE) / n AS mu,
+        |        sqrt(CAST(sxx AS DOUBLE) / n
+        |          - (CAST(sx AS DOUBLE) / n) * (CAST(sx AS DOUBLE) / n))
+        |         AS sigma
+        |       FROM m)
+        |SELECT event_id, etype,
+        | CAST(CAST(value AS DECIMAL(12,2)) AS DOUBLE) AS value
+        |FROM events JOIN mm ON event_type = etype
+        |WHERE sigma > 0
+        |  AND abs(CAST(CAST(value AS DECIMAL(12,2)) AS DOUBLE) - mu)
+        |   > sigma * 3.0""".stripMargin),
+    // bounds 6dp-rounded BEFORE the clamp on both engines (raw
+    // interpolated percentiles agree only to ~1 ulp)
+    q("analytics_winsorize", Analytics.winsorizedValues(_, _),
+      """WITH b AS (
+        | SELECT event_type AS etype,
+        |  round(quantile_cont(value, 0.01), 6) AS p01,
+        |  round(quantile_cont(value, 0.99), 6) AS p99
+        | FROM events GROUP BY 1)
+        |SELECT event_id, etype,
+        | round(least(greatest(value, p01), p99), 6) AS value_w,
+        | CAST(value < p01 OR value > p99 AS INT) AS clamped
+        |FROM events JOIN b ON event_type = etype""".stripMargin),
+    // identical ANSI precedence both engines: INTERSECT binds
+    // tighter than EXCEPT
+    q("analytics_set_ops", Analytics.segmentSetOps(_, _),
+      """SELECT user_id, CAST(ts AS DATE) AS day FROM events
+        |WHERE event_type = 'view'
+        |INTERSECT
+        |SELECT user_id, CAST(ts AS DATE) FROM events
+        |WHERE event_type = 'purchase'
+        |EXCEPT
+        |SELECT user_id, CAST(ts AS DATE) FROM events
+        |WHERE event_type = 'error'""".stripMargin),
+    // same NULLIF-derived nulls both sides; NULL group key kept as
+    // its own group; count(col) skips nulls; <=> matches NULL to NULL
+    q("analytics_null_semantics", Analytics.nullSemantics(_, _),
+      """SELECT nk, COUNT(*) AS n_all, COUNT(nval) AS n_nonnull,
+        | CAST(SUM(CAST(nval AS DECIMAL(12,2))) AS DOUBLE)
+        |  AS sum_skipnull,
+        | COUNT(CASE WHEN nk IS NOT DISTINCT FROM NULL THEN 1 END)
+        |  AS nullsafe_self
+        |FROM (
+        | SELECT nullif(event_id % 7, 0) AS nk,
+        |  nullif(value, value * 0 + 13.0) AS nval
+        | FROM events) t
+        |GROUP BY nk""".stripMargin),
+    // quartile bounds 6dp-rounded both engines before bucketing
+    q("analytics_histogram_eqdepth", Analytics.orderTotalHistogramEqDepth(_, _),
+      """WITH b AS (
+        | SELECT round(quantile_cont(o_totalprice, 0.25), 6) AS q1,
+        |  round(quantile_cont(o_totalprice, 0.50), 6) AS q2,
+        |  round(quantile_cont(o_totalprice, 0.75), 6) AS q3
+        | FROM orders)
+        |SELECT CAST(CASE WHEN o_totalprice <= q1 THEN 0
+        |      WHEN o_totalprice <= q2 THEN 1
+        |      WHEN o_totalprice <= q3 THEN 2 ELSE 3 END AS INT) AS bucket,
+        | COUNT(*) AS ct,
+        | CAST(MIN(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
+        |  AS min_total,
+        | CAST(MAX(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
+        |  AS max_total
+        |FROM orders, b GROUP BY 1""".stripMargin),
+    // exact cents + integer ppm division — engine-exact shares
+    q("analytics_contribution", Analytics.gmvContribution(_, _),
+      """WITH p AS (
+        | SELECT o_orderpriority AS prio,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) * 100 AS BIGINT)
+        |   AS cents
+        | FROM orders GROUP BY 1),
+        |t AS (SELECT CAST(SUM(cents) AS BIGINT) AS total_cents FROM p)
+        |SELECT prio, cents,
+        | CAST((cents * 1000000) // total_cents AS BIGINT) AS share_ppm
+        |FROM p, t""".stripMargin),
+    // unbounded-both-ways frames over a unique total order: all three
+    // value functions deterministic
+    q("analytics_value_windows", Analytics.orderValueWindows(_, _),
+      """SELECT o_orderkey, o_orderpriority AS prio,
+        | CAST(first_value(CAST(o_totalprice AS DECIMAL(12,2))) OVER w
+        |  AS DOUBLE) AS first_total,
+        | CAST(last_value(CAST(o_totalprice AS DECIMAL(12,2))) OVER w
+        |  AS DOUBLE) AS last_total,
+        | CAST(nth_value(CAST(o_totalprice AS DECIMAL(12,2)), 2) OVER w
+        |  AS DOUBLE) AS second_total
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_orderpriority
+        |  ORDER BY o_orderdate, o_orderkey
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin),
+    q("analytics_date_arith", Analytics.dateArithmetic(_, _),
+      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS od,
+        | CAST(o_orderdate AS DATE) + 30 AS due_date,
+        | CAST(datediff('day', CAST(o_orderdate AS DATE), DATE '1998-12-31')
+        |  AS BIGINT) AS age_days,
+        | last_day(CAST(o_orderdate AS DATE)) AS month_end,
+        | CAST(day(CAST(o_orderdate AS DATE)) = 1 AS INT) AS is_month_start
+        |FROM orders""".stripMargin),
+    // the oracle aggregates the RAW events — a hash match proves the
+    // optimizer's materialized-view splice changed the plan, not the
+    // answer
+    q("dws_traffic_daily_mv", Dws.trafficDailyViaMv(_, _),
+      """SELECT CAST(ts AS DATE) AS day, event_type, COUNT(*) AS pv_ct,
+        | CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS value_sum
+        |FROM events GROUP BY 1, 2""".stripMargin),
+    // roll-up containment: the Spark side is served from the DAILY
+    // summary; the oracle aggregates raw events at month grain
+    q("dws_traffic_monthly_mv", Dws.trafficMonthlyViaMv(_, _),
+      """SELECT CAST(date_trunc('month', ts) AS DATE) AS month,
+        | event_type, COUNT(*) AS pv_ct,
+        | CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS value_sum
+        |FROM events GROUP BY 1, 2""".stripMargin),
+    q("pipeline_pseudonymize", Analytics.pseudonymize(_, _),
+      """SELECT event_id,
+        | substr(md5('graft-pepper|' || CAST(user_id AS VARCHAR)), 1, 16)
+        |  AS user_token,
+        | event_type
+        |FROM events""".stripMargin),
+    // canonical row rendering (stable casts, '|' joints) hashed to
+    // 48 bits and folded with commutative aggregates — identical at
+    // any row order on both engines; the sum is MOD 2^48 (HUGEINT /
+    // DECIMAL(38) carry it exactly; a raw BIGINT sum overflows past
+    // ~65k rows)
+    q("analytics_table_checksum", Analytics.tableChecksum(_, _),
+      """WITH h AS (
+        | SELECT CAST(('0x' || substr(md5(concat_ws('|',
+        |   o_orderkey, o_custkey, o_orderstatus,
+        |   CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR),
+        |   CAST(CAST(o_orderdate AS DATE) AS VARCHAR),
+        |   o_orderpriority)), 1, 12))::UBIGINT AS BIGINT) AS h
+        | FROM orders)
+        |SELECT COUNT(*) AS n_rows,
+        | CAST(SUM(h) % 281474976710656 AS BIGINT) AS sum_hash,
+        | bit_xor(h) AS xor_hash
+        |FROM h""".stripMargin),
+    q("pipeline_split", TextAnalysis.trainValTestSplit(_, _),
+      """SELECT doc_id, lang,
+        | CASE WHEN bucket < 80 THEN 'train'
+        |      WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split
+        |FROM (
+        | SELECT doc_id, lang,
+        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT
+        |   % 100 AS BIGINT) AS bucket
+        | FROM documents) t""".stripMargin),
     // the CMS prefilter is confirmed exactly, so the oracle is the
     // plain groupBy+HAVING ground truth at any sketch error
-    "analytics_heavy_hitters" ->
+    q("analytics_heavy_hitters", Analytics.heavyHitters(_, _),
       """SELECT user_id, COUNT(*) AS ct FROM events
         |GROUP BY 1
         |HAVING COUNT(*) >= (
         | SELECT (6 * COUNT(*)) // (5 * COUNT(DISTINCT user_id))
-        | FROM events)""".stripMargin,
+        | FROM events)""".stripMargin),
     // integer cross-multiplied hot-key test (c*n_keys > 2*total) —
     // no division anywhere, engine-exact
-    "analytics_key_skew" ->
+    q("analytics_key_skew", Analytics.keySkewProfile(_, _),
       """WITH p1 AS (SELECT l_partkey AS k, COUNT(*) AS c FROM lineitem
         |            GROUP BY 1),
         |t1 AS (SELECT COUNT(*) AS n_keys, CAST(SUM(c) AS BIGINT) AS total
@@ -1593,10 +1302,10 @@ object SparkEntry {
         |SELECT 'events.user_id', n_keys, total,
         | MAX(c), MIN(c),
         | COUNT(CASE WHEN c * n_keys > 2 * total THEN 1 END)
-        |FROM p4, t4 GROUP BY 1, 2, 3""".stripMargin,
+        |FROM p4, t4 GROUP BY 1, 2, 3""".stripMargin),
     // MERGE INTO semantics replayed: newest change per key wins,
     // full-outer against the dim, op tags disambiguate the branches
-    "dim_merge_upsert" ->
+    q("dim_merge_upsert", Temporal.mergeUpsert(_, _),
       """WITH upd AS (
         | SELECT user_id AS k, value AS new_bal FROM (
         |  SELECT user_id, value, row_number() OVER (
@@ -1609,26 +1318,10 @@ object SparkEntry {
         | CASE WHEN c_custkey IS NULL THEN 'insert'
         |      WHEN k IS NULL THEN 'keep'
         |      ELSE 'update' END AS op
-        |FROM customer FULL OUTER JOIN upd ON c_custkey = k""".stripMargin,
-    // the oracle is the FULL recompute — a hash match proves the
-    // base+delta partial merge is exactly equivalent
-    "analytics_incremental_gmv" ->
-      """SELECT CAST(o_orderdate AS DATE) AS day, COUNT(*) AS n_orders,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS gmv
-        |FROM orders GROUP BY 1""".stripMargin,
-    // delta-rule join maintenance: the oracle is the one-shot join —
-    // a hash match proves A⋈B ∪ ΔA⋈(B∪ΔB) ∪ A⋈ΔB tiles the four
-    // quadrants exactly once (no dups, nothing missed)
-    "analytics_incremental_join" ->
-      """SELECT CAST(o_orderdate AS DATE) AS day, COUNT(*) AS n_rows,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-        |   * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)
-        |   AS revenue
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1""".stripMargin,
+        |FROM customer FULL OUTER JOIN upd ON c_custkey = k""".stripMargin),
     // both snapshots rebuilt from the same deterministic splits, then
     // full-outer diffed; unchanged rows dropped
-    "dim_snapshot_diff" ->
+    q("dim_snapshot_diff", Temporal.snapshotDiff(_, _),
       """WITH a AS (
         | SELECT o_custkey AS cust_id, COUNT(*) AS a_n,
         |  SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS a_tot
@@ -1647,10 +1340,60 @@ object SparkEntry {
         |WHERE (CASE WHEN a_n IS NULL THEN 'added'
         |      WHEN b_n IS NULL THEN 'deleted'
         |      WHEN a_n <> b_n OR a_tot <> b_tot THEN 'changed'
-        |      ELSE 'unchanged' END) <> 'unchanged'""".stripMargin,
+        |      ELSE 'unchanged' END) <> 'unchanged'""".stripMargin),
+    // the oracle is the FULL recompute — a hash match proves the
+    // base+delta partial merge is exactly equivalent
+    q("analytics_incremental_gmv", Incremental.dailyGmv(_, _),
+      """SELECT CAST(o_orderdate AS DATE) AS day, COUNT(*) AS n_orders,
+        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS gmv
+        |FROM orders GROUP BY 1""".stripMargin),
+    // delta-rule join maintenance: the oracle is the one-shot join —
+    // a hash match proves A⋈B ∪ ΔA⋈(B∪ΔB) ∪ A⋈ΔB tiles the four
+    // quadrants exactly once (no dups, nothing missed)
+    q("analytics_incremental_join", Incremental.maintainedOrderDetail(_, _),
+      """SELECT CAST(o_orderdate AS DATE) AS day, COUNT(*) AS n_rows,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
+        |   * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)
+        |   AS revenue
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY 1""".stripMargin),
+    // KMV sketch replayed bit-for-bit: same 48-bit md5-prefix hashes,
+    // same bottom-k, same integer-division estimate
+    q("analytics_kmv_distinct", graft.warehouse.Sketched.kmvDistinct(_, _),
+      """WITH dh AS (
+        | SELECT DISTINCT event_type,
+        |  CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
+        |   ::UBIGINT AS BIGINT) AS h
+        | FROM events),
+        |bk AS (
+        | SELECT event_type, h, row_number() OVER (
+        |   PARTITION BY event_type ORDER BY h) AS rk
+        | FROM dh)
+        |SELECT event_type, COUNT(*) AS n_kept,
+        | CAST(CASE WHEN COUNT(*) < 64 THEN COUNT(*)
+        |      ELSE 17732923532771328 // MAX(h) END AS BIGINT)
+        |  AS est_distinct
+        |FROM bk WHERE rk <= 64 GROUP BY event_type""".stripMargin),
+    // same oracle as analytics_kmv_distinct: the native aggregate
+    // must produce the identical sketch
+    q("analytics_kmv_native", graft.warehouse.Sketched.kmvDistinctNative(_, _),
+      """WITH dh AS (
+        | SELECT DISTINCT event_type,
+        |  CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
+        |   ::UBIGINT AS BIGINT) AS h
+        | FROM events),
+        |bk AS (
+        | SELECT event_type, h, row_number() OVER (
+        |   PARTITION BY event_type ORDER BY h) AS rk
+        | FROM dh)
+        |SELECT event_type, COUNT(*) AS n_kept,
+        | CAST(CASE WHEN COUNT(*) < 64 THEN COUNT(*)
+        |      ELSE 17732923532771328 // MAX(h) END AS BIGINT)
+        |  AS est_distinct
+        |FROM bk WHERE rk <= 64 GROUP BY event_type""".stripMargin),
     // spine via generate_series; carry-forward via IGNORE NULLS
     // last_value over the same unbounded-preceding frame
-    "analytics_gap_fill" ->
+    q("analytics_gap_fill", Analytics.gapFillDaily(_, _),
       """WITH daily AS (
         | SELECT o_orderpriority AS prio, CAST(o_orderdate AS DATE) AS day,
         |  COUNT(*) AS n_orders,
@@ -1672,8 +1415,8 @@ object SparkEntry {
         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |  AS DOUBLE) AS gmv_carry
         |FROM spine s LEFT JOIN daily d ON s.prio = d.prio
-        | AND s.day = d.day""".stripMargin,
-    "analytics_unpivot" ->
+        | AND s.day = d.day""".stripMargin),
+    q("analytics_unpivot", Analytics.lineitemUnpivot(_, _),
       """SELECT l_orderkey, l_linenumber, m.measure, m.val FROM lineitem,
         |LATERAL (VALUES
         | ('quantity', CAST(CAST(l_quantity AS DECIMAL(12,2)) AS DOUBLE)),
@@ -1681,8 +1424,8 @@ object SparkEntry {
         |   CAST(CAST(l_extendedprice AS DECIMAL(12,2)) AS DOUBLE)),
         | ('discount', CAST(CAST(l_discount AS DECIMAL(12,2)) AS DOUBLE)),
         | ('tax', CAST(CAST(l_tax AS DECIMAL(12,2)) AS DOUBLE))
-        |) m(measure, val)""".stripMargin,
-    "analytics_grouping_sets" ->
+        |) m(measure, val)""".stripMargin),
+    q("analytics_grouping_sets", Analytics.revenueGroupingSets(_, _),
       """SELECT coalesce(l_returnflag, 'ALL') AS rflag,
         | coalesce(l_linestatus, 'ALL') AS lstatus,
         | CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus)
@@ -1692,10 +1435,10 @@ object SparkEntry {
         |  AS sum_price
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-        |  (l_returnflag), ())""".stripMargin,
+        |  (l_returnflag), ())""".stripMargin),
     // rank family over coarse buckets (real ties); ntile over the
     // unique total order (position-based, needs determinism)
-    "analytics_rank_suite" ->
+    q("analytics_rank_suite", Analytics.orderRankSuite(_, _),
       """SELECT o_orderkey, o_orderpriority AS prio,
         | CAST(dense_rank() OVER wt AS INT) AS drank,
         | CAST(ntile(4) OVER wu AS INT) AS quartile,
@@ -1706,45 +1449,36 @@ object SparkEntry {
         |  ORDER BY CAST(floor(o_totalprice / 10000) AS BIGINT)),
         |wu AS (PARTITION BY o_orderpriority
         |  ORDER BY CAST(floor(o_totalprice / 10000) AS BIGINT),
-        |   o_orderkey)""".stripMargin,
-    // KMV sketch replayed bit-for-bit: same 48-bit md5-prefix hashes,
-    // same bottom-k, same integer-division estimate
-    "analytics_kmv_distinct" ->
-      """WITH dh AS (
-        | SELECT DISTINCT event_type,
-        |  CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
-        |   ::UBIGINT AS BIGINT) AS h
-        | FROM events),
-        |bk AS (
-        | SELECT event_type, h, row_number() OVER (
-        |   PARTITION BY event_type ORDER BY h) AS rk
-        | FROM dh)
-        |SELECT event_type, COUNT(*) AS n_kept,
-        | CAST(CASE WHEN COUNT(*) < 64 THEN COUNT(*)
-        |      ELSE 17732923532771328 // MAX(h) END AS BIGINT)
-        |  AS est_distinct
-        |FROM bk WHERE rk <= 64 GROUP BY event_type""".stripMargin,
-    // same oracle as analytics_kmv_distinct: the native aggregate
-    // must produce the identical sketch
-    "analytics_kmv_native" ->
-      """WITH dh AS (
-        | SELECT DISTINCT event_type,
-        |  CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
-        |   ::UBIGINT AS BIGINT) AS h
-        | FROM events),
-        |bk AS (
-        | SELECT event_type, h, row_number() OVER (
-        |   PARTITION BY event_type ORDER BY h) AS rk
-        | FROM dh)
-        |SELECT event_type, COUNT(*) AS n_kept,
-        | CAST(CASE WHEN COUNT(*) < 64 THEN COUNT(*)
-        |      ELSE 17732923532771328 // MAX(h) END AS BIGINT)
-        |  AS est_distinct
-        |FROM bk WHERE rk <= 64 GROUP BY event_type""".stripMargin,
+        |   o_orderkey)""".stripMargin),
+    // the Morton interleave replayed as the same five mask-spread
+    // steps per dimension, all BIGINT shifts
+    q("layout_zorder", graft.sources.ZOrder.lineitemZKeys(_, _),
+      """WITH sp AS (
+        | SELECT l_partkey, l_suppkey,
+        |  l_partkey % 65536 AS x0, l_suppkey % 65536 AS y0
+        | FROM lineitem),
+        |s1 AS (
+        | SELECT l_partkey, l_suppkey,
+        |  (x0 | (x0 << 8)) & 16711935 AS x1,
+        |  (y0 | (y0 << 8)) & 16711935 AS y1 FROM sp),
+        |s2 AS (
+        | SELECT l_partkey, l_suppkey,
+        |  (x1 | (x1 << 4)) & 252645135 AS x2,
+        |  (y1 | (y1 << 4)) & 252645135 AS y2 FROM s1),
+        |s3 AS (
+        | SELECT l_partkey, l_suppkey,
+        |  (x2 | (x2 << 2)) & 858993459 AS x3,
+        |  (y2 | (y2 << 2)) & 858993459 AS y3 FROM s2),
+        |s4 AS (
+        | SELECT l_partkey, l_suppkey,
+        |  (x3 | (x3 << 1)) & 1431655765 AS x4,
+        |  (y3 | (y3 << 1)) & 1431655765 AS y4 FROM s3)
+        |SELECT l_partkey, l_suppkey, x4 | (y4 << 1) AS zkey
+        |FROM s4""".stripMargin),
     // three 10-bit dims spread to every 3rd position, same four
     // mask steps both engines; floor() before the bigint cast
     // (DuckDB's double cast rounds, Spark's truncates)
-    "layout_zorder3" ->
+    q("layout_zorder3", graft.sources.ZOrder.lineitemZKeys3(_, _),
       """WITH sp AS (
         | SELECT l_orderkey, l_linenumber,
         |  l_partkey % 1024 AS x0, l_orderkey % 1024 AS y0,
@@ -1768,278 +1502,8 @@ object SparkEntry {
         |  (z3 | (z3 << 2)) & 153391689 AS z4 FROM s3)
         |SELECT l_orderkey, l_linenumber,
         | x4 | (y4 << 1) | (z4 << 2) AS zkey3
-        |FROM s4""".stripMargin,
-    // the Morton interleave replayed as the same five mask-spread
-    // steps per dimension, all BIGINT shifts
-    "layout_zorder" ->
-      """WITH sp AS (
-        | SELECT l_partkey, l_suppkey,
-        |  l_partkey % 65536 AS x0, l_suppkey % 65536 AS y0
-        | FROM lineitem),
-        |s1 AS (
-        | SELECT l_partkey, l_suppkey,
-        |  (x0 | (x0 << 8)) & 16711935 AS x1,
-        |  (y0 | (y0 << 8)) & 16711935 AS y1 FROM sp),
-        |s2 AS (
-        | SELECT l_partkey, l_suppkey,
-        |  (x1 | (x1 << 4)) & 252645135 AS x2,
-        |  (y1 | (y1 << 4)) & 252645135 AS y2 FROM s1),
-        |s3 AS (
-        | SELECT l_partkey, l_suppkey,
-        |  (x2 | (x2 << 2)) & 858993459 AS x3,
-        |  (y2 | (y2 << 2)) & 858993459 AS y3 FROM s2),
-        |s4 AS (
-        | SELECT l_partkey, l_suppkey,
-        |  (x3 | (x3 << 1)) & 1431655765 AS x4,
-        |  (y3 | (y3 << 1)) & 1431655765 AS y4 FROM s3)
-        |SELECT l_partkey, l_suppkey, x4 | (y4 << 1) AS zkey
-        |FROM s4""".stripMargin,
-    // integer-ppm confidence/lift over the same basket self-join;
-    // total baskets inlined identically on both sides
-    "analytics_assoc_rules" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |            FROM lineitem),
-        |pairs AS (SELECT a.pk AS pa, b.pk AS pb, COUNT(*) AS n_ab
-        |          FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-        |          GROUP BY 1, 2 HAVING COUNT(*) >= 5),
-        |singles AS (SELECT pk, COUNT(*) AS n_one FROM li GROUP BY 1),
-        |tot AS (SELECT COUNT(DISTINCT ok) AS t FROM li),
-        |dir AS (SELECT pa AS ante, pb AS cons, n_ab FROM pairs
-        |        UNION ALL SELECT pb, pa, n_ab FROM pairs)
-        |SELECT ante, cons, n_ab,
-        | (n_ab * 1000000) // a.n_one AS conf_ppm,
-        | (n_ab * t * 1000000) // (a.n_one * c.n_one) AS lift_ppm
-        |FROM dir
-        |JOIN singles a ON a.pk = ante
-        |JOIN singles c ON c.pk = cons
-        |CROSS JOIN tot""".stripMargin,
-    // the oracle aggregates the RAW events — a hash match proves the
-    // optimizer's materialized-view splice changed the plan, not the
-    // answer
-    "dws_traffic_daily_mv" ->
-      """SELECT CAST(ts AS DATE) AS day, event_type, COUNT(*) AS pv_ct,
-        | CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS value_sum
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    // roll-up containment: the Spark side is served from the DAILY
-    // summary; the oracle aggregates raw events at month grain
-    "dws_traffic_monthly_mv" ->
-      """SELECT CAST(date_trunc('month', ts) AS DATE) AS month,
-        | event_type, COUNT(*) AS pv_ct,
-        | CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS value_sum
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    // exact cents + integer ppm division — engine-exact shares
-    "analytics_contribution" ->
-      """WITH p AS (
-        | SELECT o_orderpriority AS prio,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) * 100 AS BIGINT)
-        |   AS cents
-        | FROM orders GROUP BY 1),
-        |t AS (SELECT CAST(SUM(cents) AS BIGINT) AS total_cents FROM p)
-        |SELECT prio, cents,
-        | CAST((cents * 1000000) // total_cents AS BIGINT) AS share_ppm
-        |FROM p, t""".stripMargin,
-    // quartile bounds 6dp-rounded both engines before bucketing
-    "analytics_histogram_eqdepth" ->
-      """WITH b AS (
-        | SELECT round(quantile_cont(o_totalprice, 0.25), 6) AS q1,
-        |  round(quantile_cont(o_totalprice, 0.50), 6) AS q2,
-        |  round(quantile_cont(o_totalprice, 0.75), 6) AS q3
-        | FROM orders)
-        |SELECT CAST(CASE WHEN o_totalprice <= q1 THEN 0
-        |      WHEN o_totalprice <= q2 THEN 1
-        |      WHEN o_totalprice <= q3 THEN 2 ELSE 3 END AS INT) AS bucket,
-        | COUNT(*) AS ct,
-        | CAST(MIN(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
-        |  AS min_total,
-        | CAST(MAX(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
-        |  AS max_total
-        |FROM orders, b GROUP BY 1""".stripMargin,
-    // unbounded-both-ways frames over a unique total order: all three
-    // value functions deterministic
-    "analytics_value_windows" ->
-      """SELECT o_orderkey, o_orderpriority AS prio,
-        | CAST(first_value(CAST(o_totalprice AS DECIMAL(12,2))) OVER w
-        |  AS DOUBLE) AS first_total,
-        | CAST(last_value(CAST(o_totalprice AS DECIMAL(12,2))) OVER w
-        |  AS DOUBLE) AS last_total,
-        | CAST(nth_value(CAST(o_totalprice AS DECIMAL(12,2)), 2) OVER w
-        |  AS DOUBLE) AS second_total
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_orderpriority
-        |  ORDER BY o_orderdate, o_orderkey
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin,
-    // same NULLIF-derived nulls both sides; NULL group key kept as
-    // its own group; count(col) skips nulls; <=> matches NULL to NULL
-    "analytics_null_semantics" ->
-      """SELECT nk, COUNT(*) AS n_all, COUNT(nval) AS n_nonnull,
-        | CAST(SUM(CAST(nval AS DECIMAL(12,2))) AS DOUBLE)
-        |  AS sum_skipnull,
-        | COUNT(CASE WHEN nk IS NOT DISTINCT FROM NULL THEN 1 END)
-        |  AS nullsafe_self
-        |FROM (
-        | SELECT nullif(event_id % 7, 0) AS nk,
-        |  nullif(value, value * 0 + 13.0) AS nval
-        | FROM events) t
-        |GROUP BY nk""".stripMargin,
-    "analytics_date_arith" ->
-      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS od,
-        | CAST(o_orderdate AS DATE) + 30 AS due_date,
-        | CAST(datediff('day', CAST(o_orderdate AS DATE), DATE '1998-12-31')
-        |  AS BIGINT) AS age_days,
-        | last_day(CAST(o_orderdate AS DATE)) AS month_end,
-        | CAST(day(CAST(o_orderdate AS DATE)) = 1 AS INT) AS is_month_start
-        |FROM orders""".stripMargin,
-    // identical ANSI precedence both engines: INTERSECT binds
-    // tighter than EXCEPT
-    "analytics_set_ops" ->
-      """SELECT user_id, CAST(ts AS DATE) AS day FROM events
-        |WHERE event_type = 'view'
-        |INTERSECT
-        |SELECT user_id, CAST(ts AS DATE) FROM events
-        |WHERE event_type = 'purchase'
-        |EXCEPT
-        |SELECT user_id, CAST(ts AS DATE) FROM events
-        |WHERE event_type = 'error'""".stripMargin,
-    // bounds 6dp-rounded BEFORE the clamp on both engines (raw
-    // interpolated percentiles agree only to ~1 ulp)
-    "analytics_winsorize" ->
-      """WITH b AS (
-        | SELECT event_type AS etype,
-        |  round(quantile_cont(value, 0.01), 6) AS p01,
-        |  round(quantile_cont(value, 0.99), 6) AS p99
-        | FROM events GROUP BY 1)
-        |SELECT event_id, etype,
-        | round(least(greatest(value, p01), p99), 6) AS value_w,
-        | CAST(value < p01 OR value > p99 AS INT) AS clamped
-        |FROM events JOIN b ON event_type = etype""".stripMargin,
-    "pipeline_pseudonymize" ->
-      """SELECT event_id,
-        | substr(md5('graft-pepper|' || CAST(user_id AS VARCHAR)), 1, 16)
-        |  AS user_token,
-        | event_type
-        |FROM events""".stripMargin,
-    // moments -> mu/sigma doubles derive from exact decimal sums, so
-    // the flag predicate evaluates identically on both engines
-    "analytics_outliers" ->
-      """WITH m AS (
-        | SELECT event_type AS etype, COUNT(*) AS n,
-        |  SUM(CAST(value AS DECIMAL(12,2))) AS sx,
-        |  SUM(CAST(CAST(value AS DECIMAL(12,2))
-        |    * CAST(value AS DECIMAL(12,2)) AS DECIMAL(38,4))) AS sxx
-        | FROM events GROUP BY 1),
-        |mm AS (SELECT etype, CAST(sx AS DOUBLE) / n AS mu,
-        |        sqrt(CAST(sxx AS DOUBLE) / n
-        |          - (CAST(sx AS DOUBLE) / n) * (CAST(sx AS DOUBLE) / n))
-        |         AS sigma
-        |       FROM m)
-        |SELECT event_id, etype,
-        | CAST(CAST(value AS DECIMAL(12,2)) AS DOUBLE) AS value
-        |FROM events JOIN mm ON event_type = etype
-        |WHERE sigma > 0
-        |  AND abs(CAST(CAST(value AS DECIMAL(12,2)) AS DOUBLE) - mu)
-        |   > sigma * 3.0""".stripMargin,
-    // id-oriented edges enumerate each triangle once; per-node counts
-    // via the 3-role union — all integers, engine-exact
-    // BFS with frontier dedup, 2 hops from a 1-in-20 source sample;
-    // exact distinct-node counts
-    "graph_khop_reach" ->
-      """WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |und AS (SELECT DISTINCT a.pk AS src, b.pk AS dst
-        |        FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |e AS (SELECT src, dst FROM und
-        |      UNION ALL SELECT dst, src FROM und),
-        |h1 AS (SELECT src, dst FROM e WHERE src % 20 = 0),
-        |h2 AS (SELECT h1.src, e.dst FROM h1
-        |       JOIN e ON e.src = h1.dst),
-        |reach2 AS (SELECT DISTINCT src, dst FROM
-        |             (SELECT src, dst FROM h1
-        |              UNION ALL SELECT src, dst FROM h2) u
-        |           WHERE dst <> src)
-        |SELECT h1c.src AS part_id, h1c.k1_ct, r2.k2_ct FROM
-        | (SELECT src, COUNT(*) AS k1_ct FROM h1 GROUP BY 1) h1c
-        | JOIN (SELECT src, COUNT(*) AS k2_ct FROM reach2 GROUP BY 1) r2
-        |   ON h1c.src = r2.src""".stripMargin,
-    "graph_triangles" ->
-      """WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |e AS (SELECT DISTINCT a.pk AS s, b.pk AS t
-        |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |tri AS (SELECT e1.s AS va, e1.t AS vb, e2.t AS vc
-        |        FROM e e1 JOIN e e2 ON e1.t = e2.s
-        |         JOIN e e3 ON e3.s = e1.s AND e3.t = e2.t)
-        |SELECT part_id, COUNT(*) AS tri_ct FROM (
-        | SELECT va AS part_id FROM tri
-        | UNION ALL SELECT vb FROM tri
-        | UNION ALL SELECT vc FROM tri) r
-        |GROUP BY 1""".stripMargin,
-    // canonical row rendering (stable casts, '|' joints) hashed to
-    // 48 bits and folded with commutative aggregates — identical at
-    // any row order on both engines; the sum is MOD 2^48 (HUGEINT /
-    // DECIMAL(38) carry it exactly; a raw BIGINT sum overflows past
-    // ~65k rows)
-    "analytics_table_checksum" ->
-      """WITH h AS (
-        | SELECT CAST(('0x' || substr(md5(concat_ws('|',
-        |   o_orderkey, o_custkey, o_orderstatus,
-        |   CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR),
-        |   CAST(CAST(o_orderdate AS DATE) AS VARCHAR),
-        |   o_orderpriority)), 1, 12))::UBIGINT AS BIGINT) AS h
-        | FROM orders)
-        |SELECT COUNT(*) AS n_rows,
-        | CAST(SUM(h) % 281474976710656 AS BIGINT) AS sum_hash,
-        | bit_xor(h) AS xor_hash
-        |FROM h""".stripMargin,
-    "pipeline_split" ->
-      """SELECT doc_id, lang,
-        | CASE WHEN bucket < 80 THEN 'train'
-        |      WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split
-        |FROM (
-        | SELECT doc_id, lang,
-        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT
-        |   % 100 AS BIGINT) AS bucket
-        | FROM documents) t""".stripMargin,
-    // three damped rounds unrolled; all-integer ppm arithmetic makes
-    // the scores order-independent, so the hash grade is exact
-    "graph_pagerank" ->
-      """WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |e0 AS (SELECT DISTINCT a.pk AS src, b.pk AS dst
-        |       FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |e AS (SELECT src, dst FROM e0
-        |      UNION ALL SELECT dst AS src, src AS dst FROM e0),
-        |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY 1),
-        |r0 AS (SELECT src AS id, CAST(1000000 AS BIGINT) AS pr FROM deg),
-        |r1 AS (SELECT e.dst AS id,
-        |         CAST(150000 + (SUM(r0.pr // dg.deg) * 85) // 100 AS BIGINT)
-        |          AS pr
-        |       FROM e JOIN r0 ON e.src = r0.id
-        |        JOIN deg dg ON e.src = dg.src
-        |       GROUP BY 1),
-        |r2 AS (SELECT e.dst AS id,
-        |         CAST(150000 + (SUM(r1.pr // dg.deg) * 85) // 100 AS BIGINT)
-        |          AS pr
-        |       FROM e JOIN r1 ON e.src = r1.id
-        |        JOIN deg dg ON e.src = dg.src
-        |       GROUP BY 1),
-        |r3 AS (SELECT e.dst AS id,
-        |         CAST(150000 + (SUM(r2.pr // dg.deg) * 85) // 100 AS BIGINT)
-        |          AS pr
-        |       FROM e JOIN r2 ON e.src = r2.id
-        |        JOIN deg dg ON e.src = dg.src
-        |       GROUP BY 1)
-        |SELECT id AS part_id, pr AS pr_score FROM r3""".stripMargin,
-    "analytics_histogram" ->
-      s"""SELECT CAST(floor(o_totalprice / 30000.0) AS BIGINT) AS bucket,
-         | COUNT(*) AS ct,
-         | CAST(MIN(${m("o_totalprice")}) AS DOUBLE) AS min_total,
-         | CAST(MAX(${m("o_totalprice")}) AS DOUBLE) AS max_total
-         |FROM orders GROUP BY 1""".stripMargin,
-    "analytics_anti_dormant" ->
-      """SELECT p_partkey AS part_id, p_brand AS brand FROM part
-        |WHERE NOT EXISTS (
-        | SELECT 1 FROM lineitem
-        | WHERE l_partkey = p_partkey
-        |  AND l_shipdate >= TIMESTAMP '1998-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-02-01')""".stripMargin,
-    "analytics_funnel" ->
+        |FROM s4""".stripMargin),
+    q("analytics_funnel", Analytics.funnel(_, _),
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
         |v AS (SELECT user_id, MIN(us) AS t1 FROM e
         |      WHERE event_type = 'view' GROUP BY 1),
@@ -2053,8 +1517,8 @@ object SparkEntry {
         |       AND e3.us <= c.t2 + 86400000000 GROUP BY 1)
         |SELECT (SELECT COUNT(*) FROM v) AS viewed,
         |       (SELECT COUNT(*) FROM c) AS clicked,
-        |       (SELECT COUNT(*) FROM p) AS purchased""".stripMargin,
-    "analytics_rfm" ->
+        |       (SELECT COUNT(*) FROM p) AS purchased""".stripMargin),
+    q("analytics_rfm", Analytics.rfm(_, _),
       s"""WITH base AS (
          | SELECT o_custkey AS customer_id,
          |  MAX(CAST(o_orderdate AS DATE)) AS last_order,
@@ -2068,44 +1532,328 @@ object SparkEntry {
          |  * 4 // COUNT(*) OVER () + 1 AS f_bucket,
          | (ROW_NUMBER() OVER (ORDER BY monetary, customer_id) - 1)
          |  * 4 // COUNT(*) OVER () + 1 AS m_bucket
-         |FROM base""".stripMargin,
-    "analytics_rollup" ->
-      s"""SELECT coalesce(r_name, 'ALL') AS region_name,
-         | coalesce(n_name, 'ALL') AS nation_name,
-         | CAST(SUM(${m("o_totalprice")}) AS DOUBLE) AS amount,
-         | COUNT(*) AS order_ct
-         |FROM orders JOIN customer ON o_custkey = c_custkey
-         | JOIN nation ON c_nationkey = n_nationkey
-         | JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY ROLLUP(r_name, n_name)""".stripMargin,
-    // hopping windows: every event lands in size/slide = 4 windows;
-    // window starts are pure epoch-micros arithmetic on both sides
-    "analytics_sliding_window" ->
-      """WITH e AS (SELECT epoch_us(ts) AS us, event_type, value
+         |FROM base""".stripMargin),
+    q("analytics_retention", Analytics.retentionCohorts(_, _),
+      """WITH e AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
         |           FROM events),
-        |w AS (SELECT (us // 900000000) * 900000000 - k * 900000000 AS ws_us,
-        |        event_type, value
-        |      FROM e CROSS JOIN range(0, 4) r(k))
-        |SELECT ws_us, ws_us + 3600000000 AS we_us, event_type,
-        | COUNT(*) AS pv,
-        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-        |FROM w GROUP BY 1, 2, 3""".stripMargin,
-    // full 2^n subtotal lattice + grouping bitmask; DECIMAL(18,6)
-    // sums are exact so the hash is order-independent
-    "analytics_cube" ->
-      """SELECT coalesce(CAST(CAST(ts AS DATE) AS VARCHAR), 'ALL') AS dt,
-        | coalesce(event_type, 'ALL') AS event_type,
-        | CAST(GROUPING(CAST(ts AS DATE)) * 2 + GROUPING(event_type)
-        |   AS BIGINT) AS gid,
-        | COUNT(*) AS ct,
-        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-        |FROM events
-        |GROUP BY CUBE(CAST(ts AS DATE), event_type)""".stripMargin,
-    "dedup_exact" ->
+        |f AS (SELECT user_id, MIN(d) AS cohort_date FROM e GROUP BY 1)
+        |SELECT cohort_date,
+        | CAST(date_diff('day', cohort_date, d) AS BIGINT) AS day_n,
+        | COUNT(DISTINCT e.user_id) AS users
+        |FROM e JOIN f USING (user_id) GROUP BY 1, 2""".stripMargin),
+    q("analytics_path", Analytics.pathTransitions(_, _),
+      """SELECT src_event, dst_event, COUNT(*) AS transitions FROM (
+        | SELECT event_type AS src_event,
+        |  lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+        |   AS dst_event
+        | FROM events) t
+        |WHERE dst_event IS NOT NULL GROUP BY 1, 2""".stripMargin),
+    // the salted join must be answer-identical to the plain join —
+    // the oracle IS the plain join
+    q("analytics_skew_salted", Analytics.saltedNationStats(_, _),
+      """SELECT n_name AS nation_name, COUNT(*) AS ev_ct,
+        | COUNT(DISTINCT user_id) AS uv_ct,
+        | CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS value_sum
+        |FROM events JOIN customer ON user_id = c_custkey
+        | JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY 1""".stripMargin),
+    // DuckDB's native ASOF JOIN is the oracle for our union+window
+    // as-of formulation — two entirely different algorithms, same rows
+    q("temporal_asof_join", Temporal.lastViewBeforePurchase(_, _),
+      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
+        |    MAX(value) AS last_view_value
+        |   FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+        |p AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
+        |      WHERE event_type = 'purchase')
+        |SELECT p.event_id, p.user_id, p.us, v.last_view_value
+        |FROM p ASOF LEFT JOIN v
+        |  ON p.user_id = v.user_id AND p.us >= v.us""".stripMargin),
+    // the custom Catalyst operator (AsOfJoinExec) against the same
+    // independent DuckDB ASOF JOIN implementation
+    q("temporal_asof_native", Temporal.lastViewBeforePurchaseNative(_, _),
+      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
+        |    MAX(value) AS last_view_value
+        |   FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+        |p AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
+        |      WHERE event_type = 'purchase')
+        |SELECT p.event_id, p.user_id, p.us, v.last_view_value
+        |FROM p ASOF LEFT JOIN v
+        |  ON p.user_id = v.user_id AND p.us >= v.us""".stripMargin),
+    // the raw-SQL TVF surface (graft_asof_join) against the same
+    // independent DuckDB ASOF JOIN implementation
+    q("temporal_asof_sql", Temporal.lastViewBeforePurchaseSql(_, _),
+      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
+        |    MAX(value) AS last_view_value
+        |   FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+        |p AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
+        |      WHERE event_type = 'purchase')
+        |SELECT p.event_id, p.user_id, p.us, v.last_view_value
+        |FROM p ASOF LEFT JOIN v
+        |  ON p.user_id = v.user_id AND p.us >= v.us""".stripMargin),
+    // broadcast as-of (per-key binary search, fact side unshuffled)
+    // against the same independent DuckDB ASOF JOIN implementation
+    q("temporal_asof_broadcast", Temporal.lastViewBeforePurchaseBroadcast(_, _),
+      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
+        |    MAX(value) AS last_view_value
+        |   FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+        |p AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
+        |      WHERE event_type = 'purchase')
+        |SELECT p.event_id, p.user_id, p.us, v.last_view_value
+        |FROM p ASOF LEFT JOIN v
+        |  ON p.user_id = v.user_id AND p.us >= v.us""".stripMargin),
+    // SCD2 validity intervals from the change feed: one lead window
+    q("dim_scd2_build", Temporal.userValueScd2(_, _),
+      """SELECT user_id, us AS valid_from_us,
+        | lead(us) OVER (PARTITION BY user_id ORDER BY us) AS valid_to_us,
+        | last_view_value
+        |FROM (SELECT user_id, epoch_us(ts) AS us,
+        |    MAX(value) AS last_view_value
+        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2) v""".stripMargin),
+    q("temporal_interval_join", Temporal.clicksBeforePurchase(_, _),
+      """SELECT p.event_id, p.user_id, COUNT(c.us) AS clicks_15m
+        |FROM (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
+        |      WHERE event_type = 'purchase') p
+        |LEFT JOIN (SELECT user_id, epoch_us(ts) AS us FROM events
+        |           WHERE event_type = 'click') c
+        |  ON c.user_id = p.user_id
+        |  AND c.us > p.us - 900000000 AND c.us <= p.us
+        |GROUP BY 1, 2""".stripMargin),
+    // the custom IntervalJoinExec against the identical range-join
+    // oracle the composed formulation is graded on
+    q("temporal_interval_native", Temporal.clicksBeforePurchaseNative(_, _),
+      """SELECT p.event_id, p.user_id, COUNT(c.us) AS clicks_15m
+        |FROM (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
+        |      WHERE event_type = 'purchase') p
+        |LEFT JOIN (SELECT user_id, epoch_us(ts) AS us FROM events
+        |           WHERE event_type = 'click') c
+        |  ON c.user_id = p.user_id
+        |  AND c.us > p.us - 900000000 AND c.us <= p.us
+        |GROUP BY 1, 2""".stripMargin),
+    // the raw-SQL TVF surface (graft_interval_join), same oracle
+    q("temporal_interval_sql", Temporal.clicksBeforePurchaseSql(_, _),
+      """SELECT p.event_id, p.user_id, COUNT(c.us) AS clicks_15m
+        |FROM (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
+        |      WHERE event_type = 'purchase') p
+        |LEFT JOIN (SELECT user_id, epoch_us(ts) AS us FROM events
+        |           WHERE event_type = 'click') c
+        |  ON c.user_id = p.user_id
+        |  AND c.us > p.us - 900000000 AND c.us <= p.us
+        |GROUP BY 1, 2""".stripMargin),
+    q("text_segment", TextAnalysis.segmentCounts(_, _),
+      """WITH seg AS (
+        | SELECT list_concat(
+        |   list_filter(toks, t -> NOT regexp_matches(t, '^[一-鿿]$')),
+        |   [toks[i] || toks[i+1] for i in range(1, greatest(len(toks), 1))
+        |    if regexp_matches(toks[i], '^[一-鿿]$')
+        |       AND regexp_matches(toks[i+1], '^[一-鿿]$')]) AS kws
+        | FROM (
+        |  SELECT list_filter(string_split_regex(
+        |    regexp_replace(lower(text), '([一-鿿])', ' \1 ', 'g'), '\s+'),
+        |    x -> x <> '') AS toks
+        |  FROM documents) a)
+        |SELECT kw, COUNT(*) AS kw_ct
+        |FROM (SELECT unnest(kws) AS kw FROM seg) t GROUP BY 1""".stripMargin),
+    // the dictionary (FMM longest-match) segmenter: the oracle replays
+    // greedy forward-maximum-matching over the MIRRORED wordlist
+    // (DictSegmenter.words) with a recursive CTE — independent
+    // implementation of the same published algorithm
+    q("text_segment_dict", TextAnalysis.segmentCountsDict(_, _),
+      """WITH RECURSIVE
+        |dict(w) AS (VALUES ('苹果'),('手机'),('手机壳'),('小米'),('电视'),
+        |  ('电视机'),('华为'),('平板'),('电脑'),('平板电脑'),('运动'),
+        |  ('运动鞋'),('连衣裙'),('洗衣'),('洗衣机'),('蓝牙'),('耳机'),
+        |  ('无线'),('充电'),('充电器')),
+        |ph(pid, phrase) AS (VALUES (0,'苹果手机壳'),(1,'小米电视机'),
+        |  (2,'华为平板电脑'),(3,'运动鞋男'),(4,'连衣裙女夏'),
+        |  (5,'洗衣机全自动'),(6,'蓝牙耳机无线'),(7,'充电器快充')),
+        |seg(pid, phrase, pos, tok) AS (
+        |  SELECT pid, phrase, 1, CAST(NULL AS VARCHAR) FROM ph
+        |  UNION ALL
+        |  SELECT s.pid, s.phrase, s.pos + length(
+        |      COALESCE((SELECT w FROM dict
+        |                WHERE substr(s.phrase, s.pos, length(w)) = w
+        |                ORDER BY length(w) DESC LIMIT 1),
+        |               substr(s.phrase, s.pos, 1))),
+        |    COALESCE((SELECT w FROM dict
+        |              WHERE substr(s.phrase, s.pos, length(w)) = w
+        |              ORDER BY length(w) DESC LIMIT 1),
+        |             substr(s.phrase, s.pos, 1))
+        |  FROM seg s WHERE s.pos <= length(s.phrase)),
+        |toks AS (SELECT pid, tok FROM seg WHERE tok IS NOT NULL),
+        |docs AS (SELECT doc_id % 8 AS pid FROM documents)
+        |SELECT t.tok AS kw, COUNT(*) AS kw_ct
+        |FROM docs d JOIN toks t ON t.pid = d.pid
+        |GROUP BY 1""".stripMargin),
+    // smooth-idf TF-IDF; identical double formula both sides, ranks
+    // (not scores) hashed, ties broken by term
+    q("text_tfidf_topk", TextAnalysis.tfidfTopTerms(_, _),
+      """WITH tf AS (
+        | SELECT doc_id, t AS term, COUNT(*) AS tf FROM (
+        |  SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '),
+        |    x -> x <> '')) AS t FROM documents) u
+        | GROUP BY 1, 2),
+        |n AS (SELECT COUNT(*) AS n FROM documents),
+        |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
+        |sc AS (SELECT tf.doc_id, tf.term,
+        |   tf.tf * (ln((n.n + 1.0) / (df.df + 1.0)) + 1.0) AS score
+        |  FROM tf JOIN df USING (term) CROSS JOIN n)
+        |SELECT doc_id, term, rk FROM (
+        | SELECT doc_id, term, CAST(row_number() OVER (
+        |   PARTITION BY doc_id ORDER BY score DESC, term) AS BIGINT) AS rk
+        | FROM sc) t
+        |WHERE rk <= 3""".stripMargin),
+    q("q6_forecast_revenue", Publisher.forecastRevenue(_, _),
+      s"""SELECT CAST(SUM(${m("l_extendedprice")} * ${m("l_discount")})
+         |  AS DOUBLE) AS revenue
+         |FROM lineitem
+         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+         | AND l_shipdate < TIMESTAMP '1997-01-01'
+         | AND l_discount BETWEEN 0.02 AND 0.04 AND l_quantity < 24""".stripMargin),
+    q("q4_priority_refund", Publisher.priorityRefundExists(_, _),
+      """SELECT o_orderpriority, COUNT(*) AS order_ct FROM orders
+        |WHERE EXISTS (SELECT 1 FROM lineitem
+        |  WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+        |GROUP BY 1""".stripMargin),
+    q("sim_ann_ivf", Similarity.annIvf(_, _),
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings),
+        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
+        |      FROM e),
+        |tot AS (SELECT greatest(count(*)//16, 1) AS stride FROM e),
+        |cents AS (SELECT (vec_id // stride) AS cidx, v AS cv, nrm AS cn
+        |          FROM n, tot
+        |          WHERE vec_id % stride = 0 AND vec_id // stride < 16),
+        |cs AS (SELECT n.vec_id, cidx,
+        |  list_sum([n.v[i+1]*cv[i+1] for i in range(0,len(cv))])
+        |   / (n.nrm * cn) AS ccos
+        | FROM n CROSS JOIN cents),
+        |assign AS (SELECT vec_id, cidx AS cell FROM (
+        |  SELECT vec_id, cidx, row_number() OVER
+        |   (PARTITION BY vec_id ORDER BY ccos DESC, cidx) AS r FROM cs) t
+        |  WHERE r = 1),
+        |probes AS (SELECT vec_id AS query_id, cidx AS cell FROM (
+        |  SELECT vec_id, cidx, row_number() OVER
+        |   (PARTITION BY vec_id ORDER BY ccos DESC, cidx) AS r
+        |  FROM cs WHERE vec_id < 20) t
+        |  WHERE r <= 4),
+        |corpus AS (SELECT a.vec_id, a.cell, n.v, n.nrm
+        |           FROM assign a JOIN n USING (vec_id)),
+        |qv AS (SELECT p.query_id, p.cell, n.v AS qv, n.nrm AS qn
+        |       FROM probes p JOIN n ON n.vec_id = p.query_id),
+        |s AS (SELECT query_id, c.vec_id AS neighbor_id,
+        |  list_sum([qv[i+1]*c.v[i+1] for i in range(0,len(qv))])
+        |   / (qn * c.nrm) AS cos
+        | FROM qv JOIN corpus c USING (cell) WHERE c.vec_id <> query_id)
+        |SELECT query_id, rk, neighbor_id FROM (
+        | SELECT query_id, neighbor_id, row_number() OVER
+        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
+        | FROM s) t
+        |WHERE rk <= 5""".stripMargin),
+    q("text_winnow", (s, d) =>
+      TextAnalysis.winnow(s, d).select("doc_id", "n_fp"),
+      """SELECT doc_id, CAST(len(list_distinct([
+        |  list_min(h[i:i+3]) for i in range(1, greatest(len(h) - 3, 1) + 1)
+        | ])) AS INT) AS n_fp
+        |FROM (SELECT doc_id,
+        |  [list_reduce([CAST(ascii(substr(g, j, 1)) AS BIGINT)
+        |     for j in range(1, 9)], (a, b) -> a * 31 + b)
+        |   for g in [substr(lower(text), i, 8)
+        |     for i in range(1, greatest(length(lower(text)) - 6, 2))]] AS h
+        | FROM documents) t""".stripMargin),
+    // MOSS winnow-join: pairs sharing >= 10 window-minima
+    // fingerprints at real MOSS parameters (k=25, w=25 — any shared
+    // run >= 49 chars is caught). 25-char grams use the mod-prime
+    // polynomial fold (see Text.polyHashMod) so the 64-bit fold
+    // never overflows in either engine.
+    q("dedup_winnow_pairs", TextAnalysis.winnowPairs(_, _),
+      """WITH fp AS (
+        | SELECT doc_id, list_distinct([
+        |   list_min(h[i:i+24]) for i in range(1, greatest(len(h) - 24, 1) + 1)
+        |  ]) AS fps
+        | FROM (SELECT doc_id,
+        |   [list_reduce([CAST(ascii(substr(g, j, 1)) AS BIGINT)
+        |      for j in range(1, 26)], (a, b) -> (a * 31 + b) % 9007199254740881)
+        |    for g in [substr(lower(text), i, 25)
+        |      for i in range(1, greatest(length(lower(text)) - 23, 2))]] AS h
+        |  FROM documents) t),
+        |ix AS (SELECT doc_id, unnest(fps) AS fp FROM fp)
+        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  count(*) AS shared_fp
+        |FROM ix a JOIN ix b ON a.fp = b.fp AND a.doc_id < b.doc_id
+        |GROUP BY 1, 2 HAVING count(*) >= 10""".stripMargin),
+    // suffix-array-style duplicated spans: maximal ranges whose
+    // 20-grams occur >= 2 times corpus-wide; spans merge while the
+    // gap between matched positions is <= 20 (overlap or touch)
+    q("dedup_repeated_spans", TextAnalysis.repeatedSpans(_, _),
+      """WITH g AS (
+        | SELECT doc_id,
+        |   CAST(unnest(range(0, greatest(len(text) - 19, 0))) AS BIGINT)
+        |     AS pos, text
+        | FROM documents),
+        |p AS (SELECT doc_id, pos,
+        |        substr(text, CAST(pos AS INT) + 1, 20) AS gram FROM g),
+        |h AS (SELECT gram FROM p GROUP BY gram HAVING count(*) >= 2),
+        |m AS (SELECT doc_id, pos,
+        |  CASE WHEN pos - lag(pos) OVER
+        |    (PARTITION BY doc_id ORDER BY pos) > 20
+        |   THEN 1 ELSE 0 END AS brk
+        | FROM p JOIN h USING (gram)),
+        |i AS (SELECT doc_id, pos, SUM(brk) OVER
+        |   (PARTITION BY doc_id ORDER BY pos
+        |    ROWS UNBOUNDED PRECEDING) AS isl FROM m)
+        |SELECT doc_id, MIN(pos) AS span_start,
+        |  MAX(pos) - MIN(pos) + 20 AS span_len
+        |FROM i GROUP BY doc_id, isl""".stripMargin),
+    // radius query: exact cosine >= 0.30 against the 20-query set;
+    // identical summation order on both engines, so the float
+    // boundary agrees bit-for-bit (nearest cos sits 1.1e-4 away)
+    q("sim_range_search", Similarity.rangeSearch(_, _),
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings),
+        |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
+        |      FROM e),
+        |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n
+        |      WHERE vec_id < 20)
+        |SELECT query_id, e2.vec_id AS neighbor_id
+        |FROM q, n e2 WHERE e2.vec_id <> query_id
+        |  AND list_sum([qv[i + 1] * e2.v[i + 1]
+        |        for i in range(0, len(qv))]) / (qn * e2.nrm) >= 0.30""".stripMargin),
+    q("text_corpus_stats", TextAnalysis.corpusStats(_, _),
+      """SELECT lang, COUNT(*) AS doc_ct,
+        | CAST(SUM(CAST(length(text) AS BIGINT)) AS BIGINT) AS chars_sum,
+        | CAST(SUM(CAST(len(list_filter(string_split(lower(text), ' '),
+        |   x -> x <> '')) AS BIGINT)) AS BIGINT) AS tokens_sum,
+        | MIN(length(text)) AS min_chars, MAX(length(text)) AS max_chars
+        |FROM documents GROUP BY 1""".stripMargin),
+    q("pipeline_clean_corpus", TextAnalysis.cleanCorpus(_, _),
+      """WITH toks AS (SELECT doc_id, lang, source, text,
+        |  list_filter(string_split(lower(text), ' '), x -> x <> '') AS tk
+        | FROM documents),
+        |keep AS (SELECT MIN(doc_id) AS doc_id FROM documents
+        | GROUP BY md5(array_to_string(list_sort(list_distinct(
+        |   list_filter(string_split(lower(text), ' '), x -> x <> ''))), ' '))),
+        |scored AS (SELECT t.doc_id, t.lang, t.source,
+        |  CAST(len(tk) AS BIGINT) AS n_tokens,
+        |  CAST(len(list_filter(tk, x -> list_contains(
+        |    ['the','a','of','and','to','is','in','that','it','for'], x)))
+        |   AS DOUBLE) / NULLIF(CAST(len(tk) AS DOUBLE), 0) * 0.3
+        |  + CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g'))
+        |   AS DOUBLE) / NULLIF(CAST(length(text) AS DOUBLE), 0) * 0.4
+        |  + least(CAST(len(tk) AS DOUBLE) / 100.0, 1.0) * 0.3
+        |   AS quality_score
+        | FROM toks t JOIN keep k ON t.doc_id = k.doc_id)
+        |SELECT doc_id, lang, source, n_tokens, quality_score FROM scored
+        |WHERE n_tokens >= 10 AND n_tokens <= 100000
+        | AND quality_score >= 0.5""".stripMargin),
+    // §2.2 LLM pipeline
+    q("dedup_exact", Dedup.exact(_, _),
       """SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_id,
         | COUNT(*) AS dup_ct
-        |FROM documents GROUP BY 1""".stripMargin,
-    "dedup_ngram_jaccard" ->
+        |FROM documents GROUP BY 1""".stripMargin),
+    // LSH banding is an optimization that must not lose pairs at this
+    // threshold: the oracle is the EXACT shingle-set Jaccard — recall
+    // below 1.0 shows up as a hash mismatch, by design.
+    q("dedup_minhash_lsh", Dedup.minhashLsh(_, _),
       """WITH sh AS (
         | SELECT DISTINCT doc_id, s FROM (
         |  SELECT doc_id, unnest([substr(lower(text), i, 12)
@@ -2118,8 +1866,76 @@ object SparkEntry {
         |SELECT id_a, id_b,
         | CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
         |FROM i JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5""".stripMargin,
-    "dedup_clusters" ->
+        |WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5""".stripMargin),
+    // token hash = first 8 md5 bytes big-endian (u64), reproduced here
+    // via UBIGINT bit ops; the signed wrap at the end matches Spark's
+    // LongType fingerprint
+    q("dedup_simhash", Dedup.simhash(_, _),
+      """SELECT doc_id,
+        | CAST(fpu - CASE WHEN fpu >= 9223372036854775808::HUGEINT
+        |      THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END
+        |   AS BIGINT) AS simhash
+        |FROM (
+        | SELECT doc_id, CAST(coalesce(list_sum([
+        |   CASE WHEN 2*len(list_filter(hs, h -> ((h >> b) & 1) = 1)) > len(hs)
+        |        THEN (1::UBIGINT << b) ELSE 0::UBIGINT END
+        |   for b in range(0, 64)]), 0) AS HUGEINT) AS fpu
+        | FROM (
+        |  SELECT doc_id, [CAST('0x' || substr(md5(t), 1, 16) AS UBIGINT)
+        |    for t in list_filter(string_split(lower(text), ' '), x -> x <> '')]
+        |    AS hs
+        |  FROM documents) a) b""".stripMargin),
+    q("dedup_ngram_jaccard", Dedup.ngramJaccard(_, _),
+      """WITH sh AS (
+        | SELECT DISTINCT doc_id, s FROM (
+        |  SELECT doc_id, unnest([substr(lower(text), i, 12)
+        |   for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
+        |  FROM documents) t),
+        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+        |i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
+        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+        |      GROUP BY 1, 2)
+        |SELECT id_a, id_b,
+        | CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
+        |FROM i JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
+        |WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5""".stripMargin),
+    q("dedup_embedding", (s, d) =>
+      Dedup.embeddingNearDupExact(s, d).select("id_a", "id_b"),
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings),
+        |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
+        |      FROM e)
+        |SELECT id_a, id_b FROM (
+        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  list_sum([a.v[i + 1] * b.v[i + 1] for i in range(0, len(a.v))])
+        |   / (a.nrm * b.nrm) AS cos
+        | FROM n a JOIN n b ON a.vec_id < b.vec_id) t
+        |WHERE cos >= 0.4""".stripMargin),
+    // the LSH scale path graded directly: the oracle rebuilds the
+    // 8-bit hyperplane buckets, so a bucketing bug OR a lost pair
+    // fails the hash check
+    q("dedup_embedding_lsh", (s, d) =>
+      Dedup.embeddingNearDupLsh(s, d).select("id_a", "id_b"),
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings),
+        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
+        |      FROM e),
+        |bkt AS (SELECT vec_id, v, nrm,
+        |  list_sum([CASE WHEN
+        |    list_sum([v[i+1] *
+        |      ((((j*64+i)*2654435761) & 4294967295) / 4294967296.0 - 0.5)
+        |      for i in range(0,64)]) > 0
+        |    THEN (1::BIGINT << (7-j)) ELSE 0::BIGINT END
+        |    for j in range(0,8)]) AS bucket
+        |  FROM n)
+        |SELECT id_a, id_b FROM (
+        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  list_sum([a.v[i+1] * b.v[i+1] for i in range(0, len(a.v))])
+        |   / (a.nrm * b.nrm) AS cos
+        | FROM bkt a JOIN bkt b
+        |   ON a.bucket = b.bucket AND a.vec_id < b.vec_id) t
+        |WHERE cos >= 0.4""".stripMargin),
+    q("dedup_clusters", (s, d) => Dedup.dedupClusters(Dedup.ngramJaccard(s, d)),
       """WITH RECURSIVE
         |sh AS (
         | SELECT DISTINCT doc_id, s FROM (
@@ -2141,11 +1957,15 @@ object SparkEntry {
         | UNION
         | SELECT e.src, r.lbl FROM edges e, reach r WHERE e.dst = r.id)
         |SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM reach
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
+    // the scale path: transitive closure over LSH candidates — the
+    // pair input is O(docs) bucket-joined, not the exact co-occurrence
+    // scan; same oracle because banding loses no >=0.5 pair here
     // identical oracle on purpose: the LSH-candidate closure must
     // reach the same clusters as the exact-pair closure (banding
     // recall is part of the grade)
-    "dedup_clusters_lsh" ->
+    q("dedup_clusters_lsh", (s, d) =>
+      Dedup.dedupClusters(Dedup.minhashLsh(s, d)),
       """WITH RECURSIVE
         |sh AS (
         | SELECT DISTINCT doc_id, s FROM (
@@ -2167,10 +1987,10 @@ object SparkEntry {
         | UNION
         | SELECT e.src, r.lbl FROM edges e, reach r WHERE e.dst = r.id)
         |SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM reach
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // savings report: the clusters_lsh closure + a doc-grain keep
     // flag + per-source token rollup
-    "dedup_savings" ->
+    q("dedup_savings", Dedup.dedupSavings(_, _),
       """WITH RECURSIVE
         |sh AS (
         | SELECT DISTINCT doc_id, s FROM (
@@ -2205,915 +2025,10 @@ object SparkEntry {
         |  CAST(SUM(kept * toks) AS BIGINT) AS tok_kept,
         |  CAST((SUM(toks) - SUM(kept * toks)) * 1000000
         |    // GREATEST(SUM(toks), 1) AS BIGINT) AS savings_ppm
-        |FROM dd GROUP BY 1""".stripMargin,
-    "dedup_embedding" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-        |      FROM e)
-        |SELECT id_a, id_b FROM (
-        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  list_sum([a.v[i + 1] * b.v[i + 1] for i in range(0, len(a.v))])
-        |   / (a.nrm * b.nrm) AS cos
-        | FROM n a JOIN n b ON a.vec_id < b.vec_id) t
-        |WHERE cos >= 0.4""".stripMargin,
-    // the LSH scale path graded directly: the oracle rebuilds the
-    // 8-bit hyperplane buckets, so a bucketing bug OR a lost pair
-    // fails the hash check
-    "dedup_embedding_lsh" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
-        |      FROM e),
-        |bkt AS (SELECT vec_id, v, nrm,
-        |  list_sum([CASE WHEN
-        |    list_sum([v[i+1] *
-        |      ((((j*64+i)*2654435761) & 4294967295) / 4294967296.0 - 0.5)
-        |      for i in range(0,64)]) > 0
-        |    THEN (1::BIGINT << (7-j)) ELSE 0::BIGINT END
-        |    for j in range(0,8)]) AS bucket
-        |  FROM n)
-        |SELECT id_a, id_b FROM (
-        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  list_sum([a.v[i+1] * b.v[i+1] for i in range(0, len(a.v))])
-        |   / (a.nrm * b.nrm) AS cos
-        | FROM bkt a JOIN bkt b
-        |   ON a.bucket = b.bucket AND a.vec_id < b.vec_id) t
-        |WHERE cos >= 0.4""".stripMargin,
-    "dwd_trade_refund_pay_suc" ->
-      s"""SELECT l_orderkey AS order_id,
-         | CAST(l_linenumber AS INT) AS line_id,
-         | o_custkey AS user_id, l_partkey AS sku_id,
-         | n_name AS nation_name,
-         | CAST(${m("l_extendedprice")} * (1 - ${m("l_discount")})
-         |   * (1 + ${m("l_tax")}) AS DOUBLE) AS refund_pay_amount
-         |FROM lineitem
-         |JOIN orders ON l_orderkey = o_orderkey AND o_orderstatus = 'F'
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |WHERE l_returnflag = 'R' AND l_linestatus = 'F'""".stripMargin,
-    "dwd_trade_cart_add" ->
-      """SELECT event_id, user_id,
-        | CAST(json_extract_string(props, '$.k') AS BIGINT) AS sku_id,
-        | CAST(ts AS DATE) AS cur_date, value AS add_num
-        |FROM events WHERE event_type = 'click'""".stripMargin,
-    "analytics_retention" ->
-      """WITH e AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
-        |           FROM events),
-        |f AS (SELECT user_id, MIN(d) AS cohort_date FROM e GROUP BY 1)
-        |SELECT cohort_date,
-        | CAST(date_diff('day', cohort_date, d) AS BIGINT) AS day_n,
-        | COUNT(DISTINCT e.user_id) AS users
-        |FROM e JOIN f USING (user_id) GROUP BY 1, 2""".stripMargin,
-    "analytics_path" ->
-      """SELECT src_event, dst_event, COUNT(*) AS transitions FROM (
-        | SELECT event_type AS src_event,
-        |  lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |   AS dst_event
-        | FROM events) t
-        |WHERE dst_event IS NOT NULL GROUP BY 1, 2""".stripMargin,
-    // the salted join must be answer-identical to the plain join —
-    // the oracle IS the plain join
-    "analytics_skew_salted" ->
-      """SELECT n_name AS nation_name, COUNT(*) AS ev_ct,
-        | COUNT(DISTINCT user_id) AS uv_ct,
-        | CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS value_sum
-        |FROM events JOIN customer ON user_id = c_custkey
-        | JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY 1""".stripMargin,
-    "text_repetition" ->
-      """WITH toks AS (SELECT doc_id,
-        |  list_filter(string_split(lower(text), ' '), x -> x <> '') AS tk
-        | FROM documents),
-        |tc AS (SELECT doc_id, tok, COUNT(*) AS c FROM (
-        |  SELECT doc_id, unnest(tk) AS tok FROM toks) t GROUP BY 1, 2),
-        |tt AS (SELECT doc_id, MAX(c) AS top_token_ct,
-        |       CAST(SUM(c) AS BIGINT) AS n_tokens FROM tc GROUP BY 1),
-        |bc AS (SELECT doc_id, bgm, COUNT(*) AS c FROM (
-        |  SELECT doc_id, unnest([tk[i] || ' ' || tk[i+1]
-        |    for i in range(1, len(tk))]) AS bgm FROM toks) t GROUP BY 1, 2),
-        |bt AS (SELECT doc_id, MAX(c) AS top_bigram_ct,
-        |       CAST(SUM(c) AS BIGINT) AS n_bigrams,
-        |       COUNT(*) AS distinct_bigrams FROM bc GROUP BY 1)
-        |SELECT tt.doc_id, n_tokens, top_token_ct, top_bigram_ct,
-        | n_bigrams, distinct_bigrams,
-        | 1.0 - CAST(distinct_bigrams AS DOUBLE)
-        |  / NULLIF(CAST(n_bigrams AS DOUBLE), 0) AS dup_bigram_frac
-        |FROM tt LEFT JOIN bt ON tt.doc_id = bt.doc_id""".stripMargin,
-    "dedup_cross_source" ->
-      """WITH sh AS (
-        | SELECT DISTINCT doc_id, CAST(substr(source, 4) AS INT) AS src_n, s
-        | FROM (
-        |  SELECT doc_id, source, unnest([substr(lower(text), i, 12)
-        |   for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
-        |  FROM documents) t),
-        |tr AS (SELECT doc_id AS train_id, s FROM sh WHERE src_n < 10),
-        |ev AS (SELECT doc_id AS eval_id, s FROM sh WHERE src_n >= 10)
-        |SELECT train_id, eval_id, COUNT(*) AS shared_ct
-        |FROM tr JOIN ev ON tr.s = ev.s
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 30""".stripMargin,
-    // first-occurrence segment dedup, replayed with a window in
-    // DuckDB; md5 of the reassembled text grades content-exact
-    "dedup_chunks" ->
-      """WITH tk AS (
-        | SELECT doc_id,
-        |  list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-        | FROM documents),
-        |ch AS (
-        | SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-        |  array_to_string(t[i*10+1 : i*10+10], ' ') AS chunk
-        | FROM (SELECT doc_id, t,
-        |        unnest(range(greatest(CAST(ceil(len(t) / 10.0) AS BIGINT), 1)))
-        |         AS i
-        |       FROM tk) u),
-        |k AS (
-        | SELECT doc_id, chunk_idx, chunk, row_number() OVER (
-        |   PARTITION BY chunk ORDER BY doc_id, chunk_idx) AS rn
-        | FROM ch),
-        |re AS (
-        | SELECT doc_id, COUNT(*) AS n_kept,
-        |  string_agg(chunk, ' ' ORDER BY chunk_idx) AS kept_text
-        | FROM k WHERE rn = 1 GROUP BY 1)
-        |SELECT tk.doc_id,
-        | greatest(CAST(ceil(len(t) / 10.0) AS BIGINT), 1) AS n_chunks,
-        | coalesce(re.n_kept, 0) AS n_kept,
-        | CASE WHEN re.n_kept > 0 THEN md5(re.kept_text) END AS kept_md5
-        |FROM tk LEFT JOIN re ON tk.doc_id = re.doc_id""".stripMargin,
-    // the Bloom prefilter is confirmed exactly, so the oracle is the
-    // plain set-overlap anti-join — the answer must be identical at
-    // any false-positive rate
-    "dedup_bloom_decontaminate" ->
-      """WITH t AS (
-        | SELECT doc_id, CAST(substr(source, 4) AS INT) AS src_n,
-        |  lower(text) AS lt
-        | FROM documents),
-        |sh AS (
-        | SELECT doc_id, src_n, unnest([substr(lt, i, 12)
-        |  for i in range(1, greatest(length(lt) - 10, 2))]) AS sg
-        | FROM t),
-        |ev AS (SELECT DISTINCT sg FROM sh WHERE src_n >= 10),
-        |bad AS (SELECT DISTINCT doc_id FROM sh
-        |        WHERE src_n < 10 AND sg IN (SELECT sg FROM ev))
-        |SELECT doc_id FROM t
-        |WHERE src_n < 10 AND doc_id NOT IN (SELECT doc_id FROM bad)""".stripMargin,
-    "dedup_containment" ->
-      """WITH sh AS (
-        | SELECT DISTINCT doc_id, s FROM (
-        |  SELECT doc_id, unnest([substr(lower(text), i, 12)
-        |   for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
-        |  FROM documents) t),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-        |i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2)
-        |SELECT id_a, id_b,
-        | CAST(c AS DOUBLE) / sa.n AS c_ab,
-        | CAST(c AS DOUBLE) / sb.n AS c_ba
-        |FROM i JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |WHERE greatest(CAST(c AS DOUBLE) / sa.n,
-        |               CAST(c AS DOUBLE) / sb.n) >= 0.8""".stripMargin,
-    // the scalable two-pass enumeration (range partition + offset
-    // pass) must equal the single-sort window formulation exactly
-    "corpus_assign_ids" ->
-      """SELECT doc_id,
-        | CAST(row_number() OVER (ORDER BY doc_id) - 1 AS BIGINT)
-        |  AS stable_id
-        |FROM documents""".stripMargin,
-    // the sequential fill-with-reset recurrence replayed as a
-    // recursive CTE walking rn order per source — first-fit-in-order
-    // bin ids must match the mapPartitions linear pass exactly
-    "pipeline_pack_greedy" ->
-      """WITH RECURSIVE d AS (
-        | SELECT source, doc_id,
-        |  CAST(len(list_filter(string_split(lower(text), ' '),
-        |    x -> x <> '')) AS BIGINT) AS nt,
-        |  row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        | FROM documents),
-        |p AS (
-        | SELECT source, doc_id, rn, nt, nt AS fill, CAST(0 AS BIGINT) AS bin
-        | FROM d WHERE rn = 1
-        | UNION ALL
-        | SELECT d.source, d.doc_id, d.rn, d.nt,
-        |  CASE WHEN p.fill + d.nt <= 128 THEN p.fill + d.nt ELSE d.nt END,
-        |  CASE WHEN p.fill + d.nt <= 128 THEN p.bin ELSE p.bin + 1 END
-        | FROM p JOIN d ON d.source = p.source AND d.rn = p.rn + 1)
-        |SELECT source, doc_id, nt AS n_tokens, bin AS bin_id
-        |FROM p""".stripMargin,
-    // identical double arithmetic both sides: T = min(n/target), then
-    // per-lang floor(min(T*target/n, 1) * 1e6) ppm thresholds over
-    // the same md5 bucket as corpus_sample_stratified
-    "pipeline_domain_mix" ->
-      """WITH tg AS (SELECT * FROM (VALUES ('en', 0.30), ('de', 0.20),
-        |  ('es', 0.20), ('fr', 0.15), ('zh', 0.15)) t(lang, target)),
-        |c AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY 1),
-        |j AS (SELECT c.lang, c.n, tg.target FROM c JOIN tg USING (lang)),
-        |tm AS (SELECT MIN(CAST(n AS DOUBLE) / target) AS t FROM j),
-        |r AS (SELECT lang, CAST(floor(least(
-        |        (t * target) / CAST(n AS DOUBLE), 1.0) * 1000000) AS BIGINT)
-        |       AS accept_ppm
-        |      FROM j, tm)
-        |SELECT doc_id, dd.lang, source, bucket_ppm FROM (
-        | SELECT doc_id, lang, source,
-        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT
-        |   % 1000000 AS BIGINT) AS bucket_ppm
-        | FROM documents) dd
-        |JOIN r ON dd.lang = r.lang
-        |WHERE bucket_ppm < accept_ppm""".stripMargin,
-    // same blocking, same 40-char heads, same classic Levenshtein
-    "dedup_edit_distance" ->
-      """WITH h AS (
-        | SELECT doc_id, substr(lower(text), 1, 40) AS head,
-        |  substr(lower(text), 1, 8) AS blk
-        | FROM documents)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        | levenshtein(a.head, b.head) AS dist
-        |FROM h a JOIN h b ON a.blk = b.blk AND a.doc_id < b.doc_id
-        |WHERE levenshtein(a.head, b.head) <= 10""".stripMargin,
-    // integer-ppm MLE conditionals: engine-exact where log-probs
-    // would not be; sums cast back to BIGINT (DuckDB SUM is HUGEINT)
-    "text_lm_score" ->
-      """WITH toks AS (
-        | SELECT doc_id,
-        |  list_filter(string_split(lower(text), ' '), t -> t <> '') AS t
-        | FROM documents),
-        |bg AS (
-        | SELECT doc_id, u.w1 AS w1, u.w2 AS w2 FROM (
-        |  SELECT doc_id, unnest([{'w1': t[i], 'w2': t[i + 1]}
-        |    for i in range(1, greatest(len(t), 1))]) AS u
-        |  FROM toks) x),
-        |cb AS (SELECT w1, w2, COUNT(*) AS cb FROM bg GROUP BY 1, 2),
-        |cu AS (SELECT w1, COUNT(*) AS cu FROM bg GROUP BY 1),
-        |pd AS (
-        | SELECT bg.doc_id, COUNT(*) AS n_bigrams,
-        |  CAST(SUM((cb.cb * 1000000) // cu.cu) AS BIGINT) AS sum_ppm
-        | FROM bg JOIN cb USING (w1, w2) JOIN cu USING (w1)
-        | GROUP BY 1)
-        |SELECT d.doc_id, pd.n_bigrams, pd.sum_ppm,
-        | pd.sum_ppm // pd.n_bigrams AS avg_ppm
-        |FROM documents d LEFT JOIN pd USING (doc_id)""".stripMargin,
-    // same md5 sort key both engines (lowercase hex, ASCII order);
-    // doc_id tiebreak makes the top-k deterministic
-    "corpus_sample_bottomk" ->
-      """SELECT doc_id, lang, source, rk FROM (
-        | SELECT doc_id, lang, source, row_number() OVER (
-        |   PARTITION BY lang
-        |   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        | FROM documents) t
-        |WHERE rk <= 100""".stripMargin,
-    "corpus_sample_stratified" ->
-      """SELECT doc_id, lang, source, bucket FROM (
-        | SELECT doc_id, lang, source,
-        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT
-        |   % 100 AS BIGINT) AS bucket
-        | FROM documents) t
-        |WHERE bucket < CASE WHEN lang = 'en' THEN 20
-        |                    WHEN lang = 'de' THEN 40 ELSE 80 END""".stripMargin,
-    // GENERATED oracle (Similarity.kmeansOracleSql): seeded
-    // farthest-first init (k unrolled stages) + 4 Lloyd rounds,
-    // every term engine-exact (integer-quantized sums, expanded
-    // metric, first-minimum tie-breaks) — no tolerance
-    "sim_kmeans" -> Similarity.kmeansOracleSql(k = 8, iters = 4),
-    // SemDeDup screening: the kmeans CTE nested verbatim, then
-    // within-cluster all-BIGINT cos² ppm + per-cluster top-5
-    "sim_semdedup" ->
-      Similarity.semDedupOracleSql(k = 8, iters = 4, topN = 5),
-    // PQ replayed end-to-end: same strided codebooks, same exact-
-    // integer subspace distances, same first-min code assignment,
-    // same ADC sum — bit-for-bit, so ranks hash-match
-    "sim_ann_pq" ->
-      """WITH emb AS (
-        |  SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
-        |    x -> CAST(round(x * 1000) AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |tot AS (SELECT COUNT(*) AS n FROM emb),
-        |seeds AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j, v
-        |          FROM emb, tot
-        |          WHERE vec_id % greatest(1, n // 16) = 0
-        |            AND vec_id // greatest(1, n // 16) < 16),
-        |dists AS (SELECT e.vec_id, g.u, s.j,
-        |    list_sum(list_transform(range(2),
-        |      i -> (e.v[g.u * 2 + i + 1] - s.v[g.u * 2 + i + 1])
-        |         * (e.v[g.u * 2 + i + 1] - s.v[g.u * 2 + i + 1]))) AS dist
-        |  FROM emb e CROSS JOIN range(0, 32) AS g(u) CROSS JOIN seeds s),
-        |codes AS (SELECT vec_id, u, j AS code FROM (
-        |    SELECT vec_id, u, j, row_number() OVER (
-        |      PARTITION BY vec_id, u ORDER BY dist, j) AS rn FROM dists) t
-        |  WHERE rn = 1),
-        |adc AS (SELECT dq.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    SUM(dq.dist) AS adist
-        |  FROM codes c
-        |  JOIN dists dq ON dq.u = c.u AND dq.j = c.code
-        |  WHERE dq.vec_id < 20 AND c.vec_id <> dq.vec_id
-        |  GROUP BY 1, 2)
-        |SELECT query_id, rk, neighbor_id FROM (
-        | SELECT query_id, neighbor_id, row_number() OVER (
-        |   PARTITION BY query_id ORDER BY adist, neighbor_id) AS rk
-        | FROM adc) t
-        |WHERE rk <= 5""".stripMargin,
-    // the two graded CTE chains composed verbatim: IVF assign/probes
-    // on raw-double cosine, PQ codes/LUT on quantized L2, ADC only
-    // within probed cells
-    "sim_ann_ivfpq" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
-        |      FROM e),
-        |tot AS (SELECT greatest(count(*)//16, 1) AS stride FROM e),
-        |cents AS (SELECT (vec_id // stride) AS cidx, v AS cv, nrm AS cn
-        |          FROM n, tot
-        |          WHERE vec_id % stride = 0 AND vec_id // stride < 16),
-        |cs AS (SELECT n.vec_id, cidx,
-        |  list_sum([n.v[i+1]*cv[i+1] for i in range(0,len(cv))])
-        |   / (n.nrm * cn) AS ccos
-        | FROM n CROSS JOIN cents),
-        |assign AS (SELECT vec_id, cidx AS cell FROM (
-        |  SELECT vec_id, cidx, row_number() OVER
-        |   (PARTITION BY vec_id ORDER BY ccos DESC, cidx) AS r FROM cs) t
-        |  WHERE r = 1),
-        |probes AS (SELECT vec_id AS query_id, cidx AS cell FROM (
-        |  SELECT vec_id, cidx, row_number() OVER
-        |   (PARTITION BY vec_id ORDER BY ccos DESC, cidx) AS r
-        |  FROM cs WHERE vec_id < 20) t
-        |  WHERE r <= 4),
-        |emb AS (
-        |  SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
-        |    x -> CAST(round(x * 1000) AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |seeds AS (SELECT row_number() OVER (ORDER BY e2.vec_id) - 1 AS j,
-        |           e2.v
-        |          FROM emb e2, tot
-        |          WHERE e2.vec_id % stride = 0
-        |            AND e2.vec_id // stride < 16),
-        |dists AS (SELECT e2.vec_id, g.u, s2.j,
-        |    list_sum(list_transform(range(2),
-        |      i -> (e2.v[g.u * 2 + i + 1] - s2.v[g.u * 2 + i + 1])
-        |         * (e2.v[g.u * 2 + i + 1] - s2.v[g.u * 2 + i + 1]))) AS dist
-        |  FROM emb e2 CROSS JOIN range(0, 32) AS g(u) CROSS JOIN seeds s2),
-        |codes AS (SELECT vec_id, u, j AS code FROM (
-        |    SELECT vec_id, u, j, row_number() OVER (
-        |      PARTITION BY vec_id, u ORDER BY dist, j) AS rn FROM dists) t
-        |  WHERE rn = 1),
-        |adc AS (SELECT p.query_id, c.vec_id AS neighbor_id,
-        |    SUM(dq.dist) AS adist
-        |  FROM probes p
-        |  JOIN assign a ON a.cell = p.cell
-        |  JOIN codes c ON c.vec_id = a.vec_id
-        |  JOIN dists dq ON dq.vec_id = p.query_id
-        |   AND dq.u = c.u AND dq.j = c.code
-        |  WHERE c.vec_id <> p.query_id
-        |  GROUP BY 1, 2)
-        |SELECT query_id, rk, neighbor_id FROM (
-        | SELECT query_id, neighbor_id, row_number() OVER (
-        |   PARTITION BY query_id ORDER BY adist, neighbor_id) AS rk
-        | FROM adc) t
-        |WHERE rk <= 5""".stripMargin,
-    "sim_knn_join" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
-        |      FROM e),
-        |bkt AS (SELECT vec_id, v, nrm,
-        |  list_sum([CASE WHEN
-        |    list_sum([v[i+1] *
-        |      ((((j*64+i)*2654435761) & 4294967295) / 4294967296.0 - 0.5)
-        |      for i in range(0,64)]) > 0
-        |    THEN (1::BIGINT << (5-j)) ELSE 0::BIGINT END
-        |    for j in range(0,6)]) AS bucket
-        |  FROM n),
-        |s AS (SELECT a.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |  list_sum([a.v[i+1]*c.v[i+1] for i in range(0,len(a.v))])
-        |   / (a.nrm * c.nrm) AS cos
-        | FROM bkt a JOIN bkt c
-        |   ON a.bucket = c.bucket AND c.vec_id <> a.vec_id)
-        |SELECT query_id, rk, neighbor_id FROM (
-        | SELECT query_id, neighbor_id, row_number() OVER
-        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-        | FROM s) t
-        |WHERE rk <= 5""".stripMargin,
-    // DuckDB's native ASOF JOIN is the oracle for our union+window
-    // as-of formulation — two entirely different algorithms, same rows
-    "temporal_asof_join" ->
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
-        |    MAX(value) AS last_view_value
-        |   FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |p AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
-        |      WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, p.us, v.last_view_value
-        |FROM p ASOF LEFT JOIN v
-        |  ON p.user_id = v.user_id AND p.us >= v.us""".stripMargin,
-    // the custom Catalyst operator (AsOfJoinExec) against the same
-    // independent DuckDB ASOF JOIN implementation
-    "temporal_asof_native" ->
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
-        |    MAX(value) AS last_view_value
-        |   FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |p AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
-        |      WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, p.us, v.last_view_value
-        |FROM p ASOF LEFT JOIN v
-        |  ON p.user_id = v.user_id AND p.us >= v.us""".stripMargin,
-    // broadcast as-of (per-key binary search, fact side unshuffled)
-    // against the same independent DuckDB ASOF JOIN implementation
-    "temporal_asof_broadcast" ->
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
-        |    MAX(value) AS last_view_value
-        |   FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |p AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
-        |      WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, p.us, v.last_view_value
-        |FROM p ASOF LEFT JOIN v
-        |  ON p.user_id = v.user_id AND p.us >= v.us""".stripMargin,
-    // SCD2 validity intervals from the change feed: one lead window
-    "dim_scd2_build" ->
-      """SELECT user_id, us AS valid_from_us,
-        | lead(us) OVER (PARTITION BY user_id ORDER BY us) AS valid_to_us,
-        | last_view_value
-        |FROM (SELECT user_id, epoch_us(ts) AS us,
-        |    MAX(value) AS last_view_value
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2) v""".stripMargin,
-    // the raw-SQL TVF surface (graft_asof_join) against the same
-    // independent DuckDB ASOF JOIN implementation
-    "temporal_asof_sql" ->
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
-        |    MAX(value) AS last_view_value
-        |   FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |p AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
-        |      WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, p.us, v.last_view_value
-        |FROM p ASOF LEFT JOIN v
-        |  ON p.user_id = v.user_id AND p.us >= v.us""".stripMargin,
-    "temporal_interval_join" ->
-      """SELECT p.event_id, p.user_id, COUNT(c.us) AS clicks_15m
-        |FROM (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
-        |      WHERE event_type = 'purchase') p
-        |LEFT JOIN (SELECT user_id, epoch_us(ts) AS us FROM events
-        |           WHERE event_type = 'click') c
-        |  ON c.user_id = p.user_id
-        |  AND c.us > p.us - 900000000 AND c.us <= p.us
-        |GROUP BY 1, 2""".stripMargin,
-    // the raw-SQL TVF surface (graft_interval_join), same oracle
-    "temporal_interval_sql" ->
-      """SELECT p.event_id, p.user_id, COUNT(c.us) AS clicks_15m
-        |FROM (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
-        |      WHERE event_type = 'purchase') p
-        |LEFT JOIN (SELECT user_id, epoch_us(ts) AS us FROM events
-        |           WHERE event_type = 'click') c
-        |  ON c.user_id = p.user_id
-        |  AND c.us > p.us - 900000000 AND c.us <= p.us
-        |GROUP BY 1, 2""".stripMargin,
-    // the custom IntervalJoinExec against the identical range-join
-    // oracle the composed formulation is graded on
-    "temporal_interval_native" ->
-      """SELECT p.event_id, p.user_id, COUNT(c.us) AS clicks_15m
-        |FROM (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
-        |      WHERE event_type = 'purchase') p
-        |LEFT JOIN (SELECT user_id, epoch_us(ts) AS us FROM events
-        |           WHERE event_type = 'click') c
-        |  ON c.user_id = p.user_id
-        |  AND c.us > p.us - 900000000 AND c.us <= p.us
-        |GROUP BY 1, 2""".stripMargin,
-    "text_segment" ->
-      """WITH seg AS (
-        | SELECT list_concat(
-        |   list_filter(toks, t -> NOT regexp_matches(t, '^[一-鿿]$')),
-        |   [toks[i] || toks[i+1] for i in range(1, greatest(len(toks), 1))
-        |    if regexp_matches(toks[i], '^[一-鿿]$')
-        |       AND regexp_matches(toks[i+1], '^[一-鿿]$')]) AS kws
-        | FROM (
-        |  SELECT list_filter(string_split_regex(
-        |    regexp_replace(lower(text), '([一-鿿])', ' \1 ', 'g'), '\s+'),
-        |    x -> x <> '') AS toks
-        |  FROM documents) a)
-        |SELECT kw, COUNT(*) AS kw_ct
-        |FROM (SELECT unnest(kws) AS kw FROM seg) t GROUP BY 1""".stripMargin,
-    // the dictionary (FMM longest-match) segmenter: the oracle replays
-    // greedy forward-maximum-matching over the MIRRORED wordlist
-    // (DictSegmenter.words) with a recursive CTE — independent
-    // implementation of the same published algorithm
-    "text_segment_dict" ->
-      """WITH RECURSIVE
-        |dict(w) AS (VALUES ('苹果'),('手机'),('手机壳'),('小米'),('电视'),
-        |  ('电视机'),('华为'),('平板'),('电脑'),('平板电脑'),('运动'),
-        |  ('运动鞋'),('连衣裙'),('洗衣'),('洗衣机'),('蓝牙'),('耳机'),
-        |  ('无线'),('充电'),('充电器')),
-        |ph(pid, phrase) AS (VALUES (0,'苹果手机壳'),(1,'小米电视机'),
-        |  (2,'华为平板电脑'),(3,'运动鞋男'),(4,'连衣裙女夏'),
-        |  (5,'洗衣机全自动'),(6,'蓝牙耳机无线'),(7,'充电器快充')),
-        |seg(pid, phrase, pos, tok) AS (
-        |  SELECT pid, phrase, 1, CAST(NULL AS VARCHAR) FROM ph
-        |  UNION ALL
-        |  SELECT s.pid, s.phrase, s.pos + length(
-        |      COALESCE((SELECT w FROM dict
-        |                WHERE substr(s.phrase, s.pos, length(w)) = w
-        |                ORDER BY length(w) DESC LIMIT 1),
-        |               substr(s.phrase, s.pos, 1))),
-        |    COALESCE((SELECT w FROM dict
-        |              WHERE substr(s.phrase, s.pos, length(w)) = w
-        |              ORDER BY length(w) DESC LIMIT 1),
-        |             substr(s.phrase, s.pos, 1))
-        |  FROM seg s WHERE s.pos <= length(s.phrase)),
-        |toks AS (SELECT pid, tok FROM seg WHERE tok IS NOT NULL),
-        |docs AS (SELECT doc_id % 8 AS pid FROM documents)
-        |SELECT t.tok AS kw, COUNT(*) AS kw_ct
-        |FROM docs d JOIN toks t ON t.pid = d.pid
-        |GROUP BY 1""".stripMargin,
-    // LSH banding is an optimization that must not lose pairs at this
-    // threshold: the oracle is the EXACT shingle-set Jaccard — recall
-    // below 1.0 shows up as a hash mismatch, by design.
-    "dedup_minhash_lsh" ->
-      """WITH sh AS (
-        | SELECT DISTINCT doc_id, s FROM (
-        |  SELECT doc_id, unnest([substr(lower(text), i, 12)
-        |   for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
-        |  FROM documents) t),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-        |i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2)
-        |SELECT id_a, id_b,
-        | CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
-        |FROM i JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5""".stripMargin,
-    // token hash = first 8 md5 bytes big-endian (u64), reproduced here
-    // via UBIGINT bit ops; the signed wrap at the end matches Spark's
-    // LongType fingerprint
-    "dedup_simhash" ->
-      """SELECT doc_id,
-        | CAST(fpu - CASE WHEN fpu >= 9223372036854775808::HUGEINT
-        |      THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END
-        |   AS BIGINT) AS simhash
-        |FROM (
-        | SELECT doc_id, CAST(coalesce(list_sum([
-        |   CASE WHEN 2*len(list_filter(hs, h -> ((h >> b) & 1) = 1)) > len(hs)
-        |        THEN (1::UBIGINT << b) ELSE 0::UBIGINT END
-        |   for b in range(0, 64)]), 0) AS HUGEINT) AS fpu
-        | FROM (
-        |  SELECT doc_id, [CAST('0x' || substr(md5(t), 1, 16) AS UBIGINT)
-        |    for t in list_filter(string_split(lower(text), ' '), x -> x <> '')]
-        |    AS hs
-        |  FROM documents) a) b""".stripMargin,
-    // byte-exact chunk boundaries replayed on the hex rendering
-    // (2 hex chars = 1 byte; DuckDB has no blob substr)
-    "mm_audio_chunks" ->
-      """SELECT doc_id, CAST(u.i AS BIGINT) AS chunk_idx,
-        | md5(u.c) AS chunk_md5,
-        | CAST(length(u.c) // 2 AS BIGINT) AS chunk_bytes
-        |FROM (
-        | SELECT doc_id, unnest([{'i': i,
-        |   'c': substr(hex(encode(text)), i * 512 + 1, 512)}
-        |   for i in range(0, CAST(ceil(
-        |     octet_length(encode(text)) * 2 / 512.0) AS INT))]) AS u
-        | FROM documents) x""".stripMargin,
-    // PCM-8 energy/peak per chunk: hex-pair byte decode (strpos-17
-    // arithmetic identical both engines), Σ(v-128)^2 and max|v-128|
-    "mm_audio_energy" ->
-      """SELECT doc_id, CAST(u.i AS BIGINT) AS chunk_idx,
-        | CAST(length(u.c) // 2 AS BIGINT) AS chunk_bytes,
-        | CAST(list_sum(list_transform(smp, v ->
-        |   (v - 128) * (v - 128))) AS BIGINT) AS energy,
-        | CAST(list_max(list_transform(smp, v ->
-        |   abs(v - 128))) AS BIGINT) AS peak
-        |FROM (
-        | SELECT doc_id, u, list_transform(
-        |   range(1, length(u.c) // 2 + 1), i ->
-        |     strpos('0123456789ABCDEF', substr(u.c, 2*i-1, 1)) * 16
-        |     + strpos('0123456789ABCDEF', substr(u.c, 2*i, 1)) - 17)
-        |   AS smp
-        | FROM (
-        |  SELECT doc_id, unnest([{'i': i,
-        |    'c': substr(hex(encode(text)), i * 512 + 1, 512)}
-        |    for i in range(0, CAST(ceil(
-        |      octet_length(encode(text)) * 2 / 512.0) AS INT))]) AS u
-        |  FROM documents) x) y""".stripMargin,
-    "mm_binary_meta" ->
-      """SELECT doc_id,
-        | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        | substr(hex(encode(text)), 1, 8) AS magic,
-        | md5(text) AS checksum,
-        | source AS media_source
-        |FROM documents""".stripMargin,
-    // the Spark side ENCODES a real PNG per doc (javax.imageio) and
-    // DECODES it back; the oracle recomputes the generation
-    // arithmetic, so a hash match proves the codec roundtrip
-    "mm_image_dims" ->
-      """SELECT doc_id,
-        | CAST(8 + doc_id % 24 AS BIGINT) AS width,
-        | CAST(8 + (doc_id * 7) % 24 AS BIGINT) AS height,
-        | CAST((doc_id * 31) % 256 AS BIGINT) AS px00
-        |FROM documents""".stripMargin,
-    // butterflies: each pair sharing n baskets closes C(n,2) —
-    // arithmetic over the pair rollup, both directions unioned
-    "graph_butterflies" ->
-      """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok,
-        |    l_partkey AS pk FROM lineitem),
-        |pc AS (SELECT a.pk AS s, b2.pk AS t, COUNT(*) AS n_st
-        |  FROM b a JOIN b b2 ON a.ok = b2.ok AND a.pk < b2.pk
-        |  GROUP BY 1, 2),
-        |w AS (SELECT s, t, n_st * (n_st - 1) // 2 AS bf FROM pc
-        |      WHERE n_st >= 2),
-        |u AS (SELECT s AS part_id, bf FROM w
-        |      UNION ALL SELECT t, bf FROM w)
-        |SELECT part_id, CAST(COUNT(*) AS BIGINT) AS n_pair_partners,
-        |  CAST(SUM(bf) AS BIGINT) AS butterflies
-        |FROM u GROUP BY 1""".stripMargin,
-    // GENERATED oracle (Dedup.lshPlannerOracleSql): identical inlined
-    // S-curve thresholds over the same co-occurrence pairs
-    "dedup_lsh_planner" -> Dedup.lshPlannerOracleSql(),
-    // GENERATED oracle (Dedup.bucketHistogramOracleSql): shared-
-    // family signatures at the production perm count, unpivoted to
-    // (band, slice) rows
-    "dedup_bucket_histogram" -> Dedup.bucketHistogramOracleSql(),
-    // GENERATED oracle (Dedup.lshRecallOracleSql): per-config band
-    // self-joins + the cross-multiplied exact-Jaccard truth
-    "dedup_lsh_recall" -> Dedup.lshRecallOracleSql(),
-    // duplicate orders: equi-join on the customer key, date band as
-    // a post-join filter, exact-cents proximity score
-    "dq_duplicate_orders" ->
-      """WITH o AS (SELECT o_orderkey AS okey, o_custkey AS ck,
-        |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |      AS cents,
-        |    CAST(o_orderdate AS DATE) AS dt FROM orders)
-        |SELECT a.ck AS cust_id, a.okey AS okey_a, b.okey AS okey_b,
-        |  CAST(abs(date_diff('day', a.dt, b.dt)) AS BIGINT) AS day_gap,
-        |  abs(a.cents - b.cents) * 1000000
-        |    // greatest(a.cents, b.cents) AS amount_delta_ppm
-        |FROM o a JOIN o b ON a.ck = b.ck AND a.okey < b.okey
-        |WHERE abs(date_diff('day', a.dt, b.dt)) <= 3""".stripMargin,
-    // ppl mix: the lm_score CTEs + the literal (rk-1)*5//n quintile
-    // formula (ntile's remainder distribution differs — not used)
-    "pipeline_ppl_mix" ->
-      """WITH toks AS (
-        | SELECT doc_id,
-        |  list_filter(string_split(lower(text), ' '), t -> t <> '') AS t
-        | FROM documents),
-        |bg AS (
-        | SELECT doc_id, u.w1 AS w1, u.w2 AS w2 FROM (
-        |  SELECT doc_id, unnest([{'w1': t[i], 'w2': t[i + 1]}
-        |    for i in range(1, greatest(len(t), 1))]) AS u
-        |  FROM toks) x),
-        |cb AS (SELECT w1, w2, COUNT(*) AS cb FROM bg GROUP BY 1, 2),
-        |cu AS (SELECT w1, COUNT(*) AS cu FROM bg GROUP BY 1),
-        |pd AS (
-        | SELECT bg.doc_id, COUNT(*) AS n_bigrams,
-        |  CAST(SUM((cb.cb * 1000000) // cu.cu) AS BIGINT) AS sum_ppm
-        | FROM bg JOIN cb USING (w1, w2) JOIN cu USING (w1)
-        | GROUP BY 1),
-        |sc AS (SELECT d.doc_id, d.source,
-        |    pd.sum_ppm // pd.n_bigrams AS avg_ppm,
-        |    pd.n_bigrams + 1 AS toks
-        |  FROM documents d JOIN pd USING (doc_id)),
-        |r AS (SELECT *,
-        |    row_number() OVER (ORDER BY avg_ppm, doc_id) AS rk,
-        |    COUNT(*) OVER () AS n
-        |  FROM sc),
-        |cells AS (SELECT source, (rk - 1) * 5 // n AS quintile,
-        |    COUNT(*) AS n_docs, SUM(toks) AS cell_toks
-        |  FROM r GROUP BY 1, 2)
-        |SELECT source, CAST(quintile AS BIGINT) AS quintile,
-        |  CAST(n_docs AS BIGINT) AS n_docs,
-        |  CAST(cell_toks AS BIGINT) AS cell_toks,
-        |  CAST(cell_toks * 1000000 //
-        |    SUM(cell_toks) OVER (PARTITION BY source) AS BIGINT)
-        |    AS tok_share_ppm
-        |FROM cells""".stripMargin,
-    // substitutes: bounded top-N candidates, left join for the
-    // zero-co-occurrence signal, HUGEINT lift
-    "graph_substitutes" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |           FROM lineitem),
-        |nb AS (SELECT pk, COUNT(*) AS n FROM li GROUP BY 1),
-        |tot AS (SELECT COUNT(DISTINCT ok) AS nb_total FROM li),
-        |top AS (SELECT pk, n FROM nb ORDER BY n DESC, pk LIMIT 40),
-        |pc AS (SELECT a.pk AS s, b.pk AS t, COUNT(*) AS n_st
-        |       FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-        |       GROUP BY 1, 2),
-        |pr AS (SELECT a.pk AS part_a, b.pk AS part_b,
-        |    a.n AS n_a, b.n AS n_b, COALESCE(pc.n_st, 0) AS n_ab
-        |  FROM top a JOIN top b ON a.pk < b.pk
-        |  LEFT JOIN pc ON pc.s = a.pk AND pc.t = b.pk)
-        |SELECT part_a, part_b, CAST(n_a AS BIGINT) AS n_a,
-        |  CAST(n_b AS BIGINT) AS n_b, CAST(n_ab AS BIGINT) AS n_ab,
-        |  CAST(CAST(n_ab AS HUGEINT) * nb_total * 1000000
-        |    // (CAST(n_a AS HUGEINT) * n_b) AS BIGINT) AS lift_ppm
-        |FROM pr CROSS JOIN tot
-        |WHERE CAST(n_ab AS HUGEINT) * nb_total * 1000000
-        |  // (CAST(n_a AS HUGEINT) * n_b) < 500000""".stripMargin,
-    // component sizes: the components closure CTE + two rollups
-    "graph_component_sizes" ->
-      """WITH RECURSIVE
-        |b AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |      FROM lineitem),
-        |p AS (SELECT a.pk AS s, b2.pk AS t, COUNT(*) AS n
-        |      FROM b a JOIN b b2 ON a.ok = b2.ok AND a.pk < b2.pk
-        |      GROUP BY 1, 2),
-        |pairs AS (SELECT s, t FROM p WHERE n >= 3),
-        |edges AS (SELECT s AS src, t AS dst FROM pairs
-        |          UNION ALL SELECT t, s FROM pairs),
-        |reach(id, lbl) AS (
-        | SELECT DISTINCT src, src FROM edges
-        | UNION
-        | SELECT e.src, r.lbl FROM edges e, reach r WHERE e.dst = r.id),
-        |comp AS (SELECT id, MIN(lbl) AS component_id FROM reach
-        |         GROUP BY 1),
-        |sz AS (SELECT component_id, COUNT(*) AS size FROM comp
-        |       GROUP BY 1)
-        |SELECT size, CAST(COUNT(*) AS BIGINT) AS n_components
-        |FROM sz GROUP BY 1""".stripMargin,
-    // hubness: the knn-join CTE + a zero-inclusive k-occurrence
-    // rollup (the LEFT join back onto the corpus counts anti-hubs)
-    "sim_hubness" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
-        |      FROM e),
-        |bkt AS MATERIALIZED (SELECT vec_id, v, nrm,
-        |  list_sum([CASE WHEN
-        |    list_sum([v[i+1] *
-        |      ((((j*64+i)*2654435761) & 4294967295) / 4294967296.0 - 0.5)
-        |      for i in range(0,64)]) > 0
-        |    THEN (1::BIGINT << (5-j)) ELSE 0::BIGINT END
-        |    for j in range(0,6)]) AS bucket
-        |  FROM n),
-        |s AS (SELECT a.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |  list_sum([a.v[i+1]*c.v[i+1] for i in range(0,len(a.v))])
-        |   / (a.nrm * c.nrm) AS cos
-        | FROM bkt a JOIN bkt c
-        |   ON a.bucket = c.bucket AND c.vec_id <> a.vec_id),
-        |knn AS (SELECT query_id, neighbor_id FROM (
-        | SELECT query_id, neighbor_id, row_number() OVER
-        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-        | FROM s) t
-        | WHERE rk <= 5),
-        |occ AS (SELECT neighbor_id AS vec_id, COUNT(*) AS n_k
-        |        FROM knn GROUP BY 1)
-        |SELECT COALESCE(occ.n_k, 0) AS k_occurrences,
-        |  CAST(COUNT(*) AS BIGINT) AS n_vectors
-        |FROM e LEFT JOIN occ ON e.vec_id = occ.vec_id
-        |GROUP BY 1""".stripMargin,
-    // PPR: three seeded damped rounds unrolled; the LEFT join onto
-    // the node set each round keeps unreached seeds alive (restart
-    // semantics), all-integer ppm so the hash grade is exact
-    "graph_ppr" ->
-      """WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |e0 AS (SELECT DISTINCT a.pk AS src, b.pk AS dst
-        |       FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |e AS (SELECT src, dst FROM e0
-        |      UNION ALL SELECT dst AS src, src AS dst FROM e0),
-        |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY 1),
-        |nodes AS (SELECT src AS id,
-        |    CASE WHEN src % 25 = 0 THEN 1 ELSE 0 END AS seed FROM deg),
-        |r0 AS (SELECT id, CAST(seed * 1000000 AS BIGINT) AS pr FROM nodes),
-        |s1 AS (SELECT e.dst AS id, SUM(r0.pr // dg.deg) AS sc
-        |       FROM e JOIN r0 ON e.src = r0.id
-        |        JOIN deg dg ON e.src = dg.src GROUP BY 1),
-        |r1 AS (SELECT n.id, CAST(n.seed * 150000
-        |         + (COALESCE(s1.sc, 0) * 85) // 100 AS BIGINT) AS pr
-        |       FROM nodes n LEFT JOIN s1 ON n.id = s1.id),
-        |s2 AS (SELECT e.dst AS id, SUM(r1.pr // dg.deg) AS sc
-        |       FROM e JOIN r1 ON e.src = r1.id
-        |        JOIN deg dg ON e.src = dg.src GROUP BY 1),
-        |r2 AS (SELECT n.id, CAST(n.seed * 150000
-        |         + (COALESCE(s2.sc, 0) * 85) // 100 AS BIGINT) AS pr
-        |       FROM nodes n LEFT JOIN s2 ON n.id = s2.id),
-        |s3 AS (SELECT e.dst AS id, SUM(r2.pr // dg.deg) AS sc
-        |       FROM e JOIN r2 ON e.src = r2.id
-        |        JOIN deg dg ON e.src = dg.src GROUP BY 1),
-        |r3 AS (SELECT n.id, CAST(n.seed * 150000
-        |         + (COALESCE(s3.sc, 0) * 85) // 100 AS BIGINT) AS pr
-        |       FROM nodes n LEFT JOIN s3 ON n.id = s3.id)
-        |SELECT r3.id AS part_id, CAST(n.seed AS BIGINT) AS seed,
-        |  r3.pr AS ppr_score
-        |FROM r3 JOIN nodes n ON r3.id = n.id
-        |WHERE r3.pr > 0""".stripMargin,
-    // truss support: oriented a<b<c triangle enumeration (each
-    // triangle once), 3 edge credits, LEFT join keeps support-0 edges
-    "graph_truss_support" ->
-      """WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |e0 AS MATERIALIZED (SELECT DISTINCT a.pk AS s, b.pk AS t
-        |     FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |tri AS MATERIALIZED (SELECT ab.s AS a, ab.t AS b, bc.t AS c
-        |     FROM e0 ab JOIN e0 bc ON ab.t = bc.s
-        |      JOIN e0 ac ON ac.s = ab.s AND ac.t = bc.t),
-        |cr AS (SELECT s, t, COUNT(*) AS sup FROM (
-        |    SELECT a AS s, b AS t FROM tri
-        |    UNION ALL SELECT b AS s, c AS t FROM tri
-        |    UNION ALL SELECT a AS s, c AS t FROM tri)
-        |  GROUP BY 1, 2)
-        |SELECT e0.s, e0.t,
-        |  CAST(COALESCE(cr.sup, 0) AS BIGINT) AS support,
-        |  CAST(COALESCE(cr.sup, 0) + 2 AS BIGINT) AS truss_lb
-        |FROM e0 LEFT JOIN cr ON e0.s = cr.s AND e0.t = cr.t""".stripMargin,
-    // strict_order funnel: adjacency via two leads over the same
-    // (us, event_id) tie order the Spark window pins
-    "analytics_window_funnel_strict" ->
-      """WITH e AS (SELECT user_id, event_id, event_type AS t0,
-        |    epoch_us(ts) AS us FROM events),
-        |l AS (SELECT user_id, us, t0,
-        |    lead(t0, 1) OVER w AS t1, lead(us, 1) OVER w AS us1,
-        |    lead(t0, 2) OVER w AS t2, lead(us, 2) OVER w AS us2
-        |  FROM e WINDOW w AS
-        |    (PARTITION BY user_id ORDER BY us, event_id)),
-        |ul AS (SELECT user_id, GREATEST(
-        |    MAX(CASE WHEN t0 = 'view' AND t1 = 'click'
-        |      AND t2 = 'purchase' AND us2 <= us + 86400000000
-        |      THEN 3 ELSE 0 END),
-        |    MAX(CASE WHEN t0 = 'view' AND t1 = 'click'
-        |      AND us1 <= us + 86400000000 THEN 2 ELSE 0 END),
-        |    MAX(CASE WHEN t0 = 'view' THEN 1 ELSE 0 END)) AS level
-        |  FROM l GROUP BY 1)
-        |SELECT CAST(level AS BIGINT) AS level, COUNT(*) AS users
-        |FROM ul GROUP BY 1""".stripMargin,
-    // FD audit: g3 = n − Σ_lhs max_rhs count, per candidate FD
-    "dq_fd_audit" ->
-      """WITH g AS (
-        |  SELECT fd, l, COUNT(*) AS n_rhs, MAX(c) AS mx, SUM(c) AS n
-        |  FROM (
-        |    SELECT 'n_name->n_regionkey' AS fd,
-        |      CAST(n_name AS VARCHAR) AS l,
-        |      CAST(n_regionkey AS VARCHAR) AS r, COUNT(*) AS c
-        |    FROM nation GROUP BY 1, 2, 3
-        |    UNION ALL
-        |    SELECT 'o_custkey->o_orderpriority',
-        |      CAST(o_custkey AS VARCHAR),
-        |      CAST(o_orderpriority AS VARCHAR), COUNT(*)
-        |    FROM orders GROUP BY 1, 2, 3
-        |    UNION ALL
-        |    SELECT 'l_partkey->l_suppkey',
-        |      CAST(l_partkey AS VARCHAR),
-        |      CAST(l_suppkey AS VARCHAR), COUNT(*)
-        |    FROM lineitem GROUP BY 1, 2, 3
-        |    UNION ALL
-        |    SELECT 'c_nationkey->c_mktsegment',
-        |      CAST(c_nationkey AS VARCHAR),
-        |      CAST(c_mktsegment AS VARCHAR), COUNT(*)
-        |    FROM customer GROUP BY 1, 2, 3)
-        |  GROUP BY 1, 2)
-        |SELECT fd, CAST(COUNT(*) AS BIGINT) AS n_groups,
-        |  CAST(SUM(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS viol_groups,
-        |  CAST(SUM(n) - SUM(mx) AS BIGINT) AS g3_rows,
-        |  CAST((SUM(n) - SUM(mx)) * 1000000 // SUM(n) AS BIGINT)
-        |    AS g3_ppm
-        |FROM g GROUP BY 1""".stripMargin,
-    // Gopher rules: per-source counts per rule, all-integer flags
-    // (mean-word-length compared as Σlen vs 3n/10n — no division)
-    "text_gopher_rules" ->
-      """WITH docs AS MATERIALIZED (SELECT doc_id, source,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '')
-        |      AS w FROM documents),
-        |st AS (SELECT doc_id, source, len(w) AS n,
-        |    COALESCE(list_sum(list_transform(w, x -> length(x))), 0)
-        |      AS sum_len,
-        |    len(list_filter(w, x -> x IN ('the','be','to','of',
-        |      'and','that','have','with'))) AS stop_ct
-        |  FROM docs),
-        |tok AS (SELECT doc_id, unnest(w) AS t FROM docs),
-        |tc AS (SELECT doc_id, t, COUNT(*) AS c FROM tok GROUP BY 1, 2),
-        |mx AS (SELECT doc_id, MAX(c) AS max_tok FROM tc GROUP BY 1),
-        |fl AS (SELECT source,
-        |    CASE WHEN n < 50 OR n > 100000 THEN 1 ELSE 0 END AS v_wc,
-        |    CASE WHEN sum_len < 3 * n OR sum_len > 10 * n
-        |      THEN 1 ELSE 0 END AS v_mwl,
-        |    CASE WHEN stop_ct < 2 THEN 1 ELSE 0 END AS v_stop,
-        |    CASE WHEN COALESCE(max_tok, 0) * 5 > n
-        |      THEN 1 ELSE 0 END AS v_rep
-        |  FROM st LEFT JOIN mx USING (doc_id))
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(v_wc) AS BIGINT) AS v_wordcount,
-        |  CAST(SUM(v_mwl) AS BIGINT) AS v_meanlen,
-        |  CAST(SUM(v_stop) AS BIGINT) AS v_stopword,
-        |  CAST(SUM(v_rep) AS BIGINT) AS v_repetition,
-        |  CAST(SUM(CASE WHEN v_wc + v_mwl + v_stop + v_rep = 0
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
-        |FROM fl GROUP BY 1""".stripMargin,
-    // DSIR screen: distinctive = tc·rt > rc·tt cross-multiplied in
-    // HUGEINT; per-doc distinctive-occurrence ppm → decile histogram
-    "pipeline_dsir_screen" ->
-      """WITH docs AS MATERIALIZED (SELECT doc_id, source,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '')
-        |      AS w FROM documents),
-        |grams AS MATERIALIZED (SELECT doc_id, source,
-        |    unnest([substring(md5(w[i] || ' ' || w[i+1]), 1, 16)
-        |            for i in range(1, len(w))]) AS g
-        |  FROM docs),
-        |stats AS (SELECT g,
-        |    SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS tc,
-        |    SUM(CASE WHEN source <> 'src0' THEN 1 ELSE 0 END) AS rc
-        |  FROM grams GROUP BY 1),
-        |tot AS (SELECT SUM(tc) AS tt, SUM(rc) AS rt FROM stats),
-        |dist AS (SELECT g, CASE WHEN CAST(tc AS HUGEINT) * rt >
-        |      CAST(rc AS HUGEINT) * tt THEN 1 ELSE 0 END AS is_dist
-        |  FROM stats CROSS JOIN tot),
-        |pd AS (SELECT doc_id, source, COUNT(*) AS n_g,
-        |    SUM(is_dist) AS n_d
-        |  FROM grams JOIN dist USING (g) GROUP BY 1, 2)
-        |SELECT source,
-        |  CAST((n_d * 1000000 // n_g) // 100000 AS BIGINT) AS bucket,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs
-        |FROM pd GROUP BY 1, 2""".stripMargin,
+        |FROM dd GROUP BY 1""".stripMargin),
     // Apriori level-3: triple enumeration in id order (fan-in =
     // basket size), conf over the pair support, HUGEINT lift
-    "graph_assoc_triples" ->
+    q("graph_assoc_triples", Graph.assocTriples(_, _),
       """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok,
         |    l_partkey AS pk FROM lineitem),
         |tri AS (SELECT a.pk AS pa, b2.pk AS pb, c.pk AS pc,
@@ -3135,10 +2050,10 @@ object SparkEntry {
         |JOIN sg sa ON sa.pk = pa
         |JOIN sg sb ON sb.pk = pb
         |JOIN sg sc ON sc.pk = pc
-        |CROSS JOIN tot""".stripMargin,
+        |CROSS JOIN tot""".stripMargin),
     // RRF fusion of the two index oracles' ranked lists: exact
     // integer 1e6//(60+rank) sums, full outer on (query, neighbor)
-    "sim_rank_fusion" ->
+    q("sim_rank_fusion", Similarity.rankFusion(_, _),
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |n AS MATERIALIZED (SELECT vec_id, v,
@@ -3204,13 +2119,216 @@ object SparkEntry {
         |    AS rrf_e6
         |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
         |    ORDER BY rrf_e6 DESC, neighbor_id) AS rk FROM fused) t
-        |WHERE rk <= 5""".stripMargin,
-    "sim_ann_lsh" ->
+        |WHERE rk <= 5""".stripMargin),
+    // butterflies: each pair sharing n baskets closes C(n,2) —
+    // arithmetic over the pair rollup, both directions unioned
+    q("graph_butterflies", Graph.butterflies(_, _),
+      """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok,
+        |    l_partkey AS pk FROM lineitem),
+        |pc AS (SELECT a.pk AS s, b2.pk AS t, COUNT(*) AS n_st
+        |  FROM b a JOIN b b2 ON a.ok = b2.ok AND a.pk < b2.pk
+        |  GROUP BY 1, 2),
+        |w AS (SELECT s, t, n_st * (n_st - 1) // 2 AS bf FROM pc
+        |      WHERE n_st >= 2),
+        |u AS (SELECT s AS part_id, bf FROM w
+        |      UNION ALL SELECT t, bf FROM w)
+        |SELECT part_id, CAST(COUNT(*) AS BIGINT) AS n_pair_partners,
+        |  CAST(SUM(bf) AS BIGINT) AS butterflies
+        |FROM u GROUP BY 1""".stripMargin),
+    // GENERATED oracle (Dedup.lshPlannerOracleSql): identical inlined
+    // S-curve thresholds over the same co-occurrence pairs
+    q("dedup_lsh_planner", Dedup.lshPlanner(_, _),
+      Dedup.lshPlannerOracleSql()),
+    // PPR: three seeded damped rounds unrolled; the LEFT join onto
+    // the node set each round keeps unreached seeds alive (restart
+    // semantics), all-integer ppm so the hash grade is exact
+    q("graph_ppr", Graph.pprCoPurchase(_, _),
+      """WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+        |e0 AS (SELECT DISTINCT a.pk AS src, b.pk AS dst
+        |       FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
+        |e AS (SELECT src, dst FROM e0
+        |      UNION ALL SELECT dst AS src, src AS dst FROM e0),
+        |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY 1),
+        |nodes AS (SELECT src AS id,
+        |    CASE WHEN src % 25 = 0 THEN 1 ELSE 0 END AS seed FROM deg),
+        |r0 AS (SELECT id, CAST(seed * 1000000 AS BIGINT) AS pr FROM nodes),
+        |s1 AS (SELECT e.dst AS id, SUM(r0.pr // dg.deg) AS sc
+        |       FROM e JOIN r0 ON e.src = r0.id
+        |        JOIN deg dg ON e.src = dg.src GROUP BY 1),
+        |r1 AS (SELECT n.id, CAST(n.seed * 150000
+        |         + (COALESCE(s1.sc, 0) * 85) // 100 AS BIGINT) AS pr
+        |       FROM nodes n LEFT JOIN s1 ON n.id = s1.id),
+        |s2 AS (SELECT e.dst AS id, SUM(r1.pr // dg.deg) AS sc
+        |       FROM e JOIN r1 ON e.src = r1.id
+        |        JOIN deg dg ON e.src = dg.src GROUP BY 1),
+        |r2 AS (SELECT n.id, CAST(n.seed * 150000
+        |         + (COALESCE(s2.sc, 0) * 85) // 100 AS BIGINT) AS pr
+        |       FROM nodes n LEFT JOIN s2 ON n.id = s2.id),
+        |s3 AS (SELECT e.dst AS id, SUM(r2.pr // dg.deg) AS sc
+        |       FROM e JOIN r2 ON e.src = r2.id
+        |        JOIN deg dg ON e.src = dg.src GROUP BY 1),
+        |r3 AS (SELECT n.id, CAST(n.seed * 150000
+        |         + (COALESCE(s3.sc, 0) * 85) // 100 AS BIGINT) AS pr
+        |       FROM nodes n LEFT JOIN s3 ON n.id = s3.id)
+        |SELECT r3.id AS part_id, CAST(n.seed AS BIGINT) AS seed,
+        |  r3.pr AS ppr_score
+        |FROM r3 JOIN nodes n ON r3.id = n.id
+        |WHERE r3.pr > 0""".stripMargin),
+    // truss support: oriented a<b<c triangle enumeration (each
+    // triangle once), 3 edge credits, LEFT join keeps support-0 edges
+    q("graph_truss_support", Graph.trussSupport(_, _),
+      """WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+        |e0 AS MATERIALIZED (SELECT DISTINCT a.pk AS s, b.pk AS t
+        |     FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
+        |tri AS MATERIALIZED (SELECT ab.s AS a, ab.t AS b, bc.t AS c
+        |     FROM e0 ab JOIN e0 bc ON ab.t = bc.s
+        |      JOIN e0 ac ON ac.s = ab.s AND ac.t = bc.t),
+        |cr AS (SELECT s, t, COUNT(*) AS sup FROM (
+        |    SELECT a AS s, b AS t FROM tri
+        |    UNION ALL SELECT b AS s, c AS t FROM tri
+        |    UNION ALL SELECT a AS s, c AS t FROM tri)
+        |  GROUP BY 1, 2)
+        |SELECT e0.s, e0.t,
+        |  CAST(COALESCE(cr.sup, 0) AS BIGINT) AS support,
+        |  CAST(COALESCE(cr.sup, 0) + 2 AS BIGINT) AS truss_lb
+        |FROM e0 LEFT JOIN cr ON e0.s = cr.s AND e0.t = cr.t""".stripMargin),
+    // Gopher rules: per-source counts per rule, all-integer flags
+    // (mean-word-length compared as Σlen vs 3n/10n — no division)
+    q("text_gopher_rules", TextAnalysis.gopherRules(_, _),
+      """WITH docs AS MATERIALIZED (SELECT doc_id, source,
+        |    list_filter(string_split(lower(text), ' '), x -> x <> '')
+        |      AS w FROM documents),
+        |st AS (SELECT doc_id, source, len(w) AS n,
+        |    COALESCE(list_sum(list_transform(w, x -> length(x))), 0)
+        |      AS sum_len,
+        |    len(list_filter(w, x -> x IN ('the','be','to','of',
+        |      'and','that','have','with'))) AS stop_ct
+        |  FROM docs),
+        |tok AS (SELECT doc_id, unnest(w) AS t FROM docs),
+        |tc AS (SELECT doc_id, t, COUNT(*) AS c FROM tok GROUP BY 1, 2),
+        |mx AS (SELECT doc_id, MAX(c) AS max_tok FROM tc GROUP BY 1),
+        |fl AS (SELECT source,
+        |    CASE WHEN n < 50 OR n > 100000 THEN 1 ELSE 0 END AS v_wc,
+        |    CASE WHEN sum_len < 3 * n OR sum_len > 10 * n
+        |      THEN 1 ELSE 0 END AS v_mwl,
+        |    CASE WHEN stop_ct < 2 THEN 1 ELSE 0 END AS v_stop,
+        |    CASE WHEN COALESCE(max_tok, 0) * 5 > n
+        |      THEN 1 ELSE 0 END AS v_rep
+        |  FROM st LEFT JOIN mx USING (doc_id))
+        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(SUM(v_wc) AS BIGINT) AS v_wordcount,
+        |  CAST(SUM(v_mwl) AS BIGINT) AS v_meanlen,
+        |  CAST(SUM(v_stop) AS BIGINT) AS v_stopword,
+        |  CAST(SUM(v_rep) AS BIGINT) AS v_repetition,
+        |  CAST(SUM(CASE WHEN v_wc + v_mwl + v_stop + v_rep = 0
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
+        |FROM fl GROUP BY 1""".stripMargin),
+    // DSIR screen: distinctive = tc·rt > rc·tt cross-multiplied in
+    // HUGEINT; per-doc distinctive-occurrence ppm → decile histogram
+    q("pipeline_dsir_screen", TextAnalysis.dsirScreen(_, _),
+      """WITH docs AS MATERIALIZED (SELECT doc_id, source,
+        |    list_filter(string_split(lower(text), ' '), x -> x <> '')
+        |      AS w FROM documents),
+        |grams AS MATERIALIZED (SELECT doc_id, source,
+        |    unnest([substring(md5(w[i] || ' ' || w[i+1]), 1, 16)
+        |            for i in range(1, len(w))]) AS g
+        |  FROM docs),
+        |stats AS (SELECT g,
+        |    SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS tc,
+        |    SUM(CASE WHEN source <> 'src0' THEN 1 ELSE 0 END) AS rc
+        |  FROM grams GROUP BY 1),
+        |tot AS (SELECT SUM(tc) AS tt, SUM(rc) AS rt FROM stats),
+        |dist AS (SELECT g, CASE WHEN CAST(tc AS HUGEINT) * rt >
+        |      CAST(rc AS HUGEINT) * tt THEN 1 ELSE 0 END AS is_dist
+        |  FROM stats CROSS JOIN tot),
+        |pd AS (SELECT doc_id, source, COUNT(*) AS n_g,
+        |    SUM(is_dist) AS n_d
+        |  FROM grams JOIN dist USING (g) GROUP BY 1, 2)
+        |SELECT source,
+        |  CAST((n_d * 1000000 // n_g) // 100000 AS BIGINT) AS bucket,
+        |  CAST(COUNT(*) AS BIGINT) AS n_docs
+        |FROM pd GROUP BY 1, 2""".stripMargin),
+    // strict_order funnel: adjacency via two leads over the same
+    // (us, event_id) tie order the Spark window pins
+    q("analytics_window_funnel_strict", Analytics.windowFunnelStrict(_, _),
+      """WITH e AS (SELECT user_id, event_id, event_type AS t0,
+        |    epoch_us(ts) AS us FROM events),
+        |l AS (SELECT user_id, us, t0,
+        |    lead(t0, 1) OVER w AS t1, lead(us, 1) OVER w AS us1,
+        |    lead(t0, 2) OVER w AS t2, lead(us, 2) OVER w AS us2
+        |  FROM e WINDOW w AS
+        |    (PARTITION BY user_id ORDER BY us, event_id)),
+        |ul AS (SELECT user_id, GREATEST(
+        |    MAX(CASE WHEN t0 = 'view' AND t1 = 'click'
+        |      AND t2 = 'purchase' AND us2 <= us + 86400000000
+        |      THEN 3 ELSE 0 END),
+        |    MAX(CASE WHEN t0 = 'view' AND t1 = 'click'
+        |      AND us1 <= us + 86400000000 THEN 2 ELSE 0 END),
+        |    MAX(CASE WHEN t0 = 'view' THEN 1 ELSE 0 END)) AS level
+        |  FROM l GROUP BY 1)
+        |SELECT CAST(level AS BIGINT) AS level, COUNT(*) AS users
+        |FROM ul GROUP BY 1""".stripMargin),
+    // FD audit: g3 = n − Σ_lhs max_rhs count, per candidate FD
+    q("dq_fd_audit", Quality.fdAudit(_, _),
+      """WITH g AS (
+        |  SELECT fd, l, COUNT(*) AS n_rhs, MAX(c) AS mx, SUM(c) AS n
+        |  FROM (
+        |    SELECT 'n_name->n_regionkey' AS fd,
+        |      CAST(n_name AS VARCHAR) AS l,
+        |      CAST(n_regionkey AS VARCHAR) AS r, COUNT(*) AS c
+        |    FROM nation GROUP BY 1, 2, 3
+        |    UNION ALL
+        |    SELECT 'o_custkey->o_orderpriority',
+        |      CAST(o_custkey AS VARCHAR),
+        |      CAST(o_orderpriority AS VARCHAR), COUNT(*)
+        |    FROM orders GROUP BY 1, 2, 3
+        |    UNION ALL
+        |    SELECT 'l_partkey->l_suppkey',
+        |      CAST(l_partkey AS VARCHAR),
+        |      CAST(l_suppkey AS VARCHAR), COUNT(*)
+        |    FROM lineitem GROUP BY 1, 2, 3
+        |    UNION ALL
+        |    SELECT 'c_nationkey->c_mktsegment',
+        |      CAST(c_nationkey AS VARCHAR),
+        |      CAST(c_mktsegment AS VARCHAR), COUNT(*)
+        |    FROM customer GROUP BY 1, 2, 3)
+        |  GROUP BY 1, 2)
+        |SELECT fd, CAST(COUNT(*) AS BIGINT) AS n_groups,
+        |  CAST(SUM(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS viol_groups,
+        |  CAST(SUM(n) - SUM(mx) AS BIGINT) AS g3_rows,
+        |  CAST((SUM(n) - SUM(mx)) * 1000000 // SUM(n) AS BIGINT)
+        |    AS g3_ppm
+        |FROM g GROUP BY 1""".stripMargin),
+    // component sizes: the components closure CTE + two rollups
+    q("graph_component_sizes", Graph.componentSizes(_, _),
+      """WITH RECURSIVE
+        |b AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |      FROM lineitem),
+        |p AS (SELECT a.pk AS s, b2.pk AS t, COUNT(*) AS n
+        |      FROM b a JOIN b b2 ON a.ok = b2.ok AND a.pk < b2.pk
+        |      GROUP BY 1, 2),
+        |pairs AS (SELECT s, t FROM p WHERE n >= 3),
+        |edges AS (SELECT s AS src, t AS dst FROM pairs
+        |          UNION ALL SELECT t, s FROM pairs),
+        |reach(id, lbl) AS (
+        | SELECT DISTINCT src, src FROM edges
+        | UNION
+        | SELECT e.src, r.lbl FROM edges e, reach r WHERE e.dst = r.id),
+        |comp AS (SELECT id, MIN(lbl) AS component_id FROM reach
+        |         GROUP BY 1),
+        |sz AS (SELECT component_id, COUNT(*) AS size FROM comp
+        |       GROUP BY 1)
+        |SELECT size, CAST(COUNT(*) AS BIGINT) AS n_components
+        |FROM sz GROUP BY 1""".stripMargin),
+    // hubness: the knn-join CTE + a zero-inclusive k-occurrence
+    // rollup (the LEFT join back onto the corpus counts anti-hubs)
+    q("sim_hubness", Similarity.hubness(_, _),
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
         |      FROM e),
-        |bkt AS (SELECT vec_id, v, nrm,
+        |bkt AS MATERIALIZED (SELECT vec_id, v, nrm,
         |  list_sum([CASE WHEN
         |    list_sum([v[i+1] *
         |      ((((j*64+i)*2654435761) & 4294967295) / 4294967296.0 - 0.5)
@@ -3218,59 +2336,103 @@ object SparkEntry {
         |    THEN (1::BIGINT << (5-j)) ELSE 0::BIGINT END
         |    for j in range(0,6)]) AS bucket
         |  FROM n),
-        |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, bucket
-        |      FROM bkt WHERE vec_id < 20),
-        |qp AS (SELECT query_id, qv, qn, xor(bucket, m) AS bucket
-        |       FROM q, LATERAL unnest([0, 1, 2, 4, 8, 16, 32, 3, 5, 9,
-        |         17, 33, 6, 10, 18, 34, 12, 20, 36, 24, 40, 48]) v(m)),
-        |s AS (SELECT query_id, c.vec_id AS neighbor_id,
-        |  list_sum([qv[i+1]*c.v[i+1] for i in range(0,len(qv))])
-        |   / (qn * c.nrm) AS cos
-        | FROM qp JOIN bkt c USING (bucket) WHERE c.vec_id <> query_id)
-        |SELECT query_id, rk, neighbor_id FROM (
+        |s AS (SELECT a.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |  list_sum([a.v[i+1]*c.v[i+1] for i in range(0,len(a.v))])
+        |   / (a.nrm * c.nrm) AS cos
+        | FROM bkt a JOIN bkt c
+        |   ON a.bucket = c.bucket AND c.vec_id <> a.vec_id),
+        |knn AS (SELECT query_id, neighbor_id FROM (
         | SELECT query_id, neighbor_id, row_number() OVER
         |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
         | FROM s) t
-        |WHERE rk <= 5""".stripMargin,
-    "sim_ann_ivf" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
-        |      FROM e),
-        |tot AS (SELECT greatest(count(*)//16, 1) AS stride FROM e),
-        |cents AS (SELECT (vec_id // stride) AS cidx, v AS cv, nrm AS cn
-        |          FROM n, tot
-        |          WHERE vec_id % stride = 0 AND vec_id // stride < 16),
-        |cs AS (SELECT n.vec_id, cidx,
-        |  list_sum([n.v[i+1]*cv[i+1] for i in range(0,len(cv))])
-        |   / (n.nrm * cn) AS ccos
-        | FROM n CROSS JOIN cents),
-        |assign AS (SELECT vec_id, cidx AS cell FROM (
-        |  SELECT vec_id, cidx, row_number() OVER
-        |   (PARTITION BY vec_id ORDER BY ccos DESC, cidx) AS r FROM cs) t
-        |  WHERE r = 1),
-        |probes AS (SELECT vec_id AS query_id, cidx AS cell FROM (
-        |  SELECT vec_id, cidx, row_number() OVER
-        |   (PARTITION BY vec_id ORDER BY ccos DESC, cidx) AS r
-        |  FROM cs WHERE vec_id < 20) t
-        |  WHERE r <= 4),
-        |corpus AS (SELECT a.vec_id, a.cell, n.v, n.nrm
-        |           FROM assign a JOIN n USING (vec_id)),
-        |qv AS (SELECT p.query_id, p.cell, n.v AS qv, n.nrm AS qn
-        |       FROM probes p JOIN n ON n.vec_id = p.query_id),
-        |s AS (SELECT query_id, c.vec_id AS neighbor_id,
-        |  list_sum([qv[i+1]*c.v[i+1] for i in range(0,len(qv))])
-        |   / (qn * c.nrm) AS cos
-        | FROM qv JOIN corpus c USING (cell) WHERE c.vec_id <> query_id)
-        |SELECT query_id, rk, neighbor_id FROM (
-        | SELECT query_id, neighbor_id, row_number() OVER
-        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-        | FROM s) t
-        |WHERE rk <= 5""".stripMargin,
+        | WHERE rk <= 5),
+        |occ AS (SELECT neighbor_id AS vec_id, COUNT(*) AS n_k
+        |        FROM knn GROUP BY 1)
+        |SELECT COALESCE(occ.n_k, 0) AS k_occurrences,
+        |  CAST(COUNT(*) AS BIGINT) AS n_vectors
+        |FROM e LEFT JOIN occ ON e.vec_id = occ.vec_id
+        |GROUP BY 1""".stripMargin),
+    // GENERATED oracle (Dedup.bucketHistogramOracleSql): shared-
+    // family signatures at the production perm count, unpivoted to
+    // (band, slice) rows
+    q("dedup_bucket_histogram", Dedup.bucketHistogram(_, _),
+      Dedup.bucketHistogramOracleSql()),
+    // substitutes: bounded top-N candidates, left join for the
+    // zero-co-occurrence signal, HUGEINT lift
+    q("graph_substitutes", Graph.substitutePairs(_, _),
+      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |           FROM lineitem),
+        |nb AS (SELECT pk, COUNT(*) AS n FROM li GROUP BY 1),
+        |tot AS (SELECT COUNT(DISTINCT ok) AS nb_total FROM li),
+        |top AS (SELECT pk, n FROM nb ORDER BY n DESC, pk LIMIT 40),
+        |pc AS (SELECT a.pk AS s, b.pk AS t, COUNT(*) AS n_st
+        |       FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
+        |       GROUP BY 1, 2),
+        |pr AS (SELECT a.pk AS part_a, b.pk AS part_b,
+        |    a.n AS n_a, b.n AS n_b, COALESCE(pc.n_st, 0) AS n_ab
+        |  FROM top a JOIN top b ON a.pk < b.pk
+        |  LEFT JOIN pc ON pc.s = a.pk AND pc.t = b.pk)
+        |SELECT part_a, part_b, CAST(n_a AS BIGINT) AS n_a,
+        |  CAST(n_b AS BIGINT) AS n_b, CAST(n_ab AS BIGINT) AS n_ab,
+        |  CAST(CAST(n_ab AS HUGEINT) * nb_total * 1000000
+        |    // (CAST(n_a AS HUGEINT) * n_b) AS BIGINT) AS lift_ppm
+        |FROM pr CROSS JOIN tot
+        |WHERE CAST(n_ab AS HUGEINT) * nb_total * 1000000
+        |  // (CAST(n_a AS HUGEINT) * n_b) < 500000""".stripMargin),
+    // ppl mix: the lm_score CTEs + the literal (rk-1)*5//n quintile
+    // formula (ntile's remainder distribution differs — not used)
+    q("pipeline_ppl_mix", TextAnalysis.pplMix(_, _),
+      """WITH toks AS (
+        | SELECT doc_id,
+        |  list_filter(string_split(lower(text), ' '), t -> t <> '') AS t
+        | FROM documents),
+        |bg AS (
+        | SELECT doc_id, u.w1 AS w1, u.w2 AS w2 FROM (
+        |  SELECT doc_id, unnest([{'w1': t[i], 'w2': t[i + 1]}
+        |    for i in range(1, greatest(len(t), 1))]) AS u
+        |  FROM toks) x),
+        |cb AS (SELECT w1, w2, COUNT(*) AS cb FROM bg GROUP BY 1, 2),
+        |cu AS (SELECT w1, COUNT(*) AS cu FROM bg GROUP BY 1),
+        |pd AS (
+        | SELECT bg.doc_id, COUNT(*) AS n_bigrams,
+        |  CAST(SUM((cb.cb * 1000000) // cu.cu) AS BIGINT) AS sum_ppm
+        | FROM bg JOIN cb USING (w1, w2) JOIN cu USING (w1)
+        | GROUP BY 1),
+        |sc AS (SELECT d.doc_id, d.source,
+        |    pd.sum_ppm // pd.n_bigrams AS avg_ppm,
+        |    pd.n_bigrams + 1 AS toks
+        |  FROM documents d JOIN pd USING (doc_id)),
+        |r AS (SELECT *,
+        |    row_number() OVER (ORDER BY avg_ppm, doc_id) AS rk,
+        |    COUNT(*) OVER () AS n
+        |  FROM sc),
+        |cells AS (SELECT source, (rk - 1) * 5 // n AS quintile,
+        |    COUNT(*) AS n_docs, SUM(toks) AS cell_toks
+        |  FROM r GROUP BY 1, 2)
+        |SELECT source, CAST(quintile AS BIGINT) AS quintile,
+        |  CAST(n_docs AS BIGINT) AS n_docs,
+        |  CAST(cell_toks AS BIGINT) AS cell_toks,
+        |  CAST(cell_toks * 1000000 //
+        |    SUM(cell_toks) OVER (PARTITION BY source) AS BIGINT)
+        |    AS tok_share_ppm
+        |FROM cells""".stripMargin),
+    // duplicate orders: equi-join on the customer key, date band as
+    // a post-join filter, exact-cents proximity score
+    q("dq_duplicate_orders", Quality.duplicateOrders(_, _),
+      """WITH o AS (SELECT o_orderkey AS okey, o_custkey AS ck,
+        |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+        |      AS cents,
+        |    CAST(o_orderdate AS DATE) AS dt FROM orders)
+        |SELECT a.ck AS cust_id, a.okey AS okey_a, b.okey AS okey_b,
+        |  CAST(abs(date_diff('day', a.dt, b.dt)) AS BIGINT) AS day_gap,
+        |  abs(a.cents - b.cents) * 1000000
+        |    // greatest(a.cents, b.cents) AS amount_delta_ppm
+        |FROM o a JOIN o b ON a.ck = b.ck AND a.okey < b.okey
+        |WHERE abs(date_diff('day', a.dt, b.dt)) <= 3""".stripMargin),
     // greedy non-overlapping (?1)(?2) matching has a closed form:
     // unmatched clicks = max(0, max prefix of (Σclicks − Σviews)),
     // provable by the greedy invariant (parenthesis matching)
-    "analytics_sequence_count" ->
+    q("analytics_sequence_count", Analytics.sequenceCount(_, _),
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
         |  CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS c,
         |  CASE WHEN event_type = 'view' THEN 1 ELSE 0 END AS v
@@ -3285,11 +2447,11 @@ object SparkEntry {
         | FROM r GROUP BY 1)
         |SELECT n_clicks - unmatched AS n_matches,
         |  COUNT(*) AS n_users
-        |FROM u GROUP BY 1""".stripMargin,
+        |FROM u GROUP BY 1""".stripMargin),
     // (?1)(?t<W)(?2): a qualifying pair exists iff some view's FIRST
     // following click (by (us, event_id)) lands within the gap —
     // same reversed-frame running-min basis as the funnel family
-    "analytics_sequence_match_time" ->
+    q("analytics_sequence_match_time", Analytics.sequenceMatchTime(_, _),
       """WITH e AS (SELECT user_id, event_id, event_type AS t,
         |    epoch_us(ts) AS us FROM events
         |  WHERE event_type IN ('view', 'click')),
@@ -3305,10 +2467,10 @@ object SparkEntry {
         | FROM w GROUP BY 1)
         |SELECT CAST(matched AS BIGINT) AS matched,
         | COUNT(*) AS n_users
-        |FROM pu GROUP BY 1""".stripMargin,
+        |FROM pu GROUP BY 1""".stripMargin),
     // first_match/forward: anchor = first view, adjacency to the
     // click, then the event right after it
-    "analytics_sequence_next_node" ->
+    q("analytics_sequence_next_node", Analytics.sequenceNextNode(_, _),
       """WITH e AS (SELECT user_id, event_id, event_type AS t,
         |    epoch_us(ts) AS us FROM events),
         |w AS (SELECT user_id, t, us, event_id,
@@ -3325,10 +2487,10 @@ object SparkEntry {
         |       ELSE '(no match)' END AS next_node
         | FROM v WHERE rn = 1)
         |SELECT next_node, COUNT(*) AS n_users
-        |FROM pu GROUP BY 1""".stripMargin,
+        |FROM pu GROUP BY 1""".stripMargin),
     // deltaSum = sum of positive day-over-day increments; explicit
     // CASE (NULL-vs-greatest semantics differ between engines)
-    "analytics_delta_sum" ->
+    q("analytics_delta_sum", Analytics.deltaSumGmv(_, _),
       s"""WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS dt,
          |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
          |    AS BIGINT)) AS BIGINT) AS g
@@ -3343,47 +2505,12 @@ object SparkEntry {
          |  ELSE (arg_max(g, dt) - arg_min(g, dt))
          |   // CAST(date_diff('day', MIN(dt), MAX(dt)) AS BIGINT)
          |  END AS bounding_ratio_cents_per_day
-         |FROM lg""".stripMargin,
-    // split unit is the near-dup CLUSTER canonical (the
-    // dedup_clusters closure), so cross-split leakage is
-    // structurally zero; same 8/1/1 mod-split as the rest
-    "pipeline_grouped_split" ->
-      """WITH RECURSIVE
-        |sh AS (
-        | SELECT DISTINCT doc_id, s FROM (
-        |  SELECT doc_id, unnest([substr(lower(text), i, 12)
-        |   for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
-        |  FROM documents) t),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-        |i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |pairs AS (SELECT id_a, id_b FROM i
-        |          JOIN sz sa ON sa.doc_id = id_a
-        |          JOIN sz sb ON sb.doc_id = id_b
-        |          WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, lbl) AS (
-        | SELECT DISTINCT src, src FROM edges
-        | UNION
-        | SELECT e.src, r.lbl FROM edges e, reach r WHERE e.dst = r.id),
-        |cl AS (SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM reach
-        |       GROUP BY 1),
-        |canon AS (SELECT d.doc_id,
-        |   COALESCE(cl.cluster_id, d.doc_id) AS canon
-        | FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id)
-        |SELECT CASE WHEN canon % 10 < 8 THEN 'train'
-        |            WHEN canon % 10 = 8 THEN 'val'
-        |            ELSE 'test' END AS split,
-        | COUNT(*) AS n_docs,
-        | COUNT(DISTINCT canon) AS n_clusters
-        |FROM canon GROUP BY 1""".stripMargin,
+         |FROM lg""".stripMargin),
     // strict_dedup funnel: EXISTS-over-anchors with first-match
     // steps; "first X after t" = reversed-frame running minima. The
     // first CLICK is pinned by the (us, event_id) struct min — a
     // bare-timestamp key would fan out on equal-microsecond clicks
-    "analytics_window_funnel_dedup" ->
+    q("analytics_window_funnel_dedup", Analytics.windowFunnelDedup(_, _),
       """WITH e AS (SELECT user_id, event_id, event_type AS t,
         |    epoch_us(ts) AS us FROM events
         |  WHERE event_type IN ('view', 'click', 'purchase')),
@@ -3418,10 +2545,10 @@ object SparkEntry {
         | FROM ch GROUP BY 1),
         |u AS (SELECT DISTINCT user_id FROM e)
         |SELECT COALESCE(lvl, 0) AS level, COUNT(*) AS users
-        |FROM u LEFT JOIN pu USING (user_id) GROUP BY 1""".stripMargin,
+        |FROM u LEFT JOIN pu USING (user_id) GROUP BY 1""".stripMargin),
     // exact weighted quantile: smallest value whose cumulative
     // weight reaches p·W — cross-multiplied in HUGEINT, no division
-    "analytics_weighted_quantiles" ->
+    q("analytics_weighted_quantiles", Analytics.weightedQuantiles(_, _),
       """WITH byval AS (SELECT
         |  CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
         |    AS v,
@@ -3440,10 +2567,45 @@ object SparkEntry {
         |   AS p90_cents,
         | MIN(CASE WHEN cw * 1000000 >= tw * 990000 THEN v END)
         |   AS p99_cents
-        |FROM cum""".stripMargin,
+        |FROM cum""".stripMargin),
+    // split unit is the near-dup CLUSTER canonical (the
+    // dedup_clusters closure), so cross-split leakage is
+    // structurally zero; same 8/1/1 mod-split as the rest
+    q("pipeline_grouped_split", TextAnalysis.groupedSplit(_, _),
+      """WITH RECURSIVE
+        |sh AS (
+        | SELECT DISTINCT doc_id, s FROM (
+        |  SELECT doc_id, unnest([substr(lower(text), i, 12)
+        |   for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
+        |  FROM documents) t),
+        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+        |i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
+        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+        |      GROUP BY 1, 2),
+        |pairs AS (SELECT id_a, id_b FROM i
+        |          JOIN sz sa ON sa.doc_id = id_a
+        |          JOIN sz sb ON sb.doc_id = id_b
+        |          WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5),
+        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+        |          UNION ALL SELECT id_b, id_a FROM pairs),
+        |reach(id, lbl) AS (
+        | SELECT DISTINCT src, src FROM edges
+        | UNION
+        | SELECT e.src, r.lbl FROM edges e, reach r WHERE e.dst = r.id),
+        |cl AS (SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM reach
+        |       GROUP BY 1),
+        |canon AS (SELECT d.doc_id,
+        |   COALESCE(cl.cluster_id, d.doc_id) AS canon
+        | FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id)
+        |SELECT CASE WHEN canon % 10 < 8 THEN 'train'
+        |            WHEN canon % 10 = 8 THEN 'val'
+        |            ELSE 'test' END AS split,
+        | COUNT(*) AS n_docs,
+        | COUNT(DISTINCT canon) AS n_clusters
+        |FROM canon GROUP BY 1""".stripMargin),
     // island head = key whose predecessor is absent; missing volume
     // is span arithmetic over the distinct key set
-    "dq_id_islands" ->
+    q("dq_id_islands", Quality.idIslands(_, _),
       """WITH k AS (SELECT DISTINCT o_orderkey AS k FROM orders),
         |h AS (SELECT COUNT(*) AS n_islands FROM k
         |      WHERE k - 1 NOT IN (SELECT k FROM k)),
@@ -3451,8 +2613,12 @@ object SparkEntry {
         |  CAST(MAX(k) - MIN(k) + 1 AS BIGINT) AS span FROM k)
         |SELECT n_keys, span,
         |  CAST(span - n_keys AS BIGINT) AS n_missing, n_islands
-        |FROM t, h""".stripMargin,
-    "sim_topk_bruteforce" ->
+        |FROM t, h""".stripMargin),
+    // GENERATED oracle (Dedup.lshRecallOracleSql): per-config band
+    // self-joins + the cross-multiplied exact-Jaccard truth
+    q("dedup_lsh_recall", Dedup.lshRecall(_, _),
+      Dedup.lshRecallOracleSql()),
+    q("sim_topk_bruteforce", Similarity.bruteForceTopK(_, _),
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
@@ -3467,30 +2633,133 @@ object SparkEntry {
         | SELECT query_id, neighbor_id, row_number() OVER
         |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
         | FROM s) t
-        |WHERE rk <= 5""".stripMargin,
-    // recall eval COMPOSED from the two graded index oracles: the
-    // sim_topk_bruteforce truth CTEs + the sim_ann_ivf index CTEs,
-    // semi-joined per (query, neighbor) — closes the r7 rows-only gap
-    "sim_recall_eval" ->
-      """WITH e AS MATERIALIZED (SELECT vec_id,
-        |           CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |n AS MATERIALIZED (SELECT vec_id, v,
-        |      sqrt(list_sum([x * x for x in v])) AS nrm FROM e),
+        |WHERE rk <= 5""".stripMargin),
+    // hybrid structured+vector query (AnalyticDB-V shape): the lang
+    // predicate pre-filters the corpus before any distance math
+    q("sim_filtered_ann", Similarity.filteredTopK(_, _),
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings),
+        |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
+        |      FROM e),
+        |c AS (SELECT n.* FROM n JOIN documents d ON n.vec_id = d.doc_id
+        |      WHERE d.lang = 'en'),
         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n
         |      WHERE vec_id < 20),
-        |sbf AS (SELECT query_id, e2.vec_id AS neighbor_id,
-        |  list_sum([qv[i + 1] * e2.v[i + 1] for i in range(0, len(qv))])
-        |   / (qn * e2.nrm) AS cos
-        | FROM q, n e2 WHERE e2.vec_id <> query_id),
-        |exact AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
+        |s AS (SELECT query_id, c.vec_id AS neighbor_id,
+        |  list_sum([qv[i + 1] * c.v[i + 1] for i in range(0, len(qv))])
+        |   / (qn * c.nrm) AS cos
+        | FROM q, c WHERE c.vec_id <> query_id)
+        |SELECT query_id, rk, neighbor_id FROM (
         | SELECT query_id, neighbor_id, row_number() OVER
         |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-        | FROM sbf) t WHERE rk <= 5),
+        | FROM s) t
+        |WHERE rk <= 5""".stripMargin),
+    q("sim_ann_lsh", Similarity.annLsh(_, _),
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings),
+        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
+        |      FROM e),
+        |bkt AS (SELECT vec_id, v, nrm,
+        |  list_sum([CASE WHEN
+        |    list_sum([v[i+1] *
+        |      ((((j*64+i)*2654435761) & 4294967295) / 4294967296.0 - 0.5)
+        |      for i in range(0,64)]) > 0
+        |    THEN (1::BIGINT << (5-j)) ELSE 0::BIGINT END
+        |    for j in range(0,6)]) AS bucket
+        |  FROM n),
+        |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, bucket
+        |      FROM bkt WHERE vec_id < 20),
+        |qp AS (SELECT query_id, qv, qn, xor(bucket, m) AS bucket
+        |       FROM q, LATERAL unnest([0, 1, 2, 4, 8, 16, 32, 3, 5, 9,
+        |         17, 33, 6, 10, 18, 34, 12, 20, 36, 24, 40, 48]) v(m)),
+        |s AS (SELECT query_id, c.vec_id AS neighbor_id,
+        |  list_sum([qv[i+1]*c.v[i+1] for i in range(0,len(qv))])
+        |   / (qn * c.nrm) AS cos
+        | FROM qp JOIN bkt c USING (bucket) WHERE c.vec_id <> query_id)
+        |SELECT query_id, rk, neighbor_id FROM (
+        | SELECT query_id, neighbor_id, row_number() OVER
+        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
+        | FROM s) t
+        |WHERE rk <= 5""".stripMargin),
+    q("sim_knn_join", Similarity.knnJoin(_, _),
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings),
+        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
+        |      FROM e),
+        |bkt AS (SELECT vec_id, v, nrm,
+        |  list_sum([CASE WHEN
+        |    list_sum([v[i+1] *
+        |      ((((j*64+i)*2654435761) & 4294967295) / 4294967296.0 - 0.5)
+        |      for i in range(0,64)]) > 0
+        |    THEN (1::BIGINT << (5-j)) ELSE 0::BIGINT END
+        |    for j in range(0,6)]) AS bucket
+        |  FROM n),
+        |s AS (SELECT a.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |  list_sum([a.v[i+1]*c.v[i+1] for i in range(0,len(a.v))])
+        |   / (a.nrm * c.nrm) AS cos
+        | FROM bkt a JOIN bkt c
+        |   ON a.bucket = c.bucket AND c.vec_id <> a.vec_id)
+        |SELECT query_id, rk, neighbor_id FROM (
+        | SELECT query_id, neighbor_id, row_number() OVER
+        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
+        | FROM s) t
+        |WHERE rk <= 5""".stripMargin),
+    // GENERATED oracle (Similarity.kmeansOracleSql): seeded
+    // farthest-first init (k unrolled stages) + 4 Lloyd rounds,
+    // every term engine-exact (integer-quantized sums, expanded
+    // metric, first-minimum tie-breaks) — no tolerance
+    q("sim_kmeans", Similarity.kmeansClusters(_, _),
+      Similarity.kmeansOracleSql(k = 8, iters = 4)),
+    // SemDeDup screening: the kmeans CTE nested verbatim, then
+    // within-cluster all-BIGINT cos² ppm + per-cluster top-5
+    q("sim_semdedup", Similarity.semDedupPairs(_, _),
+      Similarity.semDedupOracleSql(k = 8, iters = 4, topN = 5)),
+    // PQ replayed end-to-end: same strided codebooks, same exact-
+    // integer subspace distances, same first-min code assignment,
+    // same ADC sum — bit-for-bit, so ranks hash-match
+    q("sim_ann_pq", Similarity.annPq(_, _),
+      """WITH emb AS (
+        |  SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
+        |    x -> CAST(round(x * 1000) AS DOUBLE)) AS v
+        |  FROM embeddings),
+        |tot AS (SELECT COUNT(*) AS n FROM emb),
+        |seeds AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j, v
+        |          FROM emb, tot
+        |          WHERE vec_id % greatest(1, n // 16) = 0
+        |            AND vec_id // greatest(1, n // 16) < 16),
+        |dists AS (SELECT e.vec_id, g.u, s.j,
+        |    list_sum(list_transform(range(2),
+        |      i -> (e.v[g.u * 2 + i + 1] - s.v[g.u * 2 + i + 1])
+        |         * (e.v[g.u * 2 + i + 1] - s.v[g.u * 2 + i + 1]))) AS dist
+        |  FROM emb e CROSS JOIN range(0, 32) AS g(u) CROSS JOIN seeds s),
+        |codes AS (SELECT vec_id, u, j AS code FROM (
+        |    SELECT vec_id, u, j, row_number() OVER (
+        |      PARTITION BY vec_id, u ORDER BY dist, j) AS rn FROM dists) t
+        |  WHERE rn = 1),
+        |adc AS (SELECT dq.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    SUM(dq.dist) AS adist
+        |  FROM codes c
+        |  JOIN dists dq ON dq.u = c.u AND dq.j = c.code
+        |  WHERE dq.vec_id < 20 AND c.vec_id <> dq.vec_id
+        |  GROUP BY 1, 2)
+        |SELECT query_id, rk, neighbor_id FROM (
+        | SELECT query_id, neighbor_id, row_number() OVER (
+        |   PARTITION BY query_id ORDER BY adist, neighbor_id) AS rk
+        | FROM adc) t
+        |WHERE rk <= 5""".stripMargin),
+    // the two graded CTE chains composed verbatim: IVF assign/probes
+    // on raw-double cosine, PQ codes/LUT on quantized L2, ADC only
+    // within probed cells
+    q("sim_ann_ivfpq", Similarity.annIvfPq(_, _),
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings),
+        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
+        |      FROM e),
         |tot AS (SELECT greatest(count(*)//16, 1) AS stride FROM e),
         |cents AS (SELECT (vec_id // stride) AS cidx, v AS cv, nrm AS cn
         |          FROM n, tot
         |          WHERE vec_id % stride = 0 AND vec_id // stride < 16),
-        |cs AS MATERIALIZED (SELECT n.vec_id, cidx,
+        |cs AS (SELECT n.vec_id, cidx,
         |  list_sum([n.v[i+1]*cv[i+1] for i in range(0,len(cv))])
         |   / (n.nrm * cn) AS ccos
         | FROM n CROSS JOIN cents),
@@ -3503,31 +2772,2145 @@ object SparkEntry {
         |   (PARTITION BY vec_id ORDER BY ccos DESC, cidx) AS r
         |  FROM cs WHERE vec_id < 20) t
         |  WHERE r <= 4),
-        |corpus AS (SELECT a.vec_id, a.cell, n.v, n.nrm
-        |           FROM assign a JOIN n USING (vec_id)),
-        |qv2 AS (SELECT p.query_id, p.cell, n.v AS qv, n.nrm AS qn
-        |       FROM probes p JOIN n ON n.vec_id = p.query_id),
-        |sivf AS (SELECT query_id, c.vec_id AS neighbor_id,
-        |  list_sum([qv[i+1]*c.v[i+1] for i in range(0,len(qv))])
-        |   / (qn * c.nrm) AS cos
-        | FROM qv2 JOIN corpus c USING (cell) WHERE c.vec_id <> query_id),
-        |approx AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-        | SELECT query_id, neighbor_id, row_number() OVER
-        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-        | FROM sivf) t WHERE rk <= 5),
-        |hits AS (SELECT ex.query_id, CAST(count(*) AS BIGINT) AS n_hits
-        |  FROM exact ex JOIN approx a USING (query_id, neighbor_id)
-        |  GROUP BY 1)
-        |SELECT qs.query_id, COALESCE(h.n_hits, 0) AS n_hits,
-        |  COALESCE(h.n_hits, 0) * 1000000 // 5 AS recall_ppm
-        |FROM (SELECT DISTINCT query_id FROM exact) qs
-        |LEFT JOIN hits h USING (query_id)""".stripMargin,
+        |emb AS (
+        |  SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
+        |    x -> CAST(round(x * 1000) AS DOUBLE)) AS v
+        |  FROM embeddings),
+        |seeds AS (SELECT row_number() OVER (ORDER BY e2.vec_id) - 1 AS j,
+        |           e2.v
+        |          FROM emb e2, tot
+        |          WHERE e2.vec_id % stride = 0
+        |            AND e2.vec_id // stride < 16),
+        |dists AS (SELECT e2.vec_id, g.u, s2.j,
+        |    list_sum(list_transform(range(2),
+        |      i -> (e2.v[g.u * 2 + i + 1] - s2.v[g.u * 2 + i + 1])
+        |         * (e2.v[g.u * 2 + i + 1] - s2.v[g.u * 2 + i + 1]))) AS dist
+        |  FROM emb e2 CROSS JOIN range(0, 32) AS g(u) CROSS JOIN seeds s2),
+        |codes AS (SELECT vec_id, u, j AS code FROM (
+        |    SELECT vec_id, u, j, row_number() OVER (
+        |      PARTITION BY vec_id, u ORDER BY dist, j) AS rn FROM dists) t
+        |  WHERE rn = 1),
+        |adc AS (SELECT p.query_id, c.vec_id AS neighbor_id,
+        |    SUM(dq.dist) AS adist
+        |  FROM probes p
+        |  JOIN assign a ON a.cell = p.cell
+        |  JOIN codes c ON c.vec_id = a.vec_id
+        |  JOIN dists dq ON dq.vec_id = p.query_id
+        |   AND dq.u = c.u AND dq.j = c.code
+        |  WHERE c.vec_id <> p.query_id
+        |  GROUP BY 1, 2)
+        |SELECT query_id, rk, neighbor_id FROM (
+        | SELECT query_id, neighbor_id, row_number() OVER (
+        |   PARTITION BY query_id ORDER BY adist, neighbor_id) AS rk
+        | FROM adc) t
+        |WHERE rk <= 5""".stripMargin),
+    q("dedup_cross_source", Dedup.crossSourceOverlap(_, _),
+      """WITH sh AS (
+        | SELECT DISTINCT doc_id, CAST(substr(source, 4) AS INT) AS src_n, s
+        | FROM (
+        |  SELECT doc_id, source, unnest([substr(lower(text), i, 12)
+        |   for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
+        |  FROM documents) t),
+        |tr AS (SELECT doc_id AS train_id, s FROM sh WHERE src_n < 10),
+        |ev AS (SELECT doc_id AS eval_id, s FROM sh WHERE src_n >= 10)
+        |SELECT train_id, eval_id, COUNT(*) AS shared_ct
+        |FROM tr JOIN ev ON tr.s = ev.s
+        |GROUP BY 1, 2 HAVING COUNT(*) >= 30""".stripMargin),
+    // first-occurrence segment dedup, replayed with a window in
+    // DuckDB; md5 of the reassembled text grades content-exact
+    q("dedup_chunks", Dedup.chunkDedup(_, _),
+      """WITH tk AS (
+        | SELECT doc_id,
+        |  list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
+        | FROM documents),
+        |ch AS (
+        | SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
+        |  array_to_string(t[i*10+1 : i*10+10], ' ') AS chunk
+        | FROM (SELECT doc_id, t,
+        |        unnest(range(greatest(CAST(ceil(len(t) / 10.0) AS BIGINT), 1)))
+        |         AS i
+        |       FROM tk) u),
+        |k AS (
+        | SELECT doc_id, chunk_idx, chunk, row_number() OVER (
+        |   PARTITION BY chunk ORDER BY doc_id, chunk_idx) AS rn
+        | FROM ch),
+        |re AS (
+        | SELECT doc_id, COUNT(*) AS n_kept,
+        |  string_agg(chunk, ' ' ORDER BY chunk_idx) AS kept_text
+        | FROM k WHERE rn = 1 GROUP BY 1)
+        |SELECT tk.doc_id,
+        | greatest(CAST(ceil(len(t) / 10.0) AS BIGINT), 1) AS n_chunks,
+        | coalesce(re.n_kept, 0) AS n_kept,
+        | CASE WHEN re.n_kept > 0 THEN md5(re.kept_text) END AS kept_md5
+        |FROM tk LEFT JOIN re ON tk.doc_id = re.doc_id""".stripMargin),
+    // the Bloom prefilter is confirmed exactly, so the oracle is the
+    // plain set-overlap anti-join — the answer must be identical at
+    // any false-positive rate
+    q("dedup_bloom_decontaminate", Dedup.bloomDecontaminate(_, _),
+      """WITH t AS (
+        | SELECT doc_id, CAST(substr(source, 4) AS INT) AS src_n,
+        |  lower(text) AS lt
+        | FROM documents),
+        |sh AS (
+        | SELECT doc_id, src_n, unnest([substr(lt, i, 12)
+        |  for i in range(1, greatest(length(lt) - 10, 2))]) AS sg
+        | FROM t),
+        |ev AS (SELECT DISTINCT sg FROM sh WHERE src_n >= 10),
+        |bad AS (SELECT DISTINCT doc_id FROM sh
+        |        WHERE src_n < 10 AND sg IN (SELECT sg FROM ev))
+        |SELECT doc_id FROM t
+        |WHERE src_n < 10 AND doc_id NOT IN (SELECT doc_id FROM bad)""".stripMargin),
+    q("dedup_containment", Dedup.containment(_, _),
+      """WITH sh AS (
+        | SELECT DISTINCT doc_id, s FROM (
+        |  SELECT doc_id, unnest([substr(lower(text), i, 12)
+        |   for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
+        |  FROM documents) t),
+        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+        |i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
+        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+        |      GROUP BY 1, 2)
+        |SELECT id_a, id_b,
+        | CAST(c AS DOUBLE) / sa.n AS c_ab,
+        | CAST(c AS DOUBLE) / sb.n AS c_ba
+        |FROM i JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
+        |WHERE greatest(CAST(c AS DOUBLE) / sa.n,
+        |               CAST(c AS DOUBLE) / sb.n) >= 0.8""".stripMargin),
+    // same blocking, same 40-char heads, same classic Levenshtein
+    q("dedup_edit_distance", Dedup.editDistancePairs(_, _),
+      """WITH h AS (
+        | SELECT doc_id, substr(lower(text), 1, 40) AS head,
+        |  substr(lower(text), 1, 8) AS blk
+        | FROM documents)
+        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        | levenshtein(a.head, b.head) AS dist
+        |FROM h a JOIN h b ON a.blk = b.blk AND a.doc_id < b.doc_id
+        |WHERE levenshtein(a.head, b.head) <= 10""".stripMargin),
+    // integer-ppm MLE conditionals: engine-exact where log-probs
+    // would not be; sums cast back to BIGINT (DuckDB SUM is HUGEINT)
+    q("text_lm_score", TextAnalysis.lmScore(_, _),
+      """WITH toks AS (
+        | SELECT doc_id,
+        |  list_filter(string_split(lower(text), ' '), t -> t <> '') AS t
+        | FROM documents),
+        |bg AS (
+        | SELECT doc_id, u.w1 AS w1, u.w2 AS w2 FROM (
+        |  SELECT doc_id, unnest([{'w1': t[i], 'w2': t[i + 1]}
+        |    for i in range(1, greatest(len(t), 1))]) AS u
+        |  FROM toks) x),
+        |cb AS (SELECT w1, w2, COUNT(*) AS cb FROM bg GROUP BY 1, 2),
+        |cu AS (SELECT w1, COUNT(*) AS cu FROM bg GROUP BY 1),
+        |pd AS (
+        | SELECT bg.doc_id, COUNT(*) AS n_bigrams,
+        |  CAST(SUM((cb.cb * 1000000) // cu.cu) AS BIGINT) AS sum_ppm
+        | FROM bg JOIN cb USING (w1, w2) JOIN cu USING (w1)
+        | GROUP BY 1)
+        |SELECT d.doc_id, pd.n_bigrams, pd.sum_ppm,
+        | pd.sum_ppm // pd.n_bigrams AS avg_ppm
+        |FROM documents d LEFT JOIN pd USING (doc_id)""".stripMargin),
+    q("text_repetition", TextAnalysis.repetitionStats(_, _),
+      """WITH toks AS (SELECT doc_id,
+        |  list_filter(string_split(lower(text), ' '), x -> x <> '') AS tk
+        | FROM documents),
+        |tc AS (SELECT doc_id, tok, COUNT(*) AS c FROM (
+        |  SELECT doc_id, unnest(tk) AS tok FROM toks) t GROUP BY 1, 2),
+        |tt AS (SELECT doc_id, MAX(c) AS top_token_ct,
+        |       CAST(SUM(c) AS BIGINT) AS n_tokens FROM tc GROUP BY 1),
+        |bc AS (SELECT doc_id, bgm, COUNT(*) AS c FROM (
+        |  SELECT doc_id, unnest([tk[i] || ' ' || tk[i+1]
+        |    for i in range(1, len(tk))]) AS bgm FROM toks) t GROUP BY 1, 2),
+        |bt AS (SELECT doc_id, MAX(c) AS top_bigram_ct,
+        |       CAST(SUM(c) AS BIGINT) AS n_bigrams,
+        |       COUNT(*) AS distinct_bigrams FROM bc GROUP BY 1)
+        |SELECT tt.doc_id, n_tokens, top_token_ct, top_bigram_ct,
+        | n_bigrams, distinct_bigrams,
+        | 1.0 - CAST(distinct_bigrams AS DOUBLE)
+        |  / NULLIF(CAST(n_bigrams AS DOUBLE), 0) AS dup_bigram_frac
+        |FROM tt LEFT JOIN bt ON tt.doc_id = bt.doc_id""".stripMargin),
+    q("corpus_sample_stratified", TextAnalysis.sampleStratified(_, _),
+      """SELECT doc_id, lang, source, bucket FROM (
+        | SELECT doc_id, lang, source,
+        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT
+        |   % 100 AS BIGINT) AS bucket
+        | FROM documents) t
+        |WHERE bucket < CASE WHEN lang = 'en' THEN 20
+        |                    WHEN lang = 'de' THEN 40 ELSE 80 END""".stripMargin),
+    // same md5 sort key both engines (lowercase hex, ASCII order);
+    // doc_id tiebreak makes the top-k deterministic
+    q("corpus_sample_bottomk", TextAnalysis.sampleBottomK(_, _),
+      """SELECT doc_id, lang, source, rk FROM (
+        | SELECT doc_id, lang, source, row_number() OVER (
+        |   PARTITION BY lang
+        |   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
+        | FROM documents) t
+        |WHERE rk <= 100""".stripMargin),
+    // the sequential fill-with-reset recurrence replayed as a
+    // recursive CTE walking rn order per source — first-fit-in-order
+    // bin ids must match the mapPartitions linear pass exactly
+    q("pipeline_pack_greedy", TextAnalysis.packGreedy(_, _),
+      """WITH RECURSIVE d AS (
+        | SELECT source, doc_id,
+        |  CAST(len(list_filter(string_split(lower(text), ' '),
+        |    x -> x <> '')) AS BIGINT) AS nt,
+        |  row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
+        | FROM documents),
+        |p AS (
+        | SELECT source, doc_id, rn, nt, nt AS fill, CAST(0 AS BIGINT) AS bin
+        | FROM d WHERE rn = 1
+        | UNION ALL
+        | SELECT d.source, d.doc_id, d.rn, d.nt,
+        |  CASE WHEN p.fill + d.nt <= 128 THEN p.fill + d.nt ELSE d.nt END,
+        |  CASE WHEN p.fill + d.nt <= 128 THEN p.bin ELSE p.bin + 1 END
+        | FROM p JOIN d ON d.source = p.source AND d.rn = p.rn + 1)
+        |SELECT source, doc_id, nt AS n_tokens, bin AS bin_id
+        |FROM p""".stripMargin),
+    // identical double arithmetic both sides: T = min(n/target), then
+    // per-lang floor(min(T*target/n, 1) * 1e6) ppm thresholds over
+    // the same md5 bucket as corpus_sample_stratified
+    q("pipeline_domain_mix", TextAnalysis.domainMix(_, _),
+      """WITH tg AS (SELECT * FROM (VALUES ('en', 0.30), ('de', 0.20),
+        |  ('es', 0.20), ('fr', 0.15), ('zh', 0.15)) t(lang, target)),
+        |c AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY 1),
+        |j AS (SELECT c.lang, c.n, tg.target FROM c JOIN tg USING (lang)),
+        |tm AS (SELECT MIN(CAST(n AS DOUBLE) / target) AS t FROM j),
+        |r AS (SELECT lang, CAST(floor(least(
+        |        (t * target) / CAST(n AS DOUBLE), 1.0) * 1000000) AS BIGINT)
+        |       AS accept_ppm
+        |      FROM j, tm)
+        |SELECT doc_id, dd.lang, source, bucket_ppm FROM (
+        | SELECT doc_id, lang, source,
+        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT
+        |   % 1000000 AS BIGINT) AS bucket_ppm
+        | FROM documents) dd
+        |JOIN r ON dd.lang = r.lang
+        |WHERE bucket_ppm < accept_ppm""".stripMargin),
+    // the scalable two-pass enumeration (range partition + offset
+    // pass) must equal the single-sort window formulation exactly
+    q("corpus_assign_ids", TextAnalysis.assignStableIds(_, _),
+      """SELECT doc_id,
+        | CAST(row_number() OVER (ORDER BY doc_id) - 1 AS BIGINT)
+        |  AS stable_id
+        |FROM documents""".stripMargin),
+    q("text_langid", TextAnalysis.langId(_, _),
+      """SELECT doc_id, pred_lang,
+        | CASE WHEN pred_lang = lang THEN 1 ELSE 0 END AS label_match
+        |FROM (
+        | SELECT doc_id, lang, CASE
+        |  WHEN regexp_matches(lower(text), '[一-鿿]') THEN 'zh'
+        |  WHEN regexp_matches(lower(text), '[぀-ヿ]') THEN 'ja'
+        |  WHEN regexp_matches(lower(text), '[Ѐ-ӿ]') THEN 'ru'
+        |  WHEN regexp_matches(lower(text), '[äöüß]') THEN 'de'
+        |  WHEN regexp_matches(lower(text), '[àâçèéêëîïôùû]') THEN 'fr'
+        |  WHEN regexp_matches(lower(text), '[áíñóú]') THEN 'es'
+        |  WHEN regexp_matches(lower(text), '(^| )(the|and|of|to|a|is)( |$)')
+        |   THEN 'en'
+        |  ELSE 'und' END AS pred_lang
+        | FROM documents) t""".stripMargin),
+    q("text_quality", TextAnalysis.quality(_, _),
+      """SELECT doc_id,
+        | CAST(length(text) AS BIGINT) AS n_chars_calc,
+        | CAST(len(toks) AS BIGINT) AS n_tokens,
+        | CAST(list_sum([length(x) for x in toks]) AS DOUBLE)
+        |  / NULLIF(CAST(len(toks) AS DOUBLE), 0) AS mean_token_len,
+        | stop_ct / NULLIF(n_toks, 0) AS stopword_ratio,
+        | alpha / NULLIF(n_chars, 0) AS alpha_ratio,
+        | stop_ct / NULLIF(n_toks, 0) * 0.3 + alpha / NULLIF(n_chars, 0) * 0.4
+        |  + least(n_toks / 100.0, 1.0) * 0.3 AS quality_score
+        |FROM (
+        | SELECT doc_id, text, toks,
+        |  CAST(length(text) AS DOUBLE) AS n_chars,
+        |  CAST(len(toks) AS DOUBLE) AS n_toks,
+        |  CAST(len(list_filter(toks, x -> list_contains(
+        |   ['the','a','of','and','to','is','in','that','it','for'], x)))
+        |   AS DOUBLE) AS stop_ct,
+        |  CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g'))
+        |   AS DOUBLE) AS alpha
+        | FROM (SELECT doc_id, text,
+        |        list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+        |       FROM documents) a) b""".stripMargin),
+    q("text_tokens", TextAnalysis.tokens(_, _),
+      """SELECT doc_id,
+        | CAST(len(list_filter(string_split(lower(text), ' '),
+        |  x -> x <> '')) AS BIGINT) AS ws_tokens,
+        | CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
+        |  x -> x <> '')) AS BIGINT) AS re_tokens,
+        | CAST(length(text) AS BIGINT) AS n_chars_calc
+        |FROM documents""".stripMargin),
+    // hashed-feature linear quality model: token → mod-prime fold →
+    // bucket → Knuth-hash weight; mean weight per doc, all-integer.
+    // DuckDB's init-less list_reduce equals Spark's 0-seeded fold
+    // here because f(0, x) = x for this lambda.
+    q("text_quality_model", TextAnalysis.qualityModelScore(_, _),
+      """WITH t AS (SELECT doc_id, source,
+        |  list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+        | FROM documents)
+        |SELECT doc_id, source,
+        | CAST(len(toks) AS BIGINT) AS n_tokens,
+        | CAST(coalesce(list_sum(list_transform(toks, t ->
+        |   ((list_reduce([CAST(ascii(substr(t, i, 1)) AS BIGINT)
+        |       for i in range(1, length(t) + 1)],
+        |     (a, x) -> (a * 31 + x) % 9007199254740881) % 4096)
+        |    * 2654435761) % 2003)), 0)
+        |  // greatest(len(toks), 1) AS BIGINT) AS score_milli,
+        | CAST(CASE WHEN coalesce(list_sum(list_transform(toks, t ->
+        |   ((list_reduce([CAST(ascii(substr(t, i, 1)) AS BIGINT)
+        |       for i in range(1, length(t) + 1)],
+        |     (a, x) -> (a * 31 + x) % 9007199254740881) % 4096)
+        |    * 2654435761) % 2003)), 0)
+        |  // greatest(len(toks), 1) >= 1000 THEN 1 ELSE 0 END AS INT)
+        |  AS keep
+        |FROM t""".stripMargin),
+    q("text_fingerprint", TextAnalysis.fingerprintGroups(_, _),
+      """SELECT md5(array_to_string(list_sort(list_distinct(
+        |  list_filter(string_split(lower(text), ' '), x -> x <> ''))), ' '))
+        |  AS fp,
+        | MIN(doc_id) AS keep_id, COUNT(*) AS dup_ct
+        |FROM documents GROUP BY 1""".stripMargin),
+    q("mm_binary_meta", Multimodal.binaryMeta(_, _),
+      """SELECT doc_id,
+        | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+        | substr(hex(encode(text)), 1, 8) AS magic,
+        | md5(text) AS checksum,
+        | source AS media_source
+        |FROM documents""".stripMargin),
+    // byte-exact chunk boundaries replayed on the hex rendering
+    // (2 hex chars = 1 byte; DuckDB has no blob substr)
+    q("mm_audio_chunks", Multimodal.audioChunks(_, _),
+      """SELECT doc_id, CAST(u.i AS BIGINT) AS chunk_idx,
+        | md5(u.c) AS chunk_md5,
+        | CAST(length(u.c) // 2 AS BIGINT) AS chunk_bytes
+        |FROM (
+        | SELECT doc_id, unnest([{'i': i,
+        |   'c': substr(hex(encode(text)), i * 512 + 1, 512)}
+        |   for i in range(0, CAST(ceil(
+        |     octet_length(encode(text)) * 2 / 512.0) AS INT))]) AS u
+        | FROM documents) x""".stripMargin),
+    // PCM-8 energy/peak per chunk: hex-pair byte decode (strpos-17
+    // arithmetic identical both engines), Σ(v-128)^2 and max|v-128|
+    q("mm_audio_energy", Multimodal.audioEnergy(_, _),
+      """SELECT doc_id, CAST(u.i AS BIGINT) AS chunk_idx,
+        | CAST(length(u.c) // 2 AS BIGINT) AS chunk_bytes,
+        | CAST(list_sum(list_transform(smp, v ->
+        |   (v - 128) * (v - 128))) AS BIGINT) AS energy,
+        | CAST(list_max(list_transform(smp, v ->
+        |   abs(v - 128))) AS BIGINT) AS peak
+        |FROM (
+        | SELECT doc_id, u, list_transform(
+        |   range(1, length(u.c) // 2 + 1), i ->
+        |     strpos('0123456789ABCDEF', substr(u.c, 2*i-1, 1)) * 16
+        |     + strpos('0123456789ABCDEF', substr(u.c, 2*i, 1)) - 17)
+        |   AS smp
+        | FROM (
+        |  SELECT doc_id, unnest([{'i': i,
+        |    'c': substr(hex(encode(text)), i * 512 + 1, 512)}
+        |    for i in range(0, CAST(ceil(
+        |      octet_length(encode(text)) * 2 / 512.0) AS INT))]) AS u
+        |  FROM documents) x) y""".stripMargin),
+    // the Spark side ENCODES a real PNG per doc (javax.imageio) and
+    // DECODES it back; the oracle recomputes the generation
+    // arithmetic, so a hash match proves the codec roundtrip
+    q("mm_image_dims", Multimodal.imageDims(_, _),
+      """SELECT doc_id,
+        | CAST(8 + doc_id % 24 AS BIGINT) AS width,
+        | CAST(8 + (doc_id * 7) % 24 AS BIGINT) AS height,
+        | CAST((doc_id * 31) % 256 AS BIGINT) AS px00
+        |FROM documents""".stripMargin),
+    // all-integer drift surface: band counts + ppm shares + 1pp flag
+    // (the float PSI is Σ(pa−pb)·ln(pa/pb) over exactly these shares)
+    q("dq_drift_psi", Quality.driftPsi(_, _),
+      """WITH o AS (
+        | SELECT o_orderdate < TIMESTAMP '1998-01-01' AS is_a,
+        |  LEAST(9, CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT) // 5000000) AS band
+        | FROM orders),
+        |b AS (SELECT band, COUNT(*) FILTER (WHERE is_a) AS a_ct,
+        |        COUNT(*) FILTER (WHERE NOT is_a) AS b_ct
+        |      FROM o GROUP BY 1),
+        |t AS (SELECT CAST(SUM(a_ct) AS BIGINT) AS a_tot,
+        |        CAST(SUM(b_ct) AS BIGINT) AS b_tot FROM b)
+        |SELECT band, a_ct, b_ct,
+        | a_ct * 1000000 // a_tot AS a_ppm,
+        | b_ct * 1000000 // b_tot AS b_ppm,
+        | CAST(abs(a_ct * 1000000 // a_tot - b_ct * 1000000 // b_tot)
+        |   > 10000 AS BIGINT) AS drift_flag
+        |FROM b CROSS JOIN t""".stripMargin),
+    // lag-1/lag-7 Pearson off one window sort; exact DECIMAL moments,
+    // identical double formula both engines (same as analytics_corr)
+    q("analytics_autocorr", Analytics.autocorrGmv(_, _),
+      """WITH daily AS (
+        | SELECT CAST(o_orderdate AS DATE) AS dt,
+        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS BIGINT) AS g
+        | FROM orders GROUP BY 1),
+        |l AS (SELECT g, lag(g, 1) OVER (ORDER BY dt) AS g_1,
+        |        lag(g, 7) OVER (ORDER BY dt) AS g_7 FROM daily),
+        |p AS (SELECT lag_d, g, gp FROM l, LATERAL (VALUES
+        |        (1, g_1), (7, g_7)) v(lag_d, gp) WHERE gp IS NOT NULL),
+        |mo AS (SELECT lag_d, COUNT(*) AS n,
+        |  SUM(CAST(g AS DECIMAL(19,0))) AS sx,
+        |  SUM(CAST(gp AS DECIMAL(19,0))) AS sy,
+        |  SUM(CAST(CAST(g AS DECIMAL(19,0)) * CAST(gp AS DECIMAL(19,0))
+        |    AS DECIMAL(38,0))) AS sxy,
+        |  SUM(CAST(CAST(g AS DECIMAL(19,0)) * CAST(g AS DECIMAL(19,0))
+        |    AS DECIMAL(38,0))) AS sxx,
+        |  SUM(CAST(CAST(gp AS DECIMAL(19,0)) * CAST(gp AS DECIMAL(19,0))
+        |    AS DECIMAL(38,0))) AS syy
+        | FROM p GROUP BY 1)
+        |SELECT lag_d, n,
+        | round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+        |    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+        |  / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+        |   * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
+        |  AS autocorr
+        |FROM mo""".stripMargin),
+    // AND-of-terms boolean retrieval: distinct terms per doc, HAVING
+    // = the posting intersection
+    q("text_search_conjunctive", TextAnalysis.searchConjunctive(_, _),
+      """SELECT doc_id, COUNT(*) AS n_hit FROM (
+        | SELECT doc_id, unnest(list_distinct(list_filter(
+        |   string_split(lower(text), ' '), x -> x <> ''))) AS term
+        | FROM documents) u
+        |WHERE term IN ('spark', 'window', 'merge')
+        |GROUP BY 1 HAVING COUNT(*) = 3""".stripMargin),
+    // BM25 ranks; per-term partials pivoted and summed in literal
+    // term order so the float total is expression-deterministic
+    q("text_bm25_topk", TextAnalysis.bm25TopK(_, _),
+      """WITH dl AS (SELECT doc_id, CAST(len(list_filter(
+        |   string_split(lower(text), ' '), x -> x <> '')) AS BIGINT) AS dl
+        |  FROM documents),
+        |st AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_len FROM dl),
+        |tf AS (SELECT doc_id, t AS term, COUNT(*) AS tf FROM (
+        |   SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '),
+        |     x -> x <> '')) AS t FROM documents) u
+        |  WHERE t IN ('hash', 'join', 'spark') GROUP BY 1, 2),
+        |dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
+        |p AS (SELECT tf.doc_id, tf.term,
+        |   ln((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5) + 1.0) *
+        |   (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 *
+        |     CAST(dl.dl * n_docs AS DOUBLE) / CAST(tot_len AS DOUBLE)))
+        |   AS sc
+        |  FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id)
+        |  CROSS JOIN st),
+        |pv AS (SELECT doc_id,
+        |   coalesce(MAX(CASE WHEN term = 'hash' THEN sc END), 0.0) AS s1,
+        |   coalesce(MAX(CASE WHEN term = 'join' THEN sc END), 0.0) AS s2,
+        |   coalesce(MAX(CASE WHEN term = 'spark' THEN sc END), 0.0) AS s3
+        |  FROM p GROUP BY 1)
+        |SELECT doc_id, rk FROM (
+        | SELECT doc_id, CAST(row_number() OVER (
+        |   ORDER BY s1 + s2 + s3 DESC, doc_id) AS BIGINT) AS rk FROM pv) t
+        |WHERE rk <= 10""".stripMargin),
+    // sorted-neighborhood slide replayed with the same partitioned
+    // window order; pair set is engine-exact
+    q("dedup_sorted_neighborhood", Dedup.sortedNeighborhoodPairs(_, _),
+      """WITH h AS (SELECT doc_id, substr(lower(text), 1, 40) AS head,
+        |   substr(lower(text), 1, 1) AS pfx FROM documents),
+        |l AS (SELECT doc_id, head,
+        |  lead(doc_id, 1) OVER w AS nid_1, lead(head, 1) OVER w AS nhead_1,
+        |  lead(doc_id, 2) OVER w AS nid_2, lead(head, 2) OVER w AS nhead_2,
+        |  lead(doc_id, 3) OVER w AS nid_3, lead(head, 3) OVER w AS nhead_3
+        | FROM h WINDOW w AS (PARTITION BY pfx ORDER BY head, doc_id)),
+        |p AS (SELECT doc_id, head, nid, nhead FROM l, LATERAL (VALUES
+        |   (nid_1, nhead_1), (nid_2, nhead_2), (nid_3, nhead_3))
+        |   v(nid, nhead) WHERE nid IS NOT NULL)
+        |SELECT LEAST(doc_id, nid) AS id_a, GREATEST(doc_id, nid) AS id_b,
+        | levenshtein(head, nhead) AS dist
+        |FROM p WHERE levenshtein(head, nhead) <= 10""".stripMargin),
+    // strong-subgraph (n_st >= 2) common-neighbor candidates minus
+    // existing edges; integer-ppm Jaccard over exact degrees
+    q("graph_link_predict", Graph.commonNeighborPairs(_, _),
+      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |  FROM lineitem),
+        |e AS (SELECT a.pk AS s, b.pk AS t, COUNT(*) AS n_st
+        |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
+        |      GROUP BY 1, 2),
+        |se AS (SELECT s, t FROM e WHERE n_st >= 2),
+        |und AS (SELECT s AS w, t AS n FROM se
+        |        UNION ALL SELECT t, s FROM se),
+        |deg AS (SELECT w, COUNT(*) AS deg FROM und GROUP BY 1),
+        |wedge AS (SELECT a.n AS u, b.n AS v, COUNT(*) AS cn
+        |          FROM und a JOIN und b ON a.w = b.w AND a.n < b.n
+        |          GROUP BY 1, 2),
+        |ne AS (SELECT u, v, cn FROM wedge
+        |       WHERE NOT EXISTS (SELECT 1 FROM se
+        |         WHERE se.s = wedge.u AND se.t = wedge.v))
+        |SELECT u, v, cn,
+        | cn * 1000000 // (du.deg + dv.deg - cn) AS jaccard_ppm
+        |FROM ne JOIN deg du ON ne.u = du.w
+        | JOIN deg dv ON ne.v = dv.w""".stripMargin),
+    // KMV set algebra replayed bit-for-bit: union bottom-k over the
+    // same 48-bit hashes, membership flags reduced per hash, integer
+    // ρ-scaled intersection estimate
+    q("analytics_kmv_intersection", graft.warehouse.Sketched.kmvIntersection(_, _),
+      """WITH pu AS (
+        | SELECT user_id,
+        |  MAX(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS in_a,
+        |  MAX(CASE WHEN event_type = 'cart' THEN 1 ELSE 0 END) AS in_b
+        | FROM events WHERE event_type IN ('view', 'cart') GROUP BY 1),
+        |ph AS (SELECT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)),
+        |    1, 12))::UBIGINT AS BIGINT) AS h,
+        |   MAX(in_a) AS in_a, MAX(in_b) AS in_b
+        |  FROM pu GROUP BY 1),
+        |bk AS (SELECT h, in_a, in_b,
+        |   row_number() OVER (ORDER BY h) AS rk FROM ph),
+        |agg AS (SELECT COUNT(*) AS n_kept, MAX(h) AS hk,
+        |   CAST(SUM(in_a * in_b) AS BIGINT) AS n_both
+        |  FROM bk WHERE rk <= 64),
+        |u AS (SELECT n_kept, n_both,
+        |   CAST(CASE WHEN n_kept < 64 THEN n_kept
+        |        ELSE 17732923532771328 // hk END AS BIGINT) AS est_union
+        |  FROM agg)
+        |SELECT n_kept, n_both, est_union,
+        | n_both * est_union // n_kept AS est_inter FROM u""".stripMargin),
+    // the native bitmap aggregate must equal the exact distinct
+    q("analytics_bitmap_uv", graft.warehouse.Sketched.bitmapDailyUv(_, _),
+      """SELECT CAST(ts AS DATE) AS dt, COUNT(DISTINCT user_id) AS uv
+        |FROM events GROUP BY 1""".stripMargin),
+    // stored-day-bitmap OR+popcount must equal the semi-join rolling
+    // WAU (the bitmap algebra is exact, so the ground truth IS the
+    // oracle); calendar-range window on both sides
+    q("analytics_bitmap_range_uv", graft.warehouse.Sketched.bitmapRangeUv(_, _),
+      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
+        |            FROM events),
+        |days AS (SELECT DISTINCT day FROM ud),
+        |x AS (SELECT user_id, day + CAST(o AS INT) AS day
+        |      FROM ud CROSS JOIN range(0, 7) r(o))
+        |SELECT x.day, COUNT(DISTINCT x.user_id) AS wau_ct
+        |FROM x SEMI JOIN days ON x.day = days.day
+        |GROUP BY 1""".stripMargin),
+    // MATCH_RECOGNIZE-lite: ordered per-user path string, greedy
+    // regex counted identically by Java regex and RE2
+    q("analytics_seq_pattern", Analytics.seqPattern(_, _),
+      """WITH seq AS (
+        | SELECT user_id, string_agg(event_type, ','
+        |   ORDER BY epoch_us(ts), event_id) AS path
+        | FROM events GROUP BY 1)
+        |SELECT user_id, CAST(len(regexp_extract_all(path,
+        |   'view,(click,)+purchase')) AS BIGINT) AS n_hits
+        |FROM seq
+        |WHERE len(regexp_extract_all(path,
+        |   'view,(click,)+purchase')) > 0""".stripMargin),
+    // windowFunnel: the DP fold must equal the declarative EXISTS
+    // definition — max L with a strict chain inside ONE window
+    // anchored at its first event
+    q("analytics_window_funnel", Analytics.windowFunnel(_, _),
+      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us
+        |  FROM events
+        |  WHERE event_type IN ('view', 'click', 'purchase')),
+        |u AS (SELECT DISTINCT user_id FROM e),
+        |lvl AS (SELECT u.user_id,
+        | CASE WHEN EXISTS (SELECT 1 FROM e v, e c, e p
+        |   WHERE v.user_id = u.user_id AND c.user_id = u.user_id
+        |     AND p.user_id = u.user_id
+        |     AND v.event_type = 'view' AND c.event_type = 'click'
+        |     AND p.event_type = 'purchase'
+        |     AND c.us > v.us AND p.us > c.us
+        |     AND p.us <= v.us + 86400000000) THEN 3
+        |  WHEN EXISTS (SELECT 1 FROM e v, e c
+        |   WHERE v.user_id = u.user_id AND c.user_id = u.user_id
+        |     AND v.event_type = 'view' AND c.event_type = 'click'
+        |     AND c.us > v.us AND c.us <= v.us + 86400000000) THEN 2
+        |  WHEN EXISTS (SELECT 1 FROM e v
+        |   WHERE v.user_id = u.user_id
+        |     AND v.event_type = 'view') THEN 1
+        |  ELSE 0 END AS level
+        | FROM u)
+        |SELECT level, COUNT(*) AS users FROM lvl GROUP BY 1""".stripMargin),
+    // bitmap cohort algebra must equal COUNT(DISTINCT) set algebra
+    q("analytics_bitmap_audience", graft.warehouse.Sketched.bitmapAudience(_, _),
+      """WITH a AS (SELECT DISTINCT user_id FROM events
+        |           WHERE event_type = 'click'),
+        |b AS (SELECT DISTINCT user_id FROM events
+        |      WHERE event_type = 'purchase')
+        |SELECT (SELECT COUNT(*) FROM a) AS n_a,
+        |       (SELECT COUNT(*) FROM b) AS n_b,
+        |       (SELECT COUNT(*) FROM a SEMI JOIN b USING (user_id))
+        |         AS n_both,
+        |       (SELECT COUNT(*) FROM a ANTI JOIN b USING (user_id))
+        |         AS n_a_only,
+        |       (SELECT COUNT(*) FROM b ANTI JOIN a USING (user_id))
+        |         AS n_b_only""".stripMargin),
+    // temperature mixing: round(sqrt(n)*1e6) is the ONLY float op —
+    // IEEE sqrt is correctly rounded in both engines, so the weight
+    // is engine-exact; everything after is integer ppm
+    q("pipeline_mix_temperature", TextAnalysis.mixTemperature(_, _),
+      """WITH c AS (SELECT source, COUNT(*) AS n_docs,
+        |  CAST(round(sqrt(COUNT(*)) * 1000000) AS BIGINT) AS w
+        | FROM documents GROUP BY 1),
+        |t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS tot_n,
+        |             CAST(SUM(w) AS BIGINT) AS tot_w FROM c)
+        |SELECT source, n_docs,
+        |  n_docs * 1000000 // tot_n AS natural_ppm,
+        |  w * 1000000 // tot_w AS temp_ppm,
+        |  (w * 1000000 // tot_w) * 100000 // 1000000 AS target_docs
+        |FROM c, t""".stripMargin),
+    // split leakage: same md5 bucket as pipeline_split, same raw
+    // 12-gram join as dedup_cross_source (hash-join on the Spark
+    // side; 64-bit shingle collisions are negligible at any graded SF)
+    q("pipeline_split_leakage", TextAnalysis.splitLeakage(_, _),
+      """WITH base AS (
+        | SELECT doc_id,
+        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+        |    ::UBIGINT % 100 AS BIGINT) AS bucket,
+        |  lower(text) AS lt FROM documents),
+        |sh AS (
+        | SELECT DISTINCT doc_id,
+        |  CASE WHEN bucket < 80 THEN 0 WHEN bucket < 90 THEN 1
+        |       ELSE 2 END AS rk,
+        |  unnest([substr(lt, i, 12)
+        |    for i in range(1, greatest(length(lt) - 10, 2))]) AS s
+        | FROM base),
+        |p AS (
+        | SELECT a.rk AS rk_a, b.rk AS rk_b,
+        |        a.doc_id AS id_a, b.doc_id AS id_b
+        | FROM sh a JOIN sh b ON a.s = b.s AND a.rk < b.rk
+        | GROUP BY 1, 2, 3, 4 HAVING COUNT(*) >= 30)
+        |SELECT CASE rk_a WHEN 0 THEN 'train' WHEN 1 THEN 'val'
+        |       ELSE 'test' END AS split_a,
+        |       CASE rk_b WHEN 0 THEN 'train' WHEN 1 THEN 'val'
+        |       ELSE 'test' END AS split_b,
+        |       COUNT(*) AS leaked_pairs,
+        |       COUNT(DISTINCT id_b) AS contaminated_docs
+        |FROM p GROUP BY 1, 2""".stripMargin),
+    // dHash: the oracle recomputes all 64 bits from the synthetic
+    // pixel formula with NO decoder — a hash match proves the real
+    // PNG encode→decode→grid-sample→pack chain pixel-exact
+    q("mm_image_dhash", Multimodal.imageDHash(_, _),
+      """WITH g AS (
+        | SELECT doc_id, 8 + doc_id % 24 AS w,
+        |        8 + (doc_id * 7) % 24 AS h FROM documents),
+        |bits AS (
+        | SELECT doc_id, CAST(y*8 + x AS INT) AS pos,
+        |  CASE WHEN ((31*doc_id + 7*((x*w)//9) + 13*((y*h)//8)) % 256)
+        |     < ((31*doc_id + 7*(((x+1)*w)//9) + 13*((y*h)//8)) % 256)
+        |   THEN 1 ELSE 0 END AS b
+        | FROM g CROSS JOIN range(0,8) ry(y) CROSS JOIN range(0,8) rx(x)),
+        |hv AS (
+        | SELECT doc_id,
+        |  SUM(CASE WHEN b = 1
+        |      THEN (1::HUGEINT << CAST(63 - pos AS INT))
+        |      ELSE 0::HUGEINT END) AS hu
+        | FROM bits GROUP BY 1),
+        |sg AS (
+        | SELECT doc_id,
+        |  CAST(hu - CASE WHEN hu >= 9223372036854775808::HUGEINT
+        |    THEN 18446744073709551616::HUGEINT
+        |    ELSE 0::HUGEINT END AS BIGINT) AS dhash
+        | FROM hv)
+        |SELECT dhash, COUNT(*) AS n_images, MIN(doc_id) AS rep_id
+        |FROM sg GROUP BY 1""".stripMargin),
+    // 3σ c-chart with the decision cross-multiplied into integers:
+    // (n·x−S)² > 9(nΣx²−S²) — DECIMAL(38,0) vs HUGEINT, both exact
+    q("dq_spc_orders", Quality.spcOrders(_, _),
+      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS dt,
+        |  COUNT(*)::BIGINT AS x FROM orders GROUP BY 1),
+        |m AS (SELECT COUNT(*)::BIGINT AS n, CAST(SUM(x) AS BIGINT) AS sx,
+        |      CAST(SUM(x*x) AS BIGINT) AS sxx FROM daily)
+        |SELECT dt, x,
+        |  CASE WHEN n*x > sx THEN 'hi' ELSE 'lo' END AS side
+        |FROM daily, m
+        |WHERE (n*x - sx)::HUGEINT * (n*x - sx)::HUGEINT
+        |   > 9::HUGEINT * (n::HUGEINT * sxx::HUGEINT
+        |                   - sx::HUGEINT * sx::HUGEINT)""".stripMargin),
+    // pack spans = the pack oracle + a running sum over the same
+    // (source, bin) pack order
+    q("pipeline_pack_mask_spans", TextAnalysis.packMaskSpans(_, _),
+      """WITH RECURSIVE d AS (
+        | SELECT source, doc_id,
+        |  CAST(len(list_filter(string_split(lower(text), ' '),
+        |    x -> x <> '')) AS BIGINT) AS nt,
+        |  row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
+        | FROM documents),
+        |p AS (
+        | SELECT source, doc_id, rn, nt, nt AS fill, CAST(0 AS BIGINT) AS bin
+        | FROM d WHERE rn = 1
+        | UNION ALL
+        | SELECT d.source, d.doc_id, d.rn, d.nt,
+        |  CASE WHEN p.fill + d.nt <= 128 THEN p.fill + d.nt ELSE d.nt END,
+        |  CASE WHEN p.fill + d.nt <= 128 THEN p.bin ELSE p.bin + 1 END
+        | FROM p JOIN d ON d.source = p.source AND d.rn = p.rn + 1)
+        |SELECT source, doc_id, nt AS n_tokens, bin AS bin_id,
+        | CAST(COALESCE(SUM(nt) OVER (PARTITION BY source, bin
+        |   ORDER BY doc_id
+        |   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |  AS BIGINT) AS tok_start,
+        | CAST(COALESCE(SUM(nt) OVER (PARTITION BY source, bin
+        |   ORDER BY doc_id
+        |   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |  + nt - 1 AS BIGINT) AS tok_end
+        |FROM p""".stripMargin),
+    // ASCII-only string behaviors pinned cross-engine
+    q("analytics_string_parity", Analytics.stringParity(_, _),
+      """SELECT p_partkey,
+        | upper(p_name) AS up,
+        | lpad(p_brand, 12, '*') AS pad,
+        | replace(p_name, ' ', '_') AS snake,
+        | replace(p_brand, '#', '-') AS tr,
+        | reverse(p_brand) AS rev,
+        | repeat(p_brand, 2) AS rep2,
+        | CAST(instr(p_name, 'o') AS BIGINT) AS pos_o,
+        | array_to_string((string_split(p_name, ' '))[1:2], ' ') AS first2,
+        | CAST(length(trim(p_name)) AS BIGINT) AS trim_len
+        |FROM part""".stripMargin),
+    // TPC-DS q67 shape: one window over the rollup, rank ties broken
+    // on the dimension names so the top-k cut is deterministic
+    q("analytics_rollup_topk", Analytics.rollupTopK(_, _),
+      """WITH rev AS (
+        | SELECT r_name, n_name,
+        |  CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS BIGINT) AS cents
+        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |  JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey
+        |  JOIN region ON n_regionkey = r_regionkey
+        | GROUP BY ROLLUP (r_name, n_name)),
+        |rk AS (
+        | SELECT
+        |  CAST(CASE WHEN r_name IS NULL THEN 2
+        |       WHEN n_name IS NULL THEN 1 ELSE 0 END AS BIGINT) AS lvl,
+        |  COALESCE(r_name, 'ALL') AS region_name,
+        |  COALESCE(n_name, 'ALL') AS nation_name, cents,
+        |  CAST(row_number() OVER (
+        |    PARTITION BY (CASE WHEN r_name IS NULL THEN 2
+        |      WHEN n_name IS NULL THEN 1 ELSE 0 END)
+        |    ORDER BY cents DESC, COALESCE(r_name, 'ALL'),
+        |      COALESCE(n_name, 'ALL')) AS INT) AS rk
+        | FROM rev)
+        |SELECT lvl, region_name, nation_name, cents, rk
+        |FROM rk WHERE rk <= 3""".stripMargin),
+    // shard manifest: order-independent integer checksum (SUM of
+    // 48-bit md5 prefixes), so the grade is content-exact per shard
+    q("pipeline_shard_manifest", TextAnalysis.shardManifest(_, _),
+      """WITH sh AS (SELECT doc_id,
+        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+        |    ::UBIGINT % 16 AS BIGINT) AS shard,
+        |  CAST(('0x' || substr(md5(text), 1, 12))::UBIGINT AS BIGINT)
+        |    AS ck,
+        |  CAST(len(list_filter(string_split(lower(text), ' '),
+        |    x -> x <> '')) AS BIGINT) AS nt
+        | FROM documents)
+        |SELECT shard, COUNT(*) AS n_docs,
+        | CAST(SUM(nt) AS BIGINT) AS n_tokens,
+        | CAST(SUM(ck) AS BIGINT) AS checksum,
+        | MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
+        |FROM sh GROUP BY 1""".stripMargin),
+    // exact conversion-latency DISCRETE quantiles (rank-select in
+    // BIGINT micros — interpolation at this magnitude is sub-ulp)
+    q("analytics_funnel_time", Analytics.funnelTime(_, _),
+      """WITH v AS (SELECT user_id, MIN(epoch_us(ts)) AS vus
+        |  FROM events WHERE event_type = 'view' GROUP BY 1),
+        |p AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS pus
+        |  FROM events e JOIN v ON e.user_id = v.user_id
+        |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > v.vus
+        |  GROUP BY 1),
+        |dl AS (SELECT p.user_id, pus - vus AS delay_us
+        |       FROM p JOIN v ON p.user_id = v.user_id),
+        |nn AS (SELECT COUNT(*)::BIGINT AS n FROM dl),
+        |r AS (SELECT delay_us,
+        |       row_number() OVER (ORDER BY delay_us) - 1 AS rk FROM dl)
+        |SELECT
+        | (SELECT delay_us FROM r, nn WHERE rk = (n - 1) // 2) AS q50_us,
+        | (SELECT delay_us FROM r, nn
+        |  WHERE rk = ((n - 1) * 9) // 10) AS q90_us""".stripMargin),
+    // scaled-BIGINT reconciliation: cents·10⁸ line products, sign
+    // split so the ppm division only ever sees positive integers
+    q("dq_order_reconcile", Quality.orderReconcile(_, _),
+      """WITH lr AS (
+        | SELECT l_orderkey AS ok,
+        |  CAST(SUM(
+        |   CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+        |   * (10000 + CAST(CAST(l_tax AS DECIMAL(8,4)) * 10000 AS BIGINT))
+        |   * (10000 - CAST(CAST(l_discount AS DECIMAL(8,4)) * 10000
+        |       AS BIGINT))) AS BIGINT) AS rev_s
+        | FROM lineitem GROUP BY 1),
+        |j AS (
+        | SELECT
+        |  CASE WHEN tp_s >= rev_s THEN 1 ELSE -1 END AS sign,
+        |  abs(tp_s - rev_s) AS mag, tp_s
+        | FROM (SELECT o_orderkey,
+        |        CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+        |         * 100000000 AS tp_s FROM orders) o
+        |  JOIN lr ON o.o_orderkey = lr.ok),
+        |dr AS (SELECT CAST(sign * (mag::HUGEINT * 1000000 // tp_s::HUGEINT)
+        |       AS BIGINT) AS drift_ppm FROM j)
+        |SELECT COUNT(*) AS n_orders,
+        | COUNT(*) FILTER (WHERE drift_ppm = 0) AS n_exact,
+        | MIN(drift_ppm) AS min_ppm, MAX(drift_ppm) AS max_ppm,
+        | CAST(SUM(drift_ppm) AS BIGINT) AS sum_ppm
+        |FROM dr""".stripMargin),
+    // interval-union coverage: the same two-window island trick,
+    // replayed verbatim
+    q("temporal_interval_union", graft.operators.Temporal.intervalUnion(_, _),
+      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
+        |  epoch_us(ts) + 300000000 AS en FROM events),
+        |f AS (SELECT user_id, event_id, us, en,
+        |  CASE WHEN max(en) OVER (PARTITION BY user_id
+        |    ORDER BY us, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
+        |   OR us > max(en) OVER (PARTITION BY user_id
+        |    ORDER BY us, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+        |  THEN 1 ELSE 0 END AS fresh
+        | FROM e),
+        |g AS (SELECT user_id, us, en,
+        |  SUM(fresh) OVER (PARTITION BY user_id ORDER BY us, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+        | FROM f),
+        |i AS (SELECT user_id, island, MIN(us) AS st, MAX(en) AS en
+        |      FROM g GROUP BY 1, 2)
+        |SELECT user_id, COUNT(*) AS n_islands,
+        | CAST(SUM(en - st) AS BIGINT) AS covered_us
+        |FROM i GROUP BY 1""".stripMargin),
+    q("temporal_gaps", graft.operators.Temporal.intervalGaps(_, _),
+      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
+        |  epoch_us(ts) + 300000000 AS en FROM events),
+        |f AS (SELECT user_id, event_id, us, en,
+        |  CASE WHEN max(en) OVER (PARTITION BY user_id
+        |    ORDER BY us, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
+        |   OR us > max(en) OVER (PARTITION BY user_id
+        |    ORDER BY us, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+        |  THEN 1 ELSE 0 END AS fresh
+        | FROM e),
+        |g AS (SELECT user_id, us, en,
+        |  SUM(fresh) OVER (PARTITION BY user_id ORDER BY us, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+        | FROM f),
+        |i AS (SELECT user_id, island, MIN(us) AS st, MAX(en) AS en
+        |      FROM g GROUP BY 1, 2),
+        |j AS (SELECT user_id, st,
+        |  lag(en) OVER (PARTITION BY user_id ORDER BY island) AS prev_en
+        | FROM i)
+        |SELECT user_id, COUNT(prev_en) AS n_gaps,
+        | COALESCE(CAST(SUM(st - prev_en) AS BIGINT), 0) AS idle_us,
+        | COALESCE(CAST(MAX(st - prev_en) AS BIGINT), 0) AS max_gap_us
+        |FROM j GROUP BY 1""".stripMargin),
+    q("analytics_ab_cuped", Analytics.abCuped(_, _),
+      """WITH pu AS (
+        | SELECT user_id,
+        |  COALESCE(SUM(CASE WHEN event_type = 'purchase'
+        |      AND epoch_us(ts) < 1705363200000000
+        |    THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
+        |    END), 0) AS pre,
+        |  COALESCE(SUM(CASE WHEN event_type = 'purchase'
+        |      AND epoch_us(ts) >= 1705363200000000
+        |    THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
+        |    END), 0) AS post
+        | FROM events GROUP BY 1),
+        |m AS (SELECT user_id % 2 AS grp, COUNT(*) AS n,
+        |  SUM(CAST(pre AS DECIMAL(19,0))) AS sx,
+        |  SUM(CAST(post AS DECIMAL(19,0))) AS sy,
+        |  SUM(CAST(CAST(pre AS DECIMAL(19,0))
+        |    * CAST(post AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS sxy,
+        |  SUM(CAST(CAST(pre AS DECIMAL(19,0))
+        |    * CAST(pre AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS sxx,
+        |  SUM(CAST(CAST(post AS DECIMAL(19,0))
+        |    * CAST(post AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS syy
+        | FROM pu GROUP BY 1)
+        |SELECT grp, n, CAST(sx AS BIGINT) AS pre_cents,
+        | CAST(sy AS BIGINT) AS post_cents,
+        | round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+        |    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+        |  / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+        |    - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6) AS theta,
+        | round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+        |    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+        |  / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+        |   * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
+        |  AS corr_pre_post
+        |FROM m""".stripMargin),
+    q("analytics_price_volume_mix", Analytics.priceVolumeMix(_, _),
+      """WITH pp AS (
+        | SELECT l_partkey,
+        |  COALESCE(SUM(CASE WHEN year(l_shipdate) = 1996
+        |    THEN CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+        |      AS BIGINT) END), 0) AS rev0,
+        |  COALESCE(SUM(CASE WHEN year(l_shipdate) = 1996
+        |    THEN CAST(l_quantity AS BIGINT) END), 0) AS q0,
+        |  COALESCE(SUM(CASE WHEN year(l_shipdate) = 1997
+        |    THEN CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+        |      AS BIGINT) END), 0) AS rev1,
+        |  COALESCE(SUM(CASE WHEN year(l_shipdate) = 1997
+        |    THEN CAST(l_quantity AS BIGINT) END), 0) AS q1
+        | FROM lineitem WHERE year(l_shipdate) IN (1996, 1997)
+        | GROUP BY 1),
+        |eff AS (SELECT rev0, q0, rev1, q1,
+        |  (q0 > 0 AND q1 > 0) AS in_both,
+        |  rev0 // NULLIF(q0, 0) AS p0, rev1 // NULLIF(q1, 0) AS p1
+        | FROM pp)
+        |SELECT COUNT(*) FILTER (WHERE in_both) AS n_both,
+        | COUNT(*) FILTER (WHERE q0 = 0) AS n_new,
+        | COUNT(*) FILTER (WHERE q1 = 0) AS n_lost,
+        | CAST(SUM(CASE WHEN in_both THEN (p1 - p0) * q1 ELSE 0 END)
+        |   AS BIGINT) AS price_effect,
+        | CAST(SUM(CASE WHEN in_both THEN (q1 - q0) * p0 ELSE 0 END)
+        |   AS BIGINT) AS volume_effect,
+        | CAST(SUM(CASE WHEN in_both THEN rev1 - rev0
+        |     - (p1 - p0) * q1 - (q1 - q0) * p0 ELSE 0 END)
+        |   AS BIGINT) AS mix_residual,
+        | CAST(SUM(CASE WHEN q0 = 0 THEN rev1 ELSE 0 END)
+        |   AS BIGINT) AS new_effect,
+        | CAST(SUM(CASE WHEN q1 = 0 THEN -rev0 ELSE 0 END)
+        |   AS BIGINT) AS lost_effect,
+        | CAST(SUM(rev1 - rev0) AS BIGINT) AS total_delta
+        |FROM eff""".stripMargin),
+    q("layout_zonemap", graft.sources.ZOrder.zoneMapAudit(_, _),
+      """WITH li AS (SELECT l_orderkey, CAST(l_shipdate AS DATE) AS sd
+        |            FROM lineitem),
+        |fa AS (SELECT l_orderkey // 4096 AS file_id, COUNT(*) AS nrows,
+        |  MIN(sd) AS mn, MAX(sd) AS mx,
+        |  SUM(CASE WHEN sd >= DATE '1997-06-01'
+        |    AND sd < DATE '1997-07-01' THEN 1 ELSE 0 END) AS hits
+        | FROM li GROUP BY 1),
+        |ft AS (SELECT (sd - DATE '1970-01-01') // 7 AS file_id,
+        |  COUNT(*) AS nrows, MIN(sd) AS mn, MAX(sd) AS mx,
+        |  SUM(CASE WHEN sd >= DATE '1997-06-01'
+        |    AND sd < DATE '1997-07-01' THEN 1 ELSE 0 END) AS hits
+        | FROM li GROUP BY 1),
+        |r AS (
+        | SELECT 'arrival' AS layout, COUNT(*) AS n_files,
+        |  COUNT(*) FILTER (WHERE mx >= DATE '1997-06-01'
+        |    AND mn < DATE '1997-07-01') AS kept_files,
+        |  SUM(nrows) AS total_rows,
+        |  SUM(CASE WHEN mx >= DATE '1997-06-01'
+        |    AND mn < DATE '1997-07-01' THEN nrows ELSE 0 END)
+        |    AS scanned_rows,
+        |  SUM(hits) AS match_rows FROM fa
+        | UNION ALL
+        | SELECT 'time', COUNT(*),
+        |  COUNT(*) FILTER (WHERE mx >= DATE '1997-06-01'
+        |    AND mn < DATE '1997-07-01'),
+        |  SUM(nrows),
+        |  SUM(CASE WHEN mx >= DATE '1997-06-01'
+        |    AND mn < DATE '1997-07-01' THEN nrows ELSE 0 END),
+        |  SUM(hits) FROM ft)
+        |SELECT layout, n_files, kept_files,
+        | CAST((total_rows - scanned_rows) * 1000000 // total_rows
+        |   AS BIGINT) AS skip_ppm,
+        | CAST(CASE WHEN scanned_rows = 0 THEN 0 ELSE
+        |   (scanned_rows - match_rows) * 1000000 // scanned_rows END
+        |   AS BIGINT) AS waste_ppm,
+        | CAST(match_rows AS BIGINT) AS match_rows
+        |FROM r""".stripMargin),
+    q("sim_batch_diversity", Similarity.batchDiversity(_, _),
+      """WITH q AS (SELECT CAST(label AS BIGINT) AS label,
+        |  unnest(range(len(embedding))) AS dim,
+        |  unnest([CAST(trunc(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
+        |          for x in embedding]) AS q
+        | FROM embeddings),
+        |a AS (SELECT label, SUM(CAST(sq AS DECIMAL(19,0))
+        |    * CAST(sq AS DECIMAL(19,0))) AS a2
+        | FROM (SELECT label, dim, SUM(q) AS sq FROM q GROUP BY 1, 2)
+        | GROUP BY 1),
+        |b AS (SELECT label, SUM(CAST(q AS DECIMAL(19,0))
+        |    * CAST(q AS DECIMAL(19,0))) AS b2
+        | FROM q GROUP BY 1),
+        |n AS (SELECT CAST(label AS BIGINT) AS label, COUNT(*) AS n
+        |      FROM embeddings GROUP BY 1)
+        |SELECT label, n,
+        | round((CAST(a2 AS DOUBLE) - CAST(b2 AS DOUBLE))
+        |  / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1) * 1e12), 6)
+        |  AS mean_pair_cos
+        |FROM a JOIN b USING (label) JOIN n USING (label)""".stripMargin),
+    q("graph_modularity", Graph.brandModularity(_, _),
+      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |            FROM lineitem),
+        |e AS (SELECT DISTINCT a.pk AS s, b.pk AS t
+        |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
+        |eb AS (SELECT e.s, e.t, ps.p_brand AS sb, pt.p_brand AS tb
+        |       FROM e JOIN part ps ON e.s = ps.p_partkey
+        |        JOIN part pt ON e.t = pt.p_partkey),
+        |mm AS (SELECT COUNT(*) AS m FROM eb),
+        |dc AS (SELECT c, COUNT(*) AS d_c FROM (
+        |        SELECT sb AS c FROM eb
+        |        UNION ALL SELECT tb FROM eb) u GROUP BY 1),
+        |ic AS (SELECT sb AS c, COUNT(*) AS m_c FROM eb
+        |       WHERE sb = tb GROUP BY 1),
+        |pc AS (SELECT dc.c, dc.d_c, COALESCE(ic.m_c, 0) AS m_c
+        |       FROM dc LEFT JOIN ic ON dc.c = ic.c),
+        |g AS (SELECT COUNT(*) AS n_communities,
+        |  (SELECT m FROM mm) AS m_edges,
+        |  SUM(4 * (SELECT m FROM mm) * m_c - d_c * d_c) AS q_num
+        | FROM pc)
+        |SELECT n_communities, m_edges, CAST(q_num AS BIGINT) AS q_num,
+        | round(CAST(q_num AS DOUBLE) / (4.0 * CAST(m_edges AS DOUBLE)
+        |   * CAST(m_edges AS DOUBLE)), 6) AS modularity
+        |FROM g""".stripMargin),
+    q("analytics_restatement", graft.operators.Temporal.restatementReport(_, _),
+      """WITH o AS (SELECT CAST(o_orderdate AS DATE) AS od,
+        |  CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+        |    AS c,
+        |  (o_orderkey % 10 = 0) AS corr FROM orders),
+        |x AS (SELECT CAST(date_trunc('month', od) AS DATE) AS mth, c,
+        |  CASE WHEN corr THEN c + c // 20 ELSE c END AS cf, corr,
+        |  corr AND (od + 30 <= last_day(od) + 14) AS known
+        | FROM o)
+        |SELECT mth,
+        | CAST(SUM(CASE WHEN corr AND known THEN cf ELSE c END)
+        |   AS BIGINT) AS gmv_known_cents,
+        | CAST(SUM(cf) AS BIGINT) AS gmv_final_cents,
+        | COUNT(*) FILTER (WHERE corr AND NOT known) AS late_orders,
+        | CAST(SUM(cf) AS BIGINT)
+        |   - CAST(SUM(CASE WHEN corr AND known THEN cf ELSE c END)
+        |     AS BIGINT) AS restatement_cents
+        |FROM x GROUP BY 1""".stripMargin),
+    q("text_boilerplate", TextAnalysis.boilerplateRate(_, _),
+      """WITH sh AS (
+        | SELECT DISTINCT source, doc_id, s FROM (
+        |  SELECT source, doc_id, unnest([substr(lower(text), i, 12)
+        |   for i in range(1, greatest(length(lower(text)) - 10, 2))])
+        |    AS s
+        |  FROM documents) t),
+        |df AS (SELECT source, s, COUNT(*) AS df FROM sh GROUP BY 1, 2)
+        |SELECT source, COUNT(*) AS n_shingles,
+        | COUNT(*) FILTER (WHERE df >= 5) AS hot_shingles,
+        | CAST(SUM(CASE WHEN df >= 5 THEN df ELSE 0 END) * 1000000
+        |   // SUM(df) AS BIGINT) AS boilerplate_ppm
+        |FROM df GROUP BY 1""".stripMargin),
+    q("dq_heartbeat", Quality.heartbeatGaps(_, _),
+      """WITH b AS (SELECT DISTINCT CAST(ts AS DATE) AS dt,
+        |  epoch_us(ts) // 60000000 AS mb FROM events),
+        |w AS (SELECT dt, mb,
+        |  lag(mb) OVER (PARTITION BY dt ORDER BY mb) AS pmb FROM b)
+        |SELECT dt, COUNT(*) AS active_minutes,
+        | COALESCE(CAST(MAX(mb - pmb - 1) AS BIGINT), 0)
+        |   AS max_silent_min,
+        | CAST(MAX(mb) - MIN(mb) + 1 AS BIGINT) AS span_min,
+        | CAST((MAX(mb) - MIN(mb) + 1 - COUNT(*)) * 1000000
+        |   // (MAX(mb) - MIN(mb) + 1) AS BIGINT) AS silent_ppm
+        |FROM w GROUP BY 1""".stripMargin),
+    q("analytics_brand_penetration", Analytics.brandPenetration(_, _),
+      """WITH bo AS (SELECT p_brand AS brand, l_orderkey AS ok,
+        |  SUM(CAST(l_quantity AS BIGINT)) AS units,
+        |  SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS rev
+        | FROM lineitem JOIN part ON l_partkey = p_partkey
+        | GROUP BY 1, 2),
+        |t AS (SELECT COUNT(*) AS total_orders FROM orders)
+        |SELECT brand, COUNT(*) AS orders_w,
+        | CAST(SUM(units) AS BIGINT) AS units,
+        | CAST(SUM(rev) AS BIGINT) AS rev_cents,
+        | CAST(COUNT(*) * 1000000 // (SELECT total_orders FROM t)
+        |   AS BIGINT) AS penetration_ppm,
+        | CAST(SUM(units) * 1000000 // COUNT(*) AS BIGINT)
+        |   AS intensity_e6
+        |FROM bo GROUP BY 1""".stripMargin),
+    q("mm_audio_vad", Multimodal.audioVad(_, _),
+      """WITH y AS (
+        | SELECT doc_id, CAST(u.i AS BIGINT) AS chunk_idx,
+        |  list_transform(range(1, length(u.c) // 2 + 1), i ->
+        |    strpos('0123456789ABCDEF', substr(u.c, 2*i-1, 1)) * 16
+        |    + strpos('0123456789ABCDEF', substr(u.c, 2*i, 1)) - 17)
+        |   AS smp
+        | FROM (
+        |  SELECT doc_id, unnest([{'i': i,
+        |    'c': substr(hex(encode(text)), i * 512 + 1, 512)}
+        |    for i in range(0, CAST(ceil(
+        |      octet_length(encode(text)) * 2 / 512.0) AS INT))]) AS u
+        |  FROM documents) x),
+        |act AS (SELECT doc_id, chunk_idx FROM y
+        |  WHERE list_sum(list_transform(smp, v ->
+        |    (v - 128) * (v - 128))) >= 400000),
+        |w AS (SELECT doc_id, chunk_idx, lag(chunk_idx) OVER
+        |   (PARTITION BY doc_id ORDER BY chunk_idx) AS prev FROM act),
+        |f AS (SELECT doc_id, chunk_idx, CASE WHEN prev IS NULL
+        |   OR chunk_idx > prev + 1 THEN 1 ELSE 0 END AS fresh FROM w),
+        |g AS (SELECT doc_id, SUM(fresh) OVER (PARTITION BY doc_id
+        |   ORDER BY chunk_idx ROWS BETWEEN UNBOUNDED PRECEDING AND
+        |   CURRENT ROW) AS seg FROM f),
+        |sg AS (SELECT doc_id, seg, COUNT(*) AS len FROM g GROUP BY 1, 2)
+        |SELECT doc_id, COUNT(*) AS n_segments,
+        | CAST(SUM(len) AS BIGINT) AS active_frames,
+        | CAST(MAX(len) AS BIGINT) AS longest_seg
+        |FROM sg GROUP BY 1""".stripMargin),
+    q("pipeline_curriculum", TextAnalysis.curriculumSchedule(_, _),
+      """WITH t AS (SELECT doc_id, source,
+        |  list_filter(string_split(lower(text), ' '), x -> x <> '')
+        |    AS toks
+        | FROM documents),
+        |sc AS (SELECT doc_id, source, len(toks) AS n_toks,
+        |  CAST(coalesce(list_sum(list_transform(toks, t ->
+        |   ((list_reduce([CAST(ascii(substr(t, i, 1)) AS BIGINT)
+        |       for i in range(1, length(t) + 1)],
+        |     (a, x) -> (a * 31 + x) % 9007199254740881) % 4096)
+        |    * 2654435761) % 2003)), 0)
+        |  // greatest(len(toks), 1) AS BIGINT) AS score_milli
+        | FROM t),
+        |nt AS (SELECT source, n_toks, score_milli,
+        |  (row_number() OVER (ORDER BY score_milli DESC, doc_id) - 1)
+        |   * 4 // COUNT(*) OVER () + 1 AS phase
+        | FROM sc)
+        |SELECT CAST(phase AS BIGINT) AS phase, COUNT(*) AS n_docs,
+        | CAST(SUM(n_toks) AS BIGINT) AS total_tokens,
+        | CAST(SUM(score_milli) AS BIGINT) // COUNT(*)
+        |   AS mean_score_milli,
+        | COUNT(DISTINCT source) AS n_sources
+        |FROM nt GROUP BY 1""".stripMargin),
+    q("analytics_return_rate", Analytics.returnRate(_, _),
+      """SELECT string_split(p_type, ' ')[1] AS category,
+        | CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty,
+        | CAST(SUM(CASE WHEN l_returnflag = 'R'
+        |   THEN CAST(l_quantity AS BIGINT) ELSE 0 END) AS BIGINT)
+        |   AS ret_qty,
+        | CAST(SUM(CASE WHEN l_returnflag = 'R'
+        |   THEN CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+        |     AS BIGINT) ELSE 0 END) AS BIGINT) AS ret_rev_cents,
+        | CAST(SUM(CASE WHEN l_returnflag = 'R'
+        |   THEN CAST(l_quantity AS BIGINT) ELSE 0 END) * 1000000
+        |  // SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS return_ppm
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |GROUP BY 1""".stripMargin),
+    q("sim_centroid_outliers", Similarity.centroidOutliers(_, _),
+      """WITH q AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
+        |  unnest(range(len(embedding))) AS dim,
+        |  unnest([CAST(trunc(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
+        |          for x in embedding]) AS q
+        | FROM embeddings),
+        |sd AS (SELECT label, dim, CAST(SUM(q) AS BIGINT) AS sd
+        |       FROM q GROUP BY 1, 2),
+        |a2 AS (SELECT label, CAST(SUM(sd * sd) AS BIGINT) AS a2
+        |       FROM sd GROUP BY 1),
+        |n AS (SELECT CAST(label AS BIGINT) AS label, COUNT(*) AS n
+        |      FROM embeddings GROUP BY 1),
+        |pv AS (SELECT q.label, q.vec_id,
+        |  CAST(SUM(q.q * q.q) AS BIGINT) AS norm2,
+        |  CAST(SUM(q.q * sd.sd) AS BIGINT) AS ip
+        | FROM q JOIN sd ON q.label = sd.label AND q.dim = sd.dim
+        | GROUP BY 1, 2),
+        |sc AS (SELECT pv.label, pv.vec_id,
+        |  n.n * n.n * pv.norm2 - 2 * n.n * pv.ip + a2.a2 AS score
+        | FROM pv JOIN a2 ON pv.label = a2.label
+        |  JOIN n ON pv.label = n.label),
+        |r AS (SELECT label, vec_id, score, CAST(row_number() OVER
+        |  (PARTITION BY label ORDER BY score DESC, vec_id) AS BIGINT)
+        |   AS rk FROM sc)
+        |SELECT label, rk, vec_id, CAST(score AS BIGINT) AS score
+        |FROM r WHERE rk <= 5""".stripMargin),
+    q("analytics_price_realization", Analytics.priceRealization(_, _),
+      """SELECT p_brand AS brand,
+        | CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+        |   AS BIGINT)) AS BIGINT) AS rev_cents,
+        | CAST(SUM(CAST(l_quantity AS BIGINT)
+        |   * CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100
+        |     AS BIGINT)) AS BIGINT) AS list_cents,
+        | CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+        |   AS BIGINT)) * 1000000
+        |  // SUM(CAST(l_quantity AS BIGINT)
+        |   * CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100
+        |     AS BIGINT)) AS BIGINT) AS realization_ppm
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |GROUP BY 1""".stripMargin),
+    q("analytics_discount_tiers", Analytics.discountTiers(_, _),
+      """WITH t AS (SELECT CAST(l_quantity AS BIGINT) // 10 AS tier,
+        |  CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)
+        |    AS pct
+        | FROM lineitem),
+        |a AS (SELECT tier, COUNT(*) AS n_lines,
+        |  SUM(pct) * 10000 // COUNT(*) AS avg_disc_ppm
+        | FROM t GROUP BY 1)
+        |SELECT tier, n_lines, CAST(avg_disc_ppm AS BIGINT)
+        |  AS avg_disc_ppm,
+        | CAST(CASE WHEN lag(avg_disc_ppm) OVER (ORDER BY tier) IS NULL
+        |  OR avg_disc_ppm >= lag(avg_disc_ppm) OVER (ORDER BY tier)
+        |  THEN 1 ELSE 0 END AS BIGINT) AS monotone_ok
+        |FROM a""".stripMargin),
+    q("analytics_supplier_price_spread", Analytics.supplierPriceSpread(_, _),
+      """WITH ps AS (SELECT l_partkey, l_suppkey,
+        |  SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS rev,
+        |  SUM(CAST(l_quantity AS BIGINT)) AS qty
+        | FROM lineitem GROUP BY 1, 2),
+        |u AS (SELECT l_partkey, rev // qty AS unit_c FROM ps),
+        |p AS (SELECT l_partkey, COUNT(*) AS n_suppliers,
+        |  CAST(MIN(unit_c) AS BIGINT) AS min_unit_c,
+        |  CAST(MAX(unit_c) AS BIGINT) AS max_unit_c
+        | FROM u GROUP BY 1 HAVING COUNT(*) >= 2),
+        |sp AS (SELECT l_partkey, n_suppliers, min_unit_c, max_unit_c,
+        |  CAST((max_unit_c - min_unit_c) * 1000000 // min_unit_c
+        |    AS BIGINT) AS spread_ppm
+        | FROM p),
+        |r AS (SELECT *, CAST(row_number() OVER
+        |  (ORDER BY spread_ppm DESC, l_partkey) AS BIGINT) AS rk
+        | FROM sp)
+        |SELECT rk, l_partkey AS part_id, n_suppliers, min_unit_c,
+        | max_unit_c, spread_ppm
+        |FROM r WHERE rk <= 20""".stripMargin),
+    q("analytics_trade_balance", Analytics.tradeBalance(_, _),
+      """WITH ex AS (SELECT n_name AS nation,
+        |  SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS export_cents
+        | FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        | GROUP BY 1),
+        |im AS (SELECT n_name AS nation,
+        |  SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS import_cents
+        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |  JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey
+        | GROUP BY 1)
+        |SELECT COALESCE(ex.nation, im.nation) AS nation,
+        | CAST(COALESCE(export_cents, 0) AS BIGINT) AS export_cents,
+        | CAST(COALESCE(import_cents, 0) AS BIGINT) AS import_cents,
+        | CAST(COALESCE(export_cents, 0) - COALESCE(import_cents, 0)
+        |   AS BIGINT) AS net_cents
+        |FROM ex FULL OUTER JOIN im ON ex.nation = im.nation""".stripMargin),
+    q("dq_chi2_independence", Quality.chi2Independence(_, _),
+      """WITH cells AS (SELECT o_orderpriority AS prio,
+        |  o_orderstatus AS status, COUNT(*) AS o
+        | FROM orders GROUP BY 1, 2),
+        |m AS (SELECT prio, status, o,
+        |  SUM(o) OVER (PARTITION BY prio) AS r,
+        |  SUM(o) OVER (PARTITION BY status) AS c,
+        |  SUM(o) OVER () AS n
+        | FROM cells)
+        |SELECT prio, status, o,
+        | CAST(CAST(o * n - r * c AS HUGEINT)
+        |   * CAST(o * n - r * c AS HUGEINT) * 1000000
+        |  // (n * r * c) AS BIGINT) AS contrib_ppm
+        |FROM m""".stripMargin),
+    q("analytics_product_vintage", Analytics.productVintage(_, _),
+      """WITH li AS (SELECT l_partkey AS pk,
+        |  CAST(year(l_shipdate) * 12 + month(l_shipdate) - 1
+        |    AS BIGINT) AS m,
+        |  CAST(l_quantity AS BIGINT) AS q
+        | FROM lineitem),
+        |intro AS (SELECT pk, MIN(m) AS intro_m FROM li GROUP BY 1)
+        |SELECT intro.intro_m AS cohort_m,
+        | li.m - intro.intro_m AS rel_month,
+        | COUNT(DISTINCT li.pk) AS parts_active,
+        | CAST(SUM(q) AS BIGINT) AS units
+        |FROM li JOIN intro ON li.pk = intro.pk
+        |WHERE li.m - intro.intro_m <= 2
+        |GROUP BY 1, 2""".stripMargin),
+    q("dedup_weighted_jaccard", Dedup.weightedJaccard(_, _),
+      """WITH sh AS (
+        | SELECT DISTINCT doc_id, s FROM (
+        |  SELECT doc_id, unnest([substr(lower(text), i, 12)
+        |   for i in range(1, greatest(length(lower(text)) - 10, 2))])
+        |    AS s
+        |  FROM documents) t),
+        |dft AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY 1
+        |        HAVING COUNT(*) <= 50),
+        |wix AS (SELECT doc_id, sh.s, 1000000 // df AS w
+        |        FROM sh JOIN dft ON sh.s = dft.s),
+        |wd AS (SELECT doc_id, SUM(w) AS wsum FROM wix GROUP BY 1),
+        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |       SUM(a.w) AS sw
+        |      FROM wix a JOIN wix b ON a.s = b.s
+        |       AND a.doc_id < b.doc_id
+        |      GROUP BY 1, 2)
+        |SELECT id_a, id_b,
+        | CAST(sw * 1000000 // (wa.wsum + wb.wsum - sw) AS BIGINT)
+        |   AS wj_ppm
+        |FROM p JOIN wd wa ON wa.doc_id = id_a
+        | JOIN wd wb ON wb.doc_id = id_b
+        |WHERE sw * 1000000 // (wa.wsum + wb.wsum - sw)
+        |  >= 400000""".stripMargin),
+    q("dq_partition_checksums", Quality.partitionChecksums(_, _),
+      """WITH h AS (
+        | SELECT CAST(date_trunc('month', CAST(o_orderdate AS DATE))
+        |   AS DATE) AS mth,
+        |  CAST(('0x' || substr(md5(concat_ws('|',
+        |   o_orderkey, o_custkey, o_orderstatus,
+        |   CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR),
+        |   CAST(CAST(o_orderdate AS DATE) AS VARCHAR),
+        |   o_orderpriority)), 1, 12))::UBIGINT AS BIGINT) AS h
+        | FROM orders)
+        |SELECT mth, COUNT(*) AS n_rows,
+        | CAST(SUM(h) AS BIGINT) AS sum_hash, bit_xor(h) AS xor_hash
+        |FROM h GROUP BY 1""".stripMargin),
+    q("analytics_wallet_share", Analytics.walletShare(_, _),
+      """WITH sp AS (SELECT o_custkey AS cust,
+        |  SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS spend
+        | FROM orders GROUP BY 1),
+        |j AS (SELECT n_name AS nation, cust,
+        |  CAST(spend AS BIGINT) AS spend
+        | FROM sp JOIN customer ON cust = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey),
+        |w AS (SELECT nation, cust, spend,
+        |  SUM(spend) OVER (PARTITION BY nation) AS nation_total,
+        |  CAST(row_number() OVER (PARTITION BY nation
+        |    ORDER BY spend DESC, cust) AS BIGINT) AS rk
+        | FROM j)
+        |SELECT nation, rk, cust AS cust_id, spend AS spend_cents,
+        | CAST(spend * 1000000 // nation_total AS BIGINT) AS share_ppm
+        |FROM w WHERE rk <= 3""".stripMargin),
+    q("analytics_basket_shape", Analytics.basketShape(_, _),
+      """WITH l AS (SELECT l_orderkey AS ok, COUNT(*) AS n_lines
+        |           FROM lineitem GROUP BY 1),
+        |o AS (SELECT o_orderkey AS ok,
+        |  CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+        |    AS cents
+        | FROM orders)
+        |SELECT n_lines, COUNT(*) AS n_orders,
+        | CAST(SUM(cents) AS BIGINT) AS total_cents,
+        | CAST(SUM(cents) // COUNT(*) AS BIGINT) AS avg_order_cents
+        |FROM o JOIN l ON o.ok = l.ok GROUP BY 1""".stripMargin),
+    q("analytics_brand_affinity", Analytics.brandAffinity(_, _),
+      """WITH ob AS (SELECT DISTINCT l_orderkey AS ok, p_brand AS b
+        | FROM lineitem JOIN part ON l_partkey = p_partkey),
+        |n AS (SELECT COUNT(DISTINCT ok) AS n_orders FROM ob),
+        |cx AS (SELECT b, COUNT(*) AS c FROM ob GROUP BY 1),
+        |p AS (SELECT x.b AS brand_a, y.b AS brand_b, COUNT(*) AS c_ab
+        |      FROM ob x JOIN ob y ON x.ok = y.ok AND x.b < y.b
+        |      GROUP BY 1, 2),
+        |r AS (SELECT brand_a, brand_b, c_ab,
+        |  ca.c AS c_a, cb.c AS c_b,
+        |  CAST(row_number() OVER (ORDER BY c_ab DESC, brand_a,
+        |    brand_b) AS BIGINT) AS rk
+        | FROM p JOIN cx ca ON ca.b = brand_a
+        |  JOIN cx cb ON cb.b = brand_b)
+        |SELECT rk, brand_a, brand_b, c_ab,
+        | CAST(c_ab * (SELECT n_orders FROM n) * 1000000
+        |   // (c_a * c_b) AS BIGINT) AS lift_ppm
+        |FROM r WHERE rk <= 20""".stripMargin),
+    q("dq_id_integrity", Quality.idIntegrity(_, _),
+      """SELECT COUNT(event_id) AS n_rows,
+        | COUNT(DISTINCT event_id) AS n_ids,
+        | MIN(event_id) AS min_id, MAX(event_id) AS max_id,
+        | CAST(MAX(event_id) - MIN(event_id) + 1
+        |   - COUNT(DISTINCT event_id) AS BIGINT) AS missing_ids,
+        | CAST(COUNT(event_id) - COUNT(DISTINCT event_id) AS BIGINT)
+        |   AS dup_rows
+        |FROM events""".stripMargin),
+    q("sim_ivf_balance", Similarity.ivfBalance(_, _),
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings),
+        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
+        |      FROM e),
+        |tot AS (SELECT greatest(count(*)//16, 1) AS stride,
+        |        count(*) AS total FROM e),
+        |cents AS (SELECT (vec_id // stride) AS cidx, v AS cv,
+        |          nrm AS cn
+        |          FROM n, tot
+        |          WHERE vec_id % stride = 0 AND vec_id // stride < 16),
+        |cs AS (SELECT n.vec_id, cidx,
+        |  CAST(round(list_sum([n.v[i+1]*cv[i+1]
+        |    for i in range(0,len(cv))])
+        |   / (n.nrm * cn) * 1000000000) AS BIGINT) AS cscore
+        | FROM n CROSS JOIN cents),
+        |assign AS (SELECT vec_id, CAST(cidx AS BIGINT) AS cell FROM (
+        |  SELECT vec_id, cidx, row_number() OVER
+        |   (PARTITION BY vec_id ORDER BY cscore DESC, cidx) AS r
+        |   FROM cs) t
+        |  WHERE r = 1)
+        |SELECT cell, COUNT(*) AS n_vectors,
+        | CAST(COUNT(*) * 1000000 // (SELECT total FROM tot) AS BIGINT)
+        |   AS share_ppm,
+        | CAST(COUNT(*) * 16 * 1000000 // (SELECT total FROM tot)
+        |   AS BIGINT) AS load_ppm
+        |FROM assign GROUP BY 1""".stripMargin),
+    q("analytics_aov_bridge", Analytics.aovBridge(_, _),
+      """WITH m AS (SELECT CAST(date_trunc('month',
+        |    CAST(o_orderdate AS DATE)) AS DATE) AS mth,
+        |  COUNT(*) AS n_orders,
+        |  SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS gmv_cents
+        | FROM orders GROUP BY 1),
+        |a AS (SELECT mth, n_orders,
+        |  CAST(gmv_cents AS BIGINT) AS gmv_cents,
+        |  CAST(gmv_cents // n_orders AS BIGINT) AS aov_cents
+        | FROM m),
+        |l AS (SELECT mth, n_orders, gmv_cents, aov_cents,
+        |  lag(n_orders) OVER (ORDER BY mth) AS pn,
+        |  lag(gmv_cents) OVER (ORDER BY mth) AS pg,
+        |  lag(aov_cents) OVER (ORDER BY mth) AS pa
+        | FROM a)
+        |SELECT mth, n_orders, gmv_cents, aov_cents,
+        | CAST((n_orders - pn) * pa AS BIGINT) AS volume_effect,
+        | CAST(n_orders * (aov_cents - pa) AS BIGINT) AS aov_effect,
+        | CAST(gmv_cents - pg - (n_orders - pn) * pa
+        |   - n_orders * (aov_cents - pa) AS BIGINT) AS trunc_residual
+        |FROM l WHERE pn IS NOT NULL""".stripMargin),
+    q("pipeline_split_balance", TextAnalysis.splitBalance(_, _),
+      """WITH s AS (SELECT CAST(label AS BIGINT) AS label,
+        |  CASE WHEN vec_id % 10 < 8 THEN 'train'
+        |       WHEN vec_id % 10 = 8 THEN 'val'
+        |       ELSE 'test' END AS split
+        | FROM embeddings),
+        |g AS (SELECT split, label, COUNT(*) AS n FROM s GROUP BY 1, 2),
+        |t AS (SELECT split, label, n,
+        |  SUM(n) OVER (PARTITION BY split) AS split_total FROM g)
+        |SELECT split, label, n,
+        | CAST(n * 1000000 // split_total AS BIGINT) AS share_ppm
+        |FROM t""".stripMargin),
+    q("dq_holiday_detect", Quality.holidayDetect(_, _),
+      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS dt,
+        |  COUNT(*) AS cnt FROM orders GROUP BY 1),
+        |x AS (SELECT dt, cnt,
+        |  CAST((dt - DATE '1970-01-01') % 7 AS BIGINT) AS dow
+        | FROM daily),
+        |r AS (SELECT dt, cnt, dow,
+        |  CAST(row_number() OVER (PARTITION BY dow ORDER BY cnt, dt)
+        |    AS BIGINT) AS rk,
+        |  COUNT(*) OVER (PARTITION BY dow) AS nd
+        | FROM x),
+        |m AS (SELECT dt, cnt, dow,
+        |  MAX(CASE WHEN rk = (nd + 1) // 2 THEN cnt END)
+        |    OVER (PARTITION BY dow) AS med
+        | FROM r)
+        |SELECT dt, dow, cnt, CAST(med AS BIGINT) AS dow_median
+        |FROM m WHERE cnt * 2 < med""".stripMargin),
+    q("dim_asof_diff", graft.operators.Temporal.asofDiff(_, _),
+      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
+        |  MAX(value) AS val
+        | FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+        |d2 AS (SELECT user_id, us AS f,
+        |  lead(us) OVER (PARTITION BY user_id ORDER BY us) AS t, val
+        | FROM v),
+        |a1 AS (SELECT user_id, val AS v1 FROM d2
+        |  WHERE f <= 1704844800000000
+        |   AND (t IS NULL OR t > 1704844800000000)),
+        |a2 AS (SELECT user_id, val AS v2 FROM d2
+        |  WHERE f <= 1706140800000000
+        |   AND (t IS NULL OR t > 1706140800000000)),
+        |j AS (SELECT COALESCE(a1.user_id, a2.user_id) AS user_id,
+        |  v1, v2,
+        |  CASE WHEN v1 IS NULL THEN 'added'
+        |   WHEN v2 IS NULL THEN 'removed'
+        |   WHEN v1 <> v2 THEN 'changed' ELSE 'same' END AS op
+        | FROM a1 FULL OUTER JOIN a2 ON a1.user_id = a2.user_id)
+        |SELECT user_id, v1, v2, op FROM j WHERE op <> 'same'""".stripMargin),
+    q("graph_rich_club", Graph.richClub(_, _),
+      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |            FROM lineitem),
+        |e AS (SELECT DISTINCT a.pk AS s, b.pk AS t
+        |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
+        |deg AS (SELECT v, COUNT(*) AS deg FROM (
+        |  SELECT s AS v FROM e UNION ALL SELECT t FROM e) u
+        | GROUP BY 1),
+        |rk AS (SELECT v, CAST(row_number() OVER
+        |  (ORDER BY deg DESC, v) AS BIGINT) AS rk
+        | FROM deg QUALIFY rk <= 100),
+        |er AS (SELECT greatest(rs.rk, rt.rk) AS mx
+        |       FROM e JOIN rk rs ON e.s = rs.v
+        |        JOIN rk rt ON e.t = rt.v),
+        |c AS (SELECT CAST(n AS BIGINT) AS club_n,
+        |  (SELECT COUNT(*) FROM er WHERE mx <= n) AS intra_edges
+        | FROM (VALUES (10), (25), (50), (100)) t(n))
+        |SELECT club_n, CAST(intra_edges AS BIGINT) AS intra_edges,
+        | CAST(intra_edges * 2 * 1000000 // (club_n * (club_n - 1))
+        |   AS BIGINT) AS density_ppm
+        |FROM c""".stripMargin),
+    q("analytics_category_migration", Analytics.categoryMigration(_, _),
+      """WITH o AS (SELECT o_custkey AS cust, o_orderkey AS ok,
+        |  CAST(o_orderdate AS DATE) AS od FROM orders),
+        |r AS (SELECT cust, ok,
+        |  row_number() OVER (PARTITION BY cust ORDER BY od, ok) AS rn,
+        |  COUNT(*) OVER (PARTITION BY cust) AS n FROM o),
+        |ob AS (SELECT DISTINCT l_orderkey AS ok, p_brand AS b
+        |       FROM lineitem JOIN part ON l_partkey = p_partkey),
+        |f AS (SELECT cust, b AS from_brand FROM r JOIN ob USING (ok)
+        |      WHERE rn = 1 AND n >= 2),
+        |l AS (SELECT cust, b AS to_brand FROM r JOIN ob USING (ok)
+        |      WHERE rn = n AND n >= 2),
+        |g AS (SELECT from_brand, to_brand,
+        |  COUNT(DISTINCT cust) AS n_customers
+        | FROM f JOIN l USING (cust) GROUP BY 1, 2),
+        |rr AS (SELECT from_brand, to_brand, n_customers,
+        |  CAST(row_number() OVER (ORDER BY n_customers DESC,
+        |    from_brand, to_brand) AS BIGINT) AS rk FROM g)
+        |SELECT rk, from_brand, to_brand, n_customers
+        |FROM rr WHERE rk <= 20""".stripMargin),
+    q("analytics_price_points", Analytics.pricePoints(_, _),
+      """WITH e AS (SELECT CAST(CAST(p_retailprice AS DECIMAL(12,2))
+        |    * 100 AS BIGINT) % 100 AS ending FROM part),
+        |g AS (SELECT ending, COUNT(*) AS n_parts FROM e GROUP BY 1),
+        |t AS (SELECT COUNT(*) AS total FROM part),
+        |r AS (SELECT ending, n_parts, CAST(row_number() OVER
+        |  (ORDER BY n_parts DESC, ending) AS BIGINT) AS rk FROM g)
+        |SELECT rk, ending, n_parts,
+        | CAST(n_parts * 1000000 // (SELECT total FROM t) AS BIGINT)
+        |   AS share_ppm
+        |FROM r WHERE rk <= 10""".stripMargin),
+    q("dq_rare_levels", Quality.rareLevels(_, _),
+      """WITH a AS (
+        | SELECT 'o_orderpriority' AS column_name,
+        |  CAST(o_orderpriority AS VARCHAR) AS level FROM orders
+        | UNION ALL
+        | SELECT 'p_brand', CAST(p_brand AS VARCHAR) FROM part
+        | UNION ALL
+        | SELECT 'event_type', CAST(event_type AS VARCHAR) FROM events),
+        |g AS (SELECT column_name, level, COUNT(*) AS cnt FROM a
+        |      GROUP BY 1, 2),
+        |t AS (SELECT column_name, level, cnt,
+        |  CAST(cnt * 1000000 // SUM(cnt) OVER
+        |    (PARTITION BY column_name) AS BIGINT) AS share_ppm
+        | FROM g),
+        |rare AS (SELECT column_name, level, cnt, share_ppm FROM t
+        |         WHERE share_ppm < 1000),
+        |summ AS (SELECT column_name, '__total_levels' AS level,
+        |  COUNT(*) AS cnt, CAST(0 AS BIGINT) AS share_ppm
+        | FROM g GROUP BY 1)
+        |SELECT * FROM rare UNION ALL SELECT * FROM summ""".stripMargin),
+    q("analytics_assortment_churn", Analytics.assortmentChurn(_, _),
+      """WITH pm AS (SELECT DISTINCT l_partkey AS pk,
+        |  CAST(date_trunc('month', CAST(l_shipdate AS DATE)) AS DATE)
+        |    AS m
+        | FROM lineitem),
+        |span AS (SELECT pk, MIN(m) AS first_m, MAX(m) AS last_m
+        |         FROM pm GROUP BY 1),
+        |act AS (SELECT m AS mth, COUNT(*) AS active_parts FROM pm
+        |        GROUP BY 1),
+        |intro AS (SELECT first_m AS mth, COUNT(*) AS introduced
+        |          FROM span GROUP BY 1),
+        |ret AS (SELECT last_m AS mth, COUNT(*) AS retired
+        |        FROM span GROUP BY 1)
+        |SELECT act.mth, active_parts,
+        | COALESCE(introduced, 0) AS introduced,
+        | COALESCE(retired, 0) AS retired
+        |FROM act LEFT JOIN intro ON act.mth = intro.mth
+        | LEFT JOIN ret ON act.mth = ret.mth""".stripMargin),
+    q("pipeline_mix_sweep", TextAnalysis.mixSweep(_, _),
+      """WITH c AS (SELECT source, COUNT(*) AS n_docs
+        |           FROM documents GROUP BY 1),
+        |w AS (
+        | SELECT CAST(25 AS BIGINT) AS temp_pct, source, n_docs,
+        |  CAST(round(sqrt(sqrt(CAST(n_docs AS DOUBLE))) * 1000000)
+        |    AS BIGINT) AS w FROM c
+        | UNION ALL
+        | SELECT 50, source, n_docs,
+        |  CAST(round(sqrt(CAST(n_docs AS DOUBLE)) * 1000000)
+        |    AS BIGINT) FROM c
+        | UNION ALL
+        | SELECT 75, source, n_docs,
+        |  CAST(round(sqrt(CAST(n_docs AS DOUBLE))
+        |    * sqrt(sqrt(CAST(n_docs AS DOUBLE))) * 1000000)
+        |    AS BIGINT) FROM c
+        | UNION ALL
+        | SELECT 100, source, n_docs, n_docs * 1000000 FROM c),
+        |t AS (SELECT temp_pct, source, n_docs, w,
+        |  SUM(w) OVER (PARTITION BY temp_pct) AS tot_w FROM w)
+        |SELECT temp_pct, source, n_docs,
+        | CAST(w * 1000000 // tot_w AS BIGINT) AS share_ppm
+        |FROM t""".stripMargin),
+    q("mm_dedup_ratio", Multimodal.dedupRatio(_, _),
+      """WITH ch AS (
+        | SELECT md5(u.c) AS chunk_md5,
+        |  CAST(length(u.c) // 2 AS BIGINT) AS chunk_bytes
+        | FROM (
+        |  SELECT doc_id, unnest([{'i': i,
+        |    'c': substr(hex(encode(text)), i * 512 + 1, 512)}
+        |    for i in range(0, CAST(ceil(
+        |      octet_length(encode(text)) * 2 / 512.0) AS INT))]) AS u
+        |  FROM documents) x),
+        |g AS (SELECT chunk_md5, COUNT(*) AS refs,
+        |  MAX(chunk_bytes) AS cb FROM ch GROUP BY 1)
+        |SELECT CAST(SUM(refs) AS BIGINT) AS n_chunks,
+        | COUNT(*) AS n_unique,
+        | CAST(SUM(refs * cb) AS BIGINT) AS total_bytes,
+        | CAST(SUM(cb) AS BIGINT) AS unique_bytes,
+        | CAST(MAX(refs) AS BIGINT) AS max_refs,
+        | CAST((SUM(refs * cb) - SUM(cb)) * 1000000 // SUM(refs * cb)
+        |   AS BIGINT) AS saved_ppm
+        |FROM g""".stripMargin),
+    q("dq_expectations", Quality.expectations(_, _),
+      """SELECT 'orders_nonempty' AS check_name,
+        | COUNT(*) AS observed, CAST(1 AS BIGINT) AS threshold,
+        | CAST(COUNT(*) >= 1 AS BIGINT) AS passed FROM orders
+        |UNION ALL
+        |SELECT 'lineitem_no_orphans', COUNT(*), 0,
+        | CAST(COUNT(*) = 0 AS BIGINT)
+        |FROM lineitem WHERE l_orderkey NOT IN
+        | (SELECT o_orderkey FROM orders)
+        |UNION ALL
+        |SELECT 'event_value_in_range',
+        | COUNT(*) FILTER (WHERE value < 0 OR value > 1000), 0,
+        | CAST(COUNT(*) FILTER (WHERE value < 0 OR value > 1000) = 0
+        |   AS BIGINT)
+        |FROM events
+        |UNION ALL
+        |SELECT 'brand_cardinality_25', COUNT(DISTINCT p_brand), 25,
+        | CAST(COUNT(DISTINCT p_brand) = 25 AS BIGINT) FROM part
+        |UNION ALL
+        |SELECT 'event_id_unique',
+        | COUNT(*) - COUNT(DISTINCT event_id), 0,
+        | CAST(COUNT(*) = COUNT(DISTINCT event_id) AS BIGINT)
+        |FROM events
+        |UNION ALL
+        |SELECT 'customer_nation_fk', COUNT(*), 0,
+        | CAST(COUNT(*) = 0 AS BIGINT)
+        |FROM customer WHERE c_nationkey NOT IN
+        | (SELECT n_nationkey FROM nation)""".stripMargin),
+    q("graph_knn_curve", Graph.knnCurve(_, _),
+      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |            FROM lineitem),
+        |e AS (SELECT DISTINCT a.pk AS s, b.pk AS t
+        |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
+        |und AS (SELECT s AS v, t AS n FROM e
+        |        UNION ALL SELECT t, s FROM e),
+        |deg AS (SELECT v, COUNT(*) AS deg FROM und GROUP BY 1)
+        |SELECT d1.deg, COUNT(*) AS n_endpoints,
+        | CAST(SUM(d2.deg) * 1000000 // COUNT(*) AS BIGINT)
+        |   AS avg_nbr_deg_e6
+        |FROM und JOIN deg d1 ON und.v = d1.v
+        | JOIN deg d2 ON und.n = d2.v
+        |GROUP BY 1""".stripMargin),
+    q("analytics_replenishment", Analytics.replenishment(_, _),
+      """WITH pc AS (SELECT l_partkey AS part_id, o_custkey AS cust,
+        |  COUNT(DISTINCT l_orderkey) AS n_orders
+        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        | GROUP BY 1, 2),
+        |p AS (SELECT part_id, COUNT(*) AS n_buyers,
+        |  COUNT(*) FILTER (WHERE n_orders >= 2) AS repeat_buyers
+        | FROM pc GROUP BY 1 HAVING COUNT(*) >= 5),
+        |r AS (SELECT part_id, n_buyers, repeat_buyers,
+        |  CAST(repeat_buyers * 1000000 // n_buyers AS BIGINT)
+        |    AS repeat_ppm FROM p),
+        |rr AS (SELECT part_id, n_buyers, repeat_buyers, repeat_ppm,
+        |  CAST(row_number() OVER (ORDER BY repeat_ppm DESC,
+        |    n_buyers DESC, part_id) AS BIGINT) AS rk FROM r)
+        |SELECT rk, part_id, n_buyers, repeat_buyers, repeat_ppm
+        |FROM rr WHERE rk <= 20""".stripMargin),
+    q("dq_dim_coverage", Quality.dimCoverage(_, _),
+      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
+        |    MAX(value) AS last_view_value
+        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+        |dim AS (SELECT user_id, us AS vf,
+        |    LEAD(us) OVER (PARTITION BY user_id ORDER BY us) AS vt,
+        |    last_view_value FROM v),
+        |p AS (SELECT event_id, user_id, epoch_us(ts) AS us
+        |  FROM events WHERE event_type = 'purchase'),
+        |srv AS (SELECT p.us, dim.last_view_value
+        | FROM p LEFT JOIN dim ON p.user_id = dim.user_id
+        |  AND p.us >= dim.vf AND (dim.vt IS NULL OR p.us < dim.vt))
+        |SELECT CAST(make_timestamp(us) AS DATE) AS dt,
+        | COUNT(*) AS n_probes,
+        | COUNT(*) FILTER (WHERE last_view_value IS NULL) AS misses,
+        | CAST(COUNT(*) FILTER (WHERE last_view_value IS NULL)
+        |   * 1000000 // COUNT(*) AS BIGINT) AS miss_ppm
+        |FROM srv GROUP BY 1""".stripMargin),
+    // synchronous LPA: 3 unrolled supersteps, most-frequent neighbor
+    // label with smallest-label tie-break — deterministic both engines
+    q("graph_label_prop", Graph.labelPropagation(_, _),
+      """WITH b AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |      FROM lineitem),
+        |p AS (SELECT a.pk AS s, b2.pk AS t, COUNT(*) AS n
+        |      FROM b a JOIN b b2 ON a.ok = b2.ok AND a.pk < b2.pk
+        |      GROUP BY 1, 2),
+        |pairs AS (SELECT s, t FROM p WHERE n >= 2),
+        |und AS (SELECT s AS v, t AS n FROM pairs
+        |        UNION ALL SELECT t, s FROM pairs),
+        |l0 AS (SELECT DISTINCT v, v AS lbl FROM und),
+        |c1 AS (SELECT und.v, l0.lbl, COUNT(*) AS c
+        |       FROM und JOIN l0 ON und.n = l0.v GROUP BY 1, 2),
+        |l1 AS (SELECT v, lbl FROM (SELECT v, lbl, row_number() OVER
+        |        (PARTITION BY v ORDER BY c DESC, lbl) AS rk FROM c1) x
+        |       WHERE rk = 1),
+        |c2 AS (SELECT und.v, l1.lbl, COUNT(*) AS c
+        |       FROM und JOIN l1 ON und.n = l1.v GROUP BY 1, 2),
+        |l2 AS (SELECT v, lbl FROM (SELECT v, lbl, row_number() OVER
+        |        (PARTITION BY v ORDER BY c DESC, lbl) AS rk FROM c2) x
+        |       WHERE rk = 1),
+        |c3 AS (SELECT und.v, l2.lbl, COUNT(*) AS c
+        |       FROM und JOIN l2 ON und.n = l2.v GROUP BY 1, 2),
+        |l3 AS (SELECT v, lbl FROM (SELECT v, lbl, row_number() OVER
+        |        (PARTITION BY v ORDER BY c DESC, lbl) AS rk FROM c3) x
+        |       WHERE rk = 1)
+        |SELECT v AS part_id, lbl AS community FROM l3""".stripMargin),
+    // per-dimension embedding health: integer-millionth quantization
+    // makes n, Σq, Σq² exact; variance is one exact integer division
+    q("sim_dim_variance", Similarity.dimVariance(_, _),
+      """WITH q AS (SELECT unnest(range(len(embedding))) AS dim,
+        |  unnest([CAST(trunc(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
+        |          for x in embedding]) AS q
+        | FROM embeddings),
+        |a AS (SELECT CAST(dim AS BIGINT) AS dim, COUNT(*) AS n,
+        |  SUM(q) AS sq,
+        |  SUM(CAST(q AS DECIMAL(19,0)) * CAST(q AS DECIMAL(19,0)))
+        |    AS sqq
+        | FROM q GROUP BY 1)
+        |SELECT dim, n, CAST(sq // n AS BIGINT) AS mean_q6,
+        | CAST((CAST(n AS HUGEINT) * CAST(sqq AS HUGEINT)
+        |     - CAST(sq AS HUGEINT) * CAST(sq AS HUGEINT))
+        |   // (CAST(n AS HUGEINT) * CAST(n AS HUGEINT)) AS BIGINT)
+        |   AS var_q12
+        |FROM a""".stripMargin),
+    // two-slice drift: conditional integer sums per dim, pooled-var
+    // standardized shift² in ppm; // and DIV both truncate toward 0
+    q("sim_embedding_drift", Similarity.embeddingDrift(_, _),
+      """WITH q AS (SELECT vec_id % 2 = 0 AS ref,
+        |  unnest(range(len(embedding))) AS dim,
+        |  unnest([CAST(trunc(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
+        |          for x in embedding]) AS q
+        | FROM embeddings),
+        |a AS (SELECT CAST(dim AS BIGINT) AS dim,
+        |  COUNT(*) FILTER (ref) AS n_ref,
+        |  SUM(q) FILTER (ref) AS sq_ref,
+        |  SUM(CAST(q AS HUGEINT) * CAST(q AS HUGEINT)) FILTER (ref)
+        |    AS sqq_ref,
+        |  COUNT(*) FILTER (NOT ref) AS n_cur,
+        |  SUM(q) FILTER (NOT ref) AS sq_cur,
+        |  SUM(CAST(q AS HUGEINT) * CAST(q AS HUGEINT)) FILTER (NOT ref)
+        |    AS sqq_cur
+        | FROM q GROUP BY 1),
+        |b AS (SELECT dim, n_ref, n_cur,
+        |  CAST(sq_ref // n_ref AS BIGINT) AS mean_ref_q6,
+        |  CAST(sq_cur // n_cur AS BIGINT) AS mean_cur_q6,
+        |  CAST((CAST(n_ref AS HUGEINT) * sqq_ref
+        |      - CAST(sq_ref AS HUGEINT) * CAST(sq_ref AS HUGEINT))
+        |    // (CAST(n_ref AS HUGEINT) * CAST(n_ref AS HUGEINT))
+        |    AS BIGINT) AS var_ref_q12,
+        |  CAST((CAST(n_cur AS HUGEINT) * sqq_cur
+        |      - CAST(sq_cur AS HUGEINT) * CAST(sq_cur AS HUGEINT))
+        |    // (CAST(n_cur AS HUGEINT) * CAST(n_cur AS HUGEINT))
+        |    AS BIGINT) AS var_cur_q12
+        | FROM a),
+        |c AS (SELECT *, mean_cur_q6 - mean_ref_q6 AS shift_q6,
+        |  CAST((n_ref * var_ref_q12 + n_cur * var_cur_q12)
+        |    // (n_ref + n_cur) AS BIGINT) AS pooled_var_q12
+        | FROM b)
+        |SELECT dim, CAST(n_ref AS BIGINT) AS n_ref,
+        | CAST(n_cur AS BIGINT) AS n_cur, mean_ref_q6, mean_cur_q6,
+        | shift_q6, var_ref_q12, var_cur_q12, pooled_var_q12,
+        | CASE WHEN pooled_var_q12 > 0 THEN
+        |   CAST((CAST(shift_q6 AS HUGEINT) * CAST(shift_q6 AS HUGEINT)
+        |     * 1000000) // CAST(pooled_var_q12 AS HUGEINT) AS BIGINT)
+        | ELSE NULL END AS drift_ppm
+        |FROM c""".stripMargin),
+    // centroid-based silhouette: exact ‖n·q−S‖²/n² distances via
+    // integer cross-multiplication, argmin tie-broken by label
+    q("sim_silhouette", Similarity.silhouette(_, _),
+      """WITH q AS (SELECT vec_id, CAST(label AS BIGINT) AS own,
+        |  unnest(range(len(embedding))) AS dim,
+        |  unnest([CAST(trunc(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
+        |          for x in embedding]) AS q
+        | FROM embeddings),
+        |cent AS (SELECT own AS label, dim, SUM(q) AS sd
+        | FROM q GROUP BY 1, 2),
+        |nl AS (SELECT CAST(label AS BIGINT) AS label, COUNT(*) AS n
+        | FROM embeddings GROUP BY 1),
+        |ssq AS (SELECT label,
+        |  SUM(CAST(sd AS HUGEINT) * CAST(sd AS HUGEINT)) AS cnorm2
+        | FROM cent GROUP BY 1),
+        |vn AS (SELECT vec_id, own, SUM(q * q) AS norm2
+        | FROM q GROUP BY 1, 2),
+        |ip AS (SELECT q.vec_id, q.own, c.label,
+        |  SUM(CAST(q.q AS HUGEINT) * CAST(c.sd AS HUGEINT)) AS ipqs
+        | FROM q JOIN cent c USING (dim) GROUP BY 1, 2, 3),
+        |scaled AS (SELECT ip.vec_id, ip.own, ip.label,
+        |  CAST((CAST(nl.n AS HUGEINT) * CAST(nl.n AS HUGEINT)
+        |      * CAST(vn.norm2 AS HUGEINT)
+        |     - 2 * CAST(nl.n AS HUGEINT) * ip.ipqs + ssq.cnorm2)
+        |    // (CAST(nl.n AS HUGEINT) * CAST(nl.n AS HUGEINT))
+        |    AS BIGINT) AS d2
+        | FROM ip JOIN nl ON ip.label = nl.label
+        |   JOIN ssq ON ip.label = ssq.label
+        |   JOIN vn ON ip.vec_id = vn.vec_id),
+        |own_d AS (SELECT vec_id, own, d2 AS a2 FROM scaled
+        | WHERE label = own),
+        |other_d AS (SELECT vec_id, d2 AS b2 FROM (
+        |  SELECT vec_id, d2, row_number() OVER (PARTITION BY vec_id
+        |      ORDER BY d2, label) AS rk
+        |  FROM scaled WHERE label <> own) WHERE rk = 1),
+        |sil AS (SELECT own,
+        |  CASE WHEN a2 = 0 AND b2 = 0 THEN CAST(0 AS BIGINT)
+        |   ELSE CAST((CAST(b2 AS HUGEINT) - CAST(a2 AS HUGEINT))
+        |     * 1000000 // CAST(GREATEST(a2, b2) AS HUGEINT) AS BIGINT)
+        |  END AS s_ppm
+        | FROM own_d JOIN other_d USING (vec_id))
+        |SELECT own AS label, COUNT(*) AS n_vecs,
+        | CAST(SUM(s_ppm) // COUNT(*) AS BIGINT) AS mean_sil_ppm,
+        | MIN(s_ppm) AS min_sil_ppm,
+        | CAST(SUM(CASE WHEN s_ppm < 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |   AS n_negative
+        |FROM sil GROUP BY 1""".stripMargin),
+    // one-pass moment matrix: builder shared with the Spark side so
+    // the ten pair branches cannot drift
+    q("analytics_cov_matrix", Analytics.covMatrix(_, _),
+      Analytics.covMatrixOracleSql),
+    // first-order partial correlations from the same moment row
+    q("analytics_partial_corr", Analytics.partialCorr(_, _),
+      Analytics.partialCorrOracleSql),
+    // hourly OHLC bars: arg_min/arg_max on the composite (us, id)
+    // key (HUGEINT-packed; Spark orders the struct) — tie-proof.
+    // The us*2^40+event_id packing is order-equivalent to the struct
+    // ordering ONLY while 0 <= event_id < 2^40 (~1.1e12); DuckDB 1.0
+    // has no struct-keyed arg_min, so the bound is ASSERTED per row —
+    // an out-of-range id fails the gate loudly instead of silently
+    // flipping open/close
+    q("analytics_ohlc_bars", Analytics.ohlcBars(_, _),
+      """WITH e AS (SELECT event_type, epoch_us(ts) AS us,
+        |  CASE WHEN event_id BETWEEN 0 AND 1099511627775
+        |   THEN event_id
+        |   ELSE CAST(error('event_id outside 2^40 packing bound')
+        |     AS BIGINT) END AS event_id,
+        |  CAST(trunc(value * 1000000) AS BIGINT) AS vq
+        | FROM events)
+        |SELECT event_type, us // 3600000000 AS hr,
+        | COUNT(*) AS n_events,
+        | arg_min(vq, CAST(us AS HUGEINT) * 1099511627776 + event_id)
+        |   AS open_q6,
+        | arg_max(vq, CAST(us AS HUGEINT) * 1099511627776 + event_id)
+        |   AS close_q6,
+        | MAX(vq) AS high_q6, MIN(vq) AS low_q6,
+        | CAST(SUM(vq) AS BIGINT) AS vol_q6
+        |FROM e GROUP BY 1, 2""".stripMargin),
+    // Heaps-law vocabulary growth: first-decile per type is a
+    // combinable min, the only window runs over 10 decile rows
+    q("text_heaps_curve", TextAnalysis.heapsCurve(_, _),
+      """WITH mx AS (SELECT MAX(doc_id) + 1 AS n_docs FROM documents),
+        |tok AS (SELECT doc_id * 10 // n_docs AS decile,
+        |  unnest(list_filter(string_split(lower(text), ' '),
+        |    x -> x <> '')) AS tok
+        | FROM documents CROSS JOIN mx),
+        |occ AS (SELECT decile, COUNT(*) AS n_tokens
+        | FROM tok GROUP BY 1),
+        |firsts AS (SELECT decile, COUNT(*) AS new_types FROM (
+        |  SELECT tok, MIN(decile) AS decile FROM tok GROUP BY 1)
+        | GROUP BY 1),
+        |j AS (SELECT occ.decile, occ.n_tokens,
+        |  COALESCE(firsts.new_types, 0) AS new_types
+        | FROM occ LEFT JOIN firsts ON occ.decile = firsts.decile)
+        |SELECT decile, n_tokens, new_types,
+        | CAST(SUM(n_tokens) OVER (ORDER BY decile) AS BIGINT)
+        |   AS cum_tokens,
+        | CAST(SUM(new_types) OVER (ORDER BY decile) AS BIGINT)
+        |   AS cum_types,
+        | CAST(SUM(new_types) OVER (ORDER BY decile) * 1000000
+        |   // SUM(n_tokens) OVER (ORDER BY decile) AS BIGINT)
+        |   AS ttr_ppm
+        |FROM j""".stripMargin),
+    // Rényi-2 collision entropy: Σc²·10⁹ DIV N² per doc at char and
+    // token grain, source-mean of the exact per-doc ratios — no
+    // float logarithm anywhere, so the quality screen hash-grades
+    q("text_collision_entropy", TextAnalysis.collisionEntropy(_, _),
+      """WITH ch AS MATERIALIZED (SELECT doc_id, source,
+        |    unnest([substr(lower(text), i, 1)
+        |            for i in range(1, length(text) + 1)]) AS sym
+        |  FROM documents),
+        |cagg AS MATERIALIZED (SELECT doc_id, source, sym,
+        |    COUNT(*) AS c FROM ch WHERE sym <> '' GROUP BY 1, 2, 3),
+        |cd AS MATERIALIZED (SELECT doc_id, source,
+        |    SUM(c) AS n, COUNT(*) AS ds,
+        |    SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS c2
+        |  FROM cagg GROUP BY 1, 2),
+        |cds AS MATERIALIZED (SELECT source, COUNT(*) AS n_docs,
+        |    CAST(SUM(c2 * 1000000000
+        |      // (CAST(n AS HUGEINT) * CAST(n AS HUGEINT)))
+        |      // COUNT(*) AS BIGINT) AS char_coll_ppb,
+        |    CAST(SUM(ds) // COUNT(*) AS BIGINT) AS mean_distinct_chars
+        |  FROM cd GROUP BY 1),
+        |wd AS MATERIALIZED (SELECT doc_id, source,
+        |    unnest(regexp_split_to_array(lower(text), '\s+')) AS sym
+        |  FROM documents),
+        |wagg AS MATERIALIZED (SELECT doc_id, source, sym,
+        |    COUNT(*) AS c FROM wd WHERE sym <> '' GROUP BY 1, 2, 3),
+        |wdd AS MATERIALIZED (SELECT doc_id, source,
+        |    SUM(c) AS n, COUNT(*) AS ds,
+        |    SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS c2
+        |  FROM wagg GROUP BY 1, 2),
+        |wds AS MATERIALIZED (SELECT source,
+        |    CAST(SUM(c2 * 1000000000
+        |      // (CAST(n AS HUGEINT) * CAST(n AS HUGEINT)))
+        |      // COUNT(*) AS BIGINT) AS word_coll_ppb,
+        |    CAST(SUM(ds) // COUNT(*) AS BIGINT) AS mean_distinct_words
+        |  FROM wdd GROUP BY 1)
+        |SELECT source, n_docs, char_coll_ppb,
+        |  1000000000 // GREATEST(char_coll_ppb, 1) AS eff_chars,
+        |  mean_distinct_chars, word_coll_ppb,
+        |  1000000000 // GREATEST(word_coll_ppb, 1) AS eff_words,
+        |  mean_distinct_words
+        |FROM cds JOIN wds USING (source)""".stripMargin),
+    // entry/exit/bounce per event type over 30-min gap sessions;
+    // first/last deterministic on (us, event_id)
+    q("analytics_entry_exit", Analytics.entryExitReport(_, _),
+      """WITH ev AS MATERIALIZED (SELECT user_id, epoch_us(ts) AS us,
+        |    event_id, event_type FROM events),
+        |f AS MATERIALIZED (SELECT user_id, us, event_id, event_type,
+        |    CASE WHEN lag(us) OVER w IS NULL
+        |          OR us - lag(us) OVER w > 1800000000 THEN 1
+        |         ELSE 0 END AS is_new
+        |  FROM ev WINDOW w AS (PARTITION BY user_id
+        |    ORDER BY us, event_id)),
+        |sdf AS MATERIALIZED (SELECT user_id, us, event_id, event_type,
+        |    SUM(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS sess_id
+        |  FROM f),
+        |fl AS MATERIALIZED (SELECT user_id, sess_id,
+        |    MAX(CASE WHEN rna = 1 THEN event_type END) AS entry_type,
+        |    MAX(CASE WHEN rnd = 1 THEN event_type END) AS exit_type,
+        |    COUNT(*) AS n_events
+        |  FROM (SELECT *,
+        |      row_number() OVER (PARTITION BY user_id, sess_id
+        |        ORDER BY us, event_id) AS rna,
+        |      row_number() OVER (PARTITION BY user_id, sess_id
+        |        ORDER BY us DESC, event_id DESC) AS rnd
+        |    FROM sdf) t
+        |  GROUP BY 1, 2),
+        |en AS MATERIALIZED (SELECT entry_type AS event_type,
+        |    COUNT(*) AS n_entries,
+        |    COUNT(*) FILTER (n_events = 1) AS n_bounces
+        |  FROM fl GROUP BY 1),
+        |ex AS MATERIALIZED (SELECT exit_type AS event_type,
+        |    COUNT(*) AS n_exits FROM fl GROUP BY 1)
+        |SELECT COALESCE(en.event_type, ex.event_type) AS event_type,
+        |  COALESCE(n_entries, 0) AS n_entries,
+        |  COALESCE(n_exits, 0) AS n_exits,
+        |  COALESCE(n_bounces, 0) AS n_bounces,
+        |  COALESCE(n_bounces, 0) * 1000000
+        |    // GREATEST(COALESCE(n_entries, 0), 1) AS bounce_ppm
+        |FROM en FULL OUTER JOIN ex ON en.event_type = ex.event_type"""
+        .stripMargin),
+    // GENERATED oracle (Analytics.markovAttributionOracleSql): the
+    // 12 value-iteration rounds unrolled over the scenario×state
+    // lattice, exact integer ppm end to end
+    q("analytics_attribution_markov", Analytics.markovAttribution(_, _),
+      Analytics.markovAttributionOracleSql(iters = 12)),
+    // GENERATED oracle (Similarity.matryoshkaRecallOracleSql):
+    // per-prefix sliced-vector cosine ranks (same sequential fold)
+    // semi-joined against the full-dim truth CTE
+    q("sim_matryoshka_recall", Similarity.matryoshkaRecall(_, _),
+      Similarity.matryoshkaRecallOracleSql()),
+    // byte-grain Rényi-2 over the UTF-8 payloads via the hex-pair
+    // rendering — same exact-integer collision math as the text form
+    q("mm_byte_entropy", graft.operators.Multimodal.byteEntropy(_, _),
+      """WITH h AS MATERIALIZED (SELECT doc_id, source,
+        |    hex(encode(text)) AS h
+        |  FROM documents WHERE length(text) > 0),
+        |b AS MATERIALIZED (SELECT doc_id, source,
+        |    unnest([substr(h, i * 2 - 1, 2)
+        |            for i in range(1, length(h) // 2 + 1)]) AS b
+        |  FROM h),
+        |agg AS MATERIALIZED (SELECT doc_id, source, b, COUNT(*) AS c
+        |  FROM b GROUP BY 1, 2, 3),
+        |cd AS MATERIALIZED (SELECT doc_id, source,
+        |    SUM(c) AS n, COUNT(*) AS ds,
+        |    SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS c2
+        |  FROM agg GROUP BY 1, 2)
+        |SELECT source AS media_source, n_docs, byte_coll_ppb,
+        |  mean_distinct_bytes,
+        |  1000000000 // GREATEST(byte_coll_ppb, 1) AS eff_bytes
+        |FROM (SELECT source, COUNT(*) AS n_docs,
+        |    CAST(SUM(c2 * 1000000000
+        |      // (CAST(n AS HUGEINT) * CAST(n AS HUGEINT)))
+        |      // COUNT(*) AS BIGINT) AS byte_coll_ppb,
+        |    CAST(SUM(ds) // COUNT(*) AS BIGINT) AS mean_distinct_bytes
+        |  FROM cd GROUP BY 1) t""".stripMargin),
+    // props schema profile: data-driven key discovery (json_keys ≙
+    // Spark's from_json-map explode), presence ppm + value
+    // cardinality per (event_type, key)
+    q("dq_props_profile", Quality.propsProfile(_, _),
+      """WITH tot AS MATERIALIZED (SELECT event_type,
+        |    COUNT(*) AS n_rows FROM events GROUP BY 1),
+        |kv AS MATERIALIZED (SELECT event_type,
+        |    unnest(json_keys(props)) AS k, props FROM events),
+        |p AS MATERIALIZED (SELECT event_type, k,
+        |    COUNT(*) AS n_present,
+        |    COUNT(DISTINCT json_extract_string(props, '$.' || k))
+        |      AS n_distinct
+        |  FROM kv GROUP BY 1, 2)
+        |SELECT event_type, k AS prop_key, n_present,
+        |  n_present * 1000000 // n_rows AS present_ppm, n_distinct
+        |FROM p JOIN tot USING (event_type)""".stripMargin),
+    // Kruskal–Wallis: global doubled ranks over the bounded domain,
+    // Σ(R²/n) as engine-identical truncating integer terms, ONE
+    // rounded-double H finish from exact integers
+    q("dq_kruskal_wallis", Quality.kruskalWallis(_, _),
+      """WITH f AS MATERIALIZED (SELECT l_returnflag AS g,
+        |    CAST(l_quantity AS BIGINT) AS q FROM lineitem),
+        |dm AS MATERIALIZED (SELECT q, COUNT(*) AS c FROM f
+        |  GROUP BY 1),
+        |r AS MATERIALIZED (SELECT q,
+        |    SUM(c) OVER (ORDER BY q ROWS BETWEEN UNBOUNDED PRECEDING
+        |      AND CURRENT ROW) * 2 - c + 1 AS r2
+        |  FROM dm),
+        |grp AS MATERIALIZED (SELECT g, COUNT(*) AS n,
+        |    CAST(SUM(r2) AS HUGEINT) AS sum2r
+        |  FROM f JOIN r USING (q) GROUP BY 1),
+        |term AS MATERIALIZED (SELECT
+        |    SUM(sum2r * sum2r // CAST(4 * n AS HUGEINT)) AS t4,
+        |    CAST(SUM(n) AS HUGEINT) AS nn FROM grp),
+        |ties AS MATERIALIZED (SELECT
+        |    SUM(CAST(c AS HUGEINT) * c * c - c) AS st FROM dm),
+        |h AS MATERIALIZED (SELECT round(
+        |    ((12.0 * CAST(t4 AS DOUBLE)
+        |      / (CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) + 1.0)))
+        |     - 3.0 * (CAST(nn AS DOUBLE) + 1.0))
+        |    / (1.0 - CAST(st AS DOUBLE)
+        |       / (CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)
+        |          * CAST(nn AS DOUBLE) - CAST(nn AS DOUBLE))),
+        |    6) AS h_corrected FROM term, ties)
+        |SELECT g AS l_returnflag, n, CAST(sum2r AS BIGINT) AS sum2r,
+        |  CAST(sum2r * 1000000 // CAST(2 * n AS HUGEINT) AS BIGINT)
+        |    AS mean_rank_e6,
+        |  h_corrected
+        |FROM grp CROSS JOIN h""".stripMargin),
+    // script-mix: per-class char counts via length-difference after
+    // class-stripping regexp_replace — RE2's \x{4E00} ≙ Java's 一
+    q("text_script_mix", TextAnalysis.scriptMix(_, _),
+      """WITH p AS MATERIALIZED (SELECT source,
+        |    CAST(length(text) AS BIGINT) AS total,
+        |    CAST(length(text) - length(regexp_replace(text,
+        |      '[A-Za-z]', '', 'g')) AS BIGINT) AS latin,
+        |    CAST(length(text) - length(regexp_replace(text,
+        |      '[0-9]', '', 'g')) AS BIGINT) AS digit,
+        |    CAST(length(text) - length(regexp_replace(text,
+        |      '[\x{4E00}-\x{9FFF}]', '', 'g')) AS BIGINT) AS han,
+        |    CAST(length(text) - length(regexp_replace(text,
+        |      '\s', '', 'g')) AS BIGINT) AS space
+        |  FROM documents)
+        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(SUM(total) AS BIGINT) AS n_chars,
+        |  CAST(SUM(latin) AS BIGINT) AS latin_chars,
+        |  CAST(SUM(digit) AS BIGINT) AS digit_chars,
+        |  CAST(SUM(han) AS BIGINT) AS han_chars,
+        |  CAST(SUM(space) AS BIGINT) AS space_chars,
+        |  CAST(SUM(total) - SUM(latin) - SUM(digit) - SUM(han)
+        |    - SUM(space) AS BIGINT) AS other_chars,
+        |  CAST(SUM(latin) * 1000000 // GREATEST(SUM(total), 1)
+        |    AS BIGINT) AS latin_ppm,
+        |  CAST(SUM(han) * 1000000 // GREATEST(SUM(total), 1)
+        |    AS BIGINT) AS han_ppm
+        |FROM p GROUP BY 1""".stripMargin),
+    // GENERATED oracle (Analytics.kendallTauOracleSql): identical
+    // day-pair conditional aggregation, HUGEINT counts, one rounded
+    // double tau-b finish
+    q("analytics_kendall_tau", Analytics.kendallTau(_, _),
+      Analytics.kendallTauOracleSql),
+    // GENERATED oracle (Quality.ksDriftOracleSql): identical
+    // source-vs-rest ECDF grid, HUGEINT cross-multiplied sup gap
+    q("dq_ks_drift", Quality.ksDrift(_, _),
+      Quality.ksDriftOracleSql),
+    // GENERATED oracle (Analytics.pettittOracleSql): doubled-midrank
+    // cumulative U walk, HUGEINT, ln p as one rounded IEEE division
+    q("analytics_pettitt", Analytics.pettitt(_, _),
+      Analytics.pettittOracleSql),
+    // GENERATED oracle (Analytics.waveletEnergyOracleSql): exact
+    // dyadic Haar block sums, HUGEINT energies, ppm shares
+    q("analytics_wavelet_energy", Analytics.waveletEnergy(_, _),
+      Analytics.waveletEnergyOracleSql),
+    // GENERATED oracle (Analytics.friedmanOracleSql): complete-week
+    // doubled-midrank blocks, HUGEINT rank sums, one rounded χ²_F
+    q("analytics_friedman", Analytics.friedman(_, _),
+      Analytics.friedmanOracleSql),
+    // Krippendorff binary-nominal alpha: 3 deterministic raters,
+    // exact pair counts, one truncating ppm division (both engines
+    // truncate toward zero; denominator guarded with GREATEST(.,1)
+    // on BOTH engines so a degenerate all-identical-votes corpus
+    // grades as alpha_ppm=0 instead of NULL-vs-crash)
+    q("pipeline_krippendorff", TextAnalysis.krippendorffAlpha(_, _),
+      """WITH lab AS MATERIALIZED (SELECT
+        |   (length(text) >= 300)::INT
+        | + (len(list_distinct(list_filter(string_split(lower(text),
+        |      ' '), x -> x <> ''))) * 2
+        |    >= len(list_filter(string_split(lower(text), ' '),
+        |      x -> x <> '')))::INT
+        | + ((length(text) - length(regexp_replace(text, '[0-9]',
+        |      '', 'g'))) * 20 < length(text))::INT AS n1
+        | FROM documents),
+        |agg AS MATERIALIZED (SELECT
+        |   CAST(COUNT(*) AS HUGEINT) AS n_units,
+        |   CAST(SUM(n1) AS HUGEINT) AS tot1,
+        |   CAST(SUM(n1 * (3 - n1)) AS HUGEINT) AS do_pairs
+        | FROM lab)
+        |SELECT CAST(n_units AS BIGINT) AS n_units,
+        |  CAST(n_units * 3 AS BIGINT) AS n_values,
+        |  CAST(tot1 AS BIGINT) AS n_pos,
+        |  CAST(do_pairs AS BIGINT) AS do_pairs,
+        |  CAST((2 * tot1 * (n_units * 3 - tot1)
+        |      - (n_units * 3 - 1) * do_pairs) * 1000000
+        |    // GREATEST(2 * tot1 * (n_units * 3 - tot1), 1) AS BIGINT)
+        |    AS alpha_ppm
+        |FROM agg""".stripMargin),
+    // GENERATED oracle (Analytics.bootstrapCiOracleSql): identical
+    // MINSTD draw matrix, exact replicate sums, rank-picked bounds
+    q("analytics_bootstrap_ci", Analytics.bootstrapCi(_, _),
+      Analytics.bootstrapCiOracleSql()),
+    // event-type co-presence at user-day grain: distinct units,
+    // bounded self-join, Jaccard ppm per (type_a < type_b)
+    q("dq_event_copresence", Quality.eventCopresence(_, _),
+      """WITH units AS MATERIALIZED (SELECT DISTINCT user_id,
+        |    CAST(ts AS DATE) AS day, event_type AS t FROM events),
+        |pres AS MATERIALIZED (SELECT t, COUNT(*) AS n FROM units
+        |  GROUP BY 1),
+        |both_ct AS MATERIALIZED (SELECT a.t AS type_a,
+        |    b.t AS type_b, COUNT(*) AS n_both
+        |  FROM units a JOIN units b ON a.user_id = b.user_id
+        |    AND a.day = b.day AND a.t < b.t
+        |  GROUP BY 1, 2)
+        |SELECT bc.type_a, bc.type_b, bc.n_both,
+        |  pa.n AS n_a, pb.n AS n_b,
+        |  bc.n_both * 1000000 // (pa.n + pb.n - bc.n_both)
+        |    AS jaccard_ppm
+        |FROM both_ct bc
+        |JOIN pres pa ON pa.t = bc.type_a
+        |JOIN pres pb ON pb.t = bc.type_b""".stripMargin),
+    // GENERATED oracle (Similarity.ivfProbeSweepOracleSql): k-means
+    // assignment replay + member-mean centroids + per-probe
+    // candidate cosine top-k vs the brute-force truth
+    q("sim_ivf_probe_sweep", Similarity.ivfProbeSweep(_, _),
+      Similarity.ivfProbeSweepOracleSql()),
+    // padding waste: whitespace tokens, per-L truncate/pad algebra,
+    // exact integers, ppm shares
+    q("pipeline_padding_waste", TextAnalysis.paddingWaste(_, _),
+      """WITH toks AS MATERIALIZED (SELECT
+        |    CAST(len(list_filter(string_split(lower(text), ' '),
+        |      x -> x <> '')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        |g AS MATERIALIZED (SELECT n_tokens, CAST(l AS BIGINT) AS len
+        |  FROM toks CROSS JOIN
+        |    (SELECT unnest([128, 256, 512, 1024]) AS l))
+        |SELECT len, COUNT(*) AS n_docs,
+        |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
+        |  CAST(SUM(least(n_tokens, len)) AS BIGINT) AS kept_tokens,
+        |  CAST(SUM(len - least(n_tokens, len)) AS BIGINT)
+        |    AS pad_tokens,
+        |  CAST(SUM(greatest(n_tokens - len, 0)) AS BIGINT)
+        |    AS trunc_tokens,
+        |  CAST(SUM(len - least(n_tokens, len)) * 1000000
+        |    // (COUNT(*) * len) AS BIGINT) AS pad_ppm,
+        |  CAST(SUM(greatest(n_tokens - len, 0)) * 1000000
+        |    // greatest(SUM(n_tokens), 1) AS BIGINT) AS trunc_ppm
+        |FROM g GROUP BY 1""".stripMargin),
+    // GENERATED oracle (Analytics.medianPolishOracleSql): two-sweep
+    // lower-median selection over the bounded DOW×month matrix —
+    // exact cents end to end
+    q("analytics_median_polish", Analytics.medianPolish(_, _),
+      Analytics.medianPolishOracleSql),
+    // GENERATED oracle (Analytics.cramersVOracleSql): identical
+    // per-cell truncating contingency terms, HUGEINT throughout
+    q("analytics_cramers_v", Analytics.cramersV(_, _),
+      Analytics.cramersVOracleSql),
+    // GENERATED oracle (Graph.diameterTwoSweepOracleSql): both BFS
+    // sweeps unrolled to the same fixed round budget
+    q("graph_diameter", Graph.diameterTwoSweep(_, _),
+      graft.operators.Graph.diameterTwoSweepOracleSql()),
+    // mojibake screen: C0-control count (minus tab/newline/CR) via
+    // length difference, U+FFFD doc flags via chr(65533)
+    q("text_mojibake_screen", TextAnalysis.mojibakeScreen(_, _),
+      """WITH p AS MATERIALIZED (SELECT source,
+        |    CAST(length(text) AS BIGINT) AS n,
+        |    CAST(length(text) - length(regexp_replace(text,
+        |      '[\x00-\x08\x0B\x0C\x0E-\x1F]', '', 'g')) AS BIGINT)
+        |      AS ctrl,
+        |    CAST(length(text) - length(replace(text, chr(65533), ''))
+        |      AS BIGINT) AS repl
+        |  FROM documents)
+        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(SUM(n) AS BIGINT) AS n_chars,
+        |  CAST(SUM(ctrl) AS BIGINT) AS ctrl_chars,
+        |  CAST(COUNT(*) FILTER (repl > 0) AS BIGINT) AS repl_docs,
+        |  CAST(SUM(repl) AS BIGINT) AS repl_chars,
+        |  CAST(SUM(ctrl) * 1000000 // greatest(SUM(n), 1) AS BIGINT)
+        |    AS ctrl_ppm,
+        |  CAST(COUNT(*) FILTER (repl > 0) * 1000000 // COUNT(*)
+        |    AS BIGINT) AS repl_doc_ppm
+        |FROM p GROUP BY 1""".stripMargin),
     // greedy MMR replayed as a RECURSIVE CTE over (sel, pen) list
     // state — the pipeline_pack_greedy discipline: each step picks
     // argmax(7·simq − 3·pen) via a struct sort with the (score desc,
     // index asc) tie-break, then folds the max-penalty update.
     // Integer dots of trunc(x·1000) quantized vectors on both engines
-    "sim_mmr_rerank" ->
+    q("sim_mmr_rerank", Similarity.mmrRerank(_, _),
       """WITH RECURSIVE
         |e AS MATERIALIZED (SELECT vec_id,
         |    [CAST(trunc(x * 1000) AS BIGINT)
@@ -3576,159 +4959,282 @@ object SparkEntry {
         |SELECT query_id, CAST(p AS BIGINT) AS rank,
         |  CAST(ids[sel[p] + 1] AS BIGINT) AS cand_id,
         |  CAST(simq[sel[p] + 1] AS BIGINT) AS dot_q6
-        |FROM final, LATERAL unnest(generate_series(1, 5)) u(p)""".stripMargin,
-    // hybrid structured+vector query (AnalyticDB-V shape): the lang
-    // predicate pre-filters the corpus before any distance math
-    "sim_filtered_ann" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-        |      FROM e),
-        |c AS (SELECT n.* FROM n JOIN documents d ON n.vec_id = d.doc_id
-        |      WHERE d.lang = 'en'),
-        |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n
-        |      WHERE vec_id < 20),
-        |s AS (SELECT query_id, c.vec_id AS neighbor_id,
-        |  list_sum([qv[i + 1] * c.v[i + 1] for i in range(0, len(qv))])
-        |   / (qn * c.nrm) AS cos
-        | FROM q, c WHERE c.vec_id <> query_id)
-        |SELECT query_id, rk, neighbor_id FROM (
-        | SELECT query_id, neighbor_id, row_number() OVER
-        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-        | FROM s) t
-        |WHERE rk <= 5""".stripMargin,
-    "text_langid" ->
-      """SELECT doc_id, pred_lang,
-        | CASE WHEN pred_lang = lang THEN 1 ELSE 0 END AS label_match
-        |FROM (
-        | SELECT doc_id, lang, CASE
-        |  WHEN regexp_matches(lower(text), '[一-鿿]') THEN 'zh'
-        |  WHEN regexp_matches(lower(text), '[぀-ヿ]') THEN 'ja'
-        |  WHEN regexp_matches(lower(text), '[Ѐ-ӿ]') THEN 'ru'
-        |  WHEN regexp_matches(lower(text), '[äöüß]') THEN 'de'
-        |  WHEN regexp_matches(lower(text), '[àâçèéêëîïôùû]') THEN 'fr'
-        |  WHEN regexp_matches(lower(text), '[áíñóú]') THEN 'es'
-        |  WHEN regexp_matches(lower(text), '(^| )(the|and|of|to|a|is)( |$)')
-        |   THEN 'en'
-        |  ELSE 'und' END AS pred_lang
-        | FROM documents) t""".stripMargin,
-    "text_quality" ->
-      """SELECT doc_id,
-        | CAST(length(text) AS BIGINT) AS n_chars_calc,
-        | CAST(len(toks) AS BIGINT) AS n_tokens,
-        | CAST(list_sum([length(x) for x in toks]) AS DOUBLE)
-        |  / NULLIF(CAST(len(toks) AS DOUBLE), 0) AS mean_token_len,
-        | stop_ct / NULLIF(n_toks, 0) AS stopword_ratio,
-        | alpha / NULLIF(n_chars, 0) AS alpha_ratio,
-        | stop_ct / NULLIF(n_toks, 0) * 0.3 + alpha / NULLIF(n_chars, 0) * 0.4
-        |  + least(n_toks / 100.0, 1.0) * 0.3 AS quality_score
-        |FROM (
-        | SELECT doc_id, text, toks,
-        |  CAST(length(text) AS DOUBLE) AS n_chars,
-        |  CAST(len(toks) AS DOUBLE) AS n_toks,
-        |  CAST(len(list_filter(toks, x -> list_contains(
-        |   ['the','a','of','and','to','is','in','that','it','for'], x)))
-        |   AS DOUBLE) AS stop_ct,
-        |  CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-        |   AS DOUBLE) AS alpha
-        | FROM (SELECT doc_id, text,
-        |        list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-        |       FROM documents) a) b""".stripMargin,
-    // hashed-feature linear quality model: token → mod-prime fold →
-    // bucket → Knuth-hash weight; mean weight per doc, all-integer.
-    // DuckDB's init-less list_reduce equals Spark's 0-seeded fold
-    // here because f(0, x) = x for this lambda.
-    "text_quality_model" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-        | FROM documents)
-        |SELECT doc_id, source,
-        | CAST(len(toks) AS BIGINT) AS n_tokens,
-        | CAST(coalesce(list_sum(list_transform(toks, t ->
-        |   ((list_reduce([CAST(ascii(substr(t, i, 1)) AS BIGINT)
-        |       for i in range(1, length(t) + 1)],
-        |     (a, x) -> (a * 31 + x) % 9007199254740881) % 4096)
-        |    * 2654435761) % 2003)), 0)
-        |  // greatest(len(toks), 1) AS BIGINT) AS score_milli,
-        | CAST(CASE WHEN coalesce(list_sum(list_transform(toks, t ->
-        |   ((list_reduce([CAST(ascii(substr(t, i, 1)) AS BIGINT)
-        |       for i in range(1, length(t) + 1)],
-        |     (a, x) -> (a * 31 + x) % 9007199254740881) % 4096)
-        |    * 2654435761) % 2003)), 0)
-        |  // greatest(len(toks), 1) >= 1000 THEN 1 ELSE 0 END AS INT)
-        |  AS keep
-        |FROM t""".stripMargin,
-    "text_tokens" ->
-      """SELECT doc_id,
-        | CAST(len(list_filter(string_split(lower(text), ' '),
-        |  x -> x <> '')) AS BIGINT) AS ws_tokens,
-        | CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |  x -> x <> '')) AS BIGINT) AS re_tokens,
-        | CAST(length(text) AS BIGINT) AS n_chars_calc
-        |FROM documents""".stripMargin,
-    // smooth-idf TF-IDF; identical double formula both sides, ranks
-    // (not scores) hashed, ties broken by term
-    "text_tfidf_topk" ->
-      """WITH tf AS (
-        | SELECT doc_id, t AS term, COUNT(*) AS tf FROM (
-        |  SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '),
-        |    x -> x <> '')) AS t FROM documents) u
-        | GROUP BY 1, 2),
-        |n AS (SELECT COUNT(*) AS n FROM documents),
-        |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT tf.doc_id, tf.term,
-        |   tf.tf * (ln((n.n + 1.0) / (df.df + 1.0)) + 1.0) AS score
-        |  FROM tf JOIN df USING (term) CROSS JOIN n)
-        |SELECT doc_id, term, rk FROM (
-        | SELECT doc_id, term, CAST(row_number() OVER (
-        |   PARTITION BY doc_id ORDER BY score DESC, term) AS BIGINT) AS rk
-        | FROM sc) t
-        |WHERE rk <= 3""".stripMargin,
-    "text_fingerprint" ->
-      """SELECT md5(array_to_string(list_sort(list_distinct(
-        |  list_filter(string_split(lower(text), ' '), x -> x <> ''))), ' '))
-        |  AS fp,
-        | MIN(doc_id) AS keep_id, COUNT(*) AS dup_ct
-        |FROM documents GROUP BY 1""".stripMargin,
-    // all-integer drift surface: band counts + ppm shares + 1pp flag
-    // (the float PSI is Σ(pa−pb)·ln(pa/pb) over exactly these shares)
-    "dq_drift_psi" ->
-      """WITH o AS (
-        | SELECT o_orderdate < TIMESTAMP '1998-01-01' AS is_a,
-        |  LEAST(9, CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT) // 5000000) AS band
-        | FROM orders),
-        |b AS (SELECT band, COUNT(*) FILTER (WHERE is_a) AS a_ct,
-        |        COUNT(*) FILTER (WHERE NOT is_a) AS b_ct
-        |      FROM o GROUP BY 1),
-        |t AS (SELECT CAST(SUM(a_ct) AS BIGINT) AS a_tot,
-        |        CAST(SUM(b_ct) AS BIGINT) AS b_tot FROM b)
-        |SELECT band, a_ct, b_ct,
-        | a_ct * 1000000 // a_tot AS a_ppm,
-        | b_ct * 1000000 // b_tot AS b_ppm,
-        | CAST(abs(a_ct * 1000000 // a_tot - b_ct * 1000000 // b_tot)
-        |   > 10000 AS BIGINT) AS drift_flag
-        |FROM b CROSS JOIN t""".stripMargin,
-    // lag-1/lag-7 Pearson off one window sort; exact DECIMAL moments,
-    // identical double formula both engines (same as analytics_corr)
-    "analytics_autocorr" ->
-      """WITH daily AS (
-        | SELECT CAST(o_orderdate AS DATE) AS dt,
-        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS BIGINT) AS g
-        | FROM orders GROUP BY 1),
-        |l AS (SELECT g, lag(g, 1) OVER (ORDER BY dt) AS g_1,
-        |        lag(g, 7) OVER (ORDER BY dt) AS g_7 FROM daily),
-        |p AS (SELECT lag_d, g, gp FROM l, LATERAL (VALUES
-        |        (1, g_1), (7, g_7)) v(lag_d, gp) WHERE gp IS NOT NULL),
+        |FROM final, LATERAL unnest(generate_series(1, 5)) u(p)""".stripMargin),
+    // sweep-line concurrency: the oracle's global running sum equals
+    // the engine's two-level (per-hour offset + within-hour) form
+    q("temporal_concurrency", Temporal.concurrency(_, _),
+      """WITH ev AS (SELECT user_id, epoch_us(ts) AS us FROM events),
+        |fl AS (SELECT user_id, us,
+        |  CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us)
+        |      IS NULL
+        |    OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
+        |      > 1800000000
+        |  THEN 1 ELSE 0 END AS is_new FROM ev),
+        |sid AS (SELECT user_id, us,
+        |  SUM(is_new) OVER (PARTITION BY user_id ORDER BY us
+        |    ROWS UNBOUNDED PRECEDING) AS sess_id FROM fl),
+        |sess AS (SELECT user_id, sess_id, MIN(us) AS start_us,
+        |  MAX(us) AS end_us FROM sid GROUP BY 1, 2),
+        |bounds AS (
+        | SELECT start_us AS us, CAST(1 AS BIGINT) AS delta, user_id
+        | FROM sess
+        | UNION ALL
+        | SELECT end_us + 1, CAST(-1 AS BIGINT), user_id FROM sess),
+        |b2 AS (SELECT *, us // 3600000000 AS hr FROM bounds),
+        |run AS (SELECT hr,
+        |  SUM(delta) OVER (ORDER BY us, delta DESC, user_id
+        |    ROWS UNBOUNDED PRECEDING) AS run
+        | FROM b2),
+        |perhour AS (SELECT hr, SUM(delta) AS hsum,
+        |  COUNT(*) FILTER (delta = 1) AS n_starts,
+        |  COUNT(*) FILTER (delta = -1) AS n_ends FROM b2 GROUP BY 1),
+        |offs AS (SELECT hr, n_starts, n_ends, hsum,
+        |  COALESCE(SUM(hsum) OVER (ORDER BY hr
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |    AS enter_c
+        | FROM perhour),
+        |mx AS (SELECT hr, MAX(run) AS max_abs FROM run GROUP BY 1)
+        |SELECT offs.hr, CAST(n_starts AS BIGINT) AS n_starts,
+        | CAST(n_ends AS BIGINT) AS n_ends,
+        | CAST(enter_c AS BIGINT) AS enter_c,
+        | CAST(GREATEST(enter_c, max_abs) AS BIGINT) AS peak_c,
+        | CAST(enter_c + hsum AS BIGINT) AS exit_c
+        |FROM offs JOIN mx USING (hr)""".stripMargin),
+    // estimator calibration: same permutation coefficients inlined,
+    // md5 shingle basis replayable in SQL
+    q("dedup_minhash_calibration", Dedup.minhashCalibration(_, _),
+      Dedup.minhashCalibrationOracleSql()),
+    // simhash calibration: production fingerprints replayed via the
+    // dedup_simhash CTE; xor/bit_count are two's-complement in both
+    q("dedup_simhash_calibration", Dedup.simhashCalibration(_, _),
+      """WITH fp AS (
+        | SELECT doc_id, CAST(fpu -
+        |   CASE WHEN fpu >= 9223372036854775808::HUGEINT
+        |    THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END
+        |   AS BIGINT) AS simhash
+        | FROM (
+        |  SELECT doc_id, CAST(coalesce(list_sum([
+        |   CASE WHEN 2 * len(list_filter(hs, h -> ((h >> b) & 1) = 1))
+        |       > len(hs)
+        |    THEN (1::UBIGINT << b) ELSE 0::UBIGINT END
+        |   for b in range(0, 64)]), 0) AS HUGEINT) AS fpu
+        |  FROM (
+        |   SELECT doc_id, [CAST('0x' || substr(md5(t), 1, 16) AS UBIGINT)
+        |     for t in list_filter(string_split(lower(text), ' '),
+        |       x -> x <> '')] AS hs
+        |   FROM documents) a) b),
+        |sh AS (SELECT DISTINCT doc_id, s FROM (
+        | SELECT doc_id, unnest([substr(lower(text), i, 12)
+        |  for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
+        | FROM documents) t),
+        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+        |i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
+        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+        |      GROUP BY 1, 2),
+        |pair AS (SELECT id_a, id_b,
+        |  c * 1000000 // (na.n + nb.n - c) AS exact_ppm
+        | FROM i JOIN sz na ON na.doc_id = id_a
+        |  JOIN sz nb ON nb.doc_id = id_b
+        | WHERE c * 1000000 // (na.n + nb.n - c) >= 10000)
+        |SELECT CAST(bit_count(xor(fa.simhash, fb.simhash)) AS BIGINT)
+        |  AS hamming,
+        | COUNT(*) AS n_pairs,
+        | CAST(SUM(exact_ppm) // COUNT(*) AS BIGINT) AS avg_exact_ppm
+        |FROM pair JOIN fp fa ON fa.doc_id = id_a
+        | JOIN fp fb ON fb.doc_id = id_b
+        |GROUP BY 1""".stripMargin),
+    // truncated power iteration in ppm: divide ONCE per step after
+    // the exact Σ π_i·P_ij; sink states drop inbound mass (both
+    // engines share the convention)
+    q("analytics_markov_stationary", Analytics.markovStationary(_, _),
+      """WITH ev AS (SELECT user_id, event_type, ts, event_id
+        | FROM events),
+        |tr AS (SELECT event_type AS src_event,
+        |  lead(event_type) OVER (PARTITION BY user_id
+        |    ORDER BY ts, event_id) AS dst_event
+        | FROM ev),
+        |t AS (SELECT src_event, dst_event, COUNT(*) AS c FROM tr
+        | WHERE dst_event IS NOT NULL GROUP BY 1, 2),
+        |tot AS (SELECT src_event, SUM(c) AS tot FROM t GROUP BY 1),
+        |p AS (SELECT t.src_event, t.dst_event,
+        |  CAST(c * 1000000 // tot AS BIGINT) AS p_ppm
+        | FROM t JOIN tot ON t.src_event = tot.src_event),
+        |ns AS (SELECT COUNT(*) AS ns FROM tot),
+        |pi0 AS (SELECT src_event AS state,
+        |  CAST(1000000 // ns AS BIGINT) AS pi_ppm
+        | FROM tot CROSS JOIN ns),
+        |pi1 AS (SELECT dst_event AS state,
+        |  CAST(SUM(pi_ppm * p_ppm) // 1000000 AS BIGINT) AS pi_ppm
+        | FROM pi0 JOIN p ON pi0.state = p.src_event GROUP BY 1),
+        |pi2 AS (SELECT dst_event AS state,
+        |  CAST(SUM(pi_ppm * p_ppm) // 1000000 AS BIGINT) AS pi_ppm
+        | FROM pi1 JOIN p ON pi1.state = p.src_event GROUP BY 1),
+        |pi3 AS (SELECT dst_event AS state,
+        |  CAST(SUM(pi_ppm * p_ppm) // 1000000 AS BIGINT) AS pi_ppm
+        | FROM pi2 JOIN p ON pi2.state = p.src_event GROUP BY 1)
+        |SELECT state, pi_ppm FROM pi3""".stripMargin),
+    // positional octiles: value at 0-based rank (n−1)k DIV 8 is a
+    // unique multiset position — deterministic under any tiebreak
+    q("analytics_shape_profile", Analytics.shapeProfile(_, _),
+      """WITH b AS (SELECT l_returnflag AS rf,
+        |  CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+        |    AS cents
+        | FROM lineitem),
+        |r AS (SELECT rf, cents,
+        |  CAST(row_number() OVER (PARTITION BY rf ORDER BY cents)
+        |    AS BIGINT) AS rn,
+        |  COUNT(*) OVER (PARTITION BY rf) AS n FROM b),
+        |o AS (SELECT rf,
+        |  MIN(CASE WHEN rn - 1 = (n - 1) * 1 // 8 THEN cents END) AS e1,
+        |  MIN(CASE WHEN rn - 1 = (n - 1) * 2 // 8 THEN cents END) AS e2,
+        |  MIN(CASE WHEN rn - 1 = (n - 1) * 3 // 8 THEN cents END) AS e3,
+        |  MIN(CASE WHEN rn - 1 = (n - 1) * 4 // 8 THEN cents END) AS e4,
+        |  MIN(CASE WHEN rn - 1 = (n - 1) * 5 // 8 THEN cents END) AS e5,
+        |  MIN(CASE WHEN rn - 1 = (n - 1) * 6 // 8 THEN cents END) AS e6,
+        |  MIN(CASE WHEN rn - 1 = (n - 1) * 7 // 8 THEN cents END) AS e7
+        | FROM r GROUP BY 1)
+        |SELECT rf, e1, e2, e3, e4, e5, e6, e7,
+        | CASE WHEN e6 > e2 THEN
+        |   CAST((e6 + e2 - 2 * e4) * 1000000 // (e6 - e2) AS BIGINT)
+        | END AS bowley_ppm,
+        | CASE WHEN e6 > e2 THEN
+        |   CAST((e7 - e5 + e3 - e1) * 1000000 // (e6 - e2) AS BIGINT)
+        | END AS moors_ppm
+        |FROM o""".stripMargin),
+    // HITS: two a→h→a→h rounds, max-norm ppm per half-round (no L2 /
+    // sqrt in the graded surface), top-10 per role by (score, id)
+    q("graph_hits", Graph.hits(_, _),
+      """WITH e AS (SELECT DISTINCT o_custkey AS u, l_partkey AS i
+        | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+        |h1r AS (SELECT u, COUNT(*) AS raw FROM e GROUP BY 1),
+        |h1 AS (SELECT u, CAST(raw AS HUGEINT) * 1000000
+        |  // (SELECT MAX(raw) FROM h1r) AS score FROM h1r),
+        |a1r AS (SELECT i, SUM(score) AS raw FROM e JOIN h1 USING (u)
+        | GROUP BY 1),
+        |a1 AS (SELECT i, CAST(raw AS HUGEINT) * 1000000
+        |  // (SELECT MAX(raw) FROM a1r) AS score FROM a1r),
+        |h2r AS (SELECT u, SUM(score) AS raw FROM e JOIN a1 USING (i)
+        | GROUP BY 1),
+        |h2 AS (SELECT u, CAST(raw AS HUGEINT) * 1000000
+        |  // (SELECT MAX(raw) FROM h2r) AS score FROM h2r),
+        |a2r AS (SELECT i, SUM(score) AS raw FROM e JOIN h2 USING (u)
+        | GROUP BY 1),
+        |a2 AS (SELECT i, CAST(raw AS HUGEINT) * 1000000
+        |  // (SELECT MAX(raw) FROM a2r) AS score FROM a2r)
+        |SELECT 'hub' AS role, rank, node_id, score FROM (
+        | SELECT CAST(row_number() OVER (ORDER BY score DESC, u)
+        |   AS BIGINT) AS rank, CAST(u AS BIGINT) AS node_id,
+        |   CAST(score AS BIGINT) AS score FROM h2) WHERE rank <= 10
+        |UNION ALL
+        |SELECT 'authority' AS role, rank, node_id, score FROM (
+        | SELECT CAST(row_number() OVER (ORDER BY score DESC, i)
+        |   AS BIGINT) AS rank, CAST(i AS BIGINT) AS node_id,
+        |   CAST(score AS BIGINT) AS score FROM a2) WHERE rank <= 10"""
+        .stripMargin),
+    // Syntetos–Boylan classes: ADI vs the 1-row global month count,
+    // CV² with cleared denominators, 1.32/0.49 ppm cuts
+    q("analytics_demand_classes", Analytics.demandClasses(_, _),
+      """WITH m AS (SELECT l_partkey AS part_id,
+        |  date_trunc('month', l_shipdate) AS mo,
+        |  CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS BIGINT) AS q
+        | FROM lineitem GROUP BY 1, 2),
+        |nm AS (SELECT COUNT(DISTINCT mo) AS n_months FROM m),
+        |pp AS (SELECT part_id, COUNT(*) AS nw, SUM(q) AS sq,
+        |  SUM(CAST(q AS HUGEINT) * CAST(q AS HUGEINT)) AS sqq
+        | FROM m GROUP BY 1),
+        |cl AS (SELECT part_id,
+        |  CAST(n_months * 1000000 // nw AS BIGINT) AS adi_ppm,
+        |  CAST((CAST(nw AS HUGEINT) * sqq
+        |     - CAST(sq AS HUGEINT) * CAST(sq AS HUGEINT)) * 1000000
+        |    // (CAST(sq AS HUGEINT) * CAST(sq AS HUGEINT)) AS BIGINT)
+        |    AS cv2_ppm
+        | FROM pp CROSS JOIN nm)
+        |SELECT CASE WHEN adi_ppm < 1320000 AND cv2_ppm < 490000
+        |    THEN 'smooth'
+        |  WHEN adi_ppm >= 1320000 AND cv2_ppm < 490000
+        |    THEN 'intermittent'
+        |  WHEN adi_ppm < 1320000 THEN 'erratic'
+        |  ELSE 'lumpy' END AS demand_class,
+        | COUNT(*) AS n_parts,
+        | CAST(SUM(adi_ppm) // COUNT(*) AS BIGINT) AS avg_adi_ppm,
+        | CAST(SUM(cv2_ppm) // COUNT(*) AS BIGINT) AS avg_cv2_ppm
+        |FROM cl GROUP BY 1""".stripMargin),
+    // per-period ABC classing replayed twice (identical integer
+    // cum/tot rule as analytics_abc_class), full-outer aligned
+    q("analytics_abc_migration", Analytics.abcMigration(_, _),
+      """WITH r1 AS (
+        | SELECT l_partkey AS part_id, CAST(SUM(CAST(
+        |    CAST(l_extendedprice AS DECIMAL(12,2))
+        |    * (1 - CAST(l_discount AS DECIMAL(12,2))) * 10000
+        |    AS BIGINT)) AS BIGINT) AS x
+        | FROM lineitem WHERE l_shipdate < TIMESTAMP '1998-07-01'
+        | GROUP BY 1),
+        |c1 AS (SELECT part_id,
+        |  CASE WHEN cum * 5 <= tot * 4 THEN 'A'
+        |   WHEN cum * 20 <= tot * 19 THEN 'B' ELSE 'C' END AS c1
+        | FROM (SELECT part_id,
+        |   CAST(SUM(CAST(x AS HUGEINT))
+        |     OVER (ORDER BY x DESC, part_id) AS HUGEINT) AS cum,
+        |   CAST(SUM(CAST(x AS HUGEINT)) OVER () AS HUGEINT) AS tot
+        |  FROM r1)),
+        |r2 AS (
+        | SELECT l_partkey AS part_id, CAST(SUM(CAST(
+        |    CAST(l_extendedprice AS DECIMAL(12,2))
+        |    * (1 - CAST(l_discount AS DECIMAL(12,2))) * 10000
+        |    AS BIGINT)) AS BIGINT) AS x
+        | FROM lineitem WHERE l_shipdate >= TIMESTAMP '1998-07-01'
+        | GROUP BY 1),
+        |c2 AS (SELECT part_id,
+        |  CASE WHEN cum * 5 <= tot * 4 THEN 'A'
+        |   WHEN cum * 20 <= tot * 19 THEN 'B' ELSE 'C' END AS c2
+        | FROM (SELECT part_id,
+        |   CAST(SUM(CAST(x AS HUGEINT))
+        |     OVER (ORDER BY x DESC, part_id) AS HUGEINT) AS cum,
+        |   CAST(SUM(CAST(x AS HUGEINT)) OVER () AS HUGEINT) AS tot
+        |  FROM r2))
+        |SELECT COALESCE(c1, 'NEW') AS class_h1,
+        | COALESCE(c2, 'GONE') AS class_h2, COUNT(*) AS n_parts
+        |FROM c1 FULL OUTER JOIN c2 USING (part_id)
+        |GROUP BY 1, 2""".stripMargin),
+    // Tukey fences from 6dp-rounded exact quartiles; graded surface
+    // is counts against per-group constants, never per-row floats
+    q("analytics_iqr_outliers", Analytics.iqrOutliers(_, _),
+      """WITH q AS (SELECT event_type AS et,
+        |    round(quantile_cont(value, 0.25), 6) AS q1,
+        |    round(quantile_cont(value, 0.75), 6) AS q3
+        |  FROM events GROUP BY 1),
+        |f AS (SELECT et, q1, q3,
+        |    q1 - (q3 - q1) * 1.5 AS lo,
+        |    q3 + (q3 - q1) * 1.5 AS hi FROM q)
+        |SELECT e.event_type, f.q1, f.q3, COUNT(*) AS n,
+        |  COUNT(*) FILTER (WHERE e.value < f.lo) AS n_low,
+        |  COUNT(*) FILTER (WHERE e.value > f.hi) AS n_high
+        |FROM events e JOIN f ON e.event_type = f.et
+        |GROUP BY 1, 2, 3""".stripMargin),
+    // view leads purchase: shifted-day LEFT join per lag (purchase-
+    // free days contribute y=0 — the r7 zero-fill convention, bounded
+    // by the observed event horizon), exact decimal moments, the
+    // autocorr rounded-double finish
+    q("analytics_xcorr_leadlag", Analytics.leadLagXcorr(_, _),
+      """WITH x AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS xv
+        |  FROM events WHERE event_type = 'view' GROUP BY 1),
+        |y AS (SELECT CAST(ts AS DATE) AS yday, COUNT(*) AS yv
+        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
+        |p AS (SELECT CAST(l.o AS BIGINT) AS lag_d, x.xv,
+        |       COALESCE(y.yv, 0) AS yv
+        |      FROM x CROSS JOIN range(0, 4) l(o)
+        |      LEFT JOIN y ON y.yday = x.day + CAST(l.o AS INT)
+        |      WHERE x.day + CAST(l.o AS INT) <=
+        |        (SELECT MAX(CAST(ts AS DATE)) FROM events)),
         |mo AS (SELECT lag_d, COUNT(*) AS n,
-        |  SUM(CAST(g AS DECIMAL(19,0))) AS sx,
-        |  SUM(CAST(gp AS DECIMAL(19,0))) AS sy,
-        |  SUM(CAST(CAST(g AS DECIMAL(19,0)) * CAST(gp AS DECIMAL(19,0))
+        |  SUM(CAST(xv AS DECIMAL(19,0))) AS sx,
+        |  SUM(CAST(yv AS DECIMAL(19,0))) AS sy,
+        |  SUM(CAST(CAST(xv AS DECIMAL(19,0)) * CAST(yv AS DECIMAL(19,0))
         |    AS DECIMAL(38,0))) AS sxy,
-        |  SUM(CAST(CAST(g AS DECIMAL(19,0)) * CAST(g AS DECIMAL(19,0))
+        |  SUM(CAST(CAST(xv AS DECIMAL(19,0)) * CAST(xv AS DECIMAL(19,0))
         |    AS DECIMAL(38,0))) AS sxx,
-        |  SUM(CAST(CAST(gp AS DECIMAL(19,0)) * CAST(gp AS DECIMAL(19,0))
+        |  SUM(CAST(CAST(yv AS DECIMAL(19,0)) * CAST(yv AS DECIMAL(19,0))
         |    AS DECIMAL(38,0))) AS syy
         | FROM p GROUP BY 1)
         |SELECT lag_d, n,
@@ -3737,462 +5243,411 @@ object SparkEntry {
         |  / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
         |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
         |   * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-        |  AS autocorr
-        |FROM mo""".stripMargin,
-    // AND-of-terms boolean retrieval: distinct terms per doc, HAVING
-    // = the posting intersection
-    "text_search_conjunctive" ->
-      """SELECT doc_id, COUNT(*) AS n_hit FROM (
-        | SELECT doc_id, unnest(list_distinct(list_filter(
-        |   string_split(lower(text), ' '), x -> x <> ''))) AS term
-        | FROM documents) u
-        |WHERE term IN ('spark', 'window', 'merge')
-        |GROUP BY 1 HAVING COUNT(*) = 3""".stripMargin,
-    // BM25 ranks; per-term partials pivoted and summed in literal
-    // term order so the float total is expression-deterministic
-    "text_bm25_topk" ->
-      """WITH dl AS (SELECT doc_id, CAST(len(list_filter(
-        |   string_split(lower(text), ' '), x -> x <> '')) AS BIGINT) AS dl
-        |  FROM documents),
-        |st AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_len FROM dl),
-        |tf AS (SELECT doc_id, t AS term, COUNT(*) AS tf FROM (
-        |   SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '),
-        |     x -> x <> '')) AS t FROM documents) u
-        |  WHERE t IN ('hash', 'join', 'spark') GROUP BY 1, 2),
-        |dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-        |p AS (SELECT tf.doc_id, tf.term,
-        |   ln((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5) + 1.0) *
-        |   (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 *
-        |     CAST(dl.dl * n_docs AS DOUBLE) / CAST(tot_len AS DOUBLE)))
-        |   AS sc
-        |  FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id)
-        |  CROSS JOIN st),
-        |pv AS (SELECT doc_id,
-        |   coalesce(MAX(CASE WHEN term = 'hash' THEN sc END), 0.0) AS s1,
-        |   coalesce(MAX(CASE WHEN term = 'join' THEN sc END), 0.0) AS s2,
-        |   coalesce(MAX(CASE WHEN term = 'spark' THEN sc END), 0.0) AS s3
-        |  FROM p GROUP BY 1)
-        |SELECT doc_id, rk FROM (
-        | SELECT doc_id, CAST(row_number() OVER (
-        |   ORDER BY s1 + s2 + s3 DESC, doc_id) AS BIGINT) AS rk FROM pv) t
-        |WHERE rk <= 10""".stripMargin,
-    // sorted-neighborhood slide replayed with the same partitioned
-    // window order; pair set is engine-exact
-    "dedup_sorted_neighborhood" ->
-      """WITH h AS (SELECT doc_id, substr(lower(text), 1, 40) AS head,
-        |   substr(lower(text), 1, 1) AS pfx FROM documents),
-        |l AS (SELECT doc_id, head,
-        |  lead(doc_id, 1) OVER w AS nid_1, lead(head, 1) OVER w AS nhead_1,
-        |  lead(doc_id, 2) OVER w AS nid_2, lead(head, 2) OVER w AS nhead_2,
-        |  lead(doc_id, 3) OVER w AS nid_3, lead(head, 3) OVER w AS nhead_3
-        | FROM h WINDOW w AS (PARTITION BY pfx ORDER BY head, doc_id)),
-        |p AS (SELECT doc_id, head, nid, nhead FROM l, LATERAL (VALUES
-        |   (nid_1, nhead_1), (nid_2, nhead_2), (nid_3, nhead_3))
-        |   v(nid, nhead) WHERE nid IS NOT NULL)
-        |SELECT LEAST(doc_id, nid) AS id_a, GREATEST(doc_id, nid) AS id_b,
-        | levenshtein(head, nhead) AS dist
-        |FROM p WHERE levenshtein(head, nhead) <= 10""".stripMargin,
-    // strong-subgraph (n_st >= 2) common-neighbor candidates minus
-    // existing edges; integer-ppm Jaccard over exact degrees
-    "graph_link_predict" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem),
-        |e AS (SELECT a.pk AS s, b.pk AS t, COUNT(*) AS n_st
-        |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-        |      GROUP BY 1, 2),
-        |se AS (SELECT s, t FROM e WHERE n_st >= 2),
-        |und AS (SELECT s AS w, t AS n FROM se
-        |        UNION ALL SELECT t, s FROM se),
-        |deg AS (SELECT w, COUNT(*) AS deg FROM und GROUP BY 1),
-        |wedge AS (SELECT a.n AS u, b.n AS v, COUNT(*) AS cn
-        |          FROM und a JOIN und b ON a.w = b.w AND a.n < b.n
-        |          GROUP BY 1, 2),
-        |ne AS (SELECT u, v, cn FROM wedge
-        |       WHERE NOT EXISTS (SELECT 1 FROM se
-        |         WHERE se.s = wedge.u AND se.t = wedge.v))
-        |SELECT u, v, cn,
-        | cn * 1000000 // (du.deg + dv.deg - cn) AS jaccard_ppm
-        |FROM ne JOIN deg du ON ne.u = du.w
-        | JOIN deg dv ON ne.v = dv.w""".stripMargin,
-    // KMV set algebra replayed bit-for-bit: union bottom-k over the
-    // same 48-bit hashes, membership flags reduced per hash, integer
-    // ρ-scaled intersection estimate
-    "analytics_kmv_intersection" ->
-      """WITH pu AS (
-        | SELECT user_id,
-        |  MAX(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS in_a,
-        |  MAX(CASE WHEN event_type = 'cart' THEN 1 ELSE 0 END) AS in_b
-        | FROM events WHERE event_type IN ('view', 'cart') GROUP BY 1),
-        |ph AS (SELECT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-        |    1, 12))::UBIGINT AS BIGINT) AS h,
-        |   MAX(in_a) AS in_a, MAX(in_b) AS in_b
-        |  FROM pu GROUP BY 1),
-        |bk AS (SELECT h, in_a, in_b,
-        |   row_number() OVER (ORDER BY h) AS rk FROM ph),
-        |agg AS (SELECT COUNT(*) AS n_kept, MAX(h) AS hk,
-        |   CAST(SUM(in_a * in_b) AS BIGINT) AS n_both
-        |  FROM bk WHERE rk <= 64),
-        |u AS (SELECT n_kept, n_both,
-        |   CAST(CASE WHEN n_kept < 64 THEN n_kept
-        |        ELSE 17732923532771328 // hk END AS BIGINT) AS est_union
-        |  FROM agg)
-        |SELECT n_kept, n_both, est_union,
-        | n_both * est_union // n_kept AS est_inter FROM u""".stripMargin,
-    // the native bitmap aggregate must equal the exact distinct
-    "analytics_bitmap_uv" ->
-      """SELECT CAST(ts AS DATE) AS dt, COUNT(DISTINCT user_id) AS uv
-        |FROM events GROUP BY 1""".stripMargin,
-    // MATCH_RECOGNIZE-lite: ordered per-user path string, greedy
-    // regex counted identically by Java regex and RE2
-    "analytics_seq_pattern" ->
-      """WITH seq AS (
-        | SELECT user_id, string_agg(event_type, ','
-        |   ORDER BY epoch_us(ts), event_id) AS path
-        | FROM events GROUP BY 1)
-        |SELECT user_id, CAST(len(regexp_extract_all(path,
-        |   'view,(click,)+purchase')) AS BIGINT) AS n_hits
-        |FROM seq
-        |WHERE len(regexp_extract_all(path,
-        |   'view,(click,)+purchase')) > 0""".stripMargin,
-    // windowFunnel: the DP fold must equal the declarative EXISTS
-    // definition — max L with a strict chain inside ONE window
-    // anchored at its first event
-    "analytics_window_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us
-        |  FROM events
-        |  WHERE event_type IN ('view', 'click', 'purchase')),
-        |u AS (SELECT DISTINCT user_id FROM e),
-        |lvl AS (SELECT u.user_id,
-        | CASE WHEN EXISTS (SELECT 1 FROM e v, e c, e p
-        |   WHERE v.user_id = u.user_id AND c.user_id = u.user_id
-        |     AND p.user_id = u.user_id
-        |     AND v.event_type = 'view' AND c.event_type = 'click'
-        |     AND p.event_type = 'purchase'
-        |     AND c.us > v.us AND p.us > c.us
-        |     AND p.us <= v.us + 86400000000) THEN 3
-        |  WHEN EXISTS (SELECT 1 FROM e v, e c
-        |   WHERE v.user_id = u.user_id AND c.user_id = u.user_id
-        |     AND v.event_type = 'view' AND c.event_type = 'click'
-        |     AND c.us > v.us AND c.us <= v.us + 86400000000) THEN 2
-        |  WHEN EXISTS (SELECT 1 FROM e v
-        |   WHERE v.user_id = u.user_id
-        |     AND v.event_type = 'view') THEN 1
-        |  ELSE 0 END AS level
-        | FROM u)
-        |SELECT level, COUNT(*) AS users FROM lvl GROUP BY 1""".stripMargin,
-    // bitmap cohort algebra must equal COUNT(DISTINCT) set algebra
-    "analytics_bitmap_audience" ->
-      """WITH a AS (SELECT DISTINCT user_id FROM events
-        |           WHERE event_type = 'click'),
-        |b AS (SELECT DISTINCT user_id FROM events
-        |      WHERE event_type = 'purchase')
-        |SELECT (SELECT COUNT(*) FROM a) AS n_a,
-        |       (SELECT COUNT(*) FROM b) AS n_b,
-        |       (SELECT COUNT(*) FROM a SEMI JOIN b USING (user_id))
-        |         AS n_both,
-        |       (SELECT COUNT(*) FROM a ANTI JOIN b USING (user_id))
-        |         AS n_a_only,
-        |       (SELECT COUNT(*) FROM b ANTI JOIN a USING (user_id))
-        |         AS n_b_only""".stripMargin,
-    // temperature mixing: round(sqrt(n)*1e6) is the ONLY float op —
-    // IEEE sqrt is correctly rounded in both engines, so the weight
-    // is engine-exact; everything after is integer ppm
-    "pipeline_mix_temperature" ->
-      """WITH c AS (SELECT source, COUNT(*) AS n_docs,
-        |  CAST(round(sqrt(COUNT(*)) * 1000000) AS BIGINT) AS w
-        | FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS tot_n,
-        |             CAST(SUM(w) AS BIGINT) AS tot_w FROM c)
-        |SELECT source, n_docs,
-        |  n_docs * 1000000 // tot_n AS natural_ppm,
-        |  w * 1000000 // tot_w AS temp_ppm,
-        |  (w * 1000000 // tot_w) * 100000 // 1000000 AS target_docs
-        |FROM c, t""".stripMargin,
-    // split leakage: same md5 bucket as pipeline_split, same raw
-    // 12-gram join as dedup_cross_source (hash-join on the Spark
-    // side; 64-bit shingle collisions are negligible at any graded SF)
-    "pipeline_split_leakage" ->
-      """WITH base AS (
-        | SELECT doc_id,
-        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-        |    ::UBIGINT % 100 AS BIGINT) AS bucket,
-        |  lower(text) AS lt FROM documents),
-        |sh AS (
-        | SELECT DISTINCT doc_id,
-        |  CASE WHEN bucket < 80 THEN 0 WHEN bucket < 90 THEN 1
-        |       ELSE 2 END AS rk,
-        |  unnest([substr(lt, i, 12)
-        |    for i in range(1, greatest(length(lt) - 10, 2))]) AS s
-        | FROM base),
-        |p AS (
-        | SELECT a.rk AS rk_a, b.rk AS rk_b,
-        |        a.doc_id AS id_a, b.doc_id AS id_b
-        | FROM sh a JOIN sh b ON a.s = b.s AND a.rk < b.rk
-        | GROUP BY 1, 2, 3, 4 HAVING COUNT(*) >= 30)
-        |SELECT CASE rk_a WHEN 0 THEN 'train' WHEN 1 THEN 'val'
-        |       ELSE 'test' END AS split_a,
-        |       CASE rk_b WHEN 0 THEN 'train' WHEN 1 THEN 'val'
-        |       ELSE 'test' END AS split_b,
-        |       COUNT(*) AS leaked_pairs,
-        |       COUNT(DISTINCT id_b) AS contaminated_docs
-        |FROM p GROUP BY 1, 2""".stripMargin,
-    // 3σ c-chart with the decision cross-multiplied into integers:
-    // (n·x−S)² > 9(nΣx²−S²) — DECIMAL(38,0) vs HUGEINT, both exact
-    "dq_spc_orders" ->
+        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS xcorr
+        |FROM mo""".stripMargin),
+    // arc elasticity: cross-multiplied midpoint formula, one final
+    // toward-zero DIV in 128-bit integers on both engines
+    q("analytics_arc_elasticity", Analytics.arcElasticity(_, _),
+      """WITH b AS (SELECT l_partkey AS part_id,
+        |  CASE WHEN l_discount <= 0.02 THEN 'lo' ELSE 'hi' END AS bucket,
+        |  COUNT(*) AS n,
+        |  SUM(CAST(l_quantity AS BIGINT)) AS qty,
+        |  SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS rev
+        | FROM lineitem
+        | WHERE l_discount <= 0.02 OR l_discount >= 0.06
+        | GROUP BY 1, 2),
+        |lo AS (SELECT part_id, n AS n1, qty AS q1, rev AS r1
+        |       FROM b WHERE bucket = 'lo'),
+        |hi AS (SELECT part_id, n AS n2, qty AS q2, rev AS r2
+        |       FROM b WHERE bucket = 'hi'),
+        |x AS (SELECT lo.part_id, n1, n2,
+        |  CAST(q2 AS HUGEINT) * n1 - CAST(q1 AS HUGEINT) * n2 AS dq,
+        |  CAST(q2 AS HUGEINT) * n1 + CAST(q1 AS HUGEINT) * n2 AS sq,
+        |  CAST(r2 AS HUGEINT) * q1 - CAST(r1 AS HUGEINT) * q2 AS dp,
+        |  CAST(r2 AS HUGEINT) * q1 + CAST(r1 AS HUGEINT) * q2 AS sp
+        | FROM lo JOIN hi ON lo.part_id = hi.part_id)
+        |SELECT part_id, n1, n2,
+        |  CAST(dq * sp * 1000000 // (sq * dp) AS BIGINT) AS elast_ppm
+        |FROM x WHERE dp <> 0""".stripMargin),
+    // month-of-year index: integer cents/day-count ratios against
+    // the 1-row grand total, one truncating DIV
+    q("analytics_seasonal_index", Analytics.seasonalIndex(_, _),
       """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS dt,
-        |  COUNT(*)::BIGINT AS x FROM orders GROUP BY 1),
-        |m AS (SELECT COUNT(*)::BIGINT AS n, CAST(SUM(x) AS BIGINT) AS sx,
-        |      CAST(SUM(x*x) AS BIGINT) AS sxx FROM daily)
-        |SELECT dt, x,
-        |  CASE WHEN n*x > sx THEN 'hi' ELSE 'lo' END AS side
-        |FROM daily, m
-        |WHERE (n*x - sx)::HUGEINT * (n*x - sx)::HUGEINT
-        |   > 9::HUGEINT * (n::HUGEINT * sxx::HUGEINT
-        |                   - sx::HUGEINT * sx::HUGEINT)""".stripMargin,
-    // pack spans = the pack oracle + a running sum over the same
-    // (source, bin) pack order
-    "pipeline_pack_mask_spans" ->
-      """WITH RECURSIVE d AS (
-        | SELECT source, doc_id,
-        |  CAST(len(list_filter(string_split(lower(text), ' '),
-        |    x -> x <> '')) AS BIGINT) AS nt,
-        |  row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        | FROM documents),
-        |p AS (
-        | SELECT source, doc_id, rn, nt, nt AS fill, CAST(0 AS BIGINT) AS bin
-        | FROM d WHERE rn = 1
+        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS BIGINT) AS g
+        | FROM orders GROUP BY 1),
+        |m AS (SELECT CAST(month(dt) AS BIGINT) AS moy,
+        |  COUNT(*) AS n_days, CAST(SUM(g) AS BIGINT) AS gmv_cents
+        | FROM daily GROUP BY 1),
+        |t AS (SELECT SUM(n_days) AS tot_days, SUM(gmv_cents) AS tot_cents
+        |      FROM m)
+        |SELECT moy, n_days, gmv_cents,
+        |  CAST(CAST(gmv_cents AS HUGEINT) * tot_days * 1000000
+        |    // (CAST(n_days AS HUGEINT) * tot_cents) AS BIGINT)
+        |    AS index_ppm
+        |FROM m CROSS JOIN t""".stripMargin),
+    // Spearman via bounded-domain frequency ranks: doubled average
+    // ranks stay integral, Pearson-on-ranks from exact moments
+    q("analytics_spearman", Analytics.spearmanCorr(_, _),
+      """WITH f AS (SELECT l_returnflag AS g,
+        |  CAST(l_quantity AS BIGINT) AS q,
+        |  CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT) AS dd
+        | FROM lineitem),
+        |rq AS (SELECT g, q,
+        |  2 * SUM(c) OVER (PARTITION BY g ORDER BY q) - c + 1 AS r2q
+        | FROM (SELECT g, q, COUNT(*) AS c FROM f GROUP BY 1, 2)),
+        |rd AS (SELECT g, dd,
+        |  2 * SUM(c) OVER (PARTITION BY g ORDER BY dd) - c + 1 AS r2dd
+        | FROM (SELECT g, dd, COUNT(*) AS c FROM f GROUP BY 1, 2)),
+        |j AS (SELECT f.g, r2q, r2dd
+        | FROM f JOIN rq ON f.g = rq.g AND f.q = rq.q
+        |        JOIN rd ON f.g = rd.g AND f.dd = rd.dd),
+        |mo AS (SELECT g, COUNT(*) AS n,
+        |  SUM(CAST(r2q AS DECIMAL(19,0))) AS sx,
+        |  SUM(CAST(r2dd AS DECIMAL(19,0))) AS sy,
+        |  SUM(CAST(CAST(r2q AS DECIMAL(19,0)) * CAST(r2dd AS DECIMAL(19,0))
+        |    AS DECIMAL(38,0))) AS sxy,
+        |  SUM(CAST(CAST(r2q AS DECIMAL(19,0)) * CAST(r2q AS DECIMAL(19,0))
+        |    AS DECIMAL(38,0))) AS sxx,
+        |  SUM(CAST(CAST(r2dd AS DECIMAL(19,0)) * CAST(r2dd AS DECIMAL(19,0))
+        |    AS DECIMAL(38,0))) AS syy
+        | FROM j GROUP BY 1)
+        |SELECT g AS l_returnflag, n,
+        | round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+        |    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+        |  / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+        |   * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
+        |  AS spearman_rho
+        |FROM mo""".stripMargin),
+    // Zipf profile: top-k rank/frequency table, ratio to top term
+    // and ideal 1/rank weight in exact integer ppm — log-free
+    q("text_zipf_profile", TextAnalysis.zipfProfile(_, _),
+      """WITH tok AS (SELECT unnest(list_filter(
+        |    string_split(lower(text), ' '), x -> x <> '')) AS tok
+        |  FROM documents),
+        |tf AS (SELECT tok, COUNT(*) AS freq FROM tok GROUP BY 1),
+        |r AS (SELECT tok, freq,
+        |  CAST(row_number() OVER (ORDER BY freq DESC, tok) AS BIGINT)
+        |    AS rank
+        | FROM tf),
+        |t AS (SELECT freq AS f1 FROM r WHERE rank = 1)
+        |SELECT rank, tok, freq,
+        |  freq * 1000000 // f1 AS ratio_ppm,
+        |  1000000 // rank AS zipf_ppm
+        |FROM r CROSS JOIN t WHERE rank <= 20""".stripMargin),
+    // radius-3 truncated harmonic centrality: reach-set expansions
+    // with per-level distinct, exact-distance counts as set-size
+    // differences, 10^6 DIV d integer weights
+    q("graph_harmonic", Graph.harmonicCentrality(_, _),
+      """WITH b AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |      FROM lineitem),
+        |p AS (SELECT a.pk AS s, b2.pk AS t, COUNT(*) AS n
+        |      FROM b a JOIN b b2 ON a.ok = b2.ok AND a.pk < b2.pk
+        |      GROUP BY 1, 2),
+        |pairs AS (SELECT s, t FROM p WHERE n >= 2),
+        |und AS (SELECT s AS v, t AS n FROM pairs
+        |        UNION ALL SELECT t, s FROM pairs),
+        |r2 AS (SELECT DISTINCT v, n FROM (
+        |  SELECT r.v, u.n FROM und r JOIN und u ON u.v = r.n
+        |  UNION ALL SELECT v, n FROM und) WHERE v <> n),
+        |r3 AS (SELECT DISTINCT v, n FROM (
+        |  SELECT r.v, u.n FROM r2 r JOIN und u ON u.v = r.n
+        |  UNION ALL SELECT v, n FROM r2) WHERE v <> n),
+        |c1 AS (SELECT v, COUNT(*) AS ca FROM und GROUP BY 1),
+        |c2 AS (SELECT v, COUNT(*) AS cb FROM r2 GROUP BY 1),
+        |c3 AS (SELECT v, COUNT(*) AS cc FROM r3 GROUP BY 1)
+        |SELECT c1.v AS part_id, ca AS c1, cb - ca AS c2x,
+        | cc - cb AS c3x,
+        | ca * 1000000 + (cb - ca) * (1000000 // 2)
+        |   + (cc - cb) * (1000000 // 3) AS harm_e6
+        |FROM c1 JOIN c2 ON c1.v = c2.v JOIN c3 ON c2.v = c3.v""".stripMargin),
+    // corpus version diff: the v2 derivation is part of the contract
+    q("corpus_version_diff", TextAnalysis.versionDiff(_, _),
+      """WITH v1 AS (SELECT doc_id, md5(text) AS h1 FROM documents),
+        |v2 AS (
+        | SELECT doc_id,
+        |  md5(CASE WHEN doc_id % 101 = 0 THEN text || ' v2'
+        |      ELSE text END) AS h2
+        | FROM documents WHERE doc_id % 97 <> 0
         | UNION ALL
-        | SELECT d.source, d.doc_id, d.rn, d.nt,
-        |  CASE WHEN p.fill + d.nt <= 128 THEN p.fill + d.nt ELSE d.nt END,
-        |  CASE WHEN p.fill + d.nt <= 128 THEN p.bin ELSE p.bin + 1 END
-        | FROM p JOIN d ON d.source = p.source AND d.rn = p.rn + 1)
-        |SELECT source, doc_id, nt AS n_tokens, bin AS bin_id,
-        | CAST(COALESCE(SUM(nt) OVER (PARTITION BY source, bin
-        |   ORDER BY doc_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |  AS BIGINT) AS tok_start,
-        | CAST(COALESCE(SUM(nt) OVER (PARTITION BY source, bin
-        |   ORDER BY doc_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |  + nt - 1 AS BIGINT) AS tok_end
-        |FROM p""".stripMargin,
-    // Holt–Winters: three shift recurrences replayed as a recursive
-    // CTE; `>>` (arithmetic shift) on BOTH sides — DuckDB's `//`
-    // truncates toward zero on negatives and would fork the fold
-    "analytics_holt_winters" ->
-      s"""WITH RECURSIVE $holtWintersCte
-         |SELECT dt, g, fitted, lvl, tr FROM hw""".stripMargin,
-    // forecast band: residual p10/p90 by rank-select (warmup days
-    // excluded), draped around the one-step-ahead fitted values
-    "analytics_forecast_interval" ->
-      s"""WITH RECURSIVE $holtWintersCte,
-         |res AS (SELECT rn, dt, g, fitted, g - fitted AS r
-         |        FROM hw WHERE rn > 8),
-         |nn AS (SELECT COUNT(*)::BIGINT AS n FROM res),
-         |rr AS (SELECT r, row_number() OVER (ORDER BY r) - 1 AS rk
-         |       FROM res),
-         |q AS (SELECT
-         |  (SELECT r FROM rr, nn WHERE rk = (n - 1) // 10) AS r10,
-         |  (SELECT r FROM rr, nn
-         |   WHERE rk = ((n - 1) * 9) // 10) AS r90),
-         |lastd AS (SELECT MAX(dt) AS mx FROM res)
-         |SELECT dt, g, fitted, fitted + r10 AS lo, fitted + r90 AS hi,
-         | CAST(CASE WHEN g >= fitted + r10 AND g <= fitted + r90
-         |   THEN 1 ELSE 0 END AS BIGINT) AS covered
-         |FROM res, q, lastd
-         |WHERE dt > mx - INTERVAL 30 DAY""".stripMargin,
-    // modality agreement: both pair relations replayed, set algebra
-    "dedup_modality_agreement" ->
+        | SELECT doc_id + 100000, md5(text) FROM documents
+        | WHERE doc_id % 103 = 0)
+        |SELECT CASE WHEN h1 IS NULL THEN 'added'
+        |  WHEN h2 IS NULL THEN 'removed'
+        |  WHEN h1 <> h2 THEN 'changed'
+        |  ELSE 'unchanged' END AS status, COUNT(*) AS n_docs
+        |FROM v1 FULL OUTER JOIN v2 USING (doc_id)
+        |GROUP BY 1""".stripMargin),
+    // top session paths, ties broken on the path string
+    q("analytics_top_paths", Analytics.topPaths(_, _),
+      """WITH p AS (
+        | SELECT array_to_string(
+        |   (list(event_type ORDER BY epoch_us(ts), event_id))[1:8], ',')
+        |   AS path
+        | FROM events GROUP BY user_id),
+        |c AS (SELECT path, COUNT(*) AS n_users FROM p GROUP BY 1)
+        |SELECT path, n_users,
+        | CAST(row_number() OVER (ORDER BY n_users DESC, path) AS INT)
+        |  AS rk
+        |FROM c QUALIFY rk <= 5""".stripMargin),
+    // array/HOF parity: Spark higher-order functions vs DuckDB list
+    // functions over identical sorted inputs
+    q("analytics_array_parity", Analytics.arrayParity(_, _),
+      """WITH g AS (
+        | SELECT user_id,
+        |  list_sort(list_distinct(list(event_type))) AS types,
+        |  list(event_id ORDER BY epoch_us(ts), event_id) AS eids
+        | FROM events GROUP BY 1)
+        |SELECT user_id,
+        | array_to_string(types, ',') AS types_csv,
+        | CAST(len(types) AS BIGINT) AS n_types,
+        | array_to_string(list_filter(types, t -> t LIKE 'c%'), '|')
+        |   AS c_types,
+        | array_to_string(types[1:2], ',') AS first2,
+        | CAST(list_sum(list_transform(types, t -> length(t)))
+        |   AS BIGINT) AS char_sum,
+        | eids[1] AS first_event_id,
+        | CAST(list_max(eids) AS BIGINT) AS max_event_id
+        |FROM g""".stripMargin),
+    // integer half-life decay: weight = 1e6 >> age_weeks, anchored
+    // to the corpus max timestamp so reruns are bit-identical
+    q("analytics_decayed_score", Analytics.decayedScore(_, _),
+      """WITH ev AS (SELECT event_id % 100 AS item_id, epoch_us(ts) AS us
+        |  FROM events WHERE event_type = 'purchase'),
+        |a AS (SELECT MAX(us) AS now_us FROM ev),
+        |w AS (SELECT item_id,
+        |  (1000000::BIGINT >> CAST(least((now_us - us)
+        |     // (7 * 86400000000), 30) AS INT)) AS wt
+        | FROM ev, a),
+        |sc AS (SELECT item_id, CAST(SUM(wt) AS BIGINT) AS score_ppm,
+        |       COUNT(*) AS n_events FROM w GROUP BY 1)
+        |SELECT item_id, score_ppm, n_events,
+        | CAST(row_number() OVER (ORDER BY score_ppm DESC, item_id)
+        |   AS INT) AS rk
+        |FROM sc QUALIFY rk <= 20""".stripMargin),
+    // RAKE: stopword-count islands → phrase runs, degree/freq word
+    // scores in integer ppm, top repeated short phrases
+    q("text_keyphrases", TextAnalysis.keyphrasesRake(_, _),
+      """WITH tk AS (
+        | SELECT doc_id,
+        |  list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
+        | FROM documents),
+        |tok AS (
+        | SELECT doc_id, CAST(i AS BIGINT) AS pos,
+        |        t[CAST(i AS INT) + 1] AS tok
+        | FROM (SELECT doc_id, t, unnest(range(len(t))) AS i FROM tk) u),
+        |fl AS (SELECT doc_id, pos, tok,
+        |  CASE WHEN tok IN ('a','the','of','and','to','in','is','on')
+        |       THEN 1 ELSE 0 END AS stop FROM tok),
+        |isl AS (SELECT doc_id, pos, tok, stop,
+        |  SUM(stop) OVER (PARTITION BY doc_id ORDER BY pos
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+        | FROM fl),
+        |member AS (SELECT doc_id, island, pos, tok FROM isl
+        |           WHERE stop = 0),
+        |plen AS (SELECT doc_id, island, COUNT(*) AS plen
+        |         FROM member GROUP BY 1, 2),
+        |ws AS (
+        | SELECT tok, COUNT(*) AS freq, CAST(SUM(plen) AS BIGINT) AS degree
+        | FROM member JOIN plen USING (doc_id, island) GROUP BY 1),
+        |wsc AS (SELECT tok, degree * 1000000 // freq AS wscore FROM ws),
+        |ph AS (
+        | SELECT m.doc_id, m.island,
+        |  string_agg(m.tok, ' ' ORDER BY m.pos) AS phrase,
+        |  CAST(SUM(w.wscore) AS BIGINT) AS score, COUNT(*) AS plen
+        | FROM member m JOIN wsc w ON m.tok = w.tok
+        | GROUP BY 1, 2),
+        |agg AS (
+        | SELECT phrase, COUNT(*) AS n_occ, MAX(score) AS score_ppm
+        | FROM ph WHERE plen <= 6 GROUP BY 1)
+        |SELECT phrase, n_occ, score_ppm,
+        | CAST(row_number() OVER (ORDER BY score_ppm DESC, phrase)
+        |   AS INT) AS rk
+        |FROM agg WHERE n_occ >= 2 QUALIFY rk <= 20""".stripMargin),
+    // exact KS sup-norm: cross-multiplied integer |ca·nb − cb·na|
+    // maxed BEFORE any division
+    q("dq_ks_test", Quality.ksTest(_, _),
+      """WITH bv AS (
+        | SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |   AS BIGINT) AS v,
+        |  COUNT(*) FILTER (WHERE o_orderdate < DATE '1996-01-01')
+        |    AS a_ct,
+        |  COUNT(*) FILTER (WHERE o_orderdate >= DATE '1996-01-01')
+        |    AS b_ct
+        | FROM orders GROUP BY 1),
+        |cum AS (
+        | SELECT v,
+        |  CAST(SUM(a_ct) OVER (ORDER BY v) AS BIGINT) AS ca,
+        |  CAST(SUM(b_ct) OVER (ORDER BY v) AS BIGINT) AS cb,
+        |  CAST(SUM(a_ct) OVER () AS BIGINT) AS na,
+        |  CAST(SUM(b_ct) OVER () AS BIGINT) AS nb
+        | FROM bv)
+        |SELECT MAX(na) AS na, MAX(nb) AS nb,
+        | MAX(abs(ca * nb - cb * na)) AS d_num,
+        | CAST(MAX(abs(ca * nb - cb * na))::HUGEINT * 1000000
+        |   // (MAX(na) * MAX(nb))::HUGEINT AS BIGINT) AS d_ppm
+        |FROM cum""".stripMargin),
+    // SCD3: current + previous value off one descending sort
+    q("dim_scd3_build", Temporal.userValueScd3(_, _),
+      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
+        |    MAX(value) AS last_view_value
+        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+        |r AS (SELECT user_id, us, last_view_value,
+        |  row_number() OVER (PARTITION BY user_id ORDER BY us DESC)
+        |    AS rn,
+        |  lead(last_view_value) OVER (PARTITION BY user_id
+        |    ORDER BY us DESC) AS prev_value,
+        |  lead(us) OVER (PARTITION BY user_id ORDER BY us DESC)
+        |    AS prev_changed_us
+        | FROM v)
+        |SELECT user_id, last_view_value AS cur_value, prev_value,
+        |       us AS changed_us, prev_changed_us
+        |FROM r WHERE rn = 1""".stripMargin),
+    // skyline: the quadratic NOT-EXISTS dominance definition is the
+    // independent oracle for the O(n log n) sweep
+    q("analytics_skyline", Analytics.skyline(_, _),
+      """WITH p AS (SELECT p_partkey,
+        |  CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+        |    AS price_cents,
+        |  CAST(p_size AS BIGINT) AS size
+        | FROM part)
+        |SELECT p_partkey, price_cents, size FROM p a
+        |WHERE NOT EXISTS (
+        | SELECT 1 FROM p b
+        | WHERE b.price_cents <= a.price_cents AND b.size >= a.size
+        |   AND (b.price_cents < a.price_cents OR b.size > a.size))""".stripMargin),
+    // rows-only: Borůvka's per-round component contraction has no
+    // SQL-oracle form; the unique-forest contract is spec-graded
+    // against a driver Kruskal under the same edge order
+    Query("graph_mst", Graph.minimumSpanningForest(_, _), None),
+    // oracle-graded half of the MST contract: spanning-forest
+    // certificate (n_edges = n_nodes − n_components, labels from the
+    // FOREST's own closure) — minimality stays spec-graded
+    // spanning-forest certificate: graph components via the same
+    // recursive closure, then the n_edges = n_nodes − n_components
+    // identity (equality ⟺ the Spark forest spans and is acyclic)
+    q("graph_mst_cert", Graph.mstCertificate(_, _),
+      graft.operators.Graph.mstCertificateOracleSql(minStrength = 2)),
+    // ABC (prefix-sum classes) × XYZ (CV² bands via exact integer
+    // cross-multiplication — no sqrt, no float anywhere)
+    q("analytics_abc_xyz", Analytics.abcXyzMatrix(_, _),
+      """WITH rev AS (
+        | SELECT l_partkey AS part_id, CAST(SUM(CAST(
+        |    CAST(l_extendedprice AS DECIMAL(12,2))
+        |    * (1 - CAST(l_discount AS DECIMAL(12,2))) * 10000
+        |    AS BIGINT)) AS BIGINT) AS x
+        | FROM lineitem GROUP BY 1),
+        |c AS (SELECT part_id, x,
+        |  CAST(SUM(CAST(x AS HUGEINT))
+        |    OVER (ORDER BY x DESC, part_id) AS HUGEINT) AS cum,
+        |  CAST(SUM(CAST(x AS HUGEINT)) OVER () AS HUGEINT) AS tot
+        | FROM rev),
+        |abc AS (SELECT part_id, CASE WHEN cum * 5 <= tot * 4 THEN 'A'
+        |   WHEN cum * 20 <= tot * 19 THEN 'B' ELSE 'C' END AS abc_class
+        | FROM c),
+        |mon AS (SELECT l_partkey AS part_id,
+        |  date_trunc('month', l_shipdate) AS m,
+        |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q
+        | FROM lineitem GROUP BY 1, 2),
+        |xyz AS (SELECT part_id,
+        |  CASE WHEN 4 * (n * sqq - sq * sq) <= sq * sq THEN 'X'
+        |   WHEN n * sqq - sq * sq <= sq * sq THEN 'Y'
+        |   ELSE 'Z' END AS xyz_class
+        | FROM (SELECT part_id, COUNT(*)::BIGINT AS n,
+        |        CAST(SUM(q) AS BIGINT) AS sq,
+        |        CAST(SUM(q * q) AS BIGINT) AS sqq
+        |       FROM mon GROUP BY 1) t)
+        |SELECT abc_class, xyz_class, COUNT(*) AS n_parts
+        |FROM abc JOIN xyz USING (part_id)
+        |GROUP BY 1, 2""".stripMargin),
+    // LOO target encoding: category-grain contract + the integer
+    // checksum of every row-grain encoding
+    q("analytics_target_encode", Analytics.targetEncodeLoo(_, _),
+      """WITH r AS (SELECT o_orderpriority AS cat,
+        |  CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+        |    AS x
+        | FROM orders),
+        |st AS (SELECT cat, COUNT(*)::BIGINT AS n,
+        |       CAST(SUM(x) AS BIGINT) AS sx FROM r GROUP BY 1),
+        |enc AS (SELECT r.cat, st.n,
+        |  CASE WHEN st.n > 1 THEN (st.sx - r.x) // (st.n - 1) END AS loo
+        | FROM r JOIN st ON r.cat = st.cat)
+        |SELECT cat, MAX(n) AS n_orders, MIN(loo) AS min_loo,
+        | MAX(loo) AS max_loo, CAST(SUM(loo) AS BIGINT) AS sum_loo
+        |FROM enc GROUP BY 1""".stripMargin),
+    // group k-fold: no user spans folds by construction
+    q("pipeline_group_kfold", TextAnalysis.groupKFold(_, _),
+      """SELECT
+        | CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
+        |   ::UBIGINT % 5 AS BIGINT) AS fold,
+        | COUNT(DISTINCT user_id) AS n_users,
+        | COUNT(*) AS n_events,
+        | COUNT(*) FILTER (WHERE event_type = 'purchase') AS n_purchases
+        |FROM events GROUP BY 1""".stripMargin),
+    // MIPS: Shrivastava–Li augmentation replayed — augmented-dot
+    // cell assignment, raw-dot probes, exact raw-dot rerank
+    q("sim_mips_topk", Similarity.mipsTopK(_, _),
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v]))
-        |      AS nrm FROM e),
-        |ep AS (SELECT id_a, id_b FROM (
-        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  list_sum([a.v[i + 1] * b.v[i + 1]
-        |    for i in range(0, len(a.v))]) / (a.nrm * b.nrm) AS cos
-        | FROM n a JOIN n b ON a.vec_id < b.vec_id) t
-        |WHERE cos >= 0.4),
-        |sh AS (
-        | SELECT DISTINCT doc_id, s FROM (
-        |  SELECT doc_id, unnest([substr(lower(text), i, 12)
-        |   for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
-        |  FROM documents) t),
-        |sz AS (SELECT doc_id, COUNT(*) AS ns FROM sh GROUP BY 1),
-        |tp AS (SELECT id_a, id_b FROM (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-        | FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        | GROUP BY 1, 2) i
-        | JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        | WHERE CAST(c AS DOUBLE) / (sa.ns + sb.ns - c) >= 0.5),
-        |cts AS (SELECT
-        |  (SELECT COUNT(*) FROM ep)::BIGINT AS n_embedding,
-        |  (SELECT COUNT(*) FROM tp)::BIGINT AS n_text,
-        |  (SELECT COUNT(*) FROM ep SEMI JOIN tp
-        |    ON ep.id_a = tp.id_a AND ep.id_b = tp.id_b)::BIGINT
-        |   AS n_both)
-        |SELECT n_embedding, n_text, n_both,
-        | n_both * 1000000
-        |  // greatest(n_embedding + n_text - n_both, 1) AS jaccard_ppm
-        |FROM cts""".stripMargin,
-    // Markov 2-step: row-normalized ppm chain with per-term DIV
-    // truncation — both engines walk the identical lattice
-    "analytics_markov_2step" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS us, event_id,
-        |  event_type AS a FROM events),
-        |tr AS (SELECT a, b, COUNT(*)::BIGINT AS c FROM (
-        |  SELECT a, lead(a) OVER (PARTITION BY user_id
-        |    ORDER BY us, event_id) AS b FROM ev) t
-        | WHERE b IS NOT NULL GROUP BY 1, 2),
-        |p AS (SELECT a, b,
-        |  c * 1000000 // CAST(SUM(c) OVER (PARTITION BY a) AS BIGINT)
-        |    AS p
-        | FROM tr),
-        |p1 AS (SELECT b AS state, p AS p1_ppm FROM p
-        |       WHERE a = 'view'),
-        |p2 AS (SELECT p.b AS state2,
-        |  CAST(SUM(p1.p1_ppm * p.p // 1000000) AS BIGINT) AS p2_ppm
-        | FROM p1 JOIN p ON p1.state = p.a GROUP BY 1)
-        |SELECT COALESCE(state, state2) AS event_type,
-        | COALESCE(p1_ppm, 0) AS p1_ppm,
-        | COALESCE(p2_ppm, 0) AS p2_ppm
-        |FROM p1 FULL OUTER JOIN p2 ON state = state2""".stripMargin,
-    // residual SPC: decompose CTE + cleared 3σ decision in HUGEINT
-    "dq_spc_residual" ->
-      """WITH RECURSIVE daily AS (
-        | SELECT CAST(o_orderdate AS DATE) AS dt,
-        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS BIGINT) AS g
-        | FROM orders GROUP BY 1),
-        |idx AS (SELECT row_number() OVER (ORDER BY dt) AS rn, dt, g
-        |        FROM daily),
-        |sm AS (
-        | SELECT rn, dt, g, g AS s, CAST(0 AS BIGINT) AS b
-        | FROM idx WHERE rn = 1
-        | UNION ALL
-        | SELECT i.rn, i.dt, i.g,
-        |  (i.g + (sm.s + sm.b) * 3) >> 2,
-        |  ((((i.g + (sm.s + sm.b) * 3) >> 2) - sm.s) + sm.b * 3) >> 2
-        | FROM idx i JOIN sm ON i.rn = sm.rn + 1),
-        |oa AS (SELECT CAST(SUM(g) AS BIGINT) // COUNT(*) AS avg_all
-        |       FROM daily),
-        |dw AS (SELECT CAST(dayofweek(dt) + 1 AS BIGINT) AS dow,
-        |  CAST(SUM(g) AS BIGINT) // COUNT(*) - avg_all AS sc
-        | FROM daily CROSS JOIN oa GROUP BY 1, avg_all),
-        |res AS (SELECT sm.dt, sm.g - sm.s - dw.sc AS r
-        | FROM sm JOIN dw
-        |  ON CAST(dayofweek(sm.dt) + 1 AS BIGINT) = dw.dow),
-        |mo AS (SELECT COUNT(*)::HUGEINT AS n,
-        |  SUM(r::HUGEINT) AS sx, SUM(r::HUGEINT * r) AS sxx FROM res)
-        |SELECT dt, r AS residual_cents,
-        | CASE WHEN n * r > sx THEN 'hi' ELSE 'lo' END AS side
-        |FROM res, mo
-        |WHERE (n * r - sx) * (n * r - sx) > 9 * (n * sxx - sx * sx)""".stripMargin,
-    // uncertainty sampling: same score CTE, threshold-distance cut
-    "pipeline_uncertainty_sample" ->
-      """WITH t AS (SELECT doc_id,
-        |  list_filter(string_split(lower(text), ' '), x -> x <> '')
-        |    AS toks
-        | FROM documents),
-        |sc AS (SELECT doc_id,
-        |  CAST(coalesce(list_sum(list_transform(toks, t ->
-        |   ((list_reduce([CAST(ascii(substr(t, i, 1)) AS BIGINT)
-        |       for i in range(1, length(t) + 1)],
-        |     (a, x) -> (a * 31 + x) % 9007199254740881) % 4096)
-        |    * 2654435761) % 2003)), 0)
-        |  // greatest(len(toks), 1) AS BIGINT) AS score_milli
-        | FROM t)
-        |SELECT doc_id, score_milli,
-        | abs(score_milli - 1000) AS dist,
-        | CAST(row_number() OVER (ORDER BY abs(score_milli - 1000),
-        |   doc_id) AS BIGINT) AS rk
-        |FROM sc QUALIFY rk <= 20""".stripMargin,
-    // shuffle-quality audit: adjacency rates in ppm, the same
-    // seed-42 md5 key the production shuffle emits
-    "pipeline_shuffle_quality" ->
-      """WITH docs AS (SELECT doc_id, source,
-        |  md5(concat_ws(':', '42', CAST(doc_id AS VARCHAR))) AS skey
-        | FROM documents),
-        |bf AS (SELECT
-        |  CAST(COUNT(*) FILTER (WHERE source = psrc) * 1000000
-        |   // COUNT(*) AS BIGINT) AS blocked_ppm
-        | FROM (SELECT source,
-        |   lag(source) OVER (ORDER BY source, doc_id) AS psrc
-        |  FROM docs) t
-        | WHERE psrc IS NOT NULL),
-        |af AS (SELECT
-        |  CAST(COUNT(*) FILTER (WHERE source = psrc) * 1000000
-        |   // COUNT(*) AS BIGINT) AS after_ppm
-        | FROM (SELECT source,
-        |   lag(source) OVER (ORDER BY skey, doc_id) AS psrc
-        |  FROM docs) t
-        | WHERE psrc IS NOT NULL),
-        |ex AS (SELECT CAST(SUM(ns * (ns - 1)) * 1000000
-        |  // (SUM(ns) * (SUM(ns) - 1)) AS BIGINT) AS expected_ppm
-        | FROM (SELECT COUNT(*)::BIGINT AS ns FROM docs
-        |       GROUP BY source) t)
-        |SELECT * FROM bf, af, ex""".stripMargin,
-    // seasonal strength over the decompose components; the variance
-    // RATIO cross-multiplies (n² denominators cancel)
-    "analytics_season_strength" ->
-      """WITH RECURSIVE daily AS (
-        | SELECT CAST(o_orderdate AS DATE) AS dt,
-        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS BIGINT) AS g
-        | FROM orders GROUP BY 1),
-        |idx AS (SELECT row_number() OVER (ORDER BY dt) AS rn, dt, g
-        |        FROM daily),
-        |sm AS (
-        | SELECT rn, dt, g, g AS s, CAST(0 AS BIGINT) AS b
-        | FROM idx WHERE rn = 1
-        | UNION ALL
-        | SELECT i.rn, i.dt, i.g,
-        |  (i.g + (sm.s + sm.b) * 3) >> 2,
-        |  ((((i.g + (sm.s + sm.b) * 3) >> 2) - sm.s) + sm.b * 3) >> 2
-        | FROM idx i JOIN sm ON i.rn = sm.rn + 1),
-        |oa AS (SELECT CAST(SUM(g) AS BIGINT) // COUNT(*) AS avg_all
-        |       FROM daily),
-        |dw AS (SELECT CAST(dayofweek(dt) + 1 AS BIGINT) AS dow,
-        |  CAST(SUM(g) AS BIGINT) // COUNT(*) - avg_all AS sc
-        | FROM daily CROSS JOIN oa GROUP BY 1, avg_all),
-        |comp AS (SELECT sm.g - sm.s - dw.sc AS r,
-        |  (sm.g - sm.s - dw.sc) + dw.sc AS sr
-        | FROM sm JOIN dw
-        |  ON CAST(dayofweek(sm.dt) + 1 AS BIGINT) = dw.dow),
-        |mo AS (SELECT COUNT(*)::HUGEINT AS n,
-        |  SUM(r::HUGEINT) AS srr,
-        |  SUM(r::HUGEINT * r) AS sqr,
-        |  SUM(sr::HUGEINT) AS ssr,
-        |  SUM(sr::HUGEINT * sr) AS sqs
-        | FROM comp)
-        |SELECT CAST(n AS BIGINT) AS n,
-        | greatest(0, 1000000 - CAST(
-        |   (n * sqr - srr * srr) * 1000000
-        |    // (n * sqs - ssr * ssr) AS BIGINT)) AS strength_ppm
-        |FROM mo""".stripMargin,
-    // Fano factor per top token: zero docs count in n
-    "text_burstiness" ->
-      """WITH nd AS (SELECT COUNT(*)::BIGINT AS n FROM documents),
-        |pd AS (
-        | SELECT doc_id, tok, COUNT(*)::BIGINT AS c FROM (
-        |  SELECT doc_id,
-        |   unnest(list_filter(string_split(lower(text), ' '),
-        |    x -> x <> '')) AS tok
-        |  FROM documents) t GROUP BY 1, 2),
-        |vs AS (SELECT tok, CAST(SUM(c) AS BIGINT) AS s,
-        |  CAST(SUM(c*c) AS BIGINT) AS sq,
-        |  COUNT(*)::BIGINT AS n_docs_with
-        | FROM pd GROUP BY 1)
-        |SELECT tok, s AS total_ct, n_docs_with,
-        | CAST((n::HUGEINT * sq - s::HUGEINT * s) * 1000000
-        |   // (n::HUGEINT * s) AS BIGINT) AS fano_ppm,
-        | CAST(row_number() OVER (ORDER BY s DESC, tok) AS BIGINT)
-        |   AS rk
-        |FROM vs, nd QUALIFY rk <= 20""".stripMargin,
-    // CPI formulas with truncated micro-cent unit prices, matched
-    // parts only
-    "analytics_price_index" ->
+        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
+        |      FROM e),
+        |mm AS (SELECT MAX(nrm) AS m FROM n),
+        |an AS (SELECT vec_id, v, nrm,
+        |  sqrt(greatest(0, m*m - nrm*nrm)) AS aug FROM n, mm),
+        |tot AS (SELECT greatest(count(*)//16, 1) AS stride FROM e),
+        |cents AS (SELECT (vec_id // stride) AS cidx, v AS cv,
+        |          aug AS ca FROM an, tot
+        |          WHERE vec_id % stride = 0 AND vec_id // stride < 16),
+        |cs AS (SELECT an.vec_id, cidx,
+        |  list_sum([an.v[i+1]*cv[i+1] for i in range(0,len(cv))])
+        |   + an.aug * ca AS ascore,
+        |  list_sum([an.v[i+1]*cv[i+1] for i in range(0,len(cv))])
+        |   AS qscore
+        | FROM an CROSS JOIN cents),
+        |assign AS (SELECT vec_id, cidx AS cell FROM (
+        |  SELECT vec_id, cidx, row_number() OVER
+        |   (PARTITION BY vec_id ORDER BY ascore DESC, cidx) AS r
+        |  FROM cs) t WHERE r = 1),
+        |probes AS (SELECT vec_id AS query_id, cidx AS cell FROM (
+        |  SELECT vec_id, cidx, row_number() OVER
+        |   (PARTITION BY vec_id ORDER BY qscore DESC, cidx) AS r
+        |  FROM cs WHERE vec_id < 20) t WHERE r <= 4),
+        |corpus AS (SELECT a.vec_id, a.cell, n.v
+        |           FROM assign a JOIN n USING (vec_id)),
+        |qv AS (SELECT p.query_id, p.cell, n.v AS qv
+        |       FROM probes p JOIN n ON n.vec_id = p.query_id),
+        |sc AS (SELECT query_id, c.vec_id AS neighbor_id,
+        |  list_sum([qv[i+1]*c.v[i+1] for i in range(0,len(qv))]) AS ip
+        | FROM qv JOIN corpus c USING (cell)
+        | WHERE c.vec_id <> query_id)
+        |SELECT query_id, rk, neighbor_id FROM (
+        | SELECT query_id, neighbor_id, row_number() OVER
+        |  (PARTITION BY query_id ORDER BY ip DESC, neighbor_id) AS rk
+        | FROM sc) t
+        |WHERE rk <= 5""".stripMargin),
+    // weighted median: exact rank-select over cumulative WEIGHT
+    q("analytics_weighted_median", Analytics.weightedMedian(_, _),
+      """WITH bv AS (
+        | SELECT CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT) // CAST(l_quantity AS BIGINT) AS price_c,
+        |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS wt
+        | FROM lineitem GROUP BY 1),
+        |c AS (SELECT price_c, wt,
+        |  CAST(SUM(wt) OVER (ORDER BY price_c) AS BIGINT) AS cum,
+        |  CAST(SUM(wt) OVER () AS BIGINT) AS tot
+        | FROM bv)
+        |SELECT
+        | (SELECT MIN(price_c) FROM c WHERE cum >= (tot+1)//2)
+        |   AS wmedian_c,
+        | (SELECT MIN(price_c) FROM c WHERE cum >= (tot*9+9)//10)
+        |   AS wp90_c,
+        | (SELECT MAX(tot) FROM c) AS total_weight""".stripMargin),
+    // revenue bridge: price = exact remainder ΔR − volume, so the
+    // waterfall conserves by construction
+    q("analytics_revenue_bridge", Analytics.revenueBridge(_, _),
       """WITH mon AS (
         | SELECT l_partkey AS part_id,
         |  CAST(date_trunc('month', l_shipdate) AS DATE) AS m,
@@ -4200,236 +5655,219 @@ object SparkEntry {
         |    AS BIGINT)) AS BIGINT) AS r,
         |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q
         | FROM lineitem GROUP BY 1, 2),
-        |pm AS (SELECT part_id, m, r * 10000 // q AS p, q FROM mon),
-        |m0 AS (SELECT MIN(m) AS m0 FROM pm),
-        |base AS (SELECT part_id, p AS p0, q AS q0 FROM pm, m0
-        |         WHERE m = m0)
+        |lg AS (SELECT *,
+        |  lag(m) OVER w AS pm, lag(r) OVER w AS pr,
+        |  lag(q) OVER w AS pq, lead(m) OVER w AS nm
+        | FROM mon WINDOW w AS (PARTITION BY part_id ORDER BY m)),
+        |eff AS (SELECT m,
+        |  CASE WHEN pm IS NOT NULL AND date_diff('month', pm, m) = 1
+        |   THEN (q - pq) * (pr // pq) ELSE 0 END AS vol,
+        |  CASE WHEN pm IS NOT NULL AND date_diff('month', pm, m) = 1
+        |   THEN r - pr - (q - pq) * (pr // pq) ELSE 0 END AS price,
+        |  CASE WHEN pm IS NULL OR date_diff('month', pm, m) <> 1
+        |   THEN r ELSE 0 END AS new_rev
+        | FROM lg),
+        |ex AS (SELECT CAST(m + INTERVAL 1 MONTH AS DATE) AS m,
+        |        -r AS exit_rev
+        |       FROM lg WHERE nm IS NULL OR date_diff('month', m, nm) <> 1),
+        |e1 AS (SELECT m, CAST(SUM(vol) AS BIGINT) AS volume_effect,
+        |        CAST(SUM(price) AS BIGINT) AS price_effect,
+        |        CAST(SUM(new_rev) AS BIGINT) AS new_effect
+        |       FROM eff GROUP BY 1),
+        |e2 AS (SELECT m, CAST(SUM(exit_rev) AS BIGINT) AS exit_effect
+        |       FROM ex GROUP BY 1)
         |SELECT m,
-        | CAST(CAST(SUM(p * q0) AS HUGEINT) * 1000000
-        |   // SUM(p0 * q0) AS BIGINT) AS laspeyres_ppm,
-        | CAST(CAST(SUM(p * q) AS HUGEINT) * 1000000
-        |   // SUM(p0 * q) AS BIGINT) AS paasche_ppm,
-        | COUNT(*) AS n_parts
-        |FROM pm JOIN base USING (part_id)
-        |GROUP BY 1""".stripMargin,
-    // runs test: the 95% decision cleared of every denominator
-    "dq_runs_test" ->
-      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS dt,
-        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS BIGINT) AS g
-        | FROM orders GROUP BY 1),
-        |mv AS (SELECT dt, g, lag(g) OVER (ORDER BY dt) AS pg
-        |       FROM daily),
-        |ud AS (SELECT dt,
-        |  CAST(CASE WHEN g > pg THEN 1 ELSE 0 END AS BIGINT) AS up
-        | FROM mv WHERE pg IS NOT NULL AND g <> pg),
-        |rn AS (SELECT up, lag(up) OVER (ORDER BY dt) AS pu FROM ud),
-        |agg AS (SELECT
-        |  CAST(SUM(CASE WHEN pu IS NULL OR pu <> up THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS runs,
-        |  COUNT(*) FILTER (WHERE up = 1)::BIGINT AS n_up,
-        |  COUNT(*) FILTER (WHERE up = 0)::BIGINT AS n_down
-        | FROM rn)
-        |SELECT n_up, n_down, runs,
-        | CAST(CASE WHEN
-        |   (runs * (n_up + n_down) - (n_up + n_down)
-        |     - 2 * n_up * n_down)::HUGEINT
-        |   * (runs * (n_up + n_down) - (n_up + n_down)
-        |     - 2 * n_up * n_down)
-        |   * 10000 * (n_up + n_down - 1)
-        |  > 38416::HUGEINT * 2 * n_up * n_down
-        |    * (2 * n_up * n_down - (n_up + n_down))
-        |  THEN 1 ELSE 0 END AS BIGINT) AS nonrandom_flag
-        |FROM agg""".stripMargin,
-    // Theil–Sen: double ratio only ORDERS; the emitted slope is
-    // integer micro-cents/day of the selected pair, sign split
-    "analytics_theil_sen" ->
-      """WITH daily AS (SELECT
-        |  CAST(date_diff('day', DATE '1970-01-01',
-        |    CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
-        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS BIGINT) AS y
-        | FROM orders GROUP BY 1),
-        |p AS (SELECT a.x AS xi, b.x AS xj,
-        |  CAST(b.y - a.y AS DOUBLE) / (b.x - a.x) AS r,
-        |  b.y - a.y AS dy, b.x - a.x AS dx
-        | FROM daily a JOIN daily b ON a.x < b.x),
-        |rk AS (SELECT *, row_number() OVER (ORDER BY r, xi, xj) - 1
-        |       AS rnk FROM p),
-        |nn AS (SELECT COUNT(*)::BIGINT AS n FROM p)
-        |SELECT n AS n_pairs,
-        | (CASE WHEN dy >= 0 THEN 1 ELSE -1 END)
-        |   * (abs(dy) * 1000000 // dx) AS slope_micro,
-        | dy, dx
-        |FROM rk, nn WHERE rnk = (n - 1) // 2""".stripMargin,
-    // SQ8: floor-quantized, DEQUANTIZED-cosine ranking (a raw code
-    // dot is shift-biased — see the Scaladoc)
-    "sim_ann_sq8" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |rng AS (SELECT MIN(x) AS mn, MAX(x) AS mx
-        |        FROM (SELECT unnest(v) AS x FROM e)),
-        |deq AS (SELECT vec_id,
-        |  [mn + floor((x - mn) * 255 / (mx - mn)) * ((mx - mn) / 255)
-        |   for x in v] AS dv
-        | FROM e, rng),
-        |nn AS (SELECT vec_id, dv,
-        |  sqrt(list_sum([x*x for x in dv])) AS nrm FROM deq),
-        |q AS (SELECT vec_id AS query_id, dv AS qv, nrm AS qn FROM nn
-        |      WHERE vec_id < 20),
-        |sc AS (SELECT query_id, nn.vec_id AS neighbor_id,
-        |  list_sum([qv[i+1] * dv[i+1] for i in range(0, len(dv))])
-        |   / (qn * nn.nrm) AS cos
-        | FROM q, nn WHERE nn.vec_id <> query_id)
-        |SELECT query_id, rk, neighbor_id FROM (
-        | SELECT query_id, neighbor_id, CAST(row_number() OVER
-        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id)
-        |  AS BIGINT) AS rk
-        | FROM sc) t
-        |WHERE rk <= 5""".stripMargin,
-    // SRM: χ² vs an even split reduces to (n1−n2)²/n; the 95%
-    // decision is pure-integer cross-multiplication
-    "analytics_ab_srm" ->
-      """WITH g AS (SELECT
-        |  COUNT(*) FILTER (WHERE user_id % 2 = 0)::BIGINT AS n1,
-        |  COUNT(*) FILTER (WHERE user_id % 2 <> 0)::BIGINT AS n2
-        | FROM events)
-        |SELECT n1, n2, (n1 - n2) * (n1 - n2) AS diff_sq,
-        | CAST(CASE WHEN (n1 - n2) * (n1 - n2) * 100
-        |   > (n1 + n2) * 384 THEN 1 ELSE 0 END AS BIGINT) AS srm_flag
-        |FROM g""".stripMargin,
-    // calendar dim: generate_series over the fact range, gap days
-    // included — that is the point of a date dimension
-    "dim_calendar_build" ->
-      """WITH r AS (SELECT MIN(CAST(o_orderdate AS DATE)) AS lo,
-        |  MAX(CAST(o_orderdate AS DATE)) AS hi FROM orders),
-        |cal AS (SELECT CAST(unnest(generate_series(lo, hi,
-        |  INTERVAL 1 DAY)) AS DATE) AS dt FROM r)
-        |SELECT dt,
-        | CAST(date_diff('day', DATE '1970-01-01', dt) % 7 AS BIGINT)
-        |   AS dow,
-        | CAST(year(dt) AS BIGINT) AS y,
-        | CAST(month(dt) AS BIGINT) AS mo,
-        | CAST(day(dt) AS BIGINT) AS dom,
-        | CAST(quarter(dt) AS BIGINT) AS q,
-        | CAST(CASE WHEN day(dt) = 1 THEN 1 ELSE 0 END AS BIGINT)
-        |   AS is_month_start,
-        | CAST(CASE WHEN dt = last_day(dt) THEN 1 ELSE 0 END AS BIGINT)
-        |   AS is_month_end
-        |FROM cal""".stripMargin,
-    // LPT schedule: the greedy fold replayed as a recursive CTE
-    // carrying the four worker-load counters
-    "pipeline_shard_schedule" -> {
-      val assign = "(CASE WHEN h.w0 <= h.w1 AND h.w0 <= h.w2 " +
-        "AND h.w0 <= h.w3 THEN 0 WHEN h.w1 <= h.w2 AND h.w1 <= h.w3 " +
-        "THEN 1 WHEN h.w2 <= h.w3 THEN 2 ELSE 3 END)"
-      s"""WITH RECURSIVE sh AS (
-         | SELECT CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)),
-         |   1, 8))::UBIGINT % 16 AS BIGINT) AS shard,
-         |  CAST(len(list_filter(string_split(lower(text), ' '),
-         |    x -> x <> '')) AS BIGINT) AS nt
-         | FROM documents),
-         |agg AS (SELECT shard, CAST(SUM(nt) AS BIGINT) AS n_tokens
-         |        FROM sh GROUP BY 1),
-         |ord AS (SELECT shard, n_tokens,
-         |  row_number() OVER (ORDER BY n_tokens DESC, shard) AS rn
-         | FROM agg),
-         |st AS (
-         | SELECT CAST(0 AS BIGINT) AS rn, CAST(NULL AS BIGINT) AS shard,
-         |  CAST(NULL AS BIGINT) AS n_tokens, CAST(NULL AS BIGINT)
-         |   AS worker,
-         |  CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1,
-         |  CAST(0 AS BIGINT) AS w2, CAST(0 AS BIGINT) AS w3
-         | UNION ALL
-         | SELECT o.rn, o.shard, o.n_tokens,
-         |  CAST($assign AS BIGINT),
-         |  h.w0 + CASE WHEN $assign = 0 THEN o.n_tokens ELSE 0 END,
-         |  h.w1 + CASE WHEN $assign = 1 THEN o.n_tokens ELSE 0 END,
-         |  h.w2 + CASE WHEN $assign = 2 THEN o.n_tokens ELSE 0 END,
-         |  h.w3 + CASE WHEN $assign = 3 THEN o.n_tokens ELSE 0 END
-         | FROM ord o JOIN st h ON o.rn = h.rn + 1)
-         |SELECT shard, n_tokens, worker FROM st WHERE rn > 0""".stripMargin
-    },
-    // chain audit: closure + intra-cluster min Jaccard; pairs with
-    // no shared shingle coalesce to 0 (the artifact case)
-    "dedup_chain_audit" ->
-      """WITH RECURSIVE
-        |sh AS (
-        | SELECT DISTINCT doc_id, s FROM (
-        |  SELECT doc_id, unnest([substr(lower(text), i, 12)
-        |   for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
-        |  FROM documents) t),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-        |i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |pairs AS (SELECT id_a, id_b FROM i
-        |          JOIN sz sa ON sa.doc_id = id_a
-        |          JOIN sz sb ON sb.doc_id = id_b
-        |          WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, lbl) AS (
-        | SELECT DISTINCT src, src FROM edges
-        | UNION
-        | SELECT e.src, r.lbl FROM edges e, reach r WHERE e.dst = r.id),
-        |cl AS (SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM reach
-        |       GROUP BY 1),
-        |intra AS (
-        | SELECT a.cluster_id, a.doc_id AS id_a, b.doc_id AS id_b
-        | FROM cl a JOIN cl b ON a.cluster_id = b.cluster_id
-        |  AND a.doc_id < b.doc_id),
-        |scored AS (
-        | SELECT intra.cluster_id,
-        |  CAST(COALESCE(i.c, 0) AS DOUBLE)
-        |   / (sa.n + sb.n - COALESCE(i.c, 0)) AS j
-        | FROM intra
-        | LEFT JOIN i ON i.id_a = intra.id_a AND i.id_b = intra.id_b
-        | JOIN sz sa ON sa.doc_id = intra.id_a
-        | JOIN sz sb ON sb.doc_id = intra.id_b),
-        |mj AS (SELECT cluster_id, MIN(j) AS min_j FROM scored
+        | COALESCE(volume_effect, 0) AS volume_effect,
+        | COALESCE(price_effect, 0) AS price_effect,
+        | COALESCE(new_effect, 0) AS new_effect,
+        | COALESCE(exit_effect, 0) AS exit_effect,
+        | COALESCE(volume_effect, 0) + COALESCE(price_effect, 0)
+        |  + COALESCE(new_effect, 0) + COALESCE(exit_effect, 0)
+        |  AS delta_rev
+        |FROM e1 FULL OUTER JOIN e2 USING (m)""".stripMargin),
+    // Holt–Winters: three shift recurrences replayed as a recursive
+    // CTE; `>>` (arithmetic shift) on BOTH sides — DuckDB's `//`
+    // truncates toward zero on negatives and would fork the fold
+    q("analytics_holt_winters", Analytics.holtWinters(_, _),
+      s"""WITH RECURSIVE $holtWintersCte
+         |SELECT dt, g, fitted, lvl, tr FROM hw""".stripMargin),
+    // growth accounting: status by previous active month; the
+    // ΔMAU = new + resurrected − churned identity is the contract
+    q("analytics_growth_accounting", Analytics.growthAccounting(_, _),
+      """WITH cm AS (SELECT DISTINCT o_custkey AS c,
+        |  CAST(date_trunc('month', o_orderdate) AS DATE) AS m
+        | FROM orders),
+        |lg AS (SELECT c, m, lag(m) OVER w AS pm, lead(m) OVER w AS nm
+        |       FROM cm WINDOW w AS (PARTITION BY c ORDER BY m)),
+        |st AS (SELECT m,
+        |  COUNT(*) FILTER (WHERE pm IS NULL) AS new_ct,
+        |  COUNT(*) FILTER (WHERE pm IS NOT NULL
+        |    AND date_diff('month', pm, m) = 1) AS retained_ct,
+        |  COUNT(*) FILTER (WHERE pm IS NOT NULL
+        |    AND date_diff('month', pm, m) > 1) AS resurrected_ct
+        | FROM lg GROUP BY 1),
+        |ch AS (SELECT CAST(m + INTERVAL 1 MONTH AS DATE) AS m,
+        |        COUNT(*) AS churned_ct
+        |       FROM lg WHERE nm IS NULL OR date_diff('month', m, nm) > 1
         |       GROUP BY 1)
-        |SELECT CASE WHEN min_j >= 0.5 THEN 'tight'
-        |  WHEN min_j >= 0.3 THEN 'chained'
-        |  ELSE 'artifact' END AS band, COUNT(*) AS n_clusters
-        |FROM mj GROUP BY 1""".stripMargin,
-    // vocabulary drift: integer ppm shares, full-outer token join —
-    // absence IS the OOV signal
-    "text_vocab_drift" ->
-      """WITH tok AS (
-        | SELECT CAST(substr(source, 4) AS INT) AS src_n,
-        |  unnest(list_filter(string_split(lower(text), ' '),
-        |    x -> x <> '')) AS tok
+        |SELECT m,
+        | COALESCE(new_ct, 0) AS new_ct,
+        | COALESCE(retained_ct, 0) AS retained_ct,
+        | COALESCE(resurrected_ct, 0) AS resurrected_ct,
+        | COALESCE(churned_ct, 0) AS churned_ct,
+        | COALESCE(new_ct, 0) + COALESCE(retained_ct, 0)
+        |  + COALESCE(resurrected_ct, 0) AS mau
+        |FROM st FULL OUTER JOIN ch USING (m)""".stripMargin),
+    // rows-only: no SQL oracle exists for a codec; contract spec'd
+    Query("text_compress_ratio", TextAnalysis.compressRatio(_, _), None),
+    // Cohen's κ from the 2×2 confusion, all cross-multiplied
+    q("pipeline_annotation_kappa", TextAnalysis.annotationKappa(_, _),
+      """WITH lab AS (
+        | SELECT length(text) >= 300 AS a,
+        |  len(list_distinct(list_filter(string_split(lower(text), ' '),
+        |    x -> x <> ''))) * 2
+        |   >= len(list_filter(string_split(lower(text), ' '),
+        |    x -> x <> '')) AS b
         | FROM documents),
-        |c AS (SELECT tok,
-        |  COUNT(*) FILTER (WHERE src_n < 10)::BIGINT AS a_ct,
-        |  COUNT(*) FILTER (WHERE src_n >= 10)::BIGINT AS b_ct
-        | FROM tok GROUP BY 1),
-        |sh AS (SELECT tok,
-        |  a_ct * 1000000 // (SELECT CAST(SUM(a_ct) AS BIGINT) FROM c)
-        |    AS a_ppm,
-        |  b_ct * 1000000 // (SELECT CAST(SUM(b_ct) AS BIGINT) FROM c)
-        |    AS b_ppm,
-        |  a_ct = 0 AS oov
-        | FROM c),
-        |sh2 AS (SELECT tok, a_ppm, b_ppm,
-        |  abs(a_ppm - b_ppm) AS shift_ppm, oov FROM sh),
-        |top AS (SELECT tok, a_ppm, b_ppm, shift_ppm,
-        |  CAST(row_number() OVER (ORDER BY shift_ppm DESC, tok)
-        |    AS BIGINT) AS rk
-        | FROM sh2 QUALIFY rk <= 20),
-        |summ AS (SELECT '__summary' AS tok,
-        |  CAST(SUM(shift_ppm) AS BIGINT) AS a_ppm,
-        |  CAST(SUM(CASE WHEN oov THEN b_ppm ELSE 0 END) AS BIGINT)
-        |    AS b_ppm,
-        |  CAST(0 AS BIGINT) AS shift_ppm, CAST(0 AS BIGINT) AS rk
-        | FROM sh2)
-        |SELECT * FROM top UNION ALL SELECT * FROM summ""".stripMargin,
+        |c AS (SELECT
+        |  COUNT(*) FILTER (WHERE a AND b)::BIGINT AS n11,
+        |  COUNT(*) FILTER (WHERE a AND NOT b)::BIGINT AS n10,
+        |  COUNT(*) FILTER (WHERE NOT a AND b)::BIGINT AS n01,
+        |  COUNT(*) FILTER (WHERE NOT a AND NOT b)::BIGINT AS n00
+        | FROM lab),
+        |m AS (SELECT *, n11 + n10 + n01 + n00 AS n,
+        |  (n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00)
+        |    AS pe_num
+        | FROM c)
+        |SELECT n11, n10, n01, n00, n,
+        | (n11 + n00) * 1000000 // n AS po_ppm,
+        | CAST(pe_num::HUGEINT * 1000000 // (n::HUGEINT * n)
+        |   AS BIGINT) AS pe_ppm,
+        | CAST((n::HUGEINT * (n11 + n00) - pe_num) * 1000000
+        |   // (n::HUGEINT * n - pe_num) AS BIGINT) AS kappa_ppm
+        |FROM m""".stripMargin),
+    // largest-remainder apportionment: Σalloc == budget exactly
+    q("analytics_apportion", Analytics.apportionBudget(_, _),
+      """WITH g AS (
+        | SELECT n_name, CAST(SUM(CAST(
+        |    CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT))
+        |   AS BIGINT) AS gmv
+        | FROM orders JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey
+        | GROUP BY 1),
+        |q AS (SELECT n_name, gmv,
+        |  CAST(gmv::HUGEINT * 1000000
+        |    // (SELECT CAST(SUM(gmv) AS HUGEINT) FROM g) AS BIGINT)
+        |    AS base,
+        |  gmv::HUGEINT * 1000000
+        |    % (SELECT CAST(SUM(gmv) AS HUGEINT) FROM g) AS rem
+        | FROM g),
+        |l AS (SELECT *,
+        |  1000000 - (SELECT CAST(SUM(base) AS BIGINT) FROM q) AS lft,
+        |  row_number() OVER (ORDER BY rem DESC, n_name) AS rrk
+        | FROM q)
+        |SELECT n_name, gmv, base,
+        | CASE WHEN rrk <= lft THEN 1 ELSE 0 END AS bonus,
+        | base + CASE WHEN rrk <= lft THEN 1 ELSE 0 END AS alloc
+        |FROM l""".stripMargin),
+    // Mann–Whitney 2U (tie-aware, doubled into integers)
+    q("dq_mannwhitney", Quality.mannWhitney(_, _),
+      """WITH bv AS (
+        | SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |   AS BIGINT) AS v,
+        |  COUNT(*) FILTER (WHERE o_orderdate < DATE '1996-01-01')
+        |    AS a_ct,
+        |  COUNT(*) FILTER (WHERE o_orderdate >= DATE '1996-01-01')
+        |    AS b_ct
+        | FROM orders GROUP BY 1),
+        |cum AS (SELECT v, a_ct, b_ct,
+        |  CAST(SUM(a_ct) OVER (ORDER BY v) AS BIGINT) AS ca,
+        |  CAST(SUM(b_ct) OVER (ORDER BY v) AS BIGINT) AS cb,
+        |  CAST(SUM(a_ct) OVER () AS BIGINT) AS na,
+        |  CAST(SUM(b_ct) OVER () AS BIGINT) AS nb
+        | FROM bv)
+        |SELECT MAX(na) AS n_a, MAX(nb) AS n_b,
+        | CAST(SUM(a_ct * (cb - b_ct) * 2 + a_ct * b_ct) AS BIGINT)
+        |   AS u2_a,
+        | CAST(SUM(b_ct * (ca - a_ct) * 2 + a_ct * b_ct) AS BIGINT)
+        |   AS u2_b
+        |FROM cum""".stripMargin),
+    // 1-D Wasserstein: Σ|CDF gap|·value-gap as an exact integer
+    // numerator, one division at the end
+    q("dq_wasserstein", Quality.wasserstein(_, _),
+      """WITH bv AS (
+        | SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |   AS BIGINT) AS v,
+        |  COUNT(*) FILTER (WHERE o_orderdate < DATE '1996-01-01')
+        |    AS a_ct,
+        |  COUNT(*) FILTER (WHERE o_orderdate >= DATE '1996-01-01')
+        |    AS b_ct
+        | FROM orders GROUP BY 1),
+        |cum AS (SELECT v,
+        |  CAST(SUM(a_ct) OVER (ORDER BY v) AS BIGINT) AS ca,
+        |  CAST(SUM(b_ct) OVER (ORDER BY v) AS BIGINT) AS cb,
+        |  CAST(SUM(a_ct) OVER () AS BIGINT) AS na,
+        |  CAST(SUM(b_ct) OVER () AS BIGINT) AS nb,
+        |  lead(v) OVER (ORDER BY v) AS vn
+        | FROM bv)
+        |SELECT MAX(na) AS n_a, MAX(nb) AS n_b,
+        | CAST(SUM(abs(ca * nb - cb * na)::HUGEINT * (vn - v))
+        |   * 1000000 // (MAX(na)::HUGEINT * MAX(nb)) AS BIGINT)
+        |   AS w1_microcents
+        |FROM cum WHERE vn IS NOT NULL""".stripMargin),
+    // LTTB: sequential largest-triangle selection replayed as a
+    // recursive CTE with a NOT-EXISTS argmax per bucket; centroids
+    // stay as sums (scaling area by m² never moves an argmax)
+    q("analytics_downsample_lttb", Analytics.downsampleLttb(_, _),
+      """WITH RECURSIVE
+        |daily AS (
+        | SELECT CAST(date_diff('day', DATE '1970-01-01', dt) AS BIGINT)
+        |   AS x, y FROM (
+        |  SELECT CAST(o_orderdate AS DATE) AS dt,
+        |   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |     AS BIGINT)) AS BIGINT) AS y
+        |  FROM orders GROUP BY 1) t),
+        |idx AS (SELECT x, y, row_number() OVER (ORDER BY x) AS rn,
+        |        COUNT(*) OVER () AS n FROM daily),
+        |pts AS (SELECT x, y, CAST((rn - 2) * 48 // (n - 2) AS BIGINT)
+        |   AS b FROM idx WHERE rn > 1 AND rn < n),
+        |bk AS (SELECT b, CAST(SUM(x) AS BIGINT) AS sx,
+        |       CAST(SUM(y) AS BIGINT) AS sy, COUNT(*)::BIGINT AS m
+        |       FROM pts GROUP BY 1),
+        |lst AS (SELECT x, y FROM idx WHERE rn = n),
+        |fst AS (SELECT x, y FROM idx WHERE rn = 1),
+        |anchor AS (
+        | SELECT b.b, COALESCE(nb.sx, l.x) AS ax,
+        |  COALESCE(nb.sy, l.y) AS ay, COALESCE(nb.m, 1) AS am
+        | FROM bk b LEFT JOIN bk nb ON nb.b = b.b + 1 CROSS JOIN lst l),
+        |sel AS (
+        | SELECT CAST(-1 AS BIGINT) AS b, x AS px, y AS py FROM fst
+        | UNION ALL
+        | SELECT p.b, p.x, p.y
+        | FROM sel s JOIN pts p ON p.b = s.b + 1
+        |  JOIN anchor a ON a.b = p.b
+        | WHERE NOT EXISTS (
+        |  SELECT 1 FROM pts q
+        |  WHERE q.b = p.b AND (
+        |   abs((s.px*a.am - a.ax)::HUGEINT * (q.y*a.am - a.ay)
+        |     - (q.x*a.am - a.ax)::HUGEINT * (s.py*a.am - a.ay))
+        |   > abs((s.px*a.am - a.ax)::HUGEINT * (p.y*a.am - a.ay)
+        |     - (p.x*a.am - a.ax)::HUGEINT * (s.py*a.am - a.ay))
+        |   OR (abs((s.px*a.am - a.ax)::HUGEINT * (q.y*a.am - a.ay)
+        |     - (q.x*a.am - a.ax)::HUGEINT * (s.py*a.am - a.ay))
+        |    = abs((s.px*a.am - a.ax)::HUGEINT * (p.y*a.am - a.ay)
+        |     - (p.x*a.am - a.ax)::HUGEINT * (s.py*a.am - a.ay))
+        |    AND q.x < p.x)))),
+        |outp AS (SELECT px AS x, py AS y FROM sel
+        |         UNION ALL SELECT x, y FROM lst)
+        |SELECT x AS day_idx, y AS gmv_cents,
+        | CAST(row_number() OVER (ORDER BY x) - 1 AS BIGINT) AS sel_idx
+        |FROM outp""".stripMargin),
     // calibration: same score CTE as text_quality_model; the decile
     // cut mirrors the Spark two-pass rank's ⌊rank·k/n⌋+1 formula
     // LITERALLY (ntile's remainder distribution differs — the
     // pipeline_ppl_mix precedent), so parity holds at any n mod k
-    "pipeline_score_calibration" ->
+    q("pipeline_score_calibration", TextAnalysis.scoreCalibration(_, _),
       """WITH t AS (SELECT doc_id,
         |  list_filter(string_split(lower(text), ' '), x -> x <> '')
         |    AS toks, length(text) >= 300 AS label
@@ -4451,10 +5889,10 @@ object SparkEntry {
         |   AS mean_score_milli,
         | COUNT(*) FILTER (WHERE label) * 1000000 // COUNT(*)
         |   AS label_rate_ppm
-        |FROM nt GROUP BY 1""".stripMargin,
+        |FROM nt GROUP BY 1""".stripMargin),
     // hard negatives: the sim_ann_ivf index replay minus the exact
     // n-gram near-dup pairs, winner per query by (cos, id)
-    "pipeline_hard_negatives" ->
+    q("pipeline_hard_negatives", Similarity.hardNegatives(_, _),
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
@@ -4505,180 +5943,300 @@ object SparkEntry {
         | SELECT query_id, hard_neg_id, row_number() OVER
         |  (PARTITION BY query_id ORDER BY cos DESC, hard_neg_id) AS rk
         | FROM sc) t
-        |WHERE rk = 1""".stripMargin,
-    // LTTB: sequential largest-triangle selection replayed as a
-    // recursive CTE with a NOT-EXISTS argmax per bucket; centroids
-    // stay as sums (scaling area by m² never moves an argmax)
-    "analytics_downsample_lttb" ->
-      """WITH RECURSIVE
-        |daily AS (
-        | SELECT CAST(date_diff('day', DATE '1970-01-01', dt) AS BIGINT)
-        |   AS x, y FROM (
-        |  SELECT CAST(o_orderdate AS DATE) AS dt,
-        |   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |     AS BIGINT)) AS BIGINT) AS y
-        |  FROM orders GROUP BY 1) t),
-        |idx AS (SELECT x, y, row_number() OVER (ORDER BY x) AS rn,
-        |        COUNT(*) OVER () AS n FROM daily),
-        |pts AS (SELECT x, y, CAST((rn - 2) * 48 // (n - 2) AS BIGINT)
-        |   AS b FROM idx WHERE rn > 1 AND rn < n),
-        |bk AS (SELECT b, CAST(SUM(x) AS BIGINT) AS sx,
-        |       CAST(SUM(y) AS BIGINT) AS sy, COUNT(*)::BIGINT AS m
-        |       FROM pts GROUP BY 1),
-        |lst AS (SELECT x, y FROM idx WHERE rn = n),
-        |fst AS (SELECT x, y FROM idx WHERE rn = 1),
-        |anchor AS (
-        | SELECT b.b, COALESCE(nb.sx, l.x) AS ax,
-        |  COALESCE(nb.sy, l.y) AS ay, COALESCE(nb.m, 1) AS am
-        | FROM bk b LEFT JOIN bk nb ON nb.b = b.b + 1 CROSS JOIN lst l),
-        |sel AS (
-        | SELECT CAST(-1 AS BIGINT) AS b, x AS px, y AS py FROM fst
-        | UNION ALL
-        | SELECT p.b, p.x, p.y
-        | FROM sel s JOIN pts p ON p.b = s.b + 1
-        |  JOIN anchor a ON a.b = p.b
-        | WHERE NOT EXISTS (
-        |  SELECT 1 FROM pts q
-        |  WHERE q.b = p.b AND (
-        |   abs((s.px*a.am - a.ax)::HUGEINT * (q.y*a.am - a.ay)
-        |     - (q.x*a.am - a.ax)::HUGEINT * (s.py*a.am - a.ay))
-        |   > abs((s.px*a.am - a.ax)::HUGEINT * (p.y*a.am - a.ay)
-        |     - (p.x*a.am - a.ax)::HUGEINT * (s.py*a.am - a.ay))
-        |   OR (abs((s.px*a.am - a.ax)::HUGEINT * (q.y*a.am - a.ay)
-        |     - (q.x*a.am - a.ax)::HUGEINT * (s.py*a.am - a.ay))
-        |    = abs((s.px*a.am - a.ax)::HUGEINT * (p.y*a.am - a.ay)
-        |     - (p.x*a.am - a.ax)::HUGEINT * (s.py*a.am - a.ay))
-        |    AND q.x < p.x)))),
-        |outp AS (SELECT px AS x, py AS y FROM sel
-        |         UNION ALL SELECT x, y FROM lst)
-        |SELECT x AS day_idx, y AS gmv_cents,
-        | CAST(row_number() OVER (ORDER BY x) - 1 AS BIGINT) AS sel_idx
-        |FROM outp""".stripMargin,
-    // Mann–Whitney 2U (tie-aware, doubled into integers)
-    "dq_mannwhitney" ->
-      """WITH bv AS (
-        | SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |   AS BIGINT) AS v,
-        |  COUNT(*) FILTER (WHERE o_orderdate < DATE '1996-01-01')
-        |    AS a_ct,
-        |  COUNT(*) FILTER (WHERE o_orderdate >= DATE '1996-01-01')
-        |    AS b_ct
-        | FROM orders GROUP BY 1),
-        |cum AS (SELECT v, a_ct, b_ct,
-        |  CAST(SUM(a_ct) OVER (ORDER BY v) AS BIGINT) AS ca,
-        |  CAST(SUM(b_ct) OVER (ORDER BY v) AS BIGINT) AS cb,
-        |  CAST(SUM(a_ct) OVER () AS BIGINT) AS na,
-        |  CAST(SUM(b_ct) OVER () AS BIGINT) AS nb
-        | FROM bv)
-        |SELECT MAX(na) AS n_a, MAX(nb) AS n_b,
-        | CAST(SUM(a_ct * (cb - b_ct) * 2 + a_ct * b_ct) AS BIGINT)
-        |   AS u2_a,
-        | CAST(SUM(b_ct * (ca - a_ct) * 2 + a_ct * b_ct) AS BIGINT)
-        |   AS u2_b
-        |FROM cum""".stripMargin,
-    // 1-D Wasserstein: Σ|CDF gap|·value-gap as an exact integer
-    // numerator, one division at the end
-    "dq_wasserstein" ->
-      """WITH bv AS (
-        | SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |   AS BIGINT) AS v,
-        |  COUNT(*) FILTER (WHERE o_orderdate < DATE '1996-01-01')
-        |    AS a_ct,
-        |  COUNT(*) FILTER (WHERE o_orderdate >= DATE '1996-01-01')
-        |    AS b_ct
-        | FROM orders GROUP BY 1),
-        |cum AS (SELECT v,
-        |  CAST(SUM(a_ct) OVER (ORDER BY v) AS BIGINT) AS ca,
-        |  CAST(SUM(b_ct) OVER (ORDER BY v) AS BIGINT) AS cb,
-        |  CAST(SUM(a_ct) OVER () AS BIGINT) AS na,
-        |  CAST(SUM(b_ct) OVER () AS BIGINT) AS nb,
-        |  lead(v) OVER (ORDER BY v) AS vn
-        | FROM bv)
-        |SELECT MAX(na) AS n_a, MAX(nb) AS n_b,
-        | CAST(SUM(abs(ca * nb - cb * na)::HUGEINT * (vn - v))
-        |   * 1000000 // (MAX(na)::HUGEINT * MAX(nb)) AS BIGINT)
-        |   AS w1_microcents
-        |FROM cum WHERE vn IS NOT NULL""".stripMargin,
-    // Cohen's κ from the 2×2 confusion, all cross-multiplied
-    "pipeline_annotation_kappa" ->
-      """WITH lab AS (
-        | SELECT length(text) >= 300 AS a,
-        |  len(list_distinct(list_filter(string_split(lower(text), ' '),
-        |    x -> x <> ''))) * 2
-        |   >= len(list_filter(string_split(lower(text), ' '),
-        |    x -> x <> '')) AS b
+        |WHERE rk = 1""".stripMargin),
+    // vocabulary drift: integer ppm shares, full-outer token join —
+    // absence IS the OOV signal
+    q("text_vocab_drift", TextAnalysis.vocabDrift(_, _),
+      """WITH tok AS (
+        | SELECT CAST(substr(source, 4) AS INT) AS src_n,
+        |  unnest(list_filter(string_split(lower(text), ' '),
+        |    x -> x <> '')) AS tok
         | FROM documents),
-        |c AS (SELECT
-        |  COUNT(*) FILTER (WHERE a AND b)::BIGINT AS n11,
-        |  COUNT(*) FILTER (WHERE a AND NOT b)::BIGINT AS n10,
-        |  COUNT(*) FILTER (WHERE NOT a AND b)::BIGINT AS n01,
-        |  COUNT(*) FILTER (WHERE NOT a AND NOT b)::BIGINT AS n00
-        | FROM lab),
-        |m AS (SELECT *, n11 + n10 + n01 + n00 AS n,
-        |  (n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00)
-        |    AS pe_num
-        | FROM c)
-        |SELECT n11, n10, n01, n00, n,
-        | (n11 + n00) * 1000000 // n AS po_ppm,
-        | CAST(pe_num::HUGEINT * 1000000 // (n::HUGEINT * n)
-        |   AS BIGINT) AS pe_ppm,
-        | CAST((n::HUGEINT * (n11 + n00) - pe_num) * 1000000
-        |   // (n::HUGEINT * n - pe_num) AS BIGINT) AS kappa_ppm
-        |FROM m""".stripMargin,
-    // largest-remainder apportionment: Σalloc == budget exactly
-    "analytics_apportion" ->
-      """WITH g AS (
-        | SELECT n_name, CAST(SUM(CAST(
-        |    CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT))
-        |   AS BIGINT) AS gmv
-        | FROM orders JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        | GROUP BY 1),
-        |q AS (SELECT n_name, gmv,
-        |  CAST(gmv::HUGEINT * 1000000
-        |    // (SELECT CAST(SUM(gmv) AS HUGEINT) FROM g) AS BIGINT)
-        |    AS base,
-        |  gmv::HUGEINT * 1000000
-        |    % (SELECT CAST(SUM(gmv) AS HUGEINT) FROM g) AS rem
-        | FROM g),
-        |l AS (SELECT *,
-        |  1000000 - (SELECT CAST(SUM(base) AS BIGINT) FROM q) AS lft,
-        |  row_number() OVER (ORDER BY rem DESC, n_name) AS rrk
-        | FROM q)
-        |SELECT n_name, gmv, base,
-        | CASE WHEN rrk <= lft THEN 1 ELSE 0 END AS bonus,
-        | base + CASE WHEN rrk <= lft THEN 1 ELSE 0 END AS alloc
-        |FROM l""".stripMargin,
-    // growth accounting: status by previous active month; the
-    // ΔMAU = new + resurrected − churned identity is the contract
-    "analytics_growth_accounting" ->
-      """WITH cm AS (SELECT DISTINCT o_custkey AS c,
-        |  CAST(date_trunc('month', o_orderdate) AS DATE) AS m
-        | FROM orders),
-        |lg AS (SELECT c, m, lag(m) OVER w AS pm, lead(m) OVER w AS nm
-        |       FROM cm WINDOW w AS (PARTITION BY c ORDER BY m)),
-        |st AS (SELECT m,
-        |  COUNT(*) FILTER (WHERE pm IS NULL) AS new_ct,
-        |  COUNT(*) FILTER (WHERE pm IS NOT NULL
-        |    AND date_diff('month', pm, m) = 1) AS retained_ct,
-        |  COUNT(*) FILTER (WHERE pm IS NOT NULL
-        |    AND date_diff('month', pm, m) > 1) AS resurrected_ct
-        | FROM lg GROUP BY 1),
-        |ch AS (SELECT CAST(m + INTERVAL 1 MONTH AS DATE) AS m,
-        |        COUNT(*) AS churned_ct
-        |       FROM lg WHERE nm IS NULL OR date_diff('month', m, nm) > 1
+        |c AS (SELECT tok,
+        |  COUNT(*) FILTER (WHERE src_n < 10)::BIGINT AS a_ct,
+        |  COUNT(*) FILTER (WHERE src_n >= 10)::BIGINT AS b_ct
+        | FROM tok GROUP BY 1),
+        |sh AS (SELECT tok,
+        |  a_ct * 1000000 // (SELECT CAST(SUM(a_ct) AS BIGINT) FROM c)
+        |    AS a_ppm,
+        |  b_ct * 1000000 // (SELECT CAST(SUM(b_ct) AS BIGINT) FROM c)
+        |    AS b_ppm,
+        |  a_ct = 0 AS oov
+        | FROM c),
+        |sh2 AS (SELECT tok, a_ppm, b_ppm,
+        |  abs(a_ppm - b_ppm) AS shift_ppm, oov FROM sh),
+        |top AS (SELECT tok, a_ppm, b_ppm, shift_ppm,
+        |  CAST(row_number() OVER (ORDER BY shift_ppm DESC, tok)
+        |    AS BIGINT) AS rk
+        | FROM sh2 QUALIFY rk <= 20),
+        |summ AS (SELECT '__summary' AS tok,
+        |  CAST(SUM(shift_ppm) AS BIGINT) AS a_ppm,
+        |  CAST(SUM(CASE WHEN oov THEN b_ppm ELSE 0 END) AS BIGINT)
+        |    AS b_ppm,
+        |  CAST(0 AS BIGINT) AS shift_ppm, CAST(0 AS BIGINT) AS rk
+        | FROM sh2)
+        |SELECT * FROM top UNION ALL SELECT * FROM summ""".stripMargin),
+    // chain audit: closure + intra-cluster min Jaccard; pairs with
+    // no shared shingle coalesce to 0 (the artifact case)
+    q("dedup_chain_audit", Dedup.chainAudit(_, _),
+      """WITH RECURSIVE
+        |sh AS (
+        | SELECT DISTINCT doc_id, s FROM (
+        |  SELECT doc_id, unnest([substr(lower(text), i, 12)
+        |   for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
+        |  FROM documents) t),
+        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+        |i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
+        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+        |      GROUP BY 1, 2),
+        |pairs AS (SELECT id_a, id_b FROM i
+        |          JOIN sz sa ON sa.doc_id = id_a
+        |          JOIN sz sb ON sb.doc_id = id_b
+        |          WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5),
+        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+        |          UNION ALL SELECT id_b, id_a FROM pairs),
+        |reach(id, lbl) AS (
+        | SELECT DISTINCT src, src FROM edges
+        | UNION
+        | SELECT e.src, r.lbl FROM edges e, reach r WHERE e.dst = r.id),
+        |cl AS (SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM reach
+        |       GROUP BY 1),
+        |intra AS (
+        | SELECT a.cluster_id, a.doc_id AS id_a, b.doc_id AS id_b
+        | FROM cl a JOIN cl b ON a.cluster_id = b.cluster_id
+        |  AND a.doc_id < b.doc_id),
+        |scored AS (
+        | SELECT intra.cluster_id,
+        |  CAST(COALESCE(i.c, 0) AS DOUBLE)
+        |   / (sa.n + sb.n - COALESCE(i.c, 0)) AS j
+        | FROM intra
+        | LEFT JOIN i ON i.id_a = intra.id_a AND i.id_b = intra.id_b
+        | JOIN sz sa ON sa.doc_id = intra.id_a
+        | JOIN sz sb ON sb.doc_id = intra.id_b),
+        |mj AS (SELECT cluster_id, MIN(j) AS min_j FROM scored
         |       GROUP BY 1)
-        |SELECT m,
-        | COALESCE(new_ct, 0) AS new_ct,
-        | COALESCE(retained_ct, 0) AS retained_ct,
-        | COALESCE(resurrected_ct, 0) AS resurrected_ct,
-        | COALESCE(churned_ct, 0) AS churned_ct,
-        | COALESCE(new_ct, 0) + COALESCE(retained_ct, 0)
-        |  + COALESCE(resurrected_ct, 0) AS mau
-        |FROM st FULL OUTER JOIN ch USING (m)""".stripMargin,
-    // revenue bridge: price = exact remainder ΔR − volume, so the
-    // waterfall conserves by construction
-    "analytics_revenue_bridge" ->
+        |SELECT CASE WHEN min_j >= 0.5 THEN 'tight'
+        |  WHEN min_j >= 0.3 THEN 'chained'
+        |  ELSE 'artifact' END AS band, COUNT(*) AS n_clusters
+        |FROM mj GROUP BY 1""".stripMargin),
+    // LPT schedule: the greedy fold replayed as a recursive CTE
+    // carrying the four worker-load counters
+    q("pipeline_shard_schedule", TextAnalysis.shardSchedule(_, _),
+      {
+      val assign = "(CASE WHEN h.w0 <= h.w1 AND h.w0 <= h.w2 " +
+        "AND h.w0 <= h.w3 THEN 0 WHEN h.w1 <= h.w2 AND h.w1 <= h.w3 " +
+        "THEN 1 WHEN h.w2 <= h.w3 THEN 2 ELSE 3 END)"
+      s"""WITH RECURSIVE sh AS (
+         | SELECT CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)),
+         |   1, 8))::UBIGINT % 16 AS BIGINT) AS shard,
+         |  CAST(len(list_filter(string_split(lower(text), ' '),
+         |    x -> x <> '')) AS BIGINT) AS nt
+         | FROM documents),
+         |agg AS (SELECT shard, CAST(SUM(nt) AS BIGINT) AS n_tokens
+         |        FROM sh GROUP BY 1),
+         |ord AS (SELECT shard, n_tokens,
+         |  row_number() OVER (ORDER BY n_tokens DESC, shard) AS rn
+         | FROM agg),
+         |st AS (
+         | SELECT CAST(0 AS BIGINT) AS rn, CAST(NULL AS BIGINT) AS shard,
+         |  CAST(NULL AS BIGINT) AS n_tokens, CAST(NULL AS BIGINT)
+         |   AS worker,
+         |  CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1,
+         |  CAST(0 AS BIGINT) AS w2, CAST(0 AS BIGINT) AS w3
+         | UNION ALL
+         | SELECT o.rn, o.shard, o.n_tokens,
+         |  CAST($assign AS BIGINT),
+         |  h.w0 + CASE WHEN $assign = 0 THEN o.n_tokens ELSE 0 END,
+         |  h.w1 + CASE WHEN $assign = 1 THEN o.n_tokens ELSE 0 END,
+         |  h.w2 + CASE WHEN $assign = 2 THEN o.n_tokens ELSE 0 END,
+         |  h.w3 + CASE WHEN $assign = 3 THEN o.n_tokens ELSE 0 END
+         | FROM ord o JOIN st h ON o.rn = h.rn + 1)
+         |SELECT shard, n_tokens, worker FROM st WHERE rn > 0""".stripMargin
+    }),
+    // forecast band: residual p10/p90 by rank-select (warmup days
+    // excluded), draped around the one-step-ahead fitted values
+    q("analytics_forecast_interval", Analytics.forecastInterval(_, _),
+      s"""WITH RECURSIVE $holtWintersCte,
+         |res AS (SELECT rn, dt, g, fitted, g - fitted AS r
+         |        FROM hw WHERE rn > 8),
+         |nn AS (SELECT COUNT(*)::BIGINT AS n FROM res),
+         |rr AS (SELECT r, row_number() OVER (ORDER BY r) - 1 AS rk
+         |       FROM res),
+         |q AS (SELECT
+         |  (SELECT r FROM rr, nn WHERE rk = (n - 1) // 10) AS r10,
+         |  (SELECT r FROM rr, nn
+         |   WHERE rk = ((n - 1) * 9) // 10) AS r90),
+         |lastd AS (SELECT MAX(dt) AS mx FROM res)
+         |SELECT dt, g, fitted, fitted + r10 AS lo, fitted + r90 AS hi,
+         | CAST(CASE WHEN g >= fitted + r10 AND g <= fitted + r90
+         |   THEN 1 ELSE 0 END AS BIGINT) AS covered
+         |FROM res, q, lastd
+         |WHERE dt > mx - INTERVAL 30 DAY""".stripMargin),
+    // SRM: χ² vs an even split reduces to (n1−n2)²/n; the 95%
+    // decision is pure-integer cross-multiplication
+    q("analytics_ab_srm", Analytics.abSrm(_, _),
+      """WITH g AS (SELECT
+        |  COUNT(*) FILTER (WHERE user_id % 2 = 0)::BIGINT AS n1,
+        |  COUNT(*) FILTER (WHERE user_id % 2 <> 0)::BIGINT AS n2
+        | FROM events)
+        |SELECT n1, n2, (n1 - n2) * (n1 - n2) AS diff_sq,
+        | CAST(CASE WHEN (n1 - n2) * (n1 - n2) * 100
+        |   > (n1 + n2) * 384 THEN 1 ELSE 0 END AS BIGINT) AS srm_flag
+        |FROM g""".stripMargin),
+    // calendar dim: generate_series over the fact range, gap days
+    // included — that is the point of a date dimension
+    q("dim_calendar_build", Temporal.calendarDim(_, _),
+      """WITH r AS (SELECT MIN(CAST(o_orderdate AS DATE)) AS lo,
+        |  MAX(CAST(o_orderdate AS DATE)) AS hi FROM orders),
+        |cal AS (SELECT CAST(unnest(generate_series(lo, hi,
+        |  INTERVAL 1 DAY)) AS DATE) AS dt FROM r)
+        |SELECT dt,
+        | CAST(date_diff('day', DATE '1970-01-01', dt) % 7 AS BIGINT)
+        |   AS dow,
+        | CAST(year(dt) AS BIGINT) AS y,
+        | CAST(month(dt) AS BIGINT) AS mo,
+        | CAST(day(dt) AS BIGINT) AS dom,
+        | CAST(quarter(dt) AS BIGINT) AS q,
+        | CAST(CASE WHEN day(dt) = 1 THEN 1 ELSE 0 END AS BIGINT)
+        |   AS is_month_start,
+        | CAST(CASE WHEN dt = last_day(dt) THEN 1 ELSE 0 END AS BIGINT)
+        |   AS is_month_end
+        |FROM cal""".stripMargin),
+    // SQ8: floor-quantized, DEQUANTIZED-cosine ranking (a raw code
+    // dot is shift-biased — see the Scaladoc)
+    q("sim_ann_sq8", Similarity.annSq8(_, _),
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings),
+        |rng AS (SELECT MIN(x) AS mn, MAX(x) AS mx
+        |        FROM (SELECT unnest(v) AS x FROM e)),
+        |deq AS (SELECT vec_id,
+        |  [mn + floor((x - mn) * 255 / (mx - mn)) * ((mx - mn) / 255)
+        |   for x in v] AS dv
+        | FROM e, rng),
+        |nn AS (SELECT vec_id, dv,
+        |  sqrt(list_sum([x*x for x in dv])) AS nrm FROM deq),
+        |q AS (SELECT vec_id AS query_id, dv AS qv, nrm AS qn FROM nn
+        |      WHERE vec_id < 20),
+        |sc AS (SELECT query_id, nn.vec_id AS neighbor_id,
+        |  list_sum([qv[i+1] * dv[i+1] for i in range(0, len(dv))])
+        |   / (qn * nn.nrm) AS cos
+        | FROM q, nn WHERE nn.vec_id <> query_id)
+        |SELECT query_id, rk, neighbor_id FROM (
+        | SELECT query_id, neighbor_id, CAST(row_number() OVER
+        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id)
+        |  AS BIGINT) AS rk
+        | FROM sc) t
+        |WHERE rk <= 5""".stripMargin),
+    // runs test: the 95% decision cleared of every denominator
+    q("dq_runs_test", Quality.runsTest(_, _),
+      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS dt,
+        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS BIGINT) AS g
+        | FROM orders GROUP BY 1),
+        |mv AS (SELECT dt, g, lag(g) OVER (ORDER BY dt) AS pg
+        |       FROM daily),
+        |ud AS (SELECT dt,
+        |  CAST(CASE WHEN g > pg THEN 1 ELSE 0 END AS BIGINT) AS up
+        | FROM mv WHERE pg IS NOT NULL AND g <> pg),
+        |rn AS (SELECT up, lag(up) OVER (ORDER BY dt) AS pu FROM ud),
+        |agg AS (SELECT
+        |  CAST(SUM(CASE WHEN pu IS NULL OR pu <> up THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS runs,
+        |  COUNT(*) FILTER (WHERE up = 1)::BIGINT AS n_up,
+        |  COUNT(*) FILTER (WHERE up = 0)::BIGINT AS n_down
+        | FROM rn)
+        |SELECT n_up, n_down, runs,
+        | CAST(CASE WHEN
+        |   (runs * (n_up + n_down) - (n_up + n_down)
+        |     - 2 * n_up * n_down)::HUGEINT
+        |   * (runs * (n_up + n_down) - (n_up + n_down)
+        |     - 2 * n_up * n_down)
+        |   * 10000 * (n_up + n_down - 1)
+        |  > 38416::HUGEINT * 2 * n_up * n_down
+        |    * (2 * n_up * n_down - (n_up + n_down))
+        |  THEN 1 ELSE 0 END AS BIGINT) AS nonrandom_flag
+        |FROM agg""".stripMargin),
+    // Theil–Sen: double ratio only ORDERS; the emitted slope is
+    // integer micro-cents/day of the selected pair, sign split
+    q("analytics_theil_sen", Analytics.theilSen(_, _),
+      """WITH daily AS (SELECT
+        |  CAST(date_diff('day', DATE '1970-01-01',
+        |    CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
+        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS BIGINT) AS y
+        | FROM orders GROUP BY 1),
+        |p AS (SELECT a.x AS xi, b.x AS xj,
+        |  CAST(b.y - a.y AS DOUBLE) / (b.x - a.x) AS r,
+        |  b.y - a.y AS dy, b.x - a.x AS dx
+        | FROM daily a JOIN daily b ON a.x < b.x),
+        |rk AS (SELECT *, row_number() OVER (ORDER BY r, xi, xj) - 1
+        |       AS rnk FROM p),
+        |nn AS (SELECT COUNT(*)::BIGINT AS n FROM p)
+        |SELECT n AS n_pairs,
+        | (CASE WHEN dy >= 0 THEN 1 ELSE -1 END)
+        |   * (abs(dy) * 1000000 // dx) AS slope_micro,
+        | dy, dx
+        |FROM rk, nn WHERE rnk = (n - 1) // 2""".stripMargin),
+    // seasonal strength over the decompose components; the variance
+    // RATIO cross-multiplies (n² denominators cancel)
+    q("analytics_season_strength", Analytics.seasonStrength(_, _),
+      """WITH RECURSIVE daily AS (
+        | SELECT CAST(o_orderdate AS DATE) AS dt,
+        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS BIGINT) AS g
+        | FROM orders GROUP BY 1),
+        |idx AS (SELECT row_number() OVER (ORDER BY dt) AS rn, dt, g
+        |        FROM daily),
+        |sm AS (
+        | SELECT rn, dt, g, g AS s, CAST(0 AS BIGINT) AS b
+        | FROM idx WHERE rn = 1
+        | UNION ALL
+        | SELECT i.rn, i.dt, i.g,
+        |  (i.g + (sm.s + sm.b) * 3) >> 2,
+        |  ((((i.g + (sm.s + sm.b) * 3) >> 2) - sm.s) + sm.b * 3) >> 2
+        | FROM idx i JOIN sm ON i.rn = sm.rn + 1),
+        |oa AS (SELECT CAST(SUM(g) AS BIGINT) // COUNT(*) AS avg_all
+        |       FROM daily),
+        |dw AS (SELECT CAST(dayofweek(dt) + 1 AS BIGINT) AS dow,
+        |  CAST(SUM(g) AS BIGINT) // COUNT(*) - avg_all AS sc
+        | FROM daily CROSS JOIN oa GROUP BY 1, avg_all),
+        |comp AS (SELECT sm.g - sm.s - dw.sc AS r,
+        |  (sm.g - sm.s - dw.sc) + dw.sc AS sr
+        | FROM sm JOIN dw
+        |  ON CAST(dayofweek(sm.dt) + 1 AS BIGINT) = dw.dow),
+        |mo AS (SELECT COUNT(*)::HUGEINT AS n,
+        |  SUM(r::HUGEINT) AS srr,
+        |  SUM(r::HUGEINT * r) AS sqr,
+        |  SUM(sr::HUGEINT) AS ssr,
+        |  SUM(sr::HUGEINT * sr) AS sqs
+        | FROM comp)
+        |SELECT CAST(n AS BIGINT) AS n,
+        | greatest(0, 1000000 - CAST(
+        |   (n * sqr - srr * srr) * 1000000
+        |    // (n * sqs - ssr * ssr) AS BIGINT)) AS strength_ppm
+        |FROM mo""".stripMargin),
+    // Fano factor per top token: zero docs count in n
+    q("text_burstiness", TextAnalysis.tokenBurstiness(_, _),
+      """WITH nd AS (SELECT COUNT(*)::BIGINT AS n FROM documents),
+        |pd AS (
+        | SELECT doc_id, tok, COUNT(*)::BIGINT AS c FROM (
+        |  SELECT doc_id,
+        |   unnest(list_filter(string_split(lower(text), ' '),
+        |    x -> x <> '')) AS tok
+        |  FROM documents) t GROUP BY 1, 2),
+        |vs AS (SELECT tok, CAST(SUM(c) AS BIGINT) AS s,
+        |  CAST(SUM(c*c) AS BIGINT) AS sq,
+        |  COUNT(*)::BIGINT AS n_docs_with
+        | FROM pd GROUP BY 1)
+        |SELECT tok, s AS total_ct, n_docs_with,
+        | CAST((n::HUGEINT * sq - s::HUGEINT * s) * 1000000
+        |   // (n::HUGEINT * s) AS BIGINT) AS fano_ppm,
+        | CAST(row_number() OVER (ORDER BY s DESC, tok) AS BIGINT)
+        |   AS rk
+        |FROM vs, nd QUALIFY rk <= 20""".stripMargin),
+    // CPI formulas with truncated micro-cent unit prices, matched
+    // parts only
+    q("analytics_price_index", Analytics.priceIndex(_, _),
       """WITH mon AS (
         | SELECT l_partkey AS part_id,
         |  CAST(date_trunc('month', l_shipdate) AS DATE) AS m,
@@ -4686,2191 +6244,152 @@ object SparkEntry {
         |    AS BIGINT)) AS BIGINT) AS r,
         |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q
         | FROM lineitem GROUP BY 1, 2),
-        |lg AS (SELECT *,
-        |  lag(m) OVER w AS pm, lag(r) OVER w AS pr,
-        |  lag(q) OVER w AS pq, lead(m) OVER w AS nm
-        | FROM mon WINDOW w AS (PARTITION BY part_id ORDER BY m)),
-        |eff AS (SELECT m,
-        |  CASE WHEN pm IS NOT NULL AND date_diff('month', pm, m) = 1
-        |   THEN (q - pq) * (pr // pq) ELSE 0 END AS vol,
-        |  CASE WHEN pm IS NOT NULL AND date_diff('month', pm, m) = 1
-        |   THEN r - pr - (q - pq) * (pr // pq) ELSE 0 END AS price,
-        |  CASE WHEN pm IS NULL OR date_diff('month', pm, m) <> 1
-        |   THEN r ELSE 0 END AS new_rev
-        | FROM lg),
-        |ex AS (SELECT CAST(m + INTERVAL 1 MONTH AS DATE) AS m,
-        |        -r AS exit_rev
-        |       FROM lg WHERE nm IS NULL OR date_diff('month', m, nm) <> 1),
-        |e1 AS (SELECT m, CAST(SUM(vol) AS BIGINT) AS volume_effect,
-        |        CAST(SUM(price) AS BIGINT) AS price_effect,
-        |        CAST(SUM(new_rev) AS BIGINT) AS new_effect
-        |       FROM eff GROUP BY 1),
-        |e2 AS (SELECT m, CAST(SUM(exit_rev) AS BIGINT) AS exit_effect
-        |       FROM ex GROUP BY 1)
+        |pm AS (SELECT part_id, m, r * 10000 // q AS p, q FROM mon),
+        |m0 AS (SELECT MIN(m) AS m0 FROM pm),
+        |base AS (SELECT part_id, p AS p0, q AS q0 FROM pm, m0
+        |         WHERE m = m0)
         |SELECT m,
-        | COALESCE(volume_effect, 0) AS volume_effect,
-        | COALESCE(price_effect, 0) AS price_effect,
-        | COALESCE(new_effect, 0) AS new_effect,
-        | COALESCE(exit_effect, 0) AS exit_effect,
-        | COALESCE(volume_effect, 0) + COALESCE(price_effect, 0)
-        |  + COALESCE(new_effect, 0) + COALESCE(exit_effect, 0)
-        |  AS delta_rev
-        |FROM e1 FULL OUTER JOIN e2 USING (m)""".stripMargin,
-    // MIPS: Shrivastava–Li augmentation replayed — augmented-dot
-    // cell assignment, raw-dot probes, exact raw-dot rerank
-    "sim_mips_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
-        |      FROM e),
-        |mm AS (SELECT MAX(nrm) AS m FROM n),
-        |an AS (SELECT vec_id, v, nrm,
-        |  sqrt(greatest(0, m*m - nrm*nrm)) AS aug FROM n, mm),
-        |tot AS (SELECT greatest(count(*)//16, 1) AS stride FROM e),
-        |cents AS (SELECT (vec_id // stride) AS cidx, v AS cv,
-        |          aug AS ca FROM an, tot
-        |          WHERE vec_id % stride = 0 AND vec_id // stride < 16),
-        |cs AS (SELECT an.vec_id, cidx,
-        |  list_sum([an.v[i+1]*cv[i+1] for i in range(0,len(cv))])
-        |   + an.aug * ca AS ascore,
-        |  list_sum([an.v[i+1]*cv[i+1] for i in range(0,len(cv))])
-        |   AS qscore
-        | FROM an CROSS JOIN cents),
-        |assign AS (SELECT vec_id, cidx AS cell FROM (
-        |  SELECT vec_id, cidx, row_number() OVER
-        |   (PARTITION BY vec_id ORDER BY ascore DESC, cidx) AS r
-        |  FROM cs) t WHERE r = 1),
-        |probes AS (SELECT vec_id AS query_id, cidx AS cell FROM (
-        |  SELECT vec_id, cidx, row_number() OVER
-        |   (PARTITION BY vec_id ORDER BY qscore DESC, cidx) AS r
-        |  FROM cs WHERE vec_id < 20) t WHERE r <= 4),
-        |corpus AS (SELECT a.vec_id, a.cell, n.v
-        |           FROM assign a JOIN n USING (vec_id)),
-        |qv AS (SELECT p.query_id, p.cell, n.v AS qv
-        |       FROM probes p JOIN n ON n.vec_id = p.query_id),
-        |sc AS (SELECT query_id, c.vec_id AS neighbor_id,
-        |  list_sum([qv[i+1]*c.v[i+1] for i in range(0,len(qv))]) AS ip
-        | FROM qv JOIN corpus c USING (cell)
-        | WHERE c.vec_id <> query_id)
-        |SELECT query_id, rk, neighbor_id FROM (
-        | SELECT query_id, neighbor_id, row_number() OVER
-        |  (PARTITION BY query_id ORDER BY ip DESC, neighbor_id) AS rk
-        | FROM sc) t
-        |WHERE rk <= 5""".stripMargin,
-    // weighted median: exact rank-select over cumulative WEIGHT
-    "analytics_weighted_median" ->
-      """WITH bv AS (
-        | SELECT CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT) // CAST(l_quantity AS BIGINT) AS price_c,
-        |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS wt
-        | FROM lineitem GROUP BY 1),
-        |c AS (SELECT price_c, wt,
-        |  CAST(SUM(wt) OVER (ORDER BY price_c) AS BIGINT) AS cum,
-        |  CAST(SUM(wt) OVER () AS BIGINT) AS tot
-        | FROM bv)
-        |SELECT
-        | (SELECT MIN(price_c) FROM c WHERE cum >= (tot+1)//2)
-        |   AS wmedian_c,
-        | (SELECT MIN(price_c) FROM c WHERE cum >= (tot*9+9)//10)
-        |   AS wp90_c,
-        | (SELECT MAX(tot) FROM c) AS total_weight""".stripMargin,
-    // ABC (prefix-sum classes) × XYZ (CV² bands via exact integer
-    // cross-multiplication — no sqrt, no float anywhere)
-    "analytics_abc_xyz" ->
-      """WITH rev AS (
-        | SELECT l_partkey AS part_id, CAST(SUM(CAST(
-        |    CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * (1 - CAST(l_discount AS DECIMAL(12,2))) * 10000
-        |    AS BIGINT)) AS BIGINT) AS x
-        | FROM lineitem GROUP BY 1),
-        |c AS (SELECT part_id, x,
-        |  CAST(SUM(CAST(x AS HUGEINT))
-        |    OVER (ORDER BY x DESC, part_id) AS HUGEINT) AS cum,
-        |  CAST(SUM(CAST(x AS HUGEINT)) OVER () AS HUGEINT) AS tot
-        | FROM rev),
-        |abc AS (SELECT part_id, CASE WHEN cum * 5 <= tot * 4 THEN 'A'
-        |   WHEN cum * 20 <= tot * 19 THEN 'B' ELSE 'C' END AS abc_class
-        | FROM c),
-        |mon AS (SELECT l_partkey AS part_id,
-        |  date_trunc('month', l_shipdate) AS m,
-        |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q
-        | FROM lineitem GROUP BY 1, 2),
-        |xyz AS (SELECT part_id,
-        |  CASE WHEN 4 * (n * sqq - sq * sq) <= sq * sq THEN 'X'
-        |   WHEN n * sqq - sq * sq <= sq * sq THEN 'Y'
-        |   ELSE 'Z' END AS xyz_class
-        | FROM (SELECT part_id, COUNT(*)::BIGINT AS n,
-        |        CAST(SUM(q) AS BIGINT) AS sq,
-        |        CAST(SUM(q * q) AS BIGINT) AS sqq
-        |       FROM mon GROUP BY 1) t)
-        |SELECT abc_class, xyz_class, COUNT(*) AS n_parts
-        |FROM abc JOIN xyz USING (part_id)
-        |GROUP BY 1, 2""".stripMargin,
-    // LOO target encoding: category-grain contract + the integer
-    // checksum of every row-grain encoding
-    "analytics_target_encode" ->
-      """WITH r AS (SELECT o_orderpriority AS cat,
-        |  CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |    AS x
-        | FROM orders),
-        |st AS (SELECT cat, COUNT(*)::BIGINT AS n,
-        |       CAST(SUM(x) AS BIGINT) AS sx FROM r GROUP BY 1),
-        |enc AS (SELECT r.cat, st.n,
-        |  CASE WHEN st.n > 1 THEN (st.sx - r.x) // (st.n - 1) END AS loo
-        | FROM r JOIN st ON r.cat = st.cat)
-        |SELECT cat, MAX(n) AS n_orders, MIN(loo) AS min_loo,
-        | MAX(loo) AS max_loo, CAST(SUM(loo) AS BIGINT) AS sum_loo
-        |FROM enc GROUP BY 1""".stripMargin,
-    // group k-fold: no user spans folds by construction
-    "pipeline_group_kfold" ->
-      """SELECT
-        | CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
-        |   ::UBIGINT % 5 AS BIGINT) AS fold,
-        | COUNT(DISTINCT user_id) AS n_users,
-        | COUNT(*) AS n_events,
-        | COUNT(*) FILTER (WHERE event_type = 'purchase') AS n_purchases
-        |FROM events GROUP BY 1""".stripMargin,
-    // SCD3: current + previous value off one descending sort
-    "dim_scd3_build" ->
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
-        |    MAX(value) AS last_view_value
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |r AS (SELECT user_id, us, last_view_value,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY us DESC)
-        |    AS rn,
-        |  lead(last_view_value) OVER (PARTITION BY user_id
-        |    ORDER BY us DESC) AS prev_value,
-        |  lead(us) OVER (PARTITION BY user_id ORDER BY us DESC)
-        |    AS prev_changed_us
-        | FROM v)
-        |SELECT user_id, last_view_value AS cur_value, prev_value,
-        |       us AS changed_us, prev_changed_us
-        |FROM r WHERE rn = 1""".stripMargin,
-    // skyline: the quadratic NOT-EXISTS dominance definition is the
-    // independent oracle for the O(n log n) sweep
-    "analytics_skyline" ->
-      """WITH p AS (SELECT p_partkey,
-        |  CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |    AS price_cents,
-        |  CAST(p_size AS BIGINT) AS size
-        | FROM part)
-        |SELECT p_partkey, price_cents, size FROM p a
-        |WHERE NOT EXISTS (
-        | SELECT 1 FROM p b
-        | WHERE b.price_cents <= a.price_cents AND b.size >= a.size
-        |   AND (b.price_cents < a.price_cents OR b.size > a.size))""".stripMargin,
-    // RAKE: stopword-count islands → phrase runs, degree/freq word
-    // scores in integer ppm, top repeated short phrases
-    "text_keyphrases" ->
-      """WITH tk AS (
-        | SELECT doc_id,
-        |  list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-        | FROM documents),
-        |tok AS (
-        | SELECT doc_id, CAST(i AS BIGINT) AS pos,
-        |        t[CAST(i AS INT) + 1] AS tok
-        | FROM (SELECT doc_id, t, unnest(range(len(t))) AS i FROM tk) u),
-        |fl AS (SELECT doc_id, pos, tok,
-        |  CASE WHEN tok IN ('a','the','of','and','to','in','is','on')
-        |       THEN 1 ELSE 0 END AS stop FROM tok),
-        |isl AS (SELECT doc_id, pos, tok, stop,
-        |  SUM(stop) OVER (PARTITION BY doc_id ORDER BY pos
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-        | FROM fl),
-        |member AS (SELECT doc_id, island, pos, tok FROM isl
-        |           WHERE stop = 0),
-        |plen AS (SELECT doc_id, island, COUNT(*) AS plen
-        |         FROM member GROUP BY 1, 2),
-        |ws AS (
-        | SELECT tok, COUNT(*) AS freq, CAST(SUM(plen) AS BIGINT) AS degree
-        | FROM member JOIN plen USING (doc_id, island) GROUP BY 1),
-        |wsc AS (SELECT tok, degree * 1000000 // freq AS wscore FROM ws),
-        |ph AS (
-        | SELECT m.doc_id, m.island,
-        |  string_agg(m.tok, ' ' ORDER BY m.pos) AS phrase,
-        |  CAST(SUM(w.wscore) AS BIGINT) AS score, COUNT(*) AS plen
-        | FROM member m JOIN wsc w ON m.tok = w.tok
-        | GROUP BY 1, 2),
-        |agg AS (
-        | SELECT phrase, COUNT(*) AS n_occ, MAX(score) AS score_ppm
-        | FROM ph WHERE plen <= 6 GROUP BY 1)
-        |SELECT phrase, n_occ, score_ppm,
-        | CAST(row_number() OVER (ORDER BY score_ppm DESC, phrase)
-        |   AS INT) AS rk
-        |FROM agg WHERE n_occ >= 2 QUALIFY rk <= 20""".stripMargin,
-    // exact KS sup-norm: cross-multiplied integer |ca·nb − cb·na|
-    // maxed BEFORE any division
-    "dq_ks_test" ->
-      """WITH bv AS (
-        | SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |   AS BIGINT) AS v,
-        |  COUNT(*) FILTER (WHERE o_orderdate < DATE '1996-01-01')
-        |    AS a_ct,
-        |  COUNT(*) FILTER (WHERE o_orderdate >= DATE '1996-01-01')
-        |    AS b_ct
-        | FROM orders GROUP BY 1),
-        |cum AS (
-        | SELECT v,
-        |  CAST(SUM(a_ct) OVER (ORDER BY v) AS BIGINT) AS ca,
-        |  CAST(SUM(b_ct) OVER (ORDER BY v) AS BIGINT) AS cb,
-        |  CAST(SUM(a_ct) OVER () AS BIGINT) AS na,
-        |  CAST(SUM(b_ct) OVER () AS BIGINT) AS nb
-        | FROM bv)
-        |SELECT MAX(na) AS na, MAX(nb) AS nb,
-        | MAX(abs(ca * nb - cb * na)) AS d_num,
-        | CAST(MAX(abs(ca * nb - cb * na))::HUGEINT * 1000000
-        |   // (MAX(na) * MAX(nb))::HUGEINT AS BIGINT) AS d_ppm
-        |FROM cum""".stripMargin,
-    // array/HOF parity: Spark higher-order functions vs DuckDB list
-    // functions over identical sorted inputs
-    "analytics_array_parity" ->
-      """WITH g AS (
-        | SELECT user_id,
-        |  list_sort(list_distinct(list(event_type))) AS types,
-        |  list(event_id ORDER BY epoch_us(ts), event_id) AS eids
-        | FROM events GROUP BY 1)
-        |SELECT user_id,
-        | array_to_string(types, ',') AS types_csv,
-        | CAST(len(types) AS BIGINT) AS n_types,
-        | array_to_string(list_filter(types, t -> t LIKE 'c%'), '|')
-        |   AS c_types,
-        | array_to_string(types[1:2], ',') AS first2,
-        | CAST(list_sum(list_transform(types, t -> length(t)))
-        |   AS BIGINT) AS char_sum,
-        | eids[1] AS first_event_id,
-        | CAST(list_max(eids) AS BIGINT) AS max_event_id
-        |FROM g""".stripMargin,
-    // integer half-life decay: weight = 1e6 >> age_weeks, anchored
-    // to the corpus max timestamp so reruns are bit-identical
-    "analytics_decayed_score" ->
-      """WITH ev AS (SELECT event_id % 100 AS item_id, epoch_us(ts) AS us
-        |  FROM events WHERE event_type = 'purchase'),
-        |a AS (SELECT MAX(us) AS now_us FROM ev),
-        |w AS (SELECT item_id,
-        |  (1000000::BIGINT >> CAST(least((now_us - us)
-        |     // (7 * 86400000000), 30) AS INT)) AS wt
-        | FROM ev, a),
-        |sc AS (SELECT item_id, CAST(SUM(wt) AS BIGINT) AS score_ppm,
-        |       COUNT(*) AS n_events FROM w GROUP BY 1)
-        |SELECT item_id, score_ppm, n_events,
-        | CAST(row_number() OVER (ORDER BY score_ppm DESC, item_id)
-        |   AS INT) AS rk
-        |FROM sc QUALIFY rk <= 20""".stripMargin,
-    // interval-union coverage: the same two-window island trick,
-    // replayed verbatim
-    "temporal_interval_union" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
-        |  epoch_us(ts) + 300000000 AS en FROM events),
-        |f AS (SELECT user_id, event_id, us, en,
-        |  CASE WHEN max(en) OVER (PARTITION BY user_id
-        |    ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-        |   OR us > max(en) OVER (PARTITION BY user_id
-        |    ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |  THEN 1 ELSE 0 END AS fresh
-        | FROM e),
-        |g AS (SELECT user_id, us, en,
-        |  SUM(fresh) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-        | FROM f),
-        |i AS (SELECT user_id, island, MIN(us) AS st, MAX(en) AS en
-        |      FROM g GROUP BY 1, 2)
-        |SELECT user_id, COUNT(*) AS n_islands,
-        | CAST(SUM(en - st) AS BIGINT) AS covered_us
-        |FROM i GROUP BY 1""".stripMargin,
-    "temporal_gaps" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
-        |  epoch_us(ts) + 300000000 AS en FROM events),
-        |f AS (SELECT user_id, event_id, us, en,
-        |  CASE WHEN max(en) OVER (PARTITION BY user_id
-        |    ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-        |   OR us > max(en) OVER (PARTITION BY user_id
-        |    ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |  THEN 1 ELSE 0 END AS fresh
-        | FROM e),
-        |g AS (SELECT user_id, us, en,
-        |  SUM(fresh) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-        | FROM f),
-        |i AS (SELECT user_id, island, MIN(us) AS st, MAX(en) AS en
-        |      FROM g GROUP BY 1, 2),
-        |j AS (SELECT user_id, st,
-        |  lag(en) OVER (PARTITION BY user_id ORDER BY island) AS prev_en
-        | FROM i)
-        |SELECT user_id, COUNT(prev_en) AS n_gaps,
-        | COALESCE(CAST(SUM(st - prev_en) AS BIGINT), 0) AS idle_us,
-        | COALESCE(CAST(MAX(st - prev_en) AS BIGINT), 0) AS max_gap_us
-        |FROM j GROUP BY 1""".stripMargin,
-    "analytics_ab_cuped" ->
-      """WITH pu AS (
-        | SELECT user_id,
-        |  COALESCE(SUM(CASE WHEN event_type = 'purchase'
-        |      AND epoch_us(ts) < 1705363200000000
-        |    THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |    END), 0) AS pre,
-        |  COALESCE(SUM(CASE WHEN event_type = 'purchase'
-        |      AND epoch_us(ts) >= 1705363200000000
-        |    THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |    END), 0) AS post
-        | FROM events GROUP BY 1),
-        |m AS (SELECT user_id % 2 AS grp, COUNT(*) AS n,
-        |  SUM(CAST(pre AS DECIMAL(19,0))) AS sx,
-        |  SUM(CAST(post AS DECIMAL(19,0))) AS sy,
-        |  SUM(CAST(CAST(pre AS DECIMAL(19,0))
-        |    * CAST(post AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS sxy,
-        |  SUM(CAST(CAST(pre AS DECIMAL(19,0))
-        |    * CAST(pre AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS sxx,
-        |  SUM(CAST(CAST(post AS DECIMAL(19,0))
-        |    * CAST(post AS DECIMAL(19,0)) AS DECIMAL(38,0))) AS syy
-        | FROM pu GROUP BY 1)
-        |SELECT grp, n, CAST(sx AS BIGINT) AS pre_cents,
-        | CAST(sy AS BIGINT) AS post_cents,
-        | round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |  / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |    - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6) AS theta,
-        | round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |  / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |   * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-        |  AS corr_pre_post
-        |FROM m""".stripMargin,
-    "analytics_price_volume_mix" ->
-      """WITH pp AS (
-        | SELECT l_partkey,
-        |  COALESCE(SUM(CASE WHEN year(l_shipdate) = 1996
-        |    THEN CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-        |      AS BIGINT) END), 0) AS rev0,
-        |  COALESCE(SUM(CASE WHEN year(l_shipdate) = 1996
-        |    THEN CAST(l_quantity AS BIGINT) END), 0) AS q0,
-        |  COALESCE(SUM(CASE WHEN year(l_shipdate) = 1997
-        |    THEN CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-        |      AS BIGINT) END), 0) AS rev1,
-        |  COALESCE(SUM(CASE WHEN year(l_shipdate) = 1997
-        |    THEN CAST(l_quantity AS BIGINT) END), 0) AS q1
-        | FROM lineitem WHERE year(l_shipdate) IN (1996, 1997)
-        | GROUP BY 1),
-        |eff AS (SELECT rev0, q0, rev1, q1,
-        |  (q0 > 0 AND q1 > 0) AS in_both,
-        |  rev0 // NULLIF(q0, 0) AS p0, rev1 // NULLIF(q1, 0) AS p1
-        | FROM pp)
-        |SELECT COUNT(*) FILTER (WHERE in_both) AS n_both,
-        | COUNT(*) FILTER (WHERE q0 = 0) AS n_new,
-        | COUNT(*) FILTER (WHERE q1 = 0) AS n_lost,
-        | CAST(SUM(CASE WHEN in_both THEN (p1 - p0) * q1 ELSE 0 END)
-        |   AS BIGINT) AS price_effect,
-        | CAST(SUM(CASE WHEN in_both THEN (q1 - q0) * p0 ELSE 0 END)
-        |   AS BIGINT) AS volume_effect,
-        | CAST(SUM(CASE WHEN in_both THEN rev1 - rev0
-        |     - (p1 - p0) * q1 - (q1 - q0) * p0 ELSE 0 END)
-        |   AS BIGINT) AS mix_residual,
-        | CAST(SUM(CASE WHEN q0 = 0 THEN rev1 ELSE 0 END)
-        |   AS BIGINT) AS new_effect,
-        | CAST(SUM(CASE WHEN q1 = 0 THEN -rev0 ELSE 0 END)
-        |   AS BIGINT) AS lost_effect,
-        | CAST(SUM(rev1 - rev0) AS BIGINT) AS total_delta
-        |FROM eff""".stripMargin,
-    "layout_zonemap" ->
-      """WITH li AS (SELECT l_orderkey, CAST(l_shipdate AS DATE) AS sd
-        |            FROM lineitem),
-        |fa AS (SELECT l_orderkey // 4096 AS file_id, COUNT(*) AS nrows,
-        |  MIN(sd) AS mn, MAX(sd) AS mx,
-        |  SUM(CASE WHEN sd >= DATE '1997-06-01'
-        |    AND sd < DATE '1997-07-01' THEN 1 ELSE 0 END) AS hits
-        | FROM li GROUP BY 1),
-        |ft AS (SELECT (sd - DATE '1970-01-01') // 7 AS file_id,
-        |  COUNT(*) AS nrows, MIN(sd) AS mn, MAX(sd) AS mx,
-        |  SUM(CASE WHEN sd >= DATE '1997-06-01'
-        |    AND sd < DATE '1997-07-01' THEN 1 ELSE 0 END) AS hits
-        | FROM li GROUP BY 1),
-        |r AS (
-        | SELECT 'arrival' AS layout, COUNT(*) AS n_files,
-        |  COUNT(*) FILTER (WHERE mx >= DATE '1997-06-01'
-        |    AND mn < DATE '1997-07-01') AS kept_files,
-        |  SUM(nrows) AS total_rows,
-        |  SUM(CASE WHEN mx >= DATE '1997-06-01'
-        |    AND mn < DATE '1997-07-01' THEN nrows ELSE 0 END)
-        |    AS scanned_rows,
-        |  SUM(hits) AS match_rows FROM fa
-        | UNION ALL
-        | SELECT 'time', COUNT(*),
-        |  COUNT(*) FILTER (WHERE mx >= DATE '1997-06-01'
-        |    AND mn < DATE '1997-07-01'),
-        |  SUM(nrows),
-        |  SUM(CASE WHEN mx >= DATE '1997-06-01'
-        |    AND mn < DATE '1997-07-01' THEN nrows ELSE 0 END),
-        |  SUM(hits) FROM ft)
-        |SELECT layout, n_files, kept_files,
-        | CAST((total_rows - scanned_rows) * 1000000 // total_rows
-        |   AS BIGINT) AS skip_ppm,
-        | CAST(CASE WHEN scanned_rows = 0 THEN 0 ELSE
-        |   (scanned_rows - match_rows) * 1000000 // scanned_rows END
-        |   AS BIGINT) AS waste_ppm,
-        | CAST(match_rows AS BIGINT) AS match_rows
-        |FROM r""".stripMargin,
-    "sim_batch_diversity" ->
-      """WITH q AS (SELECT CAST(label AS BIGINT) AS label,
-        |  unnest(range(len(embedding))) AS dim,
-        |  unnest([CAST(trunc(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
-        |          for x in embedding]) AS q
-        | FROM embeddings),
-        |a AS (SELECT label, SUM(CAST(sq AS DECIMAL(19,0))
-        |    * CAST(sq AS DECIMAL(19,0))) AS a2
-        | FROM (SELECT label, dim, SUM(q) AS sq FROM q GROUP BY 1, 2)
-        | GROUP BY 1),
-        |b AS (SELECT label, SUM(CAST(q AS DECIMAL(19,0))
-        |    * CAST(q AS DECIMAL(19,0))) AS b2
-        | FROM q GROUP BY 1),
-        |n AS (SELECT CAST(label AS BIGINT) AS label, COUNT(*) AS n
-        |      FROM embeddings GROUP BY 1)
-        |SELECT label, n,
-        | round((CAST(a2 AS DOUBLE) - CAST(b2 AS DOUBLE))
-        |  / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1) * 1e12), 6)
-        |  AS mean_pair_cos
-        |FROM a JOIN b USING (label) JOIN n USING (label)""".stripMargin,
-    "graph_modularity" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |            FROM lineitem),
-        |e AS (SELECT DISTINCT a.pk AS s, b.pk AS t
-        |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |eb AS (SELECT e.s, e.t, ps.p_brand AS sb, pt.p_brand AS tb
-        |       FROM e JOIN part ps ON e.s = ps.p_partkey
-        |        JOIN part pt ON e.t = pt.p_partkey),
-        |mm AS (SELECT COUNT(*) AS m FROM eb),
-        |dc AS (SELECT c, COUNT(*) AS d_c FROM (
-        |        SELECT sb AS c FROM eb
-        |        UNION ALL SELECT tb FROM eb) u GROUP BY 1),
-        |ic AS (SELECT sb AS c, COUNT(*) AS m_c FROM eb
-        |       WHERE sb = tb GROUP BY 1),
-        |pc AS (SELECT dc.c, dc.d_c, COALESCE(ic.m_c, 0) AS m_c
-        |       FROM dc LEFT JOIN ic ON dc.c = ic.c),
-        |g AS (SELECT COUNT(*) AS n_communities,
-        |  (SELECT m FROM mm) AS m_edges,
-        |  SUM(4 * (SELECT m FROM mm) * m_c - d_c * d_c) AS q_num
-        | FROM pc)
-        |SELECT n_communities, m_edges, CAST(q_num AS BIGINT) AS q_num,
-        | round(CAST(q_num AS DOUBLE) / (4.0 * CAST(m_edges AS DOUBLE)
-        |   * CAST(m_edges AS DOUBLE)), 6) AS modularity
-        |FROM g""".stripMargin,
-    "analytics_restatement" ->
-      """WITH o AS (SELECT CAST(o_orderdate AS DATE) AS od,
-        |  CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |    AS c,
-        |  (o_orderkey % 10 = 0) AS corr FROM orders),
-        |x AS (SELECT CAST(date_trunc('month', od) AS DATE) AS mth, c,
-        |  CASE WHEN corr THEN c + c // 20 ELSE c END AS cf, corr,
-        |  corr AND (od + 30 <= last_day(od) + 14) AS known
-        | FROM o)
-        |SELECT mth,
-        | CAST(SUM(CASE WHEN corr AND known THEN cf ELSE c END)
-        |   AS BIGINT) AS gmv_known_cents,
-        | CAST(SUM(cf) AS BIGINT) AS gmv_final_cents,
-        | COUNT(*) FILTER (WHERE corr AND NOT known) AS late_orders,
-        | CAST(SUM(cf) AS BIGINT)
-        |   - CAST(SUM(CASE WHEN corr AND known THEN cf ELSE c END)
-        |     AS BIGINT) AS restatement_cents
-        |FROM x GROUP BY 1""".stripMargin,
-    "text_boilerplate" ->
-      """WITH sh AS (
-        | SELECT DISTINCT source, doc_id, s FROM (
-        |  SELECT source, doc_id, unnest([substr(lower(text), i, 12)
-        |   for i in range(1, greatest(length(lower(text)) - 10, 2))])
-        |    AS s
-        |  FROM documents) t),
-        |df AS (SELECT source, s, COUNT(*) AS df FROM sh GROUP BY 1, 2)
-        |SELECT source, COUNT(*) AS n_shingles,
-        | COUNT(*) FILTER (WHERE df >= 5) AS hot_shingles,
-        | CAST(SUM(CASE WHEN df >= 5 THEN df ELSE 0 END) * 1000000
-        |   // SUM(df) AS BIGINT) AS boilerplate_ppm
-        |FROM df GROUP BY 1""".stripMargin,
-    "dq_heartbeat" ->
-      """WITH b AS (SELECT DISTINCT CAST(ts AS DATE) AS dt,
-        |  epoch_us(ts) // 60000000 AS mb FROM events),
-        |w AS (SELECT dt, mb,
-        |  lag(mb) OVER (PARTITION BY dt ORDER BY mb) AS pmb FROM b)
-        |SELECT dt, COUNT(*) AS active_minutes,
-        | COALESCE(CAST(MAX(mb - pmb - 1) AS BIGINT), 0)
-        |   AS max_silent_min,
-        | CAST(MAX(mb) - MIN(mb) + 1 AS BIGINT) AS span_min,
-        | CAST((MAX(mb) - MIN(mb) + 1 - COUNT(*)) * 1000000
-        |   // (MAX(mb) - MIN(mb) + 1) AS BIGINT) AS silent_ppm
-        |FROM w GROUP BY 1""".stripMargin,
-    "analytics_brand_penetration" ->
-      """WITH bo AS (SELECT p_brand AS brand, l_orderkey AS ok,
-        |  SUM(CAST(l_quantity AS BIGINT)) AS units,
-        |  SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS rev
-        | FROM lineitem JOIN part ON l_partkey = p_partkey
-        | GROUP BY 1, 2),
-        |t AS (SELECT COUNT(*) AS total_orders FROM orders)
-        |SELECT brand, COUNT(*) AS orders_w,
-        | CAST(SUM(units) AS BIGINT) AS units,
-        | CAST(SUM(rev) AS BIGINT) AS rev_cents,
-        | CAST(COUNT(*) * 1000000 // (SELECT total_orders FROM t)
-        |   AS BIGINT) AS penetration_ppm,
-        | CAST(SUM(units) * 1000000 // COUNT(*) AS BIGINT)
-        |   AS intensity_e6
-        |FROM bo GROUP BY 1""".stripMargin,
-    "mm_audio_vad" ->
-      """WITH y AS (
-        | SELECT doc_id, CAST(u.i AS BIGINT) AS chunk_idx,
-        |  list_transform(range(1, length(u.c) // 2 + 1), i ->
-        |    strpos('0123456789ABCDEF', substr(u.c, 2*i-1, 1)) * 16
-        |    + strpos('0123456789ABCDEF', substr(u.c, 2*i, 1)) - 17)
-        |   AS smp
-        | FROM (
-        |  SELECT doc_id, unnest([{'i': i,
-        |    'c': substr(hex(encode(text)), i * 512 + 1, 512)}
-        |    for i in range(0, CAST(ceil(
-        |      octet_length(encode(text)) * 2 / 512.0) AS INT))]) AS u
-        |  FROM documents) x),
-        |act AS (SELECT doc_id, chunk_idx FROM y
-        |  WHERE list_sum(list_transform(smp, v ->
-        |    (v - 128) * (v - 128))) >= 400000),
-        |w AS (SELECT doc_id, chunk_idx, lag(chunk_idx) OVER
-        |   (PARTITION BY doc_id ORDER BY chunk_idx) AS prev FROM act),
-        |f AS (SELECT doc_id, chunk_idx, CASE WHEN prev IS NULL
-        |   OR chunk_idx > prev + 1 THEN 1 ELSE 0 END AS fresh FROM w),
-        |g AS (SELECT doc_id, SUM(fresh) OVER (PARTITION BY doc_id
-        |   ORDER BY chunk_idx ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |   CURRENT ROW) AS seg FROM f),
-        |sg AS (SELECT doc_id, seg, COUNT(*) AS len FROM g GROUP BY 1, 2)
-        |SELECT doc_id, COUNT(*) AS n_segments,
-        | CAST(SUM(len) AS BIGINT) AS active_frames,
-        | CAST(MAX(len) AS BIGINT) AS longest_seg
-        |FROM sg GROUP BY 1""".stripMargin,
-    "pipeline_curriculum" ->
-      """WITH t AS (SELECT doc_id, source,
+        | CAST(CAST(SUM(p * q0) AS HUGEINT) * 1000000
+        |   // SUM(p0 * q0) AS BIGINT) AS laspeyres_ppm,
+        | CAST(CAST(SUM(p * q) AS HUGEINT) * 1000000
+        |   // SUM(p0 * q) AS BIGINT) AS paasche_ppm,
+        | COUNT(*) AS n_parts
+        |FROM pm JOIN base USING (part_id)
+        |GROUP BY 1""".stripMargin),
+    // uncertainty sampling: same score CTE, threshold-distance cut
+    q("pipeline_uncertainty_sample", TextAnalysis.uncertaintySample(_, _),
+      """WITH t AS (SELECT doc_id,
         |  list_filter(string_split(lower(text), ' '), x -> x <> '')
         |    AS toks
         | FROM documents),
-        |sc AS (SELECT doc_id, source, len(toks) AS n_toks,
+        |sc AS (SELECT doc_id,
         |  CAST(coalesce(list_sum(list_transform(toks, t ->
         |   ((list_reduce([CAST(ascii(substr(t, i, 1)) AS BIGINT)
         |       for i in range(1, length(t) + 1)],
         |     (a, x) -> (a * 31 + x) % 9007199254740881) % 4096)
         |    * 2654435761) % 2003)), 0)
         |  // greatest(len(toks), 1) AS BIGINT) AS score_milli
-        | FROM t),
-        |nt AS (SELECT source, n_toks, score_milli,
-        |  (row_number() OVER (ORDER BY score_milli DESC, doc_id) - 1)
-        |   * 4 // COUNT(*) OVER () + 1 AS phase
-        | FROM sc)
-        |SELECT CAST(phase AS BIGINT) AS phase, COUNT(*) AS n_docs,
-        | CAST(SUM(n_toks) AS BIGINT) AS total_tokens,
-        | CAST(SUM(score_milli) AS BIGINT) // COUNT(*)
-        |   AS mean_score_milli,
-        | COUNT(DISTINCT source) AS n_sources
-        |FROM nt GROUP BY 1""".stripMargin,
-    "analytics_return_rate" ->
-      """SELECT string_split(p_type, ' ')[1] AS category,
-        | CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty,
-        | CAST(SUM(CASE WHEN l_returnflag = 'R'
-        |   THEN CAST(l_quantity AS BIGINT) ELSE 0 END) AS BIGINT)
-        |   AS ret_qty,
-        | CAST(SUM(CASE WHEN l_returnflag = 'R'
-        |   THEN CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-        |     AS BIGINT) ELSE 0 END) AS BIGINT) AS ret_rev_cents,
-        | CAST(SUM(CASE WHEN l_returnflag = 'R'
-        |   THEN CAST(l_quantity AS BIGINT) ELSE 0 END) * 1000000
-        |  // SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS return_ppm
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1""".stripMargin,
-    "sim_centroid_outliers" ->
-      """WITH q AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-        |  unnest(range(len(embedding))) AS dim,
-        |  unnest([CAST(trunc(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
-        |          for x in embedding]) AS q
-        | FROM embeddings),
-        |sd AS (SELECT label, dim, CAST(SUM(q) AS BIGINT) AS sd
-        |       FROM q GROUP BY 1, 2),
-        |a2 AS (SELECT label, CAST(SUM(sd * sd) AS BIGINT) AS a2
-        |       FROM sd GROUP BY 1),
-        |n AS (SELECT CAST(label AS BIGINT) AS label, COUNT(*) AS n
-        |      FROM embeddings GROUP BY 1),
-        |pv AS (SELECT q.label, q.vec_id,
-        |  CAST(SUM(q.q * q.q) AS BIGINT) AS norm2,
-        |  CAST(SUM(q.q * sd.sd) AS BIGINT) AS ip
-        | FROM q JOIN sd ON q.label = sd.label AND q.dim = sd.dim
-        | GROUP BY 1, 2),
-        |sc AS (SELECT pv.label, pv.vec_id,
-        |  n.n * n.n * pv.norm2 - 2 * n.n * pv.ip + a2.a2 AS score
-        | FROM pv JOIN a2 ON pv.label = a2.label
-        |  JOIN n ON pv.label = n.label),
-        |r AS (SELECT label, vec_id, score, CAST(row_number() OVER
-        |  (PARTITION BY label ORDER BY score DESC, vec_id) AS BIGINT)
-        |   AS rk FROM sc)
-        |SELECT label, rk, vec_id, CAST(score AS BIGINT) AS score
-        |FROM r WHERE rk <= 5""".stripMargin,
-    "analytics_price_realization" ->
-      """SELECT p_brand AS brand,
-        | CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-        |   AS BIGINT)) AS BIGINT) AS rev_cents,
-        | CAST(SUM(CAST(l_quantity AS BIGINT)
-        |   * CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100
-        |     AS BIGINT)) AS BIGINT) AS list_cents,
-        | CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-        |   AS BIGINT)) * 1000000
-        |  // SUM(CAST(l_quantity AS BIGINT)
-        |   * CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100
-        |     AS BIGINT)) AS BIGINT) AS realization_ppm
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1""".stripMargin,
-    "analytics_discount_tiers" ->
-      """WITH t AS (SELECT CAST(l_quantity AS BIGINT) // 10 AS tier,
-        |  CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)
-        |    AS pct
-        | FROM lineitem),
-        |a AS (SELECT tier, COUNT(*) AS n_lines,
-        |  SUM(pct) * 10000 // COUNT(*) AS avg_disc_ppm
-        | FROM t GROUP BY 1)
-        |SELECT tier, n_lines, CAST(avg_disc_ppm AS BIGINT)
-        |  AS avg_disc_ppm,
-        | CAST(CASE WHEN lag(avg_disc_ppm) OVER (ORDER BY tier) IS NULL
-        |  OR avg_disc_ppm >= lag(avg_disc_ppm) OVER (ORDER BY tier)
-        |  THEN 1 ELSE 0 END AS BIGINT) AS monotone_ok
-        |FROM a""".stripMargin,
-    "analytics_supplier_price_spread" ->
-      """WITH ps AS (SELECT l_partkey, l_suppkey,
-        |  SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS rev,
-        |  SUM(CAST(l_quantity AS BIGINT)) AS qty
-        | FROM lineitem GROUP BY 1, 2),
-        |u AS (SELECT l_partkey, rev // qty AS unit_c FROM ps),
-        |p AS (SELECT l_partkey, COUNT(*) AS n_suppliers,
-        |  CAST(MIN(unit_c) AS BIGINT) AS min_unit_c,
-        |  CAST(MAX(unit_c) AS BIGINT) AS max_unit_c
-        | FROM u GROUP BY 1 HAVING COUNT(*) >= 2),
-        |sp AS (SELECT l_partkey, n_suppliers, min_unit_c, max_unit_c,
-        |  CAST((max_unit_c - min_unit_c) * 1000000 // min_unit_c
-        |    AS BIGINT) AS spread_ppm
-        | FROM p),
-        |r AS (SELECT *, CAST(row_number() OVER
-        |  (ORDER BY spread_ppm DESC, l_partkey) AS BIGINT) AS rk
-        | FROM sp)
-        |SELECT rk, l_partkey AS part_id, n_suppliers, min_unit_c,
-        | max_unit_c, spread_ppm
-        |FROM r WHERE rk <= 20""".stripMargin,
-    "analytics_trade_balance" ->
-      """WITH ex AS (SELECT n_name AS nation,
-        |  SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS export_cents
-        | FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        | GROUP BY 1),
-        |im AS (SELECT n_name AS nation,
-        |  SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS import_cents
-        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        | GROUP BY 1)
-        |SELECT COALESCE(ex.nation, im.nation) AS nation,
-        | CAST(COALESCE(export_cents, 0) AS BIGINT) AS export_cents,
-        | CAST(COALESCE(import_cents, 0) AS BIGINT) AS import_cents,
-        | CAST(COALESCE(export_cents, 0) - COALESCE(import_cents, 0)
-        |   AS BIGINT) AS net_cents
-        |FROM ex FULL OUTER JOIN im ON ex.nation = im.nation""".stripMargin,
-    "dq_chi2_independence" ->
-      """WITH cells AS (SELECT o_orderpriority AS prio,
-        |  o_orderstatus AS status, COUNT(*) AS o
-        | FROM orders GROUP BY 1, 2),
-        |m AS (SELECT prio, status, o,
-        |  SUM(o) OVER (PARTITION BY prio) AS r,
-        |  SUM(o) OVER (PARTITION BY status) AS c,
-        |  SUM(o) OVER () AS n
-        | FROM cells)
-        |SELECT prio, status, o,
-        | CAST(CAST(o * n - r * c AS HUGEINT)
-        |   * CAST(o * n - r * c AS HUGEINT) * 1000000
-        |  // (n * r * c) AS BIGINT) AS contrib_ppm
-        |FROM m""".stripMargin,
-    "analytics_product_vintage" ->
-      """WITH li AS (SELECT l_partkey AS pk,
-        |  CAST(year(l_shipdate) * 12 + month(l_shipdate) - 1
-        |    AS BIGINT) AS m,
-        |  CAST(l_quantity AS BIGINT) AS q
-        | FROM lineitem),
-        |intro AS (SELECT pk, MIN(m) AS intro_m FROM li GROUP BY 1)
-        |SELECT intro.intro_m AS cohort_m,
-        | li.m - intro.intro_m AS rel_month,
-        | COUNT(DISTINCT li.pk) AS parts_active,
-        | CAST(SUM(q) AS BIGINT) AS units
-        |FROM li JOIN intro ON li.pk = intro.pk
-        |WHERE li.m - intro.intro_m <= 2
-        |GROUP BY 1, 2""".stripMargin,
-    "dedup_weighted_jaccard" ->
-      """WITH sh AS (
-        | SELECT DISTINCT doc_id, s FROM (
-        |  SELECT doc_id, unnest([substr(lower(text), i, 12)
-        |   for i in range(1, greatest(length(lower(text)) - 10, 2))])
-        |    AS s
-        |  FROM documents) t),
-        |dft AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY 1
-        |        HAVING COUNT(*) <= 50),
-        |wix AS (SELECT doc_id, sh.s, 1000000 // df AS w
-        |        FROM sh JOIN dft ON sh.s = dft.s),
-        |wd AS (SELECT doc_id, SUM(w) AS wsum FROM wix GROUP BY 1),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |       SUM(a.w) AS sw
-        |      FROM wix a JOIN wix b ON a.s = b.s
-        |       AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2)
-        |SELECT id_a, id_b,
-        | CAST(sw * 1000000 // (wa.wsum + wb.wsum - sw) AS BIGINT)
-        |   AS wj_ppm
-        |FROM p JOIN wd wa ON wa.doc_id = id_a
-        | JOIN wd wb ON wb.doc_id = id_b
-        |WHERE sw * 1000000 // (wa.wsum + wb.wsum - sw)
-        |  >= 400000""".stripMargin,
-    "dq_partition_checksums" ->
-      """WITH h AS (
-        | SELECT CAST(date_trunc('month', CAST(o_orderdate AS DATE))
-        |   AS DATE) AS mth,
-        |  CAST(('0x' || substr(md5(concat_ws('|',
-        |   o_orderkey, o_custkey, o_orderstatus,
-        |   CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR),
-        |   CAST(CAST(o_orderdate AS DATE) AS VARCHAR),
-        |   o_orderpriority)), 1, 12))::UBIGINT AS BIGINT) AS h
-        | FROM orders)
-        |SELECT mth, COUNT(*) AS n_rows,
-        | CAST(SUM(h) AS BIGINT) AS sum_hash, bit_xor(h) AS xor_hash
-        |FROM h GROUP BY 1""".stripMargin,
-    "analytics_wallet_share" ->
-      """WITH sp AS (SELECT o_custkey AS cust,
-        |  SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS spend
-        | FROM orders GROUP BY 1),
-        |j AS (SELECT n_name AS nation, cust,
-        |  CAST(spend AS BIGINT) AS spend
-        | FROM sp JOIN customer ON cust = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey),
-        |w AS (SELECT nation, cust, spend,
-        |  SUM(spend) OVER (PARTITION BY nation) AS nation_total,
-        |  CAST(row_number() OVER (PARTITION BY nation
-        |    ORDER BY spend DESC, cust) AS BIGINT) AS rk
-        | FROM j)
-        |SELECT nation, rk, cust AS cust_id, spend AS spend_cents,
-        | CAST(spend * 1000000 // nation_total AS BIGINT) AS share_ppm
-        |FROM w WHERE rk <= 3""".stripMargin,
-    "analytics_basket_shape" ->
-      """WITH l AS (SELECT l_orderkey AS ok, COUNT(*) AS n_lines
-        |           FROM lineitem GROUP BY 1),
-        |o AS (SELECT o_orderkey AS ok,
-        |  CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |    AS cents
-        | FROM orders)
-        |SELECT n_lines, COUNT(*) AS n_orders,
-        | CAST(SUM(cents) AS BIGINT) AS total_cents,
-        | CAST(SUM(cents) // COUNT(*) AS BIGINT) AS avg_order_cents
-        |FROM o JOIN l ON o.ok = l.ok GROUP BY 1""".stripMargin,
-    "analytics_brand_affinity" ->
-      """WITH ob AS (SELECT DISTINCT l_orderkey AS ok, p_brand AS b
-        | FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |n AS (SELECT COUNT(DISTINCT ok) AS n_orders FROM ob),
-        |cx AS (SELECT b, COUNT(*) AS c FROM ob GROUP BY 1),
-        |p AS (SELECT x.b AS brand_a, y.b AS brand_b, COUNT(*) AS c_ab
-        |      FROM ob x JOIN ob y ON x.ok = y.ok AND x.b < y.b
-        |      GROUP BY 1, 2),
-        |r AS (SELECT brand_a, brand_b, c_ab,
-        |  ca.c AS c_a, cb.c AS c_b,
-        |  CAST(row_number() OVER (ORDER BY c_ab DESC, brand_a,
-        |    brand_b) AS BIGINT) AS rk
-        | FROM p JOIN cx ca ON ca.b = brand_a
-        |  JOIN cx cb ON cb.b = brand_b)
-        |SELECT rk, brand_a, brand_b, c_ab,
-        | CAST(c_ab * (SELECT n_orders FROM n) * 1000000
-        |   // (c_a * c_b) AS BIGINT) AS lift_ppm
-        |FROM r WHERE rk <= 20""".stripMargin,
-    "dq_id_integrity" ->
-      """SELECT COUNT(event_id) AS n_rows,
-        | COUNT(DISTINCT event_id) AS n_ids,
-        | MIN(event_id) AS min_id, MAX(event_id) AS max_id,
-        | CAST(MAX(event_id) - MIN(event_id) + 1
-        |   - COUNT(DISTINCT event_id) AS BIGINT) AS missing_ids,
-        | CAST(COUNT(event_id) - COUNT(DISTINCT event_id) AS BIGINT)
-        |   AS dup_rows
-        |FROM events""".stripMargin,
-    "sim_ivf_balance" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm
-        |      FROM e),
-        |tot AS (SELECT greatest(count(*)//16, 1) AS stride,
-        |        count(*) AS total FROM e),
-        |cents AS (SELECT (vec_id // stride) AS cidx, v AS cv,
-        |          nrm AS cn
-        |          FROM n, tot
-        |          WHERE vec_id % stride = 0 AND vec_id // stride < 16),
-        |cs AS (SELECT n.vec_id, cidx,
-        |  CAST(round(list_sum([n.v[i+1]*cv[i+1]
-        |    for i in range(0,len(cv))])
-        |   / (n.nrm * cn) * 1000000000) AS BIGINT) AS cscore
-        | FROM n CROSS JOIN cents),
-        |assign AS (SELECT vec_id, CAST(cidx AS BIGINT) AS cell FROM (
-        |  SELECT vec_id, cidx, row_number() OVER
-        |   (PARTITION BY vec_id ORDER BY cscore DESC, cidx) AS r
-        |   FROM cs) t
-        |  WHERE r = 1)
-        |SELECT cell, COUNT(*) AS n_vectors,
-        | CAST(COUNT(*) * 1000000 // (SELECT total FROM tot) AS BIGINT)
-        |   AS share_ppm,
-        | CAST(COUNT(*) * 16 * 1000000 // (SELECT total FROM tot)
-        |   AS BIGINT) AS load_ppm
-        |FROM assign GROUP BY 1""".stripMargin,
-    "analytics_aov_bridge" ->
-      """WITH m AS (SELECT CAST(date_trunc('month',
-        |    CAST(o_orderdate AS DATE)) AS DATE) AS mth,
-        |  COUNT(*) AS n_orders,
-        |  SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS gmv_cents
-        | FROM orders GROUP BY 1),
-        |a AS (SELECT mth, n_orders,
-        |  CAST(gmv_cents AS BIGINT) AS gmv_cents,
-        |  CAST(gmv_cents // n_orders AS BIGINT) AS aov_cents
-        | FROM m),
-        |l AS (SELECT mth, n_orders, gmv_cents, aov_cents,
-        |  lag(n_orders) OVER (ORDER BY mth) AS pn,
-        |  lag(gmv_cents) OVER (ORDER BY mth) AS pg,
-        |  lag(aov_cents) OVER (ORDER BY mth) AS pa
-        | FROM a)
-        |SELECT mth, n_orders, gmv_cents, aov_cents,
-        | CAST((n_orders - pn) * pa AS BIGINT) AS volume_effect,
-        | CAST(n_orders * (aov_cents - pa) AS BIGINT) AS aov_effect,
-        | CAST(gmv_cents - pg - (n_orders - pn) * pa
-        |   - n_orders * (aov_cents - pa) AS BIGINT) AS trunc_residual
-        |FROM l WHERE pn IS NOT NULL""".stripMargin,
-    "pipeline_split_balance" ->
-      """WITH s AS (SELECT CAST(label AS BIGINT) AS label,
-        |  CASE WHEN vec_id % 10 < 8 THEN 'train'
-        |       WHEN vec_id % 10 = 8 THEN 'val'
-        |       ELSE 'test' END AS split
-        | FROM embeddings),
-        |g AS (SELECT split, label, COUNT(*) AS n FROM s GROUP BY 1, 2),
-        |t AS (SELECT split, label, n,
-        |  SUM(n) OVER (PARTITION BY split) AS split_total FROM g)
-        |SELECT split, label, n,
-        | CAST(n * 1000000 // split_total AS BIGINT) AS share_ppm
-        |FROM t""".stripMargin,
-    "dq_holiday_detect" ->
-      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS dt,
-        |  COUNT(*) AS cnt FROM orders GROUP BY 1),
-        |x AS (SELECT dt, cnt,
-        |  CAST((dt - DATE '1970-01-01') % 7 AS BIGINT) AS dow
-        | FROM daily),
-        |r AS (SELECT dt, cnt, dow,
-        |  CAST(row_number() OVER (PARTITION BY dow ORDER BY cnt, dt)
-        |    AS BIGINT) AS rk,
-        |  COUNT(*) OVER (PARTITION BY dow) AS nd
-        | FROM x),
-        |m AS (SELECT dt, cnt, dow,
-        |  MAX(CASE WHEN rk = (nd + 1) // 2 THEN cnt END)
-        |    OVER (PARTITION BY dow) AS med
-        | FROM r)
-        |SELECT dt, dow, cnt, CAST(med AS BIGINT) AS dow_median
-        |FROM m WHERE cnt * 2 < med""".stripMargin,
-    "dim_asof_diff" ->
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
-        |  MAX(value) AS val
-        | FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |d2 AS (SELECT user_id, us AS f,
-        |  lead(us) OVER (PARTITION BY user_id ORDER BY us) AS t, val
-        | FROM v),
-        |a1 AS (SELECT user_id, val AS v1 FROM d2
-        |  WHERE f <= 1704844800000000
-        |   AND (t IS NULL OR t > 1704844800000000)),
-        |a2 AS (SELECT user_id, val AS v2 FROM d2
-        |  WHERE f <= 1706140800000000
-        |   AND (t IS NULL OR t > 1706140800000000)),
-        |j AS (SELECT COALESCE(a1.user_id, a2.user_id) AS user_id,
-        |  v1, v2,
-        |  CASE WHEN v1 IS NULL THEN 'added'
-        |   WHEN v2 IS NULL THEN 'removed'
-        |   WHEN v1 <> v2 THEN 'changed' ELSE 'same' END AS op
-        | FROM a1 FULL OUTER JOIN a2 ON a1.user_id = a2.user_id)
-        |SELECT user_id, v1, v2, op FROM j WHERE op <> 'same'""".stripMargin,
-    "graph_rich_club" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |            FROM lineitem),
-        |e AS (SELECT DISTINCT a.pk AS s, b.pk AS t
-        |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |deg AS (SELECT v, COUNT(*) AS deg FROM (
-        |  SELECT s AS v FROM e UNION ALL SELECT t FROM e) u
-        | GROUP BY 1),
-        |rk AS (SELECT v, CAST(row_number() OVER
-        |  (ORDER BY deg DESC, v) AS BIGINT) AS rk
-        | FROM deg QUALIFY rk <= 100),
-        |er AS (SELECT greatest(rs.rk, rt.rk) AS mx
-        |       FROM e JOIN rk rs ON e.s = rs.v
-        |        JOIN rk rt ON e.t = rt.v),
-        |c AS (SELECT CAST(n AS BIGINT) AS club_n,
-        |  (SELECT COUNT(*) FROM er WHERE mx <= n) AS intra_edges
-        | FROM (VALUES (10), (25), (50), (100)) t(n))
-        |SELECT club_n, CAST(intra_edges AS BIGINT) AS intra_edges,
-        | CAST(intra_edges * 2 * 1000000 // (club_n * (club_n - 1))
-        |   AS BIGINT) AS density_ppm
-        |FROM c""".stripMargin,
-    "analytics_category_migration" ->
-      """WITH o AS (SELECT o_custkey AS cust, o_orderkey AS ok,
-        |  CAST(o_orderdate AS DATE) AS od FROM orders),
-        |r AS (SELECT cust, ok,
-        |  row_number() OVER (PARTITION BY cust ORDER BY od, ok) AS rn,
-        |  COUNT(*) OVER (PARTITION BY cust) AS n FROM o),
-        |ob AS (SELECT DISTINCT l_orderkey AS ok, p_brand AS b
-        |       FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |f AS (SELECT cust, b AS from_brand FROM r JOIN ob USING (ok)
-        |      WHERE rn = 1 AND n >= 2),
-        |l AS (SELECT cust, b AS to_brand FROM r JOIN ob USING (ok)
-        |      WHERE rn = n AND n >= 2),
-        |g AS (SELECT from_brand, to_brand,
-        |  COUNT(DISTINCT cust) AS n_customers
-        | FROM f JOIN l USING (cust) GROUP BY 1, 2),
-        |rr AS (SELECT from_brand, to_brand, n_customers,
-        |  CAST(row_number() OVER (ORDER BY n_customers DESC,
-        |    from_brand, to_brand) AS BIGINT) AS rk FROM g)
-        |SELECT rk, from_brand, to_brand, n_customers
-        |FROM rr WHERE rk <= 20""".stripMargin,
-    "analytics_price_points" ->
-      """WITH e AS (SELECT CAST(CAST(p_retailprice AS DECIMAL(12,2))
-        |    * 100 AS BIGINT) % 100 AS ending FROM part),
-        |g AS (SELECT ending, COUNT(*) AS n_parts FROM e GROUP BY 1),
-        |t AS (SELECT COUNT(*) AS total FROM part),
-        |r AS (SELECT ending, n_parts, CAST(row_number() OVER
-        |  (ORDER BY n_parts DESC, ending) AS BIGINT) AS rk FROM g)
-        |SELECT rk, ending, n_parts,
-        | CAST(n_parts * 1000000 // (SELECT total FROM t) AS BIGINT)
-        |   AS share_ppm
-        |FROM r WHERE rk <= 10""".stripMargin,
-    "dq_rare_levels" ->
-      """WITH a AS (
-        | SELECT 'o_orderpriority' AS column_name,
-        |  CAST(o_orderpriority AS VARCHAR) AS level FROM orders
-        | UNION ALL
-        | SELECT 'p_brand', CAST(p_brand AS VARCHAR) FROM part
-        | UNION ALL
-        | SELECT 'event_type', CAST(event_type AS VARCHAR) FROM events),
-        |g AS (SELECT column_name, level, COUNT(*) AS cnt FROM a
-        |      GROUP BY 1, 2),
-        |t AS (SELECT column_name, level, cnt,
-        |  CAST(cnt * 1000000 // SUM(cnt) OVER
-        |    (PARTITION BY column_name) AS BIGINT) AS share_ppm
-        | FROM g),
-        |rare AS (SELECT column_name, level, cnt, share_ppm FROM t
-        |         WHERE share_ppm < 1000),
-        |summ AS (SELECT column_name, '__total_levels' AS level,
-        |  COUNT(*) AS cnt, CAST(0 AS BIGINT) AS share_ppm
-        | FROM g GROUP BY 1)
-        |SELECT * FROM rare UNION ALL SELECT * FROM summ""".stripMargin,
-    "analytics_assortment_churn" ->
-      """WITH pm AS (SELECT DISTINCT l_partkey AS pk,
-        |  CAST(date_trunc('month', CAST(l_shipdate AS DATE)) AS DATE)
-        |    AS m
-        | FROM lineitem),
-        |span AS (SELECT pk, MIN(m) AS first_m, MAX(m) AS last_m
-        |         FROM pm GROUP BY 1),
-        |act AS (SELECT m AS mth, COUNT(*) AS active_parts FROM pm
-        |        GROUP BY 1),
-        |intro AS (SELECT first_m AS mth, COUNT(*) AS introduced
-        |          FROM span GROUP BY 1),
-        |ret AS (SELECT last_m AS mth, COUNT(*) AS retired
-        |        FROM span GROUP BY 1)
-        |SELECT act.mth, active_parts,
-        | COALESCE(introduced, 0) AS introduced,
-        | COALESCE(retired, 0) AS retired
-        |FROM act LEFT JOIN intro ON act.mth = intro.mth
-        | LEFT JOIN ret ON act.mth = ret.mth""".stripMargin,
-    "pipeline_mix_sweep" ->
-      """WITH c AS (SELECT source, COUNT(*) AS n_docs
-        |           FROM documents GROUP BY 1),
-        |w AS (
-        | SELECT CAST(25 AS BIGINT) AS temp_pct, source, n_docs,
-        |  CAST(round(sqrt(sqrt(CAST(n_docs AS DOUBLE))) * 1000000)
-        |    AS BIGINT) AS w FROM c
-        | UNION ALL
-        | SELECT 50, source, n_docs,
-        |  CAST(round(sqrt(CAST(n_docs AS DOUBLE)) * 1000000)
-        |    AS BIGINT) FROM c
-        | UNION ALL
-        | SELECT 75, source, n_docs,
-        |  CAST(round(sqrt(CAST(n_docs AS DOUBLE))
-        |    * sqrt(sqrt(CAST(n_docs AS DOUBLE))) * 1000000)
-        |    AS BIGINT) FROM c
-        | UNION ALL
-        | SELECT 100, source, n_docs, n_docs * 1000000 FROM c),
-        |t AS (SELECT temp_pct, source, n_docs, w,
-        |  SUM(w) OVER (PARTITION BY temp_pct) AS tot_w FROM w)
-        |SELECT temp_pct, source, n_docs,
-        | CAST(w * 1000000 // tot_w AS BIGINT) AS share_ppm
-        |FROM t""".stripMargin,
-    "mm_dedup_ratio" ->
-      """WITH ch AS (
-        | SELECT md5(u.c) AS chunk_md5,
-        |  CAST(length(u.c) // 2 AS BIGINT) AS chunk_bytes
-        | FROM (
-        |  SELECT doc_id, unnest([{'i': i,
-        |    'c': substr(hex(encode(text)), i * 512 + 1, 512)}
-        |    for i in range(0, CAST(ceil(
-        |      octet_length(encode(text)) * 2 / 512.0) AS INT))]) AS u
-        |  FROM documents) x),
-        |g AS (SELECT chunk_md5, COUNT(*) AS refs,
-        |  MAX(chunk_bytes) AS cb FROM ch GROUP BY 1)
-        |SELECT CAST(SUM(refs) AS BIGINT) AS n_chunks,
-        | COUNT(*) AS n_unique,
-        | CAST(SUM(refs * cb) AS BIGINT) AS total_bytes,
-        | CAST(SUM(cb) AS BIGINT) AS unique_bytes,
-        | CAST(MAX(refs) AS BIGINT) AS max_refs,
-        | CAST((SUM(refs * cb) - SUM(cb)) * 1000000 // SUM(refs * cb)
-        |   AS BIGINT) AS saved_ppm
-        |FROM g""".stripMargin,
-    "dq_expectations" ->
-      """SELECT 'orders_nonempty' AS check_name,
-        | COUNT(*) AS observed, CAST(1 AS BIGINT) AS threshold,
-        | CAST(COUNT(*) >= 1 AS BIGINT) AS passed FROM orders
-        |UNION ALL
-        |SELECT 'lineitem_no_orphans', COUNT(*), 0,
-        | CAST(COUNT(*) = 0 AS BIGINT)
-        |FROM lineitem WHERE l_orderkey NOT IN
-        | (SELECT o_orderkey FROM orders)
-        |UNION ALL
-        |SELECT 'event_value_in_range',
-        | COUNT(*) FILTER (WHERE value < 0 OR value > 1000), 0,
-        | CAST(COUNT(*) FILTER (WHERE value < 0 OR value > 1000) = 0
-        |   AS BIGINT)
-        |FROM events
-        |UNION ALL
-        |SELECT 'brand_cardinality_25', COUNT(DISTINCT p_brand), 25,
-        | CAST(COUNT(DISTINCT p_brand) = 25 AS BIGINT) FROM part
-        |UNION ALL
-        |SELECT 'event_id_unique',
-        | COUNT(*) - COUNT(DISTINCT event_id), 0,
-        | CAST(COUNT(*) = COUNT(DISTINCT event_id) AS BIGINT)
-        |FROM events
-        |UNION ALL
-        |SELECT 'customer_nation_fk', COUNT(*), 0,
-        | CAST(COUNT(*) = 0 AS BIGINT)
-        |FROM customer WHERE c_nationkey NOT IN
-        | (SELECT n_nationkey FROM nation)""".stripMargin,
-    "graph_knn_curve" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |            FROM lineitem),
-        |e AS (SELECT DISTINCT a.pk AS s, b.pk AS t
-        |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |und AS (SELECT s AS v, t AS n FROM e
-        |        UNION ALL SELECT t, s FROM e),
-        |deg AS (SELECT v, COUNT(*) AS deg FROM und GROUP BY 1)
-        |SELECT d1.deg, COUNT(*) AS n_endpoints,
-        | CAST(SUM(d2.deg) * 1000000 // COUNT(*) AS BIGINT)
-        |   AS avg_nbr_deg_e6
-        |FROM und JOIN deg d1 ON und.v = d1.v
-        | JOIN deg d2 ON und.n = d2.v
-        |GROUP BY 1""".stripMargin,
-    "analytics_replenishment" ->
-      """WITH pc AS (SELECT l_partkey AS part_id, o_custkey AS cust,
-        |  COUNT(DISTINCT l_orderkey) AS n_orders
-        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        | GROUP BY 1, 2),
-        |p AS (SELECT part_id, COUNT(*) AS n_buyers,
-        |  COUNT(*) FILTER (WHERE n_orders >= 2) AS repeat_buyers
-        | FROM pc GROUP BY 1 HAVING COUNT(*) >= 5),
-        |r AS (SELECT part_id, n_buyers, repeat_buyers,
-        |  CAST(repeat_buyers * 1000000 // n_buyers AS BIGINT)
-        |    AS repeat_ppm FROM p),
-        |rr AS (SELECT part_id, n_buyers, repeat_buyers, repeat_ppm,
-        |  CAST(row_number() OVER (ORDER BY repeat_ppm DESC,
-        |    n_buyers DESC, part_id) AS BIGINT) AS rk FROM r)
-        |SELECT rk, part_id, n_buyers, repeat_buyers, repeat_ppm
-        |FROM rr WHERE rk <= 20""".stripMargin,
-    "dq_dim_coverage" ->
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
-        |    MAX(value) AS last_view_value
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |dim AS (SELECT user_id, us AS vf,
-        |    LEAD(us) OVER (PARTITION BY user_id ORDER BY us) AS vt,
-        |    last_view_value FROM v),
-        |p AS (SELECT event_id, user_id, epoch_us(ts) AS us
-        |  FROM events WHERE event_type = 'purchase'),
-        |srv AS (SELECT p.us, dim.last_view_value
-        | FROM p LEFT JOIN dim ON p.user_id = dim.user_id
-        |  AND p.us >= dim.vf AND (dim.vt IS NULL OR p.us < dim.vt))
-        |SELECT CAST(make_timestamp(us) AS DATE) AS dt,
-        | COUNT(*) AS n_probes,
-        | COUNT(*) FILTER (WHERE last_view_value IS NULL) AS misses,
-        | CAST(COUNT(*) FILTER (WHERE last_view_value IS NULL)
-        |   * 1000000 // COUNT(*) AS BIGINT) AS miss_ppm
-        |FROM srv GROUP BY 1""".stripMargin,
-    // synchronous LPA: 3 unrolled supersteps, most-frequent neighbor
-    // label with smallest-label tie-break — deterministic both engines
-    "graph_label_prop" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |      FROM lineitem),
-        |p AS (SELECT a.pk AS s, b2.pk AS t, COUNT(*) AS n
-        |      FROM b a JOIN b b2 ON a.ok = b2.ok AND a.pk < b2.pk
-        |      GROUP BY 1, 2),
-        |pairs AS (SELECT s, t FROM p WHERE n >= 2),
-        |und AS (SELECT s AS v, t AS n FROM pairs
-        |        UNION ALL SELECT t, s FROM pairs),
-        |l0 AS (SELECT DISTINCT v, v AS lbl FROM und),
-        |c1 AS (SELECT und.v, l0.lbl, COUNT(*) AS c
-        |       FROM und JOIN l0 ON und.n = l0.v GROUP BY 1, 2),
-        |l1 AS (SELECT v, lbl FROM (SELECT v, lbl, row_number() OVER
-        |        (PARTITION BY v ORDER BY c DESC, lbl) AS rk FROM c1) x
-        |       WHERE rk = 1),
-        |c2 AS (SELECT und.v, l1.lbl, COUNT(*) AS c
-        |       FROM und JOIN l1 ON und.n = l1.v GROUP BY 1, 2),
-        |l2 AS (SELECT v, lbl FROM (SELECT v, lbl, row_number() OVER
-        |        (PARTITION BY v ORDER BY c DESC, lbl) AS rk FROM c2) x
-        |       WHERE rk = 1),
-        |c3 AS (SELECT und.v, l2.lbl, COUNT(*) AS c
-        |       FROM und JOIN l2 ON und.n = l2.v GROUP BY 1, 2),
-        |l3 AS (SELECT v, lbl FROM (SELECT v, lbl, row_number() OVER
-        |        (PARTITION BY v ORDER BY c DESC, lbl) AS rk FROM c3) x
-        |       WHERE rk = 1)
-        |SELECT v AS part_id, lbl AS community FROM l3""".stripMargin,
-    // per-dimension embedding health: integer-millionth quantization
-    // makes n, Σq, Σq² exact; variance is one exact integer division
-    "sim_dim_variance" ->
-      """WITH q AS (SELECT unnest(range(len(embedding))) AS dim,
-        |  unnest([CAST(trunc(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
-        |          for x in embedding]) AS q
-        | FROM embeddings),
-        |a AS (SELECT CAST(dim AS BIGINT) AS dim, COUNT(*) AS n,
-        |  SUM(q) AS sq,
-        |  SUM(CAST(q AS DECIMAL(19,0)) * CAST(q AS DECIMAL(19,0)))
-        |    AS sqq
-        | FROM q GROUP BY 1)
-        |SELECT dim, n, CAST(sq // n AS BIGINT) AS mean_q6,
-        | CAST((CAST(n AS HUGEINT) * CAST(sqq AS HUGEINT)
-        |     - CAST(sq AS HUGEINT) * CAST(sq AS HUGEINT))
-        |   // (CAST(n AS HUGEINT) * CAST(n AS HUGEINT)) AS BIGINT)
-        |   AS var_q12
-        |FROM a""".stripMargin,
-    // one-pass moment matrix: builder shared with the Spark side so
-    // the ten pair branches cannot drift
-    "analytics_cov_matrix" -> Analytics.covMatrixOracleSql,
-    // first-order partial correlations from the same moment row
-    "analytics_partial_corr" -> Analytics.partialCorrOracleSql,
-    // estimator calibration: same permutation coefficients inlined,
-    // md5 shingle basis replayable in SQL
-    "dedup_minhash_calibration" -> Dedup.minhashCalibrationOracleSql(),
-    // simhash calibration: production fingerprints replayed via the
-    // dedup_simhash CTE; xor/bit_count are two's-complement in both
-    "dedup_simhash_calibration" ->
-      """WITH fp AS (
-        | SELECT doc_id, CAST(fpu -
-        |   CASE WHEN fpu >= 9223372036854775808::HUGEINT
-        |    THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END
-        |   AS BIGINT) AS simhash
-        | FROM (
-        |  SELECT doc_id, CAST(coalesce(list_sum([
-        |   CASE WHEN 2 * len(list_filter(hs, h -> ((h >> b) & 1) = 1))
-        |       > len(hs)
-        |    THEN (1::UBIGINT << b) ELSE 0::UBIGINT END
-        |   for b in range(0, 64)]), 0) AS HUGEINT) AS fpu
-        |  FROM (
-        |   SELECT doc_id, [CAST('0x' || substr(md5(t), 1, 16) AS UBIGINT)
-        |     for t in list_filter(string_split(lower(text), ' '),
-        |       x -> x <> '')] AS hs
-        |   FROM documents) a) b),
-        |sh AS (SELECT DISTINCT doc_id, s FROM (
-        | SELECT doc_id, unnest([substr(lower(text), i, 12)
-        |  for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
-        | FROM documents) t),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-        |i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |pair AS (SELECT id_a, id_b,
-        |  c * 1000000 // (na.n + nb.n - c) AS exact_ppm
-        | FROM i JOIN sz na ON na.doc_id = id_a
-        |  JOIN sz nb ON nb.doc_id = id_b
-        | WHERE c * 1000000 // (na.n + nb.n - c) >= 10000)
-        |SELECT CAST(bit_count(xor(fa.simhash, fb.simhash)) AS BIGINT)
-        |  AS hamming,
-        | COUNT(*) AS n_pairs,
-        | CAST(SUM(exact_ppm) // COUNT(*) AS BIGINT) AS avg_exact_ppm
-        |FROM pair JOIN fp fa ON fa.doc_id = id_a
-        | JOIN fp fb ON fb.doc_id = id_b
-        |GROUP BY 1""".stripMargin,
-    // Syntetos–Boylan classes: ADI vs the 1-row global month count,
-    // CV² with cleared denominators, 1.32/0.49 ppm cuts
-    "analytics_demand_classes" ->
-      """WITH m AS (SELECT l_partkey AS part_id,
-        |  date_trunc('month', l_shipdate) AS mo,
-        |  CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS BIGINT) AS q
-        | FROM lineitem GROUP BY 1, 2),
-        |nm AS (SELECT COUNT(DISTINCT mo) AS n_months FROM m),
-        |pp AS (SELECT part_id, COUNT(*) AS nw, SUM(q) AS sq,
-        |  SUM(CAST(q AS HUGEINT) * CAST(q AS HUGEINT)) AS sqq
-        | FROM m GROUP BY 1),
-        |cl AS (SELECT part_id,
-        |  CAST(n_months * 1000000 // nw AS BIGINT) AS adi_ppm,
-        |  CAST((CAST(nw AS HUGEINT) * sqq
-        |     - CAST(sq AS HUGEINT) * CAST(sq AS HUGEINT)) * 1000000
-        |    // (CAST(sq AS HUGEINT) * CAST(sq AS HUGEINT)) AS BIGINT)
-        |    AS cv2_ppm
-        | FROM pp CROSS JOIN nm)
-        |SELECT CASE WHEN adi_ppm < 1320000 AND cv2_ppm < 490000
-        |    THEN 'smooth'
-        |  WHEN adi_ppm >= 1320000 AND cv2_ppm < 490000
-        |    THEN 'intermittent'
-        |  WHEN adi_ppm < 1320000 THEN 'erratic'
-        |  ELSE 'lumpy' END AS demand_class,
-        | COUNT(*) AS n_parts,
-        | CAST(SUM(adi_ppm) // COUNT(*) AS BIGINT) AS avg_adi_ppm,
-        | CAST(SUM(cv2_ppm) // COUNT(*) AS BIGINT) AS avg_cv2_ppm
-        |FROM cl GROUP BY 1""".stripMargin,
-    // HITS: two a→h→a→h rounds, max-norm ppm per half-round (no L2 /
-    // sqrt in the graded surface), top-10 per role by (score, id)
-    "graph_hits" ->
-      """WITH e AS (SELECT DISTINCT o_custkey AS u, l_partkey AS i
-        | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |h1r AS (SELECT u, COUNT(*) AS raw FROM e GROUP BY 1),
-        |h1 AS (SELECT u, CAST(raw AS HUGEINT) * 1000000
-        |  // (SELECT MAX(raw) FROM h1r) AS score FROM h1r),
-        |a1r AS (SELECT i, SUM(score) AS raw FROM e JOIN h1 USING (u)
-        | GROUP BY 1),
-        |a1 AS (SELECT i, CAST(raw AS HUGEINT) * 1000000
-        |  // (SELECT MAX(raw) FROM a1r) AS score FROM a1r),
-        |h2r AS (SELECT u, SUM(score) AS raw FROM e JOIN a1 USING (i)
-        | GROUP BY 1),
-        |h2 AS (SELECT u, CAST(raw AS HUGEINT) * 1000000
-        |  // (SELECT MAX(raw) FROM h2r) AS score FROM h2r),
-        |a2r AS (SELECT i, SUM(score) AS raw FROM e JOIN h2 USING (u)
-        | GROUP BY 1),
-        |a2 AS (SELECT i, CAST(raw AS HUGEINT) * 1000000
-        |  // (SELECT MAX(raw) FROM a2r) AS score FROM a2r)
-        |SELECT 'hub' AS role, rank, node_id, score FROM (
-        | SELECT CAST(row_number() OVER (ORDER BY score DESC, u)
-        |   AS BIGINT) AS rank, CAST(u AS BIGINT) AS node_id,
-        |   CAST(score AS BIGINT) AS score FROM h2) WHERE rank <= 10
-        |UNION ALL
-        |SELECT 'authority' AS role, rank, node_id, score FROM (
-        | SELECT CAST(row_number() OVER (ORDER BY score DESC, i)
-        |   AS BIGINT) AS rank, CAST(i AS BIGINT) AS node_id,
-        |   CAST(score AS BIGINT) AS score FROM a2) WHERE rank <= 10"""
-        .stripMargin,
-    // truncated power iteration in ppm: divide ONCE per step after
-    // the exact Σ π_i·P_ij; sink states drop inbound mass (both
-    // engines share the convention)
-    "analytics_markov_stationary" ->
-      """WITH ev AS (SELECT user_id, event_type, ts, event_id
-        | FROM events),
-        |tr AS (SELECT event_type AS src_event,
-        |  lead(event_type) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS dst_event
-        | FROM ev),
-        |t AS (SELECT src_event, dst_event, COUNT(*) AS c FROM tr
-        | WHERE dst_event IS NOT NULL GROUP BY 1, 2),
-        |tot AS (SELECT src_event, SUM(c) AS tot FROM t GROUP BY 1),
-        |p AS (SELECT t.src_event, t.dst_event,
-        |  CAST(c * 1000000 // tot AS BIGINT) AS p_ppm
-        | FROM t JOIN tot ON t.src_event = tot.src_event),
-        |ns AS (SELECT COUNT(*) AS ns FROM tot),
-        |pi0 AS (SELECT src_event AS state,
-        |  CAST(1000000 // ns AS BIGINT) AS pi_ppm
-        | FROM tot CROSS JOIN ns),
-        |pi1 AS (SELECT dst_event AS state,
-        |  CAST(SUM(pi_ppm * p_ppm) // 1000000 AS BIGINT) AS pi_ppm
-        | FROM pi0 JOIN p ON pi0.state = p.src_event GROUP BY 1),
-        |pi2 AS (SELECT dst_event AS state,
-        |  CAST(SUM(pi_ppm * p_ppm) // 1000000 AS BIGINT) AS pi_ppm
-        | FROM pi1 JOIN p ON pi1.state = p.src_event GROUP BY 1),
-        |pi3 AS (SELECT dst_event AS state,
-        |  CAST(SUM(pi_ppm * p_ppm) // 1000000 AS BIGINT) AS pi_ppm
-        | FROM pi2 JOIN p ON pi2.state = p.src_event GROUP BY 1)
-        |SELECT state, pi_ppm FROM pi3""".stripMargin,
-    // positional octiles: value at 0-based rank (n−1)k DIV 8 is a
-    // unique multiset position — deterministic under any tiebreak
-    "analytics_shape_profile" ->
-      """WITH b AS (SELECT l_returnflag AS rf,
-        |  CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |    AS cents
-        | FROM lineitem),
-        |r AS (SELECT rf, cents,
-        |  CAST(row_number() OVER (PARTITION BY rf ORDER BY cents)
-        |    AS BIGINT) AS rn,
-        |  COUNT(*) OVER (PARTITION BY rf) AS n FROM b),
-        |o AS (SELECT rf,
-        |  MIN(CASE WHEN rn - 1 = (n - 1) * 1 // 8 THEN cents END) AS e1,
-        |  MIN(CASE WHEN rn - 1 = (n - 1) * 2 // 8 THEN cents END) AS e2,
-        |  MIN(CASE WHEN rn - 1 = (n - 1) * 3 // 8 THEN cents END) AS e3,
-        |  MIN(CASE WHEN rn - 1 = (n - 1) * 4 // 8 THEN cents END) AS e4,
-        |  MIN(CASE WHEN rn - 1 = (n - 1) * 5 // 8 THEN cents END) AS e5,
-        |  MIN(CASE WHEN rn - 1 = (n - 1) * 6 // 8 THEN cents END) AS e6,
-        |  MIN(CASE WHEN rn - 1 = (n - 1) * 7 // 8 THEN cents END) AS e7
-        | FROM r GROUP BY 1)
-        |SELECT rf, e1, e2, e3, e4, e5, e6, e7,
-        | CASE WHEN e6 > e2 THEN
-        |   CAST((e6 + e2 - 2 * e4) * 1000000 // (e6 - e2) AS BIGINT)
-        | END AS bowley_ppm,
-        | CASE WHEN e6 > e2 THEN
-        |   CAST((e7 - e5 + e3 - e1) * 1000000 // (e6 - e2) AS BIGINT)
-        | END AS moors_ppm
-        |FROM o""".stripMargin,
-    // sweep-line concurrency: the oracle's global running sum equals
-    // the engine's two-level (per-hour offset + within-hour) form
-    "temporal_concurrency" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS us FROM events),
-        |fl AS (SELECT user_id, us,
-        |  CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us)
-        |      IS NULL
-        |    OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
-        |      > 1800000000
-        |  THEN 1 ELSE 0 END AS is_new FROM ev),
-        |sid AS (SELECT user_id, us,
-        |  SUM(is_new) OVER (PARTITION BY user_id ORDER BY us
-        |    ROWS UNBOUNDED PRECEDING) AS sess_id FROM fl),
-        |sess AS (SELECT user_id, sess_id, MIN(us) AS start_us,
-        |  MAX(us) AS end_us FROM sid GROUP BY 1, 2),
-        |bounds AS (
-        | SELECT start_us AS us, CAST(1 AS BIGINT) AS delta, user_id
-        | FROM sess
-        | UNION ALL
-        | SELECT end_us + 1, CAST(-1 AS BIGINT), user_id FROM sess),
-        |b2 AS (SELECT *, us // 3600000000 AS hr FROM bounds),
-        |run AS (SELECT hr,
-        |  SUM(delta) OVER (ORDER BY us, delta DESC, user_id
-        |    ROWS UNBOUNDED PRECEDING) AS run
-        | FROM b2),
-        |perhour AS (SELECT hr, SUM(delta) AS hsum,
-        |  COUNT(*) FILTER (delta = 1) AS n_starts,
-        |  COUNT(*) FILTER (delta = -1) AS n_ends FROM b2 GROUP BY 1),
-        |offs AS (SELECT hr, n_starts, n_ends, hsum,
-        |  COALESCE(SUM(hsum) OVER (ORDER BY hr
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    AS enter_c
-        | FROM perhour),
-        |mx AS (SELECT hr, MAX(run) AS max_abs FROM run GROUP BY 1)
-        |SELECT offs.hr, CAST(n_starts AS BIGINT) AS n_starts,
-        | CAST(n_ends AS BIGINT) AS n_ends,
-        | CAST(enter_c AS BIGINT) AS enter_c,
-        | CAST(GREATEST(enter_c, max_abs) AS BIGINT) AS peak_c,
-        | CAST(enter_c + hsum AS BIGINT) AS exit_c
-        |FROM offs JOIN mx USING (hr)""".stripMargin,
-    // Rényi-2 collision entropy: Σc²·10⁹ DIV N² per doc at char and
-    // token grain, source-mean of the exact per-doc ratios — no
-    // float logarithm anywhere, so the quality screen hash-grades
-    "text_collision_entropy" ->
-      """WITH ch AS MATERIALIZED (SELECT doc_id, source,
-        |    unnest([substr(lower(text), i, 1)
-        |            for i in range(1, length(text) + 1)]) AS sym
-        |  FROM documents),
-        |cagg AS MATERIALIZED (SELECT doc_id, source, sym,
-        |    COUNT(*) AS c FROM ch WHERE sym <> '' GROUP BY 1, 2, 3),
-        |cd AS MATERIALIZED (SELECT doc_id, source,
-        |    SUM(c) AS n, COUNT(*) AS ds,
-        |    SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS c2
-        |  FROM cagg GROUP BY 1, 2),
-        |cds AS MATERIALIZED (SELECT source, COUNT(*) AS n_docs,
-        |    CAST(SUM(c2 * 1000000000
-        |      // (CAST(n AS HUGEINT) * CAST(n AS HUGEINT)))
-        |      // COUNT(*) AS BIGINT) AS char_coll_ppb,
-        |    CAST(SUM(ds) // COUNT(*) AS BIGINT) AS mean_distinct_chars
-        |  FROM cd GROUP BY 1),
-        |wd AS MATERIALIZED (SELECT doc_id, source,
-        |    unnest(regexp_split_to_array(lower(text), '\s+')) AS sym
-        |  FROM documents),
-        |wagg AS MATERIALIZED (SELECT doc_id, source, sym,
-        |    COUNT(*) AS c FROM wd WHERE sym <> '' GROUP BY 1, 2, 3),
-        |wdd AS MATERIALIZED (SELECT doc_id, source,
-        |    SUM(c) AS n, COUNT(*) AS ds,
-        |    SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS c2
-        |  FROM wagg GROUP BY 1, 2),
-        |wds AS MATERIALIZED (SELECT source,
-        |    CAST(SUM(c2 * 1000000000
-        |      // (CAST(n AS HUGEINT) * CAST(n AS HUGEINT)))
-        |      // COUNT(*) AS BIGINT) AS word_coll_ppb,
-        |    CAST(SUM(ds) // COUNT(*) AS BIGINT) AS mean_distinct_words
-        |  FROM wdd GROUP BY 1)
-        |SELECT source, n_docs, char_coll_ppb,
-        |  1000000000 // GREATEST(char_coll_ppb, 1) AS eff_chars,
-        |  mean_distinct_chars, word_coll_ppb,
-        |  1000000000 // GREATEST(word_coll_ppb, 1) AS eff_words,
-        |  mean_distinct_words
-        |FROM cds JOIN wds USING (source)""".stripMargin,
-    // entry/exit/bounce per event type over 30-min gap sessions;
-    // first/last deterministic on (us, event_id)
-    "analytics_entry_exit" ->
-      """WITH ev AS MATERIALIZED (SELECT user_id, epoch_us(ts) AS us,
-        |    event_id, event_type FROM events),
-        |f AS MATERIALIZED (SELECT user_id, us, event_id, event_type,
-        |    CASE WHEN lag(us) OVER w IS NULL
-        |          OR us - lag(us) OVER w > 1800000000 THEN 1
-        |         ELSE 0 END AS is_new
-        |  FROM ev WINDOW w AS (PARTITION BY user_id
-        |    ORDER BY us, event_id)),
-        |sdf AS MATERIALIZED (SELECT user_id, us, event_id, event_type,
-        |    SUM(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS sess_id
-        |  FROM f),
-        |fl AS MATERIALIZED (SELECT user_id, sess_id,
-        |    MAX(CASE WHEN rna = 1 THEN event_type END) AS entry_type,
-        |    MAX(CASE WHEN rnd = 1 THEN event_type END) AS exit_type,
-        |    COUNT(*) AS n_events
-        |  FROM (SELECT *,
-        |      row_number() OVER (PARTITION BY user_id, sess_id
-        |        ORDER BY us, event_id) AS rna,
-        |      row_number() OVER (PARTITION BY user_id, sess_id
-        |        ORDER BY us DESC, event_id DESC) AS rnd
-        |    FROM sdf) t
-        |  GROUP BY 1, 2),
-        |en AS MATERIALIZED (SELECT entry_type AS event_type,
-        |    COUNT(*) AS n_entries,
-        |    COUNT(*) FILTER (n_events = 1) AS n_bounces
-        |  FROM fl GROUP BY 1),
-        |ex AS MATERIALIZED (SELECT exit_type AS event_type,
-        |    COUNT(*) AS n_exits FROM fl GROUP BY 1)
-        |SELECT COALESCE(en.event_type, ex.event_type) AS event_type,
-        |  COALESCE(n_entries, 0) AS n_entries,
-        |  COALESCE(n_exits, 0) AS n_exits,
-        |  COALESCE(n_bounces, 0) AS n_bounces,
-        |  COALESCE(n_bounces, 0) * 1000000
-        |    // GREATEST(COALESCE(n_entries, 0), 1) AS bounce_ppm
-        |FROM en FULL OUTER JOIN ex ON en.event_type = ex.event_type"""
-        .stripMargin,
-    // GENERATED oracle (Analytics.markovAttributionOracleSql): the
-    // 12 value-iteration rounds unrolled over the scenario×state
-    // lattice, exact integer ppm end to end
-    "analytics_attribution_markov" ->
-      Analytics.markovAttributionOracleSql(iters = 12),
-    // GENERATED oracle (Similarity.matryoshkaRecallOracleSql):
-    // per-prefix sliced-vector cosine ranks (same sequential fold)
-    // semi-joined against the full-dim truth CTE
-    "sim_matryoshka_recall" ->
-      Similarity.matryoshkaRecallOracleSql(),
-    // Kruskal–Wallis: global doubled ranks over the bounded domain,
-    // Σ(R²/n) as engine-identical truncating integer terms, ONE
-    // rounded-double H finish from exact integers
-    "dq_kruskal_wallis" ->
-      """WITH f AS MATERIALIZED (SELECT l_returnflag AS g,
-        |    CAST(l_quantity AS BIGINT) AS q FROM lineitem),
-        |dm AS MATERIALIZED (SELECT q, COUNT(*) AS c FROM f
-        |  GROUP BY 1),
-        |r AS MATERIALIZED (SELECT q,
-        |    SUM(c) OVER (ORDER BY q ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND CURRENT ROW) * 2 - c + 1 AS r2
-        |  FROM dm),
-        |grp AS MATERIALIZED (SELECT g, COUNT(*) AS n,
-        |    CAST(SUM(r2) AS HUGEINT) AS sum2r
-        |  FROM f JOIN r USING (q) GROUP BY 1),
-        |term AS MATERIALIZED (SELECT
-        |    SUM(sum2r * sum2r // CAST(4 * n AS HUGEINT)) AS t4,
-        |    CAST(SUM(n) AS HUGEINT) AS nn FROM grp),
-        |ties AS MATERIALIZED (SELECT
-        |    SUM(CAST(c AS HUGEINT) * c * c - c) AS st FROM dm),
-        |h AS MATERIALIZED (SELECT round(
-        |    ((12.0 * CAST(t4 AS DOUBLE)
-        |      / (CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) + 1.0)))
-        |     - 3.0 * (CAST(nn AS DOUBLE) + 1.0))
-        |    / (1.0 - CAST(st AS DOUBLE)
-        |       / (CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)
-        |          * CAST(nn AS DOUBLE) - CAST(nn AS DOUBLE))),
-        |    6) AS h_corrected FROM term, ties)
-        |SELECT g AS l_returnflag, n, CAST(sum2r AS BIGINT) AS sum2r,
-        |  CAST(sum2r * 1000000 // CAST(2 * n AS HUGEINT) AS BIGINT)
-        |    AS mean_rank_e6,
-        |  h_corrected
-        |FROM grp CROSS JOIN h""".stripMargin,
-    // script-mix: per-class char counts via length-difference after
-    // class-stripping regexp_replace — RE2's \x{4E00} ≙ Java's 一
-    "text_script_mix" ->
-      """WITH p AS MATERIALIZED (SELECT source,
-        |    CAST(length(text) AS BIGINT) AS total,
-        |    CAST(length(text) - length(regexp_replace(text,
-        |      '[A-Za-z]', '', 'g')) AS BIGINT) AS latin,
-        |    CAST(length(text) - length(regexp_replace(text,
-        |      '[0-9]', '', 'g')) AS BIGINT) AS digit,
-        |    CAST(length(text) - length(regexp_replace(text,
-        |      '[\x{4E00}-\x{9FFF}]', '', 'g')) AS BIGINT) AS han,
-        |    CAST(length(text) - length(regexp_replace(text,
-        |      '\s', '', 'g')) AS BIGINT) AS space
-        |  FROM documents)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(total) AS BIGINT) AS n_chars,
-        |  CAST(SUM(latin) AS BIGINT) AS latin_chars,
-        |  CAST(SUM(digit) AS BIGINT) AS digit_chars,
-        |  CAST(SUM(han) AS BIGINT) AS han_chars,
-        |  CAST(SUM(space) AS BIGINT) AS space_chars,
-        |  CAST(SUM(total) - SUM(latin) - SUM(digit) - SUM(han)
-        |    - SUM(space) AS BIGINT) AS other_chars,
-        |  CAST(SUM(latin) * 1000000 // GREATEST(SUM(total), 1)
-        |    AS BIGINT) AS latin_ppm,
-        |  CAST(SUM(han) * 1000000 // GREATEST(SUM(total), 1)
-        |    AS BIGINT) AS han_ppm
-        |FROM p GROUP BY 1""".stripMargin,
-    // GENERATED oracle (Analytics.kendallTauOracleSql): identical
-    // day-pair conditional aggregation, HUGEINT counts, one rounded
-    // double tau-b finish
-    "analytics_kendall_tau" -> Analytics.kendallTauOracleSql,
-    // GENERATED oracle (Quality.ksDriftOracleSql): identical
-    // source-vs-rest ECDF grid, HUGEINT cross-multiplied sup gap
-    "dq_ks_drift" -> Quality.ksDriftOracleSql,
-    // GENERATED oracle (Analytics.pettittOracleSql): doubled-midrank
-    // cumulative U walk, HUGEINT, ln p as one rounded IEEE division
-    "analytics_pettitt" -> Analytics.pettittOracleSql,
-    // GENERATED oracle (Analytics.waveletEnergyOracleSql): exact
-    // dyadic Haar block sums, HUGEINT energies, ppm shares
-    "analytics_wavelet_energy" -> Analytics.waveletEnergyOracleSql,
-    // GENERATED oracle (Analytics.friedmanOracleSql): complete-week
-    // doubled-midrank blocks, HUGEINT rank sums, one rounded χ²_F
-    "analytics_friedman" -> Analytics.friedmanOracleSql,
-    // GENERATED oracle (Analytics.bootstrapCiOracleSql): identical
-    // MINSTD draw matrix, exact replicate sums, rank-picked bounds
-    "analytics_bootstrap_ci" -> Analytics.bootstrapCiOracleSql(),
-    // GENERATED oracle (Similarity.ivfProbeSweepOracleSql): k-means
-    // assignment replay + member-mean centroids + per-probe
-    // candidate cosine top-k vs the brute-force truth
-    "sim_ivf_probe_sweep" -> Similarity.ivfProbeSweepOracleSql(),
-    // padding waste: whitespace tokens, per-L truncate/pad algebra,
-    // exact integers, ppm shares
-    "pipeline_padding_waste" ->
-      """WITH toks AS MATERIALIZED (SELECT
-        |    CAST(len(list_filter(string_split(lower(text), ' '),
-        |      x -> x <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |g AS MATERIALIZED (SELECT n_tokens, CAST(l AS BIGINT) AS len
-        |  FROM toks CROSS JOIN
-        |    (SELECT unnest([128, 256, 512, 1024]) AS l))
-        |SELECT len, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-        |  CAST(SUM(least(n_tokens, len)) AS BIGINT) AS kept_tokens,
-        |  CAST(SUM(len - least(n_tokens, len)) AS BIGINT)
-        |    AS pad_tokens,
-        |  CAST(SUM(greatest(n_tokens - len, 0)) AS BIGINT)
-        |    AS trunc_tokens,
-        |  CAST(SUM(len - least(n_tokens, len)) * 1000000
-        |    // (COUNT(*) * len) AS BIGINT) AS pad_ppm,
-        |  CAST(SUM(greatest(n_tokens - len, 0)) * 1000000
-        |    // greatest(SUM(n_tokens), 1) AS BIGINT) AS trunc_ppm
-        |FROM g GROUP BY 1""".stripMargin,
-    // GENERATED oracle (Analytics.medianPolishOracleSql): two-sweep
-    // lower-median selection over the bounded DOW×month matrix —
-    // exact cents end to end
-    "analytics_median_polish" -> Analytics.medianPolishOracleSql,
-    // GENERATED oracle (Analytics.cramersVOracleSql): identical
-    // per-cell truncating contingency terms, HUGEINT throughout
-    "analytics_cramers_v" -> Analytics.cramersVOracleSql,
-    // GENERATED oracle (Graph.diameterTwoSweepOracleSql): both BFS
-    // sweeps unrolled to the same fixed round budget
-    "graph_diameter" ->
-      graft.operators.Graph.diameterTwoSweepOracleSql(),
-    // mojibake screen: C0-control count (minus tab/newline/CR) via
-    // length difference, U+FFFD doc flags via chr(65533)
-    "text_mojibake_screen" ->
-      """WITH p AS MATERIALIZED (SELECT source,
-        |    CAST(length(text) AS BIGINT) AS n,
-        |    CAST(length(text) - length(regexp_replace(text,
-        |      '[\x00-\x08\x0B\x0C\x0E-\x1F]', '', 'g')) AS BIGINT)
-        |      AS ctrl,
-        |    CAST(length(text) - length(replace(text, chr(65533), ''))
-        |      AS BIGINT) AS repl
-        |  FROM documents)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(n) AS BIGINT) AS n_chars,
-        |  CAST(SUM(ctrl) AS BIGINT) AS ctrl_chars,
-        |  CAST(COUNT(*) FILTER (repl > 0) AS BIGINT) AS repl_docs,
-        |  CAST(SUM(repl) AS BIGINT) AS repl_chars,
-        |  CAST(SUM(ctrl) * 1000000 // greatest(SUM(n), 1) AS BIGINT)
-        |    AS ctrl_ppm,
-        |  CAST(COUNT(*) FILTER (repl > 0) * 1000000 // COUNT(*)
-        |    AS BIGINT) AS repl_doc_ppm
-        |FROM p GROUP BY 1""".stripMargin,
-    // event-type co-presence at user-day grain: distinct units,
-    // bounded self-join, Jaccard ppm per (type_a < type_b)
-    "dq_event_copresence" ->
-      """WITH units AS MATERIALIZED (SELECT DISTINCT user_id,
-        |    CAST(ts AS DATE) AS day, event_type AS t FROM events),
-        |pres AS MATERIALIZED (SELECT t, COUNT(*) AS n FROM units
-        |  GROUP BY 1),
-        |both_ct AS MATERIALIZED (SELECT a.t AS type_a,
-        |    b.t AS type_b, COUNT(*) AS n_both
-        |  FROM units a JOIN units b ON a.user_id = b.user_id
-        |    AND a.day = b.day AND a.t < b.t
-        |  GROUP BY 1, 2)
-        |SELECT bc.type_a, bc.type_b, bc.n_both,
-        |  pa.n AS n_a, pb.n AS n_b,
-        |  bc.n_both * 1000000 // (pa.n + pb.n - bc.n_both)
-        |    AS jaccard_ppm
-        |FROM both_ct bc
-        |JOIN pres pa ON pa.t = bc.type_a
-        |JOIN pres pb ON pb.t = bc.type_b""".stripMargin,
-    // Krippendorff binary-nominal alpha: 3 deterministic raters,
-    // exact pair counts, one truncating ppm division (both engines
-    // truncate toward zero; denominator guarded with GREATEST(.,1)
-    // on BOTH engines so a degenerate all-identical-votes corpus
-    // grades as alpha_ppm=0 instead of NULL-vs-crash)
-    "pipeline_krippendorff" ->
-      """WITH lab AS MATERIALIZED (SELECT
-        |   (length(text) >= 300)::INT
-        | + (len(list_distinct(list_filter(string_split(lower(text),
-        |      ' '), x -> x <> ''))) * 2
-        |    >= len(list_filter(string_split(lower(text), ' '),
-        |      x -> x <> '')))::INT
-        | + ((length(text) - length(regexp_replace(text, '[0-9]',
-        |      '', 'g'))) * 20 < length(text))::INT AS n1
+        | FROM t)
+        |SELECT doc_id, score_milli,
+        | abs(score_milli - 1000) AS dist,
+        | CAST(row_number() OVER (ORDER BY abs(score_milli - 1000),
+        |   doc_id) AS BIGINT) AS rk
+        |FROM sc QUALIFY rk <= 20""".stripMargin),
+    // shuffle-quality audit: adjacency rates in ppm, the same
+    // seed-42 md5 key the production shuffle emits
+    q("pipeline_shuffle_quality", TextAnalysis.shuffleQuality(_, _),
+      """WITH docs AS (SELECT doc_id, source,
+        |  md5(concat_ws(':', '42', CAST(doc_id AS VARCHAR))) AS skey
         | FROM documents),
-        |agg AS MATERIALIZED (SELECT
-        |   CAST(COUNT(*) AS HUGEINT) AS n_units,
-        |   CAST(SUM(n1) AS HUGEINT) AS tot1,
-        |   CAST(SUM(n1 * (3 - n1)) AS HUGEINT) AS do_pairs
-        | FROM lab)
-        |SELECT CAST(n_units AS BIGINT) AS n_units,
-        |  CAST(n_units * 3 AS BIGINT) AS n_values,
-        |  CAST(tot1 AS BIGINT) AS n_pos,
-        |  CAST(do_pairs AS BIGINT) AS do_pairs,
-        |  CAST((2 * tot1 * (n_units * 3 - tot1)
-        |      - (n_units * 3 - 1) * do_pairs) * 1000000
-        |    // GREATEST(2 * tot1 * (n_units * 3 - tot1), 1) AS BIGINT)
-        |    AS alpha_ppm
-        |FROM agg""".stripMargin,
-    // props schema profile: data-driven key discovery (json_keys ≙
-    // Spark's from_json-map explode), presence ppm + value
-    // cardinality per (event_type, key)
-    "dq_props_profile" ->
-      """WITH tot AS MATERIALIZED (SELECT event_type,
-        |    COUNT(*) AS n_rows FROM events GROUP BY 1),
-        |kv AS MATERIALIZED (SELECT event_type,
-        |    unnest(json_keys(props)) AS k, props FROM events),
-        |p AS MATERIALIZED (SELECT event_type, k,
-        |    COUNT(*) AS n_present,
-        |    COUNT(DISTINCT json_extract_string(props, '$.' || k))
-        |      AS n_distinct
-        |  FROM kv GROUP BY 1, 2)
-        |SELECT event_type, k AS prop_key, n_present,
-        |  n_present * 1000000 // n_rows AS present_ppm, n_distinct
-        |FROM p JOIN tot USING (event_type)""".stripMargin,
-    // byte-grain Rényi-2 over the UTF-8 payloads via the hex-pair
-    // rendering — same exact-integer collision math as the text form
-    "mm_byte_entropy" ->
-      """WITH h AS MATERIALIZED (SELECT doc_id, source,
-        |    hex(encode(text)) AS h
-        |  FROM documents WHERE length(text) > 0),
-        |b AS MATERIALIZED (SELECT doc_id, source,
-        |    unnest([substr(h, i * 2 - 1, 2)
-        |            for i in range(1, length(h) // 2 + 1)]) AS b
-        |  FROM h),
-        |agg AS MATERIALIZED (SELECT doc_id, source, b, COUNT(*) AS c
-        |  FROM b GROUP BY 1, 2, 3),
-        |cd AS MATERIALIZED (SELECT doc_id, source,
-        |    SUM(c) AS n, COUNT(*) AS ds,
-        |    SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS c2
-        |  FROM agg GROUP BY 1, 2)
-        |SELECT source AS media_source, n_docs, byte_coll_ppb,
-        |  mean_distinct_bytes,
-        |  1000000000 // GREATEST(byte_coll_ppb, 1) AS eff_bytes
-        |FROM (SELECT source, COUNT(*) AS n_docs,
-        |    CAST(SUM(c2 * 1000000000
-        |      // (CAST(n AS HUGEINT) * CAST(n AS HUGEINT)))
-        |      // COUNT(*) AS BIGINT) AS byte_coll_ppb,
-        |    CAST(SUM(ds) // COUNT(*) AS BIGINT) AS mean_distinct_bytes
-        |  FROM cd GROUP BY 1) t""".stripMargin,
-    // Heaps-law vocabulary growth: first-decile per type is a
-    // combinable min, the only window runs over 10 decile rows
-    "text_heaps_curve" ->
-      """WITH mx AS (SELECT MAX(doc_id) + 1 AS n_docs FROM documents),
-        |tok AS (SELECT doc_id * 10 // n_docs AS decile,
-        |  unnest(list_filter(string_split(lower(text), ' '),
-        |    x -> x <> '')) AS tok
-        | FROM documents CROSS JOIN mx),
-        |occ AS (SELECT decile, COUNT(*) AS n_tokens
-        | FROM tok GROUP BY 1),
-        |firsts AS (SELECT decile, COUNT(*) AS new_types FROM (
-        |  SELECT tok, MIN(decile) AS decile FROM tok GROUP BY 1)
-        | GROUP BY 1),
-        |j AS (SELECT occ.decile, occ.n_tokens,
-        |  COALESCE(firsts.new_types, 0) AS new_types
-        | FROM occ LEFT JOIN firsts ON occ.decile = firsts.decile)
-        |SELECT decile, n_tokens, new_types,
-        | CAST(SUM(n_tokens) OVER (ORDER BY decile) AS BIGINT)
-        |   AS cum_tokens,
-        | CAST(SUM(new_types) OVER (ORDER BY decile) AS BIGINT)
-        |   AS cum_types,
-        | CAST(SUM(new_types) OVER (ORDER BY decile) * 1000000
-        |   // SUM(n_tokens) OVER (ORDER BY decile) AS BIGINT)
-        |   AS ttr_ppm
-        |FROM j""".stripMargin,
-    // hourly OHLC bars: arg_min/arg_max on the composite (us, id)
-    // key (HUGEINT-packed; Spark orders the struct) — tie-proof.
-    // The us*2^40+event_id packing is order-equivalent to the struct
-    // ordering ONLY while 0 <= event_id < 2^40 (~1.1e12); DuckDB 1.0
-    // has no struct-keyed arg_min, so the bound is ASSERTED per row —
-    // an out-of-range id fails the gate loudly instead of silently
-    // flipping open/close
-    "analytics_ohlc_bars" ->
-      """WITH e AS (SELECT event_type, epoch_us(ts) AS us,
-        |  CASE WHEN event_id BETWEEN 0 AND 1099511627775
-        |   THEN event_id
-        |   ELSE CAST(error('event_id outside 2^40 packing bound')
-        |     AS BIGINT) END AS event_id,
-        |  CAST(trunc(value * 1000000) AS BIGINT) AS vq
-        | FROM events)
-        |SELECT event_type, us // 3600000000 AS hr,
-        | COUNT(*) AS n_events,
-        | arg_min(vq, CAST(us AS HUGEINT) * 1099511627776 + event_id)
-        |   AS open_q6,
-        | arg_max(vq, CAST(us AS HUGEINT) * 1099511627776 + event_id)
-        |   AS close_q6,
-        | MAX(vq) AS high_q6, MIN(vq) AS low_q6,
-        | CAST(SUM(vq) AS BIGINT) AS vol_q6
-        |FROM e GROUP BY 1, 2""".stripMargin,
-    // two-slice drift: conditional integer sums per dim, pooled-var
-    // standardized shift² in ppm; // and DIV both truncate toward 0
-    "sim_embedding_drift" ->
-      """WITH q AS (SELECT vec_id % 2 = 0 AS ref,
-        |  unnest(range(len(embedding))) AS dim,
-        |  unnest([CAST(trunc(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
-        |          for x in embedding]) AS q
-        | FROM embeddings),
-        |a AS (SELECT CAST(dim AS BIGINT) AS dim,
-        |  COUNT(*) FILTER (ref) AS n_ref,
-        |  SUM(q) FILTER (ref) AS sq_ref,
-        |  SUM(CAST(q AS HUGEINT) * CAST(q AS HUGEINT)) FILTER (ref)
-        |    AS sqq_ref,
-        |  COUNT(*) FILTER (NOT ref) AS n_cur,
-        |  SUM(q) FILTER (NOT ref) AS sq_cur,
-        |  SUM(CAST(q AS HUGEINT) * CAST(q AS HUGEINT)) FILTER (NOT ref)
-        |    AS sqq_cur
-        | FROM q GROUP BY 1),
-        |b AS (SELECT dim, n_ref, n_cur,
-        |  CAST(sq_ref // n_ref AS BIGINT) AS mean_ref_q6,
-        |  CAST(sq_cur // n_cur AS BIGINT) AS mean_cur_q6,
-        |  CAST((CAST(n_ref AS HUGEINT) * sqq_ref
-        |      - CAST(sq_ref AS HUGEINT) * CAST(sq_ref AS HUGEINT))
-        |    // (CAST(n_ref AS HUGEINT) * CAST(n_ref AS HUGEINT))
-        |    AS BIGINT) AS var_ref_q12,
-        |  CAST((CAST(n_cur AS HUGEINT) * sqq_cur
-        |      - CAST(sq_cur AS HUGEINT) * CAST(sq_cur AS HUGEINT))
-        |    // (CAST(n_cur AS HUGEINT) * CAST(n_cur AS HUGEINT))
-        |    AS BIGINT) AS var_cur_q12
-        | FROM a),
-        |c AS (SELECT *, mean_cur_q6 - mean_ref_q6 AS shift_q6,
-        |  CAST((n_ref * var_ref_q12 + n_cur * var_cur_q12)
-        |    // (n_ref + n_cur) AS BIGINT) AS pooled_var_q12
-        | FROM b)
-        |SELECT dim, CAST(n_ref AS BIGINT) AS n_ref,
-        | CAST(n_cur AS BIGINT) AS n_cur, mean_ref_q6, mean_cur_q6,
-        | shift_q6, var_ref_q12, var_cur_q12, pooled_var_q12,
-        | CASE WHEN pooled_var_q12 > 0 THEN
-        |   CAST((CAST(shift_q6 AS HUGEINT) * CAST(shift_q6 AS HUGEINT)
-        |     * 1000000) // CAST(pooled_var_q12 AS HUGEINT) AS BIGINT)
-        | ELSE NULL END AS drift_ppm
-        |FROM c""".stripMargin,
-    // centroid-based silhouette: exact ‖n·q−S‖²/n² distances via
-    // integer cross-multiplication, argmin tie-broken by label
-    "sim_silhouette" ->
-      """WITH q AS (SELECT vec_id, CAST(label AS BIGINT) AS own,
-        |  unnest(range(len(embedding))) AS dim,
-        |  unnest([CAST(trunc(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
-        |          for x in embedding]) AS q
-        | FROM embeddings),
-        |cent AS (SELECT own AS label, dim, SUM(q) AS sd
-        | FROM q GROUP BY 1, 2),
-        |nl AS (SELECT CAST(label AS BIGINT) AS label, COUNT(*) AS n
-        | FROM embeddings GROUP BY 1),
-        |ssq AS (SELECT label,
-        |  SUM(CAST(sd AS HUGEINT) * CAST(sd AS HUGEINT)) AS cnorm2
-        | FROM cent GROUP BY 1),
-        |vn AS (SELECT vec_id, own, SUM(q * q) AS norm2
-        | FROM q GROUP BY 1, 2),
-        |ip AS (SELECT q.vec_id, q.own, c.label,
-        |  SUM(CAST(q.q AS HUGEINT) * CAST(c.sd AS HUGEINT)) AS ipqs
-        | FROM q JOIN cent c USING (dim) GROUP BY 1, 2, 3),
-        |scaled AS (SELECT ip.vec_id, ip.own, ip.label,
-        |  CAST((CAST(nl.n AS HUGEINT) * CAST(nl.n AS HUGEINT)
-        |      * CAST(vn.norm2 AS HUGEINT)
-        |     - 2 * CAST(nl.n AS HUGEINT) * ip.ipqs + ssq.cnorm2)
-        |    // (CAST(nl.n AS HUGEINT) * CAST(nl.n AS HUGEINT))
-        |    AS BIGINT) AS d2
-        | FROM ip JOIN nl ON ip.label = nl.label
-        |   JOIN ssq ON ip.label = ssq.label
-        |   JOIN vn ON ip.vec_id = vn.vec_id),
-        |own_d AS (SELECT vec_id, own, d2 AS a2 FROM scaled
-        | WHERE label = own),
-        |other_d AS (SELECT vec_id, d2 AS b2 FROM (
-        |  SELECT vec_id, d2, row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY d2, label) AS rk
-        |  FROM scaled WHERE label <> own) WHERE rk = 1),
-        |sil AS (SELECT own,
-        |  CASE WHEN a2 = 0 AND b2 = 0 THEN CAST(0 AS BIGINT)
-        |   ELSE CAST((CAST(b2 AS HUGEINT) - CAST(a2 AS HUGEINT))
-        |     * 1000000 // CAST(GREATEST(a2, b2) AS HUGEINT) AS BIGINT)
-        |  END AS s_ppm
-        | FROM own_d JOIN other_d USING (vec_id))
-        |SELECT own AS label, COUNT(*) AS n_vecs,
-        | CAST(SUM(s_ppm) // COUNT(*) AS BIGINT) AS mean_sil_ppm,
-        | MIN(s_ppm) AS min_sil_ppm,
-        | CAST(SUM(CASE WHEN s_ppm < 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_negative
-        |FROM sil GROUP BY 1""".stripMargin,
-    // per-period ABC classing replayed twice (identical integer
-    // cum/tot rule as analytics_abc_class), full-outer aligned
-    "analytics_abc_migration" ->
-      """WITH r1 AS (
-        | SELECT l_partkey AS part_id, CAST(SUM(CAST(
-        |    CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * (1 - CAST(l_discount AS DECIMAL(12,2))) * 10000
-        |    AS BIGINT)) AS BIGINT) AS x
-        | FROM lineitem WHERE l_shipdate < TIMESTAMP '1998-07-01'
-        | GROUP BY 1),
-        |c1 AS (SELECT part_id,
-        |  CASE WHEN cum * 5 <= tot * 4 THEN 'A'
-        |   WHEN cum * 20 <= tot * 19 THEN 'B' ELSE 'C' END AS c1
-        | FROM (SELECT part_id,
-        |   CAST(SUM(CAST(x AS HUGEINT))
-        |     OVER (ORDER BY x DESC, part_id) AS HUGEINT) AS cum,
-        |   CAST(SUM(CAST(x AS HUGEINT)) OVER () AS HUGEINT) AS tot
-        |  FROM r1)),
-        |r2 AS (
-        | SELECT l_partkey AS part_id, CAST(SUM(CAST(
-        |    CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * (1 - CAST(l_discount AS DECIMAL(12,2))) * 10000
-        |    AS BIGINT)) AS BIGINT) AS x
-        | FROM lineitem WHERE l_shipdate >= TIMESTAMP '1998-07-01'
-        | GROUP BY 1),
-        |c2 AS (SELECT part_id,
-        |  CASE WHEN cum * 5 <= tot * 4 THEN 'A'
-        |   WHEN cum * 20 <= tot * 19 THEN 'B' ELSE 'C' END AS c2
-        | FROM (SELECT part_id,
-        |   CAST(SUM(CAST(x AS HUGEINT))
-        |     OVER (ORDER BY x DESC, part_id) AS HUGEINT) AS cum,
-        |   CAST(SUM(CAST(x AS HUGEINT)) OVER () AS HUGEINT) AS tot
-        |  FROM r2))
-        |SELECT COALESCE(c1, 'NEW') AS class_h1,
-        | COALESCE(c2, 'GONE') AS class_h2, COUNT(*) AS n_parts
-        |FROM c1 FULL OUTER JOIN c2 USING (part_id)
-        |GROUP BY 1, 2""".stripMargin,
-    // view leads purchase: shifted-day LEFT join per lag (purchase-
-    // free days contribute y=0 — the r7 zero-fill convention, bounded
-    // by the observed event horizon), exact decimal moments, the
-    // autocorr rounded-double finish
-    "analytics_xcorr_leadlag" ->
-      """WITH x AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS xv
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |y AS (SELECT CAST(ts AS DATE) AS yday, COUNT(*) AS yv
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-        |p AS (SELECT CAST(l.o AS BIGINT) AS lag_d, x.xv,
-        |       COALESCE(y.yv, 0) AS yv
-        |      FROM x CROSS JOIN range(0, 4) l(o)
-        |      LEFT JOIN y ON y.yday = x.day + CAST(l.o AS INT)
-        |      WHERE x.day + CAST(l.o AS INT) <=
-        |        (SELECT MAX(CAST(ts AS DATE)) FROM events)),
-        |mo AS (SELECT lag_d, COUNT(*) AS n,
-        |  SUM(CAST(xv AS DECIMAL(19,0))) AS sx,
-        |  SUM(CAST(yv AS DECIMAL(19,0))) AS sy,
-        |  SUM(CAST(CAST(xv AS DECIMAL(19,0)) * CAST(yv AS DECIMAL(19,0))
-        |    AS DECIMAL(38,0))) AS sxy,
-        |  SUM(CAST(CAST(xv AS DECIMAL(19,0)) * CAST(xv AS DECIMAL(19,0))
-        |    AS DECIMAL(38,0))) AS sxx,
-        |  SUM(CAST(CAST(yv AS DECIMAL(19,0)) * CAST(yv AS DECIMAL(19,0))
-        |    AS DECIMAL(38,0))) AS syy
-        | FROM p GROUP BY 1)
-        |SELECT lag_d, n,
-        | round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |  / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |   * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS xcorr
-        |FROM mo""".stripMargin,
-    // Spearman via bounded-domain frequency ranks: doubled average
-    // ranks stay integral, Pearson-on-ranks from exact moments
-    "analytics_spearman" ->
-      """WITH f AS (SELECT l_returnflag AS g,
-        |  CAST(l_quantity AS BIGINT) AS q,
-        |  CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT) AS dd
-        | FROM lineitem),
-        |rq AS (SELECT g, q,
-        |  2 * SUM(c) OVER (PARTITION BY g ORDER BY q) - c + 1 AS r2q
-        | FROM (SELECT g, q, COUNT(*) AS c FROM f GROUP BY 1, 2)),
-        |rd AS (SELECT g, dd,
-        |  2 * SUM(c) OVER (PARTITION BY g ORDER BY dd) - c + 1 AS r2dd
-        | FROM (SELECT g, dd, COUNT(*) AS c FROM f GROUP BY 1, 2)),
-        |j AS (SELECT f.g, r2q, r2dd
-        | FROM f JOIN rq ON f.g = rq.g AND f.q = rq.q
-        |        JOIN rd ON f.g = rd.g AND f.dd = rd.dd),
-        |mo AS (SELECT g, COUNT(*) AS n,
-        |  SUM(CAST(r2q AS DECIMAL(19,0))) AS sx,
-        |  SUM(CAST(r2dd AS DECIMAL(19,0))) AS sy,
-        |  SUM(CAST(CAST(r2q AS DECIMAL(19,0)) * CAST(r2dd AS DECIMAL(19,0))
-        |    AS DECIMAL(38,0))) AS sxy,
-        |  SUM(CAST(CAST(r2q AS DECIMAL(19,0)) * CAST(r2q AS DECIMAL(19,0))
-        |    AS DECIMAL(38,0))) AS sxx,
-        |  SUM(CAST(CAST(r2dd AS DECIMAL(19,0)) * CAST(r2dd AS DECIMAL(19,0))
-        |    AS DECIMAL(38,0))) AS syy
-        | FROM j GROUP BY 1)
-        |SELECT g AS l_returnflag, n,
-        | round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |  / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |   * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-        |  AS spearman_rho
-        |FROM mo""".stripMargin,
-    // Zipf profile: top-k rank/frequency table, ratio to top term
-    // and ideal 1/rank weight in exact integer ppm — log-free
-    "text_zipf_profile" ->
-      """WITH tok AS (SELECT unnest(list_filter(
-        |    string_split(lower(text), ' '), x -> x <> '')) AS tok
-        |  FROM documents),
-        |tf AS (SELECT tok, COUNT(*) AS freq FROM tok GROUP BY 1),
-        |r AS (SELECT tok, freq,
-        |  CAST(row_number() OVER (ORDER BY freq DESC, tok) AS BIGINT)
-        |    AS rank
-        | FROM tf),
-        |t AS (SELECT freq AS f1 FROM r WHERE rank = 1)
-        |SELECT rank, tok, freq,
-        |  freq * 1000000 // f1 AS ratio_ppm,
-        |  1000000 // rank AS zipf_ppm
-        |FROM r CROSS JOIN t WHERE rank <= 20""".stripMargin,
-    // arc elasticity: cross-multiplied midpoint formula, one final
-    // toward-zero DIV in 128-bit integers on both engines
-    "analytics_arc_elasticity" ->
-      """WITH b AS (SELECT l_partkey AS part_id,
-        |  CASE WHEN l_discount <= 0.02 THEN 'lo' ELSE 'hi' END AS bucket,
-        |  COUNT(*) AS n,
-        |  SUM(CAST(l_quantity AS BIGINT)) AS qty,
-        |  SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS rev
-        | FROM lineitem
-        | WHERE l_discount <= 0.02 OR l_discount >= 0.06
-        | GROUP BY 1, 2),
-        |lo AS (SELECT part_id, n AS n1, qty AS q1, rev AS r1
-        |       FROM b WHERE bucket = 'lo'),
-        |hi AS (SELECT part_id, n AS n2, qty AS q2, rev AS r2
-        |       FROM b WHERE bucket = 'hi'),
-        |x AS (SELECT lo.part_id, n1, n2,
-        |  CAST(q2 AS HUGEINT) * n1 - CAST(q1 AS HUGEINT) * n2 AS dq,
-        |  CAST(q2 AS HUGEINT) * n1 + CAST(q1 AS HUGEINT) * n2 AS sq,
-        |  CAST(r2 AS HUGEINT) * q1 - CAST(r1 AS HUGEINT) * q2 AS dp,
-        |  CAST(r2 AS HUGEINT) * q1 + CAST(r1 AS HUGEINT) * q2 AS sp
-        | FROM lo JOIN hi ON lo.part_id = hi.part_id)
-        |SELECT part_id, n1, n2,
-        |  CAST(dq * sp * 1000000 // (sq * dp) AS BIGINT) AS elast_ppm
-        |FROM x WHERE dp <> 0""".stripMargin,
-    // month-of-year index: integer cents/day-count ratios against
-    // the 1-row grand total, one truncating DIV
-    "analytics_seasonal_index" ->
-      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS dt,
+        |bf AS (SELECT
+        |  CAST(COUNT(*) FILTER (WHERE source = psrc) * 1000000
+        |   // COUNT(*) AS BIGINT) AS blocked_ppm
+        | FROM (SELECT source,
+        |   lag(source) OVER (ORDER BY source, doc_id) AS psrc
+        |  FROM docs) t
+        | WHERE psrc IS NOT NULL),
+        |af AS (SELECT
+        |  CAST(COUNT(*) FILTER (WHERE source = psrc) * 1000000
+        |   // COUNT(*) AS BIGINT) AS after_ppm
+        | FROM (SELECT source,
+        |   lag(source) OVER (ORDER BY skey, doc_id) AS psrc
+        |  FROM docs) t
+        | WHERE psrc IS NOT NULL),
+        |ex AS (SELECT CAST(SUM(ns * (ns - 1)) * 1000000
+        |  // (SUM(ns) * (SUM(ns) - 1)) AS BIGINT) AS expected_ppm
+        | FROM (SELECT COUNT(*)::BIGINT AS ns FROM docs
+        |       GROUP BY source) t)
+        |SELECT * FROM bf, af, ex""".stripMargin),
+    // Markov 2-step: row-normalized ppm chain with per-term DIV
+    // truncation — both engines walk the identical lattice
+    q("analytics_markov_2step", Analytics.markovTwoStep(_, _),
+      """WITH ev AS (SELECT user_id, epoch_us(ts) AS us, event_id,
+        |  event_type AS a FROM events),
+        |tr AS (SELECT a, b, COUNT(*)::BIGINT AS c FROM (
+        |  SELECT a, lead(a) OVER (PARTITION BY user_id
+        |    ORDER BY us, event_id) AS b FROM ev) t
+        | WHERE b IS NOT NULL GROUP BY 1, 2),
+        |p AS (SELECT a, b,
+        |  c * 1000000 // CAST(SUM(c) OVER (PARTITION BY a) AS BIGINT)
+        |    AS p
+        | FROM tr),
+        |p1 AS (SELECT b AS state, p AS p1_ppm FROM p
+        |       WHERE a = 'view'),
+        |p2 AS (SELECT p.b AS state2,
+        |  CAST(SUM(p1.p1_ppm * p.p // 1000000) AS BIGINT) AS p2_ppm
+        | FROM p1 JOIN p ON p1.state = p.a GROUP BY 1)
+        |SELECT COALESCE(state, state2) AS event_type,
+        | COALESCE(p1_ppm, 0) AS p1_ppm,
+        | COALESCE(p2_ppm, 0) AS p2_ppm
+        |FROM p1 FULL OUTER JOIN p2 ON state = state2""".stripMargin),
+    // residual SPC: decompose CTE + cleared 3σ decision in HUGEINT
+    q("dq_spc_residual", Quality.spcResidual(_, _),
+      """WITH RECURSIVE daily AS (
+        | SELECT CAST(o_orderdate AS DATE) AS dt,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
         |    AS BIGINT)) AS BIGINT) AS g
         | FROM orders GROUP BY 1),
-        |m AS (SELECT CAST(month(dt) AS BIGINT) AS moy,
-        |  COUNT(*) AS n_days, CAST(SUM(g) AS BIGINT) AS gmv_cents
-        | FROM daily GROUP BY 1),
-        |t AS (SELECT SUM(n_days) AS tot_days, SUM(gmv_cents) AS tot_cents
-        |      FROM m)
-        |SELECT moy, n_days, gmv_cents,
-        |  CAST(CAST(gmv_cents AS HUGEINT) * tot_days * 1000000
-        |    // (CAST(n_days AS HUGEINT) * tot_cents) AS BIGINT)
-        |    AS index_ppm
-        |FROM m CROSS JOIN t""".stripMargin,
-    // radius-3 truncated harmonic centrality: reach-set expansions
-    // with per-level distinct, exact-distance counts as set-size
-    // differences, 10^6 DIV d integer weights
-    "graph_harmonic" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |      FROM lineitem),
-        |p AS (SELECT a.pk AS s, b2.pk AS t, COUNT(*) AS n
-        |      FROM b a JOIN b b2 ON a.ok = b2.ok AND a.pk < b2.pk
-        |      GROUP BY 1, 2),
-        |pairs AS (SELECT s, t FROM p WHERE n >= 2),
-        |und AS (SELECT s AS v, t AS n FROM pairs
-        |        UNION ALL SELECT t, s FROM pairs),
-        |r2 AS (SELECT DISTINCT v, n FROM (
-        |  SELECT r.v, u.n FROM und r JOIN und u ON u.v = r.n
-        |  UNION ALL SELECT v, n FROM und) WHERE v <> n),
-        |r3 AS (SELECT DISTINCT v, n FROM (
-        |  SELECT r.v, u.n FROM r2 r JOIN und u ON u.v = r.n
-        |  UNION ALL SELECT v, n FROM r2) WHERE v <> n),
-        |c1 AS (SELECT v, COUNT(*) AS ca FROM und GROUP BY 1),
-        |c2 AS (SELECT v, COUNT(*) AS cb FROM r2 GROUP BY 1),
-        |c3 AS (SELECT v, COUNT(*) AS cc FROM r3 GROUP BY 1)
-        |SELECT c1.v AS part_id, ca AS c1, cb - ca AS c2x,
-        | cc - cb AS c3x,
-        | ca * 1000000 + (cb - ca) * (1000000 // 2)
-        |   + (cc - cb) * (1000000 // 3) AS harm_e6
-        |FROM c1 JOIN c2 ON c1.v = c2.v JOIN c3 ON c2.v = c3.v""".stripMargin,
-    // Tukey fences from 6dp-rounded exact quartiles; graded surface
-    // is counts against per-group constants, never per-row floats
-    "analytics_iqr_outliers" ->
-      """WITH q AS (SELECT event_type AS et,
-        |    round(quantile_cont(value, 0.25), 6) AS q1,
-        |    round(quantile_cont(value, 0.75), 6) AS q3
-        |  FROM events GROUP BY 1),
-        |f AS (SELECT et, q1, q3,
-        |    q1 - (q3 - q1) * 1.5 AS lo,
-        |    q3 + (q3 - q1) * 1.5 AS hi FROM q)
-        |SELECT e.event_type, f.q1, f.q3, COUNT(*) AS n,
-        |  COUNT(*) FILTER (WHERE e.value < f.lo) AS n_low,
-        |  COUNT(*) FILTER (WHERE e.value > f.hi) AS n_high
-        |FROM events e JOIN f ON e.event_type = f.et
-        |GROUP BY 1, 2, 3""".stripMargin,
-    // corpus version diff: the v2 derivation is part of the contract
-    "corpus_version_diff" ->
-      """WITH v1 AS (SELECT doc_id, md5(text) AS h1 FROM documents),
-        |v2 AS (
-        | SELECT doc_id,
-        |  md5(CASE WHEN doc_id % 101 = 0 THEN text || ' v2'
-        |      ELSE text END) AS h2
-        | FROM documents WHERE doc_id % 97 <> 0
+        |idx AS (SELECT row_number() OVER (ORDER BY dt) AS rn, dt, g
+        |        FROM daily),
+        |sm AS (
+        | SELECT rn, dt, g, g AS s, CAST(0 AS BIGINT) AS b
+        | FROM idx WHERE rn = 1
         | UNION ALL
-        | SELECT doc_id + 100000, md5(text) FROM documents
-        | WHERE doc_id % 103 = 0)
-        |SELECT CASE WHEN h1 IS NULL THEN 'added'
-        |  WHEN h2 IS NULL THEN 'removed'
-        |  WHEN h1 <> h2 THEN 'changed'
-        |  ELSE 'unchanged' END AS status, COUNT(*) AS n_docs
-        |FROM v1 FULL OUTER JOIN v2 USING (doc_id)
-        |GROUP BY 1""".stripMargin,
-    // top session paths, ties broken on the path string
-    "analytics_top_paths" ->
-      """WITH p AS (
-        | SELECT array_to_string(
-        |   (list(event_type ORDER BY epoch_us(ts), event_id))[1:8], ',')
-        |   AS path
-        | FROM events GROUP BY user_id),
-        |c AS (SELECT path, COUNT(*) AS n_users FROM p GROUP BY 1)
-        |SELECT path, n_users,
-        | CAST(row_number() OVER (ORDER BY n_users DESC, path) AS INT)
-        |  AS rk
-        |FROM c QUALIFY rk <= 5""".stripMargin,
-    // exact conversion-latency DISCRETE quantiles (rank-select in
-    // BIGINT micros — interpolation at this magnitude is sub-ulp)
-    "analytics_funnel_time" ->
-      """WITH v AS (SELECT user_id, MIN(epoch_us(ts)) AS vus
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |p AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS pus
-        |  FROM events e JOIN v ON e.user_id = v.user_id
-        |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > v.vus
-        |  GROUP BY 1),
-        |dl AS (SELECT p.user_id, pus - vus AS delay_us
-        |       FROM p JOIN v ON p.user_id = v.user_id),
-        |nn AS (SELECT COUNT(*)::BIGINT AS n FROM dl),
-        |r AS (SELECT delay_us,
-        |       row_number() OVER (ORDER BY delay_us) - 1 AS rk FROM dl)
-        |SELECT
-        | (SELECT delay_us FROM r, nn WHERE rk = (n - 1) // 2) AS q50_us,
-        | (SELECT delay_us FROM r, nn
-        |  WHERE rk = ((n - 1) * 9) // 10) AS q90_us""".stripMargin,
-    // scaled-BIGINT reconciliation: cents·10⁸ line products, sign
-    // split so the ppm division only ever sees positive integers
-    "dq_order_reconcile" ->
-      """WITH lr AS (
-        | SELECT l_orderkey AS ok,
-        |  CAST(SUM(
-        |   CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |   * (10000 + CAST(CAST(l_tax AS DECIMAL(8,4)) * 10000 AS BIGINT))
-        |   * (10000 - CAST(CAST(l_discount AS DECIMAL(8,4)) * 10000
-        |       AS BIGINT))) AS BIGINT) AS rev_s
-        | FROM lineitem GROUP BY 1),
-        |j AS (
-        | SELECT
-        |  CASE WHEN tp_s >= rev_s THEN 1 ELSE -1 END AS sign,
-        |  abs(tp_s - rev_s) AS mag, tp_s
-        | FROM (SELECT o_orderkey,
-        |        CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |         * 100000000 AS tp_s FROM orders) o
-        |  JOIN lr ON o.o_orderkey = lr.ok),
-        |dr AS (SELECT CAST(sign * (mag::HUGEINT * 1000000 // tp_s::HUGEINT)
-        |       AS BIGINT) AS drift_ppm FROM j)
-        |SELECT COUNT(*) AS n_orders,
-        | COUNT(*) FILTER (WHERE drift_ppm = 0) AS n_exact,
-        | MIN(drift_ppm) AS min_ppm, MAX(drift_ppm) AS max_ppm,
-        | CAST(SUM(drift_ppm) AS BIGINT) AS sum_ppm
-        |FROM dr""".stripMargin,
-    // TPC-DS q67 shape: one window over the rollup, rank ties broken
-    // on the dimension names so the top-k cut is deterministic
-    "analytics_rollup_topk" ->
-      """WITH rev AS (
-        | SELECT r_name, n_name,
-        |  CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS BIGINT) AS cents
-        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        | GROUP BY ROLLUP (r_name, n_name)),
-        |rk AS (
-        | SELECT
-        |  CAST(CASE WHEN r_name IS NULL THEN 2
-        |       WHEN n_name IS NULL THEN 1 ELSE 0 END AS BIGINT) AS lvl,
-        |  COALESCE(r_name, 'ALL') AS region_name,
-        |  COALESCE(n_name, 'ALL') AS nation_name, cents,
-        |  CAST(row_number() OVER (
-        |    PARTITION BY (CASE WHEN r_name IS NULL THEN 2
-        |      WHEN n_name IS NULL THEN 1 ELSE 0 END)
-        |    ORDER BY cents DESC, COALESCE(r_name, 'ALL'),
-        |      COALESCE(n_name, 'ALL')) AS INT) AS rk
-        | FROM rev)
-        |SELECT lvl, region_name, nation_name, cents, rk
-        |FROM rk WHERE rk <= 3""".stripMargin,
-    // shard manifest: order-independent integer checksum (SUM of
-    // 48-bit md5 prefixes), so the grade is content-exact per shard
-    "pipeline_shard_manifest" ->
-      """WITH sh AS (SELECT doc_id,
-        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-        |    ::UBIGINT % 16 AS BIGINT) AS shard,
-        |  CAST(('0x' || substr(md5(text), 1, 12))::UBIGINT AS BIGINT)
-        |    AS ck,
-        |  CAST(len(list_filter(string_split(lower(text), ' '),
-        |    x -> x <> '')) AS BIGINT) AS nt
-        | FROM documents)
-        |SELECT shard, COUNT(*) AS n_docs,
-        | CAST(SUM(nt) AS BIGINT) AS n_tokens,
-        | CAST(SUM(ck) AS BIGINT) AS checksum,
-        | MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
-        |FROM sh GROUP BY 1""".stripMargin,
-    // ASCII-only string behaviors pinned cross-engine
-    "analytics_string_parity" ->
-      """SELECT p_partkey,
-        | upper(p_name) AS up,
-        | lpad(p_brand, 12, '*') AS pad,
-        | replace(p_name, ' ', '_') AS snake,
-        | replace(p_brand, '#', '-') AS tr,
-        | reverse(p_brand) AS rev,
-        | repeat(p_brand, 2) AS rep2,
-        | CAST(instr(p_name, 'o') AS BIGINT) AS pos_o,
-        | array_to_string((string_split(p_name, ' '))[1:2], ' ') AS first2,
-        | CAST(length(trim(p_name)) AS BIGINT) AS trim_len
-        |FROM part""".stripMargin,
-    // dHash: the oracle recomputes all 64 bits from the synthetic
-    // pixel formula with NO decoder — a hash match proves the real
-    // PNG encode→decode→grid-sample→pack chain pixel-exact
-    "mm_image_dhash" ->
-      """WITH g AS (
-        | SELECT doc_id, 8 + doc_id % 24 AS w,
-        |        8 + (doc_id * 7) % 24 AS h FROM documents),
-        |bits AS (
-        | SELECT doc_id, CAST(y*8 + x AS INT) AS pos,
-        |  CASE WHEN ((31*doc_id + 7*((x*w)//9) + 13*((y*h)//8)) % 256)
-        |     < ((31*doc_id + 7*(((x+1)*w)//9) + 13*((y*h)//8)) % 256)
-        |   THEN 1 ELSE 0 END AS b
-        | FROM g CROSS JOIN range(0,8) ry(y) CROSS JOIN range(0,8) rx(x)),
-        |hv AS (
-        | SELECT doc_id,
-        |  SUM(CASE WHEN b = 1
-        |      THEN (1::HUGEINT << CAST(63 - pos AS INT))
-        |      ELSE 0::HUGEINT END) AS hu
-        | FROM bits GROUP BY 1),
-        |sg AS (
-        | SELECT doc_id,
-        |  CAST(hu - CASE WHEN hu >= 9223372036854775808::HUGEINT
-        |    THEN 18446744073709551616::HUGEINT
-        |    ELSE 0::HUGEINT END AS BIGINT) AS dhash
-        | FROM hv)
-        |SELECT dhash, COUNT(*) AS n_images, MIN(doc_id) AS rep_id
-        |FROM sg GROUP BY 1""".stripMargin,
+        | SELECT i.rn, i.dt, i.g,
+        |  (i.g + (sm.s + sm.b) * 3) >> 2,
+        |  ((((i.g + (sm.s + sm.b) * 3) >> 2) - sm.s) + sm.b * 3) >> 2
+        | FROM idx i JOIN sm ON i.rn = sm.rn + 1),
+        |oa AS (SELECT CAST(SUM(g) AS BIGINT) // COUNT(*) AS avg_all
+        |       FROM daily),
+        |dw AS (SELECT CAST(dayofweek(dt) + 1 AS BIGINT) AS dow,
+        |  CAST(SUM(g) AS BIGINT) // COUNT(*) - avg_all AS sc
+        | FROM daily CROSS JOIN oa GROUP BY 1, avg_all),
+        |res AS (SELECT sm.dt, sm.g - sm.s - dw.sc AS r
+        | FROM sm JOIN dw
+        |  ON CAST(dayofweek(sm.dt) + 1 AS BIGINT) = dw.dow),
+        |mo AS (SELECT COUNT(*)::HUGEINT AS n,
+        |  SUM(r::HUGEINT) AS sx, SUM(r::HUGEINT * r) AS sxx FROM res)
+        |SELECT dt, r AS residual_cents,
+        | CASE WHEN n * r > sx THEN 'hi' ELSE 'lo' END AS side
+        |FROM res, mo
+        |WHERE (n * r - sx) * (n * r - sx) > 9 * (n * sxx - sx * sx)""".stripMargin),
+    // modality agreement: both pair relations replayed, set algebra
+    q("dedup_modality_agreement", Dedup.modalityAgreement(_, _),
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings),
+        |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v]))
+        |      AS nrm FROM e),
+        |ep AS (SELECT id_a, id_b FROM (
+        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  list_sum([a.v[i + 1] * b.v[i + 1]
+        |    for i in range(0, len(a.v))]) / (a.nrm * b.nrm) AS cos
+        | FROM n a JOIN n b ON a.vec_id < b.vec_id) t
+        |WHERE cos >= 0.4),
+        |sh AS (
+        | SELECT DISTINCT doc_id, s FROM (
+        |  SELECT doc_id, unnest([substr(lower(text), i, 12)
+        |   for i in range(1, greatest(length(lower(text)) - 10, 2))]) AS s
+        |  FROM documents) t),
+        |sz AS (SELECT doc_id, COUNT(*) AS ns FROM sh GROUP BY 1),
+        |tp AS (SELECT id_a, id_b FROM (
+        | SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
+        | FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+        | GROUP BY 1, 2) i
+        | JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
+        | WHERE CAST(c AS DOUBLE) / (sa.ns + sb.ns - c) >= 0.5),
+        |cts AS (SELECT
+        |  (SELECT COUNT(*) FROM ep)::BIGINT AS n_embedding,
+        |  (SELECT COUNT(*) FROM tp)::BIGINT AS n_text,
+        |  (SELECT COUNT(*) FROM ep SEMI JOIN tp
+        |    ON ep.id_a = tp.id_a AND ep.id_b = tp.id_b)::BIGINT
+        |   AS n_both)
+        |SELECT n_embedding, n_text, n_both,
+        | n_both * 1000000
+        |  // greatest(n_embedding + n_text - n_both, 1) AS jaccard_ppm
+        |FROM cts""".stripMargin),
     // bounded Bellman-Ford replayed as unrolled min-relax CTEs —
     // one CTE per round, NEVER path enumeration
-    "graph_shortest_path" ->
+    q("graph_shortest_path", Graph.shortestPath(_, _),
       """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
         |            FROM lineitem),
         |pc AS (SELECT a.pk AS s, b.pk AS t, COUNT(*) AS n
@@ -6896,39 +6415,11 @@ object SparkEntry {
         |  SELECT node, dist FROM d3 UNION ALL
         |  SELECT e.dst, d3.dist + e.c FROM d3 JOIN e ON e.src = d3.node)
         | GROUP BY 1)
-        |SELECT node AS part_id, dist FROM d4""".stripMargin,
-    // the same integer recurrence sₜ = (2gₜ+6sₜ₋₁)>>3, replayed as a
-    // recursive CTE over the day index
-    "analytics_exp_smooth" ->
-      """WITH RECURSIVE daily AS (
-        | SELECT CAST(o_orderdate AS DATE) AS dt,
-        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS BIGINT) AS g
-        | FROM orders GROUP BY 1),
-        |idx AS (SELECT row_number() OVER (ORDER BY dt) AS rn, dt, g
-        |        FROM daily),
-        |sm AS (
-        | SELECT rn, dt, g, g AS s FROM idx WHERE rn = 1
-        | UNION ALL
-        | SELECT i.rn, i.dt, i.g, (i.g * 2 + sm.s * 6) // 8
-        | FROM idx i JOIN sm ON i.rn = sm.rn + 1)
-        |SELECT dt, g, s FROM sm""".stripMargin,
-    // stored-day-bitmap OR+popcount must equal the semi-join rolling
-    // WAU (the bitmap algebra is exact, so the ground truth IS the
-    // oracle); calendar-range window on both sides
-    "analytics_bitmap_range_uv" ->
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-        |            FROM events),
-        |days AS (SELECT DISTINCT day FROM ud),
-        |x AS (SELECT user_id, day + CAST(o AS INT) AS day
-        |      FROM ud CROSS JOIN range(0, 7) r(o))
-        |SELECT x.day, COUNT(DISTINCT x.user_id) AS wau_ct
-        |FROM x SEMI JOIN days ON x.day = days.day
-        |GROUP BY 1""".stripMargin,
+        |SELECT node AS part_id, dist FROM d4""".stripMargin),
     // cross-multiplied exact two-proportion test: 1.96² = 38416/10000
     // is rational, so the significance flag never touches a float
     // (HUGEINT here, DECIMAL(38,0) in Spark — both exact integers)
-    "analytics_ab_test" ->
+    q("analytics_ab_test", Analytics.abTest(_, _),
       """WITH pu AS (
         | SELECT user_id,
         |  MAX(CASE WHEN event_type = 'purchase' AND value >= 95.0
@@ -6949,10 +6440,10 @@ object SparkEntry {
         |        * CAST(c1 * n2 - c2 * n1 AS HUGEINT) * (n1 + n2)
         |   > 38416 * CAST(c1 + c2 AS HUGEINT)
         |        * (n1 + n2 - c1 - c2) * n1 * n2 AS BIGINT) AS significant
-        |FROM a""".stripMargin,
+        |FROM a""".stripMargin),
     // equal-share credit: integer division FIRST (1e6 DIV n_prior),
     // then the per-channel multiply — identically ordered both sides
-    "analytics_attribution_linear" ->
+    q("analytics_attribution_linear", Analytics.linearAttribution(_, _),
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us,
         |  event_id FROM events),
         |c AS (SELECT event_type,
@@ -6977,10 +6468,59 @@ object SparkEntry {
         |  ('none', CASE WHEN n_prior = 0 THEN 1000000 ELSE 0 END))
         |  v(channel, credit))
         |SELECT channel, CAST(SUM(credit) AS BIGINT) AS credit_ppm
-        |FROM x GROUP BY 1""".stripMargin,
+        |FROM x GROUP BY 1""".stripMargin),
+    // the same integer recurrence sₜ = (2gₜ+6sₜ₋₁)>>3, replayed as a
+    // recursive CTE over the day index
+    q("analytics_exp_smooth", Analytics.expSmoothGmv(_, _),
+      """WITH RECURSIVE daily AS (
+        | SELECT CAST(o_orderdate AS DATE) AS dt,
+        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS BIGINT) AS g
+        | FROM orders GROUP BY 1),
+        |idx AS (SELECT row_number() OVER (ORDER BY dt) AS rn, dt, g
+        |        FROM daily),
+        |sm AS (
+        | SELECT rn, dt, g, g AS s FROM idx WHERE rn = 1
+        | UNION ALL
+        | SELECT i.rn, i.dt, i.g, (i.g * 2 + sm.s * 6) // 8
+        | FROM idx i JOIN sm ON i.rn = sm.rn + 1)
+        |SELECT dt, g, s FROM sm""".stripMargin),
+    // erasure cascade counts: seed → orders → lineitem, plus events
+    q("pipeline_gdpr_erase", Quality.gdprErasePlan(_, _),
+      """WITH seed AS (SELECT c_custkey AS k FROM customer
+        |             WHERE c_custkey % 97 = 0),
+        |o AS (SELECT o_orderkey FROM orders
+        |      WHERE o_custkey IN (SELECT k FROM seed)),
+        |l AS (SELECT 1 AS x FROM lineitem
+        |      WHERE l_orderkey IN (SELECT o_orderkey FROM o)),
+        |e AS (SELECT 1 AS x FROM events
+        |      WHERE user_id IN (SELECT k FROM seed))
+        |SELECT 'customer' AS tbl, (SELECT COUNT(*) FROM seed) AS purge_ct
+        |UNION ALL SELECT 'orders', (SELECT COUNT(*) FROM o)
+        |UNION ALL SELECT 'lineitem', (SELECT COUNT(*) FROM l)
+        |UNION ALL SELECT 'events', (SELECT COUNT(*) FROM e)""".stripMargin),
+    // iterative-join climb == recursive CTE over the same derived
+    // category edges; exact DECIMAL revenue through every level
+    q("analytics_hierarchy_rollup", Analytics.hierarchyRollup(_, _),
+      s"""WITH RECURSIVE edges AS (
+         | SELECT DISTINCT c, parent FROM (
+         |  SELECT 3000 + p_partkey % 1000 AS c,
+         |    2000 + p_partkey % 100 AS parent FROM part
+         |  UNION ALL
+         |  SELECT 2000 + p_partkey % 100, 1000 + p_partkey % 10
+         |  FROM part) u),
+         |leafrev AS (
+         | SELECT 3000 + l_partkey % 1000 AS c, SUM($rev) AS rev
+         | FROM lineitem GROUP BY 1),
+         |climb(c, rev) AS (
+         | SELECT c, rev FROM leafrev
+         | UNION ALL
+         | SELECT e.parent, cl.rev FROM climb cl JOIN edges e ON cl.c = e.c)
+         |SELECT c AS top_id, CAST(SUM(rev) AS DOUBLE) AS revenue
+         |FROM climb WHERE c >= 1000 AND c < 2000 GROUP BY 1""".stripMargin),
     // motif search: Pearson-similar historical windows to the last
     // 7-day window, exact DECIMAL moments, trivial-match exclusion
-    "analytics_motif_search" ->
+    q("analytics_motif_search", Analytics.motifSearch(_, _),
       """WITH daily AS (
         | SELECT CAST(o_orderdate AS DATE) AS dt,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -7019,44 +6559,11 @@ object SparkEntry {
         |SELECT start_day, sim, rk FROM (
         | SELECT start_day, sim, CAST(row_number() OVER (
         |   ORDER BY sim DESC, start_day) AS BIGINT) AS rk FROM sc) t
-        |WHERE rk <= 5""".stripMargin,
-    // iterative-join climb == recursive CTE over the same derived
-    // category edges; exact DECIMAL revenue through every level
-    "analytics_hierarchy_rollup" ->
-      s"""WITH RECURSIVE edges AS (
-         | SELECT DISTINCT c, parent FROM (
-         |  SELECT 3000 + p_partkey % 1000 AS c,
-         |    2000 + p_partkey % 100 AS parent FROM part
-         |  UNION ALL
-         |  SELECT 2000 + p_partkey % 100, 1000 + p_partkey % 10
-         |  FROM part) u),
-         |leafrev AS (
-         | SELECT 3000 + l_partkey % 1000 AS c, SUM($rev) AS rev
-         | FROM lineitem GROUP BY 1),
-         |climb(c, rev) AS (
-         | SELECT c, rev FROM leafrev
-         | UNION ALL
-         | SELECT e.parent, cl.rev FROM climb cl JOIN edges e ON cl.c = e.c)
-         |SELECT c AS top_id, CAST(SUM(rev) AS DOUBLE) AS revenue
-         |FROM climb WHERE c >= 1000 AND c < 2000 GROUP BY 1""".stripMargin,
-    // erasure cascade counts: seed → orders → lineitem, plus events
-    "pipeline_gdpr_erase" ->
-      """WITH seed AS (SELECT c_custkey AS k FROM customer
-        |             WHERE c_custkey % 97 = 0),
-        |o AS (SELECT o_orderkey FROM orders
-        |      WHERE o_custkey IN (SELECT k FROM seed)),
-        |l AS (SELECT 1 AS x FROM lineitem
-        |      WHERE l_orderkey IN (SELECT o_orderkey FROM o)),
-        |e AS (SELECT 1 AS x FROM events
-        |      WHERE user_id IN (SELECT k FROM seed))
-        |SELECT 'customer' AS tbl, (SELECT COUNT(*) FROM seed) AS purge_ct
-        |UNION ALL SELECT 'orders', (SELECT COUNT(*) FROM o)
-        |UNION ALL SELECT 'lineitem', (SELECT COUNT(*) FROM l)
-        |UNION ALL SELECT 'events', (SELECT COUNT(*) FROM e)""".stripMargin,
+        |WHERE rk <= 5""".stripMargin),
     // OLS over the daily series: exact DECIMAL moments, identical
     // IEEE expression for the two rounded doubles (slope inlined
     // unrounded into the intercept, same as the Spark plan)
-    "analytics_trend_ols" ->
+    q("analytics_trend_ols", Analytics.trendOls(_, _),
       """WITH daily AS (
         | SELECT datediff('day', DATE '1970-01-01',
         |     CAST(o_orderdate AS DATE)) AS day_num,
@@ -7084,10 +6591,10 @@ object SparkEntry {
         |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
         |   * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 6)
         |  AS intercept_cents
-        |FROM mo""".stripMargin,
+        |FROM mo""".stripMargin),
     // scaled CUSUM S_k = n·cum_k − k·total is exact integer; argmax
     // row (tie → earliest day); fits BIGINT at bench scale
-    "analytics_changepoint" ->
+    q("analytics_changepoint", Analytics.changepointCusum(_, _),
       """WITH daily AS (
         | SELECT CAST(o_orderdate AS DATE) AS dt,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -7102,167 +6609,10 @@ object SparkEntry {
         | FROM daily CROSS JOIN tot)
         |SELECT dt AS change_day, CAST(s_k AS BIGINT) AS cusum_stat,
         | n AS n_days
-        |FROM cus ORDER BY abs(s_k) DESC, dt LIMIT 1""".stripMargin,
-    // Mann–Kendall: exact ±1 pair count over the day grain, exact
-    // integer tie-corrected 18·Var, ONE rounded continuity-corrected
-    // z from identical IEEE expressions
-    "analytics_mann_kendall" ->
-      """WITH daily AS MATERIALIZED (
-        | SELECT CAST(o_orderdate AS DATE) AS dt,
-        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-        |    AS BIGINT)) AS BIGINT) AS y
-        | FROM orders GROUP BY 1),
-        |dx AS (SELECT date_diff('day', DATE '1970-01-01', dt) AS x, y
-        |       FROM daily),
-        |sp AS (SELECT CAST(SUM(CASE WHEN b.y > a.y THEN 1
-        |    WHEN b.y < a.y THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
-        |  FROM dx a JOIN dx b ON a.x < b.x),
-        |ties AS (SELECT COALESCE(CAST(SUM(t * (t - 1) * (2 * t + 5))
-        |    AS BIGINT), 0) AS tie_term
-        |  FROM (SELECT COUNT(*) AS t FROM dx GROUP BY y)),
-        |nn AS (SELECT COUNT(*) AS n FROM dx)
-        |SELECT n AS n_days, s_stat,
-        |  CAST(n * (n - 1) * (2 * n + 5) - tie_term AS BIGINT) AS var18,
-        |  round(CASE
-        |    WHEN s_stat > 0 THEN (CAST(s_stat AS DOUBLE) - 1.0)
-        |      / sqrt(CAST(n * (n - 1) * (2 * n + 5) - tie_term
-        |          AS DOUBLE) / 18.0)
-        |    WHEN s_stat < 0 THEN (CAST(s_stat AS DOUBLE) + 1.0)
-        |      / sqrt(CAST(n * (n - 1) * (2 * n + 5) - tie_term
-        |          AS DOUBLE) / 18.0)
-        |    ELSE 0.0 END, 6) AS z_mk
-        |FROM sp CROSS JOIN ties CROSS JOIN nn""".stripMargin,
-    // Shapley over the 16-subset lattice: exact integer 24·φ via the
-    // 6/2/2/6 coefficients, one truncating ppm share division
-    "analytics_shapley" ->
-      """WITH fp AS MATERIALIZED (SELECT user_id, min(ts) AS pay_ts
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-        |tch AS (SELECT e.user_id,
-        |    bit_or(CASE e.event_type WHEN 'view' THEN 1
-        |      WHEN 'click' THEN 2 WHEN 'signup' THEN 4
-        |      WHEN 'error' THEN 8 END) AS m
-        |  FROM events e JOIN fp USING (user_id)
-        |  WHERE e.ts < fp.pay_ts
-        |    AND e.event_type IN ('view', 'click', 'signup', 'error')
-        |  GROUP BY 1),
-        |masks AS MATERIALIZED (SELECT COALESCE(t.m, 0) AS m,
-        |    COUNT(*) AS cnt
-        |  FROM fp LEFT JOIN tch t USING (user_id) GROUP BY 1),
-        |subsets AS (SELECT unnest(range(0, 16)) AS S),
-        |v AS MATERIALIZED (SELECT S,
-        |    CAST(COALESCE(SUM(cnt), 0) AS BIGINT) AS v
-        |  FROM subsets LEFT JOIN masks ON (m & S) = m GROUP BY 1),
-        |ch AS (SELECT * FROM (VALUES ('view', 1), ('click', 2),
-        |    ('signup', 4), ('error', 8)) AS t(channel, cb)),
-        |phi AS (SELECT channel,
-        |    CAST(SUM((CASE bit_count(v1.S) WHEN 0 THEN 6 WHEN 1 THEN 2
-        |      WHEN 2 THEN 2 ELSE 6 END) * (v2.v - v1.v)) AS BIGINT)
-        |      AS phi24
-        |  FROM ch JOIN v v1 ON (v1.S & cb) = 0
-        |  JOIN v v2 ON v2.S = (v1.S | cb)
-        |  GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(phi24) AS BIGINT) AS tot FROM phi)
-        |SELECT channel, phi24,
-        |  phi24 * 1000000 // GREATEST(tot, 1) AS share_ppm
-        |FROM phi CROSS JOIN tot""".stripMargin,
-    // time-decay attribution: day-grain half-life exponent, power of
-    // two via shift, one truncating per-user ppm division
-    "analytics_attribution_decay" ->
-      """WITH fp AS MATERIALIZED (SELECT user_id, min(ts) AS pay_ts
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-        |t AS (SELECT e.user_id, e.event_type AS channel,
-        |    1000000 // (CAST(1 AS BIGINT) << CAST(least(
-        |      date_diff('day', CAST(e.ts AS DATE),
-        |        CAST(fp.pay_ts AS DATE)) // 7, 30) AS INT)) AS w
-        |  FROM events e JOIN fp USING (user_id)
-        |  WHERE e.ts < fp.pay_ts
-        |    AND e.event_type IN ('view', 'click', 'signup', 'error')),
-        |pc AS (SELECT user_id, channel, CAST(SUM(w) AS BIGINT) AS wc,
-        |    COUNT(*) AS n_touch
-        |  FROM t GROUP BY 1, 2),
-        |pu AS (SELECT user_id, CAST(SUM(wc) AS BIGINT) AS wall
-        |  FROM pc GROUP BY 1)
-        |SELECT channel,
-        |  CAST(SUM(wc * 1000000 // wall) AS BIGINT) AS credit_ppm_total,
-        |  CAST(SUM(n_touch) AS BIGINT) AS n_touches,
-        |  CAST(COUNT(*) AS BIGINT) AS n_users
-        |FROM pc JOIN pu USING (user_id)
-        |GROUP BY 1""".stripMargin,
-    // perfect-order: the all-lines-ok conjunction at order grain,
-    // month rollup, truncating ppm
-    "analytics_perfect_order" ->
-      """WITH po AS (SELECT o_orderkey,
-        |    strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS ym,
-        |    MIN(CASE WHEN date_diff('day', CAST(o_orderdate AS DATE),
-        |        CAST(l_shipdate AS DATE)) <= 30
-        |      AND l_returnflag <> 'R' THEN 1 ELSE 0 END) AS ok
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |  GROUP BY 1, 2)
-        |SELECT ym, CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |  CAST(SUM(ok) AS BIGINT) AS n_perfect,
-        |  CAST(SUM(ok) * 1000000 // COUNT(*) AS BIGINT) AS perfect_ppm
-        |FROM po GROUP BY 1""".stripMargin,
-    // 13-gram contamination: md5-16hex gram keys are engine-identical;
-    // train side dedups before the equi-join
-    "pipeline_ngram_contamination" ->
-      """WITH docs AS MATERIALIZED (SELECT doc_id,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '')
-        |      AS w
-        |  FROM documents),
-        |grams AS MATERIALIZED (SELECT doc_id,
-        |    unnest([substring(md5(array_to_string(w[i:i+12], ' ')), 1, 16)
-        |            for i in range(1, greatest(len(w) - 12, 0) + 1)]) AS g
-        |  FROM docs),
-        |tg AS MATERIALIZED (SELECT DISTINCT g FROM grams
-        |  WHERE doc_id % 10 < 8),
-        |eg AS (SELECT DISTINCT doc_id, g FROM grams
-        |  WHERE doc_id % 10 >= 8)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-        |  CAST(COUNT(t.g) AS BIGINT) AS n_hit,
-        |  COUNT(t.g) * 1000000 // COUNT(*) AS contamination_ppm
-        |FROM eg LEFT JOIN tg t ON eg.g = t.g
-        |GROUP BY 1""".stripMargin,
-    // Kaplan–Meier: day-grain risk sets as a DESC running count,
-    // survival as the TRUNCATING ppm product fold replayed by a
-    // recursive CTE (the pack_greedy discipline — no float product)
-    "analytics_kaplan_meier" ->
-      """WITH RECURSIVE
-        |o AS MATERIALIZED (SELECT DISTINCT o_custkey AS c,
-        |    CAST(o_orderdate AS DATE) AS dt FROM orders),
-        |r AS (SELECT c, dt, row_number() OVER
-        |    (PARTITION BY c ORDER BY dt) AS rk FROM o),
-        |f AS (SELECT c, dt AS d1 FROM r WHERE rk = 1),
-        |s2 AS (SELECT c, dt AS d2 FROM r WHERE rk = 2),
-        |h AS (SELECT max(dt) AS dmax FROM o),
-        |life AS (SELECT
-        |    CAST(CASE WHEN d2 IS NOT NULL
-        |      THEN date_diff('day', d1, d2)
-        |      ELSE date_diff('day', d1, dmax) END AS BIGINT) AS t,
-        |    CASE WHEN d2 IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM f LEFT JOIN s2 USING (c) CROSS JOIN h),
-        |dist AS (SELECT t, COUNT(*) AS m,
-        |    CAST(SUM(ev) AS BIGINT) AS d_ev FROM life GROUP BY 1),
-        |risk AS (SELECT t, d_ev, CAST(SUM(m) OVER (ORDER BY t DESC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS BIGINT) AS n_risk
-        |  FROM dist),
-        |kmr AS MATERIALIZED (SELECT row_number() OVER (ORDER BY t)
-        |    AS rn, t, n_risk, d_ev
-        |  FROM risk WHERE d_ev > 0),
-        |steps AS (
-        |  SELECT rn, t, n_risk, d_ev,
-        |    1000000 * (n_risk - d_ev) // n_risk AS s
-        |  FROM kmr WHERE rn = 1
-        |  UNION ALL
-        |  SELECT k.rn, k.t, k.n_risk, k.d_ev,
-        |    st.s * (k.n_risk - k.d_ev) // k.n_risk
-        |  FROM steps st JOIN kmr k ON k.rn = st.rn + 1)
-        |SELECT t AS t_days, n_risk, d_ev AS d_events,
-        |  CAST(s AS BIGINT) AS survival_ppm
-        |FROM steps""".stripMargin,
+        |FROM cus ORDER BY abs(s_k) DESC, dt LIMIT 1""".stripMargin),
     // staged long floor-divisions replayed exactly; DuckDB
     // dayofweek is 0-based Sunday, Spark's is 1-based
-    "analytics_seasonality_dow" ->
+    q("analytics_seasonality_dow", Analytics.seasonalityDow(_, _),
       """WITH daily AS (
         | SELECT CAST(o_orderdate AS DATE) AS dt,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -7275,10 +6625,10 @@ object SparkEntry {
         | FROM daily GROUP BY 1)
         |SELECT dow, n_days, avg_cents,
         | avg_cents * 1000000 // avg_all AS index_ppm
-        |FROM dw CROSS JOIN oa""".stripMargin,
+        |FROM dw CROSS JOIN oa""".stripMargin),
     // one 1-row aggregation of conditional counts, fanned to a row
     // per probe; ppm via long floor-div
-    "analytics_price_cdf" ->
+    q("analytics_price_cdf", Analytics.priceCdf(_, _),
       """WITH a AS (SELECT COUNT(*) AS n,
         |  COUNT(*) FILTER (WHERE CAST(CAST(o_totalprice AS DECIMAL(12,2))
         |    * 100 AS BIGINT) <= 5000000) AS c0,
@@ -7294,10 +6644,10 @@ object SparkEntry {
         |SELECT probe_dollars, le_ct, le_ct * 1000000 // n AS cdf_ppm
         |FROM a, LATERAL (VALUES (CAST(50000 AS BIGINT), c0),
         |  (100000, c1), (200000, c2), (300000, c3), (400000, c4))
-        |  v(probe_dollars, le_ct)""".stripMargin,
+        |  v(probe_dollars, le_ct)""".stripMargin),
     // DAU and exact rolling-30 MAU both off the deduped (user, day)
     // pairs; fan-out + semi-join replayed, ratio long floor-div
-    "analytics_stickiness" ->
+    q("analytics_stickiness", Analytics.stickiness(_, _),
       """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
         |            FROM events),
         |days AS (SELECT DISTINCT day FROM ud),
@@ -7310,10 +6660,10 @@ object SparkEntry {
         |        GROUP BY 1)
         |SELECT dau.day, dau_ct, mau_ct,
         | dau_ct * 1000000 // mau_ct AS stickiness_ppm
-        |FROM dau JOIN mau ON dau.day = mau.day""".stripMargin,
+        |FROM dau JOIN mau ON dau.day = mau.day""".stripMargin),
     // per-column profile: nulls + exact distincts + BIGINT-safe
     // min/max (cents for money, epoch micros for the date)
-    "dq_profile" ->
+    q("dq_profile", Quality.profile(_, _),
       """WITH a AS (SELECT
         |  COUNT(*) FILTER (WHERE o_orderkey IS NULL) AS k_n,
         |  COUNT(DISTINCT o_orderkey) AS k_d,
@@ -7346,10 +6696,10 @@ object SparkEntry {
         |    CAST(NULL AS BIGINT)),
         |  ('o_orderpriority', r_n, r_d, CAST(NULL AS BIGINT),
         |    CAST(NULL AS BIGINT)))
-        |  v(column_name, null_ct, distinct_ct, min_num, max_num)""".stripMargin,
+        |  v(column_name, null_ct, distinct_ct, min_num, max_num)""".stripMargin),
     // adjacent-bigram lift ranks: exact counts, double lift in the
     // same left-associated operand order, ties lexicographic
-    "text_collocations" ->
+    q("text_collocations", TextAnalysis.collocations(_, _),
       """WITH tk AS (SELECT doc_id, list_filter(
         |   string_split(lower(text), ' '), x -> x <> '') AS t
         |  FROM documents),
@@ -7371,10 +6721,10 @@ object SparkEntry {
         |SELECT w1, w2, pair_ct, rk FROM (
         | SELECT w1, w2, pair_ct, CAST(row_number() OVER (
         |   ORDER BY lift DESC, w1, w2) AS BIGINT) AS rk FROM sc) t
-        |WHERE rk <= 20""".stripMargin,
+        |WHERE rk <= 20""".stripMargin),
     // undirected degrees off the deduped co-purchase pair set (each
     // edge once, s < t), then the degree histogram
-    "graph_degree_dist" ->
+    q("graph_degree_dist", Graph.degreeDist(_, _),
       """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
         |  FROM lineitem),
         |e AS (SELECT a.pk AS s, b.pk AS t FROM li a JOIN li b
@@ -7382,10 +6732,10 @@ object SparkEntry {
         |deg AS (SELECT node, COUNT(*) AS degree FROM (
         |  SELECT s AS node FROM e UNION ALL SELECT t FROM e) u
         | GROUP BY 1)
-        |SELECT degree, COUNT(*) AS node_ct FROM deg GROUP BY 1""".stripMargin,
+        |SELECT degree, COUNT(*) AS node_ct FROM deg GROUP BY 1""".stripMargin),
     // fact-fact join then exact interpolated quantiles (the
     // quantile-descent operator's quantile_cont contract)
-    "analytics_ship_latency" ->
+    q("analytics_ship_latency", Analytics.shipLatency(_, _),
       """WITH dly AS (SELECT o_orderpriority,
         |  datediff('day', CAST(o_orderdate AS DATE),
         |    CAST(l_shipdate AS DATE)) AS delay_days
@@ -7394,10 +6744,10 @@ object SparkEntry {
         | round(quantile_cont(delay_days, 0.50), 6) AS p50,
         | round(quantile_cont(delay_days, 0.90), 6) AS p90,
         | round(quantile_cont(delay_days, 0.99), 6) AS p99
-        |FROM dly GROUP BY 1""".stripMargin,
+        |FROM dly GROUP BY 1""".stripMargin),
     // endpoint-degree Pearson over the symmetrized edge list: exact
     // DECIMAL moments, identical double formula (autocorr family)
-    "graph_assortativity" ->
+    q("graph_assortativity", Graph.assortativity(_, _),
       """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
         |  FROM lineitem),
         |e AS (SELECT a.pk AS s, b.pk AS t FROM li a JOIN li b
@@ -7427,10 +6777,10 @@ object SparkEntry {
         |   * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
         |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
         |  AS assortativity
-        |FROM mo""".stripMargin,
+        |FROM mo""".stripMargin),
     // 1-row curation report over the exact-Jaccard pair set (the
     // dedup_ngram_jaccard oracle, summarized)
-    "corpus_near_dup_rate" ->
+    q("corpus_near_dup_rate", Dedup.nearDupRate(_, _),
       """WITH sh AS (
         | SELECT DISTINCT doc_id, s FROM (
         |  SELECT doc_id, unnest([substr(lower(text), i, 12)
@@ -7450,10 +6800,10 @@ object SparkEntry {
         |nd AS (SELECT COUNT(*) AS n_docs FROM documents)
         |SELECT n_docs, dup_docs, pair_ct,
         | dup_docs * 1000000 // n_docs AS dup_ppm
-        |FROM nd CROSS JOIN dd CROSS JOIN pc""".stripMargin,
+        |FROM nd CROSS JOIN dd CROSS JOIN pc""".stripMargin),
     // rank-weighted Gini in exact integer cents; ties in spend are
     // order-invariant in Σi·x so the rank tie-break can't matter
-    "analytics_gini" ->
+    q("analytics_gini", Analytics.giniSpend(_, _),
       """WITH spend AS (
         | SELECT o_custkey, CAST(SUM(CAST(CAST(o_totalprice
         |    AS DECIMAL(12,2)) * 100 AS BIGINT)) AS BIGINT) AS x
@@ -7466,10 +6816,10 @@ object SparkEntry {
         | FROM rk)
         |SELECT n, CAST((2 * six - (n + 1) * sx) * 1000000
         |  // (n * sx) AS BIGINT) AS gini_ppm
-        |FROM mo""".stripMargin,
+        |FROM mo""".stripMargin),
     // Σ share² concentration in exact 1e-4-dollar units (2dp×2dp
     // revenue has exactly 4 decimals, so ×10000 is integral)
-    "analytics_hhi" ->
+    q("analytics_hhi", Analytics.hhiSupplier(_, _),
       """WITH rev AS (
         | SELECT l_suppkey, CAST(SUM(CAST(CAST(l_extendedprice
         |    AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))
@@ -7481,9 +6831,9 @@ object SparkEntry {
         | FROM rev)
         |SELECT n_suppliers,
         | CAST(sxx * 1000000 // (sx * sx) AS BIGINT) AS hhi_ppm
-        |FROM mo""".stripMargin,
+        |FROM mo""".stripMargin),
     // vocabulary profile: grouped token counts → 1-row aggregate
-    "text_hapax_stats" ->
+    q("text_hapax_stats", TextAnalysis.hapaxStats(_, _),
       """WITH tf AS (SELECT w, COUNT(*) AS ct FROM (
         | SELECT unnest(list_filter(string_split(lower(text), ' '),
         |   x -> x <> '')) AS w FROM documents) u GROUP BY 1),
@@ -7493,10 +6843,10 @@ object SparkEntry {
         |SELECT n_types, n_tokens, hapax_ct,
         | hapax_ct * 1000000 // n_types AS hapax_ppm,
         | n_types * 1000000 // n_tokens AS ttr_ppm
-        |FROM mo""".stripMargin,
+        |FROM mo""".stripMargin),
     // cluster closure (recursive CTE) + per-cluster argmax by the
     // SAME IEEE quality score, doc-id tie-break
-    "dedup_priority_keep" ->
+    q("dedup_priority_keep", Dedup.dedupPriority(_, _),
       """WITH RECURSIVE
         |sh AS (
         | SELECT DISTINCT doc_id, s FROM (
@@ -7541,20 +6891,20 @@ object SparkEntry {
         | FROM cl JOIN q ON cl.doc_id = q.doc_id)
         |SELECT cluster_id, doc_id AS keep_id, cluster_size,
         | round(q, 6) AS keep_score
-        |FROM j WHERE rk = 1""".stripMargin,
+        |FROM j WHERE rk = 1""".stripMargin),
     // day spine from the table's own bounds, anti-joined against
     // observed days
-    "dq_calendar_gaps" ->
+    q("dq_calendar_gaps", Analytics.calendarGaps(_, _),
       """WITH days AS (SELECT DISTINCT CAST(o_orderdate AS DATE) AS dt
         |              FROM orders),
         |b AS (SELECT MIN(dt) AS lo, MAX(dt) AS hi FROM days),
         |spine AS (SELECT CAST(unnest(generate_series(lo, hi,
         |  INTERVAL 1 DAY)) AS DATE) AS missing_day FROM b)
         |SELECT missing_day FROM spine
-        |WHERE missing_day NOT IN (SELECT dt FROM days)""".stripMargin,
+        |WHERE missing_day NOT IN (SELECT dt FROM days)""".stripMargin),
     // 30% day-over-day jump decided by exact integer
     // cross-multiplication (10·|Δ| > 3·prev)
-    "dq_gmv_jumps" ->
+    q("dq_gmv_jumps", Analytics.gmvJumps(_, _),
       """WITH daily AS (
         | SELECT CAST(o_orderdate AS DATE) AS dt,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -7565,10 +6915,10 @@ object SparkEntry {
         |SELECT dt AS jump_day, g, prev_g,
         | CASE WHEN g > prev_g THEN 'up' ELSE 'down' END AS direction
         |FROM l
-        |WHERE prev_g IS NOT NULL AND abs(g - prev_g) * 10 > prev_g * 3""".stripMargin,
+        |WHERE prev_g IS NOT NULL AND abs(g - prev_g) * 10 > prev_g * 3""".stripMargin),
     // decile Lorenz points: same rank construction as analytics_gini,
     // ceil-decile in pure integer, cumulative over ten rows
-    "analytics_lorenz" ->
+    q("analytics_lorenz", Analytics.lorenzSpend(_, _),
       """WITH spend AS (
         | SELECT o_custkey, CAST(SUM(CAST(CAST(o_totalprice
         |    AS DECIMAL(12,2)) * 100 AS BIGINT)) AS BIGINT) AS x
@@ -7584,10 +6934,10 @@ object SparkEntry {
         |SELECT decile, cust_ct,
         | CAST(CAST(SUM(dx) OVER (ORDER BY decile) AS HUGEINT) * 1000000
         |   // (SELECT sx FROM tot) AS BIGINT) AS cum_share_ppm
-        |FROM g""".stripMargin,
+        |FROM g""".stripMargin),
     // lifetimes → per-week churn/at-risk, reverse cumulative
     // denominator; last observed week is censoring, not churn
-    "analytics_churn_hazard" ->
+    q("analytics_churn_hazard", Analytics.churnHazard(_, _),
       """WITH life AS (
         | SELECT user_id, MIN(CAST(ts AS DATE)) AS first_d,
         |  MAX(CAST(ts AS DATE)) AS last_d
@@ -7606,10 +6956,10 @@ object SparkEntry {
         | FROM bw)
         |SELECT week, churn_ct, at_risk,
         | churn_ct * 1000000 // at_risk AS hazard_ppm
-        |FROM ar""".stripMargin,
+        |FROM ar""".stripMargin),
     // one BPE merge step over the VOCABULARY (distinct words ×
     // corpus counts), adjacent-symbol pairs, lexicographic ties
-    "pipeline_bpe_step" ->
+    q("pipeline_bpe_step", TextAnalysis.bpeStep(_, _),
       """WITH vocab AS (SELECT w AS word, COUNT(*) AS word_ct FROM (
         | SELECT unnest(list_filter(string_split(lower(text), ' '),
         |   x -> x <> '')) AS w FROM documents) u GROUP BY 1),
@@ -7620,10 +6970,10 @@ object SparkEntry {
         |SELECT c1, c2, pair_ct, rk FROM (
         | SELECT c1, c2, pair_ct, CAST(row_number() OVER (
         |   ORDER BY pair_ct DESC, c1, c2) AS BIGINT) AS rk FROM p) t
-        |WHERE rk <= 10""".stripMargin,
+        |WHERE rk <= 10""".stripMargin),
     // cohort month via integer y·12+m; cumulative over the tiny
     // (cohort × offset) grain; per-user LTV = long floor-div
-    "analytics_cohort_ltv" ->
+    q("analytics_cohort_ltv", Analytics.cohortLtv(_, _),
       """WITH o AS (SELECT o_custkey,
         |  CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT)
         |    AS ym,
@@ -7642,10 +6992,10 @@ object SparkEntry {
         | FROM per)
         |SELECT cohort_ym, offset_m, cohort_users, cum_rev_cents,
         | cum_rev_cents // cohort_users AS ltv_cents_per_user
-        |FROM c JOIN sz USING (cohort_ym)""".stripMargin,
+        |FROM c JOIN sz USING (cohort_ym)""".stripMargin),
     // digest-grouped CAS dedup over the same hex framing as
     // mm_audio_chunks; keeper via the encoded integer MIN
-    "mm_chunk_dedup" ->
+    q("mm_chunk_dedup", Multimodal.chunkDedup(_, _),
       """WITH ch AS (
         | SELECT doc_id, CAST(u.i AS BIGINT) AS chunk_idx,
         |  md5(u.c) AS chunk_md5,
@@ -7660,10 +7010,10 @@ object SparkEntry {
         | MAX(chunk_bytes) AS chunk_bytes,
         | MIN(doc_id * 1000000 + chunk_idx) // 1000000 AS keep_doc,
         | MIN(doc_id * 1000000 + chunk_idx) % 1000000 AS keep_idx
-        |FROM ch GROUP BY 1 HAVING COUNT(*) > 1""".stripMargin,
+        |FROM ch GROUP BY 1 HAVING COUNT(*) > 1""".stripMargin),
     // Holt level+trend, α=β=1/4 as ARITHMETIC shifts (>> matches
     // JVM semantics on negative trends; // would floor-diverge)
-    "analytics_holt_trend" ->
+    q("analytics_holt_trend", Analytics.holtTrendGmv(_, _),
       """WITH RECURSIVE daily AS (
         | SELECT CAST(o_orderdate AS DATE) AS dt,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -7680,10 +7030,10 @@ object SparkEntry {
         |  ((((i.g + (sm.s + sm.b) * 3) >> 2) - sm.s) + sm.b * 3) >> 2
         | FROM idx i JOIN sm ON i.rn = sm.rn + 1)
         |SELECT dt, g, s AS level, b AS trend, s + b AS forecast_next
-        |FROM sm""".stripMargin,
+        |FROM sm""".stripMargin),
     // four conditional cells off one scan; every avg a long
     // floor-div; DiD estimate in exact cents
-    "analytics_diff_in_diff" ->
+    q("analytics_diff_in_diff", Analytics.diffInDiff(_, _),
       """WITH a AS (SELECT
         |  COUNT(*) FILTER (WHERE o_custkey % 2 = 0
         |    AND o_orderdate < TIMESTAMP '1998-01-01') AS n_t_pre,
@@ -7718,11 +7068,11 @@ object SparkEntry {
         | CAST((s_t_post // n_t_post - s_t_pre // n_t_pre)
         |  - (s_c_post // n_c_post - s_c_pre // n_c_pre) AS BIGINT)
         |  AS did_cents
-        |FROM a""".stripMargin,
+        |FROM a""".stripMargin),
     // forecast-vs-next-day alignment over the Holt recursion; MAE
     // and hit-rate exact, signed bias kept as the raw sum (trunc vs
     // floor div would diverge on negatives)
-    "analytics_holt_backtest" ->
+    q("analytics_holt_backtest", Analytics.holtBacktest(_, _),
       """WITH RECURSIVE daily AS (
         | SELECT CAST(o_orderdate AS DATE) AS dt,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -7753,10 +7103,10 @@ object SparkEntry {
         | FROM er)
         |SELECT n_days, sae // n_days AS mae_cents, se AS bias_sum_cents,
         | worst_abs_err, dir_hits * 1000000 // n_days AS dir_hit_ppm
-        |FROM mo""".stripMargin,
+        |FROM mo""".stripMargin),
     // confusion cells + per-label recall share in ppm (identical
     // cascade to the text_langid oracle)
-    "text_langid_confusion" ->
+    q("text_langid_confusion", TextAnalysis.langIdConfusion(_, _),
       """WITH sc AS (SELECT lang, CASE
         |  WHEN regexp_matches(lower(text), '[一-鿿]') THEN 'zh'
         |  WHEN regexp_matches(lower(text), '[぀-ヿ]') THEN 'ja'
@@ -7772,18 +7122,18 @@ object SparkEntry {
         |SELECT lang, pred_lang, ct,
         | ct * 1000000 // CAST(SUM(ct) OVER (PARTITION BY lang) AS BIGINT)
         |  AS row_share_ppm
-        |FROM c""".stripMargin,
+        |FROM c""".stripMargin),
     // round-robin across sources: global rank of (within-source
     // rank, source), replayed as two windows
-    "pipeline_interleave" ->
+    q("pipeline_interleave", TextAnalysis.interleaveBySource(_, _),
       """WITH r AS (SELECT doc_id, source, row_number() OVER (
         |  PARTITION BY source ORDER BY doc_id) AS rn FROM documents)
         |SELECT doc_id, CAST(row_number() OVER (ORDER BY rn, source) - 1
         |  AS BIGINT) AS interleave_pos
-        |FROM r""".stripMargin,
+        |FROM r""".stripMargin),
     // g = Holt level + DOW deviation + residual, every term the
     // exact integer its own graded query produces
-    "analytics_decompose" ->
+    q("analytics_decompose", Analytics.decomposeGmv(_, _),
       """WITH RECURSIVE daily AS (
         | SELECT CAST(o_orderdate AS DATE) AS dt,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -7807,9 +7157,9 @@ object SparkEntry {
         |SELECT sm.dt, sm.g, sm.s AS trend_cents, dw.seasonal_cents,
         | sm.g - sm.s - dw.seasonal_cents AS residual_cents
         |FROM sm JOIN dw
-        | ON CAST(dayofweek(sm.dt) + 1 AS BIGINT) = dw.dow""".stripMargin,
+        | ON CAST(dayofweek(sm.dt) + 1 AS BIGINT) = dw.dow""".stripMargin),
     // near-dup pairs rolled up to unordered (source, source) cells
-    "corpus_source_overlap" ->
+    q("corpus_source_overlap", Dedup.sourceOverlap(_, _),
       """WITH sh AS (
         | SELECT DISTINCT doc_id, s FROM (
         |  SELECT doc_id, unnest([substr(lower(text), i, 12)
@@ -7828,10 +7178,10 @@ object SparkEntry {
         |      FROM pr JOIN documents da ON pr.id_a = da.doc_id
         |              JOIN documents db ON pr.id_b = db.doc_id)
         |SELECT source_a, source_b, COUNT(*) AS pair_ct
-        |FROM j GROUP BY 1, 2""".stripMargin,
+        |FROM j GROUP BY 1, 2""".stripMargin),
     // interval anti-join: clicks with no same-user purchase in the
     // next hour, rolled to day grain
-    "analytics_abandon_rate" ->
+    q("analytics_abandon_rate", Analytics.abandonRate(_, _),
       """WITH c AS (SELECT user_id, ts AS cts FROM events
         |           WHERE event_type = 'click'),
         |p AS (SELECT user_id, ts AS pts FROM events
@@ -7848,10 +7198,10 @@ object SparkEntry {
         |  COALESCE(a.n_abandoned, 0) AS n_abandoned,
         |  COALESCE(a.n_abandoned, 0) * 1000000 // t.n_clicks
         |    AS abandon_ppm
-        |FROM t LEFT JOIN a ON t.day = a.day""".stripMargin,
+        |FROM t LEFT JOIN a ON t.day = a.day""".stripMargin),
     // inclusive running share desc over (revenue, part) — unique
     // order, so the RANGE default frame equals ROWS
-    "analytics_abc_class" ->
+    q("analytics_abc_class", Analytics.abcParts(_, _),
       """WITH rev AS (
         | SELECT l_partkey AS part_id, CAST(SUM(CAST(
         |    CAST(l_extendedprice AS DECIMAL(12,2))
@@ -7871,8 +7221,8 @@ object SparkEntry {
         |  CAST(CAST(SUM(x) AS HUGEINT) * 1000000
         |    // (SELECT CAST(SUM(x) AS HUGEINT) FROM rev) AS BIGINT)
         |    AS share_ppm
-        |FROM k GROUP BY 1""".stripMargin,
-    "analytics_repeat_rate" ->
+        |FROM k GROUP BY 1""".stripMargin),
+    q("analytics_repeat_rate", Analytics.repeatRate(_, _),
       """WITH pc AS (SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m')
         |    AS ym, o_custkey, COUNT(*) AS n
         |  FROM orders GROUP BY 1, 2)
@@ -7880,10 +7230,10 @@ object SparkEntry {
         |  CAST(COUNT(*) FILTER (WHERE n >= 2) AS BIGINT) AS n_repeat,
         |  CAST(COUNT(*) FILTER (WHERE n >= 2) AS BIGINT) * 1000000
         |    // COUNT(*) AS repeat_ppm
-        |FROM pc GROUP BY 1""".stripMargin,
+        |FROM pc GROUP BY 1""".stripMargin),
     // sweep-line order-book depth: ±1 day-grain deltas, one running
     // sum over the bounded day spine — exact integers end to end
-    "analytics_open_orders" ->
+    q("analytics_open_orders", Analytics.openOrders(_, _),
       """WITH cl AS (SELECT l_orderkey AS ok,
         |    MAX(CAST(l_shipdate AS DATE)) AS close_d
         |  FROM lineitem GROUP BY 1),
@@ -7896,11 +7246,11 @@ object SparkEntry {
         |  FROM ev GROUP BY 1)
         |SELECT day,
         |  CAST(SUM(delta) OVER (ORDER BY day) AS BIGINT) AS n_open
-        |FROM dl""".stripMargin,
+        |FROM dl""".stripMargin),
     // exact DECIMAL window moments over the daily rollup; one
     // double-expression finish per row (autocorr discipline);
     // complete 28-day windows only
-    "analytics_rolling_corr" ->
+    q("analytics_rolling_corr", Analytics.rollingCorr(_, _),
       """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
         |    CAST(COUNT(*) AS DECIMAL(19,0)) AS x,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -7923,19 +7273,19 @@ object SparkEntry {
         |    * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
         |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
         |  AS corr28
-        |FROM mo WHERE n = 28""".stripMargin,
+        |FROM mo WHERE n = 28""".stripMargin),
     // bounded-domain one-pass exact quantiles (quantity 1..50);
     // quantile_cont contract
-    "analytics_quantity_quantiles" ->
+    q("analytics_quantity_quantiles", Analytics.quantityQuantiles(_, _),
       """SELECT l_returnflag,
         | round(quantile_cont(CAST(l_quantity AS BIGINT), 0.25), 6) AS p25,
         | round(quantile_cont(CAST(l_quantity AS BIGINT), 0.50), 6) AS p50,
         | round(quantile_cont(CAST(l_quantity AS BIGINT), 0.75), 6) AS p75,
         | round(quantile_cont(CAST(l_quantity AS BIGINT), 0.95), 6) AS p95
-        |FROM lineitem GROUP BY 1""".stripMargin,
+        |FROM lineitem GROUP BY 1""".stripMargin),
     // grouped OLS: exact DECIMAL moments per nation, one double
     // finish (trend_ols discipline, per group)
-    "analytics_nation_trend" ->
+    q("analytics_nation_trend", Analytics.nationTrend(_, _),
       """WITH daily AS (
         | SELECT n_name,
         |  datediff('day', DATE '1970-01-01',
@@ -7960,10 +7310,226 @@ object SparkEntry {
         |  / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
         |    - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6)
         |  AS slope_cents_per_day
-        |FROM mo""".stripMargin,
+        |FROM mo""".stripMargin),
+    // k-core peel UNROLLED to a 24-round budget (measured depth 11
+    // at sf0.01; idempotent past the fixpoint, so margin is free);
+    // MATERIALIZED CTEs — default inlining re-evaluates the chain
+    q("graph_kcore", Graph.kCore(_, _),
+      graft.operators.Graph.kCoreOracleSql(k = 3, minStrength = 2)),
+    // recall eval COMPOSED from the two graded index oracles: the
+    // sim_topk_bruteforce truth CTEs + the sim_ann_ivf index CTEs,
+    // semi-joined per (query, neighbor) — closes the r7 rows-only gap
+    q("sim_recall_eval", Similarity.annRecallEval(_, _),
+      """WITH e AS MATERIALIZED (SELECT vec_id,
+        |           CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |n AS MATERIALIZED (SELECT vec_id, v,
+        |      sqrt(list_sum([x * x for x in v])) AS nrm FROM e),
+        |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n
+        |      WHERE vec_id < 20),
+        |sbf AS (SELECT query_id, e2.vec_id AS neighbor_id,
+        |  list_sum([qv[i + 1] * e2.v[i + 1] for i in range(0, len(qv))])
+        |   / (qn * e2.nrm) AS cos
+        | FROM q, n e2 WHERE e2.vec_id <> query_id),
+        |exact AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
+        | SELECT query_id, neighbor_id, row_number() OVER
+        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
+        | FROM sbf) t WHERE rk <= 5),
+        |tot AS (SELECT greatest(count(*)//16, 1) AS stride FROM e),
+        |cents AS (SELECT (vec_id // stride) AS cidx, v AS cv, nrm AS cn
+        |          FROM n, tot
+        |          WHERE vec_id % stride = 0 AND vec_id // stride < 16),
+        |cs AS MATERIALIZED (SELECT n.vec_id, cidx,
+        |  list_sum([n.v[i+1]*cv[i+1] for i in range(0,len(cv))])
+        |   / (n.nrm * cn) AS ccos
+        | FROM n CROSS JOIN cents),
+        |assign AS (SELECT vec_id, cidx AS cell FROM (
+        |  SELECT vec_id, cidx, row_number() OVER
+        |   (PARTITION BY vec_id ORDER BY ccos DESC, cidx) AS r FROM cs) t
+        |  WHERE r = 1),
+        |probes AS (SELECT vec_id AS query_id, cidx AS cell FROM (
+        |  SELECT vec_id, cidx, row_number() OVER
+        |   (PARTITION BY vec_id ORDER BY ccos DESC, cidx) AS r
+        |  FROM cs WHERE vec_id < 20) t
+        |  WHERE r <= 4),
+        |corpus AS (SELECT a.vec_id, a.cell, n.v, n.nrm
+        |           FROM assign a JOIN n USING (vec_id)),
+        |qv2 AS (SELECT p.query_id, p.cell, n.v AS qv, n.nrm AS qn
+        |       FROM probes p JOIN n ON n.vec_id = p.query_id),
+        |sivf AS (SELECT query_id, c.vec_id AS neighbor_id,
+        |  list_sum([qv[i+1]*c.v[i+1] for i in range(0,len(qv))])
+        |   / (qn * c.nrm) AS cos
+        | FROM qv2 JOIN corpus c USING (cell) WHERE c.vec_id <> query_id),
+        |approx AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
+        | SELECT query_id, neighbor_id, row_number() OVER
+        |  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
+        | FROM sivf) t WHERE rk <= 5),
+        |hits AS (SELECT ex.query_id, CAST(count(*) AS BIGINT) AS n_hits
+        |  FROM exact ex JOIN approx a USING (query_id, neighbor_id)
+        |  GROUP BY 1)
+        |SELECT qs.query_id, COALESCE(h.n_hits, 0) AS n_hits,
+        |  COALESCE(h.n_hits, 0) * 1000000 // 5 AS recall_ppm
+        |FROM (SELECT DISTINCT query_id FROM exact) qs
+        |LEFT JOIN hits h USING (query_id)""".stripMargin),
+    // Mann–Kendall: exact ±1 pair count over the day grain, exact
+    // integer tie-corrected 18·Var, ONE rounded continuity-corrected
+    // z from identical IEEE expressions
+    q("analytics_mann_kendall", Analytics.mannKendall(_, _),
+      """WITH daily AS MATERIALIZED (
+        | SELECT CAST(o_orderdate AS DATE) AS dt,
+        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+        |    AS BIGINT)) AS BIGINT) AS y
+        | FROM orders GROUP BY 1),
+        |dx AS (SELECT date_diff('day', DATE '1970-01-01', dt) AS x, y
+        |       FROM daily),
+        |sp AS (SELECT CAST(SUM(CASE WHEN b.y > a.y THEN 1
+        |    WHEN b.y < a.y THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
+        |  FROM dx a JOIN dx b ON a.x < b.x),
+        |ties AS (SELECT COALESCE(CAST(SUM(t * (t - 1) * (2 * t + 5))
+        |    AS BIGINT), 0) AS tie_term
+        |  FROM (SELECT COUNT(*) AS t FROM dx GROUP BY y)),
+        |nn AS (SELECT COUNT(*) AS n FROM dx)
+        |SELECT n AS n_days, s_stat,
+        |  CAST(n * (n - 1) * (2 * n + 5) - tie_term AS BIGINT) AS var18,
+        |  round(CASE
+        |    WHEN s_stat > 0 THEN (CAST(s_stat AS DOUBLE) - 1.0)
+        |      / sqrt(CAST(n * (n - 1) * (2 * n + 5) - tie_term
+        |          AS DOUBLE) / 18.0)
+        |    WHEN s_stat < 0 THEN (CAST(s_stat AS DOUBLE) + 1.0)
+        |      / sqrt(CAST(n * (n - 1) * (2 * n + 5) - tie_term
+        |          AS DOUBLE) / 18.0)
+        |    ELSE 0.0 END, 6) AS z_mk
+        |FROM sp CROSS JOIN ties CROSS JOIN nn""".stripMargin),
+    // Kaplan–Meier: day-grain risk sets as a DESC running count,
+    // survival as the TRUNCATING ppm product fold replayed by a
+    // recursive CTE (the pack_greedy discipline — no float product)
+    q("analytics_kaplan_meier", Analytics.kaplanMeier(_, _),
+      """WITH RECURSIVE
+        |o AS MATERIALIZED (SELECT DISTINCT o_custkey AS c,
+        |    CAST(o_orderdate AS DATE) AS dt FROM orders),
+        |r AS (SELECT c, dt, row_number() OVER
+        |    (PARTITION BY c ORDER BY dt) AS rk FROM o),
+        |f AS (SELECT c, dt AS d1 FROM r WHERE rk = 1),
+        |s2 AS (SELECT c, dt AS d2 FROM r WHERE rk = 2),
+        |h AS (SELECT max(dt) AS dmax FROM o),
+        |life AS (SELECT
+        |    CAST(CASE WHEN d2 IS NOT NULL
+        |      THEN date_diff('day', d1, d2)
+        |      ELSE date_diff('day', d1, dmax) END AS BIGINT) AS t,
+        |    CASE WHEN d2 IS NOT NULL THEN 1 ELSE 0 END AS ev
+        |  FROM f LEFT JOIN s2 USING (c) CROSS JOIN h),
+        |dist AS (SELECT t, COUNT(*) AS m,
+        |    CAST(SUM(ev) AS BIGINT) AS d_ev FROM life GROUP BY 1),
+        |risk AS (SELECT t, d_ev, CAST(SUM(m) OVER (ORDER BY t DESC
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |    AS BIGINT) AS n_risk
+        |  FROM dist),
+        |kmr AS MATERIALIZED (SELECT row_number() OVER (ORDER BY t)
+        |    AS rn, t, n_risk, d_ev
+        |  FROM risk WHERE d_ev > 0),
+        |steps AS (
+        |  SELECT rn, t, n_risk, d_ev,
+        |    1000000 * (n_risk - d_ev) // n_risk AS s
+        |  FROM kmr WHERE rn = 1
+        |  UNION ALL
+        |  SELECT k.rn, k.t, k.n_risk, k.d_ev,
+        |    st.s * (k.n_risk - k.d_ev) // k.n_risk
+        |  FROM steps st JOIN kmr k ON k.rn = st.rn + 1)
+        |SELECT t AS t_days, n_risk, d_ev AS d_events,
+        |  CAST(s AS BIGINT) AS survival_ppm
+        |FROM steps""".stripMargin),
+    // Shapley over the 16-subset lattice: exact integer 24·φ via the
+    // 6/2/2/6 coefficients, one truncating ppm share division
+    q("analytics_shapley", Analytics.shapleyAttribution(_, _),
+      """WITH fp AS MATERIALIZED (SELECT user_id, min(ts) AS pay_ts
+        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
+        |tch AS (SELECT e.user_id,
+        |    bit_or(CASE e.event_type WHEN 'view' THEN 1
+        |      WHEN 'click' THEN 2 WHEN 'signup' THEN 4
+        |      WHEN 'error' THEN 8 END) AS m
+        |  FROM events e JOIN fp USING (user_id)
+        |  WHERE e.ts < fp.pay_ts
+        |    AND e.event_type IN ('view', 'click', 'signup', 'error')
+        |  GROUP BY 1),
+        |masks AS MATERIALIZED (SELECT COALESCE(t.m, 0) AS m,
+        |    COUNT(*) AS cnt
+        |  FROM fp LEFT JOIN tch t USING (user_id) GROUP BY 1),
+        |subsets AS (SELECT unnest(range(0, 16)) AS S),
+        |v AS MATERIALIZED (SELECT S,
+        |    CAST(COALESCE(SUM(cnt), 0) AS BIGINT) AS v
+        |  FROM subsets LEFT JOIN masks ON (m & S) = m GROUP BY 1),
+        |ch AS (SELECT * FROM (VALUES ('view', 1), ('click', 2),
+        |    ('signup', 4), ('error', 8)) AS t(channel, cb)),
+        |phi AS (SELECT channel,
+        |    CAST(SUM((CASE bit_count(v1.S) WHEN 0 THEN 6 WHEN 1 THEN 2
+        |      WHEN 2 THEN 2 ELSE 6 END) * (v2.v - v1.v)) AS BIGINT)
+        |      AS phi24
+        |  FROM ch JOIN v v1 ON (v1.S & cb) = 0
+        |  JOIN v v2 ON v2.S = (v1.S | cb)
+        |  GROUP BY 1),
+        |tot AS (SELECT CAST(SUM(phi24) AS BIGINT) AS tot FROM phi)
+        |SELECT channel, phi24,
+        |  phi24 * 1000000 // GREATEST(tot, 1) AS share_ppm
+        |FROM phi CROSS JOIN tot""".stripMargin),
+    // time-decay attribution: day-grain half-life exponent, power of
+    // two via shift, one truncating per-user ppm division
+    q("analytics_attribution_decay", Analytics.attributionTimeDecay(_, _),
+      """WITH fp AS MATERIALIZED (SELECT user_id, min(ts) AS pay_ts
+        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
+        |t AS (SELECT e.user_id, e.event_type AS channel,
+        |    1000000 // (CAST(1 AS BIGINT) << CAST(least(
+        |      date_diff('day', CAST(e.ts AS DATE),
+        |        CAST(fp.pay_ts AS DATE)) // 7, 30) AS INT)) AS w
+        |  FROM events e JOIN fp USING (user_id)
+        |  WHERE e.ts < fp.pay_ts
+        |    AND e.event_type IN ('view', 'click', 'signup', 'error')),
+        |pc AS (SELECT user_id, channel, CAST(SUM(w) AS BIGINT) AS wc,
+        |    COUNT(*) AS n_touch
+        |  FROM t GROUP BY 1, 2),
+        |pu AS (SELECT user_id, CAST(SUM(wc) AS BIGINT) AS wall
+        |  FROM pc GROUP BY 1)
+        |SELECT channel,
+        |  CAST(SUM(wc * 1000000 // wall) AS BIGINT) AS credit_ppm_total,
+        |  CAST(SUM(n_touch) AS BIGINT) AS n_touches,
+        |  CAST(COUNT(*) AS BIGINT) AS n_users
+        |FROM pc JOIN pu USING (user_id)
+        |GROUP BY 1""".stripMargin),
+    // perfect-order: the all-lines-ok conjunction at order grain,
+    // month rollup, truncating ppm
+    q("analytics_perfect_order", Analytics.perfectOrderRate(_, _),
+      """WITH po AS (SELECT o_orderkey,
+        |    strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS ym,
+        |    MIN(CASE WHEN date_diff('day', CAST(o_orderdate AS DATE),
+        |        CAST(l_shipdate AS DATE)) <= 30
+        |      AND l_returnflag <> 'R' THEN 1 ELSE 0 END) AS ok
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |  GROUP BY 1, 2)
+        |SELECT ym, CAST(COUNT(*) AS BIGINT) AS n_orders,
+        |  CAST(SUM(ok) AS BIGINT) AS n_perfect,
+        |  CAST(SUM(ok) * 1000000 // COUNT(*) AS BIGINT) AS perfect_ppm
+        |FROM po GROUP BY 1""".stripMargin),
+    // 13-gram contamination: md5-16hex gram keys are engine-identical;
+    // train side dedups before the equi-join
+    q("pipeline_ngram_contamination", TextAnalysis.ngramContamination(_, _),
+      """WITH docs AS MATERIALIZED (SELECT doc_id,
+        |    list_filter(string_split(lower(text), ' '), x -> x <> '')
+        |      AS w
+        |  FROM documents),
+        |grams AS MATERIALIZED (SELECT doc_id,
+        |    unnest([substring(md5(array_to_string(w[i:i+12], ' ')), 1, 16)
+        |            for i in range(1, greatest(len(w) - 12, 0) + 1)]) AS g
+        |  FROM docs),
+        |tg AS MATERIALIZED (SELECT DISTINCT g FROM grams
+        |  WHERE doc_id % 10 < 8),
+        |eg AS (SELECT DISTINCT doc_id, g FROM grams
+        |  WHERE doc_id % 10 >= 8)
+        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
+        |  CAST(COUNT(t.g) AS BIGINT) AS n_hit,
+        |  COUNT(t.g) * 1000000 // COUNT(*) AS contamination_ppm
+        |FROM eg LEFT JOIN tg t ON eg.g = t.g
+        |GROUP BY 1""".stripMargin),
     // backlog aging at the horizon−365d snapshot: clamped spans,
     // global bounded-domain quantiles (quantile_cont contract)
-    "analytics_backlog_age" ->
+    q("analytics_backlog_age", Analytics.backlogAge(_, _),
       """WITH cl AS (SELECT l_orderkey AS ok,
         |    MAX(CAST(l_shipdate AS DATE)) AS close_d
         |  FROM lineitem GROUP BY 1),
@@ -7978,11 +7544,11 @@ object SparkEntry {
         |SELECT round(quantile_cont(age_days, 0.50), 6) AS p50,
         |  round(quantile_cont(age_days, 0.90), 6) AS p90,
         |  round(quantile_cont(age_days, 0.99), 6) AS p99
-        |FROM ages""".stripMargin,
+        |FROM ages""".stripMargin),
     // chi-square GOF vs DOW uniformity: cleared denominators, one
     // final truncating DIV (milli), df=6 critical value 12.592
     // cross-multiplied
-    "dq_chi2_dow" ->
+    q("dq_chi2_dow", Quality.chi2Dow(_, _),
       """WITH dow AS (SELECT dayofweek(CAST(o_orderdate AS DATE)) + 1
         |    AS dw, COUNT(*) AS o
         |  FROM orders GROUP BY 1),
@@ -7998,10 +7564,10 @@ object SparkEntry {
         | CAST(ssq * 1000 // (7 * n) AS BIGINT) AS chi2_milli,
         | CAST(CASE WHEN ssq * 1000 > CAST(12592 AS HUGEINT)
         |   * 7 * n THEN 1 ELSE 0 END AS BIGINT) AS nonuniform_flag
-        |FROM sq""".stripMargin,
+        |FROM sq""".stripMargin),
     // spend quartiles per half-span, full-outer matrix; seg 0 =
     // absent that half
-    "analytics_rfm_migration" ->
+    q("analytics_rfm_migration", Analytics.rfmMigration(_, _),
       """WITH o AS (SELECT o_custkey, CAST(o_orderdate AS DATE) AS od,
         |  CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
         |    AS cents FROM orders),
@@ -8019,10 +7585,10 @@ object SparkEntry {
         |  COALESCE(seg_after, 0) AS seg_after,
         |  COUNT(*) AS n_customers
         |FROM h1 FULL OUTER JOIN h2 USING (o_custkey)
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
     // interval-containment serving against the windowed SCD2 dim;
     // identical answers to the as-of family by construction
-    "dim_scd2_serve" ->
+    q("dim_scd2_serve", Temporal.scd2Serve(_, _),
       """WITH v AS (SELECT user_id, epoch_us(ts) AS us,
         |    MAX(value) AS last_view_value
         |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
@@ -8033,9 +7599,9 @@ object SparkEntry {
         |  FROM events WHERE event_type = 'purchase')
         |SELECT p.event_id, p.user_id, p.us, dim.last_view_value
         |FROM p LEFT JOIN dim ON p.user_id = dim.user_id
-        |  AND p.us >= dim.vf AND (dim.vt IS NULL OR p.us < dim.vt)""".stripMargin,
+        |  AND p.us >= dim.vf AND (dim.vt IS NULL OR p.us < dim.vt)""".stripMargin),
     // tri/C(deg,2) per node over the co-purchase graph; deg>=2 only
-    "graph_clustering_coeff" ->
+    q("graph_clustering_coeff", Graph.clusteringCoeff(_, _),
       """WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
         |e AS (SELECT DISTINCT a.pk AS s, b.pk AS t
         |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
@@ -8053,10 +7619,10 @@ object SparkEntry {
         |  COALESCE(tc.tri_ct, 0) * 2000000 // (deg.deg * (deg.deg - 1))
         |    AS local_cc_ppm
         |FROM deg LEFT JOIN tc ON deg.v = tc.part_id
-        |WHERE deg.deg >= 2""".stripMargin,
+        |WHERE deg.deg >= 2""".stripMargin),
     // deterministic (i, i+497) pair sample; cosine doubles are
     // bit-identical (same sequential fold), so floor-bucketing grades
-    "sim_cos_histogram" ->
+    q("sim_cos_histogram", Similarity.cosHistogram(_, _),
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
@@ -8066,9 +7632,9 @@ object SparkEntry {
         |      FROM n a JOIN n b ON b.vec_id = a.vec_id + 497)
         |SELECT CAST(floor(cos * 10) AS BIGINT) AS bucket,
         |  COUNT(*) AS n_pairs
-        |FROM p GROUP BY 1""".stripMargin,
+        |FROM p GROUP BY 1""".stripMargin),
     // cumulative survivors of the clean-corpus predicates, one scan
-    "pipeline_filter_funnel" ->
+    q("pipeline_filter_funnel", TextAnalysis.filterFunnel(_, _),
       """WITH toks AS (SELECT doc_id, text,
         |  list_filter(string_split(lower(text), ' '), x -> x <> '') AS tk
         | FROM documents),
@@ -8097,9 +7663,9 @@ object SparkEntry {
         |UNION ALL SELECT 2, 'length', s_len,
         |  s_len * 1000000 // total FROM a
         |UNION ALL SELECT 3, 'quality', s_quality,
-        |  s_quality * 1000000 // total FROM a""".stripMargin,
+        |  s_quality * 1000000 // total FROM a""".stripMargin),
     // each shingle credits only its earliest doc_id
-    "text_novelty" ->
+    q("text_novelty", TextAnalysis.noveltyScore(_, _),
       """WITH t AS (SELECT doc_id, lower(text) AS lt FROM documents),
         |sh AS (SELECT DISTINCT doc_id, s FROM (
         |  SELECT doc_id, unnest([substr(lt, i, 12)
@@ -8111,9 +7677,9 @@ object SparkEntry {
         |    AS BIGINT) AS novel_shingles,
         |  CAST(COUNT(*) FILTER (WHERE f.first_doc = sh.doc_id) * 1000000
         |    // COUNT(*) AS BIGINT) AS novelty_ppm
-        |FROM sh JOIN f ON sh.s = f.s GROUP BY 1""".stripMargin,
+        |FROM sh JOIN f ON sh.s = f.s GROUP BY 1""".stripMargin),
     // maximal [aeiouy]+ runs mean the same thing to RE2 and the JVM
-    "text_readability" ->
+    q("text_readability", TextAnalysis.readability(_, _),
       """SELECT doc_id,
         |  CAST(len(list_filter(string_split(lower(text), ' '),
         |    x -> x <> '')) AS BIGINT) AS n_words,
@@ -8125,10 +7691,10 @@ object SparkEntry {
         |      x -> x <> '')) AS BIGINT) AS syll_per_word_ppm
         |FROM documents
         |WHERE len(list_filter(string_split(lower(text), ' '),
-        |  x -> x <> '')) > 0""".stripMargin,
+        |  x -> x <> '')) > 0""".stripMargin),
     // (rk-1)*1e6 // (n-1) over the unique (spend, custkey) order ==
     // SQL percent_rank in exact ppm
-    "analytics_percent_rank" ->
+    q("analytics_percent_rank", Analytics.percentRankSpend(_, _),
       """WITH spend AS (SELECT o_custkey AS cust_id,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
         |    AS BIGINT)) AS BIGINT) AS cents
@@ -8139,10 +7705,10 @@ object SparkEntry {
         |  COUNT(*) OVER () AS n FROM spend)
         |SELECT cust_id, cents, rk,
         |  (rk - 1) * 1000000 // (n - 1) AS prank_ppm
-        |FROM r""".stripMargin,
+        |FROM r""".stripMargin),
     // zero-violation rules still emit a row: checked-and-holds IS
     // the audit product
-    "dq_cross_field" ->
+    q("dq_cross_field", Quality.crossFieldAudit(_, _),
       """WITH lo AS (SELECT CAST(l_shipdate AS DATE) AS sd,
         |    CAST(o_orderdate AS DATE) AS od
         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -8163,10 +7729,10 @@ object SparkEntry {
         | UNION ALL SELECT 'nonpositive_totalprice', n, v FROM o)
         |SELECT rule, n_checked, n_violations,
         |  n_violations * 1000000 // n_checked AS viol_ppm
-        |FROM u""".stripMargin,
+        |FROM u""".stripMargin),
     // consecutive-chunk energy deltas; integer per-sample means so
     // the cut flags hash-grade
-    "mm_scene_cut" ->
+    q("mm_scene_cut", Multimodal.sceneCuts(_, _),
       """WITH en AS (
         | SELECT doc_id, CAST(u.i AS BIGINT) AS chunk_idx,
         |  CAST(list_sum(list_transform(smp, v ->
@@ -8189,9 +7755,9 @@ object SparkEntry {
         |    AS prev FROM en)
         |SELECT doc_id, chunk_idx, e_ps, e_ps - prev AS delta,
         |  abs(e_ps - prev) > 400 AS is_cut
-        |FROM lagged WHERE prev IS NOT NULL""".stripMargin,
+        |FROM lagged WHERE prev IS NOT NULL""".stripMargin),
     // ratio over the SUMS, not an average of per-doc ratios
-    "text_fertility" ->
+    q("text_fertility", TextAnalysis.fertility(_, _),
       """SELECT lang, COUNT(*) AS n_docs,
         |  CAST(SUM(len(list_filter(string_split(lower(text), ' '),
         |    x -> x <> ''))) AS BIGINT) AS total_words,
@@ -8201,10 +7767,10 @@ object SparkEntry {
         |    '[^a-z0-9]+'), x -> x <> ''))) AS BIGINT) * 1000000
         |    // CAST(SUM(len(list_filter(string_split(lower(text), ' '),
         |    x -> x <> ''))) AS BIGINT) AS fertility_ppm
-        |FROM documents GROUP BY 1""".stripMargin,
+        |FROM documents GROUP BY 1""".stripMargin),
     // char-class counts via length-minus-stripped: no regex dialect
     // hazard; DuckDB needs the 'g' flag Spark applies by default
-    "text_code_signals" ->
+    q("text_code_signals", TextAnalysis.codeSignals(_, _),
       """SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
         |  CAST(length(text) - length(regexp_replace(text,
         |    '[{}();=\[\]<>]', '', 'g')) AS BIGINT) * 1000000
@@ -8215,8 +7781,8 @@ object SparkEntry {
         |  CAST(length(text) - length(regexp_replace(text,
         |    '[|\\]', '', 'g')) AS BIGINT) * 1000000
         |    // CAST(length(text) AS BIGINT) AS line_ppm
-        |FROM documents WHERE length(text) > 0""".stripMargin,
-    "analytics_mix_trend" ->
+        |FROM documents WHERE length(text) > 0""".stripMargin),
+    q("analytics_mix_trend", Analytics.mixTrend(_, _),
       """WITH cells AS (SELECT strftime(CAST(o_orderdate AS DATE),
         |    '%Y-%m') AS ym, o_orderpriority,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -8226,8 +7792,8 @@ object SparkEntry {
         |      FROM cells GROUP BY 1)
         |SELECT cells.ym, o_orderpriority, cents,
         |  cents * 1000000 // tot AS share_ppm
-        |FROM cells JOIN t ON cells.ym = t.ym""".stripMargin,
-    "analytics_top_movers" ->
+        |FROM cells JOIN t ON cells.ym = t.ym""".stripMargin),
+    q("analytics_top_movers", Analytics.topMovers(_, _),
       """WITH rev AS (
         | SELECT CAST(year(CAST(o_orderdate AS DATE)) * 12
         |     + month(CAST(o_orderdate AS DATE)) AS BIGINT) AS mi,
@@ -8247,10 +7813,10 @@ object SparkEntry {
         |SELECT mi, part_id, prev_rk, rk, rank_delta FROM (
         |  SELECT *, row_number() OVER (ORDER BY abs(rank_delta) DESC,
         |    mi, part_id) AS rn FROM mv)
-        |WHERE rn <= 20""".stripMargin,
+        |WHERE rn <= 20""".stripMargin),
     // CK retention(): later conditions gated on the first; day
     // arrays bounded by the horizon
-    "analytics_retention_flags" ->
+    q("analytics_retention_flags", Analytics.retentionFlags(_, _),
       """WITH u AS (
         | SELECT user_id,
         |  list(DISTINCT CAST(ts AS DATE) - DATE '1995-01-01') AS ds
@@ -8271,9 +7837,9 @@ object SparkEntry {
         | CAST(SUM(f3) AS BIGINT) * 1000000 // COUNT(*) AS r3_ppm,
         | CAST(SUM(f7) AS BIGINT) * 1000000 // COUNT(*) AS r7_ppm,
         | CAST(SUM(f14) AS BIGINT) * 1000000 // COUNT(*) AS r14_ppm
-        |FROM g""".stripMargin,
+        |FROM g""".stripMargin),
     // argMax with ties pinned to the smaller user_id
-    "analytics_argmax_daily" ->
+    q("analytics_argmax_daily", Analytics.argMaxDaily(_, _),
       """SELECT day, top_user, top_value_cents FROM (
         | SELECT CAST(ts AS DATE) AS day, user_id AS top_user,
         |  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
@@ -8282,9 +7848,9 @@ object SparkEntry {
         |    ORDER BY CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
         |      DESC, user_id) AS rn
         | FROM events) t
-        |WHERE rn = 1""".stripMargin,
+        |WHERE rn = 1""".stripMargin),
     // the dup number provably agrees with dedup_exact's fingerprint
-    "pipeline_dataset_card" ->
+    q("pipeline_dataset_card", TextAnalysis.datasetCard(_, _),
       """WITH b AS (SELECT
         |  CAST(len(list_filter(string_split(lower(text), ' '),
         |    x -> x <> '')) AS BIGINT) AS nt,
@@ -8299,9 +7865,9 @@ object SparkEntry {
         | COUNT(*) - CAST(COUNT(DISTINCT fp) AS BIGINT) AS dup_docs,
         | (COUNT(*) - CAST(COUNT(DISTINCT fp) AS BIGINT)) * 1000000
         |   // COUNT(*) AS dup_ppm
-        |FROM b""".stripMargin,
+        |FROM b""".stripMargin),
     // nearest |Δt| view per purchase, ties backward then earlier
-    "temporal_asof_nearest" ->
+    q("temporal_asof_nearest", Temporal.nearestViewToPurchase(_, _),
       """WITH v AS (SELECT user_id, epoch_us(ts) AS vus,
         |    MAX(value) AS lv
         |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
@@ -8315,10 +7881,10 @@ object SparkEntry {
         |SELECT p.event_id, p.user_id, p.us,
         |  cand.lv AS nearest_view_value
         |FROM p LEFT JOIN cand
-        |  ON p.event_id = cand.event_id AND cand.rn = 1""".stripMargin,
+        |  ON p.event_id = cand.event_id AND cand.rn = 1""".stripMargin),
     // month-banded interval overlap: equi-join on the band +
     // residual closed-vs-half-open predicate
-    "temporal_overlap_join" ->
+    q("temporal_overlap_join", Temporal.promoOverlap(_, _),
       """WITH act AS (SELECT user_id, CAST(ts AS DATE) AS day,
         |    MIN(epoch_us(ts)) AS a_start, MAX(epoch_us(ts)) AS a_end
         |  FROM events GROUP BY 1, 2),
@@ -8335,10 +7901,10 @@ object SparkEntry {
         |  COUNT(*) AS n_user_days
         |FROM a2 JOIN pr ON a2.mi = pr.mi
         |WHERE a_start < p_end AND a_end >= p_start
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // positives = the cached near-dup pair set; negatives = the
     // deterministic (i, i+137) sample minus accidental positives
-    "pipeline_contrastive_pairs" ->
+    q("pipeline_contrastive_pairs", Dedup.contrastivePairs(_, _),
       """WITH sh AS (
         | SELECT DISTINCT doc_id, s FROM (
         |  SELECT doc_id, unnest([substr(lower(text), i, 12)
@@ -8358,10 +7924,10 @@ object SparkEntry {
         |  ANTI JOIN pos ON pos.id_a = a.doc_id AND pos.id_b = b.doc_id)
         |SELECT id_a, id_b, CAST(1 AS BIGINT) AS label FROM pos
         |UNION ALL
-        |SELECT id_a, id_b, CAST(0 AS BIGINT) AS label FROM neg""".stripMargin,
+        |SELECT id_a, id_b, CAST(0 AS BIGINT) AS label FROM neg""".stripMargin),
     // majority label of the 5 nearest non-query neighbors;
     // deterministic (votes desc, label asc) vote
-    "sim_knn_classify" ->
+    q("sim_knn_classify", Similarity.knnClassify(_, _),
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
         |    label FROM embeddings),
         |n AS (SELECT vec_id, v, label,
@@ -8381,9 +7947,9 @@ object SparkEntry {
         |SELECT query_id, CAST(label AS BIGINT) AS pred_label, votes
         |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
         |  ORDER BY votes DESC, label) AS vr FROM votes)
-        |WHERE vr = 1""".stripMargin,
+        |WHERE vr = 1""".stripMargin),
     // gaps-and-islands: day - row_number constant within a run
-    "analytics_streaks" ->
+    q("analytics_streaks", Analytics.activityStreaks(_, _),
       """WITH days AS (SELECT DISTINCT user_id,
         |    CAST(CAST(ts AS DATE) - DATE '1995-01-01' AS BIGINT) AS dy
         |  FROM events),
@@ -8394,9 +7960,9 @@ object SparkEntry {
         |  FROM g GROUP BY 1, 2)
         |SELECT user_id, CAST(MAX(len) AS BIGINT) AS longest_streak,
         |  COUNT(*) AS n_streaks, CAST(SUM(len) AS BIGINT) AS active_days
-        |FROM runs GROUP BY 1""".stripMargin,
+        |FROM runs GROUP BY 1""".stripMargin),
     // bipartite projection on the part pivot; integer Jaccard
-    "graph_supplier_overlap" ->
+    q("graph_supplier_overlap", Graph.supplierOverlap(_, _),
       """WITH ps AS (SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk
         |  FROM lineitem),
         |deg AS (SELECT sk, COUNT(*) AS n_parts FROM ps GROUP BY 1),
@@ -8407,9 +7973,9 @@ object SparkEntry {
         |  shared_parts * 1000000
         |    // (da.n_parts + db.n_parts - shared_parts) AS jaccard_ppm
         |FROM sh JOIN deg da ON da.sk = sk_a
-        |        JOIN deg db ON db.sk = sk_b""".stripMargin,
+        |        JOIN deg db ON db.sk = sk_b""".stripMargin),
     // first_value over the same at-or-before frame as last-touch
-    "analytics_attribution_first" ->
+    q("analytics_attribution_first", Analytics.firstTouchAttribution(_, _),
       """WITH u AS (
         | SELECT user_id, ts, event_id, event_type AS touch_type,
         |  0 AS is_p
@@ -8425,9 +7991,9 @@ object SparkEntry {
         | FROM u)
         |SELECT coalesce(first_touch, 'none') AS touch_type,
         | COUNT(*) AS purchases
-        |FROM w WHERE is_p = 1 GROUP BY 1""".stripMargin,
+        |FROM w WHERE is_p = 1 GROUP BY 1""".stripMargin),
     // 64-token windows, stride 32; short docs yield one partial
-    "pipeline_chunk_windows" ->
+    q("pipeline_chunk_windows", TextAnalysis.chunkWindows(_, _),
       """WITH t AS (SELECT doc_id,
         |  list_filter(string_split(lower(text), ' '), x -> x <> '')
         |    AS toks FROM documents),
@@ -8439,10 +8005,10 @@ object SparkEntry {
         |SELECT doc_id, CAST(u.i AS BIGINT) AS chunk_idx,
         |  CAST(len(u.c) AS BIGINT) AS n_tokens,
         |  md5(array_to_string(u.c, ' ')) AS chunk_md5
-        |FROM c""".stripMargin,
+        |FROM c""".stripMargin),
     // 8-token windows at stride 4, digits normalized: the phrase
     // grain exact dedup misses and doc-level near-dup under-reports
-    "text_template_groups" ->
+    q("text_template_groups", TextAnalysis.templateGroups(_, _),
       """WITH t AS (SELECT doc_id,
         |  list_filter(string_split(lower(text), ' '), x -> x <> '')
         |    AS toks FROM documents),
@@ -8456,9 +8022,9 @@ object SparkEntry {
         |  COUNT(*) AS n_occurrences,
         |  CAST(MIN(doc_id) AS BIGINT) AS exemplar
         |FROM g GROUP BY 1
-        |HAVING COUNT(DISTINCT doc_id) > 1""".stripMargin,
+        |HAVING COUNT(DISTINCT doc_id) > 1""".stripMargin),
     // per-part top-3 neighbors by basket-Jaccard (item-item CF)
-    "graph_related_items" ->
+    q("graph_related_items", Graph.relatedItems(_, _),
       """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
         |  FROM lineitem),
         |p AS (SELECT a.pk AS s, b.pk AS t, COUNT(*) AS n_st
@@ -8474,9 +8040,9 @@ object SparkEntry {
         |  SELECT *, CAST(row_number() OVER (PARTITION BY part_id
         |    ORDER BY jac_ppm DESC, related_id) AS BIGINT) AS rk
         |  FROM und)
-        |WHERE rk <= 3""".stripMargin,
+        |WHERE rk <= 3""".stripMargin),
     // Zipf coverage: share of token occurrences in the top-k types
-    "text_vocab_coverage" ->
+    q("text_vocab_coverage", TextAnalysis.vocabCoverage(_, _),
       """WITH tf AS (SELECT tok, COUNT(*) AS ct FROM (
         |  SELECT unnest(list_filter(string_split(lower(text), ' '),
         |    x -> x <> '')) AS tok FROM documents) t GROUP BY 1),
@@ -8490,10 +8056,10 @@ object SparkEntry {
         |    // CAST(SUM(ct) AS BIGINT) AS coverage_1000_ppm,
         |  CAST(SUM(ct) FILTER (WHERE rk <= 5000) AS BIGINT) * 1000000
         |    // CAST(SUM(ct) AS BIGINT) AS coverage_5000_ppm
-        |FROM rk""".stripMargin,
+        |FROM rk""".stripMargin),
     // value-per-active-day inside vs outside the monthly promo
     // windows; floor-div averages are the graded integers
-    "analytics_promo_lift" ->
+    q("analytics_promo_lift", Analytics.promoLift(_, _),
       """WITH daily AS (SELECT CAST(ts AS DATE) AS day,
         |  CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
         |    AS BIGINT) AS cents
@@ -8518,14 +8084,14 @@ object SparkEntry {
         |  base_cents // base_days AS base_per_day,
         |  (promo_cents // promo_days) * 1000000
         |    // (base_cents // base_days) AS lift_ppm
-        |FROM a""".stripMargin,
+        |FROM a""".stripMargin),
     // ppm-integer cross-multiplied thresholds. Every CTE is
     // MATERIALIZED and the pair counts collapse to ONE FILTER scan:
     // the original 7 scalar subqueries each re-evaluated the
     // unmaterialized pair join at sf0.1 (56M co-occurrence rows × 7
     // + concurrent spill = a >80 GB temp blow-up); the above-floor
     // subset the distinct-doc passes walk is tiny by construction
-    "dedup_threshold_sweep" ->
+    q("dedup_threshold_sweep", Dedup.thresholdSweep(_, _),
       """WITH sh AS MATERIALIZED (
         | SELECT DISTINCT doc_id, s FROM (
         |  SELECT doc_id, unnest([substr(lower(text), i, 12)
@@ -8564,9 +8130,9 @@ object SparkEntry {
         |   SELECT id_a AS doc_id FROM hi WHERE num >= den * 700000
         |   UNION ALL SELECT id_b FROM hi WHERE num >= den * 700000))
         |   AS docs_700000
-        |FROM p""".stripMargin,
+        |FROM p""".stripMargin),
     // closure clusters rolled to a size histogram
-    "dedup_cluster_sizes" ->
+    q("dedup_cluster_sizes", Dedup.clusterSizes(_, _),
       """WITH RECURSIVE
         |sh AS (
         | SELECT DISTINCT doc_id, s FROM (
@@ -8592,8 +8158,8 @@ object SparkEntry {
         |cs AS (SELECT cluster_id, COUNT(*) AS cluster_size
         |       FROM cl GROUP BY 1)
         |SELECT cluster_size, COUNT(*) AS n_clusters
-        |FROM cs GROUP BY 1""".stripMargin,
-    "analytics_dow_hour_heatmap" ->
+        |FROM cs GROUP BY 1""".stripMargin),
+    q("analytics_dow_hour_heatmap", Analytics.dowHourHeatmap(_, _),
       """WITH cells AS (SELECT
         |  CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
         |  CAST(hour(ts) AS BIGINT) AS hr,
@@ -8604,10 +8170,10 @@ object SparkEntry {
         |t AS (SELECT CAST(SUM(n_events) AS BIGINT) AS total FROM cells)
         |SELECT dow, hr, n_events, cents,
         |  n_events * 1000000 // total AS share_ppm
-        |FROM cells CROSS JOIN t""".stripMargin,
+        |FROM cells CROSS JOIN t""".stripMargin),
     // clean -> mix (rates from CLEANED counts) -> greedy pack,
     // assembled from the three stages' own verified oracle pieces
-    "pipeline_e2e_stats" ->
+    q("pipeline_e2e_stats", TextAnalysis.e2eStats(_, _),
       """WITH RECURSIVE
         |toks AS (SELECT doc_id, lang, source, text,
         |  list_filter(string_split(lower(text), ' '), x -> x <> '') AS tk
@@ -8651,9 +8217,9 @@ object SparkEntry {
         |SELECT source, COUNT(*) AS n_docs,
         | CAST(SUM(nt) AS BIGINT) AS total_tokens,
         | CAST(MAX(bin) + 1 AS BIGINT) AS n_bins
-        |FROM p GROUP BY 1""".stripMargin,
+        |FROM p GROUP BY 1""".stripMargin),
     // majority language per source with share ppm
-    "text_source_purity" ->
+    q("text_source_purity", TextAnalysis.sourcePurity(_, _),
       """WITH cells AS (SELECT source, lang, COUNT(*) AS ct
         |  FROM documents GROUP BY 1, 2),
         |tot AS (SELECT source, CAST(SUM(ct) AS BIGINT) AS n_docs
@@ -8664,9 +8230,9 @@ object SparkEntry {
         |    row_number() OVER (PARTITION BY cells.source
         |      ORDER BY cells.ct DESC, cells.lang) AS rk
         |  FROM cells JOIN tot ON cells.source = tot.source) x
-        |WHERE rk = 1""".stripMargin,
+        |WHERE rk = 1""".stripMargin),
     // first view at-or-after each purchase (>= semantics)
-    "temporal_asof_forward" ->
+    q("temporal_asof_forward", Temporal.nextViewAfterPurchase(_, _),
       """WITH v AS (SELECT user_id, epoch_us(ts) AS vus,
         |    MAX(value) AS lv
         |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
@@ -8679,9 +8245,9 @@ object SparkEntry {
         |SELECT p.event_id, p.user_id, p.us,
         |  cand.lv AS next_view_value
         |FROM p LEFT JOIN cand
-        |  ON p.event_id = cand.event_id AND cand.rn = 1""".stripMargin,
+        |  ON p.event_id = cand.event_id AND cand.rn = 1""".stripMargin),
     // backward as-of nulled when the match is older than 1 hour
-    "temporal_asof_tolerance" ->
+    q("temporal_asof_tolerance", Temporal.staleBoundedViewBeforePurchase(_, _),
       """WITH v AS (SELECT user_id, epoch_us(ts) AS vus,
         |    MAX(value) AS lv
         |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
@@ -8696,9 +8262,9 @@ object SparkEntry {
         |    AND p.us - cand.vus <= 3600000000 THEN cand.lv END
         |    AS fresh_view_value
         |FROM p LEFT JOIN cand
-        |  ON p.event_id = cand.event_id AND cand.rn = 1""".stripMargin,
+        |  ON p.event_id = cand.event_id AND cand.rn = 1""".stripMargin),
     // share of line items shipped within 30/60/90 days per priority
-    "analytics_sla_attainment" ->
+    q("analytics_sla_attainment", Analytics.slaAttainment(_, _),
       """WITH lo AS (SELECT o_orderpriority,
         |    CAST(l_shipdate AS DATE) - CAST(o_orderdate AS DATE)
         |      AS delay
@@ -8716,12 +8282,13 @@ object SparkEntry {
         |    // COUNT(*) AS sla60_ppm,
         |  CAST(COUNT(*) FILTER (WHERE delay <= 90) AS BIGINT) * 1000000
         |    // COUNT(*) AS sla90_ppm
-        |FROM lo GROUP BY 1""".stripMargin,
+        |FROM lo GROUP BY 1""".stripMargin),
     // the k-means replay with the label rollup spliced on
     // iters=2: the composition proof at half the oracle replay cost
-    "sim_cluster_purity" -> Similarity.kmeansPurityOracleSql(8, 2),
+    q("sim_cluster_purity", Similarity.clusterPurity(_, _),
+      Similarity.kmeansPurityOracleSql(8, 2)),
     // lexical diversity per source
-    "text_ttr" ->
+    q("text_ttr", TextAnalysis.typeTokenRatio(_, _),
       """SELECT source, COUNT(*) AS n_tokens,
         |  CAST(COUNT(DISTINCT tok) AS BIGINT) AS n_types,
         |  CAST(COUNT(DISTINCT tok) AS BIGINT) * 1000000
@@ -8729,8 +8296,8 @@ object SparkEntry {
         |FROM (SELECT source, unnest(list_filter(
         |    string_split(lower(text), ' '), x -> x <> '')) AS tok
         |  FROM documents) t
-        |GROUP BY 1""".stripMargin,
-    "analytics_kpi_summary" ->
+        |GROUP BY 1""".stripMargin),
+    q("analytics_kpi_summary", Analytics.kpiSummary(_, _),
       """WITH o AS (SELECT
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
         |    AS BIGINT)) AS BIGINT) AS gmv_cents,
@@ -8746,6 +8313,6 @@ object SparkEntry {
         |  gmv_cents // n_orders AS aov_cents,
         |  uv, purchase_uv,
         |  purchase_uv * 1000000 // uv AS conversion_ppm
-        |FROM o CROSS JOIN e""".stripMargin,
-  )
+        |FROM o CROSS JOIN e""".stripMargin),
+  ))
 }

@@ -1,7 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each selected SparkEntry query's result →
+  * parquet, plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   /** Best-effort HEAD commit — provenance for the dump (r7's one red
     * was two driver hash-fails nobody could tie to a commit or SF
@@ -36,27 +36,27 @@ object Verify {
       .format(java.time.Instant.now()
         .truncatedTo(java.time.temporal.ChronoUnit.SECONDS))
 
+  /** `Verify <sfDir> <outDir> [query...]`: dumps the named queries
+    * (all, when none are named) and their oracle SQL.
+    */
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val Array(sfDir, outDir, names @ _*) = args
+    val picked = SparkEntry.select(names)
     val started = utcNow()
     val spark = GraftSession.local(appName = "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // iteration aid: SPARK_GRAFT_VERIFY_ONLY=<regex> dumps a subset
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.r)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
-      .foreach { case (name, fn) =>
+    picked.foreach { q =>
       // repartition(1), NOT coalesce(1): coalesce pulls the whole
       // query computation onto one thread; repartition keeps the
       // compute parallel and single-threads only the file write
-      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try q.build(spark, sfDir).repartition(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        System.err.println(s"[verify] $name failed: $msg")
-        failures += name -> msg
+        System.err.println(s"[verify] ${q.name} failed: $msg")
+        failures += q.name -> msg
         // a failed query must not VANISH from the artifact (r5: 13
         // broken queries left CORRECTNESS with 145 all-green keys —
         // breakage read as a clean round). Overwrite any partial/stale
@@ -65,38 +65,35 @@ object Verify {
         // text is visible in the dumped parquet itself.
         import spark.implicits._
         try Seq(msg.take(4000)).toDF("err").repartition(1)
-          .write.mode("overwrite").parquet(s"$outDir/$name")
+          .write.mode("overwrite").parquet(s"$outDir/${q.name}")
         catch { case e2: Throwable =>
-          System.err.println(s"[verify] $name err-row write failed: ${e2.getMessage}")
+          System.err.println(s"[verify] ${q.name} err-row write failed: ${e2.getMessage}")
         }
       }
+      SparkEntry.release(spark)
     }
-    val json = SparkEntry.oracleSql
-      .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
-      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def jobj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${jstr(k)}: $v" }.mkString("{", ",", "}")
+    val oracles = picked.flatMap(q => q.oracle.map(q.name -> jstr(_)))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jobj(oracles))
     // structural failure record beside the dumps (machine-readable
     // even if a reader ignores the per-query err frames)
-    val failJson = failures
-      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/verify_errors.json"), failJson)
+    Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
+      jobj(failures.map { case (k, v) => k -> jstr(v) }))
     // self-identifying dump: which commit, which SF, when, how many
-    // queries — the fields a mismatch adjudication needs in one read
-    val nQ = SparkEntry.queries.count { case (n, _) =>
-      only.forall(_.findFirstIn(n).isDefined) }
-    val nO = SparkEntry.oracleSql.count { case (n, _) =>
-      only.forall(_.findFirstIn(n).isDefined) }
+    // queries — the fields a mismatch adjudication needs in one read;
+    // `selected` lists the names given (empty: every query)
     val meta = Seq(
       "git_sha" -> gitSha(), "sf_dir" -> sfDir, "out_dir" -> outDir,
       "started_utc" -> started, "finished_utc" -> utcNow(),
       "spark_version" -> spark.version,
       "cpus" -> GraftSession.defaultCores.toString,
-      "n_queries" -> nQ.toString, "n_oracle" -> nO.toString,
-      "n_failed" -> failures.size.toString,
-      "subset_regex" -> sys.env.getOrElse("SPARK_GRAFT_VERIFY_ONLY", ""))
-      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/meta.json"), meta)
+      "n_queries" -> picked.size.toString,
+      "n_oracle" -> oracles.size.toString,
+      "n_failed" -> failures.size.toString)
+      .map { case (k, v) => k -> jstr(v) } :+
+      ("selected" -> names.map(jstr).mkString("[", ",", "]"))
+    Files.writeString(Paths.get(s"$outDir/meta.json"), jobj(meta))
     spark.stop()
   }
 }

@@ -711,9 +711,7 @@ object Dedup {
     */
   def bloomDecontaminate(s: SparkSession, d: String, ngram: Int = 12,
       fpp: Double = 0.03,
-      driverMaxShingles: Long = sys.env
-        .get("SPARK_GRAFT_BLOOM_DRIVER_MAX").map(_.toLong)
-        .getOrElse(4000000L)): DataFrame = {
+      driverMaxShingles: Long = 4000000L): DataFrame = {
     Vectors.ensureRegistered(s)
     val docs = Tables.spread(Tables.documents(s, d)).select(
       col("doc_id"),

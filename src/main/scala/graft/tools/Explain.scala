@@ -10,14 +10,13 @@ import graft.{GraftSession, SparkEntry}
   */
 object Explain {
   def main(args: Array[String]): Unit = {
+    val picked = SparkEntry.select(args.toSeq)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val s = GraftSession.local(appName = "graft-explain")
     s.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq
-                else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { name =>
-      println(s"\n========== $name ==========")
-      SparkEntry.queries(name)(s, d).explain("formatted")
+    picked.foreach { q =>
+      println(s"\n========== ${q.name} ==========")
+      q.build(s, d).explain("formatted")
     }
     s.stop()
   }

@@ -21,24 +21,17 @@ object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(1).map(_.toInt).getOrElse(3)
-    val names = if (args.length > 2) args.toSeq.drop(2)
-                else SparkEntry.queries.keys.toSeq.sorted
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val picked = SparkEntry.select(args.toSeq.drop(2))
     val spark = GraftSession.local(appName = "graft-time-queries")
     spark.sparkContext.setLogLevel("WARN")
-    names.foreach { name =>
+    picked.foreach { q =>
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
-        val rows = SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.toRdd.count()
+        val rows = q.build(spark, sfDir).queryExecution.toRdd.count()
         ((System.nanoTime() - t0) / 1e9, rows)
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(false))
-      System.gc()
-      println(f"""{"name":"$name","min_sec":${times.map(_._1).min}%.3f,"max_sec":${times.map(_._1).max}%.3f,"rows":${times.head._2}}""")
+      SparkEntry.release(spark)
+      println(f"""{"name":"${q.name}","min_sec":${times.map(_._1).min}%.3f,"max_sec":${times.map(_._1).max}%.3f,"rows":${times.head._2}}""")
     }
     spark.stop()
   }

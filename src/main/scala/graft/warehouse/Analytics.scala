@@ -424,9 +424,7 @@ object Analytics {
     * the 100 TB cost is the one fact scan feeding the daily rollup.
     */
   def autocorrGmv(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("dt"))
-      .agg(sum(Dwd.cents(col("o_totalprice"))).as("g"))
+    val daily = dailyGmvCents(s, d)
     val w = Window.orderBy(col("dt"))
     // DECIMAL(19): one digit past int64 so BOTH engines run the
     // product in 128-bit storage (DuckDB's DECIMAL(18) multiply
@@ -581,9 +579,7 @@ object Analytics {
     */
   def motifSearch(s: SparkSession, d: String, w: Int = 7,
       k: Int = 5): DataFrame = {
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("dt"))
-      .agg(sum(Dwd.cents(col("o_totalprice"))).as("g"))
+    val daily = dailyGmvCents(s, d)
     val idx = daily.withColumn("rn",
       row_number().over(Window.orderBy("dt")))
     val mx = idx.agg(max(col("rn")).as("nmax"))
@@ -1036,9 +1032,7 @@ object Analytics {
     */
   def deltaSumGmv(s: SparkSession, d: String): DataFrame = {
     val w = Window.orderBy(col("dt"))
-    Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("dt"))
-      .agg(sum(Dwd.cents(col("o_totalprice"))).as("g"))
+    dailyGmvCents(s, d)
       .withColumn("pg", lag(col("g"), 1).over(w))
       .agg(
         // explicit CASE (not greatest): NULL-vs-greatest semantics
@@ -1137,9 +1131,7 @@ object Analytics {
     * by calendar length, never by fact volume.
     */
   def expSmoothGmv(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("dt"))
-      .agg(sum(Dwd.cents(col("o_totalprice"))).as("g"))
+    val daily = dailyGmvCents(s, d)
     daily
       .agg(sort_array(collect_list(struct(col("dt"), col("g")))).as("ser"))
       .select(explode(aggregate(col("ser"),
@@ -1309,9 +1301,7 @@ object Analytics {
     */
   def seasonalIndex(s: SparkSession, d: String): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("dt"))
-      .agg(sum(Dwd.cents(col("o_totalprice"))).as("g"))
+    val daily = dailyGmvCents(s, d)
     val monthly = daily
       .groupBy(month(col("dt")).cast("long").as("moy"))
       .agg(count(lit(1)).as("n_days"), sum(col("g")).as("gmv_cents"))
@@ -3703,9 +3693,7 @@ object Analytics {
     * fold, as with every recurrence here.
     */
   def holtWinters(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("dt"))
-      .agg(sum(Dwd.cents(col("o_totalprice"))).as("g"))
+    val daily = dailyGmvCents(s, d)
       .select(col("dt"), col("g"),
         (datediff(col("dt"), lit("1970-01-01").cast("date")) % 7)
           .cast("long").as("dow"))
@@ -3768,9 +3756,7 @@ object Analytics {
     * state per pass is ≤ B histogram rows.
     */
   def theilSen(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("dt"))
-      .agg(sum(Dwd.cents(col("o_totalprice"))).as("g"))
+    val daily = dailyGmvCents(s, d)
       .select(datediff(col("dt"), lit("1970-01-01").cast("date"))
         .cast("long").as("x"), col("g").as("y"))
       .cache()
@@ -5751,9 +5737,7 @@ object Analytics {
     */
   def bootstrapCi(s: SparkSession, d: String, b: Int = 200): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("dt"))
-      .agg(sum(Dwd.cents(col("o_totalprice"))).as("g"))
+    val daily = dailyGmvCents(s, d)
       .select((row_number().over(W.orderBy("dt")) - 1).as("i"),
         col("g"))
     val n1 = daily.agg(count(lit(1)).as("n_days"),
@@ -5855,9 +5839,7 @@ object Analytics {
   def waveletEnergy(s: SparkSession, d: String): DataFrame = {
     val d38 = DecimalType(38, 0)
     val W = org.apache.spark.sql.expressions.Window
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("dt"))
-      .agg(sum(Dwd.cents(col("o_totalprice"))).as("g"))
+    val daily = dailyGmvCents(s, d)
       .select((row_number().over(W.orderBy("dt")) - 1).as("t"),
         col("g"))
     val details = daily
@@ -5944,9 +5926,7 @@ object Analytics {
   def friedman(s: SparkSession, d: String): DataFrame = {
     val d38 = DecimalType(38, 0)
     val W = org.apache.spark.sql.expressions.Window
-    val observed = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("dt"))
-      .agg(sum(Dwd.cents(col("o_totalprice"))).as("g"))
+    val observed = dailyGmvCents(s, d)
     val span = observed.agg(min(col("dt")).as("d0"),
       max(col("dt")).as("d1"))
     val calendar = span
@@ -6053,9 +6033,7 @@ object Analytics {
   def pettitt(s: SparkSession, d: String): DataFrame = {
     val d38 = DecimalType(38, 0)
     val W = org.apache.spark.sql.expressions.Window
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("dt"))
-      .agg(sum(Dwd.cents(col("o_totalprice"))).as("g"))
+    val daily = dailyGmvCents(s, d)
     val dom = daily.groupBy("g").agg(count(lit(1)).as("c"))
     val r2 = dom.select(col("g"),
       (sum(col("c")).over(W.orderBy("g").rowsBetween(

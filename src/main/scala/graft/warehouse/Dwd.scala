@@ -31,17 +31,17 @@ object Dwd {
     * ~1.3s per column per sf1 scan in Cast's BigDecimal.valueOf +
     * setScale; for the ≤2-decimal-digit money doubles every warehouse
     * column carries (verified across lineitem/orders/events at all
-    * SFs), trunc(x·100 + 0.5) is the SAME half-up integerization in
+    * SFs), trunc(x·100 ± 0.5) is the SAME half-up integerization in
     * pure codegen'd FP. x·100 sits within 1e-9 of an integer for
-    * 2-dp inputs, so the +0.5 trunc can never land on the wrong
-    * side; values are non-negative by the same contract. Inputs with
-    * more fractional digits are outside the money contract — the
-    * DECIMAL(12,2)-based DuckDB oracle grades bit-equality at
-    * sf0.01/sf0.1/sf1 and pins the two forms together on everything
-    * this engine serves.
+    * 2-dp inputs, so the ±0.5 trunc can never land on the wrong
+    * side; the half moves away from zero (−0.5 below zero), exactly
+    * as the DECIMAL cast rounds. Inputs with more fractional digits
+    * are outside the money contract — the DECIMAL(12,2)-based DuckDB
+    * oracle grades bit-equality at sf0.01/sf0.1/sf1 and pins the two
+    * forms together on everything this engine serves.
     */
   private[graft] def cents(c: org.apache.spark.sql.Column) =
-    (c * 100 + 0.5).cast("long")
+    (c * 100 + when(c < 0, -0.5).otherwise(0.5)).cast("long")
 
   /** order_info ⋈ order_detail → order-detail fact.
     * Ref: DwdTradeOrderDetail.java:1 (interval join on order_id).

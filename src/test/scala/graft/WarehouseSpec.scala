@@ -29,8 +29,34 @@ class WarehouseSpec extends AnyFunSuite {
 
   test("driver entry() smoke: nonempty on a plain queries path") {
     assert(SparkEntry.entry(s).count() > 0)
-    // every queries entry has either an oracle or is known rows-only
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("query table: 439 distinct names, 437 oracles, two rows-only") {
+    val t = SparkEntry.table
+    assert(t.size === 439)
+    assert(t.map(_.name).distinct.size === 439)
+    assert(t.count(_.oracle.isDefined) === 437)
+    assert(t.filter(_.oracle.isEmpty).map(_.name).toSet ===
+      Set("graph_mst", "text_compress_ratio"))
+    assert(SparkEntry.queries.keySet === t.map(_.name).toSet)
+    assert(SparkEntry.oracleSql.keySet ===
+      t.filter(_.oracle.isDefined).map(_.name).toSet)
+    // a repeated name fails when the table is built
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.unique(Seq(t.head, t.last, t.head)))
+    assert(e.getMessage.contains(t.head.name))
+  }
+
+  test("select rejects an unknown query name before any Spark job") {
+    // select takes no session: the mains call it before starting one
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("q1_pricing_summary", "no_such_query")))
+    assert(e.getMessage.contains("no_such_query"))
+    assert(!e.getMessage.contains("q1_pricing_summary"))
+    assert(SparkEntry.select(Seq("q5_star_join", "dq_audit"))
+      .map(_.name) === Seq("q5_star_join", "dq_audit"))
+    val all = SparkEntry.select(Nil).map(_.name)
+    assert(all.size === 439 && all === all.sorted)
   }
 
   test("pricing summary: 6 flag×status groups, totals reconcile") {
@@ -2174,7 +2200,9 @@ class WarehouseSpec extends AnyFunSuite {
     // own money columns end-to-end
     val synth = (0L until 200000L).map(i => i / 100.0).toDF("x")
       .union(Seq(99999.99, 104949.50, 0.0, 0.01, 0.09).toDF("x"))
-    val diff = synth.select(
+    // the mirrored negative domain: the DECIMAL cast rounds half away
+    // from zero, so −0.29 must give −29, not −28
+    val diff = synth.union(synth.select((-col("x")).as("x"))).select(
         Dwd.cents(col("x")).as("fp"),
         (col("x").cast(DecimalType(12, 2)) * 100).cast("long").as("dec"))
       .filter(col("fp") =!= col("dec")).count()

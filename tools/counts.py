@@ -2,25 +2,25 @@
 """Count-consistency gate (r7 VERDICT 'Next round' #8): one number
 everywhere, enforced.
 
-Asserts, without running Spark:
-  1. SparkEntry.queries has NO duplicate keys (a Scala Map literal
-     keeps the last binding silently — r6 shipped a shadowed
-     operator this way) and neither does oracleSql.
-  2. Every oracleSql key is also a queries key.
-  3. Every queries key appears (backtick-quoted) in SURVEY.md §2 —
+Reads the query names from the rows of SparkEntry.table — an oracle
+row is `q("name", build, sql)`, a rows-only row is
+`Query("name", build, None)` — and asserts, without running Spark:
+  1. Every query name appears (backtick-quoted) in SURVEY.md §2 —
      an operator without a SURVEY row is ungraded surface; a SURVEY
      row whose query key vanished is a stale claim.
-  4. If a CORRECTNESS/check artifact is given (arg 1), its query
+  2. If a CORRECTNESS/check artifact is given (arg 1), its query
      keys match SparkEntry.queries exactly.
-  5. Every query key is sf1-CLASSIFIED (r10 VERDICT "What's wrong"
+  3. Every query key is sf1-CLASSIFIED (r10 VERDICT "What's wrong"
      #3): tools/sf1.json must place each key in exactly one of
      magnitude_queries / shingle_basis / basket_basis /
      sf1_insensitive (the last with a one-line reason) — a new query
      can no longer silently ship outside the sf1 gate by omission.
+A repeated name, or an oracle without a query, cannot be written:
+the table is one Seq of rows and rejects a repeated name when built.
 
 Usage: tools/counts.py [CORRECTNESS_rN.json]
 """
-import json, re, sys, collections, pathlib
+import json, re, sys, pathlib
 
 root = pathlib.Path(__file__).resolve().parent.parent
 src = (root / "src/main/scala/graft/SparkEntry.scala").read_text()
@@ -28,29 +28,10 @@ survey = (root / "SURVEY.md").read_text()
 
 errors = []
 
-def keys_of(block_name, text):
-    """Keys of one Map literal section, by source position."""
-    start = re.search(rf"^  lazy val {block_name}\b", text, re.M).start()
-    # section ends at the next top-level member after it (or EOF)
-    nxt = re.search(r"\n  (?:private |lazy )*(?:def|val) \w+",
-                    text[start + 10:])
-    end = start + 10 + nxt.start() if nxt else len(text)
-    body = text[start:end]
-    return [m.group(1) for m in
-            re.finditer(r'^\s*"([A-Za-z0-9_]+)"\s*->', body, re.M)]
-
-qkeys = keys_of("queries", src)
-okeys = keys_of("oracleSql", src)
-
-for label, ks in [("queries", qkeys), ("oracleSql", okeys)]:
-    dups = [k for k, n in collections.Counter(ks).items() if n > 1]
-    if dups:
-        errors.append(f"DUPLICATE keys in SparkEntry.{label}: {sorted(dups)}")
-
+rows = re.findall(r'^    (q|Query)\("([A-Za-z0-9_]+)",', src, re.M)
+qkeys = [n for _, n in rows]
+okeys = [n for kind, n in rows if kind == "q"]
 qset, oset = set(qkeys), set(okeys)
-extra_oracle = oset - qset
-if extra_oracle:
-    errors.append(f"oracleSql keys with NO query: {sorted(extra_oracle)}")
 
 # SURVEY §2 rows and backticked query names
 sec2 = survey[survey.index("## §2"):survey.index("## §3")]

@@ -4,7 +4,7 @@
 # any red. Every stage is the same command the driver/judge runs;
 # nothing here is a weaker stand-in.
 #
-#   counts.py   — key-consistency (no dup/shadowed keys, SURVEY sync)
+#   counts.py   — key-consistency (SURVEY sync, sf1 classification)
 #   Verify      — Spark dumps every SparkEntry query to parquet
 #   check.py    — DuckDB oracle replay + row/schema/hash diff
 #   sbt test    — the full ScalaTest suite
@@ -19,7 +19,8 @@
 #           ×10 corpus, and the shingle-basis subset (quadratic
 #           DuckDB oracles) value-graded on the deterministic
 #           SubCorpus doc_id%50 slice of the same corpus. Both
-#           query lists live in tools/sf1.json (one place).
+#           query lists live in tools/sf1.json (one place) and reach
+#           `graft.Verify <sfDir> <outDir> [query...]` as names.
 #           Emits CHECK_LOCAL_sf1_r<N>.json.
 # Env: GATE_SKIP_SBT=1 skips the sbt test stage (already-green reruns).
 set -u
@@ -104,25 +105,22 @@ if [ "$RUN_SF1" = "1" ]; then
   echo "   building $SF1_BK (BasketSlice mod 10)" | tee -a "$LOG"
   tools/run.sh graft.tools.BasketSlice "$SF1_DIR" "$SF1_BK" 10 \
     >>"$LOG" 2>&1 || fail sf1-basketslice
-  MAG_RX=$(python3 -c "import json; c=json.load(open('tools/sf1.json')); print('^(' + '|'.join(c['magnitude_queries']) + ')\$')")
-  SHG_RX=$(python3 -c "import json; c=json.load(open('tools/sf1.json')); print('^(' + '|'.join(c['shingle_basis']) + ')\$')")
-  BKT_RX=$(python3 -c "import json; c=json.load(open('tools/sf1.json')); print('^(' + '|'.join(c['basket_basis']) + ')\$')")
+  sf1_names() {
+    python3 -c "import json, sys; print(' '.join(json.load(open('tools/sf1.json'))[sys.argv[1]]))" "$1"
+  }
   echo "   verify magnitude subset at $SF1_DIR" | tee -a "$LOG"
-  SPARK_GRAFT_VERIFY_ONLY="$MAG_RX" SPARK_GRAFT_CPUS=32 \
-    tools/run.sh graft.Verify "$SF1_DIR" /tmp/gate_verify_sf1 \
-    >>"$LOG" 2>&1 || fail sf1-verify
+  SPARK_GRAFT_CPUS=32 tools/run.sh graft.Verify "$SF1_DIR" /tmp/gate_verify_sf1 \
+    $(sf1_names magnitude_queries) >>"$LOG" 2>&1 || fail sf1-verify
   python3 tools/check.py "$SF1_DIR" /tmp/gate_verify_sf1 \
     /tmp/gate_check_sf1.json >>"$LOG" 2>&1 || fail sf1-check
   echo "   verify shingle-basis subset at $SF1_SUB" | tee -a "$LOG"
-  SPARK_GRAFT_VERIFY_ONLY="$SHG_RX" SPARK_GRAFT_CPUS=32 \
-    tools/run.sh graft.Verify "$SF1_SUB" /tmp/gate_verify_sf1sub \
-    >>"$LOG" 2>&1 || fail sf1sub-verify
+  SPARK_GRAFT_CPUS=32 tools/run.sh graft.Verify "$SF1_SUB" /tmp/gate_verify_sf1sub \
+    $(sf1_names shingle_basis) >>"$LOG" 2>&1 || fail sf1sub-verify
   python3 tools/check.py "$SF1_SUB" /tmp/gate_verify_sf1sub \
     /tmp/gate_check_sf1sub.json >>"$LOG" 2>&1 || fail sf1sub-check
   echo "   verify basket-basis subset at $SF1_BK" | tee -a "$LOG"
-  SPARK_GRAFT_VERIFY_ONLY="$BKT_RX" SPARK_GRAFT_CPUS=32 \
-    tools/run.sh graft.Verify "$SF1_BK" /tmp/gate_verify_sf1bkt \
-    >>"$LOG" 2>&1 || fail sf1bkt-verify
+  SPARK_GRAFT_CPUS=32 tools/run.sh graft.Verify "$SF1_BK" /tmp/gate_verify_sf1bkt \
+    $(sf1_names basket_basis) >>"$LOG" 2>&1 || fail sf1bkt-verify
   python3 tools/check.py "$SF1_BK" /tmp/gate_verify_sf1bkt \
     /tmp/gate_check_sf1bkt.json >>"$LOG" 2>&1 || fail sf1bkt-check
   python3 - "$ROUND" <<'EOF' || fail sf1-merge
