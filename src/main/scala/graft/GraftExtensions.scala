@@ -1,142 +1,35 @@
 package graft
 
-import graft.functions.{DictSegment, DotProduct, MinHashSignature, ShingleHashes, SimHash64}
+import graft.functions._
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extensions wiring graft's native expressions into any
-  * session at build time — the deployment-grade alternative to the
-  * per-operator `Vectors.ensureRegistered` fallback:
+/** The one place a session learns graft's native functions, custom
+  * join strategy and optimizer/resolution rules, all wired at build
+  * time:
   *
   *   SparkSession.builder()
   *     .withExtensions(new GraftExtensions)         // programmatic
   *   // or spark.sql.extensions=graft.GraftExtensions (config/submit)
   *
-  * After registration the functions are usable from SQL too:
+  * [[GraftSession.tune]] applies it to every session graft builds, and
+  * `newSession()` / streaming clones inherit it. No operator registers
+  * anything at runtime. The functions are usable from SQL too:
   * `SELECT graft_dot(a.v, b.v) FROM ...`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      exprs => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash_sig"),
-      exprs => MinHashSignature(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      exprs => ShingleHashes(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      exprs => SimHash64(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_rep_stats"),
-      new ExpressionInfo(classOf[graft.functions.RepStats].getName,
-        "graft_rep_stats"),
-      exprs => graft.functions.RepStats(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_dict_segment"),
-      new ExpressionInfo(classOf[DictSegment].getName, "graft_dict_segment"),
-      exprs => DictSegment(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[graft.functions.PqEncode].getName,
-        "graft_pq_encode"),
-      exprs => graft.functions.PqEncode(exprs(0), exprs(1), exprs(2),
-        exprs(3))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_pq_lut"),
-      new ExpressionInfo(classOf[graft.functions.PqLut].getName,
-        "graft_pq_lut"),
-      exprs => graft.functions.PqLut(exprs(0), exprs(1), exprs(2),
-        exprs(3))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_pq_adc"),
-      new ExpressionInfo(classOf[graft.functions.PqAdc].getName,
-        "graft_pq_adc"),
-      exprs => graft.functions.PqAdc(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_winnow_fps"),
-      new ExpressionInfo(classOf[graft.functions.WinnowFps].getName,
-        "graft_winnow_fps"),
-      exprs => graft.functions.WinnowFps(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_sorted_intersect_count"),
-      new ExpressionInfo(
-        classOf[graft.functions.SortedIntersectCount].getName,
-        "graft_sorted_intersect_count"),
-      exprs => graft.functions.SortedIntersectCount(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_sorted_intersect_gt"),
-      new ExpressionInfo(
-        classOf[graft.functions.SortedIntersectGreater].getName,
-        "graft_sorted_intersect_gt"),
-      exprs => graft.functions.SortedIntersectGreater(exprs(0), exprs(1),
-        exprs(2))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_kmv"),
-      new ExpressionInfo(classOf[graft.functions.KmvSketchAgg].getName,
-        "graft_kmv"),
-      exprs => graft.functions.KmvSketchAgg(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bitmap_distinct"),
-      new ExpressionInfo(classOf[graft.functions.BitmapDistinctAgg].getName,
-        "graft_bitmap_distinct"),
-      exprs => graft.functions.BitmapDistinctAgg(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bitmap_bytes"),
-      new ExpressionInfo(classOf[graft.functions.BitmapBytesAgg].getName,
-        "graft_bitmap_bytes"),
-      exprs => graft.functions.BitmapBytesAgg(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bitmap_or_count"),
-      new ExpressionInfo(classOf[graft.functions.BitmapOrCount].getName,
-        "graft_bitmap_or_count"),
-      exprs => graft.functions.BitmapOrCount(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bitmap_union"),
-      new ExpressionInfo(classOf[graft.functions.BitmapUnionAgg].getName,
-        "graft_bitmap_union"),
-      exprs => graft.functions.BitmapUnionAgg(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bitmap_card"),
-      new ExpressionInfo(classOf[graft.functions.BitmapCardinality].getName,
-        "graft_bitmap_card"),
-      exprs => graft.functions.BitmapCardinality(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bitmap_and_count"),
-      new ExpressionInfo(classOf[graft.functions.BitmapAndCount].getName,
-        "graft_bitmap_and_count"),
-      exprs => graft.functions.BitmapAndCount(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bitmap_andnot_count"),
-      new ExpressionInfo(classOf[graft.functions.BitmapAndNotCount].getName,
-        "graft_bitmap_andnot_count"),
-      exprs => graft.functions.BitmapAndNotCount(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_cms_estimate"),
-      new ExpressionInfo(classOf[graft.functions.CmsEstimate].getName,
-        "graft_cms_estimate"),
-      exprs => graft.functions.CmsEstimate(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bloom_any"),
-      new ExpressionInfo(classOf[graft.functions.BloomAnyContain].getName,
-        "graft_bloom_any"),
-      exprs => graft.functions.BloomAnyContain(exprs(0), exprs(1))))
-    // whole-operator extension: the native as-of join strategy, so a
-    // config-only session (spark.sql.extensions=graft.GraftExtensions)
-    // plans graft.plans.AsOfJoinNode without any runtime registration
-    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
-    // ...and the matching optimizer rules (left-predicate pushdown
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      e.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
+    // whole-operator extension: the native as-of and interval join
+    // strategy, so a config-only session plans both custom nodes
+    e.injectPlannerStrategy(_ => graft.plans.TimeJoinStrategy)
+    // ...and the matching optimizer rule (left-predicate pushdown
     // through the custom nodes)
-    e.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)
-    e.injectOptimizerRule(_ => graft.plans.PushFilterThroughIntervalJoin)
+    e.injectOptimizerRule(_ => graft.plans.PushFilterThroughTimeJoin)
     // materialized-view rewrite: queries matching the registered
     // canonical aggregate are spliced onto the precomputed summary
     e.injectOptimizerRule(session => graft.plans.SummaryRewrite(session))
@@ -160,4 +53,48 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectResolutionRule(session =>
       graft.plans.AsOfSql.ResolveTemporalJoin(session))
   }
+}
+
+object GraftExtensions {
+  /** Every native function a graft session resolves: SQL name, the
+    * expression class it documents, and its builder.
+    */
+  val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct], e => DotProduct(e(0), e(1))),
+    ("graft_minhash_sig", classOf[MinHashSignature],
+      e => MinHashSignature(e(0), e(1))),
+    ("graft_shingle_hashes", classOf[ShingleHashes],
+      e => ShingleHashes(e(0), e(1))),
+    ("graft_simhash64", classOf[SimHash64], e => SimHash64(e(0))),
+    ("graft_rep_stats", classOf[RepStats], e => RepStats(e(0))),
+    ("graft_dict_segment", classOf[DictSegment], e => DictSegment(e(0))),
+    ("graft_pq_encode", classOf[PqEncode],
+      e => PqEncode(e(0), e(1), e(2), e(3))),
+    ("graft_pq_lut", classOf[PqLut], e => PqLut(e(0), e(1), e(2), e(3))),
+    ("graft_pq_adc", classOf[PqAdc], e => PqAdc(e(0), e(1), e(2))),
+    ("graft_winnow_fps", classOf[WinnowFps],
+      e => WinnowFps(e(0), e(1), e(2))),
+    ("graft_sorted_intersect_count", classOf[SortedIntersectCount],
+      e => SortedIntersectCount(e(0), e(1))),
+    ("graft_sorted_intersect_gt", classOf[SortedIntersectGreater],
+      e => SortedIntersectGreater(e(0), e(1), e(2))),
+    ("graft_kmv", classOf[KmvSketchAgg], e => KmvSketchAgg(e(0), e(1))),
+    ("graft_bitmap_distinct", classOf[BitmapDistinctAgg],
+      e => BitmapDistinctAgg(e(0), e(1))),
+    ("graft_bitmap_bytes", classOf[BitmapBytesAgg],
+      e => BitmapBytesAgg(e(0), e(1))),
+    ("graft_bitmap_or_count", classOf[BitmapOrCount],
+      e => BitmapOrCount(e(0))),
+    ("graft_bitmap_union", classOf[BitmapUnionAgg],
+      e => BitmapUnionAgg(e(0))),
+    ("graft_bitmap_card", classOf[BitmapCardinality],
+      e => BitmapCardinality(e(0))),
+    ("graft_bitmap_and_count", classOf[BitmapAndCount],
+      e => BitmapAndCount(e(0), e(1))),
+    ("graft_bitmap_andnot_count", classOf[BitmapAndNotCount],
+      e => BitmapAndNotCount(e(0), e(1))),
+    ("graft_cms_estimate", classOf[CmsEstimate],
+      e => CmsEstimate(e(0), e(1))),
+    ("graft_bloom_any", classOf[BloomAnyContain],
+      e => BloomAnyContain(e(0), e(1))))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Dense-vector column functions over `array<float>` embeddings.
@@ -18,16 +18,9 @@ object Vectors {
   /** Upcast to array<double> once; all downstream math is double. */
   def asDouble(v: Column): Column = v.cast("array<double>")
 
-  /** Register the native vector expressions; call once per session
-    * before building plans that use [[dot]]. Idempotent.
-    */
-  def ensureRegistered(spark: SparkSession): Unit =
-    VectorExpressions.register(spark)
-
   /** Dot product via the native codegen'd [[DotProduct]] expression —
     * same left-to-right double accumulation as the composable
     * `aggregate(zip_with(...))` form, ~10× faster on pair scans.
-    * Requires [[ensureRegistered]] on the session.
     */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
@@ -48,8 +41,7 @@ object Vectors {
     * every round — derives the same planes with zero driver state.
     * Each bit is one native `graft_dot` against a literal plane (an
     * element_at-per-dimension expression tree blows past codegen
-    * limits and falls back to interpretation). Requires
-    * [[ensureRegistered]].
+    * limits and falls back to interpretation).
     */
   def lshBucket(v: Column, dim: Int, nBits: Int): Column = {
     val bits = (0 until nBits).map { j =>

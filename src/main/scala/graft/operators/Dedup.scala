@@ -35,7 +35,6 @@ object Dedup {
     * intersections) needs only set semantics over the hashes.
     */
   private def shingled(s: SparkSession, d: String, n: Int): DataFrame = {
-    Vectors.ensureRegistered(s)
     Tables.spread(Tables.documents(s, d)).select(
       col("doc_id"),
       call_function("graft_shingle_hashes", col("text"), lit(n)).as("hashed"))
@@ -60,7 +59,6 @@ object Dedup {
     */
   def minhashLsh(s: SparkSession, d: String, ngram: Int = 12,
       threshold: Double = 0.5, perms: Int = 64, bands: Int = 16): DataFrame = {
-    Vectors.ensureRegistered(s)
     val rows = bands
     val r = perms / rows
     val sh = shingled(s, d, ngram).cache()
@@ -94,7 +92,6 @@ object Dedup {
     * every token).
     */
   def simhash(s: SparkSession, d: String): DataFrame = {
-    Vectors.ensureRegistered(s)
     Tables.spread(Tables.documents(s, d))
       .select(col("doc_id"),
         call_function("graft_simhash64", col("text")).as("simhash"))
@@ -642,7 +639,6 @@ object Dedup {
     */
   def embeddingNearDupExact(s: SparkSession, d: String,
       threshold: Double = 0.4): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -712,7 +708,6 @@ object Dedup {
   def bloomDecontaminate(s: SparkSession, d: String, ngram: Int = 12,
       fpp: Double = 0.03,
       driverMaxShingles: Long = 4000000L): DataFrame = {
-    Vectors.ensureRegistered(s)
     val docs = Tables.spread(Tables.documents(s, d)).select(
       col("doc_id"),
       substring(col("source"), 4, 10).cast("int").as("src_n"),
@@ -785,7 +780,6 @@ object Dedup {
     */
   def embeddingNearDupLsh(s: SparkSession, d: String,
       threshold: Double = 0.4, nBits: Int = 8): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -925,7 +919,6 @@ object Dedup {
     */
   def contaminationScore(s: SparkSession, d: String,
       ngram: Int = 12): DataFrame = {
-    Vectors.ensureRegistered(s)
     val sh = Tables.spread(Tables.documents(s, d)).select(
         col("doc_id"),
         substring(col("source"), 4, 10).cast("int").as("src_n"),
@@ -1188,7 +1181,6 @@ object Dedup {
     */
   private def md5Sig(s: SparkSession, d: String, ngram: Int,
       perms: Int): DataFrame = {
-    graft.functions.Vectors.ensureRegistered(s)
     val p = MinhashPrime
     Tables.spread(Tables.documents(s, d)).select(col("doc_id"),
       call_function("graft_minhash_sig", expr(

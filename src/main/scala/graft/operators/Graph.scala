@@ -303,7 +303,6 @@ object Graph {
     // in-row costs O(edges × √m) worst case with no blowup rows.
     val adjPlus = dirE.groupBy(col("u"))
       .agg(sort_array(collect_list(col("w"))).as("nbrs"))
-    graft.functions.Vectors.ensureRegistered(s)
     val common = dirE
       .join(adjPlus.select(col("u"), col("nbrs").as("na")), "u")
       .join(adjPlus.select(col("u").as("w"), col("nbrs").as("nb")), "w")
@@ -1524,7 +1523,6 @@ object Graph {
         when(sLower, col("t")).otherwise(col("s")).as("w"))
     val adjPlus = dirE.groupBy(col("u"))
       .agg(sort_array(collect_list(col("w"))).as("nbrs"))
-    graft.functions.Vectors.ensureRegistered(s)
     val common = dirE
       .join(adjPlus.select(col("u"), col("nbrs").as("na")), "u")
       .join(adjPlus.select(col("u").as("w"), col("nbrs").as("nb")), "w")

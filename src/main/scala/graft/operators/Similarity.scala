@@ -39,7 +39,6 @@ object Similarity {
 
   private def bruteForceTopKCompute(s: SparkSession, d: String,
       nQueries: Int, k: Int): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -73,13 +72,17 @@ object Similarity {
   // call, so both are compute-once layouts like the truth table.
   def annIvf(s: SparkSession, d: String, nQueries: Int = 20, k: Int = 5,
       nCells: Int = 16, nProbe: Int = 4): DataFrame =
-    Bucketing.layout(s, d, "annivf", Plain, nQueries, k, nCells, nProbe) {
-      annIvfCompute(s, d, nQueries, k, nCells, nProbe)
-    }
+    Bucketing.layouts(s, d, Seq("annivf" -> Plain),
+        nQueries, k, nCells, nProbe) {
+      annIvfBuild(s, d, nQueries, k, nCells, nProbe, _)
+    }.head
 
-  private def annIvfCompute(s: SparkSession, d: String, nQueries: Int,
-      k: Int, nCells: Int, nProbe: Int): DataFrame = {
-    Vectors.ensureRegistered(s)
+  /** Builds the [[annIvf]] layout through `write`, then drops the
+    * corpus cache that only the build used.
+    */
+  private def annIvfBuild(s: SparkSession, d: String, nQueries: Int,
+      k: Int, nCells: Int, nProbe: Int,
+      write: Seq[DataFrame] => Unit): Unit = {
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -126,9 +129,10 @@ object Similarity {
       .orderBy(col("cos").desc, col("neighbor_id"))
     // rank-only output: the float score orders but is never emitted —
     // engine-exact results (and hashable) regardless of fp accumulation
-    scored.withColumn("rk", row_number().over(w).cast("long"))
+    write(Seq(scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
-      .select("query_id", "rk", "neighbor_id")
+      .select("query_id", "rk", "neighbor_id")))
+    e.unpersist()
   }
 
   /** Scalar-quantized (int8) ANN — the OTHER practical vector
@@ -147,7 +151,6 @@ object Similarity {
     */
   def annSq8(s: SparkSession, d: String, nQueries: Int = 20,
       k: Int = 5): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
     val rng = broadcast(e
@@ -189,7 +192,6 @@ object Similarity {
     */
   def hardNegatives(s: SparkSession, d: String, nQueries: Int = 20,
       nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -251,7 +253,6 @@ object Similarity {
     */
   def mipsTopK(s: SparkSession, d: String, nQueries: Int = 20,
       k: Int = 5, nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e0 = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -313,7 +314,6 @@ object Similarity {
     */
   def filteredTopK(s: SparkSession, d: String, lang: String = "en",
       nQueries: Int = 20, k: Int = 5): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -365,14 +365,18 @@ object Similarity {
     */
   def kmeansClusters(s: SparkSession, d: String, k: Int = 8,
       iters: Int = 4, farthestInit: Boolean = true): DataFrame =
-    Bucketing.layout(s, d, "kmeans", Bucketed("vec_id", Seq("vec_id")),
+    Bucketing.layouts(s, d,
+        Seq("kmeans" -> Bucketed("vec_id", Seq("vec_id"))),
         k, iters, if (farthestInit) 1 else 0) {
-      kmeansCompute(s, d, k, iters, farthestInit)
-    }
+      kmeansBuild(s, d, k, iters, farthestInit, _)
+    }.head
 
-  private def kmeansCompute(s: SparkSession, d: String, k: Int,
-      iters: Int, farthestInit: Boolean): DataFrame = {
-    Vectors.ensureRegistered(s)
+  /** Builds the [[kmeansClusters]] layout through `write`, then drops
+    * the quantized-corpus cache that only the build used.
+    */
+  private def kmeansBuild(s: SparkSession, d: String, k: Int,
+      iters: Int, farthestInit: Boolean,
+      write: Seq[DataFrame] => Unit): Unit = {
     val dim = 64
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
         transform(Vectors.asDouble(col("embedding")),
@@ -412,7 +416,8 @@ object Similarity {
       cents = cents.indices.map(c => agg.getOrElse(c.toLong, cents(c)))
       it += 1
     }
-    assigned.select(col("vec_id"), col("cluster_id"))
+    write(Seq(assigned.select(col("vec_id"), col("cluster_id"))))
+    e.unpersist()
   }
 
   /** Deterministic SEEDED farthest-first (k-center) initialization —
@@ -613,7 +618,6 @@ object Similarity {
 
   def knnJoin(s: SparkSession, d: String, k: Int = 5,
       nBits: Int = 6): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -661,7 +665,6 @@ object Similarity {
     */
   def annPq(s: SparkSession, d: String, nQueries: Int = 20, k: Int = 5,
       m: Int = 32, ks: Int = 16): DataFrame = {
-    Vectors.ensureRegistered(s)
     val dim = 64
     val sub = dim / m
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
@@ -718,7 +721,6 @@ object Similarity {
   def annIvfPq(s: SparkSession, d: String, nQueries: Int = 20, k: Int = 5,
       nCells: Int = 16, nProbe: Int = 4, m: Int = 32, ks: Int = 16)
       : DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
         Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -783,7 +785,6 @@ object Similarity {
 
   private def annLshCompute(s: SparkSession, d: String, nQueries: Int,
       k: Int, nBits: Int): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -838,7 +839,6 @@ object Similarity {
     */
   def rangeSearch(s: SparkSession, d: String, nQueries: Int = 20,
       tau: Double = 0.30): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -864,7 +864,6 @@ object Similarity {
     */
   def knnClassify(s: SparkSession, d: String, nQueries: Int = 50,
       k: Int = 5): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"), col("label"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -902,7 +901,6 @@ object Similarity {
     */
   def cosHistogram(s: SparkSession, d: String,
       offset: Long = 497): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -937,7 +935,6 @@ object Similarity {
     */
   def semDedupPairs(s: SparkSession, d: String, k: Int = 8,
       iters: Int = 4, topN: Int = 5): DataFrame = {
-    Vectors.ensureRegistered(s)
     val assign = kmeansClusters(s, d, k, iters)
     val e = Tables.embeddings(s, d).select(col("vec_id"),
         transform(Vectors.asDouble(col("embedding")),
@@ -1068,7 +1065,6 @@ object Similarity {
     */
   def matryoshkaRecall(s: SparkSession, d: String, nQueries: Int = 20,
       k: Int = 5, prefixes: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
-    Vectors.ensureRegistered(s)
     val truth = bruteForceTopK(s, d, nQueries, k)
       .select(col("query_id"), col("neighbor_id"))
       .localCheckpoint()
@@ -1184,7 +1180,6 @@ object Similarity {
       k: Int = 5, nCells: Int = 8, iters: Int = 2,
       probes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
     import s.implicits._
-    Vectors.ensureRegistered(s)
     val dim = 64
     // already a bucketed-table read — re-scanning it for the two
     // consumers below is cheaper than an eager checkpoint job
@@ -1415,7 +1410,6 @@ object Similarity {
     */
   def ivfBalance(s: SparkSession, d: String,
       nCells: Int = 16): DataFrame = {
-    Vectors.ensureRegistered(s)
     val e = Tables.spread(Tables.embeddings(s, d)).select(col("vec_id"),
       Vectors.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))

@@ -72,7 +72,6 @@ object TextAnalysis {
     * just the plumbing. Ref: KeywordUtil.java:1 (IK analyzer).
     */
   def segmentCountsDict(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Vectors.ensureRegistered(s)
     val phrases = Seq(
       "苹果手机壳", "小米电视机", "华为平板电脑", "运动鞋男",
       "连衣裙女夏", "洗衣机全自动", "蓝牙耳机无线", "充电器快充")
@@ -198,7 +197,6 @@ object TextAnalysis {
     * can compute locally — same zero-shuffle discipline as SimHash).
     */
   def repetitionStats(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Vectors.ensureRegistered(s)
     Tables.spread(Tables.documents(s, d))
       .select(col("doc_id"),
         call_function("graft_rep_stats", col("text")).as("r"))
@@ -1353,7 +1351,6 @@ object TextAnalysis {
     * O(L²·k): 333s for 500 docs. Native is O(L·(k+w)) flat.
     */
   def winnow(s: SparkSession, d: String, k: Int = 8, w: Int = 4): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     Tables.spread(Tables.documents(s, d))
       .select(col("doc_id"),
         call_function("graft_winnow_fps", col("text"), lit(k), lit(w))
@@ -1407,7 +1404,6 @@ object TextAnalysis {
     */
   def winnowPairs(s: SparkSession, d: String, k: Int = 25, w: Int = 25,
       minShared: Long = 10): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     // no n_fp pre-filter needed: a doc with n < T fingerprints has a
     // non-positive prefix length, so it never emits a prefix row and
     // never reaches a candidate pair
@@ -2060,7 +2056,6 @@ object TextAnalysis {
     * decontamination family builds.
     */
   def noveltyScore(s: SparkSession, d: String, ngram: Int = 12): DataFrame = {
-    graft.functions.Vectors.ensureRegistered(s)
     // r11 OPT (guide §2.3/§2.4): per-doc shingle dedup is map-side
     // (array_distinct before the explode) instead of a corpus-wide
     // (doc, sh) distinct Exchange; each shingle credits exactly its
@@ -2094,13 +2089,12 @@ object TextAnalysis {
     * contain it; the rate is the hot share of all (doc, shingle)
     * incidences in ppm. Pure groupBy cascade over the hashed shingle
     * explode — no pair join anywhere, so unlike the dedup family the
-    * cost is linear in corpus size at any scale. Hashes reuse
-    * [[graft.functions.VectorExpressions]]' shingle expression, the
-    * same space the Jaccard oracle proved collision-free here.
+    * cost is linear in corpus size at any scale. Hashes reuse the
+    * [[graft.functions.ShingleHashes]] expression, the same space the
+    * Jaccard oracle proved collision-free here.
     */
   def boilerplateRate(s: SparkSession, d: String,
       hot: Long = 5): DataFrame = {
-    graft.functions.Vectors.ensureRegistered(s)
     val sh = Tables.spread(Tables.documents(s, d))
       .select(col("source"), col("doc_id"),
         explode(array_distinct(call_function("graft_shingle_hashes",

@@ -1,20 +1,16 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, GenericInternalRow, JoinedRow, PredicateHelper, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.GraftSqlBridge
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Whole-operator as-of join as a first-class Catalyst plan — the
   * (c)-tier extension path from the brief: a custom LogicalPlan +
-  * SparkStrategy + SparkPlan, injected via SparkSessionExtensions
-  * (or `spark.experimental.extraStrategies`).
+  * SparkStrategy + SparkPlan, injected via SparkSessionExtensions.
   *
   * Semantics: for every left row, attach the right row with the
   * greatest `rightTs <= leftTs` within the same key (the dim-version
@@ -33,119 +29,33 @@ import org.apache.spark.unsafe.types.UTF8String
 case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,
     leftKey: Attribute, leftTs: Attribute,
     rightKey: Attribute, rightTs: Attribute,
-    rightVals: Seq[Attribute]) extends BinaryNode {
-
-  override def output: Seq[Attribute] =
-    left.output ++ rightVals.map(_.withNullability(true))
+    rightVals: Seq[Attribute]) extends TimeJoinNode {
 
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): LogicalPlan =
     copy(left = newLeft, right = newRight)
 }
 
-/** Optimizer rule completing the custom operator: Catalyst cannot
-  * push predicates through a node it doesn't know, so a Filter above
-  * an as-of join would block pushdown to the (usually huge) fact
-  * scan. Left-only conjuncts are safe to push — as-of semantics are
-  * per-left-row, so dropping left rows never changes another row's
-  * match. (Right-side conjuncts are NOT pushed: filtering the right
-  * side can change which row is "latest" for a surviving left row.)
-  * Once below the node, Spark's own rules carry the predicate all
-  * the way into the scan's PushedFilters.
-  */
-object PushFilterThroughAsOfJoin extends Rule[LogicalPlan]
-    with PredicateHelper {
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, j: AsOfJoinNode) =>
-      val (push, keep) = splitConjunctivePredicates(cond)
-        .partition(p => p.deterministic &&
-          p.references.subsetOf(j.left.outputSet))
-      if (push.isEmpty) f
-      else {
-        val pushed = j.copy(left = Filter(push.reduce(And), j.left))
-        keep.reduceOption(And).map(Filter(_, pushed)).getOrElse(pushed)
-      }
-  }
-}
-
-/** Plans [[AsOfJoinNode]] into [[AsOfJoinExec]]. */
-object AsOfJoinStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoinNode(l, r, lk, lt, rk, rt, vals) =>
-      AsOfJoinExec(planLater(l), planLater(r), lk, lt, rk, rt, vals) :: Nil
-    case _ => Nil
-  }
-}
-
-/** Sort-merge as-of join: children arrive hash-clustered on the key
-  * and sorted by (key, ts) — both properties DECLARED via
-  * requiredChildDistribution/Ordering so the planner owns the
-  * exchanges (and elides them when an upstream operator already
-  * satisfies them, e.g. bucketed tables). The merge walks both
-  * sorted streams once per partition holding exactly one buffered
-  * right row — O(|L|+|R|) time, O(1) state, no per-key frame
-  * buffering, which is what survives a billion-row fact side.
+/** Sort-merge as-of join over the [[TimeJoinExec]] child layout. The
+  * merge walks both sorted streams once per partition holding exactly
+  * one buffered right row — O(|L|+|R|) time, O(1) state, no per-key
+  * frame buffering, which is what survives a billion-row fact side.
   */
 case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     leftKey: Attribute, leftTs: Attribute,
     rightKey: Attribute, rightTs: Attribute,
-    rightVals: Seq[Attribute]) extends BinaryExecNode {
+    rightVals: Seq[Attribute]) extends TimeJoinExec {
 
-  override def output: Seq[Attribute] =
-    left.output ++ rightVals.map(_.withNullability(true))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(Seq(leftKey)) ::
-    ClusteredDistribution(Seq(rightKey)) :: Nil
-
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    Seq(SortOrder(leftKey, Ascending), SortOrder(leftTs, Ascending)),
-    Seq(SortOrder(rightKey, Ascending), SortOrder(rightTs, Ascending)))
-
-  override def outputPartitioning = left.outputPartitioning
   override def outputOrdering: Seq[SortOrder] =
     Seq(SortOrder(leftKey, Ascending), SortOrder(leftTs, Ascending))
-
-  private def ordinalOf(attrs: Seq[Attribute], a: Attribute): Int = {
-    val i = attrs.indexWhere(_.exprId == a.exprId)
-    require(i >= 0, s"attribute $a not found in ${attrs.mkString(",")}")
-    i
-  }
-
-  /** Null-safe value extractor for the orderable key/ts types. */
-  private def getterFor(dt: DataType, ord: Int): InternalRow => Any = dt match {
-    case LongType | TimestampType | TimestampNTZType =>
-      r => if (r.isNullAt(ord)) null else java.lang.Long.valueOf(r.getLong(ord))
-    case IntegerType | DateType =>
-      r => if (r.isNullAt(ord)) null else java.lang.Integer.valueOf(r.getInt(ord))
-    case StringType =>
-      r => if (r.isNullAt(ord)) null else r.getUTF8String(ord)
-    case other =>
-      throw new IllegalArgumentException(
-        s"as-of join key/ts type not supported: $other")
-  }
-
-  private def cmpFor(dt: DataType): (Any, Any) => Int = dt match {
-    case LongType | TimestampType | TimestampNTZType =>
-      (a, b) => java.lang.Long.compare(
-        a.asInstanceOf[java.lang.Long], b.asInstanceOf[java.lang.Long])
-    case IntegerType | DateType =>
-      (a, b) => java.lang.Integer.compare(
-        a.asInstanceOf[java.lang.Integer], b.asInstanceOf[java.lang.Integer])
-    case StringType =>
-      (a, b) => a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
-    case other =>
-      throw new IllegalArgumentException(
-        s"as-of join key/ts type not supported: $other")
-  }
 
   protected override def doExecute(): RDD[InternalRow] = {
     val lOut = left.output
     val rOut = right.output
-    val lKeyGet = getterFor(leftKey.dataType, ordinalOf(lOut, leftKey))
-    val lTsGet = getterFor(leftTs.dataType, ordinalOf(lOut, leftTs))
-    val rKeyGet = getterFor(rightKey.dataType, ordinalOf(rOut, rightKey))
-    val rTsGet = getterFor(rightTs.dataType, ordinalOf(rOut, rightTs))
+    val lKeyGet = getterFor(lOut, leftKey)
+    val lTsGet = getterFor(lOut, leftTs)
+    val rKeyGet = getterFor(rOut, rightKey)
+    val rTsGet = getterFor(rOut, rightTs)
     val cmpKey = cmpFor(leftKey.dataType)
     val cmpTs = cmpFor(leftTs.dataType)
     val valAttrs = rightVals
@@ -202,48 +112,15 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Public entry: build the as-of join DataFrame from resolved child
-  * frames. Registers [[AsOfJoinStrategy]] on the session's
-  * experimental strategies (idempotent) — the config-only route is
-  * `spark.sql.extensions=graft.GraftExtensions`, which injects the
-  * same strategy.
+/** Public entry: as-of join two frames. It hands the analyzed sides
+  * to the same [[AsOfSql.UnresolvedGraftJoin]] marker the SQL TVF
+  * emits, so [[AsOfSql.ResolveGraftJoins]] builds the node for both
+  * surfaces (self-join re-aliasing and column lookup included).
   */
 object AsOfJoin {
   def apply(left: DataFrame, right: DataFrame, key: String, ts: String,
-      valueCols: Seq[String]): DataFrame = {
-    val spark: SparkSession = left.sparkSession
-    ensureStrategy(spark)
-    // self-join safety: if the two sides share exprIds (both derived
-    // from one scan), the analyzer's DeduplicateRelations rewrites
-    // the right CHILD but knows nothing about this node's attribute
-    // fields — so break the conflict ourselves with fresh aliases
-    val lPlan = left.queryExecution.analyzed
-    val lIds = lPlan.output.map(_.exprId).toSet
-    val rightSafe =
-      if (right.queryExecution.analyzed.output.exists(a => lIds(a.exprId)))
-        right.select(right.columns.toIndexedSeq.map(c =>
-          org.apache.spark.sql.functions.col(c).as(c)): _*)
-      else right
-    def attr(df: DataFrame, name: String): Attribute =
-      df.queryExecution.analyzed.output
-        .find(_.name == name)
-        .getOrElse(throw new IllegalArgumentException(
-          s"column $name not in ${df.columns.mkString(",")}"))
-    val node = AsOfJoinNode(
-      lPlan, rightSafe.queryExecution.analyzed,
-      attr(left, key), attr(left, ts),
-      attr(rightSafe, key), attr(rightSafe, ts),
-      valueCols.map(attr(rightSafe, _)))
-    org.apache.spark.sql.classic.GraftSqlBridge.ofRows(spark, node)
-  }
-
-  def ensureStrategy(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations
-        .contains(PushFilterThroughAsOfJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushFilterThroughAsOfJoin
-  }
+      valueCols: Seq[String]): DataFrame =
+    GraftSqlBridge.ofRows(left.sparkSession, AsOfSql.UnresolvedGraftJoin(
+      left.queryExecution.analyzed, right.queryExecution.analyzed,
+      key, ts, ts, None, valueCols))
 }

@@ -26,7 +26,9 @@ import org.apache.spark.sql.types.StringType
   * the injected resolution rule rewrites the marker to the real
   * [[AsOfJoinNode]]/[[IntervalJoinNode]] once both children have
   * resolved — the standard two-step any custom relation-producing
-  * syntax needs. Registered via [[graft.GraftExtensions]]
+  * syntax needs. The Scala API ([[AsOfJoin]], [[IntervalJoin]]) emits
+  * the same marker over its frames' analyzed plans, so one rule
+  * builds every node. Registered via [[graft.GraftExtensions]]
   * (injectTableFunction + injectResolutionRule).
   */
 object AsOfSql {
@@ -153,13 +155,17 @@ object AsOfSql {
   val intervalInfo =
     new ExpressionInfo(AsOfSql.getClass.getName, "graft_interval_join")
 
-  /** Rewrites resolved markers into the custom join nodes. */
+  /** Rewrites resolved markers into the custom join nodes — the one
+    * construction path of the SQL TVFs and the Scala API alike.
+    */
   object ResolveGraftJoins extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan =
       plan.transformUp {
         case u @ UnresolvedGraftJoin(l, r, key, lts, rts, lower, vals)
             if l.resolved && r.resolved =>
-          // self-join safety: SQL views over one scan share exprIds;
+          // self-join safety: two sides derived from one scan share
+          // exprIds, and the analyzer's DeduplicateRelations rewrites
+          // the right CHILD but not this node's attribute fields — so
           // re-alias the right side so the node's attrs are unambiguous
           val lIds = l.output.map(_.exprId).toSet
           val rSafe =

@@ -3,13 +3,11 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, GenericInternalRow, JoinedRow, PredicateHelper, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.GraftSqlBridge
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Whole-operator interval join — the second custom Catalyst operator
   * (after [[AsOfJoinNode]]), same declared-requirements pattern.
@@ -33,53 +31,17 @@ import org.apache.spark.unsafe.types.UTF8String
 case class IntervalJoinNode(left: LogicalPlan, right: LogicalPlan,
     leftKey: Attribute, leftTs: Attribute,
     rightKey: Attribute, rightTs: Attribute,
-    lowerUs: Long, rightVals: Seq[Attribute]) extends BinaryNode {
-
-  override def output: Seq[Attribute] =
-    left.output ++ rightVals.map(_.withNullability(true))
+    lowerUs: Long, rightVals: Seq[Attribute]) extends TimeJoinNode {
 
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): LogicalPlan =
     copy(left = newLeft, right = newRight)
 }
 
-/** Left-only conjuncts are safe to push below the interval join: the
-  * join is per-left-row LEFT OUTER, so dropping a left row never
-  * changes any other row's matches. Right-side conjuncts stay above
-  * (they would turn unmatched-null rows into dropped rows). Mirrors
-  * [[PushFilterThroughAsOfJoin]].
-  */
-object PushFilterThroughIntervalJoin extends Rule[LogicalPlan]
-    with PredicateHelper {
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, j: IntervalJoinNode) =>
-      val (push, keep) = splitConjunctivePredicates(cond)
-        .partition(p => p.deterministic &&
-          p.references.subsetOf(j.left.outputSet))
-      if (push.isEmpty) f
-      else {
-        val pushed = j.copy(left = Filter(push.reduce(And), j.left))
-        keep.reduceOption(And).map(Filter(_, pushed)).getOrElse(pushed)
-      }
-  }
-}
-
-/** Plans [[IntervalJoinNode]] into [[IntervalJoinExec]]. */
-object IntervalJoinStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case IntervalJoinNode(l, r, lk, lt, rk, rt, lower, vals) =>
-      IntervalJoinExec(planLater(l), planLater(r),
-        lk, lt, rk, rt, lower, vals) :: Nil
-    case _ => Nil
-  }
-}
-
-/** Sort-merge interval join. Children arrive hash-clustered on the
-  * key and sorted by (key, ts) — declared, so EnsureRequirements owns
-  * the exchanges and elides them over bucketed input exactly as for
-  * [[AsOfJoinExec]]. Per partition the merge keeps a deque of right
-  * rows inside the current window: rows leave the front as the left
-  * timestamp advances past `ts + lowerUs`, enter the back as the left
+/** Sort-merge interval join over the [[TimeJoinExec]] child layout.
+  * Per partition the merge keeps a deque of right rows inside the
+  * current window: rows leave the front as the left timestamp
+  * advances past `ts + lowerUs`, enter the back as the left
   * timestamp reaches them. A right row older than every future window
   * is dropped for good (left ts is non-decreasing per key), so state
   * is bounded by the densest `lowerUs` time slice — never a key's
@@ -88,71 +50,20 @@ object IntervalJoinStrategy extends SparkStrategy {
 case class IntervalJoinExec(left: SparkPlan, right: SparkPlan,
     leftKey: Attribute, leftTs: Attribute,
     rightKey: Attribute, rightTs: Attribute,
-    lowerUs: Long, rightVals: Seq[Attribute]) extends BinaryExecNode {
-
-  override def output: Seq[Attribute] =
-    left.output ++ rightVals.map(_.withNullability(true))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(Seq(leftKey)) ::
-    ClusteredDistribution(Seq(rightKey)) :: Nil
-
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    Seq(SortOrder(leftKey, Ascending), SortOrder(leftTs, Ascending)),
-    Seq(SortOrder(rightKey, Ascending), SortOrder(rightTs, Ascending)))
-
-  override def outputPartitioning = left.outputPartitioning
-
-  private def ordinalOf(attrs: Seq[Attribute], a: Attribute): Int = {
-    val i = attrs.indexWhere(_.exprId == a.exprId)
-    require(i >= 0, s"attribute $a not found in ${attrs.mkString(",")}")
-    i
-  }
-
-  /** Null-safe key extractor (long/int/string keys, as for as-of). */
-  private def keyGetterFor(dt: DataType, ord: Int): InternalRow => Any = dt match {
-    case LongType | TimestampType | TimestampNTZType =>
-      r => if (r.isNullAt(ord)) null else java.lang.Long.valueOf(r.getLong(ord))
-    case IntegerType | DateType =>
-      r => if (r.isNullAt(ord)) null else java.lang.Integer.valueOf(r.getInt(ord))
-    case StringType =>
-      r => if (r.isNullAt(ord)) null else r.getUTF8String(ord)
-    case other =>
-      throw new IllegalArgumentException(
-        s"interval join key type not supported: $other")
-  }
-
-  private def cmpFor(dt: DataType): (Any, Any) => Int = dt match {
-    case LongType | TimestampType | TimestampNTZType =>
-      (a, b) => java.lang.Long.compare(
-        a.asInstanceOf[java.lang.Long], b.asInstanceOf[java.lang.Long])
-    case IntegerType | DateType =>
-      (a, b) => java.lang.Integer.compare(
-        a.asInstanceOf[java.lang.Integer], b.asInstanceOf[java.lang.Integer])
-    case StringType =>
-      (a, b) => a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
-    case other =>
-      throw new IllegalArgumentException(
-        s"interval join key type not supported: $other")
-  }
-
-  /** Timestamps must be long-backed: the window bound is arithmetic. */
-  private def tsOrd(dt: DataType, ord: Int): InternalRow => java.lang.Long =
-    dt match {
-      case LongType | TimestampType | TimestampNTZType =>
-        r => if (r.isNullAt(ord)) null else java.lang.Long.valueOf(r.getLong(ord))
-      case other =>
-        throw new IllegalArgumentException(
-          s"interval join ts must be a long/timestamp column, got: $other")
-    }
+    lowerUs: Long, rightVals: Seq[Attribute]) extends TimeJoinExec {
 
   protected override def doExecute(): RDD[InternalRow] = {
     val lOut = left.output
     val rOut = right.output
-    val lKeyGet = keyGetterFor(leftKey.dataType, ordinalOf(lOut, leftKey))
-    val lTsGet = tsOrd(leftTs.dataType, ordinalOf(lOut, leftTs))
-    val rKeyGet = keyGetterFor(rightKey.dataType, ordinalOf(rOut, rightKey))
-    val rTsGet = tsOrd(rightTs.dataType, ordinalOf(rOut, rightTs))
+    // timestamps must be long-backed: the window bound is arithmetic
+    Seq(leftTs, rightTs).foreach(a => require(a.dataType match {
+      case LongType | TimestampType | TimestampNTZType => true
+      case _ => false
+    }, s"interval join ts must be a long/timestamp column, got: ${a.dataType}"))
+    val lKeyGet = getterFor(lOut, leftKey)
+    val lTsGet = getterFor(lOut, leftTs)
+    val rKeyGet = getterFor(rOut, rightKey)
+    val rTsGet = getterFor(rOut, rightTs)
     val cmpKey = cmpFor(leftKey.dataType)
     val lower = lowerUs
     val valAttrs = rightVals
@@ -183,7 +94,7 @@ case class IntervalJoinExec(left: SparkPlan, right: SparkPlan,
         private def stepLeft(): Unit = {
           val l = lIt.next()
           val lk = lKeyGet(l)
-          val lt = lTsGet(l)
+          val lt = lTsGet(l).asInstanceOf[java.lang.Long]
           if (lk == null || lt == null) {
             out = Iterator.single(resultProj(joined(l, nullVals)))
             return
@@ -199,7 +110,7 @@ case class IntervalJoinExec(left: SparkPlan, right: SparkPlan,
           var continue = true
           while (continue && rNext != null) {
             val rk = rKeyGet(rNext)
-            val rt = rTsGet(rNext)
+            val rt = rTsGet(rNext).asInstanceOf[java.lang.Long]
             if (rk == null || rt == null) advanceRight()
             else {
               val c = cmpKey(rk, lk)
@@ -211,7 +122,7 @@ case class IntervalJoinExec(left: SparkPlan, right: SparkPlan,
             }
           }
           // slide the window: expel rows the left timestamp passed
-          while (!buf.isEmpty && rTsGet(buf.peekFirst()).longValue() <= minTs)
+          while (!buf.isEmpty && rTsGet(buf.peekFirst()).asInstanceOf[Long] <= minTs)
             buf.removeFirst()
           out =
             if (buf.isEmpty) Iterator.single(resultProj(joined(l, nullVals)))
@@ -236,37 +147,8 @@ case class IntervalJoinExec(left: SparkPlan, right: SparkPlan,
 object IntervalJoin {
   def apply(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String, lowerUs: Long,
-      valueCols: Seq[String]): DataFrame = {
-    val spark = left.sparkSession
-    ensureStrategy(spark)
-    val lPlan = left.queryExecution.analyzed
-    val lIds = lPlan.output.map(_.exprId).toSet
-    // self-join safety: break shared exprIds (see AsOfJoin.apply)
-    val rightSafe =
-      if (right.queryExecution.analyzed.output.exists(a => lIds(a.exprId)))
-        right.select(right.columns.toIndexedSeq.map(c =>
-          org.apache.spark.sql.functions.col(c).as(c)): _*)
-      else right
-    def attr(df: DataFrame, name: String): Attribute =
-      df.queryExecution.analyzed.output
-        .find(_.name == name)
-        .getOrElse(throw new IllegalArgumentException(
-          s"column $name not in ${df.columns.mkString(",")}"))
-    val node = IntervalJoinNode(
-      lPlan, rightSafe.queryExecution.analyzed,
-      attr(left, key), attr(left, leftTs),
-      attr(rightSafe, key), attr(rightSafe, rightTs),
-      lowerUs, valueCols.map(attr(rightSafe, _)))
-    org.apache.spark.sql.classic.GraftSqlBridge.ofRows(spark, node)
-  }
-
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(IntervalJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ IntervalJoinStrategy
-    if (!spark.experimental.extraOptimizations
-        .contains(PushFilterThroughIntervalJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushFilterThroughIntervalJoin
-  }
+      valueCols: Seq[String]): DataFrame =
+    GraftSqlBridge.ofRows(left.sparkSession, AsOfSql.UnresolvedGraftJoin(
+      left.queryExecution.analyzed, right.queryExecution.analyzed,
+      key, leftTs, rightTs, Some(lowerUs), valueCols))
 }

@@ -263,7 +263,6 @@ object Jobs {
       maxPerBucket: Int = 64): Dataset[NearDupPair] = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.Vectors.ensureRegistered(s)
     val r = perms / bands
     val banded = docs
       .select(col("doc_id"),
@@ -488,9 +487,12 @@ object Jobs {
     * O(full history) — the key-scoped work is an equi-semi-join.
     *
     * Replay-safe like [[maintainDailySummary]]: the archive carries
-    * `__batch`, a replayed micro-batch (batchId ≤ max applied)
-    * appends nothing and only republishes, so at-least-once
-    * foreachBatch delivery yields exactly-once dim state.
+    * `__batch`, and a replayed micro-batch (batchId ≤ max applied)
+    * appends nothing. Every call — replay included — rebuilds and
+    * swaps in the keys of the archive rows tagged with its batchId,
+    * so a crash between the archive append and the dim swap is
+    * repaired by the replay, and at-least-once foreachBatch delivery
+    * yields exactly-once dim state.
     */
   def scd2Maintain(key: String, ts: String, valueCols: Seq[String],
       archivePath: String, dimPath: String)
@@ -504,13 +506,23 @@ object Jobs {
       val r = a.agg(max(col("__batch"))).head()
       if (r.isNullAt(0)) -1L else r.getLong(0)
     }.getOrElse(-1L)
-    if (batchId > lastApplied && !batch.isEmpty) {
-      val incoming = batch
-        .select(Seq(col(key), col(ts)) ++ valueCols.map(col): _*)
-        .withColumn("__batch", lit(batchId))
-      incoming.write.mode("append").parquet(archivePath)
+    // this batchId's archive rows: appended now, or (on a replay)
+    // already there from a run that may have crashed before its swap
+    val tagged =
+      if (batchId > lastApplied) {
+        if (batch.isEmpty) None
+        else {
+          val incoming = batch
+            .select(Seq(col(key), col(ts)) ++ valueCols.map(col): _*)
+            .withColumn("__batch", lit(batchId))
+          incoming.write.mode("append").parquet(archivePath)
+          Some(incoming)
+        }
+      } else archived.map(_.filter(col("__batch") === batchId))
+        .filterNot(_.isEmpty)
+    tagged.foreach { rows =>
       val all = spark.read.parquet(archivePath)
-      val touched = incoming.select(col(key)).distinct()
+      val touched = rows.select(col(key)).distinct()
       val rebuilt = graft.operators.Temporal.scd2Build(
         all.join(touched, Seq(key), "left_semi"), key, ts, valueCols)
       val dim =

@@ -76,7 +76,6 @@ object ReplacingSink {
   /** One bitmap-merge step; also usable from batch jobs. */
   def bitmapUpsert(batch: DataFrame, keyCols: Seq[String], idCol: String,
       maxId: Long, path: String): Unit = {
-    graft.functions.Vectors.ensureRegistered(batch.sparkSession)
     mergeStep(batch, path,
       _.groupBy(keyCols.map(col): _*)
         .agg(

@@ -26,7 +26,6 @@ object MinhashProfile {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession.local(appName = "graft-minhash-profile")
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.Vectors.ensureRegistered(spark)
 
     def timed(label: String)(f: => Long): Unit = {
       val ts = (1 to 3).map { _ =>

@@ -1435,7 +1435,6 @@ object Analytics {
     // native codegen'd probe over the inlined sketch bytes (112 KB
     // literal, deserialized once per executor) — no ScalaUDF on the
     // fact scan
-    graft.functions.Vectors.ensureRegistered(s)
     ev.filter(call_function("graft_cms_estimate",
         lit(bos.toByteArray), col("user_id")) >= t)
       .groupBy("user_id").agg(count(lit(1)).as("ct"))

@@ -73,7 +73,6 @@ object Sketched {
     */
   def kmvDistinctNative(s: SparkSession, d: String,
       k: Int = 64): DataFrame = {
-    graft.functions.Vectors.ensureRegistered(s)
     val h = conv(substring(md5(col("user_id").cast("string")), 1, 12),
       16, 10).cast("long")
     graft.sources.Tables.events(s, d)
@@ -160,7 +159,6 @@ object Sketched {
     * sparse domain goes through stable-id enumeration first).
     */
   def bitmapDailyUv(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Vectors.ensureRegistered(s)
     graft.sources.Tables.events(s, d)
       .groupBy(to_date(col("ts")).as("dt"))
       .agg(call_function("graft_bitmap_distinct", col("user_id"),
@@ -187,7 +185,6 @@ object Sketched {
     */
   def bitmapAudience(s: SparkSession, d: String,
       typeA: String = "click", typeB: String = "purchase"): DataFrame = {
-    graft.functions.Vectors.ensureRegistered(s)
     val ev = graft.sources.Tables.events(s, d)
       .filter(col("event_type").isin(typeA, typeB))
     def cohort(t: String, alias: String) =
@@ -219,7 +216,6 @@ object Sketched {
   def bitmapRangeUv(s: SparkSession, d: String,
       windowDays: Int = 7): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Vectors.ensureRegistered(s)
     val daily = graft.sources.Tables.events(s, d)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(call_function("graft_bitmap_bytes", col("user_id"),

@@ -91,7 +91,6 @@ class DedupSpec extends AnyFunSuite {
     // simhash is order-insensitive over token bags: a doc and its
     // sorted-token version must land at hamming 0
     import s.implicits._
-    graft.functions.Vectors.ensureRegistered(s)
     val docs = graft.sources.Tables.documents(s, d).limit(20)
       .select(col("doc_id"), col("text"))
     val shuffled = docs.select(
@@ -574,7 +573,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("native winnow fingerprints == compositional form, both hash regimes") {
-    graft.functions.VectorExpressions.register(s)
     import s.implicits._
     // corpus texts + synthetic edges (short text, empty, repeats)
     // 60 corpus docs: the compositional reference is interpreted and

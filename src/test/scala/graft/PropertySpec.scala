@@ -145,7 +145,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("simhash is invariant under token reordering (100 random docs)") {
     import s.implicits._
-    graft.functions.Vectors.ensureRegistered(s)
     val rnd = new Random(13)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon",
       "zeta", "eta", "theta", "iota", "kappa")
@@ -164,7 +163,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("native shingle hashes equal the HOF formulation's set size") {
     import s.implicits._
-    graft.functions.Vectors.ensureRegistered(s)
     val rnd = new Random(99)
     val docs = Seq.tabulate(60) { i =>
       val len = 1 + rnd.nextInt(60)
@@ -185,7 +183,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("sorted-intersect-gt equals the naive set formulation (300 random pairs)") {
     import s.implicits._
-    graft.functions.Vectors.ensureRegistered(s)
     val rnd = new Random(1234)
     val cases = (1 to 300).map { i =>
       def arr() = Seq.fill(rnd.nextInt(30))(rnd.nextInt(40).toLong)
@@ -205,7 +202,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("PQ natives equal a scala reimplementation (100 random vectors)") {
     import s.implicits._
-    graft.functions.Vectors.ensureRegistered(s)
     val rnd = new Random(77)
     val m = 8; val ks = 4; val dim = 16; val sub = dim / m
     val cb = Array.fill(ks * dim)((rnd.nextInt(2001) - 1000).toDouble)

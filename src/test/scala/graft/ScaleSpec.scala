@@ -72,7 +72,6 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("native functions are usable from raw SQL once registered") {
-    graft.functions.Vectors.ensureRegistered(s)
     val r = s.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dp")
       .collect()(0).getDouble(0)
@@ -96,17 +95,29 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("native functions resolve from raw SQL through the extensions alone") {
-    // a new session has none of ensureRegistered's runtime
-    // registrations: only GraftExtensions' injectFunction resolves these
+    // nothing registers functions at runtime: a new session resolves
+    // these through GraftExtensions' injectFunction alone
     val fresh = s.newSession()
     assert(fresh.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")
       .collect()(0).getDouble(0) === 11.0)
     assert(fresh.sql("SELECT size(graft_minhash_sig(array(1L, 2L, 3L), 64))")
       .collect()(0).getInt(0) === 64)
+    // every one of the 22 injected names, not just the two above
+    val injected = Seq("graft_dot", "graft_minhash_sig",
+      "graft_shingle_hashes", "graft_simhash64", "graft_rep_stats",
+      "graft_dict_segment", "graft_pq_encode", "graft_pq_lut",
+      "graft_pq_adc", "graft_winnow_fps", "graft_sorted_intersect_count",
+      "graft_sorted_intersect_gt", "graft_kmv", "graft_bitmap_distinct",
+      "graft_bitmap_bytes", "graft_bitmap_or_count", "graft_bitmap_union",
+      "graft_bitmap_card", "graft_bitmap_and_count",
+      "graft_bitmap_andnot_count", "graft_cms_estimate", "graft_bloom_any")
+    assert(injected.distinct.size === 22)
+    assert(GraftExtensions.functions.map(_._1).toSet === injected.toSet)
+    val missing = injected.filterNot(n => fresh.catalog.functionExists(n))
+    assert(missing.isEmpty, s"not resolvable in a new session: $missing")
   }
 
   test("native functions reject wrong input types at analysis") {
-    graft.functions.Vectors.ensureRegistered(s)
     // array<float> must not be bytewise-reinterpreted as array<double>
     val floatArr = "SELECT graft_dot(a, a) FROM " +
       "(SELECT array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)) AS a)"
@@ -838,23 +849,43 @@ class ScaleSpec extends AnyFunSuite {
     fs.delete(new Path(dir.toUri), true)
   }
 
-  test("only Bucketing writes or probes catalog tables in src/main") {
-    // the layout decision (name, memo, catalog check, orphan clear,
-    // write) stays in one module
+  /** `file:line: text` of every src/main line that `banned` matches,
+    * outside the one file allowed to hold it (which must exist).
+    */
+  private def srcMainOffenders(allowed: String)(banned: String => Boolean)
+      : Seq[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
-    val own = root.resolve("graft/sources/Bucketing.scala")
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.walk(root)
     val sources =
       try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally files.close()
+    val own = root.resolve(allowed)
     assert(sources.contains(own))
-    val offenders = sources.filter(_ != own).flatMap { f =>
+    sources.filter(_ != own).flatMap { f =>
       java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (l, i) if l.contains("saveAsTable(") ||
-            l.contains("catalog.tableExists(") => s"$f:${i + 1}: ${l.trim}"
+        case (l, i) if banned(l) => s"$f:${i + 1}: ${l.trim}"
       }
     }
+  }
+
+  test("only Bucketing writes or probes catalog tables in src/main") {
+    // the layout decision (name, memo, catalog check, orphan clear,
+    // write) stays in one module
+    val offenders = srcMainOffenders("graft/sources/Bucketing.scala")(l =>
+      l.contains("saveAsTable(") || l.contains("catalog.tableExists("))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("only GraftExtensions wires functions, strategies and rules into a session") {
+    // functions, planner strategies and optimizer rules are injected
+    // at session build time; a second, runtime registration path
+    // would re-declare them (and double-register the rules)
+    val banned = Seq("createOrReplaceTempFunction",
+      "experimental.extraStrategies", "experimental.extraOptimizations",
+      "ensureRegistered", "ensureStrategy")
+    val offenders = srcMainOffenders("graft/GraftExtensions.scala")(l =>
+      banned.exists(l.contains))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 

@@ -252,12 +252,12 @@ class TemporalSpec extends AnyFunSuite {
   }
 
   test("as-of node plans through the injected strategy alone") {
-    // a new session carries the extensions but none of the runtime
-    // registrations AsOfJoin.apply makes, so only GraftExtensions'
-    // injectPlannerStrategy can plan a node built directly
+    // nothing registers the strategy at runtime: a new session plans a
+    // node built directly through GraftExtensions'
+    // injectPlannerStrategy alone
     val fresh = s.newSession()
     assert(!fresh.experimental.extraStrategies
-      .contains(graft.plans.AsOfJoinStrategy))
+      .contains(graft.plans.TimeJoinStrategy))
     val l = fresh.sql("SELECT * FROM VALUES (1L, 10L), (1L, 20L) AS t(k, ts)")
     val r = fresh.sql("SELECT * FROM VALUES (1L, 15L, 1.5D) AS t(k, ts, v)")
     def a(df: org.apache.spark.sql.DataFrame, n: String) =

@@ -90,7 +90,6 @@ class TextSpec extends AnyFunSuite {
 
   test("dictionary FMM segmentation: longest match beats bigram over-generation") {
     import s.implicits._
-    graft.functions.Vectors.ensureRegistered(s)
     val df = Seq(
       // longest match wins: 平板电脑 (4) over 平板 (2)
       ("华为平板电脑", Seq("华为", "平板电脑")),
@@ -746,7 +745,6 @@ class TextSpec extends AnyFunSuite {
         r.getAs[Long]("novel_shingles"), r.getAs[Long]("novelty_ppm")))
       .toMap
     // driver replay over the same native shingle hashes
-    graft.functions.Vectors.ensureRegistered(s)
     val sh = graft.sources.Tables.documents(s, d)
       .select(col("doc_id"), explode(call_function(
         "graft_shingle_hashes", col("text"), lit(12))).as("sh"))

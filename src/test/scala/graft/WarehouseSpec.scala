@@ -11,7 +11,6 @@ class WarehouseSpec extends AnyFunSuite {
 
   test("registerViews enables raw SQL over every table (BaseSQLApp parity)") {
     graft.sources.Tables.registerViews(s, d)
-    graft.functions.Vectors.ensureRegistered(s)
     val r = s.sql("""
       SELECT n_name, count(*) AS ct FROM orders
       JOIN customer ON o_custkey = c_custkey
@@ -373,7 +372,6 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("bitmap aggregate fails loudly on an id outside the declared domain") {
-    graft.functions.Vectors.ensureRegistered(s)
     import s.implicits._
     val bad = Seq(1L, 7L, 1024L).toDF("id")
     val e = intercept[Exception] {
@@ -1224,7 +1222,6 @@ class WarehouseSpec extends AnyFunSuite {
         r.getAs[Long]("wau_ct")).toMap
     assert(viaBitmap === viaDistinct)
     // the wire format round-trips through SQL too: two known sets
-    graft.functions.Vectors.ensureRegistered(s)
     import s.implicits._
     val bms = Seq(1L -> 5L, 1L -> 7L, 2L -> 7L, 2L -> 9L).toDF("g", "id")
       .groupBy("g")
