@@ -68,6 +68,17 @@ object Compaction {
     Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
 
+  /** Bytes of the parquet files directly under `path`. */
+  def parquetBytes(path: String): Long =
+    parquetFiles(new java.io.File(path)).map(_.length()).sum
+
+  /** How many ~`targetBytes` files `bytes` of parquet fill, at least
+    * one: the count [[compact]] packs a table into, and the one the
+    * streaming sinks size their snapshot merge by.
+    */
+  def filesFor(bytes: Long, targetBytes: Long = 128L << 20): Int =
+    math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+
   /** Bin-pack the parquet table at `path` into ~`targetBytes` files.
     * Skips (and reports) when the table is already compact. The
     * repartition count derives from the actual on-disk bytes, so the
@@ -80,7 +91,7 @@ object Compaction {
     val dir = new java.io.File(path)
     val before = parquetFiles(dir)
     val totalBytes = before.map(_.length()).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+    val nOut = filesFor(totalBytes, targetBytes)
     if (before.length <= nOut)
       return Stats(before.length, before.length, totalBytes,
         spark.read.parquet(path).count())

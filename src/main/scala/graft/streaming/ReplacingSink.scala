@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.Compaction.{recover, replaceDir}
+import graft.sources.Compaction.{filesFor, parquetBytes, recover, replaceDir}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,15 +11,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (realtime-common/.../ClickHouseUtil.java:1, FlinkSinkUtil.java:1):
   * for each key, the row with the highest version wins.
   *
-  * Implementation: per micro-batch, (1) collapse the batch to its
-  * latest row per key (cheap, batch-local), (2) merge with the
-  * current snapshot keeping max-version rows. Parquet has no MERGE,
-  * so the merge rewrites the snapshot — correct and idempotent
-  * (replayed batches converge), which is the property checkpoint
-  * recovery needs. At warehouse scale the same foreachBatch body
-  * targets a real MergeTree/Doris table (or Iceberg/Delta MERGE) and
-  * step (2) becomes the storage engine's job — step (1)'s map-side
-  * collapse is still worth doing to shrink the write.
+  * Implementation: per micro-batch, merge the batch with the current
+  * snapshot keeping max-version rows, in one window shuffle over
+  * snapshot ∪ batch; the first batch is collapsed to its latest row
+  * per key and becomes the snapshot. Parquet has no MERGE, so the
+  * merge rewrites the snapshot — correct and idempotent (replayed
+  * batches converge), which is the property checkpoint recovery
+  * needs. At warehouse scale the same foreachBatch body targets a
+  * real MergeTree/Doris table (or Iceberg/Delta MERGE) and the merge
+  * becomes the storage engine's job. The aggregate models below
+  * collapse the batch first and then merge, since their batch-side
+  * partial aggregation shrinks what the merge reads.
   */
 object ReplacingSink {
 
@@ -76,7 +78,7 @@ object ReplacingSink {
   /** One bitmap-merge step; also usable from batch jobs. */
   def bitmapUpsert(batch: DataFrame, keyCols: Seq[String], idCol: String,
       maxId: Long, path: String): Unit = {
-    mergeStep(batch, path,
+    mergeStep(batch, path, keyCols,
       _.groupBy(keyCols.map(col): _*)
         .agg(
           count(lit(1)).as("pv_ct"),
@@ -91,7 +93,7 @@ object ReplacingSink {
   /** One sketch-merge step; also usable from batch jobs. */
   def sketchUpsert(batch: DataFrame, keyCols: Seq[String], idCol: String,
       path: String): Unit =
-    mergeStep(batch, path,
+    mergeStep(batch, path, keyCols,
       _.groupBy(keyCols.map(col): _*)
         .agg(
           count(lit(1)).as("pv_ct"),
@@ -107,7 +109,7 @@ object ReplacingSink {
     val aggs = sumCols.map(c => sum(col(c)).as(c))
     val summed = (df: DataFrame) =>
       df.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    mergeStep(batch, path, summed, summed)
+    mergeStep(batch, path, keyCols, summed, summed)
   }
 
   /** One merge step; also usable from batch jobs. */
@@ -117,21 +119,28 @@ object ReplacingSink {
       .orderBy(col(versionCol).desc)
     val latest = (df: DataFrame) => df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    mergeStep(batch, path, latest, latest)
+    mergeStep(batch, path, keyCols, latest, latest, collapseFirst = false)
   }
 
-  /** The shared merge: `collapse` the batch to one row per key, then,
-    * if a snapshot exists (after finishing any crashed swap), `merge`
-    * it with the collapsed batch, and swap the result in through the
-    * crash-recoverable [[graft.sources.Compaction.replaceDir]].
+  /** The shared merge. With no snapshot (after finishing any crashed
+    * swap) the table is `collapse(batch)`. Otherwise the snapshot,
+    * read with that schema (no inference job), is unioned with the
+    * batch, `collapse`d first when `collapseFirst`, and `merge`d over
+    * one exchange on `keyCols` sized from the snapshot's bytes on
+    * disk, so a small table stays one file. The result is swapped in
+    * through the crash-recoverable
+    * [[graft.sources.Compaction.replaceDir]].
     */
-  private def mergeStep(batch: DataFrame, path: String,
-      collapse: DataFrame => DataFrame, merge: DataFrame => DataFrame): Unit = {
+  private def mergeStep(batch: DataFrame, path: String, keyCols: Seq[String],
+      collapse: DataFrame => DataFrame, merge: DataFrame => DataFrame,
+      collapseFirst: Boolean = true): Unit = {
     val compact = collapse(batch)
     val merged =
       if (recover(path)) {
-        val cur = batch.sparkSession.read.parquet(path)
-        merge(cur.unionByName(compact.select(cur.columns.map(col): _*)))
+        val cur = batch.sparkSession.read.schema(compact.schema).parquet(path)
+        val delta = if (collapseFirst) compact else batch
+        merge(cur.unionByName(delta.select(cur.columns.map(col): _*))
+          .repartition(filesFor(parquetBytes(path)), keyCols.map(col): _*))
       } else compact
     replaceDir(merged, path)
   }

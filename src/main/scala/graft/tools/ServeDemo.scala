@@ -27,11 +27,27 @@ import org.apache.spark.sql.functions._
   *   curl localhost:8642/province/topn
   *   curl localhost:8642/channel/uvct
   *
+  * Every response goes out with TCP_NODELAY. The JDK server flushes
+  * the response headers as one TCP segment and the body follows as a
+  * second small one; with Nagle on, the body waits for the client's
+  * ACK of the headers, and a keep-alive client delays that ACK by
+  * ~40 ms. Over loopback on JDK 17, 30 keep-alive `/health`
+  * requests took 44 ms each (median) with Nagle on and under 1 ms
+  * with it off. The JDK exposes the socket option only as the
+  * `sun.net.httpserver.nodelay` property, read once when its
+  * `ServerConfig` class loads, so this object sets it before it
+  * creates any server.
+  *
+  * Only the endpoint paths answer; any other path, including one that
+  * merely starts with an endpoint (`/gmvx`, `/health/x`), is a 404.
+  *
   * This is a demo main, not a production server (single listener,
   * no auth) — the engine remains a library; anything speaking real
   * HTTP at scale would front these same serving tables.
   */
 object ServeDemo {
+
+  System.setProperty("sun.net.httpserver.nodelay", "true")
 
   /** Ascending with nulls first, as `orderBy` sorts; numbers compare
     * as numbers, so rank 10 follows rank 2. */
@@ -91,13 +107,7 @@ object ServeDemo {
     val channel = publish("channel_uvct",
       graft.warehouse.Publisher.channelUvCt(spark, sfDir))
 
-    def handle(ex: HttpExchange)(body: => String): Unit = {
-      val (code, payload) =
-        try (200, body)
-        catch { case e: Throwable =>
-          (500, "{\"error\":" + jstr(Option(e.getMessage)
-            .getOrElse(e.getClass.getName).take(300)) + "}")
-        }
+    def reply(ex: HttpExchange, code: Int, payload: String): Unit = {
       val bytes = payload.getBytes("UTF-8")
       ex.getResponseHeaders.set("Content-Type", "application/json")
       ex.sendResponseHeaders(code, bytes.length)
@@ -112,20 +122,31 @@ object ServeDemo {
 
     val server = HttpServer.create(
       new java.net.InetSocketAddress(port), 0)
-    server.createContext("/gmv", (ex: HttpExchange) => handle(ex) {
+    // the JDK matches a context by path prefix, so each handler
+    // answers its exact path only
+    def route(path: String)(body: HttpExchange => String): Unit =
+      server.createContext(path, (ex: HttpExchange) =>
+        if (ex.getRequestURI.getPath != path)
+          reply(ex, 404, """{"error":"not found"}""")
+        else {
+          val (code, payload) =
+            try (200, body(ex))
+            catch { case e: Throwable =>
+              (500, "{\"error\":" + jstr(Option(e.getMessage)
+                .getOrElse(e.getClass.getName).take(300)) + "}")
+            }
+          reply(ex, code, payload)
+        })
+    route("/gmv") { ex =>
       // ?date= filters ON THE PARTITION COLUMN — the held file index
       // prunes to that day's directory (plan shows PartitionFilters),
       // the TradeStatsController `date` request param made literal
       toJson(param(ex, "date").fold(gmv)(d =>
         gmv.filter(col("cur_date") === d)), "cur_date")
-    })
-    server.createContext("/province/topn",
-      (ex: HttpExchange) => handle(ex) { toJson(province, "rk") })
-    server.createContext("/channel/uvct",
-      (ex: HttpExchange) => handle(ex) { toJson(channel, "ch") })
-    server.createContext("/health", (ex: HttpExchange) => handle(ex) {
-      """{"status":"ok"}"""
-    })
+    }
+    route("/province/topn")(_ => toJson(province, "rk"))
+    route("/channel/uvct")(_ => toJson(channel, "ch"))
+    route("/health")(_ => """{"status":"ok"}""")
     server.start()
     server
   }

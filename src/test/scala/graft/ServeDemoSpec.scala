@@ -39,6 +39,13 @@ class ServeDemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
+  private def status(path: String): Int = {
+    val c = java.net.URI.create(
+      s"http://localhost:${server.getAddress.getPort}$path").toURL
+      .openConnection().asInstanceOf[java.net.HttpURLConnection]
+    try c.getResponseCode finally c.disconnect()
+  }
+
   /** A JSON body as rows of field → value text, in body order. */
   private def rows(body: String): Seq[Map[String, String]] =
     new ObjectMapper().readTree(body).elements().asScala.toSeq.map { r =>
@@ -87,5 +94,47 @@ class ServeDemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(jobs.get === 1)
       assert(HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount === files)
     } finally s.sparkContext.removeSparkListener(listener)
+  }
+
+  test("only an endpoint's exact path answers; any other path is a 404") {
+    for (p <- Seq("/gmv", "/gmv?date=1900-01-01", "/province/topn",
+        "/channel/uvct", "/health"))
+      assert(status(p) === 200, p)
+    for (p <- Seq("/gmvx", "/gmv/extra", "/gmv/", "/health/x",
+        "/province/topnx", "/channel", "/", "/nope"))
+      assert(status(p) === 404, p)
+  }
+
+  test("a keep-alive connection answers without the Nagle/delayed-ACK stall") {
+    val sock = new java.net.Socket("localhost", server.getAddress.getPort)
+    try {
+      sock.setSoTimeout(10000)
+      val out = sock.getOutputStream
+      val in = new java.io.DataInputStream(
+        new java.io.BufferedInputStream(sock.getInputStream))
+      val request = "GET /health HTTP/1.1\r\nHost: localhost\r\n\r\n"
+        .getBytes("US-ASCII")
+      /** One request on the open connection; its wall time in ms. */
+      def roundTrip(): Double = {
+        val t0 = System.nanoTime()
+        out.write(request)
+        out.flush()
+        val head = new StringBuilder
+        while (!head.endsWith("\r\n\r\n")) head += in.readByte().toChar
+        val len = head.toString.split("\r\n").collectFirst {
+          case h if h.toLowerCase.startsWith("content-length:") =>
+            h.drop("content-length:".length).trim.toInt
+        }.get
+        val body = new Array[Byte](len)
+        in.readFully(body)
+        assert(head.startsWith("HTTP/1.1 200"))
+        assert(new String(body, "UTF-8") === """{"status":"ok"}""")
+        (System.nanoTime() - t0) / 1e6
+      }
+      roundTrip() // warm
+      val ms = Seq.fill(30)(roundTrip()).sorted
+      // with Nagle on, each response waits ~40 ms for a delayed ACK
+      assert(ms(ms.size / 2) < 10.0, ms.mkString(", "))
+    } finally sock.close()
   }
 }

@@ -3,6 +3,9 @@ package graft
 import graft.sources.Tables
 import graft.streaming.{CdcRouter, Jobs, ReplacingSink, Sources}
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -388,6 +391,49 @@ class StreamingSpec extends AnyFunSuite {
     val got = s.read.parquet(out).collect()
       .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"))).toMap
     assert(got === Map(1L -> "a2", 2L -> "b", 3L -> "c"))
+  }
+
+  test("replacing sink: an upsert over a snapshot is one Spark job and leaves one file") {
+    // a stateful stream's micro-batch session: Spark runs those
+    // batches without AQE, so a write's shuffles belong to its one job
+    val mb = s.newSession()
+    mb.conf.set("spark.sql.adaptive.enabled", "false")
+    import mb.implicits._
+    def files(dir: String): Int = new java.io.File(dir).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    def table(dir: String): Set[(Long, String, Long)] =
+      mb.read.parquet(dir).as[(Long, String, Long)].collect().toSet
+    val b1 = Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "v", "ver")
+    val b2 = Seq((1L, "a2", 2L), (3L, "c", 1L), (3L, "c0", 0L))
+      .toDF("k", "v", "ver")
+    val want = Set((1L, "a2", 2L), (2L, "b", 1L), (3L, "c", 1L))
+
+    val out = tmp("rep-one") + "/snap"
+    ReplacingSink.upsert(b1, Seq("k"), "ver", out)
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerBusDrain(s.sparkContext)
+    s.sparkContext.addSparkListener(listener)
+    try {
+      ReplacingSink.upsert(b2, Seq("k"), "ver", out)
+      ListenerBusDrain(s.sparkContext)
+    } finally s.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 1)
+    assert(files(out) === 1)
+    assert(table(out) === want)
+
+    // a snapshot spread over 4 files, as a merge sized by the shuffle
+    // partition count left it, merges into one file
+    val four = tmp("rep-four") + "/snap"
+    val spread = Seq((1L, "a", 1L), (2L, "b", 1L), (4L, "d", 1L), (5L, "e", 3L))
+    for (r <- spread) Seq(r).toDF("k", "v", "ver").write.mode("append").parquet(four)
+    assert(files(four) === 4)
+    ReplacingSink.upsert(b2, Seq("k"), "ver", four)
+    assert(files(four) === 1)
+    assert(table(four) === want ++ spread.drop(2))
   }
 
   test("a swap that crashed between its renames loses no row on the next upsert") {
